@@ -217,7 +217,7 @@ def set_sort_spec(
     (``doc_id < 300`` verify slices, key-window reads) touch ONE file
     instead of decoding the whole table.  Hash-bucketed copies cannot do
     this — every bucket file spans the full key range, so footer stats
-    prune nothing (measured: r14_jaccard_layout_ab).
+    prune nothing (by construction; the end-to-end gain is unmeasured).
 
     Declares only — ``bucketize`` builds, the same signature-checked
     lifecycle serves and invalidates.  Merges with any existing bucket

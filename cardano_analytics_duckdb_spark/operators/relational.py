@@ -300,9 +300,7 @@ _BITSET_DECODE = (
 )
 
 
-def order_brand_sets(
-    spark: SparkSession, sf_dir: str, ranged: bool = False
-) -> DataFrame:
+def order_brand_sets(spark: SparkSession, sf_dir: str) -> DataFrame:
     # Small-domain set aggregate as a BITSET: p_brand has ~25 distinct
     # values, so instead of shuffling brand strings into collect_set (heavy
     # rows, per-group set buffers), attach an alphabetical bit index on the
@@ -344,10 +342,7 @@ def order_brand_sets(
     # Letting the groupBy plan itself gives partial bit_or BEFORE the
     # exchange (~4 lineitems/order fold map-side), a HASH exchange of
     # partials only, no sampler — the global order the range bought is
-    # canonicalized away by the oracle.  ``ranged=True`` keeps the old
-    # shape for the A/B baseline (SCALE_PROBE r13_aggfirst_ab).
-    if ranged:
-        rows = rows.repartitionByRange("l_orderkey")
+    # canonicalized away by the oracle.  A/B: SCALE_PROBE r13_aggfirst_ab.
     return (
         rows.groupBy("l_orderkey")
         .agg(F.bit_or("brand_bit").alias("brand_mask"))
@@ -372,9 +367,7 @@ ORDER BY l_orderkey
 #   ("output side"); orders with no lineitem have a NULL input side (≙ mint).
 
 
-def cross_nation_orders(
-    spark: SparkSession, sf_dir: str, ranged: bool = False
-) -> DataFrame:
+def cross_nation_orders(spark: SparkSession, sf_dir: str) -> DataFrame:
     # Both the supplier side (from lineitem) and the customer side (from
     # orders) key on the SAME id, so instead of aggregating one side and
     # fact-fact-joining the other (two shuffles + a sort-merge join whose
@@ -433,12 +426,9 @@ def cross_nation_orders(
     # BOTH broadcast joins to pick boundaries.  Planned agg gives partial
     # bit_or/max per union branch BEFORE the exchange, a hash exchange of
     # partials only, no sampler; the global order is oracle-canonicalized.
-    # ``ranged=True`` keeps the old shape (SCALE_PROBE r13_aggfirst_ab).
-    unioned = supp_rows.unionByName(cust_rows)
-    if ranged:
-        unioned = unioned.repartitionByRange("o_orderkey")
+    # A/B: SCALE_PROBE r13_aggfirst_ab.
     return (
-        unioned
+        supp_rows.unionByName(cust_rows)
         .groupBy("o_orderkey")
         .agg(
             F.bit_or("nation_bit").alias("supp_mask"),
@@ -523,9 +513,7 @@ ORDER BY n DESC, token
 # ≙ the multi-file view concat (token_fee_analysis.py:76-80)
 
 
-def priority_order_union(
-    spark: SparkSession, sf_dir: str, ordered: bool = False
-) -> DataFrame:
+def priority_order_union(spark: SparkSession, sf_dir: str) -> DataFrame:
     # r13 sort-drop, sweep 3 (see multimodal.payload_metadata): the
     # upstream is shuffle-free (two pushed-filter scans unioned), so the
     # final global ORDER BY made the range sampler re-execute BOTH scans
@@ -538,10 +526,7 @@ def priority_order_union(
     high = orders.filter(F.col("o_orderpriority") == "2-HIGH").select(
         "o_orderkey", "o_orderpriority"
     )
-    frame = urgent.unionByName(high)
-    if ordered:
-        return frame.orderBy("o_orderkey")
-    return frame.sortWithinPartitions("o_orderkey")
+    return urgent.unionByName(high).sortWithinPartitions("o_orderkey")
 
 
 _PRIORITY_UNION_SQL = """

@@ -88,34 +88,6 @@ def _query_vec(
     return _QUERY_VEC_CACHE[key]
 
 
-def _cosine_scores_kernel(q: tuple) -> "callable":
-    """Factory: Arrow ``mapInPandas`` cosine scores against a fixed
-    query vector — per batch, ONE numpy matmul replaces ~64 interpreted
-    HOF lambda evals per row (the zip_with/aggregate in ``_dot``).
-    Locally-defined closure, shipped by value (foreign-cwd harness).
-    Rounding reproduces functions/rounding.rnd: floor(x*1e4+0.5)/1e4."""
-
-    def kernel(batches):
-        import numpy as np
-        import pandas as pd
-
-        qv = np.asarray(q, dtype=np.float64)
-        qn = np.sqrt((qv * qv).sum())
-        for pdf in batches:
-            if len(pdf) == 0:
-                continue
-            mat = np.stack(pdf["embedding"].to_numpy()).astype(np.float64)
-            sims = (mat @ qv) / (np.sqrt((mat * mat).sum(axis=1)) * qn)
-            yield pd.DataFrame(
-                {
-                    "vec_id": pdf["vec_id"],
-                    "cos_sim": np.floor(sims * 10000.0 + 0.5) / 10000.0,
-                }
-            )
-
-    return kernel
-
-
 def cosine_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Brute-force cosine top-k — the ANN baseline.  ONE job, joinless:
     the query vector folds to a plan literal (see _QUERY_VEC_CACHE),
@@ -128,8 +100,9 @@ def cosine_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     interpreted lambda evals/row the kernel saves are outweighed by
     Arrow-transferring the full 200k x 64-double embedding column to
     Python (~100 MB/pass) — the work-per-transferred-byte ratio
-    decides, the same generalization as the lang_id kernel rejection;
-    :func:`cosine_topk_arrow` keeps the measured twin.  exact_dedup
+    decides, the same generalization as the lang_id kernel rejection
+    (at 1024+ dims the matmul may amortize the transfer; unmeasured).
+    exact_dedup
     re-read 1.67x in the same probe — its old 1.63x was accurate."""
     emb = load_table(spark, sf_dir, "embeddings")
     q = _query_vec(spark, sf_dir, vec_id=0)
@@ -139,23 +112,6 @@ def cosine_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     return (
         emb.filter(F.col("vec_id") != 0)
         .select("vec_id", rnd(sim, 4).alias("cos_sim"))
-        .orderBy(F.col("cos_sim").desc(), F.col("vec_id"))
-        .limit(10)
-    )
-
-
-def cosine_topk_arrow(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """The measured-rejected Arrow twin of :func:`cosine_topk` (see its
-    docstring for the numbers and the transfer-ratio generalization).
-    Unshipped; kept for re-measurement at higher dims, where the
-    work-per-byte ratio shifts toward the kernel (at 64 dims transfer
-    wins; at 1024+ dims the matmul amortizes it)."""
-    emb = load_table(spark, sf_dir, "embeddings")
-    q = _query_vec(spark, sf_dir, vec_id=0)
-    return (
-        emb.filter(F.col("vec_id") != 0)
-        .select("vec_id", "embedding")
-        .mapInPandas(_cosine_scores_kernel(q), "vec_id long, cos_sim double")
         .orderBy(F.col("cos_sim").desc(), F.col("vec_id"))
         .limit(10)
     )
@@ -209,9 +165,7 @@ def _plane_lit(p: list[float]) -> str:
     return "array(" + ", ".join(f"cast({v!r} as double)" for v in p) + ")"
 
 
-def lsh_bucket_assignments(
-    spark: SparkSession, sf_dir: str, ranged: bool = False
-) -> DataFrame:
+def lsh_bucket_assignments(spark: SparkSession, sf_dir: str) -> DataFrame:
     emb = load_table(spark, sf_dir, "embeddings")
     bucket = sum(
         [
@@ -229,16 +183,10 @@ def lsh_bucket_assignments(
     # order was never needed (the oracle canonicalizes), so the dots run
     # ONCE over the scan partitioning with no exchange, no sampler and —
     # critically — NO persist on the query path (the old cache entry
-    # lingered across bench runs).  ``ranged=True`` keeps the r10 shape
-    # for the A/B baseline (SCALE_PROBE r13_sortdrop_ab).
-    frame = emb.select("vec_id", bucket.cast("int").alias("bucket"))
-    if ranged:
-        return (
-            frame.persist()
-            .repartitionByRange("vec_id")
-            .sortWithinPartitions("vec_id")
-        )
-    return frame.sortWithinPartitions("vec_id")
+    # lingered across bench runs).  A/B: SCALE_PROBE r13_sortdrop_ab.
+    return emb.select(
+        "vec_id", bucket.cast("int").alias("bucket")
+    ).sortWithinPartitions("vec_id")
 
 
 def _lsh_sql() -> str:
@@ -811,41 +759,15 @@ ORDER BY label, dim
 # (cross-corpus near-dup, hard-negative mining): each of Q query vectors
 # gets its k nearest corpus vectors by cosine.  Plan shape is a two-phase
 # tournament so it scales where a naive per-query-group rank would not:
-#   1. broadcast the Q queries against the corpus scan (narrow ×Q
-#      expansion, sims computed inside whole-stage codegen), then reduce
-#      each partition to its local per-query top-k with a streaming
-#      Arrow-batched reducer (mapInPandas: O(Q×k + batch) memory, NO
-#      shuffle — a groupBy(collect_list) here would exchange every
-#      candidate row, since partial agg buffers aren't truncated);
-#   2. shuffle only the P×Q×k survivors (tiny) and rank per query.
+#   1. score each corpus batch against all Q queries in one Arrow kernel
+#      and keep only the batch-local per-query top-k (NO shuffle, no
+#      B×Q candidate rows);
+#   2. shuffle only the survivors (tiny) and rank per query.
 # With 1000 executors the phase-2 shuffle carries ~1000×Q×k rows — the
 # per-query skew of ranking the full crossJoin never materializes.
 
 _KNN_QUERIES = 10
 _KNN_K = 3
-
-
-def _local_topk_reducer(k: int):
-    """Factory (shipped by value — see _allpairs_cosine_kernel) for the
-    per-partition streaming top-k: fold each Arrow batch into the running
-    per-query head-k, so memory stays O(Q×k + batch) however large the
-    partition."""
-
-    def reduce(batches):
-        import pandas as pd
-
-        best = None
-        for pdf in batches:
-            cur = pdf if best is None else pd.concat([best, pdf])
-            cur = cur.sort_values(
-                ["q_id", "cos_sim", "vec_id"],
-                ascending=[True, False, True],
-            )
-            best = cur.groupby("q_id", sort=False).head(k)
-        if best is not None and len(best):
-            yield best
-
-    return reduce
 
 
 def _knn_batch_kernel(q_ids: list, q_mat: list, k: int):
@@ -888,43 +810,6 @@ def _knn_batch_kernel(q_ids: list, q_mat: list, k: int):
     return kernel
 
 
-def knn_join_topk_jvm(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """The pre-r13 zero-Python twin: broadcast crossJoin expands B x Q
-    candidate rows, the HOF sim scores each, a streaming per-partition
-    reducer keeps Q x k, the global window finishes.  Demoted after the
-    equal-cache A/B (SCALE_PROBE r13_knn_ab: 1.897 s vs the shipped
-    batch-matmul kernel's 0.542 s at 200k x 10) — the expansion plus
-    ~64 interpreted lambda evals per EXPANDED row is 10x the work the
-    kernel does per transferred embedding.  Kept for deployments that
-    ban Python workers."""
-    from pyspark.sql import Window as W
-
-    emb = load_table(spark, sf_dir, "embeddings")
-    queries = emb.filter(F.col("vec_id") < _KNN_QUERIES).select(
-        F.col("vec_id").alias("q_id"), F.col("embedding").alias("q")
-    )
-    corpus = emb.filter(F.col("vec_id") >= _KNN_QUERIES).select(
-        "vec_id", "embedding"
-    )
-    sim = rnd(_dot("embedding", "q") / (_norm("embedding") * _norm("q")), 4)
-    cand = corpus.crossJoin(F.broadcast(queries)).select(
-        "q_id", "vec_id", sim.alias("cos_sim")
-    )
-    local_topk = cand.mapInPandas(
-        _local_topk_reducer(_KNN_K), "q_id long, vec_id long, cos_sim double"
-    )
-    return (
-        local_topk.withColumn(
-            "rk",
-            F.row_number()
-            .over(W.partitionBy("q_id").orderBy(F.col("cos_sim").desc(), "vec_id"))
-            .cast("long"),
-        )
-        .filter(F.col("rk") <= _KNN_K)
-        .orderBy("q_id", "rk")
-    )
-
-
 def knn_join_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     """kNN join (Q=10 queries x 200k corpus, top-k=3) — SHIPPED as the
     batch-matmul Arrow kernel since r13: the Q query vectors (a bounded
@@ -940,7 +825,6 @@ def knn_join_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     winning side: one transferred embedding buys Q sims here (the
     rejected cosine kernel got exactly one), so the Arrow transfer
     amortizes.
-    The zero-Python twin survives as :func:`knn_join_topk_jvm`.
     Scale posture: narrow kernel over the corpus scan, <= Q x k rows
     per batch into one small window — no candidate materialization at
     any corpus size; Q bounded by the driver-collect contract."""

@@ -22,9 +22,7 @@ from ..lake.tables import load_table
 # -- token counting + quality scoring -----------------------------------------
 
 
-def doc_quality_scores(
-    spark: SparkSession, sf_dir: str, ranged: bool = False
-) -> DataFrame:
+def doc_quality_scores(spark: SparkSession, sf_dir: str) -> DataFrame:
     docs = load_table(spark, sf_dir, "documents")
     toks = F.split(F.col("text"), " ")
     n_tokens = F.size(toks)
@@ -40,13 +38,10 @@ def doc_quality_scores(
     # third option: NO global order at all — the oracle canonicalizes
     # row order, so the shuffle bought nothing but determinism of file
     # layout.  Shuffle-free is scan -> project -> local sort, zero
-    # exchanges (A/B in SCALE_PROBE r13_text2_ab; ``ranged=True``
-    # preserves the old shape for the probe's baseline).
-    base = docs.select("doc_id", "text")
-    if ranged:
-        base = base.repartitionByRange("doc_id")
+    # exchanges (A/B in SCALE_PROBE r13_text2_ab).
     return (
-        base.select(
+        docs.select("doc_id", "text")
+        .select(
             "doc_id",
             F.length("text").alias("n_chars_actual"),
             n_tokens.alias("n_tokens"),
@@ -138,17 +133,13 @@ def _lang_scored(docs: DataFrame) -> DataFrame:
     )
 
 
-def lang_id_scores(
-    spark: SparkSession, sf_dir: str, ranged: bool = False
-) -> DataFrame:
+def lang_id_scores(spark: SparkSession, sf_dir: str) -> DataFrame:
     docs = load_table(spark, sf_dir, "documents")
     # r13: same shuffle drop as doc_quality_scores (see its comment) —
     # the pre-shuffle existed to dodge orderBy's double execution, but
     # no global order is needed at all; the scoring projection runs
     # over the scan partitioning, zero exchanges.
     base = docs.select("doc_id", "lang", "text")
-    if ranged:
-        base = base.repartitionByRange("doc_id")
     return _lang_scored(base).sortWithinPartitions("doc_id")
 
 
@@ -217,9 +208,7 @@ ORDER BY labeled_lang, predicted_lang
 # -- regex token filtering ----------------------------------------------------
 
 
-def alpha_token_stats(
-    spark: SparkSession, sf_dir: str, ordered: bool = False
-) -> DataFrame:
+def alpha_token_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
     # r13 sort-drop (see multimodal.payload_metadata): the final global
     # ORDER BY re-ran the per-token rlike filter in its range sampler
     # (shuffle-free upstream) and range-exchanged every row, buying only
@@ -227,15 +216,12 @@ def alpha_token_stats(
     docs = load_table(spark, sf_dir, "documents")
     toks = F.split(F.col("text"), " ")
     alpha = F.expr("size(filter(split(text, ' '), t -> t rlike '^[a-z]+$'))")
-    frame = docs.select(
+    return docs.select(
         "doc_id",
         F.size(toks).alias("n_tokens"),
         alpha.alias("n_alpha_tokens"),
         rnd(alpha / F.size(toks), 4).alias("alpha_ratio"),
-    )
-    if ordered:
-        return frame.orderBy("doc_id")
-    return frame.sortWithinPartitions("doc_id")
+    ).sortWithinPartitions("doc_id")
 
 
 _ALPHA_SQL = """
@@ -263,7 +249,8 @@ def _bpe_kernel(pattern: str):
 
     ``re.ASCII`` pins ``\\s`` to ``[ \\t\\n\\r\\f\\v]`` — the same set
     Java's default (non-UNICODE_CHARACTER_CLASS) ``\\s`` matches — so the
-    three alternation branches tokenize identically to the JVM twin.
+    three alternation branches tokenize identically to Spark's
+    ``regexp_extract_all``.
     ``t.count(' ') + 1`` equals ``size(split(text, ' '))``: both Spark's
     ``split`` (Java ``split(re, -1)``) and DuckDB's ``string_split`` keep
     trailing empty fields."""
@@ -278,10 +265,10 @@ def _bpe_kernel(pattern: str):
             n_ws, n_bpe, n_dist = [], [], []
             for t in pdf["text"]:
                 if t is None:
-                    # null text propagates null counts — the JVM twin's
-                    # split/regexp_extract_all return NULL on NULL input
-                    # and the DuckDB oracle does the same (r13 ADVICE:
-                    # the kernel used to raise TypeError here)
+                    # null text propagates null counts, as Spark's
+                    # split/regexp_extract_all and the DuckDB oracle do
+                    # on NULL input (r13 ADVICE: the kernel used to
+                    # raise TypeError here)
                     n_ws.append(None)
                     n_bpe.append(None)
                     n_dist.append(None)
@@ -305,9 +292,7 @@ def _bpe_kernel(pattern: str):
     return kernel
 
 
-def bpe_token_counts(
-    spark: SparkSession, sf_dir: str, ordered: bool = False
-) -> DataFrame:
+def bpe_token_counts(spark: SparkSession, sf_dir: str) -> DataFrame:
     """BPE pre-tokenizer counts via the Arrow kernel (r13 second half).
 
     After the r13 sort-drop removed this query's trailing ORDER BY
@@ -319,15 +304,15 @@ def bpe_token_counts(
     ``len``/``set`` (guide §4.2: batches to native loops), emitting four
     ints per doc; the ratio is computed JVM-side with the shared ``rnd``
     so rounding stays bit-identical.  A/B under the equal-cache
-    steady-state protocol: SCALE_PROBE ``r13_bpe_ab`` — kernel adopted;
-    JVM twin kept as :func:`bpe_token_counts_jvm` (parity pinned by
-    tests/test_twins.py)."""
+    steady-state protocol: SCALE_PROBE ``r13_bpe_ab`` — kernel adopted
+    over the pure-JVM ``regexp_extract_all`` shape (its plan dump is in
+    ``plans/r13/``, its code in git history)."""
     docs = load_table(spark, sf_dir, "documents")
     counts = docs.select("doc_id", "text").mapInPandas(
         _bpe_kernel(_BPE_PATTERN),
         "doc_id long, n_ws_tokens int, n_bpe_tokens int, n_distinct_bpe int",
     )
-    frame = counts.select(
+    return counts.select(
         "doc_id",
         "n_ws_tokens",
         "n_bpe_tokens",
@@ -335,32 +320,7 @@ def bpe_token_counts(
         rnd(F.col("n_bpe_tokens") / F.col("n_ws_tokens"), 4).alias(
             "bpe_per_ws_token"
         ),
-    )
-    if ordered:
-        return frame.orderBy("doc_id")
-    return frame.sortWithinPartitions("doc_id")
-
-
-def bpe_token_counts_jvm(
-    spark: SparkSession, sf_dir: str, ordered: bool = False
-) -> DataFrame:
-    # The pure-JVM shape (r13 first half: sort-drop already applied —
-    # the sampler used to re-run the BPE regexp_extract_all once more
-    # per execution, A/B: r13_sortdrop_ab).  Kept as the zero-Python
-    # path for deployments that forbid Python workers.
-    docs = load_table(spark, sf_dir, "documents")
-    bpe = F.regexp_extract_all(F.col("text"), F.lit(_BPE_PATTERN), 0)
-    ws = F.split(F.col("text"), " ")
-    frame = docs.select(
-        "doc_id",
-        F.size(ws).alias("n_ws_tokens"),
-        F.size(bpe).alias("n_bpe_tokens"),
-        F.size(F.array_distinct(bpe)).alias("n_distinct_bpe"),
-        rnd(F.size(bpe) / F.size(ws), 4).alias("bpe_per_ws_token"),
-    )
-    if ordered:
-        return frame.orderBy("doc_id")
-    return frame.sortWithinPartitions("doc_id")
+    ).sortWithinPartitions("doc_id")
 
 
 _BPE_SQL = f"""
@@ -380,9 +340,7 @@ ORDER BY doc_id
 # survives small edits at the ends (document fingerprinting per driver spec).
 
 
-def rolling_fingerprints(
-    spark: SparkSession, sf_dir: str, ordered: bool = False
-) -> DataFrame:
+def rolling_fingerprints(spark: SparkSession, sf_dir: str) -> DataFrame:
     # r13 sort-drop (see multimodal.payload_metadata): the sampler used
     # to re-run the per-window md5 transform — one md5 per CHARACTER of
     # the corpus — a second time.  A/B: r13_sortdrop_ab.
@@ -391,10 +349,9 @@ def rolling_fingerprints(
         "array_min(transform(sequence(1, greatest(length(text) - 15, 1)),"
         " i -> md5(cast(substring(text, i, 16) as binary))))"
     )
-    frame = docs.select("doc_id", fp.alias("rolling_fp"))
-    if ordered:
-        return frame.orderBy("doc_id")
-    return frame.sortWithinPartitions("doc_id")
+    return docs.select("doc_id", fp.alias("rolling_fp")).sortWithinPartitions(
+        "doc_id"
+    )
 
 
 _ROLLING_FP_SQL = """
@@ -933,9 +890,7 @@ _CHUNK_SIZE = 200
 _CHUNK_STRIDE = 150  # 50-char overlap
 
 
-def doc_chunks(
-    spark: SparkSession, sf_dir: str, ordered: bool = False
-) -> DataFrame:
+def doc_chunks(spark: SparkSession, sf_dir: str) -> DataFrame:
     # r13 sort-drop (see multimodal.payload_metadata): the old global
     # ORDER BY re-ran the chunk explode in its sampler AND range-
     # exchanged every chunk row WITH its full chunk_text payload — the
@@ -946,18 +901,17 @@ def doc_chunks(
         f"transform(sequence(1, greatest(length(text), 1), {_CHUNK_STRIDE}),"
         f" s -> struct(s AS start, substring(text, s, {_CHUNK_SIZE}) AS chunk))"
     )
-    frame = docs.select(
-        "doc_id", F.posexplode(chunks).alias("chunk_idx", "c")
-    ).select(
-        "doc_id",
-        "chunk_idx",
-        F.col("c.start").alias("chunk_start"),
-        F.length("c.chunk").alias("chunk_len"),
-        F.col("c.chunk").alias("chunk_text"),
+    return (
+        docs.select("doc_id", F.posexplode(chunks).alias("chunk_idx", "c"))
+        .select(
+            "doc_id",
+            "chunk_idx",
+            F.col("c.start").alias("chunk_start"),
+            F.length("c.chunk").alias("chunk_len"),
+            F.col("c.chunk").alias("chunk_text"),
+        )
+        .sortWithinPartitions("doc_id", "chunk_idx")
     )
-    if ordered:
-        return frame.orderBy("doc_id", "chunk_idx")
-    return frame.sortWithinPartitions("doc_id", "chunk_idx")
 
 
 _DOC_CHUNKS_SQL = f"""
@@ -1020,9 +974,8 @@ def _gopher_kernel():
 
 
 def _gopher_flags_projection(metrics: DataFrame) -> DataFrame:
-    """Flags + rounding over raw (n_words, mean_wlen, stop_hits,
-    top_count) metrics — shared by the JVM-fold and Arrow-kernel
-    variants so an A/B compares ONLY the metric computation."""
+    """Flags + rounding over the kernel's raw (n_words, mean_wlen,
+    stop_hits, top_count) metrics."""
     n_words = F.col("n_words")
     mean_wlen = F.col("mean_wlen")
     top_frac = F.col("top_count").cast("double") / n_words
@@ -1054,12 +1007,11 @@ def gopher_quality_flags(spark: SparkSession, sf_dir: str) -> DataFrame:
     sorted-run fold's 2.54 s (0.70x) -> 1.89x DuckDB, under the 2x bar
     the fold missed (2.15-2.70x).  Variant history, all measured:
     distinct-scan 6.12 s, explode-groupBy 6.17 s, packed-index 2.51 s,
-    sorted-run fold 2.39-2.81 s (kept as
-    :func:`gopher_quality_flags_jvm`), Arrow kernel ADOPTED.  Identical
-    output (the flag projection is shared; int-sum-then-divide is
-    IEEE-identical to the JVM fold; row-equality asserted in the probe
-    AND the oracle hash).  Scale posture: narrow kernel, no shuffle, no
-    state — same 100 TB shape as the multimodal decode kernels."""
+    sorted-run fold 2.39-2.81 s, Arrow kernel ADOPTED.  Identical
+    output (int-sum-then-divide is IEEE-identical to the JVM fold;
+    row-equality asserted in the probe AND the oracle hash).  Scale
+    posture: narrow kernel, no shuffle, no state — same 100 TB shape as
+    the multimodal decode kernels."""
     docs = load_table(spark, sf_dir, "documents")
     metrics = docs.select("doc_id", "text").mapInPandas(
         _gopher_kernel(),
@@ -1074,58 +1026,6 @@ def gopher_quality_flags(spark: SparkSession, sf_dir: str) -> DataFrame:
     # shuffle-free 0.887 s vs ranged 1.607 s = 0.82x DuckDB, and the
     # plan is now scan -> kernel -> project, zero exchanges.
     return _gopher_flags_projection(metrics).sortWithinPartitions("doc_id")
-
-
-def gopher_quality_flags_jvm(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """The pure-JVM sorted-run fold — the best Catalyst-expression
-    variant of the four measured (2.39-2.81 s at 100x docs vs the Arrow
-    kernel's 1.78 s; see :func:`gopher_quality_flags`).  Kept as the
-    zero-Python path for deployments that forbid Python workers."""
-    docs = load_table(spark, sf_dir, "documents")
-    n_words = F.size(F.col("toks")).cast("long")
-    mean_wlen = F.expr(
-        "aggregate(toks, cast(0.0 as double), (acc, x) -> acc + length(x))"
-        " / size(toks)"
-    )
-    stop_hits = F.expr(
-        "size(filter(toks, x -> x IN ('the', 'a', 'of', 'and', 'is')))"
-    )
-    top_count = F.expr(
-        """aggregate(
-            array_sort(toks),
-            named_struct('prev', cast(null as string),
-                         'run', cast(0 as long), 'best', cast(0 as long)),
-            (acc, x) -> named_struct(
-                'prev', x,
-                'run', IF(x <=> acc.prev, acc.run + 1L, 1L),
-                'best', GREATEST(acc.best,
-                                 IF(x <=> acc.prev, acc.run + 1L, 1L))),
-            acc -> acc.best)"""
-    )
-    top_frac = top_count.cast("double") / n_words
-    word_count_ok = (n_words >= 20) & (n_words <= 1000)
-    mean_wlen_ok = (mean_wlen >= 2.0) & (mean_wlen <= 12.0)
-    has_stopwords = stop_hits >= 2
-    repetition_ok = top_frac <= 0.125
-    return (
-        docs.select("doc_id", "text")
-        .repartitionByRange("doc_id")
-        .select("doc_id", F.split(F.col("text"), " ").alias("toks"))
-        .select(
-            "doc_id",
-            n_words.alias("n_words"),
-            rnd(mean_wlen, 2).alias("mean_word_len"),
-            rnd(top_frac, 4).alias("top_word_frac"),
-            word_count_ok.alias("word_count_ok"),
-            mean_wlen_ok.alias("mean_word_len_ok"),
-            has_stopwords.alias("has_stopwords"),
-            repetition_ok.alias("repetition_ok"),
-            (word_count_ok & mean_wlen_ok & has_stopwords & repetition_ok).alias(
-                "keep"
-            ),
-        )
-        .sortWithinPartitions("doc_id")
-    )
 
 
 _GOPHER_FLAGS_SQL = """
@@ -1205,77 +1105,10 @@ def _pii_kernel_seq(pats):
     return kernel
 
 
-def _pii_kernel_combined(pats):
-    """Factory: ONE alternation pass ``(email)|(phone)|(ip)`` with a
-    group-dispatch replacement callback — one text scan instead of
-    three.  Equivalent to the sequential kernel on this corpus: the
-    alternation order matches the sequential pass order (leftmost match
-    wins, earlier-pass pattern tried first at equal positions), and the
-    placeholder tokens contain no characters any pattern can match, so
-    sequential passes never see matches created by earlier passes.
-
-    Measured and REJECTED for the shipped path (SCALE_PROBE
-    r13_text_ab: 0.886 s vs the sequential kernel's 0.713 s at 100x):
-    the per-match Python callback + lastindex dispatch costs more than
-    the two extra compiled-pattern scans it saves.  Kept as the
-    measured alternative the next tuning round starts from."""
-
-    def kernel(batches):
-        import hashlib
-        import re
-
-        import pandas as pd
-
-        combined = re.compile("(" + ")|(".join(pats) + ")")
-        tokens = ("[EMAIL]", "[PHONE]", "[IP]")
-        counts = [0, 0, 0]
-
-        def repl(m):
-            g = m.lastindex - 1
-            counts[g] += 1
-            return tokens[g]
-
-        for pdf in batches:
-            ne, np_, ni, ln, md = [], [], [], [], []
-            for t in pdf["etext"]:
-                counts[0] = counts[1] = counts[2] = 0
-                t3 = combined.sub(repl, t)
-                ne.append(counts[0])
-                np_.append(counts[1])
-                ni.append(counts[2])
-                ln.append(len(t3))
-                md.append(hashlib.md5(t3.encode()).hexdigest())
-            yield pd.DataFrame(
-                {
-                    "doc_id": pdf["doc_id"],
-                    "n_emails": ne,
-                    "n_phones": np_,
-                    "n_ips": ni,
-                    "redacted_len": ln,
-                    "redacted_md5": md,
-                }
-            )
-
-    return kernel
-
-
 _PII_SCHEMA = (
     "doc_id long, n_emails long, n_phones long, n_ips long,"
     " redacted_len long, redacted_md5 string"
 )
-
-
-def _pii_frame(spark, sf_dir: str, kernel, ranged: bool) -> DataFrame:
-    docs = load_table(spark, sf_dir, "documents")
-    etext = _pii_enriched_text()
-    base = docs.select("doc_id", "text", "n_chars")
-    if ranged:
-        base = base.repartitionByRange("doc_id")
-    return (
-        base.select("doc_id", etext.alias("etext"))
-        .mapInPandas(kernel, _PII_SCHEMA)
-        .sortWithinPartitions("doc_id")
-    )
 
 
 def pii_redaction_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -1287,9 +1120,7 @@ def pii_redaction_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
     2.18 s (0.54x) -> 1.82x DuckDB (the JVM path read 3.3x the same
     pass); rows verified identical (the patterns sit in the Java∩RE2∩
     Python-re common subset, and md5-of-identical-bytes pins the scrub
-    output).  The JVM path survives as
-    :func:`pii_redaction_stats_jvm` (zero-Python deployments; its staged
-    single-scrub plan shape stays asserted in tests/test_plans.py).
+    output).
 
     r13 resolved the conflicting r12 ratio readings under ONE equal-
     cache steady-state protocol (SCALE_PROBE r13_text_ab, n=7): the
@@ -1303,8 +1134,14 @@ def pii_redaction_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
     re-scans every row JVM-side before the kernel sees it; on a corpus
     where most rows carry a candidate match it is pure added work).
     Scale posture: narrow kernel, zero shuffle, no state."""
+    docs = load_table(spark, sf_dir, "documents")
     pats = (_PII_EMAIL, _PII_PHONE, _PII_IP)
-    return _pii_frame(spark, sf_dir, _pii_kernel_seq(pats), ranged=False)
+    return (
+        docs.select("doc_id", "text", "n_chars")
+        .select("doc_id", _pii_enriched_text().alias("etext"))
+        .mapInPandas(_pii_kernel_seq(pats), _PII_SCHEMA)
+        .sortWithinPartitions("doc_id")
+    )
 
 
 def _pii_enriched_text() -> F.Column:
@@ -1317,53 +1154,6 @@ def _pii_enriched_text() -> F.Column:
         F.lit(" ip 10.0."),
         (F.col("doc_id") % 256).cast("string"),
         F.lit(".1"),
-    )
-
-
-def pii_redaction_stats_jvm(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """The pure-JVM scrub (3 regexp_replace + 3 regexp_extract_all,
-    single staged scrub projection) — kept as the zero-Python path; the
-    Arrow kernel above halved it at 100x docs."""
-    docs = load_table(spark, sf_dir, "documents")
-    etext = _pii_enriched_text()
-    redacted = F.regexp_replace(
-        F.regexp_replace(
-            F.regexp_replace(F.col("etext"), _PII_EMAIL, "[EMAIL]"),
-            _PII_PHONE,
-            "[PHONE]",
-        ),
-        _PII_IP,
-        "[IP]",
-    )
-    return (
-        docs.select("doc_id", "text", "n_chars")
-        .repartitionByRange("doc_id")
-        .select("doc_id", etext.alias("etext"))
-        # Stage the scrub in its own projection: `redacted` feeds BOTH
-        # length and md5 below; inlined per consumer the optimized plan
-        # carries the 3-deep replace chain twice (6 regexp_replace
-        # nodes).  Runtime-neutral — whole-stage codegen's subexpression
-        # elimination already shared the duplicated chain (measured
-        # 2.65 s vs 2.65 s interleaved at 100x) — but the staged plan
-        # states the sharing instead of relying on a codegen pass, and
-        # stays shared under codegen fallback.  Plan-asserted in
-        # tests/test_plans.py.
-        .select("doc_id", "etext", redacted.alias("redacted"))
-        .select(
-            "doc_id",
-            F.size(F.regexp_extract_all(F.col("etext"), F.lit(_PII_EMAIL), 0))
-            .cast("long")
-            .alias("n_emails"),
-            F.size(F.regexp_extract_all(F.col("etext"), F.lit(_PII_PHONE), 0))
-            .cast("long")
-            .alias("n_phones"),
-            F.size(F.regexp_extract_all(F.col("etext"), F.lit(_PII_IP), 0))
-            .cast("long")
-            .alias("n_ips"),
-            F.length("redacted").cast("long").alias("redacted_len"),
-            F.md5("redacted").alias("redacted_md5"),
-        )
-        .sortWithinPartitions("doc_id")
     )
 
 

@@ -26,9 +26,7 @@ from ..lake.tables import load_table
 # -- top-k per group ----------------------------------------------------------
 
 
-def top_orders_per_customer(
-    spark: SparkSession, sf_dir: str, ranged: bool = True
-) -> DataFrame:
+def top_orders_per_customer(spark: SparkSession, sf_dir: str) -> DataFrame:
     orders = load_table(spark, sf_dir, "orders")
     w = W.partitionBy("o_custkey").orderBy(
         F.col("o_totalprice").desc(), F.col("o_orderkey")
@@ -47,11 +45,10 @@ def top_orders_per_customer(
     # window stage loses parallelism; the user-specified range exchange
     # pins the partition count (the same structure WINS 11% for
     # user_sessions, whose events shuffle is 10x bigger and never
-    # coalesces below the cores).  ``ranged=False`` keeps the rejected
-    # shape reproducible for the probe."""
-    base = orders.repartitionByRange("o_custkey") if ranged else orders
+    # coalesces below the cores).
     return (
-        base.withColumn("rn", F.row_number().over(w))
+        orders.repartitionByRange("o_custkey")
+        .withColumn("rn", F.row_number().over(w))
         .filter(F.col("rn") <= 3)
         .select("o_custkey", "o_orderkey", "o_totalprice", "rn")
         .sortWithinPartitions("o_custkey", "rn")
@@ -73,9 +70,7 @@ ORDER BY o_custkey, rn
 # -- running aggregate --------------------------------------------------------
 
 
-def user_running_value(
-    spark: SparkSession, sf_dir: str, ordered: bool = False
-) -> DataFrame:
+def user_running_value(spark: SparkSession, sf_dir: str) -> DataFrame:
     # r13 sort-drop: the final orderBy added a SECOND exchange (range,
     # carrying every output row) on top of the window's own hash
     # exchange, and its sampler re-ran the window evaluation (the
@@ -88,14 +83,11 @@ def user_running_value(
         .orderBy("ts", "event_id")
         .rowsBetween(W.unboundedPreceding, W.currentRow)
     )
-    frame = events.select(
+    return events.select(
         "user_id",
         "event_id",
         rnd(F.sum("value").over(w), 2).alias("running_value"),
-    )
-    if ordered:
-        return frame.orderBy("user_id", "event_id")
-    return frame.sortWithinPartitions("user_id", "event_id")
+    ).sortWithinPartitions("user_id", "event_id")
 
 
 _RUNNING_VALUE_SQL = """
@@ -110,22 +102,17 @@ ORDER BY user_id, event_id
 # -- lag / inter-event gaps ---------------------------------------------------
 
 
-def user_event_gaps(
-    spark: SparkSession, sf_dir: str, ordered: bool = False
-) -> DataFrame:
+def user_event_gaps(spark: SparkSession, sf_dir: str) -> DataFrame:
     # r13 sort-drop: same second-exchange + window-re-evaluation cost as
     # user_running_value (see its comment).  A/B: r13_sortdrop_ab.
     events = load_table(spark, sf_dir, "events")
     w = W.partitionBy("user_id").orderBy("ts", "event_id")
     prev_ts = F.lag("ts").over(w)
-    frame = events.select(
+    return events.select(
         "user_id",
         "event_id",
         (F.unix_millis(F.col("ts")) - F.unix_millis(prev_ts)).alias("gap_ms"),
-    )
-    if ordered:
-        return frame.orderBy("user_id", "event_id")
-    return frame.sortWithinPartitions("user_id", "event_id")
+    ).sortWithinPartitions("user_id", "event_id")
 
 
 _EVENT_GAPS_SQL = """
@@ -140,9 +127,7 @@ ORDER BY user_id, event_id
 # lag + conditional cumsum — the batch expression of session_window().
 
 
-def user_sessions(
-    spark: SparkSession, sf_dir: str, ranged: bool = False
-) -> DataFrame:
+def user_sessions(spark: SparkSession, sf_dir: str) -> DataFrame:
     events = load_table(spark, sf_dir, "events")
     w = W.partitionBy("user_id").orderBy("ts", "event_id")
     gap_ms = F.unix_millis(F.col("ts")) - F.unix_millis(F.lag("ts").over(w))
@@ -156,11 +141,9 @@ def user_sessions(
     # clustering, so the agg stays single-stage post-window), but the
     # range-boundary sampling pass over the raw scan is gone, and the
     # global order it bought is canonicalized away by the oracle (the
-    # gopher/pii lesson).  ``ranged=True`` keeps the old shape for the
-    # A/B baseline (SCALE_PROBE r13_sortdrop_ab).
-    base = events.repartitionByRange("user_id") if ranged else events
+    # gopher/pii lesson).  A/B: SCALE_PROBE r13_sortdrop_ab.
     return (
-        base.withColumn("new_sess", is_new)
+        events.withColumn("new_sess", is_new)
         .withColumn("session_id", F.sum("new_sess").over(cum))
         .groupBy("user_id", "session_id")
         .agg(

@@ -7,9 +7,9 @@ whole engine assumes:
 
 - AQE on (runtime re-plan, partition coalescing, skew-join splitting) so the
   same logical plans survive 1000-executor / 100 TB deployments where static
-  estimates are wrong.  This is a measured decision, not a hope:
-  ``scale_probe.py`` (results in ``SCALE_PROBE.json``) times the same plans
-  AQE on/off — at sf0.1 with core-count shuffle partitions AQE costs ~2.4x
+  estimates are wrong.  This is a measured decision, not a hope: the
+  AQE on/off probe (``aqe_on_over_off`` in ``SCALE_PROBE.json``) timed the
+  same plans both ways — at sf0.1 with core-count shuffle partitions AQE costs ~2.4x
   (pure per-stage driver latency on sub-second queries, why bench.py's
   timed pass turns it off), while at 10x the data the FULL 15-query
   headline set under this production posture (AQE on, 200 shuffle

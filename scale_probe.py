@@ -1,1960 +1,143 @@
 #!/usr/bin/env python
-"""Measure the AQE on/off delta at ~10x the bench scale (one-off probe).
+"""Generic A/B probe: time one registered query, and optionally one
+candidate shape of it, against its DuckDB oracle on a scaled lake.
 
-Why this exists: the per-round bench (bench.py, sf0.1, sub-second queries)
-runs its timed pass with AQE OFF because adaptive re-planning adds 50-150 ms
-of driver latency per shuffle stage — pure overhead at that scale — while
-the production session (plans/session.py) ships AQE ON for the 100 TB
-deployment.  That divergence is recorded per-run as
-``production_conf_value``, but a number at ONE scale can't show the
-crossover.  This probe materializes a ~10x copy of the sf0.1 fact tables
-(shuffle-heavy shapes become multi-second, many-partition jobs — the regime
-AQE targets) and times the same plans under both settings, writing
-``SCALE_PROBE.json`` so the config decision is evidence, not reasoning.
+Usage (run solo — never concurrently with pytest or bench.py):
 
-Data: sf0.1 lineitem/orders replicated REPLICAS times with key offsets per
-replica (so join/group cardinalities scale too, not just row counts),
-written as multi-file parquet to a scratch dir — scans parallelize like a
-real partitioned lake, not like the driver's single-row-group testdata.
+    python scale_probe.py SCRATCH --query NAME --scale N \
+        [--variant module:function]
 
-Run solo (never concurrently with pytest/bench — noisy-neighbor host):
-    python scale_probe.py [scratch_dir]
+- ``--scale N`` replicates the ``SPARK_GRAFT_SF_DIR`` lake (default:
+  the sf0.1 test lake, as in bench.py) N times into
+  ``SCRATCH/lake_<N>x``, with foreign-key-consistent key offsets so join
+  and group cardinalities scale too.  Only the tables the query reads
+  are built (plus the tiny nation/region dims); a table already present
+  is reused, so several A/Bs at one scale share one build.  Delete
+  SCRATCH when done.
+- ``--variant module:function`` names a candidate shape with the
+  registered query's signature ``(spark, sf_dir) -> DataFrame``.
+  ``module`` is a dotted import path or a ``.py`` file, so a candidate
+  lives in a scratch file, not behind a flag in the package.  Its rows
+  must equal the shipped query's rows before anything is timed.
+- Timing is :func:`steady_state`: one fresh session, an untimed warmup
+  that materializes every Spark frame and fetches the DuckDB oracle (so
+  both engines start equally cached), 7 interleaved rounds, and the host
+  loadavg stamped on the record.
+- The record is merged into ``SCALE_PROBE.json`` in the current
+  directory (run from the repo root to add it to the committed ledger)
+  under ``<query>_ab_<N>x`` with a variant and ``<query>_<N>x`` without.
+  Source comments cite such keys; ``tests/test_probe_citations.py``
+  checks that every cited key exists.
+
+Queries over the Cardano fixture lake (the ``cardano_*`` family) do not
+read ``sf_dir``, so ``--scale`` cannot scale them; the probe refuses them.
 """
 
 from __future__ import annotations
 
+import argparse
+import importlib
+import importlib.util
 import json
 import os
-import shutil
 import sys
 import time
 
 sys.path.insert(0, os.path.dirname(os.path.abspath(__file__)))
 
-from pyspark.sql import functions as F
+from pyspark.sql import functions as F  # noqa: E402
 
-from cardano_analytics_duckdb_spark.plans import get_session
+from cardano_analytics_duckdb_spark.plans import get_session  # noqa: E402
 
-REPLICAS = 10
 SF_DIR = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-
-
-def build_scaled(spark, scratch: str, replicas: int = REPLICAS) -> None:
-    """Replicate lineitem/orders with per-replica key offsets."""
-    if os.path.exists(scratch):
-        shutil.rmtree(scratch)
-    rep = spark.range(replicas).select(F.col("id").alias("rep"))
-    li = spark.read.parquet(os.path.join(SF_DIR, "lineitem.parquet"))
-    orders = spark.read.parquet(os.path.join(SF_DIR, "orders.parquet"))
-    okey_span = orders.agg(F.max("o_orderkey")).first()[0] + 1
-    (
-        li.crossJoin(F.broadcast(rep))
-        .withColumn("l_orderkey", F.col("l_orderkey") + F.col("rep") * okey_span)
-        .drop("rep")
-        .repartition(64 * max(1, replicas // REPLICAS))
-        .write.parquet(os.path.join(scratch, "lineitem"))
-    )
-    (
-        orders.crossJoin(F.broadcast(rep))
-        .withColumn("o_orderkey", F.col("o_orderkey") + F.col("rep") * okey_span)
-        .drop("rep")
-        .repartition(64 * max(1, replicas // REPLICAS))
-        .write.parquet(os.path.join(scratch, "orders"))
-    )
-
-
-def build_scaled_lake(
-    spark, scratch: str, replicas: int = REPLICAS, file_scale: int = 1
-) -> None:
-    """Replicate the FULL sf0.1 lake at ``replicas`` x into
-    ``scratch/{t}.parquet`` directories (the layout load_table expects),
-    with FK-consistent key offsets so join/group cardinalities scale too:
-    every foreign key is shifted by the same per-replica span as its
-    dimension's primary key.  nation/region stay fixed (real dims don't
-    grow with fact volume).  Document text gets a per-replica suffix so
-    the duplicate-rate stays realistic instead of every doc gaining
-    replicas-1 exact copies.  ``file_scale`` multiplies per-table file
-    counts so per-file size stays constant as replicas grow."""
-    if os.path.exists(scratch):
-        shutil.rmtree(scratch)
-    os.makedirs(scratch)
-    rep = spark.range(replicas).select(F.col("id").alias("rep"))
-
-    from cardano_analytics_duckdb_spark.lake.tables import load_table
-
-    def read(t):
-        # load_table, not raw read: normalizes the events ts encoding
-        # (testdata has drifted NANOS/NTZ/UTC across regenerations)
-        return load_table(spark, SF_DIR, t)
-
-    def span(df, key):
-        return df.agg(F.max(key)).first()[0] + 1
-
-    def write(df, t, files=64):
-        df.drop("rep").repartition(files * file_scale).write.parquet(
-            os.path.join(scratch, t + ".parquet")
-        )
-
-    orders, customer = read("orders"), read("customer")
-    part, supplier = read("part"), read("supplier")
-    ospan, cspan = span(orders, "o_orderkey"), span(customer, "c_custkey")
-    pspan, sspan = span(part, "p_partkey"), span(supplier, "s_suppkey")
-
-    for t in ("nation", "region"):
-        read(t).write.parquet(os.path.join(scratch, t + ".parquet"))
-    write(
-        customer.crossJoin(F.broadcast(rep)).withColumn(
-            "c_custkey", F.col("c_custkey") + F.col("rep") * cspan
-        ),
-        "customer", files=16,
-    )
-    write(
-        supplier.crossJoin(F.broadcast(rep)).withColumn(
-            "s_suppkey", F.col("s_suppkey") + F.col("rep") * sspan
-        ),
-        "supplier", files=8,
-    )
-    write(
-        part.crossJoin(F.broadcast(rep)).withColumn(
-            "p_partkey", F.col("p_partkey") + F.col("rep") * pspan
-        ),
-        "part", files=16,
-    )
-    write(
-        orders.crossJoin(F.broadcast(rep))
-        .withColumn("o_orderkey", F.col("o_orderkey") + F.col("rep") * ospan)
-        .withColumn("o_custkey", F.col("o_custkey") + F.col("rep") * cspan),
-        "orders",
-    )
-    write(
-        read("lineitem")
-        .crossJoin(F.broadcast(rep))
-        .withColumn("l_orderkey", F.col("l_orderkey") + F.col("rep") * ospan)
-        .withColumn("l_partkey", F.col("l_partkey") + F.col("rep") * pspan)
-        .withColumn("l_suppkey", F.col("l_suppkey") + F.col("rep") * sspan),
-        "lineitem",
-    )
-    events = read("events")
-    espan, uspan = span(events, "event_id"), span(events, "user_id")
-    write(
-        events.crossJoin(F.broadcast(rep))
-        .withColumn("event_id", F.col("event_id") + F.col("rep") * espan)
-        .withColumn("user_id", F.col("user_id") + F.col("rep") * uspan),
-        "events", files=32,
-    )
-    docs = read("documents")
-    dspan = span(docs, "doc_id")
-    suffix = F.concat(F.lit(" r"), F.col("rep").cast("string"))
-    write(
-        docs.crossJoin(F.broadcast(rep))
-        .withColumn("doc_id", F.col("doc_id") + F.col("rep") * dspan)
-        .withColumn(
-            "n_chars", F.col("n_chars") + F.length(suffix)
-        )
-        .withColumn("text", F.concat(F.col("text"), suffix)),
-        "documents", files=32,
-    )
-    emb = read("embeddings")
-    vspan = span(emb, "vec_id")
-    write(
-        emb.crossJoin(F.broadcast(rep)).withColumn(
-            "vec_id", F.col("vec_id") + F.col("rep") * vspan
-        ),
-        "embeddings", files=32,
-    )
-
-
-def probe_queries(spark, scratch: str) -> dict:
-    li = spark.read.parquet(os.path.join(scratch, "lineitem"))
-    orders = spark.read.parquet(os.path.join(scratch, "orders"))
-    return {
-        # shuffle-heavy grouped agg (pricing-summary shape)
-        "grouped_agg": li.groupBy("l_returnflag", "l_linestatus").agg(
-            F.sum("l_quantity"), F.sum("l_extendedprice"), F.count("*")
-        ),
-        # large-large sort-merge join + agg (the shape AQE's coalescing
-        # and skew handling target)
-        "fact_fact_join": li.join(
-            orders, li.l_orderkey == orders.o_orderkey
-        )
-        .groupBy("o_orderpriority")
-        .agg(F.sum("l_extendedprice"), F.count("*")),
-        # high-cardinality agg then top-k (per-order rollup)
-        "per_order_rollup": li.groupBy("l_orderkey")
-        .agg(F.sum("l_extendedprice").alias("rev"))
-        .orderBy(F.desc("rev"))
-        .limit(100),
-    }
-
-
-def timed_pass(spark, scratch: str, n_runs: int = 3) -> dict[str, float]:
-    out = {}
-    for name, df in probe_queries(spark, scratch).items():
-        runs = []
-        for _ in range(n_runs):
-            t0 = time.perf_counter()
-            df.write.format("noop").mode("overwrite").save()
-            runs.append(time.perf_counter() - t0)
-        out[name] = round(sorted(runs)[n_runs // 2], 3)
-    return out
-
-
-def headline_matrix(spark, lake_dir: str, n_runs: int = 3) -> dict:
-    """All 15 bench headline queries at REPLICAS x scale under the two conf
-    postures bench.py diverges on — bench (AQE off, core-count shuffle
-    partitions) vs production (AQE on, oversized partitions for AQE to
-    coalesce, as plans/session.py ships).  Per-query medians make the AQE
-    crossover per-shape evidence instead of a 3-shape extrapolation
-    (r7 verdict item #4): at sf0.1 the production posture costs ~2-4x in
-    driver latency; this records what it costs at 10x."""
-    from bench import HEADLINE
-
-    from cardano_analytics_duckdb_spark.operators import all_queries
-
-    queries = all_queries()
-    confs = {
-        "bench_conf": {
-            "spark.sql.adaptive.enabled": "false",
-            "spark.sql.shuffle.partitions": "8",
-        },
-        "production_conf": {
-            "spark.sql.adaptive.enabled": "true",
-            "spark.sql.shuffle.partitions": "200",
-        },
-    }
-    saved = {
-        k: spark.conf.get(k) for conf in confs.values() for k in conf
-    }
-    out: dict = {}
-    for label, conf in confs.items():
-        for k, v in conf.items():
-            spark.conf.set(k, v)
-        for name in HEADLINE:  # untimed warmup: fresh plans → fresh codegen
-            queries[name](spark, lake_dir).write.format("noop").mode(
-                "overwrite"
-            ).save()
-        timings = {}
-        for name in HEADLINE:
-            runs = []
-            for _ in range(n_runs):
-                df = queries[name](spark, lake_dir)
-                t0 = time.perf_counter()
-                df.write.format("noop").mode("overwrite").save()
-                runs.append(time.perf_counter() - t0)
-            timings[name] = round(sorted(runs)[n_runs // 2], 3)
-        out[label] = timings
-    for k, v in saved.items():
-        spark.conf.set(k, v)
-    out["total_bench_conf"] = round(sum(out["bench_conf"].values()), 3)
-    out["total_production_conf"] = round(
-        sum(out["production_conf"].values()), 3
-    )
-    out["production_over_bench"] = round(
-        out["total_production_conf"] / out["total_bench_conf"], 3
-    )
-    out["per_query_production_over_bench"] = {
-        name: round(out["production_conf"][name] / out["bench_conf"][name], 2)
-        for name in out["bench_conf"]
-    }
-    return out
-
-
-def duckdb_headline(lake_dir: str, n_runs: int = 3) -> dict:
-    """The same 15 headline oracle SQLs on the same 10x lake in DuckDB —
-    the scale trend the per-round bench can't show.  At sf0.1 the ratio
-    is dominated by Spark's ~40-90 ms fixed per-job cost (8 of 15 queries
-    exceed 2x individually, all 70-300 ms absolute); if that diagnosis is
-    right, the ratio must FALL as data grows because the fixed cost is
-    amortized while both engines' data-proportional work scales.  This
-    records the per-query ratio at 10x so the claim is a measurement."""
-    import duckdb
-
-    from bench import HEADLINE
-
-    from cardano_analytics_duckdb_spark.operators import all_oracles
-
-    con = duckdb.connect()
-    for t in (
-        "region", "nation", "customer", "supplier", "part",
-        "orders", "lineitem", "events", "documents", "embeddings",
-    ):
-        # scaled tables are DIRECTORIES of part files (Spark output)
-        con.execute(
-            f"CREATE OR REPLACE VIEW {t} AS SELECT * FROM "
-            f"read_parquet('{os.path.join(lake_dir, t + '.parquet')}/*.parquet')"
-        )
-    oracles = all_oracles()
-    for name in HEADLINE:  # untimed warmup (buffer pool, plan cache)
-        con.execute(oracles[name]).fetchall()
-    timings = {}
-    for name in HEADLINE:
-        runs = []
-        for _ in range(n_runs):
-            t0 = time.perf_counter()
-            con.execute(oracles[name]).fetchall()
-            runs.append(time.perf_counter() - t0)
-        timings[name] = round(sorted(runs)[n_runs // 2], 3)
-    con.close()
-    return {"queries": timings, "total": round(sum(timings.values()), 3)}
-
-
-#: The data-heavy end of the headline set (every one ≤1x DuckDB at 10x) —
-#: the five whose cost is dominated by scans/shuffles over fact tables,
-#: i.e. the regime that predicts 100 TB behavior.
-HEADLINE_HEAVY = [
-    "cross_nation_orders",
-    "order_brand_sets",
-    "minhash_band_buckets",
-    "user_sessions",
-    "simhash_fingerprints",
-]
-
-
-def headline_100x(spark, lake_dir: str, n_runs: int = 3, names=None) -> dict:
-    """The next decade (r8 verdict #7, completed to the FULL 15-query set
-    in r10 per the r9 verdict #5): every headline query at 100x bench data
-    (~60 M lineitems), production conf only (the posture that wins the
-    shuffle-heavy shapes at 10x), with the DuckDB companion on the same
-    lake — does the 10x crossover (0.856x overall, every data-heavy query
-    <1x) widen another decade up?  ``heavy5_*`` subtotals keep the r9
-    series comparable."""
-    import duckdb
-
-    from bench import HEADLINE
-
-    from cardano_analytics_duckdb_spark.operators import (
-        all_oracles,
-        all_queries,
-    )
-
-    names = list(names or HEADLINE)
-    queries, oracles = all_queries(), all_oracles()
-    saved = {
-        k: spark.conf.get(k)
-        for k in (
-            "spark.sql.adaptive.enabled",
-            "spark.sql.shuffle.partitions",
-        )
-    }
-    spark.conf.set("spark.sql.adaptive.enabled", "true")
-    spark.conf.set("spark.sql.shuffle.partitions", "200")
-    con = duckdb.connect()
-    for t in (
-        "region", "nation", "customer", "supplier", "part",
-        "orders", "lineitem", "events", "documents", "embeddings",
-    ):
-        con.execute(
-            f"CREATE OR REPLACE VIEW {t} AS SELECT * FROM "
-            f"read_parquet('{os.path.join(lake_dir, t + '.parquet')}/*.parquet')"
-        )
-    for name in names:  # untimed warmup, both engines
-        queries[name](spark, lake_dir).write.format("noop").mode(
-            "overwrite"
-        ).save()
-        con.execute(oracles[name]).fetchall()
-    # Engines interleave PER QUERY PER ROUND (the cardano_probe shape):
-    # this host has external load bursts, and the old
-    # all-spark-then-all-duckdb order let a burst land on one engine's
-    # whole phase, skewing cross-engine ratios up to 2x run-to-run.
-    # Interleaving makes each ratio sample share its noise.
-    spark_runs: dict[str, list[float]] = {n: [] for n in names}
-    duck_runs: dict[str, list[float]] = {n: [] for n in names}
-    for _ in range(n_runs):
-        for name in names:
-            df = queries[name](spark, lake_dir)
-            t0 = time.perf_counter()
-            df.write.format("noop").mode("overwrite").save()
-            spark_runs[name].append(time.perf_counter() - t0)
-            t0 = time.perf_counter()
-            con.execute(oracles[name]).fetchall()
-            duck_runs[name].append(time.perf_counter() - t0)
-    con.close()
-    spark_t = {
-        n: round(sorted(r)[n_runs // 2], 3) for n, r in spark_runs.items()
-    }
-    duck_t = {
-        n: round(sorted(r)[n_runs // 2], 3) for n, r in duck_runs.items()
-    }
-    for k, v in saved.items():
-        spark.conf.set(k, v)
-    out = {
-        "replicas": REPLICAS_100X,
-        "production_conf": spark_t,
-        "duckdb": duck_t,
-        "total_production_conf": round(sum(spark_t.values()), 3),
-        "total_duckdb": round(sum(duck_t.values()), 3),
-        "vs_duckdb": round(
-            sum(spark_t.values()) / sum(duck_t.values()), 3
-        ),
-        "per_query_spark_over_duckdb": {
-            n: round(spark_t[n] / duck_t[n], 2)
-            for n in names
-            if duck_t[n] > 0
-        },
-    }
-    heavy = [n for n in HEADLINE_HEAVY if n in spark_t]
-    if heavy:
-        s5 = sum(spark_t[n] for n in heavy)
-        d5 = sum(duck_t[n] for n in heavy)
-        out["heavy5_total_production_conf"] = round(s5, 3)
-        out["heavy5_total_duckdb"] = round(d5, 3)
-        out["heavy5_vs_duckdb"] = round(s5 / d5, 3)
-    return out
-
-
-def manifest_probe(
-    spark,
-    scratch: str,
-    n_runs: int = 3,
-    lineitem_dir: str | None = None,
-    out_files: int = 64,
-) -> dict:
-    """Data-skipping evidence: the SAME range query on the SAME rows under
-    two layouts — as-written (random multi-file) vs z-ordered — each with
-    a stats manifest.  Records files kept and wall time of the pruned read
-    vs the full-scan filter; the point being measured: skipping quality
-    is a property of LAYOUT (zorder tightens per-file spans), and the
-    manifest is what converts that into files never opened."""
-    from cardano_analytics_duckdb_spark.lake.manifest import (
-        build_manifest,
-        prune_files,
-        read_pruned,
-    )
-    from cardano_analytics_duckdb_spark.lake.zorder import zorder_write
-
-    linear = lineitem_dir or os.path.join(scratch, "lineitem")
-    li = spark.read.parquet(linear)
-    zpath = os.path.join(scratch, "lineitem_z")
-    zorder_write(
-        li, zpath, ["l_orderkey", "l_partkey"], out_files=out_files
-    )
-    lo, hi = li.agg(F.min("l_partkey"), F.max("l_partkey")).first()
-    qlo, qhi = float(lo), float(lo) + (float(hi) - float(lo)) / 16.0
-    out = {"probe": f"l_partkey range 1/16 of span, one dim of a 2-dim z-order"}
-    for name, path in (("linear", linear), ("zorder", zpath)):
-        build_manifest(spark, path)
-        kept = prune_files(spark, path, "l_partkey", qlo, qhi)
-        total = len(prune_files(spark, path, "l_partkey", None, None))
-        t_full, t_pruned = [], []
-        for _ in range(n_runs):
-            full_df = spark.read.parquet(path).filter(
-                (F.col("l_partkey") >= qlo) & (F.col("l_partkey") <= qhi)
-            )
-            t0 = time.perf_counter()
-            full_df.write.format("noop").mode("overwrite").save()
-            t_full.append(time.perf_counter() - t0)
-            pruned_df = read_pruned(spark, path, "l_partkey", qlo, qhi)
-            t0 = time.perf_counter()
-            pruned_df.write.format("noop").mode("overwrite").save()
-            t_pruned.append(time.perf_counter() - t0)
-        out[name] = {
-            "files_total": total,
-            "files_kept": len(kept),
-            "t_full_scan": round(sorted(t_full)[n_runs // 2], 3),
-            "t_pruned": round(sorted(t_pruned)[n_runs // 2], 3),
-        }
-    return out
-
-
-def skew_probe(
-    spark, scratch: str, n_runs: int = 3, replicas: int = REPLICAS
-) -> dict:
-    """Skew-join evidence: `plans/skew.py` was parity- and plan-tested but
-    its claims were never timed.  At 100 TB a hot join key sends all its
-    rows to ONE reducer; wall-clock becomes that straggler.
-
-    Setup: the 10x lineitem with 40% of rows remapped to a single hot
-    ``l_orderkey``, joined to the 10x orders (both sides fact-sized;
-    broadcast disabled so a shuffle join is the only strategy — the 100 TB
-    situation).  Four postures over the identical result:
-
-    - ``plain_aqe_off``    — static sort-merge join: the straggler baseline.
-    - ``salted_aqe_off``   — blanket salted_join(n_salts=16): hot probe
-      rows spread over 16 reducers at the cost of replicating the ENTIRE
-      build side 16x.
-    - ``isolated_aqe_off`` — isolated_skew_join: hot keys detected (one
-      count pass, charged separately as ``isolated_detect``), their probe
-      rows broadcast-joined, the tail shuffle-joined.
-    - ``plain_aqe_skew``   — AQE skew-join splitting, thresholds lowered
-      to fire at probe scale (the 256 MB default is cluster-sized; the
-      mechanism, not the default tuning, is what's being measured).
-
-    Runs are INTERLEAVED round-robin across postures (confs are runtime-
-    settable) so a host-contention burst can't land on a single posture —
-    the first, sequential version of this probe recorded AQE at 6.5 s
-    purely because it ran last, behind salted's GC debris.  Row-count
-    parity of all four is asserted (a mitigation must never change the
-    result), so the probe doubles as an at-scale correctness check."""
-    from cardano_analytics_duckdb_spark.plans.skew import (
-        isolated_skew_join,
-        salted_join,
-    )
-
-    li = spark.read.parquet(os.path.join(scratch, "lineitem"))
-    orders = spark.read.parquet(os.path.join(scratch, "orders"))
-    hot = orders.agg(F.min("o_orderkey")).first()[0]
-    skewed_dir = os.path.join(scratch, "lineitem_skewed")
-    (
-        li.withColumn(
-            "l_orderkey",
-            F.when(F.rand(7) < F.lit(0.4), F.lit(hot)).otherwise(
-                F.col("l_orderkey")
-            ),
-        )
-        .repartition(64 * max(1, replicas // REPLICAS))
-        .write.mode("overwrite")
-        .parquet(skewed_dir)
-    )
-    fact = spark.read.parquet(skewed_dir).withColumnRenamed(
-        "l_orderkey", "o_orderkey"
-    )
-
-    def agg(joined):
-        # ungrouped agg after the join: cheap reduce, so wall-clock is the
-        # join stage itself (where the skew lives)
-        return joined.agg(
-            F.sum(F.col("l_extendedprice") * F.col("o_totalprice")),
-            F.count("*").alias("n"),
-        )
-
-    aqe_off = {"spark.sql.adaptive.enabled": "false"}
-    aqe_skew = {
-        "spark.sql.adaptive.enabled": "true",
-        "spark.sql.adaptive.skewJoin.enabled": "true",
-        # fire at probe scale: the hot partition is ~40% of a ~200 MB
-        # shuffle, far under the 256 MB cluster default; factor 2 (not
-        # the default 5) because the 200-partition median is itself tiny
-        "spark.sql.adaptive.skewJoin.skewedPartitionThresholdInBytes": "8m",
-        "spark.sql.adaptive.skewJoin.skewedPartitionFactor": "2",
-        "spark.sql.adaptive.advisoryPartitionSizeInBytes": "4m",
-    }
-    # None marks a key that was UNSET before the probe: restore by
-    # unsetting, not by skipping, or the tuned-down AQE thresholds leak
-    # onto a shared session after the function returns.
-    saved = {k: spark.conf.get(k, None) for k in aqe_skew}
-    saved["spark.sql.autoBroadcastJoinThreshold"] = spark.conf.get(
-        "spark.sql.autoBroadcastJoinThreshold"
-    )
-    spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
-    out = {
-        "probe": f"40% of {replicas}x lineitem on one hot orderkey,"
-        f" join {replicas}x orders"
-    }
-    try:
-        plain = agg(fact.join(orders, on=["o_orderkey"]))
-        salted = agg(salted_join(fact, orders, ["o_orderkey"], n_salts=16))
-        # hot-key detection is eager driver work: time it once, separately
-        # (the recurring cost of the returned plan is what the matrix
-        # compares; a real pipeline detects once and reuses the plan)
-        spark.conf.set("spark.sql.adaptive.enabled", "false")
-        t0 = time.perf_counter()
-        isolated = agg(isolated_skew_join(fact, orders, ["o_orderkey"]))
-        out["isolated_detect"] = round(time.perf_counter() - t0, 3)
-        postures = {
-            "plain_aqe_off": (plain, aqe_off),
-            "salted_aqe_off": (salted, aqe_off),
-            "isolated_aqe_off": (isolated, aqe_off),
-            "plain_aqe_skew": (plain, aqe_skew),
-        }
-        n_plain = None
-        runs: dict[str, list[float]] = {name: [] for name in postures}
-        for name, (df, conf) in postures.items():  # warmup + parity pass
-            for k, v in conf.items():
-                spark.conf.set(k, v)
-            rows = df.first()["n"]
-            n_plain = rows if n_plain is None else n_plain
-            assert rows == n_plain, f"{name}: {rows} != {n_plain}"
-        for _ in range(n_runs):
-            for name, (df, conf) in postures.items():
-                for k, v in conf.items():
-                    spark.conf.set(k, v)
-                t0 = time.perf_counter()
-                df.write.format("noop").mode("overwrite").save()
-                runs[name].append(time.perf_counter() - t0)
-        for name, r in runs.items():
-            out[name] = round(sorted(r)[n_runs // 2], 3)
-    finally:
-        for k, v in saved.items():
-            if v is not None:
-                spark.conf.set(k, v)
-            else:
-                spark.conf.unset(k)
-    out["joined_rows"] = n_plain
-    for name in ("salted_aqe_off", "isolated_aqe_off", "plain_aqe_skew"):
-        out[f"{name}_speedup"] = round(out["plain_aqe_off"] / out[name], 2)
-    return out
-
-
-def bucket_probe(
-    spark, scratch: str, n_runs: int = 5, replicas: int = REPLICAS
-) -> dict:
-    """Bucketed-join evidence: `lake/bucketing.py` proves the Exchange
-    elision on the physical plan (tests/test_plans.py) but never TIMES it.
-    This measures the write-once-shuffle / read-many-times-free trade on
-    the fact-fact join shape at 10x bench data.
-
-    - ``shuffle_join``  — plain parquet reads: both sides exchange on the
-      key every run (the recurring cost bucketing removes).
-    - ``bucketed_join`` — both tables pre-bucketed by o_orderkey into the
-      same bucket count: Catalyst drops both Exchanges (asserted on the
-      plan here too, not just in the test suite).
-
-    ``bucket_write`` charges the one-time double shuffle-write honestly,
-    and ``breakeven_joins`` = bucket_write / per-join saving — the number
-    of repeated joins after which bucketing is ahead.  Runs interleaved;
-    row parity asserted.  AQE off on both sides (static plans isolate the
-    exchange cost; AQE cannot elide a shuffle that co-location avoids
-    entirely)."""
-    from cardano_analytics_duckdb_spark.lake.bucketing import (
-        bucketed_join,
-        write_bucketed_df,
-    )
-
-    li = spark.read.parquet(os.path.join(scratch, "lineitem"))
-    orders = spark.read.parquet(os.path.join(scratch, "orders"))
-    saved = {
-        "spark.sql.adaptive.enabled": spark.conf.get(
-            "spark.sql.adaptive.enabled"
-        ),
-        "spark.sql.autoBroadcastJoinThreshold": spark.conf.get(
-            "spark.sql.autoBroadcastJoinThreshold"
-        ),
-    }
-    spark.conf.set("spark.sql.adaptive.enabled", "false")
-    spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
-    out = {
-        "probe": f"{replicas}x lineitem JOIN {replicas}x orders on"
-        " orderkey, 32 buckets"
-    }
-    try:
-        t0 = time.perf_counter()
-        lname = write_bucketed_df(
-            li.withColumnRenamed("l_orderkey", "o_orderkey"),
-            "probe_li_bucketed", ["o_orderkey"], n_buckets=32,
-        )
-        oname = write_bucketed_df(
-            orders, "probe_o_bucketed", ["o_orderkey"], n_buckets=32
-        )
-        out["bucket_write"] = round(time.perf_counter() - t0, 3)
-
-        def agg(joined):
-            return joined.groupBy("o_orderpriority").agg(
-                F.sum("l_extendedprice").alias("rev"),
-                F.count("*").alias("n"),
-            )
-
-        shuffled = agg(
-            li.withColumnRenamed("l_orderkey", "o_orderkey").join(
-                orders, on=["o_orderkey"]
-            )
-        )
-        bucketed = agg(bucketed_join(spark, lname, oname, ["o_orderkey"]))
-        plan = bucketed._jdf.queryExecution().executedPlan().toString()
-        # children print BELOW the join node in the plan tree: everything
-        # after "SortMergeJoin" is the two scan sides, where no Exchange
-        # may appear (the one above it — the groupBy's — is legitimate)
-        below_join = plan.split("SortMergeJoin", 1)[1]
-        assert "Exchange" not in below_join, "bucketed join still exchanges"
-        a = {r["o_orderpriority"]: r["n"] for r in shuffled.collect()}
-        b = {r["o_orderpriority"]: r["n"] for r in bucketed.collect()}
-        assert a == b, "bucketed join changed the result"
-        runs: dict[str, list[float]] = {"shuffle_join": [], "bucketed_join": []}
-        frames = {"shuffle_join": shuffled, "bucketed_join": bucketed}
-        for _ in range(n_runs):
-            for name, df in frames.items():
-                t0 = time.perf_counter()
-                df.write.format("noop").mode("overwrite").save()
-                runs[name].append(time.perf_counter() - t0)
-        for name, r in runs.items():
-            out[name] = round(sorted(r)[n_runs // 2], 3)
-        saving = out["shuffle_join"] - out["bucketed_join"]
-        out["join_speedup"] = round(
-            out["shuffle_join"] / out["bucketed_join"], 2
-        )
-        out["breakeven_joins"] = (
-            round(out["bucket_write"] / saving, 1) if saving > 0 else None
-        )
-    finally:
-        for k, v in saved.items():
-            spark.conf.set(k, v)
-        for t in ("probe_li_bucketed", "probe_o_bucketed"):
-            spark.sql(f"DROP TABLE IF EXISTS {t}")
-    return out
-
-
-REPLICAS_100X = 100
-
-# Cardano lake scaling: replicas fold onto a bounded slot span so the
-# slot_group dir count stays cluster-realistic (64 dirs at any scale)
-# instead of one dir per replica.
-_CARDANO_FOLD = 32
-_CARDANO_SPAN = 400_000  # fixture slots span [100000, 299956] → 2 groups
-
-
-def build_scaled_cardano_lake(spark, scratch: str, replicas: int) -> str:
-    """Replicate the deterministic Cardano fixture lake ``replicas``x with
-    FK-consistent identity remapping, keeping the reference's
-    ``slot_group=N/`` hive layout (≙ /root/reference/config.py:25-26):
-
-    - ``tx_id`` (and every FK copy of it: utxo/asset/mint rows, the
-      ``inputs`` struct array) gets its first 4 bytes replaced by the
-      replica index, so intra-replica joins stay closed and cross-replica
-      ids never collide (fixture ids are 32-byte hashes — distinctness of
-      the remaining 28 bytes is asserted below).
-    - slots shift by ``(rep % FOLD) * SPAN``: volume scales linearly while
-      the partition-dir count stays at FOLD x 2 (a real lake grows dirs
-      with TIME, not with per-slot density).
-    - the analyzed token's (policy_id, asset_name) is NOT remapped: the
-      flagship's token family grows linearly with volume, the realistic
-      shape for a popular asset.
-    - the asset table is written policy-clustered (range-partitioned +
-      sorted by policy_id, slot inside each slot_group) so the manifest's
-      binary-bounds box pruning has a layout to skip against — the r9
-      posture the flagship's ``_lake_pruned`` read path expects.
-    """
-    from cardano_analytics_duckdb_spark.lake.fixtures import (
-        DEFAULT_LAKE_ROOT,
-        ensure_fixture_lake,
-    )
-
-    ensure_fixture_lake(spark)
-    root = os.path.join(scratch, "cardano_lake")
-    if os.path.exists(root):
-        shutil.rmtree(root)
-    os.makedirs(root)
-    rep = spark.range(replicas).select(F.col("id").alias("rep"))
-    rep_prefix = "to_binary(lpad(hex(rep), 8, '0'), 'hex')"
-    remap = lambda c: F.expr(f"concat({rep_prefix}, substring({c}, 5))")  # noqa: E731
-    slot_shift = (F.col("rep") % _CARDANO_FOLD) * _CARDANO_SPAN
-
-    def scaled(table):
-        df = spark.read.parquet(f"{DEFAULT_LAKE_ROOT}/{table}")
-        out = (
-            df.crossJoin(F.broadcast(rep))
-            .withColumn("slot", F.col("slot") + slot_shift)
-            .withColumn("tx_id", remap("tx_id"))
-            .withColumn(
-                "slot_group",
-                (F.floor(F.col("slot") / 200_000) * 200_000).cast("long"),
-            )
-        )
-        if "inputs" in df.columns:
-            out = out.withColumn(
-                "inputs",
-                F.expr(
-                    "transform(inputs, x -> struct("
-                    f"concat({rep_prefix}, substring(x.tx_id, 5)) AS tx_id,"
-                    " x.output_index AS output_index))"
-                ),
-            )
-        return out.drop("rep")
-
-    tx = scaled("tx")
-    n_tx, n_distinct = tx.agg(
-        F.count("*"), F.countDistinct("tx_id")
-    ).first()
-    assert n_tx == n_distinct, "tx_id remap collided"
-    (
-        tx.repartition(_CARDANO_FOLD, "slot_group")
-        .write.partitionBy("slot_group")
-        .parquet(f"{root}/tx")
-    )
-    (
-        scaled("utxo")
-        .repartition(_CARDANO_FOLD, "slot_group")
-        .write.partitionBy("slot_group")
-        .parquet(f"{root}/utxo")
-    )
-    (
-        scaled("asset")
-        .repartitionByRange(_CARDANO_FOLD, "policy_id", "slot")
-        .sortWithinPartitions("policy_id", "slot")
-        .write.partitionBy("slot_group")
-        .parquet(f"{root}/asset")
-    )
-    return root
-
-
-def cardano_probe(spark, root: str, replicas: int, n_runs: int = 3) -> dict:
-    """Wall-clock the never-benchmarked flagship family (r9 verdict #3) on
-    a ``replicas``x fixture lake vs DuckDB running the published oracle
-    shapes (≙ /root/reference/token_fee_analysis.py:204-249) on the SAME
-    files, plus the data-skipping evidence that the windowed variant
-    provably reads fewer asset files than the unwindowed one (manifest box
-    pruning over the policy-clustered layout)."""
-    import duckdb
-
-    from cardano_analytics_duckdb_spark.lake.fixtures import (
-        DEFAULT_LAKE_ROOT,
-        TOKEN_NAME,
-        TOKEN_POLICY,
-    )
-    from cardano_analytics_duckdb_spark.lake.generations import read_table
-    from cardano_analytics_duckdb_spark.lake.manifest import prune_files_box
-    from cardano_analytics_duckdb_spark.operators.cardano import (
-        _HIGH_FEE_SQL,
-        _token_transfers,
-        _token_transfers_sql,
-    )
-
-    def high_fee(spark):
-        tx = read_table(spark, f"{root}/tx")
-        return (
-            tx.filter(F.col("tx_fee") > 2_000_000)
-            .select(
-                "slot",
-                F.lower(F.hex(F.col("tx_id"))).alias("tx_id_hex"),
-                "tx_fee",
-                "input_count",
-                "output_count",
-            )
-            .orderBy(F.col("tx_fee").desc(), F.col("tx_id_hex"))
-            .limit(100)
-        )
-
-    builders = {
-        "cardano_high_fee_txs": lambda: high_fee(spark),
-        "cardano_token_transfers": lambda: _token_transfers(
-            spark, None, None, root=root
-        ),
-        "cardano_token_transfers_windowed": lambda: _token_transfers(
-            spark, 100_000, 199_999, root=root
-        ),
-    }
-    frames = {k: b() for k, b in builders.items()}
-    # identical oracle text, retargeted at the scaled files
-    sqls = {
-        "cardano_high_fee_txs": _HIGH_FEE_SQL,
-        "cardano_token_transfers": _token_transfers_sql(None, None),
-        "cardano_token_transfers_windowed": _token_transfers_sql(
-            100_000, 199_999
-        ),
-    }
-    sqls = {
-        k: v.replace(DEFAULT_LAKE_ROOT, root) for k, v in sqls.items()
-    }
-
-    con = duckdb.connect()
-    con.execute(f"SET threads TO {os.cpu_count()}")
-    out: dict = {"replicas": replicas}
-    spark_t, duck_t = {}, {}
-    for name, df in frames.items():  # warmup + row parity
-        n_spark = df.count()
-        n_duck = con.execute(
-            f"SELECT count(*) FROM ({sqls[name]})"
-        ).fetchone()[0]
-        assert n_spark == n_duck, f"{name}: {n_spark} != {n_duck}"
-        out.setdefault("rows", {})[name] = n_spark
-        df.write.format("noop").mode("overwrite").save()
-        con.execute(sqls[name]).fetchall()
-    for _ in range(n_runs):  # interleaved engines per round
-        for name, build in builders.items():
-            # Rebuild per run + drop the flagship's INTRA-query
-            # token_utxos cache between runs: Spark's cache manager
-            # matches by logical plan, so a persisted intermediate from
-            # run N would silently serve run N+1 while DuckDB re-executes
-            # its CTEs from the files every time.  OS page cache stays
-            # warm for both engines.
-            spark.catalog.clearCache()
-            df = build()
-            t0 = time.perf_counter()
-            df.write.format("noop").mode("overwrite").save()
-            spark_t.setdefault(name, []).append(time.perf_counter() - t0)
-            t0 = time.perf_counter()
-            con.execute(sqls[name]).fetchall()
-            duck_t.setdefault(name, []).append(time.perf_counter() - t0)
-    con.close()
-    out["spark"] = {
-        n: round(sorted(r)[n_runs // 2], 3) for n, r in spark_t.items()
-    }
-    out["duckdb"] = {
-        n: round(sorted(r)[n_runs // 2], 3) for n, r in duck_t.items()
-    }
-    out["vs_duckdb"] = {
-        n: round(out["spark"][n] / out["duckdb"][n], 2)
-        for n in builders
-        if out["duckdb"][n] > 0
-    }
-    out["total_spark"] = round(sum(out["spark"].values()), 3)
-    out["total_duckdb"] = round(sum(out["duckdb"].values()), 3)
-    out["total_vs_duckdb"] = round(
-        out["total_spark"] / out["total_duckdb"], 3
-    )
-    # Data-skipping evidence: the windowed variant's conjunctive
-    # (policy, name, slot) box must keep strictly fewer asset files than
-    # the unwindowed (policy, name) box on the policy-clustered layout.
-    # (_token_transfers routed both reads through _lake_pruned, which
-    # built the manifest on first use above.)
-    box = [
-        ("policy_id", TOKEN_POLICY, TOKEN_POLICY),
-        ("asset_name", TOKEN_NAME, TOKEN_NAME),
-    ]
-    full = prune_files_box(spark, f"{root}/asset", box)
-    windowed = prune_files_box(
-        spark, f"{root}/asset", box + [("slot", 100_000, 199_999)]
-    )
-    total = prune_files_box(
-        spark, f"{root}/asset", [("slot", None, None)]
-    )
-    out["asset_files"] = {
-        "total": len(total),
-        "kept_unwindowed": len(full),
-        "kept_windowed": len(windowed),
-    }
-    assert len(windowed) < len(full) <= len(total), out["asset_files"]
-    return out
-
-
-def _replicated_block_stream():
-    """Lazy infinite replay of the 198-block Ogmios fixture with
-    per-replica identity remapping (tx ids and their input references
-    get the replica index spliced into the first 4 hex bytes) and slots
-    folded onto a bounded span, so the partition-dir count stays
-    realistic.  Shared by the ingest probes — the full corpus never
-    lives in memory at once."""
-    import itertools
-
-    from cardano_analytics_duckdb_spark.lake.fixtures import fixture_blocks
-
-    base = fixture_blocks()
-
-    def remap_hex(h: str, rp: str) -> str:
-        return rp + h[8:]
-
-    for rep in itertools.count():
-        rp = f"{rep:08x}"
-        shift = (rep % _CARDANO_FOLD) * _CARDANO_SPAN
-        for b in base:
-            txs = []
-            for t in b["transactions"]:
-                t2 = dict(t)
-                t2["id"] = remap_hex(t["id"], rp)
-                t2["inputs"] = [
-                    {
-                        "transaction": {
-                            "id": remap_hex(i["transaction"]["id"], rp)
-                        },
-                        "index": i["index"],
-                    }
-                    for i in t["inputs"]
-                ]
-                txs.append(t2)
-            yield {
-                **b,
-                "slot": b["slot"] + shift,
-                "height": b["height"] + rep * len(base),
-                "transactions": txs,
-            }
-
-
-def ingest_probe(
-    spark,
-    scratch: str,
-    n_blocks: int = 100_000,
-    batch_size: int = 2_000,
-) -> dict:
-    """Ingest-throughput measurement (r9 verdict #4): the ETL pipeline
-    (≙ /root/reference/ogmios_parquet.py:574-818) replaying a replicated
-    Ogmios block fixture at ≥1e5 blocks through BOTH execution modes —
-    the micro-batch loop (``ingest_blocks``) and the Structured Streaming
-    variant (``ingest_blocks_streaming``) — recording blocks/s, rows/s per
-    table, and the small-file story pre/post compaction.
-
-    Replication: the 198-block fixture is repeated with per-replica
-    identity remapping (tx ids and their input references get the replica
-    index spliced into the first 4 hex bytes) and slots folded onto a
-    bounded span (same fold as the query probe) so the partition-dir
-    count stays realistic.  The generator is lazy — the full 1e5-block
-    JSON corpus never lives in memory at once on the batch path."""
-    import itertools
-
-    from cardano_analytics_duckdb_spark.streaming.ingest import (
-        compact_lake,
-        ingest_blocks,
-        ingest_blocks_streaming,
-    )
-
-    replicated = _replicated_block_stream
-
-    def walk_counts(dest):
-        files, rows = {}, {}
-        for t in sorted(os.listdir(dest)):
-            p = os.path.join(dest, t)
-            if not os.path.isdir(p) or t.startswith("_"):
-                continue
-            n = sum(
-                1
-                for d, _, fs in os.walk(p)
-                for f in fs
-                if f.endswith(".parquet")
-            )
-            files[t] = n
-        return files
-
-    out: dict = {"n_blocks": n_blocks, "batch_size": batch_size}
-
-    # -- micro-batch path -----------------------------------------------
-    dest = os.path.join(scratch, "ingest_lake")
-    shutil.rmtree(dest, ignore_errors=True)
-    t0 = time.perf_counter()
-    stats = ingest_blocks(
-        spark,
-        itertools.islice(replicated(), n_blocks),
-        dest,
-        batch_size=batch_size,
-    )
-    wall = time.perf_counter() - t0
-    rows = {
-        t: spark.read.parquet(os.path.join(dest, t)).count()
-        for t in sorted(os.listdir(dest))
-        if os.path.isdir(os.path.join(dest, t)) and not t.startswith("_")
-    }
-    out["batch"] = {
-        "wall_s": round(wall, 1),
-        "blocks_per_s": round(stats["blocks"] / wall, 1),
-        "txs_per_s": round(stats["transactions"] / wall, 1),
-        "rows_per_s": {t: round(n / wall, 1) for t, n in rows.items()},
-        "files_pre_compaction": walk_counts(dest),
-    }
-    t0 = time.perf_counter()
-    compact_lake(spark, dest, vacuum="end")
-    out["batch"]["compaction_wall_s"] = round(time.perf_counter() - t0, 1)
-    out["batch"]["files_post_compaction"] = walk_counts(dest)
-
-    # -- Structured Streaming path --------------------------------------
-    import json as _json
-
-    jdir = os.path.join(scratch, "ingest_blocks_json")
-    shutil.rmtree(jdir, ignore_errors=True)
-    os.makedirs(jdir)
-    it = itertools.islice(replicated(), n_blocks)
-    per_file = max(1, n_blocks // 50)
-    i = 0
-    while True:
-        chunk = list(itertools.islice(it, per_file))
-        if not chunk:
-            break
-        with open(os.path.join(jdir, f"blocks_{i:05d}.jsonl"), "w") as f:
-            for b in chunk:
-                f.write(_json.dumps(b) + "\n")
-        i += 1
-    sdest = os.path.join(scratch, "ingest_lake_streaming")
-    shutil.rmtree(sdest, ignore_errors=True)
-    t0 = time.perf_counter()
-    ingest_blocks_streaming(spark, jdir, sdest)
-    swall = time.perf_counter() - t0
-    srows = spark.read.parquet(os.path.join(sdest, "tx")).count()
-    out["streaming"] = {
-        "wall_s": round(swall, 1),
-        "blocks_per_s": round(n_blocks / swall, 1),
-        "tx_rows": srows,
-        "files_pre_compaction": walk_counts(sdest),
-    }
-    return out
-
-
-def ann_probe(spark, scratch: str, replicas: int = 100, n_runs: int = 3) -> dict:
-    """ANN scale evidence (r9 verdict #6): the similarity family's
-    contracts, previously property-tested at fixture scale only, measured
-    on a ~``replicas``x embeddings table (default 200k vectors):
-
-    - ``knn_join_topk`` production path wall-time (broadcast queries x
-      codegen sims → Arrow streaming top-k reducer);
-    - LSH bucket-size distribution vs the ``lsh_banding_params`` 16x
-      safety-margin contract (expected bucket ≤ cap/16; observed max must
-      stay ≤ cap, showing the margin absorbs the corpus' actual skew);
-    - IVF same-cell probe recall@10 vs the exact ranking on a sampled
-      query set.
-
-    Replicated embeddings get deterministic per-replica jitter (additive,
-    index-seeded — NOT a pure rescale, which cosine would ignore) so the
-    scaled corpus has distinct near-neighbors instead of 100 exact copies
-    of each vector."""
-    from cardano_analytics_duckdb_spark.lake.tables import load_table
-    from cardano_analytics_duckdb_spark.operators.similarity import (
-        _KNN_K,
-        _KNN_QUERIES,
-        _band_planes,
-        _bucket_expr,
-        _cell_expr,
-        _dot,
-        _norm,
-        knn_join_topk,
-        lsh_banding_params,
-    )
-
-    emb_dir = os.path.join(scratch, "ann")
-    if os.path.exists(emb_dir):
-        shutil.rmtree(emb_dir)
-    os.makedirs(emb_dir)
-    rep = spark.range(replicas).select(F.col("id").alias("rep"))
-    base = load_table(spark, SF_DIR, "embeddings")
-    vspan = base.agg(F.max("vec_id")).first()[0] + 1
-    (
-        base.crossJoin(F.broadcast(rep))
-        .withColumn("vec_id", F.col("vec_id") + F.col("rep") * vspan)
-        .withColumn(
-            "embedding",
-            F.expr(
-                "transform(embedding, (x, i) -> cast("
-                "x + 0.01 * sin(cast(vec_id as double) * 0.7 +"
-                " cast(i as double) * 1.3) as float))"
-            ),
-        )
-        .drop("rep")
-        .repartition(32)
-        .write.parquet(os.path.join(emb_dir, "embeddings.parquet"))
-    )
-    emb = load_table(spark, emb_dir, "embeddings")
-    n = emb.count()
-    out: dict = {"replicas": replicas, "n_vectors": n}
-
-    # -- production kNN path wall-time ----------------------------------
-    df = knn_join_topk(spark, emb_dir)
-    df.write.format("noop").mode("overwrite").save()  # warmup
-    runs = []
-    for _ in range(n_runs):
-        df = knn_join_topk(spark, emb_dir)
-        t0 = time.perf_counter()
-        df.write.format("noop").mode("overwrite").save()
-        runs.append(time.perf_counter() - t0)
-    out["knn_join_topk_s"] = round(sorted(runs)[n_runs // 2], 3)
-    out["knn_queries"] = _KNN_QUERIES
-
-    # -- LSH bucket-bound contract at scale ------------------------------
-    bucket_cap = 4096
-    planes = lsh_banding_params(n, bucket_cap)
-    sizes = (
-        emb.select(_bucket_expr(_band_planes(0, planes)).alias("bucket"))
-        .groupBy("bucket")
-        .count()
-    )
-    dist = sizes.agg(
-        F.count("*").alias("n_buckets"),
-        F.max("count").alias("max_bucket"),
-        F.expr("percentile(count, 0.99)").alias("p99_bucket"),
-        F.avg("count").alias("mean_bucket"),
-    ).first()
-    out["lsh_bucket_contract"] = {
-        "bucket_cap": bucket_cap,
-        "planes": planes,
-        "expected_bucket": round(n / 2**planes, 1),
-        "n_buckets": dist["n_buckets"],
-        "mean_bucket": round(dist["mean_bucket"], 1),
-        "p99_bucket": round(dist["p99_bucket"], 1),
-        "max_bucket": dist["max_bucket"],
-        "contract_holds": bool(dist["max_bucket"] <= bucket_cap),
-    }
-
-    # -- IVF recall@10 vs exact on a sampled query set -------------------
-    q_n = 20
-    with_cell = emb.select(
-        "vec_id", "embedding", _cell_expr("embedding").alias("cell")
-    )
-    q = with_cell.filter(F.col("vec_id") < q_n).select(
-        F.col("vec_id").alias("q_id"),
-        F.col("embedding").alias("q"),
-        F.col("cell").alias("qcell"),
-    )
-    sim = _dot("embedding", "q") / (_norm("embedding") * _norm("q"))
-    from pyspark.sql import Window as W
-
-    pairs = (
-        with_cell.join(F.broadcast(q), F.col("vec_id") != F.col("q_id"))
-        .select(
-            "q_id",
-            "vec_id",
-            sim.alias("cos_sim"),
-            (F.col("cell") == F.col("qcell")).alias("same_cell"),
-        )
-    )
-    rk = F.row_number().over(
-        W.partitionBy("q_id").orderBy(F.col("cos_sim").desc(), "vec_id")
-    )
-    exact_top = pairs.withColumn("rk", rk).filter(F.col("rk") <= _KNN_K)
-    hits = exact_top.agg(
-        F.avg(F.col("same_cell").cast("double")).alias("recall")
-    ).first()
-    out["ivf_recall_at_10"] = round(hits["recall"], 3)
-    out["ivf_recall_note"] = (
-        "share of exact top-10 neighbors found in the query's own IVF"
-        " cell (the 1-probe read path of ivf_topk)"
-    )
-    return out
-
-
-def main_100x(scratch: str) -> None:
-    """The --100x mode: build the 100x lake (~60 M lineitems — fits the
-    sandbox), run the heavy-5 + DuckDB companion and the 640-file
-    manifest/z-order probe, and MERGE the results into the existing
-    SCALE_PROBE.json (the 10x sections are expensive and unchanged)."""
-    spark = get_session(app_name="scale-probe-100x", shuffle_partitions=200)
-    lake_dir = os.path.join(scratch, "lake100")
-    build_scaled_lake(
-        spark, lake_dir, replicas=REPLICAS_100X, file_scale=10
-    )
-    summary = {}
-    if os.path.exists("SCALE_PROBE.json"):
-        with open("SCALE_PROBE.json") as f:
-            summary = json.load(f)
-    summary["headline_100x"] = headline_100x(spark, lake_dir)
-    summary["manifest_100x"] = manifest_probe(
-        spark,
-        lake_dir,
-        lineitem_dir=os.path.join(lake_dir, "lineitem.parquet"),
-        out_files=640,
-    )
-    with open("SCALE_PROBE.json", "w") as f:
-        json.dump(summary, f, indent=2)
-    print(json.dumps({k: summary[k] for k in ("headline_100x", "manifest_100x")}))
-    shutil.rmtree(scratch, ignore_errors=True)
-    spark.stop()
-
-
-TPCH_R10 = [
-    # the r10 decision-support additions (Q6/Q9/Q11/Q12/Q13/Q14/Q20
-    # adaptations) plus the never-scale-probed r10 Q16 / null-aware pair —
-    # none are in bench.HEADLINE, so headline_100x never covers them.
-    "forecast_revenue_change",
-    "nation_part_profit",
-    "late_ship_priority_counts",
-    "customer_order_distribution",
-    "promo_revenue_share",
-    "significant_parts_value",
-    "excess_volume_suppliers",
-    "distinct_supplier_part_counts",
-    "not_in_null_semantics",
-]
-
-
-def tpch_bucketed_probe(
-    spark, lake_dir: str, plain: dict[str, float], n_runs: int = 3
-) -> dict:
-    """Apply the bucketed layout the repo's own measurement names as the
-    cluster path (bucket_probe_100x: join_speedup 2.11x, breakeven ~14
-    joins) to the tpch family's slow joins and RE-TIME them on it (r10
-    verdict #1 — the layout was measured but never applied to this
-    family).  Three passes, one per recurring join key; each registers
-    bucketed copies via lake.tables.bucket_lake so the UNCHANGED query
-    code reads them through load_table, then times the affected queries.
-    ``bucket_write`` charges the one-time shuffle-write honestly;
-    ``speedup`` is plain/bucketed on the same lake and session."""
-    from cardano_analytics_duckdb_spark.lake.tables import (
-        bucket_lake,
-        unbucket_lake,
-    )
-    from cardano_analytics_duckdb_spark.operators import all_queries
-
-    queries = all_queries()
-    n_buckets = 64
-    passes = [
-        (
-            "orderkey",
-            {"lineitem": ("l_orderkey",), "orders": ("o_orderkey",)},
-            ["late_ship_priority_counts", "nation_part_profit"],
-        ),
-        (
-            "partkey",
-            {"lineitem": ("l_partkey",), "part": ("p_partkey",)},
-            [
-                "distinct_supplier_part_counts",
-                "promo_revenue_share",
-                "nation_part_profit",
-            ],
-        ),
-        (
-            "custkey",
-            {"orders": ("o_custkey",), "customer": ("c_custkey",)},
-            ["customer_order_distribution"],
-        ),
-    ]
-    out: dict[str, dict] = {"n_buckets": n_buckets}
-    for tag, specs, names in passes:
-        t0 = time.perf_counter()
-        bucket_lake(spark, lake_dir, specs, n_buckets=n_buckets)
-        sect: dict = {
-            "bucketed_tables": {t: list(c) for t, c in specs.items()},
-            "bucket_write": round(time.perf_counter() - t0, 3),
-            "queries": {},
-        }
-        for name in names:
-            queries[name](spark, lake_dir).write.format("noop").mode(
-                "overwrite"
-            ).save()
-            runs = []
-            for _ in range(n_runs):
-                df = queries[name](spark, lake_dir)
-                t0 = time.perf_counter()
-                df.write.format("noop").mode("overwrite").save()
-                runs.append(time.perf_counter() - t0)
-            med = round(sorted(runs)[n_runs // 2], 3)
-            sect["queries"][name] = {
-                "bucketed": med,
-                "plain": plain.get(name),
-                "speedup": (
-                    round(plain[name] / med, 2) if plain.get(name) else None
-                ),
-            }
-        unbucket_lake(spark, lake_dir)
-        out[tag] = sect
-    return out
-
-
-def main_tpch(scratch: str) -> None:
-    """The --tpch mode: the r10 decision-support queries at 100x bench
-    data with the DuckDB companion (same lake, same measurement shape as
-    headline_100x), merged as ``tpch_100x``.  Answers the per-operator
-    scale question for the shapes added after the full headline table was
-    recorded: does each adapted plan (single fact shuffle, broadcast dims,
-    window decorrelation, null-aware anti probe) hold a decade up?  The
-    ``bucketed_layout`` section re-times the slow joins on bucketed
-    copies (r10 verdict #1)."""
-    spark = get_session(app_name="scale-probe-tpch", shuffle_partitions=200)
-    lake_dir = os.path.join(scratch, "lake100")
-    build_scaled_lake(
-        spark, lake_dir, replicas=REPLICAS_100X, file_scale=10
-    )
-    payload = headline_100x(spark, lake_dir, names=TPCH_R10)
-    payload["bucketed_layout"] = tpch_bucketed_probe(
-        spark, lake_dir, plain=payload["production_conf"]
-    )
-    _merge_probe("tpch_100x", payload)
-    shutil.rmtree(scratch, ignore_errors=True)
-    spark.stop()
-
-
-TEXT_R10 = [
-    # the r10 corpus-curation additions plus the one text query of the
-    # same narrow-map shape that was never scale-probed
-    "gopher_quality_flags",
-    "pii_redaction_stats",
-    "lang_id_scores",
-]
-
-# r12: the tpch family + revenue_by_region (verdict #7 — orders⋈customer
-# on o_custkey is the same key family the custkey layout covers)
-TPCH_R12 = TPCH_R10 + ["revenue_by_region"]
-
-
-def distinct_supplier_decomp(spark, lake_dir: str, n_runs: int = 3) -> dict:
-    """r11 verdict #3: distinct_supplier_part_counts sits at 2.23x even on
-    its best (partkey-bucketed) layout — the exchange is gone, so
-    decompose where the time actually goes.  Stages (each a superset of
-    the previous, timed on the CURRENT layout): fact scan -> +join+anti
-    -> +distinct aggregate; the deltas name the per-stage cost."""
-    from cardano_analytics_duckdb_spark.lake.tables import load_table
-
-    part_f = (
-        load_table(spark, lake_dir, "part", layout_for=("p_partkey",))
-        .filter(
-            (F.col("p_brand") != "Brand#5")
-            & F.col("p_size").isin(1, 9, 19, 29, 39, 49)
-        )
-        .select("p_partkey", "p_brand", "p_type", "p_size")
-    )
-    li = load_table(
-        spark, lake_dir, "lineitem", layout_for=("l_partkey",)
-    ).select("l_partkey", "l_suppkey")
-    excl = (
-        load_table(spark, lake_dir, "supplier")
-        .filter(F.col("s_acctbal") < 0.0)
-        .select("s_suppkey")
-    )
-    joined = li.join(
-        part_f, li.l_partkey == part_f.p_partkey
-    ).join(excl, li.l_suppkey == excl.s_suppkey, "left_anti")
-    full = joined.groupBy("p_brand", "p_type", "p_size").agg(
-        F.countDistinct("l_suppkey").alias("supplier_cnt")
-    )
-    stages = {
-        "fact_scan": li,
-        "plus_join_anti": joined.select(
-            "p_brand", "p_type", "p_size", "l_suppkey"
-        ),
-        "plus_distinct_agg": full,
-    }
-    out: dict = {}
-    for name, df in stages.items():
-        df.write.format("noop").mode("overwrite").save()  # warmup
-        runs = []
-        for _ in range(n_runs):
-            t0 = time.perf_counter()
-            df.write.format("noop").mode("overwrite").save()
-            runs.append(time.perf_counter() - t0)
-        out[name] = round(sorted(runs)[n_runs // 2], 3)
-    out["join_anti_delta"] = round(
-        out["plus_join_anti"] - out["fact_scan"], 3
-    )
-    out["distinct_agg_delta"] = round(
-        out["plus_distinct_agg"] - out["plus_join_anti"], 3
-    )
-    return out
-
-
-def main_tpch12(scratch: str) -> None:
-    """The --tpch12 mode (r11 verdict #1/#3/#7): the tpch family +
-    revenue_by_region at 100x, plain vs the LIFECYCLE bucket layout —
-    set_bucket_spec(DEFAULT_TPCH_SPEC) + bucketize once, every query then
-    picks its co-located copies through the DEFAULT read path (load_table
-    layout_for hints; no per-key-family re-registration like the r11
-    probe).  Records the one-time build cost, the per-query and family
-    ratios on both layouts, and the distinct_supplier residual
-    decomposition.  Merged as ``tpch_100x_r12``."""
-    from cardano_analytics_duckdb_spark.lake import layout
-
-    spark = get_session(app_name="scale-probe-tpch12", shuffle_partitions=200)
-    lake_dir = os.path.join(scratch, "lake100")
-    build_scaled_lake(spark, lake_dir, replicas=REPLICAS_100X, file_scale=10)
-    payload: dict = {"plain": headline_100x(spark, lake_dir, names=TPCH_R12)}
-    t0 = time.perf_counter()
-    layout.set_bucket_spec(
-        spark, lake_dir, layout.DEFAULT_TPCH_SPEC, n_buckets=64
-    )
-    layout.bucketize(spark, lake_dir)
-    payload["lifecycle_layout"] = {
-        "spec": layout.DEFAULT_TPCH_SPEC,
-        "n_buckets": 64,
-        "build_s": round(time.perf_counter() - t0, 3),
-    }
-    try:
-        payload["lifecycle_layout"]["measured"] = headline_100x(
-            spark, lake_dir, names=TPCH_R12
-        )
-        payload["distinct_supplier_decomp_bucketed"] = (
-            distinct_supplier_decomp(spark, lake_dir)
-        )
-    finally:
-        layout.drop_layout(spark, lake_dir)
-    _merge_probe("tpch_100x_r12", payload)
-    shutil.rmtree(scratch, ignore_errors=True)
-    spark.stop()
-
-
-# The five fixed-cost-dominated perf-weak queries (r11 verdict #6): every
-# one is >2x DuckDB at 100x on a SUB-SECOND absolute, with an audited
-# measured-optimal plan — the residual hypothesis is Spark's per-query
-# job/stage/task dispatch floor, not the plan.
-FIXED_COST_FIVE = [
-    "high_value_orders",
-    "order_summary_stats",
-    "pricing_summary",
-    "revenue_by_region",
-    "events_tumbling_5min",
-]
-
-
-def fixed_cost_floor_probe(spark, lake_dir: str, n_runs: int = 5) -> dict:
-    """Decompose the small-query wall-time floor at 100x:
-
-    - ``job_dispatch``: count() of a 1-row cached frame — pure
-      job-submit + schedule + result-fetch round trip, no IO.
-    - ``minimal_scan``: count() of the 5-row region table — adds one
-      real file scan task.
-    - ``orders_scan_count``: count(*) of the 100x orders table — the
-      many-task scan floor (row-group metadata count shortcut applies).
-    Then the five weak queries under the production conf vs a
-    big-partition posture (maxPartitionBytes 512m halves task counts for
-    multi-file scans) — if the floor is scheduling, fewer tasks should
-    shave it; if it's per-job dispatch, nothing changes and the floor is
-    the documented cost of the distributed posture."""
-    from cardano_analytics_duckdb_spark.lake.tables import load_table
-    from cardano_analytics_duckdb_spark.operators import all_queries
-
-    queries = all_queries()
-    out: dict = {}
-
-    one = spark.range(1).cache()
-    one.count()
-    for name, fn in (
-        ("job_dispatch", lambda: one.count()),
-        ("minimal_scan", lambda: load_table(spark, lake_dir, "region").count()),
-        ("orders_scan_count", lambda: load_table(spark, lake_dir, "orders").count()),
-    ):
-        fn()
-        runs = []
-        for _ in range(n_runs):
-            t0 = time.perf_counter()
-            fn()
-            runs.append(time.perf_counter() - t0)
-        out[name] = round(sorted(runs)[n_runs // 2], 3)
-    one.unpersist()
-
-    def timed_queries(tag: str):
-        sect = {}
-        for name in FIXED_COST_FIVE:
-            queries[name](spark, lake_dir).write.format("noop").mode(
-                "overwrite"
-            ).save()
-            runs = []
-            for _ in range(n_runs):
-                df = queries[name](spark, lake_dir)
-                t0 = time.perf_counter()
-                df.write.format("noop").mode("overwrite").save()
-                runs.append(time.perf_counter() - t0)
-            sect[name] = round(sorted(runs)[n_runs // 2], 3)
-        out[tag] = sect
-
-    spark.conf.set("spark.sql.adaptive.enabled", "true")
-    spark.conf.set("spark.sql.shuffle.partitions", "200")
-    timed_queries("production_conf")
-    saved = spark.conf.get("spark.sql.files.maxPartitionBytes")
-    spark.conf.set("spark.sql.files.maxPartitionBytes", str(512 * 1024 * 1024))
-    try:
-        timed_queries("big_partition_conf")
-    finally:
-        spark.conf.set("spark.sql.files.maxPartitionBytes", saved)
-    out["big_over_production"] = {
-        n: round(out["big_partition_conf"][n] / out["production_conf"][n], 3)
-        for n in FIXED_COST_FIVE
-        if out["production_conf"][n] > 0
-    }
-    return out
-
-
-def main_floor(scratch: str) -> None:
-    spark = get_session(app_name="scale-probe-floor", shuffle_partitions=200)
-    lake_dir = os.path.join(scratch, "lake100")
-    build_scaled_lake(spark, lake_dir, replicas=REPLICAS_100X, file_scale=10)
-    _merge_probe(
-        "fixed_cost_floor_100x", fixed_cost_floor_probe(spark, lake_dir)
-    )
-    shutil.rmtree(scratch, ignore_errors=True)
-    spark.stop()
-
-
-def revjoin_probe(spark, lake_dir: str, n_runs: int = 5) -> dict:
-    """A/B of revenue_by_region's orders⋈customer join strategy at 100x
-    (r10 verdict #3).  The pre-r11 code force-broadcast the full customer
-    dim — but customer GROWS with the lake (1.5M rows here), so the
-    forced hint bypasses size gating and becomes a driver/executor OOM at
-    1000x+ instead of a plan fallback.  This probe measures what the fix
-    costs/buys at the largest local scale: the repo variant (shuffle_hash
-    hint; AQE still converts to broadcast under the threshold) vs the old
-    forced broadcast, plus the DuckDB companion ratio."""
-    import duckdb
-
-    from cardano_analytics_duckdb_spark.lake.tables import load_table
-    from cardano_analytics_duckdb_spark.operators import all_oracles
-    from cardano_analytics_duckdb_spark.operators.relational import (
-        revenue_by_region,
-    )
-    from cardano_analytics_duckdb_spark.functions.ordering import small_sorted
-    from cardano_analytics_duckdb_spark.functions.rounding import rnd
-    from cardano_analytics_duckdb_spark.operators.relational import (
-        _collected_dim,
-    )
-
-    def forced_broadcast(spark, sf_dir):
-        # the pre-r11 shape, verbatim except the F.broadcast
-        orders = load_table(spark, sf_dir, "orders")
-        customer = load_table(spark, sf_dir, "customer")
-        nat = dict(
-            _collected_dim(spark, sf_dir, "nation", ("n_nationkey", "n_regionkey"))
-        )
-        reg = dict(
-            _collected_dim(spark, sf_dir, "region", ("r_regionkey", "r_name"))
-        )
-        key_to_region = "map(" + ",".join(
-            f"{k},'" + reg[rk].replace("'", "''") + "'"
-            for k, rk in sorted(nat.items())
-            if rk in reg
-        ) + ")"
-        return (
-            orders.join(
-                F.broadcast(customer.select("c_custkey", "c_nationkey")),
-                orders.o_custkey == F.col("c_custkey"),
-            )
-            .select(
-                F.expr(f"element_at({key_to_region}, c_nationkey)").alias(
-                    "r_name"
-                ),
-                "o_totalprice",
-            )
-            .filter(F.col("r_name").isNotNull())
-            .groupBy("r_name")
-            .agg(
-                rnd(F.sum("o_totalprice"), 2).alias("revenue"),
-                F.count("*").alias("order_count"),
-            )
-            .transform(small_sorted, "r_name")
-        )
-
-    spark.conf.set("spark.sql.adaptive.enabled", "true")
-    spark.conf.set("spark.sql.shuffle.partitions", "200")
-    variants = {
-        "shuffle_hash_hint": revenue_by_region,
-        "forced_broadcast": forced_broadcast,
-    }
-    times: dict[str, float] = {}
-    for name, fn in variants.items():
-        fn(spark, lake_dir).write.format("noop").mode("overwrite").save()
-        runs = []
-        for _ in range(n_runs):
-            df = fn(spark, lake_dir)
-            t0 = time.perf_counter()
-            df.write.format("noop").mode("overwrite").save()
-            runs.append(time.perf_counter() - t0)
-        times[name] = round(sorted(runs)[n_runs // 2], 3)
-
-    con = duckdb.connect()
-    for t in ("region", "nation", "customer", "orders"):
-        con.execute(
-            f"CREATE OR REPLACE VIEW {t} AS SELECT * FROM "
-            f"read_parquet('{os.path.join(lake_dir, t + '.parquet')}/*.parquet')"
-        )
-    sql = all_oracles()["revenue_by_region"]
-    con.execute(sql).fetchall()
-    runs = []
-    for _ in range(n_runs):
-        t0 = time.perf_counter()
-        con.execute(sql).fetchall()
-        runs.append(time.perf_counter() - t0)
-    con.close()
-    duck = round(sorted(runs)[n_runs // 2], 3)
-    return {
-        "replicas": REPLICAS_100X,
-        "spark": times,
-        "duckdb": duck,
-        "shuffle_hash_over_forced_broadcast": round(
-            times["shuffle_hash_hint"] / times["forced_broadcast"], 3
-        ),
-        "vs_duckdb": round(times["shuffle_hash_hint"] / duck, 3),
-    }
-
-
-def flagship_gate_probe(spark, root: str, replicas: int, n_runs: int = 5) -> dict:
-    """A/B of the flagship's size-gated broadcasts (r11 verdict #2) at the
-    2M-tx lake.  Variants, interleaved round-robin with the cache cleared
-    per run (memory: persist leaks otherwise carry between runs):
-
-    - ``r12_gated``: the shipped code — one count of the persisted
-      token_utxos frame decides broadcast vs shuffle_hash for all four
-      former forced-broadcast sites (140k rows here -> broadcast chosen).
-    - ``r11_forced_broadcast``: the pre-gate shape reconstructed inline —
-      no count job, unconditional F.broadcast (what the gate must not
-      regress against).
-    - ``gate_zero_shuffle``: gate forced to 0 — the over-the-gate fallback
-      path (shuffle_hash everywhere), the cost a genuinely huge token pays
-      instead of OOMing the driver.
-    """
-    from cardano_analytics_duckdb_spark.operators import cardano as mod
-    from cardano_analytics_duckdb_spark.operators.cardano import (
-        _lake,
-        _lake_pruned,
-    )
-    from cardano_analytics_duckdb_spark.lake.fixtures import (
-        TOKEN_NAME,
-        TOKEN_POLICY,
-    )
-
-    def r11_forced(spark):
-        # ≙ operators/cardano.py@r11 `_token_transfers(None, None)`:
-        # forced broadcasts, no gate count (e7e8a42 tree)
-        asset = _lake_pruned(
-            spark, "asset",
-            [("policy_id", TOKEN_POLICY, TOKEN_POLICY),
-             ("asset_name", TOKEN_NAME, TOKEN_NAME),
-             ("slot", None, None)],
-            root,
-        )
-        tx = _lake(spark, "tx", root)
-        token_utxos = (
-            asset.filter(
-                (F.col("policy_id") == F.lit(TOKEN_POLICY))
-                & (F.col("asset_name") == F.lit(TOKEN_NAME))
-            )
-            .select("tx_id", "output_index", "address")
-            .cache()
-        )
-        relevant = tx.join(
-            F.broadcast(token_utxos.select("tx_id").distinct()),
-            "tx_id", "left_semi",
-        ).persist()
-        inputs_set = (
-            relevant.select("tx_id", F.explode("inputs").alias("r"))
-            .select(
-                F.col("tx_id").alias("consuming_tx_id"),
-                F.col("r.tx_id").alias("src_tx_id"),
-                F.col("r.output_index").alias("src_output_index"),
-            )
-            .join(
-                F.broadcast(
-                    token_utxos.withColumnsRenamed(
-                        {"tx_id": "src_tx_id",
-                         "output_index": "src_output_index"}
-                    )
-                ),
-                on=["src_tx_id", "src_output_index"],
-            )
-            .groupBy("consuming_tx_id")
-            .agg(
-                F.concat_ws(
-                    "|",
-                    F.array_sort(F.collect_set(F.lower(F.hex("address")))),
-                ).alias("input_addr_set")
-            )
-            .withColumnRenamed("consuming_tx_id", "tx_id")
-        )
-        outputs_set = token_utxos.groupBy("tx_id").agg(
-            F.concat_ws(
-                "|", F.array_sort(F.collect_set(F.lower(F.hex("address"))))
-            ).alias("output_addr_set")
-        )
-        report = (
-            relevant.join(F.broadcast(inputs_set), "tx_id", "left")
-            .join(F.broadcast(outputs_set), "tx_id", "left")
-            .filter(
-                ~F.col("input_addr_set").eqNullSafe(F.col("output_addr_set"))
-            )
-            .select(
-                "slot", F.lower(F.hex("tx_id")).alias("tx_id_hex"), "tx_fee",
-                "input_count", "output_count",
-                "input_addr_set", "output_addr_set",
-            )
-        )
-        return report.persist().orderBy("slot", "tx_id_hex")
-
-    def gated(spark):
-        return mod._token_transfers(spark, None, None, root=root)
-
-    real_gate = mod._FLAGSHIP_BROADCAST_ROW_GATE
-
-    def run(name):
-        spark.catalog.clearCache()
-        if name == "gate_zero_shuffle":
-            mod._FLAGSHIP_BROADCAST_ROW_GATE = 0
-        else:
-            mod._FLAGSHIP_BROADCAST_ROW_GATE = real_gate
-        t0 = time.perf_counter()
-        fn = r11_forced if name == "r11_forced_broadcast" else gated
-        fn(spark).write.format("noop").mode("overwrite").save()
-        return time.perf_counter() - t0
-
-    names = ["r12_gated", "r11_forced_broadcast", "gate_zero_shuffle"]
-    for n in names:  # warmup (codegen/JIT, manifest build)
-        run(n)
-    runs: dict[str, list[float]] = {n: [] for n in names}
-    for _ in range(n_runs):
-        for n in names:
-            runs[n].append(run(n))
-    mod._FLAGSHIP_BROADCAST_ROW_GATE = real_gate
-    med = {n: round(sorted(v)[len(v) // 2], 3) for n, v in runs.items()}
-    return {
-        "replicas": replicas,
-        "interleaved_medians_s_cache_cleared_per_run": med,
-        "gated_over_r11_forced": round(
-            med["r12_gated"] / med["r11_forced_broadcast"], 3
-        ),
-        "shuffle_fallback_over_gated": round(
-            med["gate_zero_shuffle"] / med["r12_gated"], 3
-        ),
-        "note": "token_utxos = 140k rows here (fixture 14 x 10000): the "
-        "manifest row bound (fused into the pruned read — zero extra "
-        "listing/jobs) proves the side under the 500k gate, so the gated "
-        "run keeps the r11 broadcast plan outright.  Iteration history: "
-        "count-job gate measured 1.26x over r11; a SEPARATE bound pass "
-        "still 1.28x (second file listing ~1.1 s/run); fused bound 1.03x "
-        "— within the +-0.15 noise band, no regression.  A count job now "
-        "runs ONLY when stats can't prove the side small (no manifest / "
-        "un-stat'd appends / fat bound), where it doubles as the cache "
-        "fill of a frame the plan reuses three times.",
-    }
-
-
-def main_flagab(scratch: str) -> None:
-    replicas = _replicas_arg(default=10_000)
-    spark = get_session(
-        app_name="scale-probe-flagab", shuffle_partitions=64
-    )
-    root = build_scaled_cardano_lake(spark, scratch, replicas)
-    _merge_probe(
-        f"flagship_gate_ab_{replicas}x",
-        flagship_gate_probe(spark, root, replicas),
-    )
-    shutil.rmtree(scratch, ignore_errors=True)
-    spark.stop()
-
-
-def layout_cost_probe(spark, root: str, replicas: int) -> dict:
-    """r12: is the partition-incremental layout refresh actually
-    proportional to the CHANGED partitions?  On the scaled cardano lake
-    (64 slot_group partitions at FOLD 32 x 2 source groups): full build
-    of the tx copy, then a small append into ONE slot_group, then the
-    refresh — which must rewrite only that partition (signature-checked
-    here, not just claimed) and cost a small fraction of the build."""
-    from cardano_analytics_duckdb_spark.lake import layout
-    from cardano_analytics_duckdb_spark.lake.fsutil import LakeFs
-    from cardano_analytics_duckdb_spark.operators.cardano import _lake
-
-    lfs = LakeFs(spark, root)
-    layout.set_bucket_spec(spark, root, {"tx": [["tx_id"]]}, n_buckets=64)
-    t0 = time.perf_counter()
-    layout.bucketize(spark, root)
-    t_full = round(time.perf_counter() - t0, 3)
-
-    d = layout._find_layout_dir(lfs, root)
-    status = layout._read_json(lfs, os.path.join(d, layout.STATUS_NAME))
-    st = status["copies"]["tx_by_tx_id"]
-    loc = st["location"]
-    parts = sorted(lfs.list_dirs(loc))
-    sigs_before = {
-        p: lfs.content_signature(os.path.join(loc, p)) for p in parts
-    }
-
-    # append a handful of rows into ONE source partition
-    tx_dir = os.path.join(root, "tx")
-    target = sorted(lfs.list_dirs(tx_dir))[0]
-    sample = (
-        spark.read.option("basePath", tx_dir).parquet(tx_dir)
-        .filter(f"slot_group = {int(target.split('=')[1])}")
-        .limit(50)
-        .withColumn("tx_id", F.expr("concat(to_binary('fe', 'hex'), substring(tx_id, 2))"))
-    )
-    (
-        sample.drop("slot_group").coalesce(1)
-        .write.mode("append")
-        .parquet(os.path.join(tx_dir, target))
-    )
-
-    n_true = _lake(spark, "tx", root).count()
-    t0 = time.perf_counter()
-    layout.bucketize(spark, root)
-    t_incr = round(time.perf_counter() - t0, 3)
-    rewritten = [
-        p
-        for p in parts
-        if lfs.content_signature(os.path.join(loc, p)) != sigs_before[p]
-    ]
-    served = layout.resolve_bucketed(spark, root, "tx")
-    ok = served is not None and served.count() == n_true
-    return {
-        "replicas": replicas,
-        "tx_partitions": len(parts),
-        "full_build_s": t_full,
-        "incremental_refresh_s": t_incr,
-        "incremental_over_full": round(t_incr / t_full, 3),
-        "partitions_rewritten": rewritten,
-        "rows_match_after_refresh": ok,
-    }
-
-
-def main_layoutcost(scratch: str) -> None:
-    replicas = _replicas_arg(default=10_000)
-    spark = get_session(
-        app_name="scale-probe-layoutcost", shuffle_partitions=64
-    )
-    root = build_scaled_cardano_lake(spark, scratch, replicas)
-    _merge_probe(
-        f"layout_refresh_cost_{replicas}x", layout_cost_probe(spark, root, replicas)
-    )
-    shutil.rmtree(scratch, ignore_errors=True)
-    spark.stop()
-
-
-def main_revjoin(scratch: str) -> None:
-    spark = get_session(app_name="scale-probe-revjoin", shuffle_partitions=200)
-    lake_dir = os.path.join(scratch, "lake100")
-    build_scaled_lake(spark, lake_dir, replicas=REPLICAS_100X, file_scale=10)
-    _merge_probe("revenue_by_region_join_100x", revjoin_probe(spark, lake_dir))
-    shutil.rmtree(scratch, ignore_errors=True)
-    spark.stop()
-
-
-def gopher_arrow_probe(spark, lake_dir: str, n_runs: int = 5) -> dict:
-    """r11 verdict #5: the fifth gopher variant — Arrow mapInPandas
-    kernel (C-loop split/Counter) vs the shipped sorted-run JVM fold —
-    at 100x documents, interleaved, plus DuckDB companion and a full
-    row-equality check between the variants."""
-    import duckdb
-
-    from cardano_analytics_duckdb_spark.operators import all_oracles
-    from cardano_analytics_duckdb_spark.operators.textops import (
-        gopher_quality_flags,
-        gopher_quality_flags_jvm,
-    )
-
-    eq = (
-        gopher_quality_flags_jvm(spark, lake_dir)
-        .exceptAll(gopher_quality_flags(spark, lake_dir))
-        .count()
-    )
-    assert eq == 0, f"arrow variant diverges on {eq} rows"
-
-    variants = {
-        "jvm_sorted_run_fold": gopher_quality_flags_jvm,
-        "arrow_map_in_pandas": gopher_quality_flags,
-    }
-    con = duckdb.connect()
-    con.execute(
-        "CREATE VIEW documents AS SELECT * FROM read_parquet("
-        f"'{os.path.join(lake_dir, 'documents.parquet')}/*.parquet')"
-    )
-    sql = all_oracles()["gopher_quality_flags"]
-
-    for fn in variants.values():  # warmup (codegen / worker pool spin-up)
-        fn(spark, lake_dir).write.format("noop").mode("overwrite").save()
-    con.execute(sql).fetchall()
-    runs: dict[str, list[float]] = {n: [] for n in variants}
-    duck_runs: list[float] = []
-    for _ in range(n_runs):  # interleaved rounds
-        for name, fn in variants.items():
-            df = fn(spark, lake_dir)
-            t0 = time.perf_counter()
-            df.write.format("noop").mode("overwrite").save()
-            runs[name].append(time.perf_counter() - t0)
-        t0 = time.perf_counter()
-        con.execute(sql).fetchall()
-        duck_runs.append(time.perf_counter() - t0)
-    con.close()
-    med = {n: round(sorted(v)[len(v) // 2], 3) for n, v in runs.items()}
-    duck = round(sorted(duck_runs)[n_runs // 2], 3)
-    return {
-        "replicas": REPLICAS_100X,
-        "interleaved_medians_s": med,
-        "duckdb": duck,
-        "arrow_over_jvm": round(
-            med["arrow_map_in_pandas"] / med["jvm_sorted_run_fold"], 3
-        ),
-        "jvm_vs_duckdb": round(med["jvm_sorted_run_fold"] / duck, 3),
-        "arrow_vs_duckdb": round(med["arrow_map_in_pandas"] / duck, 3),
-    }
-
-
-def main_gopher(scratch: str) -> None:
-    spark = get_session(app_name="scale-probe-gopher", shuffle_partitions=200)
-    lake_dir = os.path.join(scratch, "lake100")
-    build_scaled_lake(spark, lake_dir, replicas=REPLICAS_100X, file_scale=10)
-    _merge_probe("gopher_arrow", gopher_arrow_probe(spark, lake_dir))
-    shutil.rmtree(scratch, ignore_errors=True)
-    spark.stop()
-
-
-def main_text(scratch: str) -> None:
-    """The --text mode: the r10 corpus-curation operators at 100x bench
-    documents (~500k docs) with the DuckDB companion, merged as
-    ``text_100x``.  These are narrow per-document maps (HOFs / regex, no
-    shuffle beyond the presentation range) — the probe verifies the
-    row-local costs (gopher's O(distinct x tokens) top-word scan, three
-    regex passes for PII) stay linear and competitive a decade up."""
-    spark = get_session(app_name="scale-probe-text", shuffle_partitions=200)
-    lake_dir = os.path.join(scratch, "lake100")
-    build_scaled_lake(
-        spark, lake_dir, replicas=REPLICAS_100X, file_scale=10
-    )
-    payload = headline_100x(spark, lake_dir, names=TEXT_R10)
-    _merge_probe("text_100x", payload)
-    shutil.rmtree(scratch, ignore_errors=True)
-    spark.stop()
-
-
-# ---- r13: ONE measurement protocol for every straddling query --------------
-# (r12 verdict #1: three >2x readings were ambiguous because they were taken
-# under unequal page-cache conditions or never got the focused protocol.)
-
 PROBE_TABLES = (
     "region", "nation", "customer", "supplier", "part",
     "orders", "lineitem", "events", "documents", "embeddings",
 )
+# Dims that stay fixed at every scale (real dims don't grow with volume).
+_FIXED = ("nation", "region")
+# Key columns shifted per replica, by the (table, column) whose span they
+# share: every foreign key moves with its dimension's primary key.
+_SHIFT = {
+    "c_custkey": ("customer", "c_custkey"),
+    "o_custkey": ("customer", "c_custkey"),
+    "s_suppkey": ("supplier", "s_suppkey"),
+    "l_suppkey": ("supplier", "s_suppkey"),
+    "p_partkey": ("part", "p_partkey"),
+    "l_partkey": ("part", "p_partkey"),
+    "o_orderkey": ("orders", "o_orderkey"),
+    "l_orderkey": ("orders", "o_orderkey"),
+    "event_id": ("events", "event_id"),
+    "user_id": ("events", "user_id"),
+    "doc_id": ("documents", "doc_id"),
+    "vec_id": ("embeddings", "vec_id"),
+}
+# Output files per table at 10x; scaled with the replica count so the
+# per-file size stays constant.
+_FILES = {
+    "customer": 16, "supplier": 8, "part": 16, "orders": 64,
+    "lineitem": 64, "events": 32, "documents": 32, "embeddings": 32,
+}
+
+
+def build_scaled_lake(spark, lake_dir: str, replicas: int, tables) -> None:
+    """Replicate ``tables`` of the source lake ``replicas`` x into
+    ``lake_dir/{t}.parquet`` directories (the layout load_table expects).
+    Document text gets a per-replica suffix so the duplicate rate stays
+    realistic instead of every doc gaining replicas-1 exact copies.  A
+    table whose directory already holds a complete write is kept."""
+    from cardano_analytics_duckdb_spark.lake.tables import load_table
+
+    def read(t):
+        # load_table, not a raw read: normalizes the events ts encoding
+        return load_table(spark, SF_DIR, t)
+
+    spans: dict[tuple[str, str], int] = {}
+
+    def span(t, col):
+        if (t, col) not in spans:
+            spans[(t, col)] = read(t).agg(F.max(col)).first()[0] + 1
+        return spans[(t, col)]
+
+    rep = spark.range(replicas).select(F.col("id").alias("rep"))
+    file_scale = max(1, replicas // 10)
+    for t in tables:
+        out = os.path.join(lake_dir, f"{t}.parquet")
+        if os.path.exists(os.path.join(out, "_SUCCESS")):
+            continue
+        df = read(t)
+        if t in _FIXED:
+            df.write.mode("overwrite").parquet(out)
+            continue
+        df = df.crossJoin(F.broadcast(rep))
+        for col in df.columns:
+            if col in _SHIFT:
+                df = df.withColumn(
+                    col, F.col(col) + F.col("rep") * span(*_SHIFT[col])
+                )
+        if t == "documents":
+            suffix = F.concat(F.lit(" r"), F.col("rep").cast("string"))
+            df = df.withColumn(
+                "n_chars", F.col("n_chars") + F.length(suffix)
+            ).withColumn("text", F.concat(F.col("text"), suffix))
+        (
+            df.drop("rep")
+            .repartition(_FILES[t] * file_scale)
+            .write.mode("overwrite")
+            .parquet(out)
+        )
+
+
+def tables_read(df, sf_dir: str) -> list[str]:
+    """The source-lake tables a frame scans (from its input files)."""
+    root = os.path.abspath(sf_dir)
+    hit = set()
+    for path in df.inputFiles():
+        rel = path.split(root, 1)[-1].lstrip("/")
+        table, ext = os.path.splitext(rel.split("/", 1)[0])
+        if ext == ".parquet" and table in PROBE_TABLES:
+            hit.add(table)
+    return sorted(hit)
 
 
 def _duck_con(lake_dir: str):
@@ -1971,15 +154,13 @@ def _duck_con(lake_dir: str):
     return con
 
 
-def steady_state(spark, lake_dir, frames, duck_sql=None, n_runs=7) -> dict:
-    """The focused steady-state protocol, now the ONE shape every
-    straddling measurement uses (r12 verdict #1): a fresh probe session,
-    n interleaved rounds, and EQUALIZED cache state — the untimed warmup
-    pass materializes every Spark variant AND fetches every DuckDB
-    oracle before any timing, so both engines enter round 1 with the
-    same lake fully page-cached.  Returns the full per-run record, not
-    just medians, so straddles are auditable."""
-    duck_sql = dict(duck_sql or {})
+def steady_state(spark, lake_dir, frames, duck_sql, n_runs=7) -> dict:
+    """The focused steady-state protocol every A/B uses: a fresh probe
+    session, n interleaved rounds, and EQUALIZED cache state — the
+    untimed warmup pass materializes every Spark variant AND fetches
+    every DuckDB oracle before any timing, so both engines enter round 1
+    with the same lake fully page-cached.  Returns the full per-run
+    record, not just medians, so straddles are auditable."""
     con = _duck_con(lake_dir)
     for fn in frames.values():
         fn().write.format("noop").mode("overwrite").save()
@@ -2005,9 +186,9 @@ def steady_state(spark, lake_dir, frames, duck_sql=None, n_runs=7) -> dict:
     return {
         "protocol": "focused_steady_state",
         "n_runs": n_runs,
-        # the knn lesson: a loaded host bent one ratio 2.87x -> 1.56x;
-        # stamping load makes quiet-vs-loaded readings distinguishable
-        # in the artifact instead of in a prose note
+        # a loaded host once bent one ratio 2.87x -> 1.56x; stamping
+        # load makes quiet-vs-loaded readings distinguishable in the
+        # artifact instead of in a prose note
         "loadavg_at_end": [round(x, 2) for x in os.getloadavg()],
         "spark_runs": runs,
         "duckdb_runs": druns,
@@ -2016,2439 +197,101 @@ def steady_state(spark, lake_dir, frames, duck_sql=None, n_runs=7) -> dict:
     }
 
 
-def main_r13text(scratch: str) -> None:
-    """--r13text (r12 verdict #1/#2/#6): the PII ambiguity resolved
-    under the unified protocol, the kernel-work A/B (single combined
-    alternation pass; rlike pre-filter), and the gopher range-shuffle
-    drop — all in one fresh session on one equally-warm 100x lake."""
-    from cardano_analytics_duckdb_spark.lake.tables import load_table
-    from cardano_analytics_duckdb_spark.operators import all_oracles
-    from cardano_analytics_duckdb_spark.operators.textops import (
-        _PII_EMAIL,
-        _PII_IP,
-        _PII_PHONE,
-        _PII_SCHEMA,
-        _gopher_flags_projection,
-        _gopher_kernel,
-        _pii_enriched_text,
-        _pii_frame,
-        _pii_kernel_combined,
-        _pii_kernel_seq,
-    )
-
-    spark = get_session(app_name="scale-probe-r13text", shuffle_partitions=200)
-    lake_dir = os.path.join(scratch, "lake100")
-    build_scaled_lake(spark, lake_dir, replicas=REPLICAS_100X, file_scale=10)
-    spark.conf.set("spark.sql.adaptive.enabled", "true")
-    pats = (_PII_EMAIL, _PII_PHONE, _PII_IP)
-    oracles = all_oracles()
-
-    def pii(kernel, ranged):
-        return lambda: _pii_frame(spark, lake_dir, kernel, ranged)
-
-    def pii_prefilter():
-        # JVM rlike gate so the Python kernel only sees candidate rows;
-        # non-candidates get JVM-side zero counts + md5 of the untouched
-        # text.  (The corpus PLANTS one of each pattern per document, so
-        # the gate selects 100% of rows — measured to record the honest
-        # rejection, not expected to win on this corpus.)
-        base = load_table(spark, lake_dir, "documents").select(
-            "doc_id", _pii_enriched_text().alias("etext")
-        )
-        gate = F.col("etext").rlike(
-            f"({_PII_EMAIL})|({_PII_PHONE})|({_PII_IP})"
-        )
-        hit = base.filter(gate).mapInPandas(
-            _pii_kernel_seq(pats), _PII_SCHEMA
-        )
-        miss = base.filter(~gate).select(
-            "doc_id",
-            F.lit(0).cast("long").alias("n_emails"),
-            F.lit(0).cast("long").alias("n_phones"),
-            F.lit(0).cast("long").alias("n_ips"),
-            F.length("etext").cast("long").alias("redacted_len"),
-            F.md5(F.col("etext").cast("binary")).alias("redacted_md5"),
-        )
-        return hit.unionByName(miss).sortWithinPartitions("doc_id")
-
-    def gopher(ranged):
-        def fn():
-            docs = load_table(spark, lake_dir, "documents").select(
-                "doc_id", "text"
-            )
-            if ranged:
-                docs = docs.repartitionByRange("doc_id")
-            m = docs.mapInPandas(
-                _gopher_kernel(),
-                "doc_id long, n_words long, mean_wlen double,"
-                " stop_hits long, top_count long",
-            )
-            return _gopher_flags_projection(m).sortWithinPartitions(
-                "doc_id"
-            )
-
-        return fn
-
-    frames = {
-        "pii_seq_ranged_r12": pii(_pii_kernel_seq(pats), True),
-        "pii_seq_noshuffle": pii(_pii_kernel_seq(pats), False),
-        "pii_combined_noshuffle": pii(_pii_kernel_combined(pats), False),
-        "pii_prefilter": pii_prefilter,
-        "gopher_ranged_r12": gopher(True),
-        "gopher_noshuffle": gopher(False),
-    }
-    # full row-equality among variants before any timing
-    base_pii = frames["pii_seq_ranged_r12"]()
-    for v in ("pii_seq_noshuffle", "pii_combined_noshuffle",
-              "pii_prefilter"):
-        diff = frames[v]().exceptAll(base_pii).count()
-        assert diff == 0, f"{v} diverges on {diff} rows"
-    assert (
-        frames["gopher_noshuffle"]()
-        .exceptAll(frames["gopher_ranged_r12"]())
-        .count()
-        == 0
-    )
-    payload = steady_state(
-        spark,
-        lake_dir,
-        frames,
-        duck_sql={
-            "pii_redaction_stats": oracles["pii_redaction_stats"],
-            "gopher_quality_flags": oracles["gopher_quality_flags"],
-        },
-        n_runs=7,
-    )
-    payload["replicas"] = REPLICAS_100X
-    _merge_probe("r13_text_ab", payload)
-    shutil.rmtree(scratch, ignore_errors=True)
-    spark.stop()
-
-
-def main_r13tpch(scratch: str) -> None:
-    """--r13tpch (r12 verdict #1/#3/#8): nation_part_profit's straddle
-    and customer_order_distribution's ~1.0x reading re-taken under the
-    unified protocol on the lifecycle layout; Q16's bucket-local
-    pair-dedup A/B (the one untried angle the partkey layout enables);
-    the events_tumbling_5min scoped-conf lever via an isolated-conf
-    sibling session (the ONE mechanism that survives the driver's lazy
-    execution)."""
-    from cardano_analytics_duckdb_spark.functions.ordering import (
-        small_sorted,
-    )
-    from cardano_analytics_duckdb_spark.lake import layout
-    from cardano_analytics_duckdb_spark.lake.tables import load_table
-    from cardano_analytics_duckdb_spark.operators import (
-        all_oracles,
-        all_queries,
-    )
-
-    spark = get_session(app_name="scale-probe-r13tpch", shuffle_partitions=200)
-    lake_dir = os.path.join(scratch, "lake100")
-    build_scaled_lake(spark, lake_dir, replicas=REPLICAS_100X, file_scale=10)
-    layout.set_bucket_spec(
-        spark, lake_dir, layout.DEFAULT_TPCH_SPEC, n_buckets=64
-    )
-    layout.bucketize(spark, lake_dir)
-    spark.conf.set("spark.sql.adaptive.enabled", "true")
-    queries, oracles = all_queries(), all_oracles()
-
-    def registered(name):
-        return lambda: queries[name](spark, lake_dir)
-
-    def q16_r12_shape():
-        # the r12 plan ON the layout: same SQL, no pair-dedup — the
-        # baseline the local-dedup A/B compares against
-        load_table(
-            spark, lake_dir, "lineitem", layout_for=("l_partkey",)
-        ).createOrReplaceTempView("li_q16r12")
-        load_table(
-            spark, lake_dir, "part", layout_for=("p_partkey",)
-        ).createOrReplaceTempView("part_q16r12")
-        load_table(spark, lake_dir, "supplier").createOrReplaceTempView(
-            "supp_q16r12"
-        )
-        raw = spark.sql(
-            """
-            SELECT p_brand, p_type, p_size,
-                   count(DISTINCT l_suppkey) AS supplier_cnt
-            FROM li_q16r12 JOIN part_q16r12 ON p_partkey = l_partkey
-            WHERE p_brand <> 'Brand#5'
-              AND p_size IN (1, 9, 19, 29, 39, 49)
-              AND l_suppkey NOT IN (
-                  SELECT s_suppkey FROM supp_q16r12 WHERE s_acctbal < 0.0)
-            GROUP BY p_brand, p_type, p_size
-            """
-        )
-        return raw.transform(
-            small_sorted,
-            F.col("supplier_cnt").desc(),
-            "p_brand",
-            "p_type",
-            "p_size",
-        )
-
-    # the shipped q16 must actually take the local-dedup path here
-    assert (
-        layout.resolve_bucketed(
-            spark, lake_dir, "lineitem", layout_for=["l_partkey"]
-        )
-        is not None
-    ), "partkey layout did not resolve — A/B would compare identical plans"
-    eq = (
-        queries["distinct_supplier_part_counts"](spark, lake_dir)
-        .exceptAll(q16_r12_shape())
-        .count()
-    )
-    assert eq == 0, f"q16 local-dedup diverges on {eq} rows"
-
-    frames = {
-        "nation_part_profit": registered("nation_part_profit"),
-        "customer_order_distribution": registered(
-            "customer_order_distribution"
-        ),
-        "q16_local_dedup": registered("distinct_supplier_part_counts"),
-        "q16_r12_shape": q16_r12_shape,
-    }
-    payload = steady_state(
-        spark,
-        lake_dir,
-        frames,
-        duck_sql={
-            n: oracles[n]
-            for n in (
-                "nation_part_profit",
-                "customer_order_distribution",
-                "distinct_supplier_part_counts",
-            )
-        },
-        n_runs=7,
-    )
-    payload["replicas"] = REPLICAS_100X
-
-    # events_tumbling_5min scoped conf (r12 verdict #8): an isolated
-    # sibling session carries maxPartitionBytes=512m for JUST this
-    # query's plan — conf set/restore around a lazy plan can't work
-    # (the driver materializes later, outside any window), but a
-    # DataFrame is bound to the session that built it, so a per-query
-    # session IS the scoped mechanism.
-    sess2 = spark.newSession()
-    for k in (
-        "spark.sql.adaptive.enabled",
-        "spark.sql.shuffle.partitions",
-        "spark.sql.session.timeZone",
-    ):
-        sess2.conf.set(k, spark.conf.get(k))
-    sess2.conf.set(
-        "spark.sql.files.maxPartitionBytes", str(512 * 1024 * 1024)
-    )
-    ev = steady_state(
-        spark,
-        lake_dir,
-        {
-            "events_production_conf": registered("events_tumbling_5min"),
-            "events_scoped_512m": lambda: queries["events_tumbling_5min"](
-                sess2, lake_dir
-            ),
-        },
-        duck_sql={
-            "events_tumbling_5min": oracles["events_tumbling_5min"]
-        },
-        n_runs=7,
-    )
-    payload["events_scoped_conf"] = ev
-    layout.drop_layout(spark, lake_dir)
-    _merge_probe("r13_tpch_ab", payload)
-    shutil.rmtree(scratch, ignore_errors=True)
-    spark.stop()
-
-
-def main_r13text2(scratch: str) -> None:
-    """--r13text2: the gopher/pii shuffle-drop generalized — the same
-    leading ``repartitionByRange`` sits in front of doc_quality_scores'
-    and lang_id_scores' pure narrow projections (no window/groupBy needs
-    the partitioning; the oracle canonicalizes order).  Same unified
-    protocol: equality asserted, then n=7 equal-cache steady state."""
-    from cardano_analytics_duckdb_spark.operators import all_oracles
-    from cardano_analytics_duckdb_spark.operators.textops import (
-        doc_quality_scores,
-        lang_id_scores,
-    )
-
-    spark = get_session(
-        app_name="scale-probe-r13text2", shuffle_partitions=200
-    )
-    lake_dir = os.path.join(scratch, "lake100")
-    build_scaled_lake(spark, lake_dir, replicas=REPLICAS_100X, file_scale=10)
-    spark.conf.set("spark.sql.adaptive.enabled", "true")
-    oracles = all_oracles()
-    frames = {
-        "doc_quality_ranged_r12": lambda: doc_quality_scores(
-            spark, lake_dir, ranged=True
-        ),
-        "doc_quality_noshuffle": lambda: doc_quality_scores(
-            spark, lake_dir, ranged=False
-        ),
-        "lang_id_ranged_r12": lambda: lang_id_scores(
-            spark, lake_dir, ranged=True
-        ),
-        "lang_id_noshuffle": lambda: lang_id_scores(
-            spark, lake_dir, ranged=False
-        ),
-    }
-    for a, b in (
-        ("doc_quality_noshuffle", "doc_quality_ranged_r12"),
-        ("lang_id_noshuffle", "lang_id_ranged_r12"),
-    ):
-        diff = frames[a]().exceptAll(frames[b]()).count()
-        assert diff == 0, f"{a} diverges on {diff} rows"
-    payload = steady_state(
-        spark,
-        lake_dir,
-        frames,
-        duck_sql={
-            "doc_quality_scores": oracles["doc_quality_scores"],
-            "lang_id_scores": oracles["lang_id_scores"],
-        },
-        n_runs=7,
-    )
-    payload["replicas"] = REPLICAS_100X
-    _merge_probe("r13_text2_ab", payload)
-    shutil.rmtree(scratch, ignore_errors=True)
-    spark.stop()
-
-
-def main_r13events(scratch: str) -> None:
-    """--r13events: events_sliding_10min never got the agg-first shape
-    its tumbling sibling measured 2x better — the merged range shuffle
-    moves every EXPLODED row (2x raw) where agg-first moves map-side
-    partials.  Unified protocol A/B at 100x events."""
-    from cardano_analytics_duckdb_spark.functions.rounding import cent_sum
-    from cardano_analytics_duckdb_spark.lake.tables import load_table
-    from cardano_analytics_duckdb_spark.operators import all_oracles
-    from cardano_analytics_duckdb_spark.operators.windows import (
-        events_sliding_10min,
-        events_tumbling_5min,
-    )
-
-    spark = get_session(
-        app_name="scale-probe-r13events", shuffle_partitions=200
-    )
-    lake_dir = os.path.join(scratch, "lake100")
-    build_scaled_lake(spark, lake_dir, replicas=REPLICAS_100X, file_scale=10)
-    spark.conf.set("spark.sql.adaptive.enabled", "true")
-
-    def sliding_merged_r12():
-        events = load_table(spark, lake_dir, "events")
-        ms = F.unix_millis(F.col("ts"))
-        base = (F.floor(ms / 300_000) * 300_000).cast("long")
-        starts = F.array(base - 300_000, base)
-        return (
-            events.select(
-                F.explode(starts).alias("window_start_ms"),
-                "event_type", "value",
-            )
-            .repartitionByRange("window_start_ms", "event_type")
-            .groupBy("window_start_ms", "event_type")
-            .agg(
-                F.count("*").alias("n"),
-                cent_sum(F.col("value")).alias("total_value"),
-            )
-            .sortWithinPartitions("window_start_ms", "event_type")
-        )
-
-    frames = {
-        "sliding_aggfirst": lambda: events_sliding_10min(spark, lake_dir),
-        "sliding_merged_r12": sliding_merged_r12,
-        "tumbling_reference": lambda: events_tumbling_5min(spark, lake_dir),
-    }
-    diff = frames["sliding_aggfirst"]().exceptAll(sliding_merged_r12()).count()
-    assert diff == 0, f"agg-first diverges on {diff} rows"
-    oracles = all_oracles()
-    payload = steady_state(
-        spark,
-        lake_dir,
-        frames,
-        duck_sql={
-            "events_sliding_10min": oracles["events_sliding_10min"],
-            "events_tumbling_5min": oracles["events_tumbling_5min"],
-        },
-        n_runs=7,
-    )
-    payload["replicas"] = REPLICAS_100X
-    _merge_probe("r13_events_ab", payload)
-    shutil.rmtree(scratch, ignore_errors=True)
-    spark.stop()
-
-
-def main_r13simhash(scratch: str) -> None:
-    """--r13simhash: simhash_fingerprints reads 1.81x at 100x — the
-    explode + grouped-agg shape shuffles one partial row per doc and
-    runs the hash-agg machinery over 50M token rows.  The HOF-fold twin
-    (one transform pass for the md5s, four packed-lane folds) is
-    exchange-FREE but pays interpreted-lambda eval per token.  Unified
-    protocol decides."""
-    from cardano_analytics_duckdb_spark.lake.tables import load_table
-    from cardano_analytics_duckdb_spark.operators import all_oracles
-    from cardano_analytics_duckdb_spark.operators.dedup import (
-        _simhash_frame,
-        _simhash_frame_fold,
-    )
-    from cardano_analytics_duckdb_spark.functions.ordering import (
-        small_sorted,
-    )
-
-    spark = get_session(
-        app_name="scale-probe-r13simhash", shuffle_partitions=200
-    )
-    lake_dir = os.path.join(scratch, "lake100")
-    build_scaled_lake(spark, lake_dir, replicas=REPLICAS_100X, file_scale=10)
-    spark.conf.set("spark.sql.adaptive.enabled", "true")
-
-    def docs():
-        return load_table(spark, lake_dir, "documents")
-
-    frames = {
-        "simhash_explode_r12": lambda: _simhash_frame(docs()).transform(
-            small_sorted, "doc_id"
-        ),
-        "simhash_hof_fold": lambda: _simhash_frame_fold(docs()).transform(
-            small_sorted, "doc_id"
-        ),
-    }
-    diff = (
-        frames["simhash_hof_fold"]()
-        .exceptAll(frames["simhash_explode_r12"]())
-        .count()
-    )
-    assert diff == 0, f"fold diverges on {diff} rows"
-    payload = steady_state(
-        spark,
-        lake_dir,
-        frames,
-        duck_sql={
-            "simhash_fingerprints": all_oracles()["simhash_fingerprints"]
-        },
-        n_runs=7,
-    )
-    payload["replicas"] = REPLICAS_100X
-    _merge_probe("r13_simhash_ab", payload)
-    shutil.rmtree(scratch, ignore_errors=True)
-    spark.stop()
-
-
-def main_r13cosine(scratch: str) -> None:
-    """--r13cosine: the last two >1.5x headline readings re-taken under
-    the unified protocol — cosine_topk with its r13 Arrow numpy kernel
-    vs the JVM HOF twin (interpreted zip_with/aggregate dot), and
-    exact_dedup_groups as-is (clean reading; its 1.63x entry predates
-    the protocol and may be cache-state noise like simhash's 1.81x
-    was)."""
-    from cardano_analytics_duckdb_spark.operators import all_oracles
-    from cardano_analytics_duckdb_spark.operators.dedup import (
-        exact_dedup_groups,
-    )
-    from cardano_analytics_duckdb_spark.operators.similarity import (
-        cosine_topk,
-        cosine_topk_arrow,
-    )
-
-    spark = get_session(
-        app_name="scale-probe-r13cosine", shuffle_partitions=200
-    )
-    lake_dir = os.path.join(scratch, "lake100")
-    build_scaled_lake(spark, lake_dir, replicas=REPLICAS_100X, file_scale=10)
-    spark.conf.set("spark.sql.adaptive.enabled", "true")
-    frames = {
-        "cosine_numpy_kernel": lambda: cosine_topk_arrow(spark, lake_dir),
-        "cosine_hof_jvm": lambda: cosine_topk(spark, lake_dir),
-        "exact_dedup_groups": lambda: exact_dedup_groups(spark, lake_dir),
-    }
-    diff = (
-        frames["cosine_numpy_kernel"]()
-        .exceptAll(frames["cosine_hof_jvm"]())
-        .count()
-    )
-    assert diff == 0, f"numpy kernel diverges on {diff} rows"
-    oracles = all_oracles()
-    payload = steady_state(
-        spark,
-        lake_dir,
-        frames,
-        duck_sql={
-            "cosine_topk": oracles["cosine_topk"],
-            "exact_dedup_groups": oracles["exact_dedup_groups"],
-        },
-        n_runs=7,
-    )
-    payload["replicas"] = REPLICAS_100X
-    _merge_probe("r13_cosine_ab", payload)
-    shutil.rmtree(scratch, ignore_errors=True)
-    spark.stop()
-
-
-def main_r13knn(scratch: str) -> None:
-    """--r13knn: the knn batch-matmul kernel A/B.  Unlike cosine_topk
-    (kernel rejected — transfer-bound at 1 sim per transferred row),
-    each transferred embedding here buys Q=10 sims AND the crossJoin's
-    B x Q expansion disappears; the transfer-ratio generalization
-    predicts a win — measure it."""
-    from cardano_analytics_duckdb_spark.operators import all_oracles
-    from cardano_analytics_duckdb_spark.operators.similarity import (
-        knn_join_topk,
-        knn_join_topk_jvm,
-    )
-
-    spark = get_session(
-        app_name="scale-probe-r13knn", shuffle_partitions=200
-    )
-    lake_dir = os.path.join(scratch, "lake100")
-    build_scaled_lake(spark, lake_dir, replicas=REPLICAS_100X, file_scale=10)
-    spark.conf.set("spark.sql.adaptive.enabled", "true")
-    frames = {
-        "knn_crossjoin_hof_r12": lambda: knn_join_topk_jvm(spark, lake_dir),
-        "knn_batch_matmul": lambda: knn_join_topk(spark, lake_dir),
-    }
-    diff = (
-        frames["knn_batch_matmul"]()
-        .exceptAll(frames["knn_crossjoin_hof_r12"]())
-        .count()
-    )
-    assert diff == 0, f"batch-matmul kernel diverges on {diff} rows"
-    payload = steady_state(
-        spark,
-        lake_dir,
-        frames,
-        duck_sql={"knn_join_topk": all_oracles()["knn_join_topk"]},
-        n_runs=7,
-    )
-    payload["replicas"] = REPLICAS_100X
-    _merge_probe("r13_knn_ab", payload)
-    shutil.rmtree(scratch, ignore_errors=True)
-    spark.stop()
-
-
-def main_r13cardano(scratch: str) -> None:
-    """--r13cardano (r12 verdict #5): does a default tx_id bucket layout
-    on the streaming lake's own join keys pay for itself?  At 10,000x
-    (2M txs) the shipped flagship gate chooses BROADCAST (140k token
-    rows < the 500k gate), a plan with no tx-side exchange to elide —
-    so the layout's real customer is the over-the-gate shuffle_hash
-    path (a popular token's multi-million-row history at the 100 TB
-    posture), measured here by forcing the gate to 0.  Two phases on
-    one lake, each internally Spark-vs-DuckDB interleaved with the
-    cache cleared per run (phases can't interleave with each other: a
-    declared layout is resolved automatically by ``_lake``, so the
-    plain phase must finish before ``bucketize``):
-
-    - ``plain``: shipped flagship (gated), windowed variant, gate0
-      (forced shuffle_hash) — manifest box-pruning only.
-    - ``layout``: spec {tx: [[tx_id]]} declared + built; the SAME three
-      builders — ``_lake`` now serves the bucketed tx copy, so the
-      gate0 semi/left joins read a HashPartitioning-compatible scan.
-
-    Plus ``asset_aggpath``: the isolated sub-A/B for bucketing asset by
-    tx_id (the outputs_set groupBy exchange-free on a bucketed copy vs
-    the shipped box-pruned scan + one small shuffle) — the full-query
-    variant is pointless if the isolated shape already shows the copy's
-    lost policy box-prune dominates the saved exchange."""
-    import duckdb
-
-    from cardano_analytics_duckdb_spark.lake import layout
-    from cardano_analytics_duckdb_spark.lake.fixtures import (
-        DEFAULT_LAKE_ROOT,
-        TOKEN_NAME,
-        TOKEN_POLICY,
-    )
-    from cardano_analytics_duckdb_spark.operators import cardano as mod
-    from cardano_analytics_duckdb_spark.operators.cardano import (
-        _lake,
-        _lake_pruned,
-        _token_transfers_sql,
-    )
-
-    replicas = _replicas_arg(default=10_000)
-    spark = get_session(
-        app_name="scale-probe-r13cardano", shuffle_partitions=64
-    )
-    root = build_scaled_cardano_lake(spark, scratch, replicas)
-    con = duckdb.connect()
-    con.execute(f"SET threads TO {os.cpu_count()}")
-    sqls = {
-        "flagship": _token_transfers_sql(None, None).replace(
-            DEFAULT_LAKE_ROOT, root
-        ),
-        "windowed": _token_transfers_sql(100_000, 199_999).replace(
-            DEFAULT_LAKE_ROOT, root
-        ),
-    }
-    real_gate = mod._FLAGSHIP_BROADCAST_ROW_GATE
-
-    def build(name):
-        spark.catalog.clearCache()
-        mod._FLAGSHIP_BROADCAST_ROW_GATE = (
-            0 if name == "flagship_gate0" else real_gate
-        )
-        win = (100_000, 199_999) if name == "windowed" else (None, None)
-        return mod._token_transfers(spark, *win, root=root)
-
-    names = ("flagship", "windowed", "flagship_gate0")
-
-    def phase(n_runs: int = 5) -> dict:
-        for n in names:  # warmup: codegen, manifest, layout catalog
-            build(n).write.format("noop").mode("overwrite").save()
-        for sql in sqls.values():
-            con.execute(sql).fetchall()
-        sp: dict[str, list[float]] = {n: [] for n in names}
-        du: dict[str, list[float]] = {n: [] for n in sqls}
-        for _ in range(n_runs):
-            for n in names:
-                df = build(n)
-                t0 = time.perf_counter()
-                df.write.format("noop").mode("overwrite").save()
-                sp[n].append(round(time.perf_counter() - t0, 3))
-            for n, sql in sqls.items():
-                t0 = time.perf_counter()
-                con.execute(sql).fetchall()
-                du[n].append(round(time.perf_counter() - t0, 3))
-        med = lambda xs: sorted(xs)[len(xs) // 2]  # noqa: E731
-        return {
-            "spark_runs": sp,
-            "duckdb_runs": du,
-            "spark_median": {n: med(v) for n, v in sp.items()},
-            "duckdb_median": {n: med(v) for n, v in du.items()},
-        }
-
-    rows_plain = {n: build(n).count() for n in names}
-    plain = phase()
-
-    t0 = time.perf_counter()
-    layout.set_bucket_spec(spark, root, {"tx": [["tx_id"]]}, n_buckets=64)
-    layout.bucketize(spark, root)
-    build_s = round(time.perf_counter() - t0, 3)
-    assert (
-        layout.resolve_bucketed(spark, root, "tx", ["tx_id"]) is not None
-    ), "tx layout did not resolve — phase would re-measure the plain path"
-    rows_layout = {n: build(n).count() for n in names}
-    assert rows_plain == rows_layout, (rows_plain, rows_layout)
-    on_layout = phase()
-
-    # asset-by-tx_id, isolated: full outputs_set shape (scan+filter+agg)
-    layout.set_bucket_spec(
-        spark, root, {"tx": [["tx_id"]], "asset": [["tx_id"]]}, n_buckets=64
-    )
-    layout.bucketize(spark, root)
-
-    def outputs_set(from_layout: bool):
-        if from_layout:
-            a = _lake(spark, "asset", root, layout_for=("tx_id",))
-        else:
-            a = _lake_pruned(
-                spark, "asset",
-                [("policy_id", TOKEN_POLICY, TOKEN_POLICY),
-                 ("asset_name", TOKEN_NAME, TOKEN_NAME)],
-                root,
-            )
-        return (
-            a.filter(
-                (F.col("policy_id") == F.lit(TOKEN_POLICY))
-                & (F.col("asset_name") == F.lit(TOKEN_NAME))
-            )
-            .groupBy("tx_id")
-            .agg(
-                F.concat_ws(
-                    "|",
-                    F.array_sort(F.collect_set(F.lower(F.hex("address")))),
-                ).alias("output_addr_set")
-            )
-        )
-
-    assert outputs_set(True).exceptAll(outputs_set(False)).count() == 0
-    agg_ab: dict[str, list[float]] = {"boxpruned": [], "asset_layout": []}
-    for fl in (True, False):  # warmup
-        outputs_set(fl).write.format("noop").mode("overwrite").save()
-    for _ in range(5):
-        for key, fl in (("boxpruned", False), ("asset_layout", True)):
-            df = outputs_set(fl)
-            t0 = time.perf_counter()
-            df.write.format("noop").mode("overwrite").save()
-            agg_ab[key].append(round(time.perf_counter() - t0, 3))
-
-    mod._FLAGSHIP_BROADCAST_ROW_GATE = real_gate
-    con.close()
-    med = lambda xs: sorted(xs)[len(xs) // 2]  # noqa: E731
-    _merge_probe(
-        f"r13_cardano_layout_{replicas}x",
-        {
-            "replicas": replicas,
-            "rows": rows_plain,
-            "tx_layout_build_s": build_s,
-            "plain": plain,
-            "tx_layout": on_layout,
-            "gate0_layout_over_plain": round(
-                on_layout["spark_median"]["flagship_gate0"]
-                / plain["spark_median"]["flagship_gate0"],
-                3,
-            ),
-            "asset_aggpath_medians_s": {
-                k: med(v) for k, v in agg_ab.items()
-            },
-        },
-    )
-    shutil.rmtree(scratch, ignore_errors=True)
-    spark.stop()
-
-
-# ---- r13: the perf-weak ledger as a tracked, machine-readable artifact ----
-# (r12 verdict #7: the judge should diff a ledger, not re-derive the weak
-# set from prose.)  Ratios are EXTRACTED from SCALE_PROBE.json entries —
-# never hand-typed — via preference-ordered paths (newest protocol first);
-# residual text and floor tags are the curated judgment the verdicts
-# already record.
-
-_WEAK_CANDIDATES = [
-    # (query, [(spark_path, duck_path) preference order] OR
-    #  [ratio_path preference order], residual, floor)
-    {
-        "query": "high_value_orders",
-        "ratio_paths": ["headline_100x.per_query_spark_over_duckdb.high_value_orders"],
-        "residual": "job-dispatch floor: 0.24-0.3 s absolute vs an "
-        "in-process DuckDB denominator ~0.3 s; decomposed in "
-        "fixed_cost_floor_100x (0.182 s/job dispatch); lever A/B "
-        "rejected (maxPartitionBytes helps 2 queries, hurts 2).",
-        "floor": True,
-    },
-    {
-        "query": "order_summary_stats",
-        "ratio_paths": ["headline_100x.per_query_spark_over_duckdb.order_summary_stats"],
-        "residual": "job-dispatch floor (see fixed_cost_floor_100x).",
-        "floor": True,
-    },
-    {
-        "query": "pricing_summary",
-        "ratio_paths": ["headline_100x.per_query_spark_over_duckdb.pricing_summary"],
-        "residual": "job-dispatch floor; wants scan parallelism, so the "
-        "big-partition lever regresses it (fixed_cost_floor_100x).",
-        "floor": True,
-    },
-    {
-        "query": "events_tumbling_5min",
-        "pairs": [
-            (
-                "r13_tpch_ab.events_scoped_conf.spark_median.events_production_conf",
-                "r13_tpch_ab.events_scoped_conf.duckdb_median.events_tumbling_5min",
-            ),
-        ],
-        "ratio_paths": ["headline_100x.per_query_spark_over_duckdb.events_tumbling_5min"],
-        "residual": "worst floor entry (DuckDB denominator ~0.2 s "
-        "in-process).  Floor file CLOSED: the last scoped lever — "
-        "512m maxPartitionBytes via a per-query sibling session — "
-        "measured NO better than production conf (0.891 vs 0.849 s "
-        "median, r13_tpch_ab.events_scoped_conf), so the r12 "
-        "big-partition reading was conf-interaction, not a win.",
-        "floor": True,
-    },
-    {
-        "query": "distinct_supplier_part_counts",
-        "pairs": [
-            (
-                "r13_tpch_ab.spark_median.q16_r12_shape",
-                "r13_tpch_ab.duckdb_median.distinct_supplier_part_counts",
-            )
-        ],
-        "ratio_paths": [],
-        "residual": "documented engine gap: DuckDB's specialized "
-        "perfect-hash distinct vs Spark's generic hash agg on an "
-        "~8M-combination key.  TWO measured rejections close the file: "
-        "dedup-first 2.0x worse (r11 q16_dedup_first_rejected), "
-        "bucket-local exchange-free dedup 2.2x worse (r13_tpch_ab "
-        "q16_local_dedup 2.796 s vs shipped 1.28 s).",
-        "floor": True,
-    },
-    {
-        "query": "nation_part_profit",
-        "pairs": [
-            (
-                "r13_tpch_ab.spark_median.nation_part_profit",
-                "r13_tpch_ab.duckdb_median.nation_part_profit",
-            )
-        ],
-        "ratio_paths": [],
-        "residual": "straddled 1.91-2.97x in r12 under unequal cache "
-        "state; r13_tpch_ab is the first focused steady-state reading.",
-        "floor": False,
-    },
-    {
-        "query": "customer_order_distribution",
-        "pairs": [
-            (
-                "r13_tpch_ab.spark_median.customer_order_distribution",
-                "r13_tpch_ab.duckdb_median.customer_order_distribution",
-            )
-        ],
-        "ratio_paths": [],
-        "residual": "read ~1.0x focused in r12 but without the full n=7 "
-        "record; r13_tpch_ab carries it.",
-        "floor": False,
-    },
-    {
-        "query": "pii_redaction_stats",
-        "pairs": [
-            (
-                "r13_text_ab.spark_median.pii_seq_noshuffle",
-                "r13_text_ab.duckdb_median.pii_redaction_stats",
-            ),
-        ],
-        "ratio_paths": [],
-        "residual": "r12 readings conflicted (1.82x adoption probe vs "
-        "2.83x family re-measure, unequal page cache); r13_text_ab "
-        "equalized cache state: the leading range shuffle was the "
-        "cost.  SHIPPED = pii_seq_noshuffle (combined-alternation and "
-        "rlike-prefilter kernels measured and rejected, same entry).",
-        "floor": False,
-    },
-    {
-        "query": "knn_join_topk",
-        "pairs": [
-            (
-                "r13_knn_ab.spark_median.knn_batch_matmul",
-                "r13_knn_ab.duckdb_median.knn_join_topk",
-            )
-        ],
-        "ratio_paths": [],
-        "residual": "batch-matmul kernel adopted in r13 (3.5x over the "
-        "crossJoin+HOF shape).  A first loaded-host read put the ratio "
-        "at 2.87x on a bimodal denominator; the prescribed quiet-host "
-        "re-read (the canonical r13_knn_ab) lands 0.542 vs 0.348 s — "
-        "under the bar.",
-        "floor": False,
-    },
-    {
-        "query": "gopher_quality_flags",
-        "pairs": [
-            (
-                "r13_text_ab.spark_median.gopher_noshuffle",
-                "r13_text_ab.duckdb_median.gopher_quality_flags",
-            )
-        ],
-        "ratio_paths": [],
-        "residual": "cleared to 1.89x in r12 via the Arrow kernel; r13 "
-        "drops the leading range shuffle.",
-        "floor": False,
-    },
-    {
-        "query": "bpe_token_counts",
-        "pairs": [
-            (
-                "r13_bpe_ab.spark_median.bpe_arrow_kernel",
-                "r13_bpe_ab.duckdb_median.bpe_token_counts",
-            ),
-            (
-                "r13_sortdrop_ab.spark_median.bpe_counts_noshuffle",
-                "r13_sortdrop_ab.duckdb_median.bpe_token_counts",
-            ),
-        ],
-        "ratio_paths": [],
-        "residual": "after the r13 sort-drop (zero exchanges) the "
-        "residual was the Java regexp_extract_all + array_distinct "
-        "evaluation vs DuckDB's RE2 (2.9x in r13_sortdrop_ab); the "
-        "r13 second half moves tokenize-and-count into an Arrow "
-        "kernel (r13_bpe_ab — preferred reading).",
-        "floor": False,
-    },
-]
-
-
-def _probe_get(probe: dict, dotted: str):
-    cur = probe
-    for k in dotted.split("."):
-        if not isinstance(cur, dict) or k not in cur:
-            return None
-        cur = cur[k]
-    return cur
-
-
-def main_r13sortdrop(scratch: str) -> None:
-    """--r13sortdrop: the gopher/pii/doc_quality shuffle-drop generalized
-    to every remaining final-global-ORDER-BY over a shuffle-free or
-    single-exchange upstream.  The range sampler re-executes everything
-    after the last shuffle boundary (there is none in the narrow
-    kernels/HOF projections — so the whole pipeline ran twice), and the
-    exchange carried every output row, all for an order the oracle
-    canonicalizes.  Representatives per sub-family, old shape via the
-    ``ordered=True``/``ranged=True`` params; equality asserted before
-    timing; unified n=7 equal-cache steady state."""
-    from cardano_analytics_duckdb_spark.operators import all_oracles
-    from cardano_analytics_duckdb_spark.operators.multimodal import (
-        image_decode_features,
-    )
-    from cardano_analytics_duckdb_spark.operators.similarity import (
-        lsh_bucket_assignments,
-    )
-    from cardano_analytics_duckdb_spark.operators.textops import (
-        bpe_token_counts,
-        doc_chunks,
-        rolling_fingerprints,
-    )
-    from cardano_analytics_duckdb_spark.operators.windows import (
-        top_orders_per_customer,
-        user_running_value,
-        user_sessions,
-    )
-
-    spark = get_session(
-        app_name="scale-probe-r13sortdrop", shuffle_partitions=200
-    )
-    lake_dir = os.path.join(scratch, "lake100")
-    build_scaled_lake(spark, lake_dir, replicas=REPLICAS_100X, file_scale=10)
-    spark.conf.set("spark.sql.adaptive.enabled", "true")
-    oracles = all_oracles()
-    frames = {
-        # headline members first (these move the bench gate)
-        "lsh_noshuffle": lambda: lsh_bucket_assignments(spark, lake_dir),
-        "lsh_ranged_r10": lambda: lsh_bucket_assignments(
-            spark, lake_dir, ranged=True
-        ),
-        "top_orders_hash": lambda: top_orders_per_customer(
-            spark, lake_dir, ranged=False
-        ),
-        "top_orders_ranged_r12": lambda: top_orders_per_customer(
-            spark, lake_dir, ranged=True
-        ),
-        "sessions_hash": lambda: user_sessions(spark, lake_dir),
-        "sessions_ranged_r12": lambda: user_sessions(
-            spark, lake_dir, ranged=True
-        ),
-        # window family: trailing orderBy was a SECOND exchange
-        "running_noshuffle": lambda: user_running_value(spark, lake_dir),
-        "running_ordered_r12": lambda: user_running_value(
-            spark, lake_dir, ordered=True
-        ),
-        # kernel family representative (covers audio/payload/resize)
-        "image_decode_noshuffle": lambda: image_decode_features(
-            spark, lake_dir
-        ),
-        "image_decode_ordered_r12": lambda: image_decode_features(
-            spark, lake_dir, ordered=True
-        ),
-        # explode-with-payload representative
-        "doc_chunks_noshuffle": lambda: doc_chunks(spark, lake_dir),
-        "doc_chunks_ordered_r12": lambda: doc_chunks(
-            spark, lake_dir, ordered=True
-        ),
-        # regex-projection representative (covers alpha_token_stats)
-        "bpe_counts_noshuffle": lambda: bpe_token_counts(spark, lake_dir),
-        "bpe_counts_ordered_r12": lambda: bpe_token_counts(
-            spark, lake_dir, ordered=True
-        ),
-    }
-    for a, b in (
-        ("lsh_noshuffle", "lsh_ranged_r10"),
-        ("top_orders_hash", "top_orders_ranged_r12"),
-        ("sessions_hash", "sessions_ranged_r12"),
-        ("running_noshuffle", "running_ordered_r12"),
-        ("doc_chunks_noshuffle", "doc_chunks_ordered_r12"),
-    ):
-        diff = frames[a]().exceptAll(frames[b]()).count()
-        assert diff == 0, f"{a} diverges on {diff} rows"
-    payload = steady_state(
-        spark,
-        lake_dir,
-        frames,
-        duck_sql={
-            n: oracles[n]
-            for n in (
-                "lsh_bucket_assignments",
-                "top_orders_per_customer",
-                "user_sessions",
-                "user_running_value",
-                "image_decode_features",
-                "doc_chunks",
-                "bpe_token_counts",
-            )
-        },
-        n_runs=7,
-    )
-    payload["replicas"] = REPLICAS_100X
-    # rolling_fingerprints costs one interpreted md5 per corpus CHARACTER
-    # (~50M at even 10x) — n=3 at 10x keeps the probe bounded; the
-    # decision criterion is the variant-vs-variant ratio, which does not
-    # need the 100x denominator.
-    lake10 = os.path.join(scratch, "lake10")
-    build_scaled_lake(spark, lake10, replicas=10, file_scale=2)
-    payload["rolling_fp_10x"] = steady_state(
-        spark,
-        lake10,
-        {
-            "rolling_noshuffle": lambda: rolling_fingerprints(spark, lake10),
-            "rolling_ordered_r12": lambda: rolling_fingerprints(
-                spark, lake10, ordered=True
-            ),
-        },
-        n_runs=3,
-    )
-    _merge_probe("r13_sortdrop_ab", payload)
-    shutil.rmtree(scratch, ignore_errors=True)
-    spark.stop()
-
-
-def main_r13aggfirst(scratch: str) -> None:
-    """--r13aggfirst: the events_sliding agg-first lesson applied to the
-    remaining pre-shuffle-raw-rows aggregations — the bitset set-aggs
-    (order_brand_sets, cross_nation_orders: partial bit_or folds ~4-5
-    raw rows/order map-side and the exchange moves partials; the old
-    range sampler re-executed the broadcast joins) and repetition_scores
-    (the exchange moved one raw row per TOKEN+BIGRAM of the corpus, and
-    the sampler re-ran the explode).  Old shapes via ``ranged=True``;
-    equality asserted; unified n=7 equal-cache steady state."""
-    from cardano_analytics_duckdb_spark.operators import all_oracles
-    from cardano_analytics_duckdb_spark.operators.mixing import (
-        repetition_scores,
-    )
-    from cardano_analytics_duckdb_spark.operators.relational import (
-        cross_nation_orders,
-        order_brand_sets,
-    )
-
-    spark = get_session(
-        app_name="scale-probe-r13aggfirst", shuffle_partitions=200
-    )
-    lake_dir = os.path.join(scratch, "lake100")
-    build_scaled_lake(spark, lake_dir, replicas=REPLICAS_100X, file_scale=10)
-    spark.conf.set("spark.sql.adaptive.enabled", "true")
-    oracles = all_oracles()
-    frames = {
-        "brand_sets_aggfirst": lambda: order_brand_sets(spark, lake_dir),
-        "brand_sets_ranged_r12": lambda: order_brand_sets(
-            spark, lake_dir, ranged=True
-        ),
-        "cross_nation_aggfirst": lambda: cross_nation_orders(spark, lake_dir),
-        "cross_nation_ranged_r12": lambda: cross_nation_orders(
-            spark, lake_dir, ranged=True
-        ),
-        "repetition_aggfirst": lambda: repetition_scores(
-            spark, lake_dir, shape="aggfirst"
-        ),
-        "repetition_ranged_r12": lambda: repetition_scores(
-            spark, lake_dir, shape="range"
-        ),
-    }
-    for a, b in (
-        ("brand_sets_aggfirst", "brand_sets_ranged_r12"),
-        ("cross_nation_aggfirst", "cross_nation_ranged_r12"),
-        ("repetition_aggfirst", "repetition_ranged_r12"),
-    ):
-        diff = frames[a]().exceptAll(frames[b]()).count()
-        assert diff == 0, f"{a} diverges on {diff} rows"
-    payload = steady_state(
-        spark,
-        lake_dir,
-        frames,
-        duck_sql={
-            n: oracles[n]
-            for n in (
-                "order_brand_sets",
-                "cross_nation_orders",
-                "repetition_scores",
-            )
-        },
-        n_runs=7,
-    )
-    payload["replicas"] = REPLICAS_100X
-    _merge_probe("r13_aggfirst_ab", payload)
-    shutil.rmtree(scratch, ignore_errors=True)
-    spark.stop()
-
-
-def build_scaled_documents(spark, scratch: str, replicas: int,
-                           file_scale: int = 1) -> None:
-    """Documents table only, same replication recipe as
-    build_scaled_lake — for text-family probes that touch nothing else
-    (a full 100x lake build costs ~40 min wall; this costs ~3)."""
-    from cardano_analytics_duckdb_spark.lake.tables import load_table
-
-    if os.path.exists(scratch):
-        shutil.rmtree(scratch)
-    os.makedirs(scratch)
-    rep = spark.range(replicas).select(F.col("id").alias("rep"))
-    docs = load_table(spark, SF_DIR, "documents")
-    dspan = docs.agg(F.max("doc_id")).first()[0] + 1
-    suffix = F.concat(F.lit(" r"), F.col("rep").cast("string"))
-    (
-        docs.crossJoin(F.broadcast(rep))
-        .withColumn("doc_id", F.col("doc_id") + F.col("rep") * dspan)
-        .withColumn("n_chars", F.col("n_chars") + F.length(suffix))
-        .withColumn("text", F.concat(F.col("text"), suffix))
-        .drop("rep")
-        .repartition(32 * file_scale)
-        .write.parquet(os.path.join(scratch, "documents.parquet"))
-    )
-
-
-def main_r13aggfirst2(scratch: str) -> None:
-    """--r13aggfirst2: repetition_scores three-shape decider.  The
-    r13_aggfirst_ab probe REJECTED agg-first for this query (14.743 s vs
-    the range shape's 12.795 s at 100x — per-doc grams are near-unique
-    within a map task, so the partial hash table folds ~nothing and its
-    overhead beats the sampler saving).  The third shape — explicit HASH
-    repartition on doc_id — is the range shape minus its two defects
-    (no range-boundary sampling job re-running the explode, no global
-    order) with everything else identical.  Documents-only 100x lake;
-    equality asserted; unified n=7 equal-cache protocol."""
-    from cardano_analytics_duckdb_spark.operators import all_oracles
-    from cardano_analytics_duckdb_spark.operators.mixing import (
-        repetition_scores,
-    )
-
-    spark = get_session(
-        app_name="scale-probe-r13aggfirst2", shuffle_partitions=200
-    )
-    lake_dir = os.path.join(scratch, "docs100")
-    build_scaled_documents(
-        spark, lake_dir, replicas=REPLICAS_100X, file_scale=10
-    )
-    spark.conf.set("spark.sql.adaptive.enabled", "true")
-    frames = {
-        "repetition_hash": lambda: repetition_scores(
-            spark, lake_dir, shape="hash"
-        ),
-        "repetition_range_r12": lambda: repetition_scores(
-            spark, lake_dir, shape="range"
-        ),
-        "repetition_aggfirst": lambda: repetition_scores(
-            spark, lake_dir, shape="aggfirst"
-        ),
-    }
-    diff = (
-        frames["repetition_hash"]()
-        .exceptAll(frames["repetition_range_r12"]())
-        .count()
-    )
-    assert diff == 0, f"hash shape diverges on {diff} rows"
-    payload = steady_state(
-        spark,
-        lake_dir,
-        frames,
-        duck_sql={
-            "repetition_scores": all_oracles()["repetition_scores"]
-        },
-        n_runs=7,
-    )
-    payload["replicas"] = REPLICAS_100X
-    _merge_probe("r13_aggfirst2_ab", payload)
-    shutil.rmtree(scratch, ignore_errors=True)
-    spark.stop()
-
-
-def main_r13sortdrop2(scratch: str) -> None:
-    """--r13sortdrop2: quiet-host re-read of the two r13_sortdrop_ab
-    entries whose rounds were contention-contaminated (the probe's own
-    loadavg stamp read 12-13, and BOTH engines show 3-10x outlier runs
-    mid-round: duckdb top_orders 4.4 -> 48.2 s, image_decode_noshuffle
-    bimodal 0.5 / 4.4 s).  Same prescription as the r13 knn re-read:
-    repeat the pair on a quiet host before believing a median.  Builds
-    only the two tables the pairs touch."""
-    from cardano_analytics_duckdb_spark.operators import all_oracles
-    from cardano_analytics_duckdb_spark.operators.multimodal import (
-        image_decode_features,
-    )
-    from cardano_analytics_duckdb_spark.operators.windows import (
-        top_orders_per_customer,
-    )
-
-    spark = get_session(
-        app_name="scale-probe-r13sortdrop2", shuffle_partitions=200
-    )
-    lake_dir = os.path.join(scratch, "lake100")
-    build_scaled_documents(
-        spark, lake_dir, replicas=REPLICAS_100X, file_scale=10
-    )
-    # orders, same replication recipe as build_scaled_lake
-    from cardano_analytics_duckdb_spark.lake.tables import load_table
-
-    rep = spark.range(REPLICAS_100X).select(F.col("id").alias("rep"))
-    orders = load_table(spark, SF_DIR, "orders")
-    customer = load_table(spark, SF_DIR, "customer")
-    ospan = orders.agg(F.max("o_orderkey")).first()[0] + 1
-    cspan = customer.agg(F.max("c_custkey")).first()[0] + 1
-    (
-        orders.crossJoin(F.broadcast(rep))
-        .withColumn("o_orderkey", F.col("o_orderkey") + F.col("rep") * ospan)
-        .withColumn("o_custkey", F.col("o_custkey") + F.col("rep") * cspan)
-        .drop("rep")
-        .repartition(64 * 10)
-        .write.parquet(os.path.join(lake_dir, "orders.parquet"))
-    )
-    spark.conf.set("spark.sql.adaptive.enabled", "true")
-    oracles = all_oracles()
-    frames = {
-        "image_decode_noshuffle": lambda: image_decode_features(
-            spark, lake_dir
-        ),
-        "image_decode_ordered_r12": lambda: image_decode_features(
-            spark, lake_dir, ordered=True
-        ),
-        "top_orders_hash": lambda: top_orders_per_customer(
-            spark, lake_dir, ranged=False
-        ),
-        "top_orders_ranged_r12": lambda: top_orders_per_customer(
-            spark, lake_dir, ranged=True
-        ),
-    }
-    payload = steady_state(
-        spark,
-        lake_dir,
-        frames,
-        duck_sql={
-            n: oracles[n]
-            for n in ("image_decode_features", "top_orders_per_customer")
-        },
-        n_runs=7,
-    )
-    payload["replicas"] = REPLICAS_100X
-    _merge_probe("r13_sortdrop2_ab", payload)
-    shutil.rmtree(scratch, ignore_errors=True)
-    spark.stop()
-
-
-def main_r13sortdrop3(scratch: str) -> None:
-    """--r13sortdrop3: sweep 3 of the sort-drop lever — the residual
-    final global ORDER BYs found by the round's grep audit, each above a
-    broadcast-only or post-exchange upstream the range sampler re-runs:
-
-    - priority_order_union: shuffle-free union of two pushed-filter
-      scans — the sampler re-ran BOTH scans, the exchange carried ~40%
-      of orders rows.
-    - part_name_levenshtein_pairs: broadcast band join, NO exchange
-      anywhere — the sampler re-ran the whole levenshtein join.
-    - duplicated_ngram_coverage / corpus_keep_decisions: sampler re-ran
-      the probe-side docs scan + joins above the last hash exchange.
-    - image_phash_near_dup_pairs: sampler re-ran only the pair-dedup
-      final (cheap) — measured to bound the family's small end.
-
-    Old shapes via ``ordered=True``; equality asserted; unified n=7
-    equal-cache steady state.  r14 note: the levenshtein band join is
-    QUADRATIC in replicas (every (brand, len_band) group grows with the
-    corpus, pairs grow with its square — ~8e9 levenshtein evals at
-    100x; the first r14 attempt ran >80 min before being killed), so
-    its frames only run when --replicas <= 10; the sort-drop factor
-    being priced (the range sampler re-executing the whole upstream
-    once more per execution) is a multiplier, not an absolute, so the
-    10x reading carries.  Default replicas stays 100x for the four
-    linear-cost queries."""
-    from cardano_analytics_duckdb_spark.operators import all_oracles
-    from cardano_analytics_duckdb_spark.operators.dedup import (
-        corpus_keep_decisions,
-        duplicated_ngram_coverage,
-        part_name_levenshtein_pairs,
-    )
-    from cardano_analytics_duckdb_spark.operators.multimodal import (
-        image_phash_near_dup_pairs,
-    )
-    from cardano_analytics_duckdb_spark.operators.relational import (
-        priority_order_union,
-    )
-
-    replicas = _replicas_arg(default=REPLICAS_100X)
-    spark = get_session(
-        app_name="scale-probe-r13sortdrop3", shuffle_partitions=200
-    )
-    lake_dir = os.path.join(scratch, f"lake{replicas}")
-    build_scaled_lake(
-        spark, lake_dir, replicas=replicas,
-        file_scale=max(1, replicas // 10),
-    )
-    spark.conf.set("spark.sql.adaptive.enabled", "true")
-    oracles = all_oracles()
-    frames = {
-        "priority_union_noshuffle": lambda: priority_order_union(
-            spark, lake_dir
-        ),
-        "priority_union_ordered_r12": lambda: priority_order_union(
-            spark, lake_dir, ordered=True
-        ),
-        "ngram_coverage_noshuffle": lambda: duplicated_ngram_coverage(
-            spark, lake_dir
-        ),
-        "ngram_coverage_ordered_r12": lambda: duplicated_ngram_coverage(
-            spark, lake_dir, ordered=True
-        ),
-        "keep_decisions_noshuffle": lambda: corpus_keep_decisions(
-            spark, lake_dir
-        ),
-        "keep_decisions_ordered_r12": lambda: corpus_keep_decisions(
-            spark, lake_dir, ordered=True
-        ),
-        "phash_pairs_noshuffle": lambda: image_phash_near_dup_pairs(
-            spark, lake_dir
-        ),
-        "phash_pairs_ordered_r12": lambda: image_phash_near_dup_pairs(
-            spark, lake_dir, ordered=True
-        ),
-    }
-    duck_names = [
-        "priority_order_union",
-        "duplicated_ngram_coverage",
-        "corpus_keep_decisions",
-        "image_phash_near_dup_pairs",
-    ]
-    if replicas <= 10:  # quadratic fan-out: see docstring
-        frames["levenshtein_noshuffle"] = (
-            lambda: part_name_levenshtein_pairs(spark, lake_dir)
-        )
-        frames["levenshtein_ordered_r12"] = (
-            lambda: part_name_levenshtein_pairs(
-                spark, lake_dir, ordered=True
-            )
-        )
-        duck_names.append("part_name_levenshtein_pairs")
-    pairs_to_check = [
-        (f"{stem}_noshuffle", f"{stem}_ordered_r12")
-        for stem in (
-            "priority_union", "ngram_coverage", "keep_decisions",
-            "phash_pairs",
-        )
-    ] + (
-        [("levenshtein_noshuffle", "levenshtein_ordered_r12")]
-        if replicas <= 10
-        else []
-    )
-    for a, b in pairs_to_check:
-        diff = frames[a]().exceptAll(frames[b]()).count()
-        assert diff == 0, f"{a} diverges on {diff} rows"
-    payload = steady_state(
-        spark,
-        lake_dir,
-        frames,
-        duck_sql={n: oracles[n] for n in duck_names},
-        n_runs=7,
-    )
-    payload["replicas"] = replicas
-    section = (
-        "r13_sortdrop3_ab"
-        if replicas == REPLICAS_100X
-        else f"r13_sortdrop3_ab_{replicas}x"
-    )
-    _merge_probe(section, payload)
-    shutil.rmtree(scratch, ignore_errors=True)
-    spark.stop()
-
-
-def main_r13sortdrop3cardano(scratch: str) -> None:
-    """--r13sortdrop3cardano: the flagship's third persist + final
-    global ORDER BY dropped (the r9 shape persisted the report ONLY to
-    feed the orderBy's range sampler from cache; with the sort gone both
-    the range exchange of every report row and the cache
-    materialization disappear).  A/B old (ordered=True) vs shipped at
-    the 2M-tx probe lake, flagship + windowed, DuckDB interleaved,
-    cache cleared per run (the ordered variant's persist would
-    otherwise serve later rounds from memory — its per-execution cost
-    IS the cache population)."""
-    import duckdb
-
-    from cardano_analytics_duckdb_spark.lake.fixtures import (
-        DEFAULT_LAKE_ROOT,
-    )
-    from cardano_analytics_duckdb_spark.operators import cardano as mod
-    from cardano_analytics_duckdb_spark.operators.cardano import (
-        _token_transfers_sql,
-    )
-
-    replicas = _replicas_arg(default=10_000)
-    spark = get_session(
-        app_name="scale-probe-r13sortdrop3cardano", shuffle_partitions=64
-    )
-    root = build_scaled_cardano_lake(spark, scratch, replicas)
-    con = duckdb.connect()
-    con.execute(f"SET threads TO {os.cpu_count()}")
-    sqls = {
-        "flagship": _token_transfers_sql(None, None).replace(
-            DEFAULT_LAKE_ROOT, root
-        ),
-        "windowed": _token_transfers_sql(100_000, 199_999).replace(
-            DEFAULT_LAKE_ROOT, root
-        ),
-    }
-
-    def build(name):
-        spark.catalog.clearCache()
-        win = (100_000, 199_999) if "windowed" in name else (None, None)
-        return mod._token_transfers(
-            spark, *win, root=root, ordered=name.endswith("_r12")
-        )
-
-    names = (
-        "flagship_noshuffle",
-        "flagship_r12",
-        "windowed_noshuffle",
-        "windowed_r12",
-    )
-    diff = (
-        build("flagship_noshuffle").exceptAll(build("flagship_r12")).count()
-    )
-    assert diff == 0, f"flagship sort-drop diverges on {diff} rows"
-    for n in names:  # warmup
-        build(n).write.format("noop").mode("overwrite").save()
-    for sql in sqls.values():
-        con.execute(sql).fetchall()
-    sp: dict[str, list[float]] = {n: [] for n in names}
-    du: dict[str, list[float]] = {n: [] for n in sqls}
-    for _ in range(5):
-        for n in names:
-            df = build(n)
-            t0 = time.perf_counter()
-            df.write.format("noop").mode("overwrite").save()
-            sp[n].append(round(time.perf_counter() - t0, 3))
-        for n, sql in sqls.items():
-            t0 = time.perf_counter()
-            con.execute(sql).fetchall()
-            du[n].append(round(time.perf_counter() - t0, 3))
-    med = lambda xs: sorted(xs)[len(xs) // 2]  # noqa: E731
-    _merge_probe(
-        "r13_sortdrop3_cardano",
-        {
-            "protocol": "focused_steady_state",
-            "n_runs": 5,
-            "replicas": replicas,
-            "loadavg_at_end": [round(x, 2) for x in os.getloadavg()],
-            "spark_runs": sp,
-            "duckdb_runs": du,
-            "spark_median": {n: med(v) for n, v in sp.items()},
-            "duckdb_median": {n: med(v) for n, v in du.items()},
-        },
-    )
-    con.close()
-    shutil.rmtree(scratch, ignore_errors=True)
-    spark.stop()
-
-
-def main_r13bpe(scratch: str) -> None:
-    """--r13bpe (r13 second half): bpe_token_counts' residual after the
-    sort-drop (zero exchanges left, yet 2.9x DuckDB in r13_sortdrop_ab)
-    is the ``regexp_extract_all`` evaluation itself — Java regex
-    materializing a token array per document, then ``array_distinct``
-    over it, vs DuckDB's RE2.  Guide §4.2: move the tokenize-and-count
-    into an Arrow kernel (CPython sre + C-level ``len``/``set`` over
-    whole batches; only four ints per doc come back, the ratio stays
-    JVM-side on the shared ``rnd``).  Equality asserted, then the
-    unified n=7 equal-cache steady state against the JVM twin AND the
-    DuckDB denominator."""
-    from cardano_analytics_duckdb_spark.operators import all_oracles
-    from cardano_analytics_duckdb_spark.operators.textops import (
-        bpe_token_counts,
-        bpe_token_counts_jvm,
-    )
-
-    spark = get_session(app_name="scale-probe-r13bpe", shuffle_partitions=200)
-    lake_dir = os.path.join(scratch, "lake100")
-    build_scaled_lake(spark, lake_dir, replicas=REPLICAS_100X, file_scale=10)
-    spark.conf.set("spark.sql.adaptive.enabled", "true")
-    frames = {
-        "bpe_arrow_kernel": lambda: bpe_token_counts(spark, lake_dir),
-        "bpe_jvm_r13h1": lambda: bpe_token_counts_jvm(spark, lake_dir),
-    }
-    diff = (
-        frames["bpe_arrow_kernel"]()
-        .exceptAll(frames["bpe_jvm_r13h1"]())
-        .count()
-    )
-    assert diff == 0, f"bpe kernel diverges from the JVM twin on {diff} rows"
-    payload = steady_state(
-        spark,
-        lake_dir,
-        frames,
-        duck_sql={"bpe_token_counts": all_oracles()["bpe_token_counts"]},
-        n_runs=7,
-    )
-    payload["replicas"] = REPLICAS_100X
-    _merge_probe("r13_bpe_ab", payload)
-    shutil.rmtree(scratch, ignore_errors=True)
-    spark.stop()
-
-
-def main_r13dedupfinals(scratch: str) -> None:
-    """--r13dedupfinals (r13 second half, OPTIMIZATION_r13.md §E item 2):
-    the doc_id<300-bounded near-dup cluster family's report-shaped
-    finals move from a global ORDER BY (range exchange + boundary-
-    sampler job — one extra ~0.2 s dispatch per the fixed-cost floor
-    decomposition) to small_sorted (coalesce(1) + local sort: same
-    global order, one single-task pass).  The family is bounded at ANY
-    corpus scale, so the saving is a fixed job, not a data-volume win.
-    Timing note: for the two component queries the label propagation
-    runs eagerly at frame-construction time (localCheckpoint), outside
-    steady_state's timed noop — equal for both variants, so the A/B
-    delta isolates exactly the changed final; their DuckDB denominators
-    (whole recursive CTE in the timed region) are included for
-    completeness but are NOT comparable to the Spark numbers."""
-    from cardano_analytics_duckdb_spark.operators import all_oracles
-    from cardano_analytics_duckdb_spark.operators.dedup import (
-        cross_source_dup_leakage,
-        near_dup_doc_clusters,
-        near_dup_survivors,
-        ngram_jaccard_pairs,
-    )
-
-    spark = get_session(
-        app_name="scale-probe-r13dedupfinals", shuffle_partitions=200
-    )
-    lake_dir = os.path.join(scratch, "lake100")
-    build_scaled_lake(spark, lake_dir, replicas=REPLICAS_100X, file_scale=10)
-    spark.conf.set("spark.sql.adaptive.enabled", "true")
-    oracles = all_oracles()
-    frames = {
-        "jaccard_small_sorted": lambda: ngram_jaccard_pairs(spark, lake_dir),
-        "jaccard_ordered_r12": lambda: ngram_jaccard_pairs(
-            spark, lake_dir, ordered=True
-        ),
-        "leakage_small_sorted": lambda: cross_source_dup_leakage(
-            spark, lake_dir
-        ),
-        "leakage_ordered_r12": lambda: cross_source_dup_leakage(
-            spark, lake_dir, ordered=True
-        ),
-        "clusters_small_sorted": lambda: near_dup_doc_clusters(
-            spark, lake_dir
-        ),
-        "clusters_ordered_r12": lambda: near_dup_doc_clusters(
-            spark, lake_dir, ordered=True
-        ),
-        "survivors_small_sorted": lambda: near_dup_survivors(
-            spark, lake_dir
-        ),
-        "survivors_ordered_r12": lambda: near_dup_survivors(
-            spark, lake_dir, ordered=True
-        ),
-    }
-    for a, b in (
-        ("jaccard_small_sorted", "jaccard_ordered_r12"),
-        ("leakage_small_sorted", "leakage_ordered_r12"),
-        ("clusters_small_sorted", "clusters_ordered_r12"),
-        ("survivors_small_sorted", "survivors_ordered_r12"),
-    ):
-        diff = frames[a]().exceptAll(frames[b]()).count()
-        assert diff == 0, f"{a} diverges on {diff} rows"
-    payload = steady_state(
-        spark,
-        lake_dir,
-        frames,
-        duck_sql={
-            "ngram_jaccard_pairs": oracles["ngram_jaccard_pairs"],
-            "cross_source_dup_leakage": oracles["cross_source_dup_leakage"],
-        },
-        n_runs=7,
-    )
-    payload["replicas"] = REPLICAS_100X
-    payload["note"] = (
-        "component-query Spark timings exclude the eager label "
-        "propagation (equal for both variants); jaccard/leakage timings "
-        "are end-to-end and carry the DuckDB denominators"
-    )
-    _merge_probe("r13_dedupfinals_ab", payload)
-    shutil.rmtree(scratch, ignore_errors=True)
-    spark.stop()
-
-
-def main_r13jaccard(scratch: str) -> None:
-    """--r13jaccard (r13 second half): the r13_dedupfinals_ab probe
-    surfaced ngram_jaccard_pairs at 12.99 s vs DuckDB's 0.20 s at the
-    100x lake — the first time this query was ever perf-measured.  The
-    r9–r12 plan re-derives the bounded (doc_id < 300) shingle set FOUR
-    times per execution (self-join duplicates the exploded-shingle
-    subtree; two broadcast size-attach joins re-scan for sizes), and on
-    a layout whose files all span the full doc_id range each scan
-    decodes the whole text payload.  DuckDB materializes the shingle CTE
-    once.  Fix (guide §2.4/§1.2): single-scan posting-list pair
-    generation — explode carries (doc_id, n_sh) structs, groupBy shingle
-    builds the inverted index, each posting list emits its (a<b) pairs;
-    set sizes ride the rows so the size-attach joins vanish.  Equality
-    asserted, unified n=7 equal-cache steady state; downstream
-    consumers (clusters, survivors, leakage, both recall evals) inherit
-    the single-scan core."""
-    from cardano_analytics_duckdb_spark.functions.ordering import (
-        small_sorted,
-    )
-    from cardano_analytics_duckdb_spark.operators import all_oracles
-    from cardano_analytics_duckdb_spark.operators.dedup import (
-        _jaccard_pairs_core,
-        _jaccard_pairs_core_join_r12,
-    )
-
-    spark = get_session(
-        app_name="scale-probe-r13jaccard", shuffle_partitions=200
-    )
-    lake_dir = os.path.join(scratch, "lake100")
-    build_scaled_lake(spark, lake_dir, replicas=REPLICAS_100X, file_scale=10)
-    spark.conf.set("spark.sql.adaptive.enabled", "true")
-    frames = {
-        "jaccard_posting_singlescan": lambda: small_sorted(
-            _jaccard_pairs_core(spark, lake_dir), "doc_a", "doc_b"
-        ),
-        "jaccard_join_r12": lambda: small_sorted(
-            _jaccard_pairs_core_join_r12(spark, lake_dir), "doc_a", "doc_b"
-        ),
-    }
-    diff = (
-        frames["jaccard_posting_singlescan"]()
-        .exceptAll(frames["jaccard_join_r12"]())
-        .count()
-    )
-    assert diff == 0, f"posting-list core diverges on {diff} rows"
-    payload = steady_state(
-        spark,
-        lake_dir,
-        frames,
-        duck_sql={
-            "ngram_jaccard_pairs": all_oracles()["ngram_jaccard_pairs"]
-        },
-        n_runs=7,
-    )
-    payload["replicas"] = REPLICAS_100X
-    _merge_probe("r13_jaccard_ab", payload)
-    shutil.rmtree(scratch, ignore_errors=True)
-    spark.stop()
-
-
-def main_r14jaccard(scratch: str) -> None:
-    """--r14jaccard (r13 verdict #1): kill the near-dup family's 60x
-    gap.  r13 measured ngram_jaccard_pairs at ~11.7 s vs DuckDB 0.2 s at
-    100x and the single-scan rewrite was a wash — the scan count was
-    never the cost.  Hypothesis (guide §6): the ``doc_id < 300`` gate
-    cannot row-group-skip on the round-robin probe layout (every file
-    spans the full doc_id range), so Spark's vectorized reader decodes
-    the ENTIRE text column before the filter drops 99.999% of rows;
-    DuckDB's in-scan late materialization never fetches text pages for
-    non-matching vectors.  This probe (a) DECOMPOSES the gate scan
-    (doc_id-only vs doc_id+text projections under the gate) to prove
-    where the 11 s goes, then (b) A/Bs the fix: a RANGE-CLUSTERED
-    lifecycle copy (``set_sort_spec``/``sort_lake`` — files hold
-    disjoint doc_id ranges, footer stats prune) served through the
-    unchanged query code by ``load_table``.  DuckDB denominators on the
-    plain lake AND on the sorted copy (fairness: the copy helps any
-    engine).  Equality asserted against the plain-lake rows before any
-    timing."""
-    import duckdb
-
-    from cardano_analytics_duckdb_spark.lake.tables import (
-        load_plain_table,
-        sort_lake,
-    )
-    from cardano_analytics_duckdb_spark.operators import all_oracles
-    from cardano_analytics_duckdb_spark.operators.dedup import (
-        cross_source_dup_leakage,
-        ngram_jaccard_pairs,
-    )
-
-    spark = get_session(
-        app_name="scale-probe-r14jaccard", shuffle_partitions=200
-    )
-    lake_dir = os.path.join(scratch, "lake100")
-    build_scaled_lake(spark, lake_dir, replicas=REPLICAS_100X, file_scale=10)
-    spark.conf.set("spark.sql.adaptive.enabled", "true")
-    oracles = all_oracles()
-    duck_sql = {
-        n: oracles[n]
-        for n in ("ngram_jaccard_pairs", "cross_source_dup_leakage")
-    }
-
-    def docs():
-        return load_plain_table(spark, lake_dir, "documents")
-
-    payload: dict = {}
-    frames_plain = {
-        "jaccard_plain": lambda: ngram_jaccard_pairs(spark, lake_dir),
-        "leakage_plain": lambda: cross_source_dup_leakage(spark, lake_dir),
-        # decomposition: same gate, with vs without the text column —
-        # the delta IS the text-decode cost the gate fails to skip
-        "gate_scan_docid_only": lambda: docs()
-        .filter(F.col("doc_id") < 300)
-        .select("doc_id"),
-        "gate_scan_docid_text": lambda: docs()
-        .filter(F.col("doc_id") < 300)
-        .select("doc_id", "text"),
-    }
-    plain_rows = sorted(
-        map(tuple, frames_plain["jaccard_plain"]().collect())
-    )
-    payload["plain"] = steady_state(
-        spark, lake_dir, frames_plain, duck_sql=duck_sql, n_runs=7
-    )
-    t0 = time.perf_counter()
-    sort_lake(spark, lake_dir, {"documents": ("doc_id",)}, out_files=64)
-    payload["sorted_layout"] = {
-        "spec": {"documents": ["doc_id"]},
-        "out_files": 64,
-        "build_s": round(time.perf_counter() - t0, 3),
-    }
-    sorted_rows = sorted(
-        map(tuple, ngram_jaccard_pairs(spark, lake_dir).collect())
-    )
-    assert sorted_rows == plain_rows, "sorted-layout read diverges"
-    from cardano_analytics_duckdb_spark.lake.tables import load_table
-
-    frames_sorted = {
-        "jaccard_sorted_layout": lambda: ngram_jaccard_pairs(
-            spark, lake_dir
-        ),
-        "leakage_sorted_layout": lambda: cross_source_dup_leakage(
-            spark, lake_dir
-        ),
-        "gate_scan_docid_text_sorted": lambda: load_table(
-            spark, lake_dir, "documents"
-        )
-        .filter(F.col("doc_id") < 300)
-        .select("doc_id", "text"),
-    }
-    payload["sorted_layout"]["measured"] = steady_state(
-        spark, lake_dir, frames_sorted, duck_sql=duck_sql, n_runs=7
-    )
-    # DuckDB on the sorted copy (its zonemaps skip too)
-    copy_loc = os.path.join(
-        lake_dir, "_layout", "documents_sorted_by_doc_id"
-    )
-    con = duckdb.connect()
-    for t in PROBE_TABLES:
-        p = os.path.join(lake_dir, t + ".parquet")
-        if os.path.exists(p):
-            con.execute(
-                f"CREATE OR REPLACE VIEW {t} AS SELECT * FROM "
-                f"read_parquet('{p}/*.parquet')"
-            )
-    con.execute(
-        "CREATE OR REPLACE VIEW documents AS SELECT * FROM "
-        f"read_parquet('{copy_loc}/*.parquet')"
-    )
-    dcopy: dict[str, list[float]] = {n: [] for n in duck_sql}
-    for sql in duck_sql.values():
-        con.execute(sql).fetchall()
-    for _ in range(7):
-        for n, sql in duck_sql.items():
-            t0 = time.perf_counter()
-            con.execute(sql).fetchall()
-            dcopy[n].append(round(time.perf_counter() - t0, 3))
-    con.close()
-    med = lambda xs: sorted(xs)[len(xs) // 2]  # noqa: E731
-    payload["duckdb_on_sorted_copy_runs"] = dcopy
-    payload["duckdb_on_sorted_copy_median"] = {
-        n: med(v) for n, v in dcopy.items()
-    }
-    payload["replicas"] = REPLICAS_100X
-    _merge_probe("r14_jaccard_layout_ab", payload)
-    shutil.rmtree(scratch, ignore_errors=True)
-    spark.stop()
-
-
-def main_r14textagg(scratch: str) -> None:
-    """--r14textagg (r13 verdict #6): the last wholly-unmeasured text
-    aggregation family — tfidf_top_terms, bigram_logprob_scores,
-    bpe_merge_candidates, vocab_top_tokens — one measurement under the
-    unified protocol BEFORE touching anything (guide §1).  All four are
-    already agg-first shapes (map-side partials absorb the Zipf skew;
-    finals are small_sorted or TakeOrdered limits, no global-sort
-    sampler), so the prior is "nothing to fix"; this entry either
-    confirms that or names the lever the numbers demand."""
-    from cardano_analytics_duckdb_spark.operators import all_oracles
-    from cardano_analytics_duckdb_spark.operators.mixing import (
-        tfidf_top_terms,
-    )
-    from cardano_analytics_duckdb_spark.operators.textops import (
-        bigram_logprob_scores,
-        bpe_merge_candidates,
-        vocab_top_tokens,
-    )
-
-    spark = get_session(
-        app_name="scale-probe-r14textagg", shuffle_partitions=200
-    )
-    lake_dir = os.path.join(scratch, "lake100")
-    build_scaled_lake(spark, lake_dir, replicas=REPLICAS_100X, file_scale=10)
-    spark.conf.set("spark.sql.adaptive.enabled", "true")
-    oracles = all_oracles()
-    names = (
-        "tfidf_top_terms",
-        "bigram_logprob_scores",
-        "bpe_merge_candidates",
-        "vocab_top_tokens",
-    )
-    fns = {
-        "tfidf_top_terms": tfidf_top_terms,
-        "bigram_logprob_scores": bigram_logprob_scores,
-        "bpe_merge_candidates": bpe_merge_candidates,
-        "vocab_top_tokens": vocab_top_tokens,
-    }
-    frames = {n: (lambda f=fns[n]: f(spark, lake_dir)) for n in names}
-    payload = steady_state(
-        spark,
-        lake_dir,
-        frames,
-        duck_sql={n: oracles[n] for n in names},
-        n_runs=7,
-    )
-    payload["replicas"] = REPLICAS_100X
-    _merge_probe("r14_textagg_family", payload)
-    shutil.rmtree(scratch, ignore_errors=True)
-    spark.stop()
-
-
-def main_r14prodbench(scratch: str) -> None:
-    """--r14prodbench (r13 verdict #5): the headline bench's
-    AQE-off/8-partition posture is the one regime that flatters local
-    sub-second latency; the 100 TB story is the production session
-    (AQE on, coalescing from 200).  This mode prices BOTH postures over
-    the same 15 headline queries at --replicas x (default 10x =
-    sf1-equivalent) in ONE session — both confs are runtime-settable,
-    so each round interleaves posture A, posture B and the DuckDB
-    denominator per query and host drift cancels — and records the
-    result as a standalone BENCH-style artifact
-    (``BENCH_PROD_<replicas>x.json``) instead of a side note.  The
-    bench itself is untouched: this is the evidence that its posture is
-    an sf0.1 latency accommodation, not the scale claim."""
-    from bench import HEADLINE
-    from cardano_analytics_duckdb_spark.operators import (
-        all_oracles,
-        all_queries,
-    )
-
-    replicas = _replicas_arg()
-    spark = get_session(
-        app_name="scale-probe-r14prodbench", shuffle_partitions=200
-    )
-    lake_dir = os.path.join(scratch, f"lake{replicas}")
-    build_scaled_lake(
-        spark, lake_dir, replicas=replicas,
-        file_scale=max(1, replicas // 10),
-    )
-    queries = all_queries()
-    oracles = all_oracles()
-
-    POSTURES = {
-        # the exact conf pair bench.py flips vs plans/session.py
-        "bench": {
-            "spark.sql.adaptive.enabled": "false",
-            "spark.sql.shuffle.partitions": "8",
-        },
-        "prod": {
-            "spark.sql.adaptive.enabled": "true",
-            "spark.sql.shuffle.partitions": "200",
-        },
-    }
-
-    def variant(name: str, posture: str):
-        def fn():
-            for k, v in POSTURES[posture].items():
-                spark.conf.set(k, v)
-            return queries[name](spark, lake_dir)
-
-        return fn
-
-    frames = {
-        f"{n}@{p}": variant(n, p) for n in HEADLINE for p in POSTURES
-    }
-    payload = steady_state(
-        spark,
-        lake_dir,
-        frames,
-        duck_sql={n: oracles[n] for n in HEADLINE},
-        n_runs=5,
-    )
-    payload["replicas"] = replicas
-    med = payload["spark_median"]
-    bench_total = round(sum(med[f"{n}@bench"] for n in HEADLINE), 3)
-    prod_total = round(sum(med[f"{n}@prod"] for n in HEADLINE), 3)
-    duck_total = round(
-        sum(payload["duckdb_median"][n] for n in HEADLINE), 3
-    )
-    payload["totals"] = {
-        "bench_posture": bench_total,
-        "production_posture": prod_total,
-        "duckdb": duck_total,
-        "prod_over_bench": round(prod_total / bench_total, 3),
-        "bench_vs_duckdb": round(bench_total / duck_total, 3),
-        "prod_vs_duckdb": round(prod_total / duck_total, 3),
-    }
-    artifact = {
-        "metric": f"headline_query_wall_time_{replicas}x_postures",
-        "unit": "sec",
-        "sf": 0.1 * replicas,
-        "queries_bench_posture": {
-            n: med[f"{n}@bench"] for n in HEADLINE
-        },
-        "queries_production": {n: med[f"{n}@prod"] for n in HEADLINE},
-        "duckdb_queries": dict(payload["duckdb_median"]),
-        **payload["totals"],
-        "loadavg_at_end": payload["loadavg_at_end"],
-        "n_runs": 5,
-        "protocol": "focused_steady_state_interleaved_postures",
-    }
-    with open(f"BENCH_PROD_{replicas}x.json", "w") as f:
-        json.dump(artifact, f, indent=2)
-    _merge_probe(f"r14_prodbench_{replicas}x", payload)
-    shutil.rmtree(scratch, ignore_errors=True)
-    spark.stop()
-
-
-def main_r14cosinedims(scratch: str) -> None:
-    """--r14cosinedims (r13 verdict #9): re-measure the cosine numpy
-    kernel at >=1024 dims.  r13 rejected it at 64 dims (0.421 vs
-    0.344 s) on the work-per-transferred-byte argument: Arrow-moving
-    the whole embedding column to Python cost more than the ~64
-    interpreted HOF lambda evals/row it saved.  The twin was kept for
-    exactly this re-read — at 16x the dims, per-row JVM interpreted
-    work grows 16x while the kernel's matmul amortizes, so the boundary
-    should flip.  The probe widens the 100x embeddings lake to 1024
-    dims (flatten(array_repeat(v, 16)) — deterministic, norm scales by
-    4, identical for both variants), asserts variant equality, then
-    runs the standard n=7 equal-cache A/B with the DuckDB denominator
-    on the same widened lake.  Whatever the numbers say decides whether
-    the shipped cosine_topk shape flips to the kernel at high dims —
-    registered queries stay untouched either way (the testdata lake is
-    64-dim; this entry prices the boundary, it does not move the
-    query)."""
-    from cardano_analytics_duckdb_spark.operators import all_oracles
-    from cardano_analytics_duckdb_spark.operators.similarity import (
-        cosine_topk,
-        cosine_topk_arrow,
-    )
-
-    spark = get_session(
-        app_name="scale-probe-r14cosinedims", shuffle_partitions=32
-    )
-    lake_dir = os.path.join(scratch, "lake100d1024")
-    build_scaled_lake(spark, lake_dir, replicas=REPLICAS_100X, file_scale=10)
-    # widen embeddings 64 -> 1024 dims in place (rewrite the table dir)
-    emb_path = os.path.join(lake_dir, "embeddings.parquet")
-    wide_tmp = os.path.join(scratch, "emb_wide")
-    (
-        spark.read.parquet(emb_path)
-        .withColumn(
-            "embedding",
-            F.flatten(F.array_repeat(F.col("embedding"), 16)),
-        )
-        .repartition(32)
-        .write.parquet(wide_tmp)
-    )
-    shutil.rmtree(emb_path)
-    os.rename(wide_tmp, emb_path)
-    spark.conf.set("spark.sql.adaptive.enabled", "true")
-    frames = {
-        "cosine_hof_jvm_1024d": lambda: cosine_topk(spark, lake_dir),
-        "cosine_numpy_kernel_1024d": lambda: cosine_topk_arrow(
-            spark, lake_dir
-        ),
-    }
-    diff = (
-        frames["cosine_numpy_kernel_1024d"]()
-        .exceptAll(frames["cosine_hof_jvm_1024d"]())
-        .count()
-    )
-    assert diff == 0, f"numpy kernel diverges on {diff} rows at 1024d"
-    oracles = all_oracles()
-    payload = steady_state(
-        spark,
-        lake_dir,
-        frames,
-        duck_sql={"cosine_topk": oracles["cosine_topk"]},
-        n_runs=7,
-    )
-    payload["replicas"] = REPLICAS_100X
-    payload["dims"] = 1024
-    _merge_probe("r14_cosine_dims_ab", payload)
-    shutil.rmtree(scratch, ignore_errors=True)
-    spark.stop()
-
-
-def main_r14ingest(scratch: str) -> None:
-    """--r14ingest (r13 verdict #8): decompose the 837 blocks/s ingest
-    bound — source or sink?  The flush pipeline has four separable
-    stages; each is timed alone over the same n_blocks so the blocks/s
-    of the slowest stage names the bound (guide §1.1 first-principles
-    decomposition):
-
-      gen        — the pure-Python fake-node replay generator (source);
-      parse      — blocks_to_dataframe().persist().count() per batch
-                   (Python->JVM transfer + JSON-shape parse; no writes);
-      extract    — parse + the 13 table extractions through the noop
-                   sink on the coalesced cached frame (all compute, no
-                   file commits);
-      full       — ingest_blocks end-to-end (adds partitioned appends
-                   + dynamic-partition commit protocol = the sink).
-
-    Optimize the sink only if full >> extract; if gen or parse
-    dominates, the bound is the single-process source and the honest
-    fix is upstream parallelism (many node connections), not Spark."""
-    import itertools
-
-    from cardano_analytics_duckdb_spark.streaming.ingest import (
-        blocks_to_dataframe,
-        extract_tables,
-        ingest_blocks,
-    )
-
-    n_blocks, batch_size = 30_000, 2_000
-    spark = get_session(
-        app_name="scale-probe-r14ingest", shuffle_partitions=8
-    )
-    out: dict = {"n_blocks": n_blocks, "batch_size": batch_size}
-
-    def batches():
-        it = itertools.islice(_replicated_block_stream(), n_blocks)
-        while True:
-            chunk = list(itertools.islice(it, batch_size))
-            if not chunk:
-                return
-            yield chunk
-
-    # stage 1: source generator alone
-    t0 = time.perf_counter()
-    n = sum(1 for _ in itertools.islice(_replicated_block_stream(), n_blocks))
-    gen_s = time.perf_counter() - t0
-    assert n == n_blocks
-    out["gen"] = {
-        "wall_s": round(gen_s, 2),
-        "blocks_per_s": round(n_blocks / gen_s, 1),
-    }
-
-    # stage 2: + Python->JVM transfer and parse (cache fill, no writes)
-    t0 = time.perf_counter()
-    for chunk in batches():
-        bdf = blocks_to_dataframe(spark, chunk).persist()
-        bdf.count()
-        bdf.unpersist()
-    parse_s = time.perf_counter() - t0
-    out["parse"] = {
-        "wall_s": round(parse_s, 2),
-        "blocks_per_s": round(n_blocks / parse_s, 1),
-    }
-
-    # stage 3: + the 13 extractions (noop sink — no commit protocol),
-    # same coalesce + thread fan-out shape as the real flush
-    from concurrent.futures import ThreadPoolExecutor
-
-    t0 = time.perf_counter()
-    for chunk in batches():
-        bdf = blocks_to_dataframe(spark, chunk).persist()
-        bdf.count()
-        nparts = max(1, min(8, len(chunk) // 500))
-        tables = extract_tables(bdf.coalesce(nparts))
-
-        def _noop_one(df):
-            df.write.format("noop").mode("overwrite").save()
-
-        with ThreadPoolExecutor(max_workers=len(tables)) as ex:
-            list(ex.map(_noop_one, tables.values()))
-        bdf.unpersist()
-    extract_s = time.perf_counter() - t0
-    out["extract_noop"] = {
-        "wall_s": round(extract_s, 2),
-        "blocks_per_s": round(n_blocks / extract_s, 1),
-    }
-
-    # stage 4: the real thing (partitioned appends + commits)
-    dest = os.path.join(scratch, "ingest_lake_decomp")
-    shutil.rmtree(dest, ignore_errors=True)
-    t0 = time.perf_counter()
-    ingest_blocks(
-        spark,
-        itertools.islice(_replicated_block_stream(), n_blocks),
-        dest,
-        batch_size=batch_size,
-    )
-    full_s = time.perf_counter() - t0
-    out["full"] = {
-        "wall_s": round(full_s, 2),
-        "blocks_per_s": round(n_blocks / full_s, 1),
-    }
-    out["decomposition_s"] = {
-        "source_gen": round(gen_s, 2),
-        "transfer_parse": round(parse_s - gen_s, 2),
-        "extract_compute": round(extract_s - parse_s, 2),
-        "sink_commit": round(full_s - extract_s, 2),
-    }
-    out["loadavg_at_end"] = [round(x, 2) for x in os.getloadavg()]
-    _merge_probe("r14_ingest_decomposition", out)
-    shutil.rmtree(scratch, ignore_errors=True)
-    spark.stop()
-
-
-def main_r14scaling(scratch: str) -> None:
-    """--r14scaling (r13 verdict #7): make the scaling block meaningful.
-    At sf0.1 every headline query is dispatch-floor-bound (40-160 ms
-    absolute), so the driver's 8->32-core ratios (0.7-2.05) measure job
-    dispatch, not data parallelism.  This mode re-takes the same 15
-    headline queries at --replicas x (default 10x = sf1-equivalent)
-    under the PRODUCTION posture in two sequential sessions —
-    local[32] then local[8] — and records per-query 8/32 wall ratios
-    where the work is big enough for parallelism to be the signal.
-    Ideal ratio 4x; dispatch-floor queries should now move toward it.
-    This is the proposed replacement evidence for the driver's sf0.1
-    scaling gate (we cannot change the driver; we can record what the
-    gate would show one SF up)."""
-    from bench import HEADLINE
-    from cardano_analytics_duckdb_spark.operators import (
-        all_oracles,
-        all_queries,
-    )
-
-    replicas = _replicas_arg()
-    queries = all_queries()
-    oracles = all_oracles()
-    lake_dir = os.path.join(scratch, f"lake{replicas}")
-    payload: dict = {"replicas": replicas}
-    for cores in (32, 8):
-        spark = get_session(
-            app_name=f"scale-probe-r14scaling-c{cores}",
-            master=f"local[{cores}]",
-            shuffle_partitions=200,
-        )
-        if cores == 32:
-            build_scaled_lake(
-                spark, lake_dir, replicas=replicas,
-                file_scale=max(1, replicas // 10),
-            )
-        frames = {
-            n: (lambda f=queries[n]: f(spark, lake_dir)) for n in HEADLINE
-        }
-        payload[f"c{cores}"] = steady_state(
-            spark,
-            lake_dir,
-            frames,
-            duck_sql={n: oracles[n] for n in HEADLINE} if cores == 32 else None,
-            n_runs=5,
-        )
-        spark.stop()
-    med32 = payload["c32"]["spark_median"]
-    med8 = payload["c8"]["spark_median"]
-    payload["ratio_8_over_32"] = {
-        n: round(med8[n] / med32[n], 2) for n in HEADLINE if med32[n] > 0
-    }
-    payload["total_c32"] = round(sum(med32.values()), 3)
-    payload["total_c8"] = round(sum(med8.values()), 3)
-    payload["total_ratio_8_over_32"] = round(
-        payload["total_c8"] / payload["total_c32"], 2
-    )
-    _merge_probe(f"r14_scaling_{replicas}x", payload)
-    shutil.rmtree(scratch, ignore_errors=True)
-    spark.stop()
-
-
-def main_weakledger() -> None:
-    """--weakledger: regenerate PERF_WEAK.json from SCALE_PROBE.json.
-    Pure extraction — run it after any probe mode that touches a weak
-    query so the ledger and the probe entries can never disagree."""
-    with open("SCALE_PROBE.json") as f:
-        probe = json.load(f)
-    out = []
-    for cand in _WEAK_CANDIDATES:
-        ratio = None
-        source = None
-        for sp, dp in cand.get("pairs", []):
-            s, d = _probe_get(probe, sp), _probe_get(probe, dp)
-            if s is not None and d:
-                ratio, source = round(s / d, 3), sp.split(".")[0]
-                break
-        if ratio is None:
-            for rp in cand.get("ratio_paths", []):
-                r = _probe_get(probe, rp)
-                if r is not None:
-                    ratio, source = r, rp.split(".")[0]
-                    break
-        # Floor entries keep their tag regardless of the latest point
-        # reading: their ratios breathe with the DuckDB denominator
-        # (0.07-0.33 s against a ~0.18 s/job dispatch floor), so a
-        # sub-2.0 reading under one host condition would flap back next
-        # round — the decomposition, not the point estimate, is the
-        # evidence (fixed_cost_floor_100x).
-        status = (
-            "no-measurement"
-            if ratio is None
-            else "documented-floor"
-            if cand["floor"]
-            else "cleared"
-            if ratio <= 2.0
-            else "fix-pending"
-        )
-        out.append(
-            {
-                "query": cand["query"],
-                "largest_scale_ratio_vs_duckdb": ratio,
-                "probe_entry": source,
-                "protocol": (
-                    "focused_steady_state"
-                    if source and source.startswith("r13_")
-                    else "interleaved_medians"
-                ),
-                "residual": cand["residual"],
-                "status": status,
-            }
-        )
-    weak_n = sum(1 for e in out if e["status"] in ("fix-pending", "documented-floor"))
-    payload = {"weak_count": weak_n, "threshold": 2.0, "entries": out}
-    with open("PERF_WEAK.json", "w") as f:
-        json.dump(payload, f, indent=2)
-    print(json.dumps(payload, indent=2))
-
-
-def _replicas_arg(default: int = REPLICAS) -> int:
-    """--replicas N: scale multiplier for the probe modes, so the same
-    probe measures whether a mitigation's advantage widens or narrows a
-    decade up."""
-    if "--replicas" in sys.argv:
-        return int(sys.argv[sys.argv.index("--replicas") + 1])
-    return default
-
-
-def _merge_probe(section: str, payload: dict) -> None:
+def merge_probe(path: str, key: str, payload: dict) -> None:
+    """Write ``payload`` under ``key``; every other entry is kept."""
     summary = {}
-    if os.path.exists("SCALE_PROBE.json"):
-        with open("SCALE_PROBE.json") as f:
+    if os.path.exists(path):
+        with open(path) as f:
             summary = json.load(f)
-    summary[section] = payload
-    with open("SCALE_PROBE.json", "w") as f:
+    summary[key] = payload
+    with open(path, "w") as f:
         json.dump(summary, f, indent=2)
-    print(json.dumps(payload))
 
 
-def main_skew(scratch: str) -> None:
-    """The --skew mode: two-table build at --replicas x + the skew-join
-    posture matrix, merged into SCALE_PROBE.json (other sections
-    unchanged)."""
-    replicas = _replicas_arg()
-    spark = get_session(app_name="scale-probe-skew", shuffle_partitions=200)
-    build_scaled(spark, scratch, replicas=replicas)
-    section = (
-        "skew_probe" if replicas == REPLICAS else f"skew_probe_{replicas}x"
-    )
-    _merge_probe(section, skew_probe(spark, scratch, replicas=replicas))
-    shutil.rmtree(scratch, ignore_errors=True)
-    spark.stop()
-
-
-def main_bucket(scratch: str) -> None:
-    """The --bucket mode: two-table build at --replicas x + the
-    bucketed-join trade measurement, merged into SCALE_PROBE.json (other
-    sections unchanged)."""
-    replicas = _replicas_arg()
-    spark = get_session(app_name="scale-probe-bucket", shuffle_partitions=200)
-    build_scaled(spark, scratch, replicas=replicas)
-    section = (
-        "bucket_probe"
-        if replicas == REPLICAS
-        else f"bucket_probe_{replicas}x"
-    )
-    _merge_probe(section, bucket_probe(spark, scratch, replicas=replicas))
-    shutil.rmtree(scratch, ignore_errors=True)
-    spark.stop()
-
-
-def main_cardano(scratch: str) -> None:
-    """The --cardano mode: scaled fixture lake at --replicas x (default
-    10000x ≈ 2M txs; run once with --replicas 100 for the continuity
-    entry), flagship family vs DuckDB + windowed file-skipping evidence,
-    merged into SCALE_PROBE.json."""
-    replicas = _replicas_arg(default=10_000)
-    spark = get_session(
-        app_name="scale-probe-cardano", shuffle_partitions=64
-    )
-    root = build_scaled_cardano_lake(spark, scratch, replicas)
-    _merge_probe(
-        f"cardano_{replicas}x",
-        cardano_probe(spark, root, replicas),
-    )
-    shutil.rmtree(scratch, ignore_errors=True)
-    spark.stop()
-
-
-def main_ingest(scratch: str) -> None:
-    """The --ingest mode: ≥1e5-block replay through both ingest modes,
-    merged into SCALE_PROBE.json as ``ingest_probe``."""
-    spark = get_session(app_name="scale-probe-ingest", shuffle_partitions=8)
-    _merge_probe("ingest_probe", ingest_probe(spark, scratch))
-    shutil.rmtree(scratch, ignore_errors=True)
-    spark.stop()
-
-
-def main_ann(scratch: str) -> None:
-    """The --ann mode: similarity-family contracts at --replicas x
-    embeddings (default 100x = 200k vectors), merged into
-    SCALE_PROBE.json as ``ann_probe_<replicas>x``."""
-    replicas = _replicas_arg(default=100)
-    spark = get_session(app_name="scale-probe-ann", shuffle_partitions=32)
-    _merge_probe(
-        f"ann_probe_{replicas}x", ann_probe(spark, scratch, replicas)
-    )
-    shutil.rmtree(scratch, ignore_errors=True)
-    spark.stop()
+def load_variant(spec: str):
+    """``module:function`` -> the function; ``module`` is a dotted
+    import path or a path to a ``.py`` file."""
+    module, _, func = spec.rpartition(":")
+    if not module or not func:
+        raise SystemExit(f"--variant wants module:function, got {spec!r}")
+    if module.endswith(".py"):
+        name = os.path.splitext(os.path.basename(module))[0]
+        mspec = importlib.util.spec_from_file_location(name, module)
+        mod = importlib.util.module_from_spec(mspec)
+        mspec.loader.exec_module(mod)
+    else:
+        mod = importlib.import_module(module)
+    return getattr(mod, func)
 
 
 def main() -> None:
-    argv = sys.argv[1:]
-    if "--replicas" in argv:  # drop the flag AND its value from positionals
-        i = argv.index("--replicas")
-        argv = argv[:i] + argv[i + 2:]
-    args = [a for a in argv if not a.startswith("--")]
-    scratch = args[0] if args else "/tmp/spark_scale_probe"
-    if "--100x" in sys.argv:
-        main_100x(scratch)
-        return
-    if "--skew" in sys.argv:
-        main_skew(scratch)
-        return
-    if "--bucket" in sys.argv:
-        main_bucket(scratch)
-        return
-    if "--cardano" in sys.argv:
-        main_cardano(scratch)
-        return
-    if "--ingest" in sys.argv:
-        main_ingest(scratch)
-        return
-    if "--ann" in sys.argv:
-        main_ann(scratch)
-        return
-    if "--tpch" in sys.argv:
-        main_tpch(scratch)
-        return
-    if "--text" in sys.argv:
-        main_text(scratch)
-        return
-    if "--revjoin" in sys.argv:
-        main_revjoin(scratch)
-        return
-    if "--flagab" in sys.argv:
-        main_flagab(scratch)
-        return
-    if "--gopher" in sys.argv:
-        main_gopher(scratch)
-        return
-    if "--tpch12" in sys.argv:
-        main_tpch12(scratch)
-        return
-    if "--floor" in sys.argv:
-        main_floor(scratch)
-        return
-    if "--layoutcost" in sys.argv:
-        main_layoutcost(scratch)
-        return
-    if "--r13text" in sys.argv:
-        main_r13text(scratch)
-        return
-    if "--r13tpch" in sys.argv:
-        main_r13tpch(scratch)
-        return
-    if "--r13cardano" in sys.argv:
-        main_r13cardano(scratch)
-        return
-    if "--r13text2" in sys.argv:
-        main_r13text2(scratch)
-        return
-    if "--r13events" in sys.argv:
-        main_r13events(scratch)
-        return
-    if "--r13simhash" in sys.argv:
-        main_r13simhash(scratch)
-        return
-    if "--r13cosine" in sys.argv:
-        main_r13cosine(scratch)
-        return
-    if "--r13knn" in sys.argv:
-        main_r13knn(scratch)
-        return
-    if "--r13sortdrop" in sys.argv:
-        main_r13sortdrop(scratch)
-        return
-    if "--r13aggfirst" in sys.argv:
-        main_r13aggfirst(scratch)
-        return
-    if "--r13aggfirst2" in sys.argv:
-        main_r13aggfirst2(scratch)
-        return
-    if "--r13sortdrop2" in sys.argv:
-        main_r13sortdrop2(scratch)
-        return
-    if "--r13sortdrop3cardano" in sys.argv:
-        main_r13sortdrop3cardano(scratch)
-        return
-    if "--r13sortdrop3" in sys.argv:
-        main_r13sortdrop3(scratch)
-        return
-    if "--r13bpe" in sys.argv:
-        main_r13bpe(scratch)
-        return
-    if "--r13dedupfinals" in sys.argv:
-        main_r13dedupfinals(scratch)
-        return
-    if "--r13jaccard" in sys.argv:
-        main_r13jaccard(scratch)
-        return
-    if "--r14jaccard" in sys.argv:
-        main_r14jaccard(scratch)
-        return
-    if "--r14textagg" in sys.argv:
-        main_r14textagg(scratch)
-        return
-    if "--r14prodbench" in sys.argv:
-        main_r14prodbench(scratch)
-        return
-    if "--r14cosinedims" in sys.argv:
-        main_r14cosinedims(scratch)
-        return
-    if "--r14ingest" in sys.argv:
-        main_r14ingest(scratch)
-        return
-    if "--r14scaling" in sys.argv:
-        main_r14scaling(scratch)
-        return
-    if "--weakledger" in sys.argv:
-        main_weakledger()
-        return
-    # Production shuffle sizing posture: oversized partition count, AQE
-    # coalesces down (plans/session.py docstring) — the probe must compare
-    # AQE against the same static setting a cluster job would carry.
+    ap = argparse.ArgumentParser(description=__doc__.split("\n\n")[0])
+    ap.add_argument("scratch", help="directory for the scaled lake")
+    ap.add_argument("--query", required=True, help="registered query name")
+    ap.add_argument("--scale", type=int, required=True, help="replicas")
+    ap.add_argument("--variant", help="candidate shape, module:function")
+    args = ap.parse_args()
+
+    from cardano_analytics_duckdb_spark.operators import (
+        all_oracles,
+        all_queries,
+    )
+
+    query = all_queries().get(args.query)
+    if query is None:
+        raise SystemExit(f"unknown query {args.query!r}")
+    candidate = load_variant(args.variant) if args.variant else None
+    key = (
+        f"{args.query}_ab_{args.scale}x" if candidate
+        else f"{args.query}_{args.scale}x"
+    )
+    # Production posture: AQE on, oversized shuffle partition count that
+    # AQE coalesces down (plans/session.py docstring).
     spark = get_session(app_name="scale-probe", shuffle_partitions=200)
-    build_scaled(spark, scratch)
-    results = {}
-    # warmup both settings once so codegen/JIT isn't charged to either
-    for aqe in ("false", "true"):
-        spark.conf.set("spark.sql.adaptive.enabled", aqe)
-        timed_pass(spark, scratch, n_runs=1)
-    for aqe in ("false", "true"):
-        spark.conf.set("spark.sql.adaptive.enabled", aqe)
-        results[f"aqe_{aqe}"] = timed_pass(spark, scratch)
-    summary = {
-        "sf_equivalent": f"{SF_DIR} x {REPLICAS}",
-        "shuffle_partitions": 200,
-        "queries": results,
-        "total_aqe_off": round(sum(results["aqe_false"].values()), 3),
-        "total_aqe_on": round(sum(results["aqe_true"].values()), 3),
-    }
-    summary["aqe_on_over_off"] = round(
-        summary["total_aqe_on"] / summary["total_aqe_off"], 3
+    try:
+        tables = tables_read(query(spark, SF_DIR), SF_DIR)
+        if not tables:
+            raise SystemExit(
+                f"{args.query} reads no table of {SF_DIR}; "
+                "--scale cannot scale it"
+            )
+        lake_dir = os.path.join(args.scratch, f"lake_{args.scale}x")
+        build_scaled_lake(
+            spark, lake_dir, args.scale, sorted(set(tables) | set(_FIXED))
+        )
+        frames = {"shipped": lambda: query(spark, lake_dir)}
+        if candidate:
+            frames[args.variant] = lambda: candidate(spark, lake_dir)
+            a, b = frames["shipped"](), frames[args.variant]()
+            diff = a.exceptAll(b).count() + b.exceptAll(a).count()
+            if diff:
+                raise SystemExit(f"{args.variant} differs on {diff} rows")
+        payload = steady_state(
+            spark,
+            lake_dir,
+            frames,
+            duck_sql={args.query: all_oracles()[args.query]},
+        )
+    finally:
+        spark.stop()
+    payload.update(
+        query=args.query,
+        variant=args.variant,
+        replicas=args.scale,
+        source_sf_dir=SF_DIR,
+        tables=tables,
     )
-    summary["manifest_skipping"] = manifest_probe(spark, scratch)
-    # Full 15-query headline set at 10x under both conf postures (verdict
-    # r7 item #4) — scaled FULL lake, separate dir from the 2-table probe.
-    lake_dir = os.path.join(scratch, "lake")
-    build_scaled_lake(spark, lake_dir)
-    summary["headline_10x"] = headline_matrix(spark, lake_dir)
-    # DuckDB on the same 10x lake: the scale trend of the bench ratio.
-    duck = duckdb_headline(lake_dir)
-    hl = summary["headline_10x"]
-    duck["vs_duckdb_bench_conf"] = round(
-        hl["total_bench_conf"] / duck["total"], 3
+    merge_probe("SCALE_PROBE.json", key, payload)
+    print(
+        json.dumps(
+            {
+                "key": key,
+                "spark_median": payload["spark_median"],
+                "duckdb_median": payload["duckdb_median"],
+                "loadavg_at_end": payload["loadavg_at_end"],
+            }
+        )
     )
-    duck["vs_duckdb_production_conf"] = round(
-        hl["total_production_conf"] / duck["total"], 3
-    )
-    duck["per_query_spark_over_duckdb"] = {
-        name: round(hl["bench_conf"][name] / duck["queries"][name], 2)
-        for name in duck["queries"]
-        if duck["queries"][name] > 0
-    }
-    summary["duckdb_10x"] = duck
-    with open("SCALE_PROBE.json", "w") as f:
-        json.dump(summary, f, indent=2)
-    print(json.dumps(summary))
-    shutil.rmtree(scratch, ignore_errors=True)
-    spark.stop()
 
 
 if __name__ == "__main__":

@@ -150,17 +150,9 @@ def test_no_python_udf_in_relational_hot_paths(spark, sf_dir):
         "minhash_band_buckets",
         "simhash_fingerprints",
         "ngram_jaccard_pairs",
-        # bpe_token_counts ships the Arrow kernel since r13 (second half);
-        # its zero-Python twin holds the JVM-only guarantee instead
-        "bpe_token_counts_jvm",
         "events_asof_purchase",
         "events_within_minute_pairs",
     ]
-    from cardano_analytics_duckdb_spark.operators.textops import (
-        bpe_token_counts_jvm,
-    )
-
-    qs = dict(qs, bpe_token_counts_jvm=bpe_token_counts_jvm)
     for name in jvm_only:
         plan = _plan(qs[name](spark, sf_dir))
         assert "BatchEvalPython" not in plan, f"{name} fell off codegen (row UDF)"
@@ -205,128 +197,6 @@ def test_asof_join_is_single_shuffle(spark, sf_dir):
     # final presentation sort; no join node at all
     assert "Join" not in plan
     assert plan.count("hashpartitioning(user_id") == 1
-
-
-def test_salted_join_parity_and_distribution(spark, sf_dir):
-    """Salting must not change results, and must spread a hot key across
-    reducers (the exchange hashes on (key, salt))."""
-    from cardano_analytics_duckdb_spark.plans.skew import SALT_COL, salted_join
-
-    events = load_table(spark, sf_dir, "events").select("event_type", "value")
-    dim = spark.createDataFrame(
-        [("click", 2.0), ("purchase", 10.0), ("view", 1.0),
-         ("signup", 5.0), ("error", 0.0)],
-        ["event_type", "weight"],
-    )
-    # forbid broadcast so both paths actually shuffle (the salting scenario)
-    spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
-    try:
-        plain = events.join(dim, "event_type").agg(
-            F.sum(F.col("value") * F.col("weight")).alias("s"),
-            F.count("*").alias("n"),
-        ).first()
-        salted_df = salted_join(events, dim, ["event_type"], n_salts=8)
-        salted = salted_df.agg(
-            F.sum(F.col("value") * F.col("weight")).alias("s"),
-            F.count("*").alias("n"),
-        ).first()
-        assert salted["n"] == plain["n"]
-        assert abs(salted["s"] - plain["s"]) < 1e-6 * abs(plain["s"])
-        plan = _plan(salted_join(events, dim, ["event_type"], n_salts=8))
-        assert SALT_COL in plan.split("hashpartitioning(event_type")[1].split(")")[0]
-    finally:
-        spark.conf.unset("spark.sql.autoBroadcastJoinThreshold")
-
-
-def test_isolated_skew_join_parity_and_plan(spark, sf_dir):
-    """Hot-key isolation must not change results (inner AND left, with a
-    NULL probe key in the left case), must broadcast the hot branch, and
-    must refuse an unbounded hot set."""
-    import pytest
-
-    from cardano_analytics_duckdb_spark.plans.skew import isolated_skew_join
-
-    events = load_table(spark, sf_dir, "events").select("event_type", "value")
-    dim = spark.createDataFrame(
-        [("click", 2.0), ("purchase", 10.0), ("view", 1.0),
-         ("signup", 5.0), ("error", 0.0)],
-        ["event_type", "weight"],
-    )
-    # a probe row with a NULL key and one with an unmatched key: the left
-    # join must keep both (the NULL-handling coalesce in the tail filter)
-    extra = spark.createDataFrame(
-        [(None, 1.0), ("nosuch", 2.0)], ["event_type", "value"]
-    )
-    probe = events.unionByName(extra)
-    spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
-    try:
-        for how in ("inner", "left"):
-            plain = probe.join(dim, on=["event_type"], how=how).agg(
-                F.sum(F.col("value") * F.col("weight")).alias("s"),
-                F.count("*").alias("n"),
-            ).first()
-            iso_df = isolated_skew_join(
-                probe, dim, ["event_type"], how=how, hot_row_threshold=10
-            )
-            iso = iso_df.agg(
-                F.sum(F.col("value") * F.col("weight")).alias("s"),
-                F.count("*").alias("n"),
-            ).first()
-            assert iso["n"] == plain["n"], how
-            assert abs(iso["s"] - plain["s"]) < 1e-6 * abs(plain["s"]), how
-        plan = _plan(
-            isolated_skew_join(probe, dim, ["event_type"], hot_row_threshold=10)
-        )
-        assert "BroadcastHashJoin" in plan  # the isolated hot branch
-        assert "SortMergeJoin" in plan or "ShuffledHashJoin" in plan  # tail
-        with pytest.raises(ValueError, match="max_hot_keys"):
-            isolated_skew_join(
-                probe, dim, ["event_type"], hot_row_threshold=10, max_hot_keys=1
-            )
-        # no hot keys at all -> falls back to the plain join
-        cold = isolated_skew_join(
-            probe, dim, ["event_type"], hot_row_threshold=10**9
-        )
-        assert cold.count() == probe.join(dim, on=["event_type"]).count()
-    finally:
-        spark.conf.unset("spark.sql.autoBroadcastJoinThreshold")
-
-
-def test_bucketed_join_elides_both_exchanges(spark, sf_dir, tmp_path):
-    """Co-bucketed fact tables join with NO shuffle on either side — the
-    stored-partitioning property that makes repeated fact-fact joins viable
-    at scale."""
-    from cardano_analytics_duckdb_spark.lake.bucketing import (
-        bucketed_join,
-        write_bucketed,
-    )
-
-    spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
-    try:
-        li = write_bucketed(
-            spark, sf_dir, "lineitem", ["l_orderkey"], n_buckets=4,
-            name="t_li_bucketed",
-        )
-        orders = write_bucketed(
-            spark, sf_dir, "orders", ["o_orderkey"], n_buckets=4,
-            name="t_orders_bucketed",
-        )
-        joined = bucketed_join(
-            spark, li, orders, on=[F.col("l_orderkey") == F.col("o_orderkey")]
-        )
-        plan = _plan(joined)
-        assert "SortMergeJoin" in plan
-        assert "Exchange" not in plan, "bucketed join still shuffles"
-        # same join on the raw (unbucketed) parquet shuffles both sides
-        raw = load_table(spark, sf_dir, "lineitem").join(
-            load_table(spark, sf_dir, "orders"),
-            F.col("l_orderkey") == F.col("o_orderkey"),
-        )
-        assert "Exchange" in _plan(raw)
-    finally:
-        spark.conf.unset("spark.sql.autoBroadcastJoinThreshold")
-        spark.sql("DROP TABLE IF EXISTS t_li_bucketed")
-        spark.sql("DROP TABLE IF EXISTS t_orders_bucketed")
 
 
 def test_bucket_lake_reroutes_queries_shuffle_free(spark, sf_dir):
@@ -430,11 +300,6 @@ def test_flagship_stages_are_persisted(spark, sf_dir):
     assert "InMemoryRelation" in plan
     # the final sort is PARTITION-LOCAL (global=false): no sampler job
     assert re.search(r"Sort \[slot[^\]]*\], false, 0", plan), plan[:200]
-    # and the r12 shape stays reproducible for the A/B probe
-    spark.catalog.clearCache()
-    old = _plan(_token_transfers(spark, None, None, ordered=True))
-    assert "Exchange rangepartitioning" in old
-    assert re.search(r"Sort \[slot[^\]]*\], true, 0", old)
     spark.catalog.clearCache()
 
 
@@ -627,11 +492,9 @@ def test_knn_join_phase1_is_narrow(spark, sf_dir):
     over the corpus scan — the query matrix folds into the kernel, so
     there is no broadcast and no crossJoin at all) must not shuffle:
     NO Exchange of any kind below the kernel.  The per-query rank
-    shuffles only the P*Q*k survivors above it.  The zero-Python twin
-    keeps the old broadcast-crossJoin contract."""
+    shuffles only the P*Q*k survivors above it."""
     from cardano_analytics_duckdb_spark.operators.similarity import (
         knn_join_topk,
-        knn_join_topk_jvm,
     )
 
     plan = _plan(knn_join_topk(spark, sf_dir))
@@ -640,14 +503,6 @@ def test_knn_join_phase1_is_narrow(spark, sf_dir):
     # below the kernel (printed after it): narrow scan, zero exchanges
     assert "Exchange" not in tail and "Join" not in tail
     # above it: exactly the per-query rank shuffle over the survivors
-    assert "Window" in head
-
-    plan_jvm = _plan(knn_join_topk_jvm(spark, sf_dir))
-    head, _, tail = plan_jvm.partition("MapInPandas")
-    assert tail, "expected a MapInPandas local top-k stage"
-    assert "BroadcastExchange" in tail
-    assert "Exchange hashpartitioning" not in tail
-    assert "Exchange rangepartitioning" not in tail
     assert "Window" in head
 
 
@@ -675,29 +530,6 @@ def test_curation_pipeline_single_fullrow_shuffle(spark, sf_dir):
     plan = _plan(df)
     assert plan.count("Exchange hashpartitioning") <= 2  # window + groupBy
     assert "SortMergeJoin" not in plan and "CartesianProduct" not in plan
-
-
-def test_pii_redaction_scrubs_once(spark, sf_dir):
-    """(On the JVM variant — the default is the Arrow subn kernel since
-    r12.)  The 3-deep regexp_replace chain feeds BOTH redacted_len and
-    redacted_md5; staged through its own projection it must appear
-    exactly 3 times in the optimized plan (one per pattern), not 6
-    (inlined per consumer).  Runtime is measured neutral — codegen's
-    subexpression elimination shared the inlined copy too — but the
-    staged plan doesn't depend on that pass (e.g. under codegen
-    fallback)."""
-    from cardano_analytics_duckdb_spark.operators.textops import (
-        pii_redaction_stats_jvm,
-    )
-
-    plan = (
-        pii_redaction_stats_jvm(spark, sf_dir)
-        ._jdf.queryExecution()
-        .optimizedPlan()
-        .toString()
-    )
-    assert plan.count("regexp_replace") == 3
-    assert plan.count("regexp_extract_all") == 3
 
 
 def test_arrow_kernels_are_shuffle_free(spark, sf_dir):
@@ -836,7 +668,7 @@ def test_dedup_cluster_finals_no_range_exchange(spark, sf_dir):
     """r13 sort-drop, cluster-family sweep: the doc_id<300-bounded
     near-dup family's report-shaped finals use small_sorted (coalesce(1)
     + local sort) — same global order, no range exchange, no sampler
-    job.  The range shape stays reproducible behind ordered=True."""
+    job."""
     from cardano_analytics_duckdb_spark.operators.dedup import (
         cross_source_dup_leakage,
         near_dup_doc_clusters,

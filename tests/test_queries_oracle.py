@@ -74,3 +74,60 @@ def test_register_views(spark, sf_dir):
     for t in TESTDATA_TABLES:
         assert spark.sql(f"SELECT count(*) AS n FROM {t}_view").first()["n"] > 0
         spark.catalog.dropTempView(f"{t}_view")
+
+
+# A registered query is one plan: no caller passes anything beyond
+# (spark, sf_dir), so an extra parameter can only select an unshipped
+# shape.  bpe_vocab_merges is the one exception — its ``batch`` scale
+# path is exercised by tests/test_bpe_batch.py.
+EXTRA_PARAMS_ALLOWED = {"bpe_vocab_merges": ["rounds", "batch"]}
+
+
+def test_registered_queries_take_only_spark_and_sf_dir():
+    import inspect
+
+    wrong = {}
+    for name, fn in QUERIES.items():
+        params = list(inspect.signature(fn).parameters)
+        if params != ["spark", "sf_dir"] + EXTRA_PARAMS_ALLOWED.get(name, []):
+            wrong[name] = params
+    assert not wrong, f"registered queries with extra parameters: {wrong}"
+
+
+def test_bpe_token_counts_null_text_matches_oracle(spark, tmp_path):
+    """The testdata lakes have no null text, so null handling of the BPE
+    Arrow kernel is pinned on a synthetic nullable ``documents`` lake:
+    Spark and the DuckDB oracle agree, and the null row survives with
+    null counts (not dropped, not zeros).  r13 ADVICE: the kernel used
+    to raise TypeError here."""
+    import duckdb
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+
+    tbl = pa.table(
+        {
+            "doc_id": pa.array([1, 2, 3], pa.int64()),
+            "text": pa.array(["a b c", None, "x1 !"], pa.string()),
+            "lang": pa.array(["en"] * 3, pa.string()),
+            "source": pa.array(["s"] * 3, pa.string()),
+            "n_chars": pa.array([5, 0, 4], pa.int64()),
+        }
+    )
+    lake = tmp_path / "nulldocs"
+    lake.mkdir()
+    pq.write_table(tbl, lake / "documents.parquet")
+    con = duckdb.connect()
+    con.execute(
+        "CREATE VIEW documents AS SELECT * FROM "
+        f"read_parquet('{lake / 'documents.parquet'}')"
+    )
+    try:
+        df = QUERIES["bpe_token_counts"](spark, str(lake))
+        compare(df, con, ORACLES["bpe_token_counts"])
+    finally:
+        con.close()
+    null_rows = [r for r in df.collect() if r["doc_id"] == 2]
+    assert len(null_rows) == 1
+    counts = null_rows[0].asDict()
+    del counts["doc_id"]
+    assert counts and all(v is None for v in counts.values()), counts
