@@ -508,7 +508,7 @@ def _cmd_rollback(args, spark: SparkSession) -> int:
 
 
 def _cmd_manifest(args, spark: SparkSession) -> int:
-    from .lake.manifest import build_manifest, prune_files, update_manifest
+    from .lake.manifest import build_manifest, prune_files_box, update_manifest
 
     if args.probe_column is None:
         if args.update:
@@ -522,7 +522,7 @@ def _cmd_manifest(args, spark: SparkSession) -> int:
     lo, hi = args.lo, args.hi
     if args.eq_hex is not None:
         lo = hi = bytes.fromhex(args.eq_hex)
-    kept = prune_files(spark, args.table, args.probe_column, lo, hi)
+    kept = prune_files_box(spark, args.table, [(args.probe_column, lo, hi)])
     print(
         json.dumps(
             {"probe_column": args.probe_column, "kept_files": len(kept)}

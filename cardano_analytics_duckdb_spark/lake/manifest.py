@@ -11,16 +11,19 @@ idea, rebuilt on plain parquet):
   via pyarrow, so building costs O(files) metadata reads, not a scan.
   Stats land in ``<table>/_manifest/`` ("_"-prefixed: invisible to Spark
   readers, same convention as the epoch control dirs).
-- :func:`prune_files` — files whose [min, max] interval can intersect a
-  numeric range predicate.  CORRECTNESS RULE: a file is skipped only when
-  its stats PROVE no row can match — files missing from the manifest
-  (appended after the build), columns with no stats, or all-null chunks
-  on a range predicate are handled conservatively (kept, kept, skipped —
-  SQL range predicates reject NULL).
-- :func:`read_pruned` — the pruned scan: selected files via
-  ``option("basePath", table)`` (partition columns survive), with the
-  row-level filter still applied on top — file skipping is an
-  optimization, never the filter itself.
+- :func:`prune_files_box` — files whose per-column [min, max] intervals
+  can intersect EVERY ``(column, lo, hi)`` predicate of a box.
+  CORRECTNESS RULE: a file is skipped only when its stats PROVE no row
+  can match — files missing from the manifest (appended after the
+  build), columns with no stats, or all-null chunks on a bounded
+  predicate are handled conservatively (kept, kept, skipped — SQL range
+  predicates reject NULL).  A predicate with neither bound filters
+  nothing and skips nothing; an empty box keeps every live file.
+- :func:`read_pruned_box_with_bound` — the pruned scan: selected files
+  via ``option("basePath", table)`` (partition columns survive), with
+  the row-level filter still applied on top — file skipping is an
+  optimization, never the filter itself — plus the kept files' row
+  count bound.
 
 Synergy with ``lake/zorder.py``: z-ordering clusters rows so per-file
 min/max ranges are tight and disjoint — the manifest is what turns that
@@ -35,8 +38,8 @@ open fails loudly as a task error — run the build where the data lives.
 Staleness contract: the manifest is a snapshot.  Appends after a build
 are READ (never wrongly skipped) but not pruned until the next
 :func:`build_manifest`; rewrites that delete manifest-listed files leave
-dangling entries, which :func:`prune_files` drops by re-listing live
-files.  Rebuild after maintenance (compaction / z-order) for best
+dangling entries, which :func:`prune_files_box` drops by re-listing
+live files.  Rebuild after maintenance (compaction / z-order) for best
 skipping.
 """
 
@@ -157,7 +160,7 @@ def build_manifest(spark: SparkSession, table_dir: str) -> str:
     ``min_str``/``max_str``.
 
     Driver-side traffic is file NAMES only (the listing here, the
-    per-file skip verdicts in :func:`prune_files`) — the same metadata
+    per-file skip verdicts in :func:`prune_files_box`) — the same metadata
     cost class as Spark's own InMemoryFileIndex for the scan being
     replaced; stats bytes stay in executors and parquet.  For steady
     append workloads prefer :func:`update_manifest` (cost ∝ new files).
@@ -392,7 +395,7 @@ def _write_stats(
                             # min/max of a type this kernel can't order
                             # (time, interval, future types): NEVER leave
                             # the entry looking all-null — that would make
-                            # prune_files wrongly skip a populated file.
+                            # pruning wrongly skip a populated file.
                             a["has_stats"] = False
                 for name, a in agg.items():
                     if not a["has_stats"]:
@@ -514,15 +517,15 @@ def _manifest_snapshot(spark: SparkSession, lfs: LakeFs, table_dir: str):
     return snap
 
 
-def prune_files(
+def prune_files_box(
     spark: SparkSession,
     table_dir: str,
-    column: str,
-    lo: Bound = None,
-    hi: Bound = None,
+    preds: list[tuple[str, Bound, Bound]],
 ) -> list[str]:
-    """Full URIs of the data files that may contain rows with
-    ``lo <= column <= hi`` (either bound optional).
+    """Full URIs of the data files that may contain rows satisfying EVERY
+    ``lo <= column <= hi`` predicate (each bound optional) — the read
+    shape z-order layouts exist for: each clustered dimension contributes
+    its own skips and the box keeps only files tight in all of them.
 
     Bounds may be numeric (numeric/temporal columns), ``str`` (string
     columns), or ``bytes`` (binary columns — equality is the common case:
@@ -530,92 +533,48 @@ def prune_files(
     manifest's order-preserving encodings, so skipping stays a plain
     column comparison.
 
-    Skip only on proof: a manifest row skips its file iff the file's
-    [min, max] for ``column`` lies entirely outside [lo, hi], or the
-    column is all-null there (range predicates reject NULL).  Files with
-    no manifest entry (post-build appends) and files whose stats are
-    incomplete (null_count = -1 sentinel) are always kept; manifest
-    entries whose file no longer exists are dropped.  A pre-r9 manifest
-    (no ``min_bin`` columns) keeps every file for bytes bounds.
-    """
+    Skip only on proof: a file is skipped iff, for ANY predicate with a
+    bound, its [min, max] for that column lies entirely outside [lo, hi]
+    or the column is all-null there (range predicates reject NULL).
+    Files with no manifest entry (post-build appends) and files whose
+    stats are incomplete (null_count = -1 sentinel) are always kept;
+    manifest entries whose file no longer exists are dropped.  A pre-r9
+    manifest (no ``min_bin`` columns) skips nothing on bytes bounds.
+    One pass: the live files are listed once and the manifest snapshot
+    read once, however many predicates the box has."""
     lfs = LakeFs(spark, table_dir)
     live = _data_files(lfs, table_dir)
-    rel = _relative(live, lfs, table_dir)
-    by_rel = {r: f for f, r in rel.items()}
-    snap = _manifest_snapshot(spark, lfs, table_dir)
+    bounded = [p for p in preds if p[1] is not None or p[2] is not None]
+    snap = _manifest_snapshot(spark, lfs, table_dir) if bounded else None
     if snap is None:
         return live
-    min_col, max_col = _bound_cols(lo, hi)
-    if min_col not in snap["columns"]:  # pre-binary manifest + bytes bound
-        return live
     has_bin = "min_bin" in snap["columns"]
-    lo_v, hi_v = _bound_py(lo), _bound_py(hi)
     skipped: set[str] = set()
-    for row in snap["by_col"].get(column, ()):
-        mn, mx = row.get(min_col), row.get(max_col)
-        # provably-no-match: interval disjoint from [lo, hi] ...
-        disjoint = mn is not None and (
-            (lo_v is not None and mx is not None and mx < lo_v)
-            or (hi_v is not None and mn > hi_v)
-        )
-        # ... or every value NULL (min/max absent, yet stats complete)
-        nc = row.get("null_count")
-        all_null = (
-            row.get("min_num") is None
-            and row.get("min_str") is None
-            and (not has_bin or row.get("min_bin") is None)
-            and nc is not None
-            and nc >= 0
-        )
-        if disjoint or all_null:
-            skipped.add(row["file"])
-    return [
-        full
-        for relpath, full in sorted(by_rel.items())
-        if relpath not in skipped
-    ]
-
-
-def prune_files_box(
-    spark: SparkSession,
-    table_dir: str,
-    preds: list[tuple[str, Bound, Bound]],
-) -> list[str]:
-    """Conjunctive (box) pruning: files that may contain rows satisfying
-    EVERY ``(column, lo, hi)`` predicate — a file is skipped as soon as
-    ANY column's stats prove no-match, so survivors are the intersection
-    of the per-column keep sets.  This is the read shape z-order layouts
-    exist for: each clustered dimension contributes its own skips and
-    the box keeps only files tight in all of them."""
-    kept: set[str] | None = None
-    for column, lo, hi in preds:
-        files = set(prune_files(spark, table_dir, column, lo, hi))
-        kept = files if kept is None else (kept & files)
-        if not kept:
-            return []
-    return sorted(kept or [])
-
-
-def pruned_row_bound(
-    spark: SparkSession,
-    table_dir: str,
-    preds: list[tuple[str, Bound, Bound]],
-) -> int | None:
-    """UPPER BOUND on the rows matching the box: the sum of ``n_rows``
-    over the files box-pruning keeps.  None when unknowable — no
-    manifest, or a surviving file without a manifest entry (post-build
-    append).  Pure control-plane (the snapshot cache is shared with
-    ``read_pruned_box``, so a query that already pruned pays zero extra
-    jobs); the bound lets size-gated broadcast decisions skip a real
-    count when file stats prove the side small (operators/cardano.py
-    flagship gate, r11 verdict #2)."""
-    effective = [
-        (c, lo, hi) for c, lo, hi in preds
-        if lo is not None or hi is not None
-    ]
-    if not effective:  # no box: "kept files" would be vacuously empty
-        return None
-    return read_pruned_box_with_bound(spark, table_dir, effective)[1]
+    for column, lo, hi in bounded:
+        min_col, max_col = _bound_cols(lo, hi)
+        if min_col not in snap["columns"]:  # pre-binary manifest + bytes
+            continue
+        lo_v, hi_v = _bound_py(lo), _bound_py(hi)
+        for row in snap["by_col"].get(column, ()):
+            mn, mx = row.get(min_col), row.get(max_col)
+            # provably-no-match: interval disjoint from [lo, hi] ...
+            disjoint = mn is not None and (
+                (lo_v is not None and mx is not None and mx < lo_v)
+                or (hi_v is not None and mn > hi_v)
+            )
+            # ... or every value NULL (min/max absent, yet stats complete)
+            nc = row.get("null_count")
+            all_null = (
+                row.get("min_num") is None
+                and row.get("min_str") is None
+                and (not has_bin or row.get("min_bin") is None)
+                and nc is not None
+                and nc >= 0
+            )
+            if disjoint or all_null:
+                skipped.add(row["file"])
+    rel = _relative(live, lfs, table_dir)
+    return [f for f in live if rel[f] not in skipped]
 
 
 def _read_files(
@@ -660,29 +619,21 @@ def _read_files(
     return out
 
 
-def read_pruned_box(
-    spark: SparkSession,
-    table_dir: str,
-    preds: list[tuple[str, Bound, Bound]],
-) -> DataFrame:
-    """The box query itself over surviving files, predicates re-applied
-    row-level; equals ``full scan WHERE AND_i(lo_i <= col_i <= hi_i)``."""
-    return read_pruned_box_with_bound(spark, table_dir, preds)[0]
-
-
 def read_pruned_box_with_bound(
     spark: SparkSession,
     table_dir: str,
     preds: list[tuple[str, Bound, Bound]],
 ) -> tuple[DataFrame, int | None]:
-    """:func:`read_pruned_box` plus the UPPER BOUND on the surviving
-    rows, from the SAME prune pass (sum of the kept files' manifest
-    ``n_rows``; None when a kept file has no entry or no manifest
-    exists).  One file listing serves both — callers gating a broadcast
-    on the bound (operators/cardano.py flagship, r11 verdict #2) pay
-    zero traffic beyond the read they were already doing; a second
-    listing pass measured ~1.1 s/run at the 2M-tx probe lake (the first
-    flagship_gate_ab_10000x recording)."""
+    """The box query itself over the files :func:`prune_files_box`
+    keeps, predicates re-applied row-level — it equals ``full scan WHERE
+    AND_i(lo_i <= col_i <= hi_i)`` — plus the UPPER BOUND on the
+    surviving rows, from the SAME prune pass (sum of the kept files'
+    manifest ``n_rows``; None when a kept file has no entry or no
+    manifest exists).  One file listing serves both — callers gating a
+    broadcast on the bound (operators/cardano.py flagship, r11 verdict
+    #2) pay zero traffic beyond the read they were already doing; a
+    second listing pass measured ~1.1 s/run at the 2M-tx probe lake (the
+    first flagship_gate_ab_10000x recording)."""
     files = prune_files_box(spark, table_dir, preds)
     bound: int | None = None
     lfs = LakeFs(spark, table_dir)
@@ -714,27 +665,3 @@ def read_pruned_box_with_bound(
         if hi is not None:
             df = df.filter(F.col(column) <= F.lit(hi))
     return df, bound
-
-
-def read_pruned(
-    spark: SparkSession,
-    table_dir: str,
-    column: str,
-    lo: Bound = None,
-    hi: Bound = None,
-) -> DataFrame:
-    """The range query itself, reading only surviving files.  The same
-    predicate is re-applied row-level (file skipping is coarse); the
-    result is exactly ``full scan WHERE lo <= column <= hi``."""
-    files = prune_files(spark, table_dir, column, lo, hi)
-    if not files:
-        from .generations import read_table
-
-        df = spark.createDataFrame([], read_table(spark, table_dir).schema)
-    else:
-        df = _read_files(spark, table_dir, files)
-    if lo is not None:
-        df = df.filter(F.col(column) >= F.lit(lo))
-    if hi is not None:
-        df = df.filter(F.col(column) <= F.lit(hi))
-    return df

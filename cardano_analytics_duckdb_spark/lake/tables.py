@@ -76,68 +76,6 @@ def unwarm_lake(sf_dir: str | None = None) -> None:
         _WARMED.pop(key).unpersist()
 
 
-def bucket_lake(
-    spark: SparkSession,
-    sf_dir: str,
-    specs: dict[str, tuple[str, ...]],
-    n_buckets: int = 32,
-) -> dict[str, str]:
-    """Declare-and-build shorthand over the lake LAYOUT lifecycle
-    (``lake/layout.py``): set each table's bucket spec to exactly the
-    given key columns (replacing any prior layouts for that table) and
-    materialize the copies.  ``load_table`` then serves them
-    automatically while they stay fresh.  Returns {table: catalog name}.
-
-    100 TB posture: co-located fact-fact joins are THE answer to the
-    recurring-shuffle cost (measured: bucket_probe_100x join_speedup
-    2.11x, breakeven ~14 joins); the persisted spec + signature-checked
-    resolution is how the layout reaches queries without touching query
-    code — and survives the session, unlike the r11 in-process registry.
-    """
-    from .layout import bucket_spec, bucketize, set_bucket_spec
-
-    spec = bucket_spec(spark, sf_dir) or {"n_buckets": n_buckets, "tables": {}}
-    tables = dict(spec["tables"])
-    for name, cols in specs.items():
-        tables[name] = [list(cols)]
-    set_bucket_spec(spark, sf_dir, tables, n_buckets=n_buckets)
-    built = bucketize(spark, sf_dir, tables=specs.keys())
-    out: dict[str, str] = {}
-    for name, cols in specs.items():
-        out[name] = built[f"{name}_by_{'_'.join(cols)}"]
-    return out
-
-
-def sort_lake(
-    spark: SparkSession,
-    sf_dir: str,
-    specs: dict[str, tuple[str, ...]],
-    out_files: int = 64,
-) -> None:
-    """Declare-and-build shorthand for RANGE-CLUSTERED layouts
-    (``lake/layout.py::set_sort_spec``): each table gets a copy whose
-    files hold tight, disjoint ranges of the sort key, so bounded-key
-    predicates row-group-skip instead of decoding the whole table
-    (guide §6).  ``load_table`` serves the copies while fresh."""
-    from .layout import bucketize, set_sort_spec
-
-    set_sort_spec(
-        spark,
-        sf_dir,
-        {name: list(cols) for name, cols in specs.items()},
-        out_files=out_files,
-    )
-    bucketize(spark, sf_dir, tables=specs.keys())
-
-
-def unbucket_lake(spark: SparkSession, sf_dir: str) -> None:
-    """Drop ``sf_dir``'s layout (spec, copies, catalog entries);
-    subsequent loads read the plain parquet again."""
-    from .layout import drop_layout
-
-    drop_layout(spark, sf_dir)
-
-
 def load_table(
     spark: SparkSession,
     sf_dir: str,

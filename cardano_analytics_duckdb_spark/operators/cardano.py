@@ -79,7 +79,7 @@ def _lake_pruned(
     table: str,
     preds: list[tuple],
     root: str | None = None,
-) -> DataFrame:
+) -> tuple[DataFrame, int | None]:
     """Predicate read with file-level data skipping: equals
     ``_lake(table).filter(AND_i(lo_i <= col_i <= hi_i))``, but routed
     through the stats manifest (``lake/manifest.py``) so files whose
@@ -93,6 +93,12 @@ def _lake_pruned(
     11/64 files at 10x bench scale, SCALE_PROBE.json); on the fixture
     lake's slot-ordered files it degrades gracefully to a full read.
 
+    Returns the frame plus the manifest's upper bound on the surviving
+    rows (None when unknowable: no bounded predicate, fallback path, no
+    manifest, or un-stat'd appends) — from the SAME prune pass, so a
+    caller gating a broadcast on it pays no extra listing traffic (r11
+    verdict #2).
+
     The lazy build is the ONE lake write a read query can trigger, so it
     follows the same single-writer discipline as every other mutation:
     taken under the lake's ``_maintenance.lock`` with a double-check
@@ -102,19 +108,6 @@ def _lake_pruned(
     the plain unpruned scan + row predicates — exact, just without the
     IO skipping — and leaves manifest building to a later maintenance
     pass."""
-    return _lake_pruned_with_bound(spark, table, preds, root)[0]
-
-
-def _lake_pruned_with_bound(
-    spark: SparkSession,
-    table: str,
-    preds: list[tuple],
-    root: str | None = None,
-) -> tuple[DataFrame, int | None]:
-    """:func:`_lake_pruned` plus the manifest's upper bound on the
-    surviving rows (None when unknowable: fallback path, no manifest, or
-    un-stat'd appends) — from the SAME prune pass, so a caller gating a
-    broadcast on it pays no extra listing traffic (r11 verdict #2)."""
     import os
 
     from ..lake.fsutil import LakeFs
@@ -162,23 +155,11 @@ def _lake_pruned_with_bound(
     return read_pruned_box_with_bound(spark, table_dir, preds)
 
 
-def _lake_range(
-    spark: SparkSession,
-    table: str,
-    column: str,
-    lo=None,
-    hi=None,
-    root: str | None = None,
-) -> DataFrame:
-    """Single-predicate form of :func:`_lake_pruned`."""
-    return _lake_pruned(spark, table, [(column, lo, hi)], root)
-
-
 def cardano_high_fee_txs(spark: SparkSession, sf_dir: str) -> DataFrame:
     # fees are integral lovelace, so the strict > 2_000_000 of the
     # reference (main.py:24-35) is exactly the closed bound >= 2_000_001
     # the manifest prune understands
-    tx = _lake_range(spark, "tx", "tx_fee", lo=2_000_001)
+    tx, _ = _lake_pruned(spark, "tx", [("tx_fee", 2_000_001, None)])
     return (
         tx.filter(F.col("tx_fee") > 2_000_000)
         .select(
@@ -255,7 +236,7 @@ def _token_transfers(
         ("asset_name", asset_name, asset_name),
         ("slot", min_slot, max_slot),
     ]
-    asset, asset_bound = _lake_pruned_with_bound(spark, "asset", preds, root)
+    asset, asset_bound = _lake_pruned(spark, "asset", preds, root)
     tx = _lake(spark, "tx", root)
 
     token_utxos = asset.filter(

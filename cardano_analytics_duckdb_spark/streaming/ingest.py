@@ -43,9 +43,10 @@ from ..sources.blocks import blocks_to_dataframe
 
 # The streaming lake's own join-key family: every flagship join site
 # (semi, src-UTxO equi, final set-agg lefts) keys on tx_id.  Declaring
-# this spec at ingest bootstrap is deliberately OPT-IN
-# (``declare_layout=False`` default): the A/B at the 2M-tx lake
-# (SCALE_PROBE r13_cardano_layout_10000x) REJECTED default-on — the
+# this spec is deliberately OPT-IN: ingest never declares it; a caller
+# who wants it calls ``declare_default_layout(spark, dest)``.  The A/B
+# at the 2M-tx lake (SCALE_PROBE r13_cardano_layout_10000x) REJECTED
+# default-on — the
 # bucketed tx copy lost on every path, including the over-gate
 # shuffle_hash shape it exists to serve (gate0 1.399 -> 2.377 s,
 # flagship 1.511 -> 2.662 s, windowed 0.651 -> 2.004 s): at this
@@ -432,7 +433,6 @@ def ingest_blocks(
     stop_slot: int | None = None,
     slot_group_size: int = SLOT_GROUP_SIZE,
     reconcile_rollbacks: bool = False,
-    declare_layout: bool = False,
 ) -> dict[str, int]:
     """Micro-batch ingestion loop.  Returns counters (blocks, txs,
     rollbacks) ≙ the reference's progress telemetry (T7).
@@ -451,16 +451,8 @@ def ingest_blocks(
     materialization registered over a lake table, the in-stream
     ``rollback_lake`` refuses (already-flushed appends stay committed —
     nothing is lost; ``deregister_materialization`` or recompute the
-    aggregate in batch, then resume from the node's cursor).
-
-    ``declare_layout=True`` writes :data:`DEFAULT_CARDANO_SPEC` at
-    bootstrap if the destination has no bucket spec yet (declare-only —
-    a one-file metadata write; copies are built/refreshed by the
-    ``refresh_layout`` hook :func:`compact_lake` already calls, riding
-    the existing maintenance lifecycle)."""
+    aggregate in batch, then resume from the node's cursor)."""
     stats = {"blocks": 0, "transactions": 0, "rollbacks": 0, "batches": 0}
-    if declare_layout:
-        declare_default_layout(spark, dest)
     if reconcile_rollbacks:
         stats["reconciled_rows"] = 0
     # Bootstrap hygiene: if a table dir this run will (re)create was
@@ -547,7 +539,6 @@ def ingest_blocks_streaming(
     block_json_dir: str,
     dest: str,
     slot_group_size: int = SLOT_GROUP_SIZE,
-    declare_layout: bool = False,
 ) -> None:
     """Structured Streaming ingestion: JSON-lines block files → 13 sinks.
 
@@ -574,9 +565,6 @@ def ingest_blocks_streaming(
     from pyspark.sql import types as T
 
     from ..sources.blocks import BLOCK_SCHEMA
-
-    if declare_layout:
-        declare_default_layout(spark, dest)
 
     # PERMISSIVE parse with an explicit corrupt-record capture: a malformed
     # line must never kill the stream (one poison message would otherwise

@@ -120,37 +120,6 @@ ORDER BY bucket_start_ms, event_type
 """
 
 
-def stream_ingest_foreach_batch(
-    spark: SparkSession, sf_dir: str, dest: str | None = None
-) -> DataFrame:
-    """foreachBatch sink pattern (T2/T4): stream → per-epoch partitioned
-    parquet appends, the Structured-Streaming shape of the reference's
-    flush loop (ogmios_parquet.py:748-755).  Returns the written rows."""
-    dest = dest or os.path.join("/tmp", f"events_sink_{uuid.uuid4().hex[:8]}")
-
-    def write_epoch(batch_df: DataFrame, epoch_id: int) -> None:
-        (
-            batch_df.withColumn(
-                "day", F.date_trunc("day", F.col("ts")).cast("date")
-            )
-            .write.mode("append")
-            .partitionBy("day")
-            .parquet(dest)
-        )
-
-    q = (
-        streaming_events(spark, sf_dir)
-        .writeStream.foreachBatch(write_epoch)
-        .trigger(availableNow=True)
-        .start()
-    )
-    try:
-        q.processAllAvailable()
-    finally:
-        q.stop()
-    return spark.read.parquet(dest)
-
-
 # -- native session windows (Spark-idiomatic sessionization) ------------------
 
 

@@ -86,7 +86,7 @@ def _run_generation_walk(spark, root: str, seed: int, n_steps: int):
     # every other op leaves it stale — pruned reads must stay exact anyway
     from cardano_analytics_duckdb_spark.lake.manifest import (
         build_manifest,
-        read_pruned,
+        read_pruned_box_with_bound,
     )
 
     build_manifest(spark, t)
@@ -95,7 +95,7 @@ def _run_generation_walk(spark, root: str, seed: int, n_steps: int):
         return sorted(
             map(
                 tuple,
-                read_pruned(spark, t, "slot", lo, hi)
+                read_pruned_box_with_bound(spark, t, [("slot", lo, hi)])[0]
                 .select("k", "v", "slot", "slot_group")
                 .collect(),
             )
@@ -192,8 +192,7 @@ def test_random_walk_binary_pruning_stays_exact(spark, tmp_path):
 def _run_binary_walk(spark, root: str, seed: int, n_steps: int):
     from cardano_analytics_duckdb_spark.lake.manifest import (
         build_manifest,
-        read_pruned,
-        read_pruned_box,
+        read_pruned_box_with_bound,
         refresh_manifest,
         update_manifest,
     )
@@ -289,8 +288,9 @@ def _run_binary_walk(spark, root: str, seed: int, n_steps: int):
         target = rng.choice(policies)
         got_eq = sorted(
             (r["k"], bytes(r["pid"]))
-            for r in read_pruned(spark, t, "pid", target, target)
-            .select("k", "pid").collect()
+            for r in read_pruned_box_with_bound(
+                spark, t, [("pid", target, target)]
+            )[0].select("k", "pid").collect()
         )
         expect_eq = sorted(
             (k, p) for k, (_, p, _, _) in model.items() if p == target
@@ -304,9 +304,9 @@ def _run_binary_walk(spark, root: str, seed: int, n_steps: int):
         hi = lo + rng.randrange(20, 120)
         got_box = sorted(
             (r["k"],)
-            for r in read_pruned_box(
+            for r in read_pruned_box_with_bound(
                 spark, t, [("pid", target, target), ("slot", lo, hi)]
-            ).select("k").collect()
+            )[0].select("k").collect()
         )
         expect_box = sorted(
             (k,)

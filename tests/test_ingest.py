@@ -604,7 +604,7 @@ def test_materialization_registered_in_check_to_lock_window_is_caught(
 
 
 def test_bootstrap_declared_layout_lifecycle(spark, tmp_path):
-    """``declare_layout=True`` at ingest bootstrap writes the default
+    """``declare_default_layout`` before ingest writes the default
     tx_id bucket spec (declare-only — no copies yet), the first
     ``compact_lake`` builds the copy through its existing
     ``refresh_layout`` hook, and the lake's read path then serves it
@@ -618,10 +618,8 @@ def test_bootstrap_declared_layout_lifecycle(spark, tmp_path):
     )
 
     dest = str(tmp_path / "lake_bootstrap_layout")
-    ingest_blocks(
-        spark, fixture_blocks()[:5], dest, batch_size=10,
-        declare_layout=True,
-    )
+    assert declare_default_layout(spark, dest) is True
+    ingest_blocks(spark, fixture_blocks()[:5], dest, batch_size=10)
     spec = layout.bucket_spec(spark, dest)
     assert spec is not None
     assert spec["tables"] == DEFAULT_CARDANO_SPEC
@@ -641,10 +639,8 @@ def test_bootstrap_declared_layout_lifecycle(spark, tmp_path):
     dest2 = str(tmp_path / "lake_custom_spec")
     os.makedirs(dest2)
     layout.set_bucket_spec(spark, dest2, {"utxo": [["address"]]})
-    ingest_blocks(
-        spark, fixture_blocks()[:3], dest2, batch_size=10,
-        declare_layout=True,
-    )
+    assert declare_default_layout(spark, dest2) is False
+    ingest_blocks(spark, fixture_blocks()[:3], dest2, batch_size=10)
     assert layout.bucket_spec(spark, dest2)["tables"] == {
         "utxo": [["address"]]
     }

@@ -28,11 +28,7 @@ from pyspark.sql import functions as F
 from cardano_analytics_duckdb_spark.lake import layout
 from cardano_analytics_duckdb_spark.lake.fixtures import fixture_blocks
 from cardano_analytics_duckdb_spark.lake.fsutil import LakeFs
-from cardano_analytics_duckdb_spark.lake.tables import (
-    bucket_lake,
-    load_table,
-    unbucket_lake,
-)
+from cardano_analytics_duckdb_spark.lake.tables import load_table
 
 SF = os.environ.get("TEST_SF_DIR", "/root/testdata/sf0.001")
 
@@ -178,14 +174,17 @@ def test_fresh_session_reregisters_from_status(spark, layout_env):
 
 
 def test_bucket_lake_shorthand_and_unbucket(spark, layout_env):
-    out = bucket_lake(spark, SF, {"part": ("p_partkey",)}, n_buckets=4)
+    """Declare and build one table's copy, read it, then drop the layout:
+    resolution goes back to the plain read."""
+    layout.set_bucket_spec(spark, SF, {"part": [["p_partkey"]]}, n_buckets=4)
+    out = layout.bucketize(spark, SF, tables=["part"])
     try:
-        assert "part" in out
+        assert "part_by_p_partkey" in out
         assert load_table(
             spark, SF, "part", layout_for=("p_partkey",)
         ).count() == load_table(spark, SF, "part").count()
     finally:
-        unbucket_lake(spark, SF)
+        layout.drop_layout(spark, SF)
     assert layout.resolve_bucketed(spark, SF, "part") is None
 
 
@@ -704,116 +703,48 @@ def test_source_sig_memo_revalidates_on_root_change(
     assert layout._SIG_CACHE[path][0] > 0
 
 
-def test_sorted_layout_lifecycle_serves_prunable_copy(
+def test_catalogless_status_entry_is_never_served_and_pruned(
     spark, layout_env, tmp_path
 ):
-    """r14: RANGE-CLUSTERED (sorted) layouts — declare via set_sort_spec,
-    build via the same bucketize lifecycle, resolve automatically through
-    load_table; files hold disjoint key ranges so bounded-key predicates
-    row-group-skip (the ngram_jaccard doc_id<300 gate fix)."""
-    import pyarrow.parquet as pq
-
-    from cardano_analytics_duckdb_spark.lake.tables import sort_lake
-    from cardano_analytics_duckdb_spark.operators.dedup import (
-        ngram_jaccard_pairs,
-    )
-
-    # writable copy of the docs lake so the spec lands IN the lake
-    src = tmp_path / "lake"
-    src.mkdir()
-    for t in ("documents",):
-        shutil.copytree(
-            os.path.join(SF, f"{t}.parquet"),
-            src / f"{t}.parquet",
-        ) if os.path.isdir(os.path.join(SF, f"{t}.parquet")) else shutil.copy(
-            os.path.join(SF, f"{t}.parquet"), src / f"{t}.parquet"
-        )
-    plain_rows = ngram_jaccard_pairs(spark, str(src)).collect()
-    sort_lake(spark, str(src), {"documents": ("doc_id",)}, out_files=4)
-
-    served = load_table(spark, str(src), "documents")
-    files = [
-        r["file"] for r in served.select(
-            F.input_file_name().alias("file")
-        ).distinct().collect()
-    ]
-    assert all("documents_sorted_by_doc_id" in f for f in files)
-    # disjoint per-file doc_id ranges -> footer stats actually prune
-    spans = []
-    for f in files:
-        md = pq.ParquetFile(f.replace("file://", "")).metadata
-        idx = md.schema.to_arrow_schema().names.index("doc_id")
-        st = md.row_group(0).column(idx).statistics
-        lo, hi = st.min, st.max
-        for g in range(1, md.num_row_groups):
-            s = md.row_group(g).column(idx).statistics
-            lo, hi = min(lo, s.min), max(hi, s.max)
-        spans.append((lo, hi))
-    spans.sort()
-    assert all(a[1] < b[0] for a, b in zip(spans, spans[1:]))
-    # unchanged query code, identical rows, filter pushed to the scan
-    gated = ngram_jaccard_pairs(spark, str(src))
-    assert sorted(map(tuple, gated.collect())) == sorted(
-        map(tuple, plain_rows)
-    )
-    plan = gated._jdf.queryExecution().explainString(
-        gated._sc._jvm.org.apache.spark.sql.execution.ExplainMode.fromString(
-            "formatted"
-        )
-    )
-    assert "documents_sorted_by_doc_id" in plan
-    # PushedFilters reach the copy's scan (row-group pruning can fire)
-    assert "LessThan(doc_id,300)" in plan
-    # source mutation invalidates: resolution falls back to plain
-    import time as _time
-
-    _time.sleep(0.02)
-    tbl = pq.read_table(src / "documents.parquet")
-    pq.write_table(tbl.slice(0, tbl.num_rows - 1), src / "documents.parquet")
-    layout.invalidate_layout_cache()
-    layout._SIG_CACHE.clear()
-    back = load_table(spark, str(src), "documents")
-    fs = [
-        r["file"] for r in back.select(
-            F.input_file_name().alias("file")
-        ).distinct().collect()
-    ]
-    assert all("documents_sorted_by_doc_id" not in f for f in fs)
-    layout.drop_layout(spark, str(src))
-
-
-def test_sorted_and_bucketed_layouts_coexist(spark, layout_env, tmp_path):
-    """A table can carry both layout kinds: an exact layout_for hint
-    serves the bucketed copy (join co-location), unhinted reads of a
-    sorted-only table serve the sorted copy."""
-    src = tmp_path / "lake2"
-    src.mkdir()
+    """A status entry with no catalog table (a range-clustered copy from
+    an older build) is never served, even with a matching source
+    signature, and the next bucketize prunes it as undeclared."""
+    src_dir = str(tmp_path / "src")
+    os.makedirs(src_dir)
     shutil.copy(
-        os.path.join(SF, "orders.parquet"), src / "orders.parquet"
+        os.path.join(SF, "orders.parquet"),
+        os.path.join(src_dir, "orders.parquet"),
     )
     layout.set_bucket_spec(
-        spark, str(src), {"orders": [["o_orderkey"]]}, n_buckets=4
+        spark, src_dir, {"orders": [["o_orderkey"]]}, n_buckets=4
     )
-    layout.set_sort_spec(
-        spark, str(src), {"orders": ["o_orderkey"]}, out_files=4
-    )
-    spec = layout.bucket_spec(spark, str(src))
-    assert spec["tables"] == {"orders": [["o_orderkey"]]}  # merge kept it
-    built = layout.bucketize(spark, str(src))
-    assert "orders_by_o_orderkey" in built
-    assert "orders_sorted_by_o_orderkey" in built
-    hinted = load_table(
-        spark, str(src), "orders", layout_for=("o_orderkey",)
-    )
-    # bucketed copies resolve as catalog tables (no input_file path)
-    assert hinted.schema["o_orderkey"] is not None
-    from cardano_analytics_duckdb_spark.lake.layout import resolve_bucketed
-
-    st = resolve_bucketed(spark, str(src), "orders", ("o_orderkey",))
-    assert st is not None
-    unhinted = resolve_bucketed(spark, str(src), "orders", None)
-    assert unhinted is not None
-    # second bucketize is a no-op for both kinds (incremental)
-    again = layout.bucketize(spark, str(src))
-    assert set(again) == set(built)
-    layout.drop_layout(spark, str(src))
+    layout.bucketize(spark, src_dir)
+    lfs = LakeFs(spark, src_dir)
+    d = layout._find_layout_dir(lfs, src_dir)
+    status_path = os.path.join(d, layout.STATUS_NAME)
+    status = layout._read_json(lfs, status_path)
+    # a one-row copy: serving it would return wrong rows
+    loc = os.path.join(d, "orders_sorted_by_o_orderkey")
+    load_table(spark, src_dir, "orders").limit(1).write.parquet(loc)
+    status["copies"]["orders_sorted_by_o_orderkey"] = {
+        "table": "orders",
+        "cols": ["o_orderkey"],
+        "kind": "sorted",
+        "out_files": 4,
+        "location": loc,
+        "source_sig": status["copies"]["orders_by_o_orderkey"]["source_sig"],
+    }
+    layout._write_json(lfs, status_path, status)
+    layout.invalidate_layout_cache()
+    try:
+        # no bucketed copy matches this hint, so only the leftover could
+        # be served
+        assert layout.resolve_bucketed(
+            spark, src_dir, "orders", ("o_custkey",)
+        ) is None
+        assert layout.resolve_bucketed(spark, src_dir, "orders") is not None
+        built = layout.bucketize(spark, src_dir)
+        assert set(built) == {"orders_by_o_orderkey"}
+        assert not os.path.exists(loc)
+    finally:
+        layout.drop_layout(spark, src_dir)

@@ -17,10 +17,8 @@ import pytest
 from cardano_analytics_duckdb_spark.lake.manifest import (
     MANIFEST_DIR,
     build_manifest,
-    prune_files,
     prune_files_box,
-    read_pruned,
-    read_pruned_box,
+    read_pruned_box_with_bound,
 )
 from cardano_analytics_duckdb_spark.lake.tables import load_table
 
@@ -67,7 +65,7 @@ def test_prune_is_strict_subset_on_narrow_range(spark, mtable):
         F.min("o_totalprice"), F.max("o_totalprice")
     ).first()
     width = (hi - lo) / N_FILES
-    kept = prune_files(spark, mtable, "o_totalprice", lo, lo + width / 2)
+    kept = prune_files_box(spark, mtable, [("o_totalprice", lo, lo + width / 2)])
     assert 0 < len(kept) < N_FILES
 
 
@@ -91,7 +89,9 @@ def test_read_pruned_equals_full_filter(spark, mtable):
     actual = sorted(
         map(
             tuple,
-            read_pruned(spark, mtable, "o_totalprice", mid_lo, mid_hi)
+            read_pruned_box_with_bound(
+                spark, mtable, [("o_totalprice", mid_lo, mid_hi)]
+            )[0]
             .select("o_orderkey", "o_custkey", "o_totalprice", "o_orderstatus")
             .collect(),
         )
@@ -102,8 +102,9 @@ def test_read_pruned_equals_full_filter(spark, mtable):
 
 def test_out_of_range_prunes_everything(spark, mtable):
     hi = _full(spark, mtable).agg(F.max("o_totalprice")).first()[0]
-    assert prune_files(spark, mtable, "o_totalprice", hi + 1e6, None) == []
-    df = read_pruned(spark, mtable, "o_totalprice", hi + 1e6, None)
+    box = [("o_totalprice", hi + 1e6, None)]
+    assert prune_files_box(spark, mtable, box) == []
+    df = read_pruned_box_with_bound(spark, mtable, box)[0]
     assert df.count() == 0
     # empty result still carries the table schema
     assert "o_custkey" in df.columns
@@ -118,14 +119,14 @@ def test_post_build_appends_are_never_skipped(spark, mtable):
         "o_orderkey long, o_custkey long, o_totalprice double, o_orderstatus string",
     )
     extra.coalesce(1).write.mode("append").parquet(mtable)
-    got = read_pruned(
-        spark, mtable, "o_totalprice", float(hi) + 1e6, None
-    ).collect()
+    got = read_pruned_box_with_bound(
+        spark, mtable, [("o_totalprice", float(hi) + 1e6, None)]
+    )[0].collect()
     assert [r["o_orderkey"] for r in got] == [10_000_001]
     # rebuild folds the new file in; pruning now skips it for old ranges
     build_manifest(spark, mtable)
     lo = _full(spark, mtable).agg(F.min("o_totalprice")).first()[0]
-    kept = prune_files(spark, mtable, "o_totalprice", lo, lo + 1.0)
+    kept = prune_files_box(spark, mtable, [("o_totalprice", lo, lo + 1.0)])
     assert all("10_000_001" not in f for f in kept)
     m = spark.read.parquet(os.path.join(mtable, MANIFEST_DIR))
     assert m.select("file").distinct().count() == N_FILES + 1
@@ -141,7 +142,7 @@ def test_unclustered_column_cannot_skip_mid_range(spark, mtable):
     base = _full(spark, mtable).filter(F.col("o_orderkey") < 10_000_001)
     lo, hi = base.agg(F.min("o_orderkey"), F.max("o_orderkey")).first()
     mid = (lo + hi) / 2.0
-    kept = prune_files(spark, mtable, "o_orderkey", mid, mid)
+    kept = prune_files_box(spark, mtable, [("o_orderkey", mid, mid)])
     assert len(kept) == N_FILES  # all originals kept, appended row skipped
 
 
@@ -174,11 +175,12 @@ def test_compaction_refreshes_existing_manifest(spark, sf_dir, tmp_path):
 
     resolved = read_table(spark, tx)
     hi = resolved.agg(F.max("tx_fee")).first()[0]
-    assert prune_files(spark, tx, "tx_fee", hi + 1, None) == []
+    assert prune_files_box(spark, tx, [("tx_fee", hi + 1, None)]) == []
     # ... and an in-range pruned read over the generation-managed table
     # equals the resolved filter (partition column included)
     got = sorted(
-        map(tuple, read_pruned(spark, tx, "tx_fee", None, hi - 1)
+        map(tuple, read_pruned_box_with_bound(
+            spark, tx, [("tx_fee", None, hi - 1)])[0]
             .select("tx_fee", "slot_group").collect())
     )
     expect = sorted(
@@ -212,12 +214,12 @@ def test_update_manifest_is_incremental(spark, sf_dir, tmp_path):
     assert m.select("file").distinct().count() == 5
     # the freshly covered file is now skippable for old ranges ...
     lo = src.agg(F.min("o_totalprice")).first()[0]
-    kept = prune_files(spark, table, "o_totalprice", lo, lo + 1.0)
+    kept = prune_files_box(spark, table, [("o_totalprice", lo, lo + 1.0)])
     assert len(kept) <= 2 and all("part-" in f for f in kept)
     # ... and found for its own range
-    got = read_pruned(
-        spark, table, "o_totalprice", float(hi) + 1e6, None
-    ).collect()
+    got = read_pruned_box_with_bound(
+        spark, table, [("o_totalprice", float(hi) + 1e6, None)]
+    )[0].collect()
     assert [r["o_orderkey"] for r in got] == [20_000_001]
 
 
@@ -236,7 +238,9 @@ def test_read_pruned_preserves_partition_columns(spark, sf_dir, tmp_path):
     build_manifest(spark, table)
     lo, hi = src.agg(F.min("o_totalprice"), F.max("o_totalprice")).first()
     mid_lo, mid_hi = lo + (hi - lo) * 0.2, lo + (hi - lo) * 0.5
-    got = read_pruned(spark, table, "o_totalprice", mid_lo, mid_hi)
+    got = read_pruned_box_with_bound(
+        spark, table, [("o_totalprice", mid_lo, mid_hi)]
+    )[0]
     assert "bucket3" in got.columns
     expect = sorted(
         map(
@@ -263,10 +267,6 @@ def test_box_pruning_on_zordered_layout(spark, sf_dir, tmp_path):
     """The z-order + manifest synergy end-to-end: a 2-D box over a
     z-ordered table skips MORE files than either dimension alone, and
     the pruned read equals the full-scan box filter exactly."""
-    from cardano_analytics_duckdb_spark.lake.manifest import (
-        prune_files_box,
-        read_pruned_box,
-    )
     from cardano_analytics_duckdb_spark.lake.zorder import zorder_write
 
     table = str(tmp_path / "lineitem_zm")
@@ -283,8 +283,8 @@ def test_box_pruning_on_zordered_layout(spark, sf_dir, tmp_path):
         ("l_partkey", float(lo_p), float(lo_p + (hi_p - lo_p) // 4)),
     ]
     kept_box = prune_files_box(spark, table, box)
-    kept_o = prune_files(spark, table, *box[0])
-    kept_p = prune_files(spark, table, *box[1])
+    kept_o = prune_files_box(spark, table, [box[0]])
+    kept_p = prune_files_box(spark, table, [box[1]])
     assert set(kept_box) == set(kept_o) & set(kept_p)
     assert 0 < len(kept_box) < 16
     assert len(kept_box) <= min(len(kept_o), len(kept_p))
@@ -302,7 +302,9 @@ def test_box_pruning_on_zordered_layout(spark, sf_dir, tmp_path):
             .collect(),
         )
     )
-    actual = sorted(map(tuple, read_pruned_box(spark, table, box).collect()))
+    actual = sorted(
+        map(tuple, read_pruned_box_with_bound(spark, table, box)[0].collect())
+    )
     assert actual == expect and len(actual) > 0
 
 
@@ -315,7 +317,7 @@ def test_high_fee_predicate_skips_files_on_fee_clustered_layout(
     from cardano_analytics_duckdb_spark.lake.fixtures import (
         ensure_fixture_lake,
     )
-    from cardano_analytics_duckdb_spark.operators.cardano import _lake_range
+    from cardano_analytics_duckdb_spark.operators.cardano import _lake_pruned
 
     src_root = ensure_fixture_lake(spark)
     root = str(tmp_path / "fee_lake")
@@ -327,9 +329,10 @@ def test_high_fee_predicate_skips_files_on_fee_clustered_layout(
         tx.repartitionByRange(n_files, "tx_fee")
         .write.parquet(os.path.join(root, "tx"))
     )
-    # first _lake_range call builds the manifest lazily
-    pruned = _lake_range(spark, "tx", "tx_fee", lo=2_000_001, root=root)
-    kept = prune_files(spark, os.path.join(root, "tx"), "tx_fee", 2_000_001)
+    # first _lake_pruned call builds the manifest lazily
+    fee = [("tx_fee", 2_000_001, None)]
+    pruned, _ = _lake_pruned(spark, "tx", fee, root=root)
+    kept = prune_files_box(spark, os.path.join(root, "tx"), fee)
     assert 0 < len(kept) < n_files  # actual skipped IO, not keep-all
     got = sorted(
         (r["tx_fee"], bytes(r["tx_id"]).hex()) for r in pruned.collect()
@@ -414,7 +417,9 @@ def test_refresh_after_partial_compaction_is_o_delta(spark, sf_dir, tmp_path):
     lo = resolved.agg(F.min("tx_fee")).first()[0]
     got = sorted(
         r["tx_fee"]
-        for r in read_pruned(spark, tx, "tx_fee", None, lo + 100).collect()
+        for r in read_pruned_box_with_bound(
+            spark, tx, [("tx_fee", None, lo + 100)]
+        )[0].collect()
     )
     expect = sorted(
         r["tx_fee"]
@@ -433,7 +438,7 @@ def test_refresh_after_partial_compaction_is_o_delta(spark, sf_dir, tmp_path):
 
 
 def test_lazy_manifest_build_is_lock_protected(spark, tmp_path):
-    """r8 verdict #3: the lazy first-use build in _lake_range runs under
+    """r8 verdict #3: the lazy first-use build in _lake_pruned runs under
     the lake's _maintenance.lock with an in-lock double-check.  While
     another maintenance job holds the lock, the read query writes NOTHING
     and falls back to the plain exact scan; once the lock frees, the next
@@ -442,7 +447,7 @@ def test_lazy_manifest_build_is_lock_protected(spark, tmp_path):
         ensure_fixture_lake,
     )
     from cardano_analytics_duckdb_spark.lake.lock import LOCK_NAME
-    from cardano_analytics_duckdb_spark.operators.cardano import _lake_range
+    from cardano_analytics_duckdb_spark.operators.cardano import _lake_pruned
 
     src_root = ensure_fixture_lake(spark)
     root = str(tmp_path / "locked_lake")
@@ -459,9 +464,9 @@ def test_lazy_manifest_build_is_lock_protected(spark, tmp_path):
         f.write('{"owner": "other-session-compaction"}')
     got = sorted(
         (r["tx_fee"], bytes(r["tx_id"]).hex())
-        for r in _lake_range(
-            spark, "tx", "tx_fee", lo=2_000_001, root=root
-        ).collect()
+        for r in _lake_pruned(
+            spark, "tx", [("tx_fee", 2_000_001, None)], root=root
+        )[0].collect()
     )
     assert got == expect and len(got) > 0
     # no write side-effect happened under a held lock
@@ -471,9 +476,9 @@ def test_lazy_manifest_build_is_lock_protected(spark, tmp_path):
     os.remove(os.path.join(root, LOCK_NAME))
     got2 = sorted(
         (r["tx_fee"], bytes(r["tx_id"]).hex())
-        for r in _lake_range(
-            spark, "tx", "tx_fee", lo=2_000_001, root=root
-        ).collect()
+        for r in _lake_pruned(
+            spark, "tx", [("tx_fee", 2_000_001, None)], root=root
+        )[0].collect()
     )
     assert got2 == expect
     assert os.path.isdir(os.path.join(root, "tx", MANIFEST_DIR))
@@ -484,18 +489,18 @@ def test_lazy_manifest_build_is_lock_protected(spark, tmp_path):
 def test_lazy_manifest_double_check_skips_rebuild(spark, tmp_path):
     """Second session entering the lock after a first session's build must
     NOT rebuild (overwrite-mode churn): the manifest files are bit-stable
-    across a repeat _lake_range call."""
+    across a repeat _lake_pruned call."""
     from cardano_analytics_duckdb_spark.lake.fixtures import (
         ensure_fixture_lake,
     )
-    from cardano_analytics_duckdb_spark.operators.cardano import _lake_range
+    from cardano_analytics_duckdb_spark.operators.cardano import _lake_pruned
 
     src_root = ensure_fixture_lake(spark)
     root = str(tmp_path / "dc_lake")
     tx = spark.read.parquet(f"{src_root}/tx")
     tx.repartitionByRange(4, "tx_fee").write.parquet(os.path.join(root, "tx"))
 
-    _lake_range(spark, "tx", "tx_fee", lo=2_000_001, root=root).count()
+    _lake_pruned(spark, "tx", [("tx_fee", 2_000_001, None)], root=root)[0].count()
     mdir = os.path.join(root, "tx", MANIFEST_DIR)
 
     def snapshot():
@@ -508,7 +513,7 @@ def test_lazy_manifest_double_check_skips_rebuild(spark, tmp_path):
 
     before = snapshot()
     assert before
-    _lake_range(spark, "tx", "tx_fee", lo=2_000_001, root=root).count()
+    _lake_pruned(spark, "tx", [("tx_fee", 2_000_001, None)], root=root)[0].count()
     assert snapshot() == before
 
 
@@ -539,9 +544,9 @@ def test_binary_policy_equality_skips_files_on_policy_clustered_layout(
             .parquet(os.path.join(root, "asset"))
         )
     build_manifest(spark, os.path.join(root, "asset"))
-    kept = prune_files(
-        spark, os.path.join(root, "asset"), "policy_id",
-        TOKEN_POLICY, TOKEN_POLICY,
+    kept = prune_files_box(
+        spark, os.path.join(root, "asset"),
+        [("policy_id", TOKEN_POLICY, TOKEN_POLICY)],
     )
     total = len(
         [f for f in os.listdir(os.path.join(root, "asset"))
@@ -550,10 +555,10 @@ def test_binary_policy_equality_skips_files_on_policy_clustered_layout(
     assert 0 < len(kept) < total
     got = sorted(
         (r["slot"], bytes(r["tx_id"]).hex(), r["output_index"])
-        for r in read_pruned(
-            spark, os.path.join(root, "asset"), "policy_id",
-            TOKEN_POLICY, TOKEN_POLICY,
-        ).collect()
+        for r in read_pruned_box_with_bound(
+            spark, os.path.join(root, "asset"),
+            [("policy_id", TOKEN_POLICY, TOKEN_POLICY)],
+        )[0].collect()
     )
     expect = sorted(
         (r["slot"], bytes(r["tx_id"]).hex(), r["output_index"])
@@ -574,12 +579,12 @@ def test_binary_policy_equality_skips_files_on_policy_clustered_layout(
     assert len(box_kept) <= len(kept)
     got_box = sorted(
         (r["slot"], bytes(r["tx_id"]).hex())
-        for r in read_pruned_box(
+        for r in read_pruned_box_with_bound(
             spark, os.path.join(root, "asset"),
             [("policy_id", TOKEN_POLICY, TOKEN_POLICY),
              ("asset_name", TOKEN_NAME, TOKEN_NAME),
              ("slot", 100_000, 199_999)],
-        ).collect()
+        )[0].collect()
     )
     expect_box = sorted(
         (r["slot"], bytes(r["tx_id"]).hex())
@@ -602,7 +607,7 @@ def test_concurrent_first_reads_race_one_build(spark, tmp_path):
     from cardano_analytics_duckdb_spark.lake.fixtures import (
         ensure_fixture_lake,
     )
-    from cardano_analytics_duckdb_spark.operators.cardano import _lake_range
+    from cardano_analytics_duckdb_spark.operators.cardano import _lake_pruned
 
     src_root = ensure_fixture_lake(spark)
     root = str(tmp_path / "race_lake")
@@ -620,9 +625,9 @@ def test_concurrent_first_reads_race_one_build(spark, tmp_path):
         try:
             results[i] = sorted(
                 (r["tx_fee"], bytes(r["tx_id"]).hex())
-                for r in _lake_range(
-                    spark, "tx", "tx_fee", lo=2_000_001, root=root
-                ).collect()
+                for r in _lake_pruned(
+                    spark, "tx", [("tx_fee", 2_000_001, None)], root=root
+                )[0].collect()
             )
         except Exception as ex:  # pragma: no cover - diagnostic path
             errors.append(ex)
@@ -641,12 +646,13 @@ def test_concurrent_first_reads_race_one_build(spark, tmp_path):
     # exists it must prune correctly right now
     mdir = os.path.join(root, "tx", MANIFEST_DIR)
     if os.path.isdir(mdir):
-        kept = prune_files(spark, os.path.join(root, "tx"), "tx_fee", 2_000_001)
+        fee = [("tx_fee", 2_000_001, None)]
+        kept = prune_files_box(spark, os.path.join(root, "tx"), fee)
         got = sorted(
             (r["tx_fee"], bytes(r["tx_id"]).hex())
-            for r in read_pruned(
-                spark, os.path.join(root, "tx"), "tx_fee", 2_000_001
-            ).collect()
+            for r in read_pruned_box_with_bound(
+                spark, os.path.join(root, "tx"), fee
+            )[0].collect()
         )
         assert got == expect and len(kept) >= 1
     # and no lock is left behind either way
@@ -660,10 +666,7 @@ def test_pruned_row_bound_is_exact_file_sum_and_loud_on_gaps(
     n_rows sum (an upper bound on matching rows, >= the true filtered
     count), shares the prune pass with the read, and degrades to None —
     never a lying number — when a surviving file has no manifest entry."""
-    from cardano_analytics_duckdb_spark.lake.manifest import (
-        pruned_row_bound,
-        read_pruned_box_with_bound,
-    )
+    from cardano_analytics_duckdb_spark.operators.cardano import _lake_pruned
 
     lo, hi = _full(spark, mtable).agg(
         F.min("o_totalprice"), F.max("o_totalprice")
@@ -680,9 +683,14 @@ def test_pruned_row_bound_is_exact_file_sum_and_loud_on_gaps(
     for f in kept:
         total += pq.ParquetFile(f.replace("file:", "")).metadata.num_rows
     assert bound == total
-    assert pruned_row_bound(spark, mtable, preds) == bound
-    # no effective predicates -> no box -> bound refuses (None)
-    assert pruned_row_bound(spark, mtable, [("o_totalprice", None, None)]) is None
+    # a repeat read reuses the cached snapshot and reports the same bound
+    assert read_pruned_box_with_bound(spark, mtable, preds)[1] == bound
+    # no effective predicates -> no box -> the cardano read's bound
+    # refuses (None) instead of reporting the whole table
+    assert _lake_pruned(
+        spark, os.path.basename(mtable), [("o_totalprice", None, None)],
+        root=os.path.dirname(mtable),
+    )[1] is None
 
     # an un-stat'd append inside the box makes the bound unknowable
     import shutil
@@ -693,3 +701,49 @@ def test_pruned_row_bound_is_exact_file_sum_and_loud_on_gaps(
     df2, bound2 = read_pruned_box_with_bound(spark, t2, preds)
     assert bound2 is None
     assert df2.count() >= true_n  # the read itself still keeps the append
+
+
+def test_unbounded_box_keeps_every_live_file(spark, tmp_path):
+    """An empty box, and a predicate with neither bound, filter nothing,
+    so they must skip nothing — not even a file whose column is all
+    null there (only a BOUNDED predicate rejects NULL)."""
+    t = str(tmp_path / "nulls")
+    schema = "k long, c long"
+    spark.createDataFrame([(1, 10), (2, 20)], schema).coalesce(1).write.parquet(t)
+    spark.createDataFrame(
+        [(3, None), (4, None), (5, None)], schema
+    ).coalesce(1).write.mode("append").parquet(t)
+    build_manifest(spark, t)
+    for preds in ([], [("c", None, None)]):
+        df, bound = read_pruned_box_with_bound(spark, t, preds)
+        assert sorted(r["k"] for r in df.collect()) == [1, 2, 3, 4, 5]
+        assert bound == 5
+        assert len(prune_files_box(spark, t, preds)) == 2
+    # a bounded predicate still skips the all-null file
+    assert len(prune_files_box(spark, t, [("c", 0, None)])) == 1
+
+
+def test_box_prune_lists_live_files_once(spark, mtable, monkeypatch):
+    """One pass per box: however many predicates, the live data files are
+    listed exactly once."""
+    from cardano_analytics_duckdb_spark.lake import manifest
+
+    calls = []
+    real = manifest._data_files
+
+    def counting(lfs, root):
+        calls.append(root)
+        return real(lfs, root)
+
+    monkeypatch.setattr(manifest, "_data_files", counting)
+    lo, hi = _full(spark, mtable).agg(
+        F.min("o_totalprice"), F.max("o_totalprice")
+    ).first()
+    box = [
+        ("o_totalprice", lo, (lo + hi) / 2),
+        ("o_orderkey", 1, None),
+        ("o_orderstatus", "F", "O"),
+    ]
+    kept = manifest.prune_files_box(spark, mtable, box)
+    assert kept
+    assert len(calls) == 1

@@ -200,14 +200,11 @@ def test_asof_join_is_single_shuffle(spark, sf_dir):
 
 
 def test_bucket_lake_reroutes_queries_shuffle_free(spark, sf_dir):
-    """The bucketed-lake registry (r11): registering bucketed copies makes
-    UNCHANGED query code read them through load_table — the join's
-    exchanges disappear from the physical plan and the result is
-    row-identical; unbucket_lake restores the plain scan."""
-    from cardano_analytics_duckdb_spark.lake.tables import (
-        bucket_lake,
-        unbucket_lake,
-    )
+    """Bucketed lake layouts (r11): declaring and building bucketed
+    copies makes UNCHANGED query code read them through load_table — the
+    join's exchanges disappear from the physical plan and the result is
+    row-identical; drop_layout restores the plain scan."""
+    from cardano_analytics_duckdb_spark.lake import layout
     from cardano_analytics_duckdb_spark.operators.relational import (
         late_ship_priority_counts,
     )
@@ -221,12 +218,13 @@ def test_bucket_lake_reroutes_queries_shuffle_free(spark, sf_dir):
 
     spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
     try:
-        bucket_lake(
+        layout.set_bucket_spec(
             spark,
             sf_dir,
-            {"lineitem": ("l_orderkey",), "orders": ("o_orderkey",)},
+            {"lineitem": [["l_orderkey"]], "orders": [["o_orderkey"]]},
             n_buckets=4,
         )
+        layout.bucketize(spark, sf_dir)
         plan = _plan(late_ship_priority_counts(spark, sf_dir))
         # both join inputs arrive pre-distributed: no exchange below the
         # join (the aggregate's exchange above it is legitimate)
@@ -241,7 +239,7 @@ def test_bucket_lake_reroutes_queries_shuffle_free(spark, sf_dir):
         assert rows == plain_rows
     finally:
         spark.conf.unset("spark.sql.autoBroadcastJoinThreshold")
-        unbucket_lake(spark, sf_dir)
+        layout.drop_layout(spark, sf_dir)
     assert "Exchange hashpartitioning(l_orderkey" in _plan(
         late_ship_priority_counts(spark, sf_dir)
     )

@@ -636,7 +636,7 @@ def test_silhouette_is_bounded_and_cluster_consistent(spark, sf_dir):
 def test_hex_bound_encoding_preserves_byte_order(a: bytes, b: bytes):
     """The binary manifest bounds' correctness hinges on one invariant:
     lowercase hex is ORDER-PRESERVING for bytes (fixed 2 chars per byte,
-    digits < lowercase letters in ASCII), so prune_files' string
+    digits < lowercase letters in ASCII), so prune_files_box' string
     comparison over min_bin/max_bin decides exactly what a bytewise
     comparison over the raw values would."""
     assert (a <= b) == (a.hex() <= b.hex())

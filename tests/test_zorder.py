@@ -134,7 +134,7 @@ def test_binary_column_zorder_enables_box_pruning(spark, tmp_path):
     from cardano_analytics_duckdb_spark.lake.manifest import (
         build_manifest,
         prune_files_box,
-        read_pruned_box,
+        read_pruned_box_with_bound,
     )
 
     # 4096 rows, 8 distinct 32-byte policies DIFFERING IN THEIR LEADING
@@ -168,7 +168,7 @@ def test_binary_column_zorder_enables_box_pruning(spark, tmp_path):
     assert 0 < len(kept) <= len(kept_policy)
     got = sorted(
         r["slot"]
-        for r in read_pruned_box(spark, path, box).collect()
+        for r in read_pruned_box_with_bound(spark, path, box)[0].collect()
     )
     expect = sorted(
         r["slot"]
