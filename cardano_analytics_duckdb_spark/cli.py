@@ -157,8 +157,8 @@ def _cmd_extract(args: argparse.Namespace, spark: SparkSession) -> int:
         blocks = iter(fixture_blocks())
     else:
         # stream the JSON-lines file lazily — the driver never holds the
-        # full chain in memory (the executor-side path is read_block_files;
-        # this replay path mirrors the reference's websocket loop shape)
+        # full chain in memory (this replay path mirrors the reference's
+        # websocket loop shape, which ingest_blocks micro-batches)
         def _gen(path: str):
             with open(path) as f:
                 for line in f:

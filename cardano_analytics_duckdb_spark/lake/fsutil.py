@@ -1,7 +1,8 @@
 """Scheme-agnostic file operations via the JVM's Hadoop FileSystem.
 
-The streaming epoch protocol (``streaming/ingest.py``) needs to list,
-read, write, and delete small control files next to the lake it writes.
+Lake maintenance (generation pointers, manifests, the maintenance lock,
+materialization markers) needs to list, read, write, and delete small
+control files next to the lake.
 ``os``/``glob`` only work when the lake is on the driver's local disk; on
 a cluster the lake lives on HDFS/S3/GCS.  The JVM running the session
 already has the right ``FileSystem`` implementation for any path scheme,
@@ -9,7 +10,7 @@ so these helpers call it through the Py4J gateway — ``file://`` paths in
 tests exercise exactly the code a cluster runs against ``s3a://``.
 
 Only driver-side CONTROL-file traffic goes through here (marker files,
-file listings of a handful of partition dirs per epoch); bulk data always
+file listings of a handful of partition dirs per job); bulk data always
 moves through Spark jobs.
 """
 
@@ -48,7 +49,7 @@ class LakeFs:
     def list_files(self, d: str) -> list[str]:
         """Full URIs of the FILES directly under ``d`` ([] if absent);
         subdirectories (e.g. an in-flight ``_temporary``) are skipped —
-        the epoch snapshot tracks committed part-files only."""
+        callers track committed part-files only."""
         p = self._Path(d)
         if not self._fs.exists(p):
             return []

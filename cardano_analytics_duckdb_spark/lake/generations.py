@@ -799,6 +799,18 @@ def superseded_paths(
     return sorted(stale)
 
 
+def unpublished_generation_dirs(lfs: LakeFs, table_dir: str) -> list[str]:
+    """Generation dir names of a table that has NO pointer yet — what a
+    swap leaves when it dies after writing its generation but before its
+    first publish.  No committed state can reference them, and
+    :func:`superseded_paths` returns nothing for an unpointered table, so
+    ``lake/vacuum.py`` reclaims them.  (Once a pointer exists, every
+    non-current generation dir is :func:`superseded_paths`' to reclaim.)"""
+    if _pointer_versions(lfs, table_dir):
+        return []
+    return sorted(d for d in lfs.list_dirs(table_dir) if _GEN_RE.match(d))
+
+
 def vacuum_superseded(
     spark: SparkSession, table_dir: str, keep_savepoints: bool = True
 ) -> list[str]:

@@ -1,13 +1,14 @@
 """Enforced single-writer lock for lake maintenance windows.
 
-``rollback_lake`` and ``compact_lake`` rewrite table directories with a
-delete-and-rename swap that is only safe inside a single-writer window
-(documented in their docstrings).  Documentation alone does not stop a
-second operator — or a cron job racing a manual run — from starting a
-second rewrite over the same lake, and two concurrent swaps interleave
-into data loss.  This module upgrades the documented assumption to an
-enforced one: every maintenance job takes an exclusive lock file at the
-lake root before touching data.
+``rollback_lake`` and ``compact_lake`` rewrite table partitions with a
+generation swap (write a hidden ``_gen__*`` dir, then publish the
+table's pointer — ``lake/generations.py``) that is only safe inside a
+single-writer window (documented in their docstrings).  Documentation
+alone does not stop a second operator — or a cron job racing a manual
+run — from starting a second rewrite over the same lake, and two
+concurrent swaps interleave into data loss.  This module upgrades the
+documented assumption to an enforced one: every maintenance job takes an
+exclusive lock file at the lake root before touching data.
 
 Mechanism: ``FileSystem.create(path, overwrite=false)`` — an ATOMIC
 create-if-absent on HDFS and local filesystems (the loser gets
@@ -21,7 +22,7 @@ Crash behavior: a job that dies mid-rewrite — killed OR by exception —
 leaves the lock file behind, and every later acquisition fails with the
 recorded owner and timestamp.  This is deliberate: a failed rewrite
 leaves the lake in a state that needs a human look before the next
-rewrite (e.g. a ``_compacting__*`` tmp dir after a failed swap), so
+rewrite (e.g. an unpublished ``_gen__*`` dir after a failed swap), so
 releasing on exception would hand the next cron run a half-rewritten
 table it would then silently "fix" (an absent table dir reads as
 nothing-to-compact).  The lock is released only when the job completes.
@@ -70,9 +71,8 @@ def maintenance_lock(spark: SparkSession, root: str, owner: str = "maintenance")
         raise RuntimeError(
             f"lake {root} is locked by another maintenance job: {holder}. "
             "If that job crashed, inspect the lake for partial rewrites "
-            f"(run lake.vacuum.find_orphans, or look for '_compacting__*'/"
-            f"'_rollback__*' tmp dirs), then delete "
-            f"{path} to break the lock."
+            "(run lake.vacuum.find_orphans, or look for unpublished "
+            f"'_gen__*' dirs), then delete {path} to break the lock."
         )
     yield
     lfs.delete(path)

@@ -18,7 +18,7 @@ What a savepoint does and does not promise:
   batch landing while the savepoint walks the tables may be captured in
   one table and not another (appends never take the lock — by design,
   supersession is per-file).  Savepoint during an ingest quiet period,
-  or after the ingester's epoch commit, for batch-exact cuts.
+  or after ``ingest_blocks`` returns, for batch-exact cuts.
 - Retention: ``vacuum_superseded`` defaults to ``keep_savepoints=True``
   — snapshot versions a live savepoint pins keep their sidecar and
   every data path it references, so a savepoint taken for

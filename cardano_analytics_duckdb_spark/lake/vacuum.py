@@ -1,22 +1,22 @@
 """Orphan inspection and cleanup after crashed maintenance jobs.
 
 The maintenance lock (``lake/lock.py``) deliberately stays held when a
-rewrite dies mid-flight, and the swap pattern both rewrite jobs use
-(write ``_compacting__<dir>`` / ``_rollback__<dir>``, delete, rename)
-leaves those tmp directories behind on a crash.  The "_" prefix keeps
-Hadoop readers from scanning leftovers (a visible orphan with junk part
-files would fail every table read), but they still hold disk.  This module is the
-"inspect then clean" half of that contract: :func:`find_orphans` reports
-everything a crashed job can leave (tmp rewrite dirs, truncated
-``.tmp`` control files under ``_epochs``), and :func:`vacuum_lake`
-removes them — under the maintenance lock, so it can never race a LIVE
-job whose tmp dir is about to be renamed into place, and never runs
-while a crashed job's lock is still held un-inspected.
+rewrite dies mid-flight.  Every rewrite job (compaction, rollback,
+upsert) writes a hidden ``_gen__*`` generation dir, then publishes the
+table's pointer (``lake/generations.py``).  A job that dies between the
+two on a table with no pointer yet leaves a generation dir that nothing
+references and that :func:`generations.superseded_paths` never lists.
+The "_" prefix keeps Hadoop readers from scanning it (a visible orphan
+with junk part files would fail every table read), but it still holds
+disk.  This module is the "inspect then clean" half of that contract:
+:func:`find_orphans` reports those dirs, and :func:`vacuum_lake` removes
+them — under the maintenance lock, so it can never race a LIVE job whose
+generation is about to be published, and never runs while a crashed
+job's lock is still held un-inspected.
 
-Orphans are safe to delete by construction: a ``_compacting__*`` /
-``_rollback__*`` dir is only ever referenced by the rename that would
-have consumed it, and a ``.tmp`` control file is below the atomic-publish
-rename in ``LakeFs.write_text`` — no committed state points at either.
+Orphans are safe to delete by construction: a table without a pointer
+resolves through the plain hive layout, so no reader or committed state
+points at any of its generation dirs.
 """
 
 from __future__ import annotations
@@ -26,30 +26,24 @@ import os
 from pyspark.sql import SparkSession
 
 from .fsutil import LakeFs
+from .generations import unpublished_generation_dirs, vacuum_superseded
 from .lock import maintenance_lock
 
-_TMP_DIR_PREFIXES = ("_compacting__", "_rollback__")
+
+def _table_dirs(lfs: LakeFs, root: str) -> list[str]:
+    return [d for d in lfs.list_dirs(root) if not d.startswith(("_", "."))]
 
 
 def find_orphans(spark: SparkSession, root: str) -> dict[str, list[str]]:
-    """{"tmp_dirs": [...], "tmp_files": [...]} of crash leftovers under
-    ``root`` (paths relative to the lake root).  Read-only."""
+    """{"tmp_dirs": [...]} of crash leftovers under ``root`` (paths
+    relative to the lake root).  Read-only."""
     lfs = LakeFs(spark, root)
-    tmp_dirs: list[str] = []
-    tmp_files: list[str] = []
-    for d in lfs.list_dirs(root):
-        if d.startswith(_TMP_DIR_PREFIXES):
-            tmp_dirs.append(d)
-            continue
-        if d.startswith(("_checkpoint", "_epochs")):
-            continue
-        for sub in lfs.list_dirs(os.path.join(root, d)):
-            if sub.startswith(_TMP_DIR_PREFIXES):
-                tmp_dirs.append(f"{d}/{sub}")
-    for f in lfs.list_files(os.path.join(root, "_epochs")):
-        if f.endswith(".tmp"):
-            tmp_files.append(f"_epochs/{f.rsplit('/', 1)[-1]}")
-    return {"tmp_dirs": sorted(tmp_dirs), "tmp_files": sorted(tmp_files)}
+    tmp_dirs = [
+        f"{t}/{d}"
+        for t in _table_dirs(lfs, root)
+        for d in unpublished_generation_dirs(lfs, os.path.join(root, t))
+    ]
+    return {"tmp_dirs": sorted(tmp_dirs)}
 
 
 def vacuum_lake(spark: SparkSession, root: str) -> dict[str, list[str]]:
@@ -58,24 +52,18 @@ def vacuum_lake(spark: SparkSession, root: str) -> dict[str, list[str]]:
     (``lake/generations.py``); returns what was removed.  Holds the
     maintenance lock for the scan AND the deletes — a held lock (live
     job, or crashed job not yet inspected) makes this refuse rather than
-    delete a tmp dir that is about to be renamed into place.  Like any
+    delete a generation dir that is about to be published.  Like any
     generation vacuum, run when no reader is mid-query over the OLD
     snapshot."""
-    from .generations import vacuum_superseded
-
     with maintenance_lock(spark, root, owner="vacuum_lake"):
         orphans = find_orphans(spark, root)
         lfs = LakeFs(spark, root)
         for d in orphans["tmp_dirs"]:
             lfs.delete_recursive(os.path.join(root, d))
-        for f in orphans["tmp_files"]:
-            lfs.delete(os.path.join(root, f))
         superseded: list[str] = []
-        for d in lfs.list_dirs(root):
-            if d.startswith(("_", ".")):
-                continue
+        for t in _table_dirs(lfs, root):
             superseded.extend(
-                vacuum_superseded(spark, os.path.join(root, d))
+                vacuum_superseded(spark, os.path.join(root, t))
             )
         orphans["superseded"] = sorted(superseded)
     return orphans

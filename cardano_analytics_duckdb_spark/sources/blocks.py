@@ -146,11 +146,6 @@ def blocks_to_dataframe(
     return spark.createDataFrame(list(blocks), schema=BLOCK_SCHEMA)
 
 
-def read_block_files(spark: SparkSession, path: str) -> DataFrame:
-    """Replay blocks from JSON-lines files with the same schema."""
-    return spark.read.schema(BLOCK_SCHEMA).json(path)
-
-
 # Live chain-sync adapter: sources/chainsync.py (ChainSyncClient /
 # read_chain_sync) — findIntersection + pipelined nextBlock over a stdlib
 # RFC 6455 websocket, yielding this same dict shape.  CI exercises it

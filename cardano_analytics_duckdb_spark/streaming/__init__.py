@@ -2,7 +2,6 @@ from .ingest import (
     compact_lake,
     extract_tables,
     ingest_blocks,
-    ingest_blocks_streaming,
     rollback_lake,
 )
 from .materialize import (
@@ -17,7 +16,6 @@ __all__ = [
     "deregister_materialization",
     "extract_tables",
     "ingest_blocks",
-    "ingest_blocks_streaming",
     "rebuild_lake_materialization",
     "registered_materializations",
     "unfolded_source_files",

@@ -20,17 +20,18 @@ Spark-first:
   file per slot_group partition (≙ compress_final_files,
   ogmios_parquet.py:523-571; zstd instead of brotli — SURVEY R5).
 
+``ingest_blocks`` is the only way blocks enter the lake: the CLI
+``extract`` verb and the chain benchmark both drive it.
+
 Scale notes: extraction is narrow (block → rows, no shuffle); the append
-write shuffles nothing; compaction's ``repartition("slot_group")`` is one
-shuffle keyed by the partition column, yielding exactly one file per
-partition dir.  At 100 TB the same plan holds — micro-batches map to
-Structured Streaming ``foreachBatch`` epochs and compaction to a
+write shuffles nothing; compaction writes one file per rewritten
+partition, each in its own directory-scoped job.  At 100 TB the same
+plan holds — a micro-batch is one flush and compaction is a
 per-partition maintenance job.
 """
 
 from __future__ import annotations
 
-import json
 import os
 from collections.abc import Iterable, Iterator
 
@@ -442,7 +443,7 @@ def ingest_blocks(
     appending).  ``True`` upgrades to live reconciliation: on a backward
     event the blocks buffered so far flush, then :func:`rollback_lake`
     drops every row above the rollback point — partition-scoped, under
-    the maintenance lock, epoch-guarded, and reader-atomic via the
+    the maintenance lock, and reader-atomic via the
     generation-pointer swap (``lake/generations.py``).  Rows appended
     after the event (the node re-sending the adopted fork) land normally,
     so the lake converges to the honest chain.
@@ -534,155 +535,6 @@ def ingest_blocks(
     return stats
 
 
-def ingest_blocks_streaming(
-    spark: SparkSession,
-    block_json_dir: str,
-    dest: str,
-    slot_group_size: int = SLOT_GROUP_SIZE,
-) -> None:
-    """Structured Streaming ingestion: JSON-lines block files → 13 sinks.
-
-    The `foreachBatch` shape of SURVEY §3.1 — each micro-batch fans out to
-    every lake table with partitioned appends; the extraction DataFrame
-    graph is identical to the batch path (``extract_tables``), which is the
-    point: one extraction definition, two execution modes.  On a cluster
-    this runs with ``Trigger.ProcessingTime`` against a live file/Kafka
-    feed; ``availableNow`` drains bounded replays for tests.
-
-    Appends are EXACTLY-ONCE under epoch replay via the per-epoch
-    snapshot/done-marker protocol in ``write_epoch`` (foreachBatch is
-    at-least-once on its own; a replayed epoch first rolls back the
-    previous attempt's partial files, and a committed epoch is skipped) —
-    crash-replay tested in ``tests/test_ingest.py``.
-
-    ``dest/_checkpoint`` and ``dest/_epochs`` live and die TOGETHER:
-    epoch ids are checkpoint-relative, so deleting the checkpoint while
-    keeping ``_epochs`` restarts numbering at 0 and the stale done-markers
-    make ``write_epoch`` silently skip every re-delivered epoch while the
-    new checkpoint still advances — data loss.  To reset a lake, delete
-    both (and the table dirs); to resume, keep both.
-    """
-    from pyspark.sql import types as T
-
-    from ..sources.blocks import BLOCK_SCHEMA
-
-    # PERMISSIVE parse with an explicit corrupt-record capture: a malformed
-    # line must never kill the stream (one poison message would otherwise
-    # wedge ingestion until a human edits the feed) — it lands in
-    # ``dest/_quarantine`` with its epoch for replay after repair.
-    schema = T.StructType(
-        BLOCK_SCHEMA.fields + [T.StructField("_corrupt_record", T.StringType())]
-    )
-    stream = (
-        spark.readStream.schema(schema)
-        .option("mode", "PERMISSIVE")
-        .option("columnNameOfCorruptRecord", "_corrupt_record")
-        .json(block_json_dir)
-    )
-
-    # Exactly-once over plain-parquet APPENDS, despite foreachBatch's
-    # at-least-once replay: a per-epoch transaction protocol.
-    #   1. done-marker exists          -> whole epoch already committed, skip
-    #   2. snapshot exists (no done)   -> a previous attempt crashed mid-
-    #      append; delete every file in the touched partition dirs that is
-    #      NOT in the pre-append snapshot (those are the partial writes),
-    #      then append cleanly
-    #   3. fresh epoch                 -> record the touched partition dirs'
-    #      current file listing, append, write the done-marker last
-    # Touched dirs are derived from the batch content, which replays with
-    # identical source offsets, so the snapshot always covers the retry's
-    # writes.  Single-writer assumption (one ingestion stream per lake —
-    # the same assumption every non-transactional parquet writer makes).
-    # All control-file IO goes through the JVM's Hadoop FileSystem
-    # (lake/fsutil.py), so the protocol is path-scheme-agnostic: the same
-    # code runs against file:// here and hdfs:///s3a:// on a cluster.
-    from ..lake.fsutil import LakeFs
-
-    lfs = LakeFs(spark, dest)
-    epochs_dir = os.path.join(dest, "_epochs")
-
-    def _rollback_partial(snapshot: dict[str, list[str]]) -> None:
-        for part_dir, known in snapshot.items():
-            for f in lfs.list_files(part_dir):
-                if f not in known:
-                    lfs.delete(f)
-
-    def write_epoch(batch_df: DataFrame, epoch_id: int) -> None:
-        done_marker = os.path.join(epochs_dir, f"{epoch_id}.done")
-        snap_path = os.path.join(epochs_dir, f"{epoch_id}.snapshot.json")
-        if lfs.exists(done_marker):
-            return
-        lfs.mkdirs(epochs_dir)
-
-        # One JSON parse per epoch, not one per downstream action: the
-        # corrupt probe, the slot_group collect, and the 13 table appends
-        # all act on this micro-batch (same rationale + measurement as
-        # the batch path's _flush cache).
-        batch_df = batch_df.persist()
-        try:
-            batch_df.count()
-            _write_epoch_body(batch_df, epoch_id, snap_path, done_marker)
-        finally:
-            batch_df.unpersist()
-
-    def _write_epoch_body(
-        batch_df: DataFrame, epoch_id: int, snap_path: str, done_marker: str
-    ) -> None:
-        bad = batch_df.filter(F.col("_corrupt_record").isNotNull())
-        if not bad.isEmpty():
-            # Partitioned by epoch + dynamic overwrite: replay REPLACES the
-            # epoch=N partition instead of appending corrupt lines twice
-            # (idempotent on its own, independent of the snapshot protocol).
-            (
-                bad.select(
-                    F.col("_corrupt_record").alias("raw"),
-                    F.lit(epoch_id).alias("epoch"),
-                )
-                .write.mode("overwrite")
-                .option("partitionOverwriteMode", "dynamic")
-                .partitionBy("epoch")
-                .parquet(os.path.join(dest, "_quarantine"))
-            )
-        good = batch_df.filter(F.col("_corrupt_record").isNull()).drop(
-            "_corrupt_record"
-        )
-        groups = [
-            r[0]
-            for r in good.select(
-                (F.floor(F.col("slot") / slot_group_size)
-                 * slot_group_size).cast("long").alias("g")
-            )
-            .distinct()
-            .collect()
-        ]
-        touched = [
-            os.path.join(dest, name, f"slot_group={g}")
-            for name in LAKE_TABLES
-            for g in groups
-        ]
-        # write_text publishes atomically (tmp + rename), so an existing
-        # snapshot is always complete: a crash DURING the snapshot write
-        # leaves only a tmp sibling and the replay takes a fresh listing
-        # (correct — the snapshot strictly precedes every append).
-        if lfs.exists(snap_path):
-            _rollback_partial(json.loads(lfs.read_text(snap_path)))
-        else:
-            snapshot = {d: lfs.list_files(d) for d in touched}
-            lfs.write_text(snap_path, json.dumps(snapshot))
-
-        # Parallel fan-out preserves the epoch protocol: the snapshot
-        # above covers every touched partition dir regardless of append
-        # ORDER, so a crash mid-fan-out rolls back identically to the
-        # sequential case; the done-marker still gates on all appends
-        # having completed (ThreadPoolExecutor joins before we get here).
-        _write_tables_parallel(extract_tables(good), dest, slot_group_size)
-        lfs.write_text(done_marker, "")
-
-    from .runner import run_available_now
-
-    run_available_now(stream, os.path.join(dest, "_checkpoint"), write_epoch)
-
-
 def rollback_lake(
     spark: SparkSession,
     root: str,
@@ -700,9 +552,7 @@ def rollback_lake(
     rewritten; earlier partitions are untouched.  A Delta/Iceberg sink would
     make this a transactional ``DELETE WHERE slot > to_slot``.
 
-    Returns rows dropped per table.  Like ``compact_lake``, refuses to
-    rewrite files while a streaming epoch is uncommitted (its pending
-    replay would roll back against stale file listings), and like it all
+    Returns rows dropped per table.  Like ``compact_lake``, all
     filesystem traffic goes through ``LakeFs`` so the same code runs on
     ``hdfs://``/``s3a://``.  READER-ATOMIC since r8: rewrites land in
     hidden generation dirs and commit per-table as one atomic pointer
@@ -727,13 +577,11 @@ def rollback_lake(
     removed via ``deregister_materialization``.
     """
     from ..lake.lock import maintenance_lock
+    from .materialize import require_no_materializations
 
     # Preflight OUTSIDE the lock: a refusal here touches nothing, so it
     # must not leave the keep-on-failure lock behind (the in-lock check
     # below still covers the preflight->lock race window).
-    _require_no_uncommitted_epochs(spark, root)
-    from .materialize import require_no_materializations
-
     tables = list(tables)
     for t in tables:
         require_no_materializations(
@@ -744,13 +592,12 @@ def rollback_lake(
     result: dict[str, int] = {}
     with maintenance_lock(spark, root, owner=f"rollback_lake(to_slot={to_slot})"):
         # Re-check the gates INSIDE the lock: _register_materialization
-        # takes no lock (and a streaming epoch can begin) in the
-        # preflight->lock window, so only an in-lock check makes the gates
-        # atomic with the rewrite.  A refusal here touched nothing, so it
-        # must exit the with-body NORMALLY (the lock's keep-on-raise
-        # forensics are for failed rewrites) and re-raise after release.
+        # takes no lock, so a marker can land in the preflight->lock
+        # window; only an in-lock check makes the gates atomic with the
+        # rewrite.  A refusal here touched nothing, so it must exit the
+        # with-body NORMALLY (the lock's keep-on-raise forensics are for
+        # failed rewrites) and re-raise after release.
         try:
-            _require_no_uncommitted_epochs(spark, root)
             for t in tables:
                 require_no_materializations(
                     spark, os.path.join(root, t), "rollback_lake",
@@ -778,7 +625,6 @@ def _rollback_lake_locked(
     from ..lake.generations import commit_swaps, vacuum_superseded
 
     lfs = LakeFs(spark, root)
-    _require_no_uncommitted_epochs(spark, root)
     dropped: dict[str, int] = {}
     boundary_group = (to_slot // SLOT_GROUP_SIZE) * SLOT_GROUP_SIZE
     for t in tables:
@@ -871,37 +717,6 @@ def _partition_sources(spark: SparkSession, lfs, table_dir: str):
         yield entry, group, source, live, st
 
 
-def _require_no_uncommitted_epochs(spark: SparkSession, root: str) -> list[str]:
-    """Maintenance-job guard: raise if any streaming epoch left a snapshot
-    without its done-marker (crash mid-epoch, replay pending — rewriting
-    table files now would make that replay's rollback delete them).
-    Returns the committed epochs' snapshot paths (safe to prune once the
-    caller rewrites files, as their listings go stale).
-
-    Listings go through ``LakeFs`` — the ``_epochs`` control files are
-    written via the Hadoop FS, so probing them with local ``glob`` would
-    find nothing on ``hdfs://``/``s3a://`` and fail open.
-    """
-    from ..lake.fsutil import LakeFs
-
-    lfs = LakeFs(spark, root)
-    epochs_dir = os.path.join(root, "_epochs")
-    names = {f.rsplit("/", 1)[-1] for f in lfs.list_files(epochs_dir)}
-    committed = []
-    for name in sorted(names):
-        if not name.endswith(".snapshot.json"):
-            continue
-        epoch = name.split(".")[0]
-        if f"{epoch}.done" not in names:
-            raise RuntimeError(
-                f"lake {root} has uncommitted streaming epoch {epoch}: "
-                "restart the ingestion stream to finish the epoch before "
-                "rewriting lake files"
-            )
-        committed.append(os.path.join(epochs_dir, name))
-    return committed
-
-
 def compact_lake(
     spark: SparkSession,
     root: str,
@@ -918,12 +733,6 @@ def compact_lake(
     each fragmented partition is rewritten in its own directory-scoped
     job, so repeated compaction of a growing lake costs ∝ the freshly
     appended partitions, not the table.
-
-    Refuses to run over a lake with an UNCOMMITTED streaming epoch (a
-    snapshot without its done-marker): the pending replay would roll back
-    against pre-compaction file listings and delete compacted files.
-    Run compaction only between committed epochs; committed epochs'
-    bookkeeping is pruned here since their snapshots go stale.
 
     All filesystem traffic goes through ``LakeFs`` (scheme-agnostic).
     READER-ATOMIC since r8: rewrites land in hidden generation dirs and
@@ -959,7 +768,6 @@ def compact_lake(
     from .materialize import require_folded_before_compaction
 
     # Preflight outside the lock — see rollback_lake
-    _require_no_uncommitted_epochs(spark, root)
     tables = list(tables)
     for t in tables:
         require_folded_before_compaction(
@@ -968,11 +776,9 @@ def compact_lake(
     gate_err: RuntimeError | None = None
     with maintenance_lock(spark, root, owner="compact_lake"):
         # In-lock re-check with refusal-releases-the-lock semantics, same
-        # as rollback_lake: an epoch that began (or a fold that fell
-        # behind) in the preflight->lock window refuses cleanly instead
-        # of wedging the lake lock.
+        # as rollback_lake: a fold that fell behind in the preflight->lock
+        # window refuses cleanly instead of wedging the lake lock.
         try:
-            _require_no_uncommitted_epochs(spark, root)
             for t in tables:
                 require_folded_before_compaction(
                     spark,
@@ -1004,8 +810,6 @@ def _compact_lake_locked(
     )
 
     lfs = LakeFs(spark, root)
-    for snap in _require_no_uncommitted_epochs(spark, root):
-        lfs.delete(snap)
     # INCREMENTAL: only partitions fragmented past ``min_files`` are
     # rewritten, each scoped to its own directory — cost ∝ fragmented
     # partitions, never table size.  Steady state (append a few chunks to

@@ -533,9 +533,6 @@ def rebuild_fees_by_slot_group(
     """Batch rebuild of the fees-by-slot-group maintained aggregate —
     the recovery move after ``rollback_lake`` / ``upsert_partitioned``
     ran with ``allow_stale_materializations=True``."""
-    from .ingest import _require_no_uncommitted_epochs
-
-    _require_no_uncommitted_epochs(spark, lake_dir)
     return rebuild_lake_materialization(
         spark, lake_dir, "tx", dest, **_fees_spec(n_buckets)
     )
@@ -553,15 +550,7 @@ def materialize_fees_by_slot_group(
     already-ingested table — ``ingest_blocks`` must have run at least
     once), so ingest-side schema evolution flows through without a second
     schema definition here.
-
-    Runs only BETWEEN committed ingest epochs (guarded): the streaming
-    ingest replay protocol deletes and re-appends an uncommitted epoch's
-    partial files, so a fold racing that replay would double-count those
-    rows or hit FileNotFound mid-read.
     """
-    from .ingest import _require_no_uncommitted_epochs
-
-    _require_no_uncommitted_epochs(spark, lake_dir)
     from ..lake.generations import read_table
 
     tx_path = os.path.join(lake_dir, "tx")

@@ -1,11 +1,7 @@
-"""Shared scaffolding for availableNow foreachBatch streams.
-
-Three operators (the materialized aggregates, the exact-dedup stream, and
-the near-dup suppression stream) run the same drain-everything loop:
-file-source readStream -> foreachBatch -> availableNow trigger ->
-processAllAvailable -> stop.  One definition here so a future fix to the
-runner (error handling, trigger choice, checkpoint hygiene) cannot
-silently diverge across them.
+"""The availableNow foreachBatch loop behind every maintained aggregate
+(``streaming/materialize.py::materialize_aggregate``): file-source
+readStream -> foreachBatch -> availableNow trigger -> processAllAvailable
+-> stop.
 """
 
 from __future__ import annotations
@@ -13,8 +9,6 @@ from __future__ import annotations
 from collections.abc import Callable
 
 from pyspark.sql import DataFrame
-
-from ..lake.fsutil import LakeFs
 
 
 def run_available_now(
@@ -33,10 +27,3 @@ def run_available_now(
         q.processAllAvailable()
     finally:
         q.stop()
-
-
-def has_epoch_partitions(lfs: LakeFs, path: str) -> bool:
-    """Merge-vs-bootstrap probe for epoch-partitioned state tables,
-    through the Hadoop FS (a driver-local glob sees [] on hdfs://s3a://
-    and would bootstrap over existing state)."""
-    return any(d.startswith("epoch=") for d in lfs.list_dirs(path))

@@ -245,19 +245,22 @@ def test_vacuum_cli_reports_then_applies(spark, tmp_path, capsys):
     dest = str(tmp_path / "lake")
     assert main(["extract", "--dest", dest, "--batch-size", "3"], spark) == 0
     capsys.readouterr()
-    orphan = os.path.join(dest, "_compacting__tx")
+    # a compaction that died before its first pointer publish
+    orphan = os.path.join(dest, "tx", "_gen__slot_group_0__g00001")
     os.makedirs(orphan)
+    open(os.path.join(orphan, "part-0.parquet"), "w").write("junk")
 
     assert main(["vacuum", "--lake", dest], spark) == 0
     out = json.loads(capsys.readouterr().out.strip().splitlines()[-1])
     assert out == {
-        "applied": False, "tmp_dirs": ["_compacting__tx"], "tmp_files": [],
+        "applied": False, "tmp_dirs": ["tx/_gen__slot_group_0__g00001"],
     }
     assert os.path.isdir(orphan)  # report-only by default
 
     assert main(["vacuum", "--lake", dest, "--apply"], spark) == 0
     out = json.loads(capsys.readouterr().out.strip().splitlines()[-1])
-    assert out["applied"] is True and out["tmp_dirs"] == ["_compacting__tx"]
+    assert out["applied"] is True
+    assert out["tmp_dirs"] == ["tx/_gen__slot_group_0__g00001"]
     assert not os.path.exists(orphan)
 
 

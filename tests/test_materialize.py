@@ -183,71 +183,29 @@ def test_legacy_unscoped_checkpoint_is_refused(spark, split_events, tmp_path):
     assert _as_map(spark, table) == before
 
 
-def test_materialize_refuses_uncommitted_ingest_epoch(spark, tmp_path):
-    """The ingest replay protocol deletes and re-appends an uncommitted
-    epoch's partial files; a fold racing that replay double-counts (or
-    hits FileNotFound).  materialize_fees_by_slot_group must refuse while
-    the lake has a snapshot without its done-marker."""
-    import json
-
-    from cardano_analytics_duckdb_spark.lake.fixtures import fixture_blocks
-    from cardano_analytics_duckdb_spark.streaming.ingest import (
-        ingest_blocks_streaming,
-    )
-    from cardano_analytics_duckdb_spark.streaming.materialize import (
-        materialize_fees_by_slot_group,
-    )
-
-    src = tmp_path / "blocks_json"
-    src.mkdir()
-    with open(src / "blocks_0.jsonl", "w") as f:
-        for b in fixture_blocks()[:3]:
-            f.write(json.dumps(b) + "\n")
-    lake = str(tmp_path / "lake_guard")
-    ingest_blocks_streaming(spark, str(src), lake)
-    done = glob.glob(os.path.join(lake, "_epochs", "*.done"))[0]
-    os.remove(done)
-    with pytest.raises(RuntimeError, match="uncommitted streaming epoch"):
-        materialize_fees_by_slot_group(
-            spark, lake, str(tmp_path / "mv_guard"), n_buckets=4
-        )
-
-
 def test_fees_materializer_crash_replay_under_streaming_ingest(spark, tmp_path):
-    """End-to-end exactly-once: streaming ingest appends epochs to the
-    lake, the materializer folds between them, then crashes AFTER the
+    """End-to-end exactly-once: ``ingest_blocks`` appends to the lake in
+    two halves, the materializer folds after each, then crashes AFTER the
     fold's table commit but BEFORE its checkpoint commit (simulated by
     deleting the newest checkpoint commits/ entry — Structured Streaming
     then re-delivers that epoch with identical offsets).  The resumed
     materializer must skip the already-folded epoch via the per-bucket
     ``_applied_epoch`` guard, and the table must equal a batch recompute
     of the whole tx table."""
-    import json
-
     from cardano_analytics_duckdb_spark.lake.fixtures import fixture_blocks
-    from cardano_analytics_duckdb_spark.streaming.ingest import (
-        ingest_blocks_streaming,
-    )
+    from cardano_analytics_duckdb_spark.streaming.ingest import ingest_blocks
     from cardano_analytics_duckdb_spark.streaming.materialize import (
         materialize_fees_by_slot_group,
     )
 
-    src = tmp_path / "blocks_json"
-    src.mkdir()
     blocks = fixture_blocks()
     half = len(blocks) // 2
-    with open(src / "blocks_0.jsonl", "w") as f:
-        for b in blocks[:half]:
-            f.write(json.dumps(b) + "\n")
     lake = str(tmp_path / "lake_e2e")
     dest = str(tmp_path / "mv_e2e")
-    ingest_blocks_streaming(spark, str(src), lake)
+    ingest_blocks(spark, iter(blocks[:half]), lake, batch_size=25)
     table = materialize_fees_by_slot_group(spark, lake, dest, n_buckets=4)
 
-    with open(src / "blocks_1.jsonl", "w") as f:
-        for b in blocks[half:]:
-            f.write(json.dumps(b) + "\n")
-    ingest_blocks_streaming(spark, str(src), lake)
+    ingest_blocks(spark, iter(blocks[half:]), lake, batch_size=25)
     materialize_fees_by_slot_group(spark, lake, dest, n_buckets=4)
 
     # crash window: table committed, checkpoint commit lost
@@ -715,7 +673,7 @@ def test_compaction_refuses_inside_crash_window(spark, tmp_path):
 
 # -- seeded exactly-once walk --------------------------------------------------
 # The crash-replay tests above pick ONE interleaving each; this walk
-# explores a seeded random sequence of {ingest epoch, materialize, crash
+# explores a seeded random sequence of {ingest a chunk, materialize, crash
 # the newest checkpoint commit, compact the lake} and re-checks the
 # exactly-once invariant — maintained table == batch recompute of the
 # generation-resolved tx table — after EVERY materialize.  Compact is a
@@ -727,14 +685,13 @@ def test_compaction_refuses_inside_crash_window(spark, tmp_path):
 
 
 def _run_streaming_walk(spark, root: str, seed: int, n_steps: int):
-    import json
     import random
 
     from cardano_analytics_duckdb_spark.lake.fixtures import fixture_blocks
     from cardano_analytics_duckdb_spark.lake.generations import read_table
     from cardano_analytics_duckdb_spark.streaming.ingest import (
         compact_lake,
-        ingest_blocks_streaming,
+        ingest_blocks,
         rollback_lake,
     )
     from cardano_analytics_duckdb_spark.streaming.materialize import (
@@ -743,25 +700,18 @@ def _run_streaming_walk(spark, root: str, seed: int, n_steps: int):
     )
 
     rng = random.Random(seed)
-    src = os.path.join(root, "blocks_json")
-    os.makedirs(src)
     lake = os.path.join(root, "lake")
     dest = os.path.join(root, "mv_fees")
     blocks = fixture_blocks()
     cursor = 0
-    n_files = 0
 
     def feed(n):
-        nonlocal cursor, n_files
+        nonlocal cursor
         chunk = blocks[cursor:cursor + n]
         if not chunk:
             return False
-        with open(os.path.join(src, f"blocks_{n_files}.jsonl"), "w") as f:
-            for b in chunk:
-                f.write(json.dumps(b) + "\n")
         cursor += len(chunk)
-        n_files += 1
-        ingest_blocks_streaming(spark, src, lake)
+        ingest_blocks(spark, iter(chunk), lake, batch_size=len(chunk))
         return True
 
     def check(step, op, history):
@@ -814,7 +764,7 @@ def _run_streaming_walk(spark, root: str, seed: int, n_steps: int):
             os.remove(crc)
         return True
 
-    # bootstrap: first epoch + first fold, so compact always has an
+    # bootstrap: first ingest + first fold, so compact always has an
     # established checkpoint to preserve (the contract's precondition)
     feed(rng.randint(3, 8))
     check(-1, "bootstrap", [])
