@@ -180,13 +180,7 @@ def _cmd_extract(args: argparse.Namespace, spark: SparkSession) -> int:
         stop_slot=args.stop_slot,
     )
     if args.compact:
-        compact_lake(
-            spark,
-            args.dest,
-            allow_stale_materializations=getattr(
-                args, "allow_stale_materializations", False
-            ),
-        )
+        compact_lake(spark, args.dest)
         stats["compacted"] = 1
     print(json.dumps(stats))
     return 0
@@ -458,28 +452,6 @@ def _cmd_vacuum(args, spark: SparkSession) -> int:
     return 0
 
 
-def _cmd_rebuild(args, spark: SparkSession) -> int:
-    """Batch-rebuild the fees-by-slot-group maintained aggregate from the
-    generation-resolved lake truth and reset its stream — the recovery
-    the rollback/upsert gates prescribe after a run with
-    --allow-stale-materializations."""
-    from .lake.fsutil import LakeFs
-    from .streaming.materialize import rebuild_fees_by_slot_group
-
-    table = rebuild_fees_by_slot_group(
-        spark, args.lake, args.dest, n_buckets=args.buckets
-    )
-    # An empty lake (e.g. rolled back to origin) has no generation files,
-    # so the rebuild legitimately writes no table — report rows=0 instead
-    # of crashing on the missing path.
-    if LakeFs(spark, table).exists(table):
-        n = spark.read.parquet(table).count()
-    else:
-        n = 0
-    print(json.dumps({"rebuilt": table, "rows": n}))
-    return 0
-
-
 def _cmd_rollback(args, spark: SparkSession) -> int:
     """Reconcile a chain rollback after the fact: drop every lake row
     above the slot (the upgrade the reference's count-and-skip policy
@@ -493,7 +465,6 @@ def _cmd_rollback(args, spark: SparkSession) -> int:
         args.lake,
         args.to_slot,
         vacuum="defer" if args.defer_vacuum else "end",
-        allow_stale_materializations=args.allow_stale_materializations,
     )
     print(
         json.dumps(
@@ -575,12 +546,6 @@ def build_parser() -> argparse.ArgumentParser:
         "--compact",
         action="store_true",
         help="merge chunk files per partition after ingest",
-    )
-    ex.add_argument(
-        "--allow-stale-materializations",
-        action="store_true",
-        help="let --compact hide not-yet-folded appends from registered"
-        " maintained aggregates (recompute them in batch afterwards)",
     )
     ex.set_defaults(func=_cmd_extract)
 
@@ -758,18 +723,6 @@ def build_parser() -> argparse.ArgumentParser:
     )
     va.set_defaults(func=_cmd_vacuum)
 
-    ra = sub.add_parser(
-        "rebuild-aggregate",
-        help="batch-rebuild the fees-by-slot-group maintained aggregate"
-        " from the generation-resolved lake truth and reset its stream"
-        " (the recovery after rollback/upsert with"
-        " --allow-stale-materializations)",
-    )
-    ra.add_argument("--lake", required=True, help="lake root")
-    ra.add_argument("--dest", required=True, help="aggregate dest dir")
-    ra.add_argument("--buckets", type=int, default=16)
-    ra.set_defaults(func=_cmd_rebuild)
-
     rb = sub.add_parser(
         "rollback",
         help="drop every lake row above a slot (chain-rollback"
@@ -784,12 +737,6 @@ def build_parser() -> argparse.ArgumentParser:
         action="store_true",
         help="leave superseded files for in-flight readers; reclaim"
         " later with an explicit vacuum",
-    )
-    rb.add_argument(
-        "--allow-stale-materializations",
-        action="store_true",
-        help="proceed even when maintained aggregates are registered"
-        " over a table (you will recompute them in batch afterwards)",
     )
     rb.set_defaults(func=_cmd_rollback)
 

@@ -1,8 +1,8 @@
 """Scheme-agnostic file operations via the JVM's Hadoop FileSystem.
 
 Lake maintenance (generation pointers, manifests, the maintenance lock,
-materialization markers) needs to list, read, write, and delete small
-control files next to the lake.
+savepoints) needs to list, read, write, and delete small control files
+next to the lake.
 ``os``/``glob`` only work when the lake is on the driver's local disk; on
 a cluster the lake lives on HDFS/S3/GCS.  The JVM running the session
 already has the right ``FileSystem`` implementation for any path scheme,
@@ -62,8 +62,8 @@ class LakeFs:
     def list_dirs(self, d: str) -> list[str]:
         """Names (last path segment, not full URIs) of the DIRECTORIES
         directly under ``d`` ([] if absent) — partition-dir probes
-        (``bucket=*``, ``slot_group=*``) for maintenance and the
-        materializer's merge-vs-bootstrap decision."""
+        (``bucket=*``, ``slot_group=*``) and generation-dir listings for
+        maintenance."""
         p = self._Path(d)
         if not self._fs.exists(p):
             return []

@@ -1,6 +1,6 @@
 """Reader-atomic partition swaps via a generation pointer.
 
-Plain-parquet maintenance (compaction, rollback, upsert) rewrites a
+Plain-parquet maintenance (compaction, rollback) rewrites a
 partition directory in place; the delete+rename swap is NOT atomic for
 concurrent readers — a query racing the swap silently misses a partition.
 This module adds the minimal transactional layer that fixes it, the same
@@ -244,17 +244,18 @@ def commit_swaps(
 
 # Per-table read schemas, captured from the first (inferred) read and
 # keyed by (table, branch kind).  Lake tables are schema-stable by
-# contract (lake/schemas.py; appends and maintenance never alter
-# columns), so re-running footer inference on every execution is a pure
-# fixed-cost Spark job — measured as 4 of the flagship's 9 jobs per
-# execution (r10 verdict #4 job audit).  With the cache, repeat reads
-# pass the remembered schema and skip the job.  The branch kind matters:
-# a hive read infers the partition column from DIR NAMES (int), a
-# generation-file read carries it IN THE DATA (int64 — the swap writers
-# inject it), and the union reconciles them — so each kind caches the
-# schema its own inference produced.  ``invalidate_schema_cache`` exists
-# for tooling that rewrites a table IN PLACE with different columns
-# (nothing in this package does)."""
+# contract (``lake/fixtures.py::_ARROW_SCHEMAS``; appends and
+# maintenance never alter columns), so re-running footer inference on
+# every execution is a pure fixed-cost Spark job — measured as 4 of
+# the flagship's 9 jobs per execution (r10 verdict #4 job audit).
+# With the cache, repeat reads pass the remembered schema and skip the
+# job.  The branch kind matters: a hive read infers the partition
+# column from DIR NAMES (int), a generation-file read carries it IN
+# THE DATA (int64 — the swap writers inject it), and the union
+# reconciles them — so each kind caches the schema its own inference
+# produced.  ``invalidate_schema_cache`` exists for tooling that
+# rewrites a table IN PLACE with different columns (nothing in this
+# package does).
 _SCHEMA_CACHE: dict[tuple[str, str], object] = {}
 
 
@@ -538,7 +539,7 @@ def read_table_changes(
     but not at ``from_version``.
 
     Maintenance rewrites are NOT appends: an entry whose generation dir
-    changed between the versions (compaction/rollback/upsert swapped it)
+    changed between the versions (compaction or rollback swapped it)
     carries rewritten old rows in new files, so a file diff would
     misreport them as new data.  Default is to refuse LOUD naming those
     entries (diff across a pure-append window, e.g. between savepoints
@@ -606,7 +607,7 @@ def read_table_changes(
         raise ValueError(
             f"entries {sorted(rewritten)} were REWRITTEN between "
             f"v{from_version} and v{to_version} of {table_dir} (generation "
-            "swap: compaction/rollback/upsert) — a file diff would "
+            "swap: compaction/rollback) — a file diff would "
             "re-deliver old rows as new.  Diff a pure-append window, or "
             "pass allow_rewrites=True to accept re-delivery."
         )

@@ -13,7 +13,7 @@ torn multi-table rewrite.
 
 What a savepoint does and does not promise:
 - It IS a consistent view across maintenance operations (compaction,
-  rollback, upsert): all-tables-before or all-tables-after, never mixed.
+  rollback): all-tables-before or all-tables-after, never mixed.
 - It is NOT a global transaction over uncoordinated appends: an ingest
   batch landing while the savepoint walks the tables may be captured in
   one table and not another (appends never take the lock — by design,
@@ -78,7 +78,7 @@ def create_savepoint(
 
     Holds the maintenance lock for the duration: it REFUSES (raises
     RuntimeError, like every maintenance job — the lock is non-blocking
-    in both directions) while a compaction/rollback/upsert runs, and a
+    in both directions) while a compaction or rollback runs, and a
     maintenance job starting mid-capture refuses likewise.  The id is
     allocated UNDER the lock, so two racing creators can never mint the
     same id and silently overwrite each other's cut."""

@@ -1,8 +1,8 @@
 """Orphan inspection and cleanup after crashed maintenance jobs.
 
 The maintenance lock (``lake/lock.py``) deliberately stays held when a
-rewrite dies mid-flight.  Every rewrite job (compaction, rollback,
-upsert) writes a hidden ``_gen__*`` generation dir, then publishes the
+rewrite dies mid-flight.  Every rewrite job (compaction, rollback)
+writes a hidden ``_gen__*`` generation dir, then publishes the
 table's pointer (``lake/generations.py``).  A job that dies between the
 two on a table with no pointer yet leaves a generation dir that nothing
 references and that :func:`generations.superseded_paths` never lists.

@@ -21,7 +21,10 @@ Spark-first:
   ogmios_parquet.py:523-571; zstd instead of brotli — SURVEY R5).
 
 ``ingest_blocks`` is the only way blocks enter the lake: the CLI
-``extract`` verb and the chain benchmark both drive it.
+``extract`` verb and the chain benchmark both drive it.  Lake
+maintenance is exactly three jobs: ``ingest_blocks`` appends,
+``compact_lake`` compacts, ``rollback_lake`` rolls back.  Reports
+recompute per read; nothing is maintained alongside the tables.
 
 Scale notes: extraction is narrow (block → rows, no shuffle); the append
 write shuffles nothing; compaction writes one file per rewritten
@@ -375,11 +378,7 @@ def _rollback_point_slot(event: dict) -> int:
     )
 
 
-def _write_tables_parallel(
-    tables: dict[str, DataFrame],
-    dest: str,
-    slot_group_size: int,
-) -> None:
+def _write_tables_parallel(tables: dict[str, DataFrame], dest: str) -> None:
     """Partitioned appends for all extracted tables, fanned out on a
     thread pool: each table's append is an independent Spark job, and at
     micro-batch sizes per-job scheduling latency (not IO) dominates the
@@ -394,8 +393,8 @@ def _write_tables_parallel(
         name, df = item
         with_group = df.withColumn(
             "slot_group",
-            (F.floor(F.col("slot") / slot_group_size)
-             * slot_group_size).cast("long"),
+            (F.floor(F.col("slot") / SLOT_GROUP_SIZE)
+             * SLOT_GROUP_SIZE).cast("long"),
         )
         sparse = name.startswith("cert") or name in (
             "vote", "proposal", "redeemer"
@@ -432,7 +431,6 @@ def ingest_blocks(
     dest: str,
     batch_size: int = 100,
     stop_slot: int | None = None,
-    slot_group_size: int = SLOT_GROUP_SIZE,
     reconcile_rollbacks: bool = False,
 ) -> dict[str, int]:
     """Micro-batch ingestion loop.  Returns counters (blocks, txs,
@@ -448,11 +446,9 @@ def ingest_blocks(
     after the event (the node re-sending the adopted fork) land normally,
     so the lake converges to the honest chain.
 
-    Reconciliation inherits rollback's maintained-aggregate gate: with a
-    materialization registered over a lake table, the in-stream
-    ``rollback_lake`` refuses (already-flushed appends stay committed —
-    nothing is lost; ``deregister_materialization`` or recompute the
-    aggregate in batch, then resume from the node's cursor)."""
+    Rows land in ``slot_group`` partitions of :data:`SLOT_GROUP_SIZE`
+    slots, the same grid ``rollback_lake`` and ``compact_lake`` scope
+    their rewrites to."""
     stats = {"blocks": 0, "transactions": 0, "rollbacks": 0, "batches": 0}
     if reconcile_rollbacks:
         stats["reconciled_rows"] = 0
@@ -494,9 +490,7 @@ def ingest_blocks(
         try:
             bdf.count()
             nparts = max(1, min(8, len(forward) // 500))
-            _write_tables_parallel(
-                extract_tables(bdf.coalesce(nparts)), dest, slot_group_size
-            )
+            _write_tables_parallel(extract_tables(bdf.coalesce(nparts)), dest)
         finally:
             bdf.unpersist()
         stats["blocks"] += len(forward)
@@ -541,7 +535,6 @@ def rollback_lake(
     to_slot: int,
     vacuum: str = "end",
     tables: Iterable[str] = LAKE_TABLES,
-    allow_stale_materializations: bool = False,
 ) -> dict[str, int]:
     """Chain-rollback reconciliation: drop every row with ``slot > to_slot``.
 
@@ -567,51 +560,13 @@ def rollback_lake(
     enforced: the job holds the lake's ``_maintenance.lock``
     (``lake/lock.py``) for its duration, so a second maintenance job
     fails fast instead of interleaving rewrites.
-
-    Maintained aggregates (``streaming/materialize.py``) fold source
-    files exactly once — they can never observe a row-CHANGING rewrite
-    like this one.  ENFORCED since r8: tables with a registered
-    materialization marker refuse the rollback unless
-    ``allow_stale_materializations=True`` (the caller's statement that
-    the aggregates will be recomputed in batch) or the marker is
-    removed via ``deregister_materialization``.
     """
     from ..lake.lock import maintenance_lock
-    from .materialize import require_no_materializations
 
-    # Preflight OUTSIDE the lock: a refusal here touches nothing, so it
-    # must not leave the keep-on-failure lock behind (the in-lock check
-    # below still covers the preflight->lock race window).
-    tables = list(tables)
-    for t in tables:
-        require_no_materializations(
-            spark, os.path.join(root, t), "rollback_lake",
-            allow_stale_materializations,
-        )
-    gate_err: RuntimeError | None = None
-    result: dict[str, int] = {}
     with maintenance_lock(spark, root, owner=f"rollback_lake(to_slot={to_slot})"):
-        # Re-check the gates INSIDE the lock: _register_materialization
-        # takes no lock, so a marker can land in the preflight->lock
-        # window; only an in-lock check makes the gates atomic with the
-        # rewrite.  A refusal here touched nothing, so it must exit the
-        # with-body NORMALLY (the lock's keep-on-raise forensics are for
-        # failed rewrites) and re-raise after release.
-        try:
-            for t in tables:
-                require_no_materializations(
-                    spark, os.path.join(root, t), "rollback_lake",
-                    allow_stale_materializations,
-                )
-        except RuntimeError as e:
-            gate_err = e
-        if gate_err is None:
-            result = _rollback_lake_locked(
-                spark, root, to_slot, vacuum=vacuum, tables=tables
-            )
-    if gate_err is not None:
-        raise gate_err
-    return result
+        return _rollback_lake_locked(
+            spark, root, to_slot, vacuum=vacuum, tables=tables
+        )
 
 
 def _rollback_lake_locked(
@@ -722,8 +677,6 @@ def compact_lake(
     root: str,
     tables: Iterable[str] = LAKE_TABLES,
     vacuum: str = "end",
-    allow_stale_materializations: bool = False,
-    min_files: int = 2,
 ) -> None:
     """Rewrite fragmented partitions to one file per slot_group.
 
@@ -746,60 +699,17 @@ def compact_lake(
     deferring reclaim to an explicit ``vacuum_superseded`` whenever
     convenient — supersession is per-FILE, so appends stay visible and
     correct either way.  The single-WRITER half is enforced via the
-    lake's ``_maintenance.lock`` (``lake/lock.py``).
-
-    Under a MAINTAINED AGGREGATE (streaming/materialize.py) compaction
-    additionally refuses while the aggregate has NOT-YET-FOLDED source
-    files: the swap would hide them in generation dirs the file stream
-    can never list, silently losing their rows from the aggregate (found
-    by the seeded streaming walk).  Folded files are safe — the swap
-    preserves their already-counted contribution row-for-row.  The fix
-    the error names is one materializer run; ``allow_stale_
-    materializations=True`` overrides for callers recomputing in batch.
-
-    ``min_files`` is the fragmentation threshold below which a partition
-    is left alone (default 2 = only actually-fragmented partitions
-    rewrite).  ``min_files=1`` is the FULL SWEEP: every partition with
-    data moves into a generation dir, leaving the hive layout empty —
-    the primitive ``rebuild_lake_materialization`` uses to draw the
-    exactly-once baseline between "rows the batch recompute counted" and
-    "hive appends the fresh stream will fold"."""
+    lake's ``_maintenance.lock`` (``lake/lock.py``)."""
     from ..lake.lock import maintenance_lock
-    from .materialize import require_folded_before_compaction
 
-    # Preflight outside the lock — see rollback_lake
-    tables = list(tables)
-    for t in tables:
-        require_folded_before_compaction(
-            spark, os.path.join(root, t), allow_stale_materializations
-        )
-    gate_err: RuntimeError | None = None
     with maintenance_lock(spark, root, owner="compact_lake"):
-        # In-lock re-check with refusal-releases-the-lock semantics, same
-        # as rollback_lake: a fold that fell behind in the preflight->lock
-        # window refuses cleanly instead of wedging the lake lock.
-        try:
-            for t in tables:
-                require_folded_before_compaction(
-                    spark,
-                    os.path.join(root, t),
-                    allow_stale_materializations,
-                )
-        except RuntimeError as e:
-            gate_err = e
-        if gate_err is None:
-            _compact_lake_locked(
-                spark, root, tables, vacuum=vacuum, min_files=min_files
-            )
-    if gate_err is not None:
-        raise gate_err
+        _compact_lake_locked(spark, root, tables, vacuum=vacuum)
 
 
 def _compact_lake_locked(
     spark: SparkSession,
     root: str,
     tables: Iterable[str],
-    min_files: int = 2,
     vacuum: str = "end",
 ) -> None:
     from ..lake.fsutil import LakeFs
@@ -810,7 +720,7 @@ def _compact_lake_locked(
     )
 
     lfs = LakeFs(spark, root)
-    # INCREMENTAL: only partitions fragmented past ``min_files`` are
+    # INCREMENTAL: only partitions holding two or more files are
     # rewritten, each scoped to its own directory — cost ∝ fragmented
     # partitions, never table size.  Steady state (append a few chunks to
     # the newest slot_group, compact, repeat) touches one partition per
@@ -841,7 +751,7 @@ def _compact_lake_locked(
                 if st.get("gen")
                 else 0
             )
-            if n_parquet < min_files:
+            if n_parquet < 2:
                 continue  # already compact (or empty-append _SUCCESS only)
             gen = next_generation_dir(lfs, src, entry)
             (

@@ -24,7 +24,6 @@ _ORACLE_MODULES = {
     "test_plans",
 }
 _SLOW_MODULES = {
-    "test_materialize",
     "test_ingest",
     "test_chainsync",
     "test_cli",
@@ -32,8 +31,6 @@ _SLOW_MODULES = {
     "test_generations_model",
     "test_savepoints",
     "test_manifest",
-    "test_streaming_dedup",
-    "test_upsert",
     "test_vacuum",
     "test_zorder",
 }

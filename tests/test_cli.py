@@ -324,83 +324,6 @@ def test_rollback_cli_drops_rows_above_slot(spark, tmp_path, capsys):
     assert after.filter(F.col("slot") <= cut).count() > 0
 
 
-def test_rebuild_aggregate_cli_recovers_after_rollback(spark, tmp_path, capsys):
-    import pyspark.sql.functions as F
-
-    from cardano_analytics_duckdb_spark.cli import main
-    from cardano_analytics_duckdb_spark.lake.generations import read_table
-    from cardano_analytics_duckdb_spark.streaming.materialize import (
-        materialize_fees_by_slot_group,
-    )
-
-    dest = str(tmp_path / "lake")
-    mv = str(tmp_path / "mv")
-    assert main(["extract", "--dest", dest], spark) == 0
-    table = materialize_fees_by_slot_group(spark, dest, mv, n_buckets=4)
-    tx = read_table(spark, os.path.join(dest, "tx"))
-    slots = sorted(r["slot"] for r in tx.select("slot").distinct().collect())
-    cut = slots[len(slots) // 2]
-    rc = main(
-        ["rollback", "--lake", dest, "--to-slot", str(cut),
-         "--allow-stale-materializations"],
-        spark,
-    )
-    assert rc == 0
-    capsys.readouterr()
-
-    rc = main(
-        ["rebuild-aggregate", "--lake", dest, "--dest", mv, "--buckets", "4"],
-        spark,
-    )
-    assert rc == 0
-    out = json.loads(capsys.readouterr().out.strip().splitlines()[-1])
-    assert out["rebuilt"] == table and out["rows"] > 0
-    got = {
-        r["slot_group"]: (r["n_txs"], r["total_fees"])
-        for r in spark.read.parquet(table).collect()
-    }
-    expect = {
-        r["slot_group"]: (r["n"], r["tf"])
-        for r in read_table(spark, os.path.join(dest, "tx"))
-        .groupBy("slot_group")
-        .agg(F.count(F.lit(1)).alias("n"), F.sum("tx_fee").alias("tf"))
-        .collect()
-    }
-    assert got == expect
-
-
-def test_rebuild_aggregate_cli_on_empty_lake_reports_zero_rows(
-    spark, tmp_path, capsys
-):
-    """Rolled-back-to-origin lake: the rebuild writes no table (no
-    generation files), and the CLI must report rows=0 instead of crashing
-    on the missing path."""
-    from cardano_analytics_duckdb_spark.cli import main
-    from cardano_analytics_duckdb_spark.streaming.materialize import (
-        materialize_fees_by_slot_group,
-    )
-
-    dest = str(tmp_path / "lake")
-    mv = str(tmp_path / "mv")
-    assert main(["extract", "--dest", dest], spark) == 0
-    materialize_fees_by_slot_group(spark, dest, mv, n_buckets=4)
-    rc = main(
-        ["rollback", "--lake", dest, "--to-slot", "0",
-         "--allow-stale-materializations"],
-        spark,
-    )
-    assert rc == 0
-    capsys.readouterr()
-
-    rc = main(
-        ["rebuild-aggregate", "--lake", dest, "--dest", mv, "--buckets", "4"],
-        spark,
-    )
-    assert rc == 0
-    out = json.loads(capsys.readouterr().out.strip().splitlines()[-1])
-    assert out["rows"] == 0
-
-
 def test_cluster_cli_zorders_and_probes_binary_equality(
     spark, tmp_path, capsys
 ):

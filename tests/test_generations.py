@@ -270,21 +270,6 @@ def test_untouched_table_reads_plain(spark, lake):
     assert strip(resolved_plan) == strip(plain_plan)
 
 
-def test_materializer_refuses_bootstrap_on_compacted_source(spark, lake):
-    """A fresh fold's file stream cannot see generation dirs — bootstrap
-    on a compacted lake must refuse loudly instead of silently folding
-    only post-compaction appends."""
-    from cardano_analytics_duckdb_spark.streaming.materialize import (
-        materialize_fees_by_slot_group,
-    )
-
-    compact_lake(spark, lake)
-    with pytest.raises(RuntimeError, match="generation-managed"):
-        materialize_fees_by_slot_group(
-            spark, lake, str(os.path.join(lake, "_mat"))
-        )
-
-
 def test_dropped_partition_with_empty_hive_dir_reads(spark, lake):
     """Regression: compact(vacuum="end") empties every hive dir, then a
     rollback that DROPS a gen-resident partition publishes

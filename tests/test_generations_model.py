@@ -1,20 +1,18 @@
 """Model-based consistency walk for the generation-pointer layer.
 
 A seeded random sequence of lake operations — append, compact (vacuum at
-end or deferred), upsert (both vacuum modes), rollback, explicit vacuum —
-runs against both the real table and a driver-side dict model.  After
+end or deferred), rollback, explicit vacuum — runs against both the real
+table and a driver-side dict model.  After
 EVERY step, ``generations.read_table`` must equal the model exactly: no
 lost appends, no resurrected superseded rows, no duplicates from a
-half-applied merge, no rows surviving past a rollback point, regardless
+half-applied rewrite, no rows surviving past a rollback point, regardless
 of operation interleaving.  A manifest-pruned range read is checked at
 every step too — the manifest is built once at bootstrap and then only
 refreshed when compaction happens to run, so the walk also proves data
 skipping fails OPEN (never drops a live file) across arbitrarily stale
 stats and every pointer state.  This is the invariant the per-op tests
 check pointwise; the walk checks it compositionally (the bug class where
-op A's leftover state breaks op B — it caught the INT32-vs-INT64
-partition column mismatch between compaction's and upsert's generation
-writers on its first run).
+op A's leftover state breaks op B).
 """
 
 from __future__ import annotations
@@ -31,7 +29,6 @@ from cardano_analytics_duckdb_spark.lake.generations import (
     vacuum_superseded,
 )
 from cardano_analytics_duckdb_spark.lake.lock import maintenance_lock
-from cardano_analytics_duckdb_spark.lake.upsert import upsert_partitioned
 from cardano_analytics_duckdb_spark.streaming.ingest import (
     _compact_lake_locked,
     _rollback_lake_locked,
@@ -101,8 +98,7 @@ def _run_generation_walk(spark, root: str, seed: int, n_steps: int):
             )
         )
 
-    ops = ["append", "compact", "compact_defer", "upsert", "upsert_defer",
-           "rollback", "vacuum"]
+    ops = ["append", "compact", "compact_defer", "rollback", "vacuum"]
     history = []
     for step in range(n_steps):
         op = rng.choice(ops)
@@ -117,20 +113,6 @@ def _run_generation_walk(spark, root: str, seed: int, n_steps: int):
                     spark, root, tables=["t"],
                     vacuum="end" if op == "compact" else "defer",
                 )
-        elif op in ("upsert", "upsert_defer"):
-            if not model:
-                continue
-            # replace a random existing key (slot/partition fixed by the
-            # key, per the upsert contract), insert a fresh one
-            victim = rng.choice(sorted(model))
-            _, s_old, g_old = model[victim]
-            model[victim] = (f"u{step}", s_old, g_old)
-            updates = [(victim, f"u{step}", s_old, g_old)] + fresh_rows(1)
-            upsert_partitioned(
-                spark, root, "t",
-                spark.createDataFrame(updates, SCHEMA), ["k"],
-                vacuum="end" if op == "upsert" else "defer",
-            )
         elif op == "rollback":
             to_slot = rng.choice([60, 140, 230])
             with maintenance_lock(spark, root, owner=f"walk-{step}"):
@@ -179,7 +161,7 @@ def _run_generation_walk(spark, root: str, seed: int, n_steps: int):
 
 def test_random_walk_binary_pruning_stays_exact(spark, tmp_path):
     """r9 sibling walk for the binary-stats manifest: a seeded random
-    interleaving of append / compact / upsert / rollback / vacuum /
+    interleaving of append / compact / rollback / vacuum /
     update_manifest / refresh_manifest, with a BINARY policy column in
     the data.  After every step, a policy-equality pruned read and a
     (policy x slot) box read must equal the model exactly — data
@@ -232,7 +214,7 @@ def _run_binary_walk(spark, root: str, seed: int, n_steps: int):
     ).partitionBy("slot_group").parquet(t)
     build_manifest(spark, t)
 
-    ops = ["append", "compact", "upsert", "rollback", "vacuum",
+    ops = ["append", "compact", "rollback", "vacuum",
            "update_manifest", "refresh_manifest"]
     history = []
     for step in range(n_steps):
@@ -248,20 +230,6 @@ def _run_binary_walk(spark, root: str, seed: int, n_steps: int):
                     spark, root, tables=["t"],
                     vacuum=rng.choice(["end", "defer"]),
                 )
-        elif op == "upsert":
-            if not model:
-                continue
-            victim = rng.choice(sorted(model))
-            _, p_old, s_old, g_old = model[victim]
-            model[victim] = (f"u{step}", p_old, s_old, g_old)
-            updates = [
-                (victim, f"u{step}", bytearray(p_old), s_old, g_old)
-            ] + fresh_rows(1)
-            upsert_partitioned(
-                spark, root, "t",
-                spark.createDataFrame(updates, schema), ["k"],
-                vacuum=rng.choice(["end", "defer"]),
-            )
         elif op == "rollback":
             to_slot = rng.choice([60, 140, 230])
             with maintenance_lock(spark, root, owner=f"bwalk-{step}"):
@@ -323,7 +291,7 @@ def test_random_walk_savepoints_retention_and_changes(spark, tmp_path):
     """r11 walk: savepoints, vacuum retention, and incremental reads
     interleaved with the full maintenance op set.  Invariants after
     EVERY step: (1) every live savepoint reads back exactly the model
-    state it captured — across compaction, upsert, rollback, and
+    state it captured — across compaction, rollback, and
     default (pinning) vacuums; (2) a savepoint broken by an explicit
     keep_savepoints=False vacuum fails LOUD, never partial; (3)
     read_table_changes over a pure-append window returns exactly the
@@ -384,7 +352,7 @@ def _run_savepoint_walk(spark, root: str, seed: int, n_steps: int):
             )
         )
 
-    ops = ["append", "compact", "upsert", "rollback", "vacuum",
+    ops = ["append", "compact", "rollback", "vacuum",
            "savepoint", "savepoint", "drop_savepoint", "vacuum_nokeep"]
     history = []
     for step in range(n_steps):
@@ -400,19 +368,6 @@ def _run_savepoint_walk(spark, root: str, seed: int, n_steps: int):
                     spark, root, tables=["t"],
                     vacuum=rng.choice(["end", "defer"]),
                 )
-            rewrote = True
-        elif op == "upsert":
-            if not model:
-                continue
-            victim = rng.choice(sorted(model))
-            _, s_old, g_old = model[victim]
-            model[victim] = (f"u{step}", s_old, g_old)
-            updates = [(victim, f"u{step}", s_old, g_old)] + fresh_rows(1)
-            upsert_partitioned(
-                spark, root, "t",
-                spark.createDataFrame(updates, SCHEMA), ["k"],
-                vacuum=rng.choice(["end", "defer"]),
-            )
             rewrote = True
         elif op == "rollback":
             to_slot = rng.choice([60, 140, 230])

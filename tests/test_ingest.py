@@ -142,11 +142,36 @@ def test_rollback_lake_reconciles(spark, tmp_path):
     assert after.filter(F.col("slot_group") == 0).count() > 0
 
 
+def test_maintenance_functions_take_only_the_known_parameters():
+    """Lake maintenance is append, compact, rollback.  Their parameter
+    lists are pinned so an option (a stale-state override, a tunable
+    threshold, a second partition grid) cannot slip back in unreviewed:
+    changing one must update this list in the same change."""
+    import inspect
+
+    from cardano_analytics_duckdb_spark.streaming.ingest import rollback_lake
+
+    expected = {
+        ingest_blocks: [
+            "spark", "blocks", "dest", "batch_size", "stop_slot",
+            "reconcile_rollbacks",
+        ],
+        compact_lake: ["spark", "root", "tables", "vacuum"],
+        rollback_lake: ["spark", "root", "to_slot", "vacuum", "tables"],
+    }
+    wrong = {
+        fn.__name__: params
+        for fn, want in expected.items()
+        if (params := list(inspect.signature(fn).parameters)) != want
+    }
+    assert not wrong, f"maintenance signatures changed: {wrong}"
+
+
 def test_streaming_modules_use_no_driver_local_fs():
     """Every filesystem touch in the streaming modules must go through the
     Hadoop FS wrapper (lake/fsutil.py) — a driver-local glob/os probe
     returns nothing on hdfs:///s3a:// and either fails open (guards) or
-    loses data (the materializer's merge probe).  Source-inspection pin so
+    loses data (a rewrite that misses files).  Source-inspection pin so
     a convenience regression can't slip back in; os.path.join is allowed
     (pure string manipulation)."""
     import importlib
@@ -163,7 +188,7 @@ def test_streaming_modules_use_no_driver_local_fs():
         importlib.import_module(f"{streaming.__name__}.{m.name}")
         for m in pkgutil.iter_modules(streaming.__path__)
     ]
-    assert {"ingest", "materialize"} <= {
+    assert {"ingest"} <= {
         m.__name__.rsplit(".", 1)[-1] for m in mods
     }
     for mod in mods:
@@ -276,36 +301,6 @@ def test_compaction_is_incremental_per_partition(spark, tmp_path):
     assert read_table(spark, os.path.join(dest, "tx")).count() == n_rows
 
 
-def test_live_reconciliation_refuses_under_registered_materialization(
-    spark, tmp_path
-):
-    """reconcile_rollbacks=True inherits rollback's maintained-aggregate
-    gate: the in-stream rollback_lake refuses while a materialization
-    marker exists, and everything flushed BEFORE the backward event stays
-    committed (fail-loud, no loss)."""
-    from cardano_analytics_duckdb_spark.streaming.materialize import (
-        materialize_fees_by_slot_group,
-    )
-
-    dest = str(tmp_path / "lake_gate")
-    blocks = fixture_blocks()[:6]
-    ingest_blocks(spark, blocks[:3], dest, batch_size=10)
-    materialize_fees_by_slot_group(
-        spark, dest, str(tmp_path / "mv"), n_buckets=2
-    )
-    tail = blocks[3:]
-    tail.insert(1, {"direction": "backward", "slot": blocks[3]["slot"]})
-    with pytest.raises(RuntimeError, match="fees_by_slot_group"):
-        ingest_blocks(
-            spark, tail, dest, batch_size=1, reconcile_rollbacks=True
-        )
-    # the pre-event flush is committed: block 3's rows are on disk
-    slots = {
-        r.slot for r in spark.read.parquet(f"{dest}/tx").select("slot").collect()
-    }
-    assert blocks[3]["slot"] in slots
-
-
 def test_malformed_backward_event_refuses_full_lake_default(spark):
     """ADVICE r8 (medium): -1 is reserved for an EXPLICIT point='origin';
     a backward event with no recognizable rollback point raises instead of
@@ -345,44 +340,6 @@ def test_malformed_backward_event_does_not_wipe_lake(spark, tmp_path):
         )
     assert spark.read.parquet(f"{dest}/tx").count() == n_before
     # the refusal happened before the lock was taken: lake not wedged
-    assert not os.path.exists(os.path.join(dest, "_maintenance.lock"))
-
-
-def test_materialization_registered_in_check_to_lock_window_is_caught(
-    spark, tmp_path, monkeypatch
-):
-    """ADVICE r8: the divergence gate re-runs INSIDE the maintenance lock,
-    so a marker registered between the preflight check and lock
-    acquisition still refuses the rollback — and the refusal releases the
-    lock (nothing was rewritten)."""
-    from cardano_analytics_duckdb_spark.streaming import materialize as mat
-    from cardano_analytics_duckdb_spark.streaming.ingest import rollback_lake
-
-    dest = str(tmp_path / "lake_race")
-    blocks = fixture_blocks()[:3]
-    ingest_blocks(spark, blocks, dest, batch_size=10)
-    n_before = spark.read.parquet(f"{dest}/tx").count()
-
-    real = mat.require_no_materializations
-    state = {"preflight": True}
-
-    def racy(spark_, table_dir, op, override):
-        if state["preflight"]:
-            # concurrent session registers its marker AFTER the preflight
-            # saw a clean table but BEFORE the lock was acquired
-            state["preflight"] = False
-            mat._register_materialization(
-                spark_, table_dir, "racy_agg", str(tmp_path / "mv")
-            )
-            return
-        return real(spark_, table_dir, op, override)
-
-    monkeypatch.setattr(mat, "require_no_materializations", racy)
-    with pytest.raises(RuntimeError, match="racy_agg"):
-        rollback_lake(spark, dest, blocks[0]["slot"], tables=["tx"])
-    assert spark.read.parquet(f"{dest}/tx").count() == n_before
-    # gate refusal (nothing touched) released the lock; keep-on-raise is
-    # reserved for failed rewrites
     assert not os.path.exists(os.path.join(dest, "_maintenance.lock"))
 
 

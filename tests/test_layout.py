@@ -433,7 +433,7 @@ def test_bucketize_recommend_cli(spark, capsys, monkeypatch, tmp_path):
 
 def test_layout_resolution_walk_never_serves_wrong_rows(spark, tmp_path):
     """Compositional safety (the test_generations_model pattern): a
-    seeded random sequence of append / compact / upsert / rollback /
+    seeded random sequence of append / compact / rollback /
     vacuum / savepoint / bucketize runs against a driver-side model.
     After EVERY step the layout invariant must hold: resolution either
     serves EXACTLY the model rows or returns None (plain fallback — the
@@ -464,7 +464,6 @@ def _run_layout_walk(spark, root, seed, n_steps):
     from cardano_analytics_duckdb_spark.lake.savepoints import (
         create_savepoint,
     )
-    from cardano_analytics_duckdb_spark.lake.upsert import upsert_partitioned
     from cardano_analytics_duckdb_spark.streaming.ingest import (
         _compact_lake_locked,
         _rollback_lake_locked,
@@ -501,7 +500,7 @@ def _run_layout_walk(spark, root, seed, n_steps):
     layout.set_bucket_spec(spark, root, {"t": [["k"]]}, n_buckets=4)
     layout.bucketize(spark, root)
 
-    ops = ["append", "compact", "compact_defer", "upsert", "rollback",
+    ops = ["append", "compact", "compact_defer", "rollback",
            "vacuum", "savepoint", "bucketize", "bucketize"]
     history = []
     for step in range(n_steps):
@@ -519,18 +518,6 @@ def _run_layout_walk(spark, root, seed, n_steps):
                     spark, root, tables=["t"],
                     vacuum="end" if op == "compact" else "defer",
                 )
-        elif op == "upsert":
-            if not model:
-                continue
-            victim = rng.choice(sorted(model))
-            _, s_old, g_old = model[victim]
-            model[victim] = (f"u{step}", s_old, g_old)
-            updates = [(victim, f"u{step}", s_old, g_old)] + fresh_rows(1)
-            upsert_partitioned(
-                spark, root, "t",
-                spark.createDataFrame(updates, SCHEMA), ["k"],
-                vacuum=rng.choice(["end", "defer"]),
-            )
         elif op == "rollback":
             to_slot = rng.choice([60, 140, 230])
             with maintenance_lock(spark, root, owner=f"walk-{step}"):
