@@ -1,13 +1,14 @@
-"""Block-stream ingestion: Ogmios-shaped blocks → the 10-table lake.
+"""Block-stream ingestion: Ogmios-shaped blocks → the 13-table lake.
 
 The reference's hand-rolled micro-batch loop (SURVEY §2.9) re-expressed
 Spark-first:
 
 - T2 per-record fan-out: the six extractor functions
-  (/root/reference/ogmios_parquet.py:218-486) become declarative
-  ``explode``/``transform`` DataFrame derivations in ``extract_tables`` —
-  JVM-side, no Python row loops; the single Python UDF is blake2b for
-  inline datums (F3), which only touches datum rows.
+  (/root/reference/ogmios_parquet.py:218-486) become one declarative
+  ``explode``/``transform`` DataFrame derivation per table
+  (``_EXTRACTORS``; ``extract_tables`` builds all 13) — JVM-side, no
+  Python row loops; the single Python UDF is blake2b for inline datums
+  (F3), which only touches datum rows.
 - T3/T4 buffered flush + partitioned append: ``ingest_blocks`` writes each
   micro-batch with ``partitionBy("slot_group")`` appends (the reference's
   uncompressed chunk files ≙ Spark part-files, ogmios_parquet.py:489-520).
@@ -26,17 +27,26 @@ maintenance is exactly three jobs: ``ingest_blocks`` appends,
 ``compact_lake`` compacts, ``rollback_lake`` rolls back.  Reports
 recompute per read; nothing is maintained alongside the tables.
 
-Scale notes: extraction is narrow (block → rows, no shuffle); the append
-write shuffles nothing; compaction writes one file per rewritten
-partition, each in its own directory-scoped job.  At 100 TB the same
-plan holds — a micro-batch is one flush and compaction is a
-per-partition maintenance job.
+Scale notes: at micro-batch sizes each Spark job's fixed cost, not IO,
+is what a write path pays, so each path runs on a job budget:
+
+- a flush is 1 cache-fill job plus 1 append per non-empty table;
+- a rollback is 1 aggregate per table plus 1 write per partition that
+  loses rows;
+- compaction is 1 write per fragmented partition.
+
+A table that rewrites a partition also pays one schema-inference job.
+All three paths run their tables concurrently (``_per_table``).
+Extraction is narrow (block → rows, no shuffle) and the appends shuffle
+nothing.  At 100 TB the same plan holds — a micro-batch is one flush
+and compaction is a per-partition maintenance job.
 """
 
 from __future__ import annotations
 
 import os
 from collections.abc import Iterable, Iterator
+from functools import reduce
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
@@ -45,42 +55,9 @@ from ..functions.hashes import blake2b_256
 from ..lake.fixtures import SLOT_GROUP_SIZE
 from ..sources.blocks import blocks_to_dataframe
 
-# The streaming lake's own join-key family: every flagship join site
-# (semi, src-UTxO equi, final set-agg lefts) keys on tx_id.  Declaring
-# this spec is deliberately OPT-IN: ingest never declares it; a caller
-# who wants it calls ``declare_default_layout(spark, dest)``.  The A/B
-# at the 2M-tx lake (SCALE_PROBE r13_cardano_layout_10000x) REJECTED
-# default-on — the
-# bucketed tx copy lost on every path, including the over-gate
-# shuffle_hash shape it exists to serve (gate0 1.399 -> 2.377 s,
-# flagship 1.511 -> 2.662 s, windowed 0.651 -> 2.004 s): at this
-# per-partition volume the n_buckets x slot_group file fan-out turns a
-# ~100-file scan into a few thousand small files, and the scan
-# overhead swamps the elided exchange.  asset is NOT in the spec for a
-# second, measured reason: its read path is the manifest box-prune on
-# (policy, name, slot), and re-clustering by tx_id trades that file
-# skipping for one small exchange over already-token-filtered rows
-# (asset_aggpath 0.34 s box-pruned vs 1.54 s on the copy, same probe).
-# The spec remains the right call on a lake whose per-partition volume
-# makes per-bucket files parquet-sized (tens of MB) — a real mainnet
-# history, not this probe's — which is exactly what the opt-in is for.
-DEFAULT_CARDANO_SPEC: dict[str, list[list[str]]] = {"tx": [["tx_id"]]}
-
-LAKE_TABLES = (
-    "tx",
-    "utxo",
-    "mint",
-    "asset",
-    "datum",
-    "cert",
-    "cert_stake",
-    "cert_pool",
-    "cert_cc",
-    "cert_drep",
-    "vote",
-    "proposal",
-    "redeemer",
-)
+# Ingest declares no bucket layout: default-on tx_id bucketing lost on
+# every read path at the 2M-tx lake (SCALE_PROBE r13_cardano_layout_10000x),
+# so ``bucketize --spec`` stays the opt-in.
 
 _STAKE_TYPES = (
     "stakeDelegation",
@@ -99,14 +76,16 @@ _DREP_TYPES = (
 )
 
 
-def extract_tables(blocks_df: DataFrame) -> dict[str, DataFrame]:
-    """Derive all 10 lake tables from a typed block DataFrame.
+# One extractor per lake table, ≙ extract_transaction_data /
+# extract_utxo_data / extract_mint_data / extract_asset_data /
+# extract_datum_data / extract_all_certificate_data
+# (/root/reference/ogmios_parquet.py:227-486), as column expressions over
+# the typed block frame.  The shared shapes (one row per transaction,
+# per output, per certificate) are the three helpers below.
 
-    ≙ extract_transaction_data / extract_utxo_data / extract_mint_data /
-    extract_asset_data / extract_datum_data / extract_all_certificate_data
-    (/root/reference/ogmios_parquet.py:227-486), as column expressions.
-    """
-    txs = blocks_df.select(
+
+def _txs(blocks_df: DataFrame) -> DataFrame:
+    return blocks_df.select(
         "slot", F.explode("transactions").alias("t")
     ).select(
         "slot",
@@ -122,7 +101,34 @@ def extract_tables(blocks_df: DataFrame) -> dict[str, DataFrame]:
         F.col("t.proposals").alias("proposals"),
     )
 
-    tx = txs.select(
+
+def _outs(blocks_df: DataFrame) -> DataFrame:
+    return _txs(blocks_df).select(
+        "slot",
+        "tx_id",
+        F.posexplode("outputs").alias("output_index", "o"),
+    ).select(
+        "slot",
+        "tx_id",
+        F.col("output_index").cast("int").alias("output_index"),
+        F.col("o.address").alias("address"),
+        F.col("o.value").alias("value"),
+        F.col("o.datumHash").alias("datum_hash_hex"),
+        F.col("o.datum").alias("inline_datum_hex"),
+        F.col("o.script").alias("out_script"),
+    )
+
+
+def _certs(blocks_df: DataFrame, types: tuple[str, ...] = ()) -> DataFrame:
+    """One row per certificate, only those of ``types`` when given."""
+    certs = _txs(blocks_df).select(
+        "slot", "tx_id", F.explode("certificates").alias("c")
+    )
+    return certs.filter(F.col("c.type").isin(*types)) if types else certs
+
+
+def _tx(blocks_df: DataFrame) -> DataFrame:
+    return _txs(blocks_df).select(
         "slot",
         "tx_id",
         "tx_fee",
@@ -149,22 +155,9 @@ def extract_tables(blocks_df: DataFrame) -> dict[str, DataFrame]:
         ).alias("inputs"),
     )
 
-    outs = txs.select(
-        "slot",
-        "tx_id",
-        F.posexplode("outputs").alias("output_index", "o"),
-    ).select(
-        "slot",
-        "tx_id",
-        F.col("output_index").cast("int").alias("output_index"),
-        F.col("o.address").alias("address"),
-        F.col("o.value").alias("value"),
-        F.col("o.datumHash").alias("datum_hash_hex"),
-        F.col("o.datum").alias("inline_datum_hex"),
-        F.col("o.script").alias("out_script"),
-    )
 
-    utxo = outs.select(
+def _utxo(blocks_df: DataFrame) -> DataFrame:
+    return _outs(blocks_df).select(
         "slot",
         "tx_id",
         "output_index",
@@ -178,8 +171,31 @@ def extract_tables(blocks_df: DataFrame) -> dict[str, DataFrame]:
         F.col("out_script").isNotNull().alias("has_ref_script"),
     )
 
-    asset = (
-        outs.select(
+
+def _mint(blocks_df: DataFrame) -> DataFrame:
+    return (
+        _txs(blocks_df)
+        .select("slot", "tx_id", F.explode("mint").alias("policy_hex", "assets"))
+        .select(
+            "slot",
+            "tx_id",
+            F.unhex("policy_hex").alias("policy_id"),
+            F.explode("assets").alias("asset_hex", "quantity"),
+        )
+        .select(
+            "slot",
+            "tx_id",
+            "policy_id",
+            F.unhex("asset_hex").alias("asset_name"),
+            "quantity",
+        )
+    )
+
+
+def _asset(blocks_df: DataFrame) -> DataFrame:
+    return (
+        _outs(blocks_df)
+        .select(
             "slot",
             "tx_id",
             "output_index",
@@ -206,25 +222,11 @@ def extract_tables(blocks_df: DataFrame) -> dict[str, DataFrame]:
         )
     )
 
-    mint = (
-        txs.select("slot", "tx_id", F.explode("mint").alias("policy_hex", "assets"))
-        .select(
-            "slot",
-            "tx_id",
-            F.unhex("policy_hex").alias("policy_id"),
-            F.explode("assets").alias("asset_hex", "quantity"),
-        )
-        .select(
-            "slot",
-            "tx_id",
-            "policy_id",
-            F.unhex("asset_hex").alias("asset_name"),
-            "quantity",
-        )
-    )
 
-    datum = (
-        outs.filter(
+def _datum(blocks_df: DataFrame) -> DataFrame:
+    return (
+        _outs(blocks_df)
+        .filter(
             F.col("datum_hash_hex").isNotNull()
             | F.col("inline_datum_hex").isNotNull()
         )
@@ -241,11 +243,15 @@ def extract_tables(blocks_df: DataFrame) -> dict[str, DataFrame]:
         )
     )
 
-    certs = txs.select(
-        "slot", "tx_id", F.explode("certificates").alias("c")
+
+def _cert(blocks_df: DataFrame) -> DataFrame:
+    return _certs(blocks_df).select(
+        "slot", "tx_id", F.col("c.type").alias("type")
     )
-    cert = certs.select("slot", "tx_id", F.col("c.type").alias("type"))
-    cert_stake = certs.filter(F.col("c.type").isin(*_STAKE_TYPES)).select(
+
+
+def _cert_stake(blocks_df: DataFrame) -> DataFrame:
+    return _certs(blocks_df, _STAKE_TYPES).select(
         "slot",
         "tx_id",
         F.col("c.type").alias("type"),
@@ -253,7 +259,10 @@ def extract_tables(blocks_df: DataFrame) -> dict[str, DataFrame]:
         F.col("c.pool_id").alias("pool_id"),
         F.col("c.drep_id").alias("drep_id"),
     )
-    cert_pool = certs.filter(F.col("c.type").isin(*_POOL_TYPES)).select(
+
+
+def _cert_pool(blocks_df: DataFrame) -> DataFrame:
+    return _certs(blocks_df, _POOL_TYPES).select(
         "slot",
         "tx_id",
         F.col("c.type").alias("type"),
@@ -272,7 +281,10 @@ def extract_tables(blocks_df: DataFrame) -> dict[str, DataFrame]:
         F.col("c.metadata_url").alias("metadata_url"),
         F.col("c.retirement_epoch").alias("retirement_epoch"),
     )
-    cert_cc = certs.filter(F.col("c.type").isin(*_CC_TYPES)).select(
+
+
+def _cert_cc(blocks_df: DataFrame) -> DataFrame:
+    return _certs(blocks_df, _CC_TYPES).select(
         "slot",
         "tx_id",
         F.col("c.type").alias("type"),
@@ -281,7 +293,10 @@ def extract_tables(blocks_df: DataFrame) -> dict[str, DataFrame]:
         F.unhex("c.metadata_hash").alias("metadata_hash"),
         F.col("c.metadata_url").alias("metadata_url"),
     )
-    cert_drep = certs.filter(F.col("c.type").isin(*_DREP_TYPES)).select(
+
+
+def _cert_drep(blocks_df: DataFrame) -> DataFrame:
+    return _certs(blocks_df, _DREP_TYPES).select(
         "slot",
         "tx_id",
         F.col("c.type").alias("type"),
@@ -291,9 +306,13 @@ def extract_tables(blocks_df: DataFrame) -> dict[str, DataFrame]:
         F.col("c.metadata_url").alias("metadata_url"),
     )
 
-    # README-only governance tables (≙ /root/reference/README.md:75-105;
-    # the reference has no extraction code for these — schemas from spec)
-    vote = txs.select("slot", "tx_id", F.explode("votes").alias("v")).select(
+
+# README-only governance tables (≙ /root/reference/README.md:75-105;
+# the reference has no extraction code for these — schemas from spec)
+def _vote(blocks_df: DataFrame) -> DataFrame:
+    return _txs(blocks_df).select(
+        "slot", "tx_id", F.explode("votes").alias("v")
+    ).select(
         "slot",
         "tx_id",
         F.col("v.voter").alias("voter"),
@@ -302,7 +321,10 @@ def extract_tables(blocks_df: DataFrame) -> dict[str, DataFrame]:
         F.col("v.vote").alias("vote"),
         F.col("v.anchor").alias("anchor"),
     )
-    proposal = txs.select(
+
+
+def _proposal(blocks_df: DataFrame) -> DataFrame:
+    return _txs(blocks_df).select(
         "slot", "tx_id", F.explode("proposals").alias("p")
     ).select(
         "slot",
@@ -313,7 +335,10 @@ def extract_tables(blocks_df: DataFrame) -> dict[str, DataFrame]:
         F.col("p.type").alias("type"),
         F.col("p.anchor").alias("anchor"),
     )
-    redeemer = txs.select(
+
+
+def _redeemer(blocks_df: DataFrame) -> DataFrame:
+    return _txs(blocks_df).select(
         "slot", "tx_id", F.explode("redeemers").alias("r")
     ).select(
         "slot",
@@ -325,21 +350,67 @@ def extract_tables(blocks_df: DataFrame) -> dict[str, DataFrame]:
         F.col("r.steps").alias("steps"),
     )
 
-    return {
-        "tx": tx,
-        "utxo": utxo,
-        "mint": mint,
-        "asset": asset,
-        "datum": datum,
-        "cert": cert,
-        "cert_stake": cert_stake,
-        "cert_pool": cert_pool,
-        "cert_cc": cert_cc,
-        "cert_drep": cert_drep,
-        "vote": vote,
-        "proposal": proposal,
-        "redeemer": redeemer,
-    }
+
+_EXTRACTORS = {
+    "tx": _tx,
+    "utxo": _utxo,
+    "mint": _mint,
+    "asset": _asset,
+    "datum": _datum,
+    "cert": _cert,
+    "cert_stake": _cert_stake,
+    "cert_pool": _cert_pool,
+    "cert_cc": _cert_cc,
+    "cert_drep": _cert_drep,
+    "vote": _vote,
+    "proposal": _proposal,
+    "redeemer": _redeemer,
+}
+LAKE_TABLES = tuple(_EXTRACTORS)
+
+# The sparse tables: a flush holding none of their rows skips them, so no
+# schemaless empty partition dir is created.
+_CERT_SUBTABLES = {
+    **dict.fromkeys(_STAKE_TYPES, "cert_stake"),
+    **dict.fromkeys(_POOL_TYPES, "cert_pool"),
+    **dict.fromkeys(_CC_TYPES, "cert_cc"),
+    **dict.fromkeys(_DREP_TYPES, "cert_drep"),
+}
+_TX_LIST_TABLES = {
+    "certificates": "cert",
+    "votes": "vote",
+    "proposals": "proposal",
+    "redeemers": "redeemer",
+}
+_SPARSE_TABLES = frozenset(_CERT_SUBTABLES.values()) | frozenset(
+    _TX_LIST_TABLES.values()
+)
+
+
+def extract_tables(blocks_df: DataFrame) -> dict[str, DataFrame]:
+    """Derive all 13 lake tables from a typed block DataFrame."""
+    return {name: extract(blocks_df) for name, extract in _EXTRACTORS.items()}
+
+
+def _sparse_tables_present(blocks: Iterable[dict]) -> set[str]:
+    """The sparse tables holding at least one row of ``blocks``, decided
+    from the block dicts the driver already holds, with no Spark job.
+    Mirrors the extractors: exploding a missing or None list yields no
+    row, a None element still yields one (all-null) row, and each cert
+    subtype table keeps only its own ``type`` values."""
+    present: set[str] = set()
+    for b in blocks:
+        for t in b.get("transactions") or ():
+            if not t:
+                continue  # a None or empty tx carries no list field
+            for field, table in _TX_LIST_TABLES.items():
+                if t.get(field):
+                    present.add(table)
+            for c in t.get("certificates") or ():
+                sub = _CERT_SUBTABLES.get((c or {}).get("type"))
+                if sub is not None:
+                    present.add(sub)
+    return present
 
 
 def _batches(blocks: Iterable[dict], size: int) -> Iterator[list[dict]]:
@@ -378,51 +449,56 @@ def _rollback_point_slot(event: dict) -> int:
     )
 
 
-def _write_tables_parallel(tables: dict[str, DataFrame], dest: str) -> None:
-    """Partitioned appends for all extracted tables, fanned out on a
-    thread pool: each table's append is an independent Spark job, and at
-    micro-batch sizes per-job scheduling latency (not IO) dominates the
-    flush — overlapping the 13 jobs is a measured 2.2x on top of the
-    source-cache win (ingest_probe).  Thread-per-job is the standard
-    Spark concurrency model (the scheduler interleaves them); the source
-    frame must be persisted by the caller so the fan-out doesn't
-    re-execute the parse per table."""
+def _per_table(spark: SparkSession, fn, tables: Iterable[str]) -> list:
+    """``[fn(t) for t in tables]``, run concurrently, one thread per table.
+
+    The write paths' per-table jobs are independent, and at micro-batch
+    sizes a job's scheduling latency, not its IO, is the cost, so Spark
+    (which interleaves jobs submitted from different threads) overlaps
+    them.  Each worker runs through ``inheritable_thread_target``, so its
+    jobs keep the caller's job group and description; it is wrapped per
+    table, so no two workers share one copy of those properties.  Fails
+    loud: the first worker exception re-raises here, after every worker
+    has finished."""
     from concurrent.futures import ThreadPoolExecutor
 
-    def _write_one(item: tuple[str, DataFrame]) -> None:
-        name, df = item
-        with_group = df.withColumn(
-            "slot_group",
-            (F.floor(F.col("slot") / SLOT_GROUP_SIZE)
-             * SLOT_GROUP_SIZE).cast("long"),
-        )
-        sparse = name.startswith("cert") or name in (
-            "vote", "proposal", "redeemer"
-        )
-        if sparse and with_group.isEmpty():
-            return  # avoid schemaless empty partition dirs
+    from pyspark import inheritable_thread_target
+
+    tables = list(tables)
+    if not tables:
+        return []
+    with ThreadPoolExecutor(max_workers=len(tables)) as ex:
+        futures = [
+            ex.submit(inheritable_thread_target(spark)(fn), t) for t in tables
+        ]
+        return [f.result() for f in futures]
+
+
+def _write_tables_parallel(
+    spark: SparkSession, blocks_df: DataFrame, tables: Iterable[str], dest: str
+) -> None:
+    """Partitioned appends of ``tables``, extracted from ``blocks_df``:
+    one job per table, all fanned out at once by :func:`_per_table`.
+    Each worker also builds its own table's frame, so the driver-side
+    DataFrame construction overlaps the other tables' writes.
+    ``blocks_df`` must be cached and filled by the caller, or each of
+    the jobs re-parses the block list (measured 3.1x slower on a
+    500-block flush)."""
+
+    def _append(name: str) -> None:
         (
-            with_group.write.mode("append")
+            _EXTRACTORS[name](blocks_df)
+            .withColumn(
+                "slot_group",
+                (F.floor(F.col("slot") / SLOT_GROUP_SIZE)
+                 * SLOT_GROUP_SIZE).cast("long"),
+            )
+            .write.mode("append")
             .partitionBy("slot_group")
             .parquet(os.path.join(dest, name))
         )
 
-    with ThreadPoolExecutor(max_workers=len(tables)) as ex:
-        # list() re-raises the first worker exception (fail-loud)
-        list(ex.map(_write_one, tables.items()))
-
-
-def declare_default_layout(spark: SparkSession, dest: str) -> bool:
-    """Declare :data:`DEFAULT_CARDANO_SPEC` on ``dest`` unless a spec
-    already exists (a user's own spec is never overwritten).  Returns
-    whether a spec was written.  Declaration is metadata-only; the
-    copies build at the next ``compact_lake``/``bucketize``."""
-    from ..lake import layout
-
-    if layout.bucket_spec(spark, dest) is not None:
-        return False
-    layout.set_bucket_spec(spark, dest, DEFAULT_CARDANO_SPEC)
-    return True
+    _per_table(spark, _append, tables)
 
 
 def ingest_blocks(
@@ -464,17 +540,21 @@ def ingest_blocks(
     )
 
     def _flush(forward: list[dict]) -> None:
-        # Persist the typed block frame before fanning out: the 13 table
-        # extractions (plus the sparse-table emptiness probes) each run a
-        # full action, and without the cache every one re-deserializes the
-        # Python-side block list from scratch — measured 3.1x slower on a
-        # 500-block flush.  The fan-out itself runs on a thread pool: the
-        # per-table appends are independent jobs whose scheduling latency
-        # dominates at micro-batch sizes, and overlapping them is another
-        # 2.2x (ingest_probe, SCALE_PROBE.json — 29 -> ~160 blocks/s
-        # total).  Crash semantics are unchanged: a flush was never
-        # atomic across tables (sequential appends could die midway too);
-        # recovery is the same compact/rollback toolkit either way.
+        # The job budget of a flush is 1 + one per non-empty table:
+        # - ONE job fills the cache of the typed block frame: a noop
+        #   write runs every partition through the cache, where count()
+        #   runs as 3 jobs under AQE.  Without the cache each table's
+        #   append re-deserializes the Python-side block list (3.1x
+        #   slower on a 500-block flush).
+        # - ONE append per table, all fanned out at once
+        #   (_write_tables_parallel): overlapping them is a measured 2.2x
+        #   (ingest_probe, SCALE_PROBE.json — 29 -> ~160 blocks/s total).
+        #   A sparse table holding no row of this flush is skipped, and
+        #   the driver decides that from the block dicts it holds — no
+        #   emptiness job (_sparse_tables_present).
+        # Crash semantics are unchanged: a flush was never atomic across
+        # tables (sequential appends could die midway too); recovery is
+        # the same compact/rollback toolkit either way.
         #
         # The cache fills at full default parallelism (fast Python->JVM
         # deserialization), but the fan-out reads it COALESCED to ~500
@@ -486,16 +566,20 @@ def ingest_blocks(
         # cache fill gives half that win back, so fill wide, read
         # narrow).  Fewer, larger files per table also lightens
         # compaction.
+        present = _sparse_tables_present(forward)
+        tables = [
+            t for t in LAKE_TABLES if t not in _SPARSE_TABLES or t in present
+        ]
         bdf = blocks_to_dataframe(spark, forward).persist()
         try:
-            bdf.count()
+            bdf.write.format("noop").mode("overwrite").save()
             nparts = max(1, min(8, len(forward) // 500))
-            _write_tables_parallel(extract_tables(bdf.coalesce(nparts)), dest)
+            _write_tables_parallel(spark, bdf.coalesce(nparts), tables, dest)
         finally:
             bdf.unpersist()
         stats["blocks"] += len(forward)
         stats["transactions"] += sum(
-            len(b["transactions"]) for b in forward
+            len(b.get("transactions") or ()) for b in forward
         )
         stats["batches"] += 1
 
@@ -545,7 +629,9 @@ def rollback_lake(
     rewritten; earlier partitions are untouched.  A Delta/Iceberg sink would
     make this a transactional ``DELETE WHERE slot > to_slot``.
 
-    Returns rows dropped per table.  Like ``compact_lake``, all
+    Returns rows dropped per table.  The tables roll back concurrently,
+    each with one aggregate that counts its touched partitions' rows and
+    one write per partition that loses rows.  Like ``compact_lake``, all
     filesystem traffic goes through ``LakeFs`` so the same code runs on
     ``hdfs://``/``s3a://``.  READER-ATOMIC since r8: rewrites land in
     hidden generation dirs and commit per-table as one atomic pointer
@@ -577,68 +663,111 @@ def _rollback_lake_locked(
     tables: Iterable[str] = LAKE_TABLES,
 ) -> dict[str, int]:
     from ..lake.fsutil import LakeFs
-    from ..lake.generations import commit_swaps, vacuum_superseded
 
     lfs = LakeFs(spark, root)
-    dropped: dict[str, int] = {}
+    # Only slot_groups ending after the rollback point can lose rows.
     boundary_group = (to_slot // SLOT_GROUP_SIZE) * SLOT_GROUP_SIZE
-    for t in tables:
-        src = os.path.join(root, t)
-        n = 0
-        swaps: dict[str, dict] = {}
-        for entry, group, source, live, st in _partition_sources(
-            spark, lfs, src
-        ):
-            if group < boundary_group:
-                continue  # partition ends before the rollback point
-            if source is None:
-                continue  # already fully dropped
-            keep = source.filter(F.col("slot") <= to_slot)
-            n_before = source.count()
-            n_keep = keep.count()
-            if n_keep == n_before:
-                continue
-            new_st = {
-                "gen": None,
-                "superseded": st.get("superseded", [])
-                + [f.rsplit("/", 1)[-1] for f in live],
-            }
-            if n_keep > 0:
-                # Hidden generation dir, partition column injected into
-                # the data (the dir name can't carry it): readers resolve
-                # via the pointer, so the swap is invisible until the
-                # single atomic commit below.
-                from ..lake.generations import next_generation_dir
+    tables = list(tables)
+    dropped = _per_table(
+        spark,
+        lambda t: _rollback_table(
+            spark, lfs, os.path.join(root, t), to_slot, boundary_group, vacuum
+        ),
+        tables,
+    )
+    return {t: n for t, n in zip(tables, dropped) if n}
 
-                gen = next_generation_dir(lfs, src, entry)
-                (
-                    keep.withColumn(
-                        "slot_group", F.lit(group).cast("long")
-                    )
-                    .write.mode("overwrite")
-                    .parquet(os.path.join(src, gen))
+
+def _rollback_table(
+    spark: SparkSession,
+    lfs,
+    src: str,
+    to_slot: int,
+    boundary_group: int,
+    vacuum: str,
+) -> int:
+    """Roll one table back; returns the rows it dropped.
+
+    ONE aggregate counts each touched partition's rows and the rows it
+    keeps.  It reads the slot column alone, with a given schema, so no
+    inference job, and runs in one task, so no shuffle: a chain rollback
+    touches the newest one or two slot_groups (Cardano's rollback bound,
+    k = 2160 blocks, is about 43,200 slots against 200,000-slot groups).
+    Only a partition that loses rows is read in full and rewritten."""
+    from ..lake.generations import (
+        commit_swaps,
+        next_generation_dir,
+        vacuum_superseded,
+    )
+
+    parts = [
+        p
+        for p in _partitions(lfs, src, min_group=boundary_group)
+        if p[2]  # no branch: already fully dropped
+    ]
+    if not parts:
+        return 0
+    counts = {
+        entry: (n, n_keep)
+        for entry, n, n_keep in reduce(
+            DataFrame.unionByName,
+            [
+                _read(spark, branches, "slot LONG").select(
+                    F.lit(entry).alias("entry"), "slot"
                 )
-                new_st["gen"] = gen
-            swaps[entry] = new_st
-            n += n_before - n_keep
-        if swaps:
-            # ONE pointer flip commits every touched partition of this
-            # table together — a reader sees all swaps or none.
-            commit_swaps(lfs, src, swaps)
-            if vacuum == "end":
-                vacuum_superseded(spark, src)
-        if n:
-            dropped[t] = n
-    return dropped
+                for entry, _, branches, _, _ in parts
+            ],
+        )
+        .coalesce(1)
+        .groupBy("entry")
+        .agg(F.count(F.lit(1)), F.count_if(F.col("slot") <= to_slot))
+        .collect()
+    }
+    n_dropped = 0
+    schema = None
+    swaps: dict[str, dict] = {}
+    for entry, group, branches, live, st in parts:
+        n, n_keep = counts.get(entry, (0, 0))
+        if n_keep == n:
+            continue
+        new_st = {
+            "gen": None,
+            "superseded": st.get("superseded", [])
+            + [f.rsplit("/", 1)[-1] for f in live],
+        }
+        if n_keep > 0:
+            # Hidden generation dir, partition column injected into the
+            # data (the dir name can't carry it): readers resolve via the
+            # pointer, so the swap is invisible until the single atomic
+            # commit below.
+            source = _read(spark, branches, schema)
+            schema = source.schema
+            gen = next_generation_dir(lfs, src, entry)
+            (
+                source.filter(F.col("slot") <= to_slot)
+                .withColumn("slot_group", F.lit(group).cast("long"))
+                .write.mode("overwrite")
+                .parquet(os.path.join(src, gen))
+            )
+            new_st["gen"] = gen
+        swaps[entry] = new_st
+        n_dropped += n - n_keep
+    if swaps:
+        # ONE pointer flip commits every touched partition of this
+        # table together — a reader sees all swaps or none.
+        commit_swaps(lfs, src, swaps)
+        if vacuum == "end":
+            vacuum_superseded(spark, src)
+    return n_dropped
 
 
-def _partition_sources(spark: SparkSession, lfs, table_dir: str):
-    """Yield ``(entry, group, source_df | None, live_files, state)`` per
-    logical partition — the current data a maintenance rewrite must read:
-    the generation dir (if any) plus non-superseded hive files (appends
-    since the last swap).  The partition column is dropped from the
-    source (generation files carry it in the data, hive files in the
-    path; the rewriter re-injects it uniformly)."""
+def _partitions(lfs, table_dir: str, min_group: int | None = None):
+    """Yield ``(entry, group, branches, live_files, state)`` per logical
+    partition from ``min_group`` on.  ``branches`` are the file lists
+    holding the partition's current data, the ones a maintenance rewrite
+    must read: the generation dir's files (if any), then the
+    non-superseded hive files (appends since the last swap).  A
+    partition already fully dropped has none."""
     from ..lake.generations import (
         current_generations,
         generation_files,
@@ -649,27 +778,31 @@ def _partition_sources(spark: SparkSession, lfs, table_dir: str):
     gens = current_generations(lfs, table_dir)
     for entry in partition_entries(lfs, table_dir):
         group = int(entry.split("=", 1)[1])
+        if min_group is not None and group < min_group:
+            continue
         st = gens.get(entry) or {}
         live = live_partition_files(lfs, table_dir, entry, gens)
-        parts = []
         gfiles = (
             generation_files(lfs, table_dir, st["gen"])
             if st.get("gen")
             else []
         )
-        if gfiles:
-            parts.append(
-                spark.read.parquet(*gfiles).drop("slot_group")
-            )
-        if live:
-            parts.append(spark.read.parquet(*live))
-        if not parts:
-            yield entry, group, None, live, st
-            continue
-        source = parts[0]
-        for p in parts[1:]:
-            source = source.unionByName(p)
-        yield entry, group, source, live, st
+        yield entry, group, [b for b in (gfiles, live) if b], live, st
+
+
+def _read(spark: SparkSession, branches: list[list[str]], schema=None):
+    """One partition's current data: the union of its ``branches``, the
+    partition column dropped (generation files carry it in the data,
+    hive files in the path; the rewriter re-injects it uniformly).
+    Every branch of a table holds the same columns, so the schema is
+    inferred at most once (a Spark job per inferring read), and not at
+    all when ``schema`` is given."""
+    frames = []
+    for files in branches:
+        reader = spark.read if schema is None else spark.read.schema(schema)
+        frames.append(reader.parquet(*files).drop("slot_group"))
+        schema = frames[-1].schema
+    return reduce(DataFrame.unionByName, frames)
 
 
 def compact_lake(
@@ -685,7 +818,8 @@ def compact_lake(
     but INCREMENTAL: partitions already at a single file are skipped and
     each fragmented partition is rewritten in its own directory-scoped
     job, so repeated compaction of a growing lake costs ∝ the freshly
-    appended partitions, not the table.
+    appended partitions, not the table.  The tables compact
+    concurrently.
 
     All filesystem traffic goes through ``LakeFs`` (scheme-agnostic).
     READER-ATOMIC since r8: rewrites land in hidden generation dirs and
@@ -713,13 +847,31 @@ def _compact_lake_locked(
     vacuum: str = "end",
 ) -> None:
     from ..lake.fsutil import LakeFs
+    from ..lake.layout import refresh_layout
+
+    lfs = LakeFs(spark, root)
+    _per_table(
+        spark,
+        lambda t: _compact_table(spark, lfs, os.path.join(root, t), vacuum),
+        tables,
+    )
+    # A lake with a declared bucket layout (lake/layout.py) keeps it
+    # current through the same maintenance window, once every table is
+    # compacted: the compaction just changed the tables' content
+    # signatures, so readers already fell back to the plain path — this
+    # rebuild is what restores the optimized layout.  Lakes without a
+    # spec pay one existence probe.
+    refresh_layout(spark, root)
+
+
+def _compact_table(spark: SparkSession, lfs, src: str, vacuum: str) -> None:
     from ..lake.generations import (
         commit_swaps,
         next_generation_dir,
         vacuum_superseded,
     )
+    from ..lake.manifest import MANIFEST_DIR, refresh_manifest
 
-    lfs = LakeFs(spark, root)
     # INCREMENTAL: only partitions holding two or more files are
     # rewritten, each scoped to its own directory — cost ∝ fragmented
     # partitions, never table size.  Steady state (append a few chunks to
@@ -737,56 +889,37 @@ def _compact_lake_locked(
     # coalesce(1) mirrors the reference's one-file-per-partition output;
     # partitions are slot_group-bounded, so a single file stays
     # row-group sized.
-    for t in tables:
-        src = os.path.join(root, t)
-        swaps: dict[str, dict] = {}
-        for entry, group, source, live, st in _partition_sources(
-            spark, lfs, src
-        ):
-            n_parquet = len(live) + (
-                sum(
-                    f.endswith(".parquet")
-                    for f in lfs.list_files(os.path.join(src, st["gen"]))
-                )
-                if st.get("gen")
-                else 0
-            )
-            if n_parquet < 2:
-                continue  # already compact (or empty-append _SUCCESS only)
-            gen = next_generation_dir(lfs, src, entry)
-            (
-                source.withColumn("slot_group", F.lit(group).cast("long"))
-                .coalesce(1)
-                .write.mode("overwrite")
-                .parquet(os.path.join(src, gen))
-            )
-            swaps[entry] = {
-                "gen": gen,
-                "superseded": st.get("superseded", [])
-                + [f.rsplit("/", 1)[-1] for f in live],
-            }
-        rewrote = bool(swaps)
-        if swaps:
-            commit_swaps(lfs, src, swaps)
-            if vacuum == "end":
-                vacuum_superseded(spark, src)
-        # A rewrite invalidates manifest entries (old files gone, new
-        # files unknown -> pruning degrades to keep-everything).  Refresh
-        # an EXISTING manifest in the same maintenance window so data
-        # skipping stays tight; tables that never built one pay nothing.
-        # refresh_manifest is O(delta) — only the rewrite's new files get
-        # footer reads, keeping incremental compaction's cost ∝ the
-        # fragmented partitions (a full stats rebuild only fires when
-        # dead entries outnumber live ones).
-        from ..lake.manifest import MANIFEST_DIR, refresh_manifest
-
-        if rewrote and lfs.exists(os.path.join(src, MANIFEST_DIR)):
-            refresh_manifest(spark, src)
-    # A lake with a declared bucket layout (lake/layout.py) keeps it
-    # current through the same maintenance window: the compaction just
-    # changed the tables' content signatures, so readers already fell
-    # back to the plain path — this rebuild is what restores the
-    # optimized layout.  Lakes without a spec pay one existence probe.
-    from ..lake.layout import refresh_layout
-
-    refresh_layout(spark, root)
+    schema = None
+    swaps: dict[str, dict] = {}
+    for entry, group, branches, live, st in _partitions(lfs, src):
+        if sum(map(len, branches)) < 2:
+            continue  # already compact (or empty-append _SUCCESS only)
+        source = _read(spark, branches, schema)
+        schema = source.schema
+        gen = next_generation_dir(lfs, src, entry)
+        (
+            source.withColumn("slot_group", F.lit(group).cast("long"))
+            .coalesce(1)
+            .write.mode("overwrite")
+            .parquet(os.path.join(src, gen))
+        )
+        swaps[entry] = {
+            "gen": gen,
+            "superseded": st.get("superseded", [])
+            + [f.rsplit("/", 1)[-1] for f in live],
+        }
+    if not swaps:
+        return
+    commit_swaps(lfs, src, swaps)
+    if vacuum == "end":
+        vacuum_superseded(spark, src)
+    # A rewrite invalidates manifest entries (old files gone, new files
+    # unknown -> pruning degrades to keep-everything).  Refresh an
+    # EXISTING manifest in the same maintenance window so data skipping
+    # stays tight; tables that never built one pay nothing.
+    # refresh_manifest is O(delta) — only the rewrite's new files get
+    # footer reads, keeping incremental compaction's cost ∝ the
+    # fragmented partitions (a full stats rebuild only fires when dead
+    # entries outnumber live ones).
+    if lfs.exists(os.path.join(src, MANIFEST_DIR)):
+        refresh_manifest(spark, src)

@@ -131,8 +131,22 @@ def test_rollback_lake_reconciles(spark, tmp_path):
     to_slot = 150_000
     expect_keep = tx.filter(F.col("slot") <= to_slot).count()
     expect_drop = tx.count() - expect_keep
+    # every table's rows past the rollback point, counted directly: the
+    # rollback counts each table in its own aggregate
+    expect_dropped = {
+        t: n
+        for t in LAKE_TABLES
+        if os.path.isdir(f"{dest}/{t}")
+        and (
+            n := spark.read.parquet(f"{dest}/{t}")
+            .filter(F.col("slot") > to_slot)
+            .count()
+        )
+    }
+    assert len(expect_dropped) > 1
     dropped = rollback_lake(spark, dest, to_slot)
     assert dropped["tx"] == expect_drop
+    assert dropped == expect_dropped
     from cardano_analytics_duckdb_spark.lake.generations import read_table
 
     after = read_table(spark, f"{dest}/tx")
@@ -344,25 +358,19 @@ def test_malformed_backward_event_does_not_wipe_lake(spark, tmp_path):
 
 
 def test_bootstrap_declared_layout_lifecycle(spark, tmp_path):
-    """``declare_default_layout`` before ingest writes the default
-    tx_id bucket spec (declare-only — no copies yet), the first
-    ``compact_lake`` builds the copy through its existing
-    ``refresh_layout`` hook, and the lake's read path then serves it
-    with row parity.  A user's own pre-declared spec is never
-    overwritten."""
+    """A tx_id bucket spec declared before ingest is declare-only (no
+    copies yet); the first ``compact_lake`` builds the copy through its
+    ``refresh_layout`` hook, run once after every table is compacted,
+    and the lake's read path then serves it with row parity."""
     from cardano_analytics_duckdb_spark.lake import layout
     from cardano_analytics_duckdb_spark.lake.generations import read_table
-    from cardano_analytics_duckdb_spark.streaming.ingest import (
-        DEFAULT_CARDANO_SPEC,
-        declare_default_layout,
-    )
 
     dest = str(tmp_path / "lake_bootstrap_layout")
-    assert declare_default_layout(spark, dest) is True
+    layout.set_bucket_spec(spark, dest, {"tx": [["tx_id"]]})
     ingest_blocks(spark, fixture_blocks()[:5], dest, batch_size=10)
     spec = layout.bucket_spec(spark, dest)
     assert spec is not None
-    assert spec["tables"] == DEFAULT_CARDANO_SPEC
+    assert spec["tables"] == {"tx": [["tx_id"]]}
     # declare-only: nothing built before maintenance runs
     assert layout.resolve_bucketed(spark, dest, "tx", ["tx_id"]) is None
 
@@ -373,14 +381,220 @@ def test_bootstrap_declared_layout_lifecycle(spark, tmp_path):
     assert served.count() == plain.count()
     assert served.select("tx_id").exceptAll(plain.select("tx_id")).count() == 0
 
-    # idempotent + non-clobbering: re-declare is a no-op, and a custom
-    # spec present first wins
-    assert declare_default_layout(spark, dest) is False
-    dest2 = str(tmp_path / "lake_custom_spec")
-    os.makedirs(dest2)
-    layout.set_bucket_spec(spark, dest2, {"utxo": [["address"]]})
-    assert declare_default_layout(spark, dest2) is False
-    ingest_blocks(spark, fixture_blocks()[:3], dest2, batch_size=10)
-    assert layout.bucket_spec(spark, dest2)["tables"] == {
-        "utxo": [["address"]]
+
+_TXLESS_BLOCK = {
+    "type": "ebb", "era": "byron", "id": "ab" * 16, "height": 0, "slot": 0,
+}
+
+
+def test_txless_blocks_ingest(spark, tmp_path):
+    """A block without ``transactions`` (a Byron epoch-boundary block)
+    ingests: alone in a flush, and mixed into the fixture stream, with
+    every table's rows equal to the fixture lake's."""
+    dest = str(tmp_path / "lake_txless")
+    stats = ingest_blocks(spark, iter([_TXLESS_BLOCK]), dest)
+    assert (stats["blocks"], stats["transactions"]) == (1, 0)
+    blocks = fixture_blocks()
+    blocks.insert(30, {**_TXLESS_BLOCK, "slot": blocks[30]["slot"] - 1})
+    blocks.insert(0, {**_TXLESS_BLOCK, "transactions": None})
+    stats = ingest_blocks(spark, blocks, dest, batch_size=100)
+    assert stats["blocks"] == len(blocks)
+    assert stats["transactions"] == 198
+    root = ensure_fixture_lake(spark)
+    for t in LAKE_TABLES:
+        assert (
+            spark.read.parquet(f"{dest}/{t}").count()
+            == spark.read.parquet(f"{root}/{t}").count()
+        ), t
+
+
+def test_sparse_emptiness_decided_on_the_driver_matches_spark(spark):
+    """The sparse tables a flush skips are decided from the block dicts,
+    not by a Spark job: on the fixture stream and on hostile dicts
+    (missing keys, None lists, None list elements, null or unknown
+    certificate types) the tables called non-empty are exactly those
+    whose extracted frame has rows."""
+    from functools import reduce
+
+    from pyspark.sql import DataFrame
+
+    from cardano_analytics_duckdb_spark.sources.blocks import (
+        blocks_to_dataframe,
+    )
+    from cardano_analytics_duckdb_spark.streaming.ingest import (
+        _SPARSE_TABLES,
+        _sparse_tables_present,
+        extract_tables,
+    )
+
+    def block(*txs):
+        return {"type": "babbage", "slot": 7, "height": 1,
+                "transactions": list(txs)}
+
+    def tx(**fields):
+        return {"id": "cd" * 32, **fields}
+
+    hostile = [
+        [_TXLESS_BLOCK],
+        [{**_TXLESS_BLOCK, "transactions": None}],
+        [block()],
+        [block(None)],
+        [block({})],
+        [block(tx())],
+        [block(tx(certificates=None, votes=[], proposals=None,
+                  redeemers=[]))],
+        [block(tx(certificates=[None]))],
+        [block(tx(certificates=[{}]))],
+        [block(tx(certificates=[{"type": None}]))],
+        [block(tx(certificates=[{"type": "unknownCertificate"}]))],
+        [block(tx(certificates=[{"type": "stakePoolRetirement",
+                                 "retirement_epoch": 9}]))],
+        [block(tx(certificates=[None, {"type": "stakeDelegation"}]))],
+        [block(tx(votes=[None]))],
+        [block(tx(proposals=[None]))],
+        [block(tx(redeemers=[None]), None, tx(votes=[]))],
+    ]
+    fixture = fixture_blocks()
+    cases = hostile + [fixture[i:i + 20] for i in range(0, len(fixture), 20)]
+    cases.append(fixture + [b for case in hostile for b in case])
+    seen = set()
+    for blocks in cases:
+        tables = extract_tables(blocks_to_dataframe(spark, blocks))
+        with_rows = {
+            r[0]
+            for r in reduce(
+                DataFrame.unionByName,
+                [
+                    tables[t].select(F.lit(t).alias("t")).limit(1)
+                    for t in sorted(_SPARSE_TABLES)
+                ],
+            ).collect()
+        }
+        assert _sparse_tables_present(blocks) == with_rows, blocks
+        seen |= with_rows
+    assert seen == _SPARSE_TABLES
+
+
+class _Jobs:
+    """The Spark jobs a block of code runs, pinned by count: the block
+    runs in its own job group between two one-job markers, so the jobs
+    between the markers must be exactly the group's.  A count pinned to
+    the budget leaves no room for a count() or isEmpty() probe."""
+
+    def __init__(self, spark, name):
+        self.sc = spark.sparkContext
+        self.name = name
+
+    def _marker(self, name):
+        self.sc.setJobGroup(name, name)
+        self.sc.parallelize([1], 1).count()
+
+    def __enter__(self):
+        self._marker(f"{self.name}-before")
+        self.sc.setJobGroup(self.name, self.name)
+        return self
+
+    def __exit__(self, *exc):
+        self._marker(f"{self.name}-after")
+        for key in ("spark.jobGroup.id", "spark.job.description",
+                    "spark.job.interruptOnCancel"):
+            self.sc.setLocalProperty(key, None)
+        self.sc._jsc.sc().listenerBus().waitUntilEmpty()
+        st = self.sc.statusTracker()
+        (before,) = st.getJobIdsForGroup(f"{self.name}-before")
+        (after,) = st.getJobIdsForGroup(f"{self.name}-after")
+        self.ids = sorted(st.getJobIdsForGroup(self.name))
+        # no job between the markers escaped the caller's group
+        assert self.ids == list(range(before + 1, after)), (
+            before, self.ids, after
+        )
+        return False
+
+
+def test_flush_job_budget_in_the_callers_group(spark, tmp_path):
+    """One flush whose blocks fill all 13 tables runs exactly 1 cache
+    fill plus 1 append per table, so no count or emptiness probe, and
+    every job, including those the per-table threads submit, lands in
+    the caller's job group."""
+    dest = str(tmp_path / "lake_budget")
+    with _Jobs(spark, "flush-budget") as jobs:
+        stats = ingest_blocks(spark, fixture_blocks(), dest, batch_size=500)
+    assert stats["batches"] == 1
+    assert all(os.path.isdir(f"{dest}/{t}") for t in LAKE_TABLES)
+    assert len(jobs.ids) == 1 + len(LAKE_TABLES)
+
+
+def test_rollback_job_budget_and_rewrites(spark, tmp_path):
+    """A rollback runs 1 aggregate per table holding rows in a touched
+    partition, plus a schema read and 1 write per partition that loses
+    rows but keeps some, so no count or emptiness probe, and it writes
+    only to partitions that lose rows; a no-op rollback returns {} and
+    publishes no new pointer version."""
+    from cardano_analytics_duckdb_spark.lake.fsutil import LakeFs
+    from cardano_analytics_duckdb_spark.lake.generations import (
+        read_table,
+        snapshot_versions,
+    )
+    from cardano_analytics_duckdb_spark.streaming.ingest import rollback_lake
+
+    dest = str(tmp_path / "lake_rb_budget")
+    ingest_blocks(spark, fixture_blocks(), dest, batch_size=500)
+    lfs = LakeFs(spark, dest)
+    tables = [t for t in LAKE_TABLES if os.path.isdir(f"{dest}/{t}")]
+
+    def with_rows_past(slot):
+        out = set()
+        for t in tables:
+            try:
+                df = read_table(spark, f"{dest}/{t}")
+            except ValueError:
+                continue  # every partition dropped
+            if df.filter(F.col("slot") > slot).limit(1).count():
+                out.add(t)
+        return out
+
+    def gen_dirs():
+        return {
+            t: sorted(
+                d for d in lfs.list_dirs(f"{dest}/{t}")
+                if d.startswith("_gen__")
+            )
+            for t in tables
+        }
+
+    def versions():
+        return {t: snapshot_versions(lfs, f"{dest}/{t}") for t in tables}
+
+    # Both rollbacks below touch every slot_group (the boundary group is
+    # 0), so every table holding rows runs its one aggregate.
+    # slot_group=0 ends at 199_999: it loses no row, so it is not
+    # rewritten; slot_group=200000 loses every row, so it is dropped
+    # without a write.
+    touched = with_rows_past(-1)
+    with _Jobs(spark, "rollback-aligned") as jobs:
+        dropped = rollback_lake(spark, dest, 199_999)
+    assert len(jobs.ids) == len(touched)
+    assert dropped and all(n > 0 for n in dropped.values())
+    assert gen_dirs() == {t: [] for t in tables}
+    for t in dropped:
+        assert lfs.list_dirs(f"{dest}/{t}") == ["slot_group=0"], t
+
+    # mid-group: slot_group=0 loses rows and is rewritten, once, in each
+    # table holding rows past the point
+    to_slot = 150_000
+    touched, losing = with_rows_past(-1), with_rows_past(to_slot)
+    assert losing
+    with _Jobs(spark, "rollback-mid") as jobs:
+        dropped = rollback_lake(spark, dest, to_slot)
+    assert len(jobs.ids) == len(touched) + 2 * len(losing)
+    assert set(dropped) == losing
+    assert gen_dirs() == {
+        t: ["_gen__slot_group_0__g00001"] if t in losing else []
+        for t in tables
     }
+
+    # no-op: nothing past the point
+    before = versions()
+    assert rollback_lake(spark, dest, 10**9) == {}
+    assert rollback_lake(spark, dest, to_slot) == {}
+    assert versions() == before
