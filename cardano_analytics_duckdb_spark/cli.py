@@ -1,10 +1,11 @@
 """Command-line surface — parity with the reference's three entry points
 (SURVEY §3):
 
-- ``extract``       ≙ ``python main.py extract`` (main.py:69-131): replay
-  blocks (JSON-lines file or the built-in fixture chain) into a
-  slot-group-partitioned parquet lake, with named start presets, a stop
-  slot, micro-batch sizing, and optional final compaction.
+- ``extract``       ≙ ``python main.py extract`` (main.py:69-131): stream
+  blocks (a live Ogmios node, a JSON-lines file or the built-in fixture
+  chain) into a slot-group-partitioned parquet lake, with named start
+  presets, a stop slot, micro-batch sizing, and optional final
+  compaction.
 - ``query``         ≙ ``python main.py query`` (main.py:14-63): the
   high-fee report — top-N transactions by fee plus a 4-way summary
   aggregate — over any lake directory.
@@ -22,7 +23,6 @@ from __future__ import annotations
 
 import argparse
 import json
-import os
 import sys
 
 from pyspark.sql import SparkSession
@@ -32,6 +32,8 @@ from pyspark.sql import functions as F
 # PRESET_STARTING_POINTS (config.py:32-73), (slot, block-header-hash) pairs
 # ("last block before each era" plus the SNEK case-study anchors), plus
 # 'origin' for a from-genesis replay (the reference's start_point=None).
+# A live Ogmios source starts at the pair itself (its findIntersection
+# point); file and fixture replays filter on the slot alone.
 START_PRESETS: dict[str, tuple[int, str | None]] = {
     "origin": (0, None),
     "last_byron": (
@@ -148,29 +150,58 @@ def _get_spark(spark: SparkSession | None) -> SparkSession:
     return get_session(app_name="cardano-analytics-cli")
 
 
+def _chain_sync_blocks(url: str, point, stop_slot: int | None):
+    """Blocks (and backward events) streamed from a live Ogmios node at
+    ``ogmios://HOST:PORT``, read from ``point`` on (≙ the reference's
+    websocket loop, ogmios_parquet.py:635-675).  The session closes when
+    the stream reaches the node's tip or ``stop_slot``."""
+    from urllib.parse import urlsplit
+
+    from .sources.chainsync import ChainSyncClient
+
+    u = urlsplit(url)
+    with ChainSyncClient(u.hostname, u.port or 1337) as client:
+        client.find_intersection([point])
+        yield from client.stream(stop_slot=stop_slot)
+
+
 def _cmd_extract(args: argparse.Namespace, spark: SparkSession) -> int:
     from .streaming.ingest import compact_lake, ingest_blocks
 
-    if args.blocks == "fixture":
-        from .lake.fixtures import fixture_blocks
-
-        blocks = iter(fixture_blocks())
-    else:
-        # stream the JSON-lines file lazily — the driver never holds the
-        # full chain in memory (this replay path mirrors the reference's
-        # websocket loop shape, which ingest_blocks micro-batches)
-        def _gen(path: str):
-            with open(path) as f:
-                for line in f:
-                    if line.strip():
-                        yield json.loads(line)
-
-        blocks = _gen(args.blocks)
-
     preset = START_PRESETS.get(args.start_point)
-    start_slot = preset[0] if preset is not None else int(args.start_point)
-    if start_slot:
-        blocks = (b for b in blocks if b["slot"] >= start_slot)
+    if args.blocks.startswith("ogmios://"):
+        # Ogmios positions the stream by (slot, block id), so only a
+        # preset, whose block id is known, can start it.
+        if preset is None:
+            raise SystemExit(
+                f"--start-point {args.start_point!r}: a live node needs a "
+                f"block id, so use a preset ({', '.join(START_PRESETS)})"
+            )
+        slot, block_id = preset
+        point = (
+            "origin" if block_id is None else {"slot": slot, "id": block_id}
+        )
+        blocks = _chain_sync_blocks(args.blocks, point, args.stop_slot)
+    else:
+        if args.blocks == "fixture":
+            from .lake.fixtures import fixture_blocks
+
+            blocks = iter(fixture_blocks())
+        else:
+            # stream the JSON-lines file lazily — the driver never holds
+            # the full chain in memory (this replay path mirrors the
+            # reference's websocket loop shape, which ingest_blocks
+            # micro-batches)
+            def _gen(path: str):
+                with open(path) as f:
+                    for line in f:
+                        if line.strip():
+                            yield json.loads(line)
+
+            blocks = _gen(args.blocks)
+        start_slot = preset[0] if preset is not None else int(args.start_point)
+        if start_slot:
+            blocks = (b for b in blocks if b["slot"] >= start_slot)
 
     stats = ingest_blocks(
         spark,
@@ -190,35 +221,7 @@ def _cmd_query(args: argparse.Namespace, spark: SparkSession) -> int:
     from .functions.rounding import rnd
     from .operators.cardano import _lake
 
-    if getattr(args, "at_version", None) is not None:
-        from .lake.fixtures import ensure_fixture_lake
-        from .lake.generations import read_table_at
-
-        root = args.lake or ensure_fixture_lake(spark)
-        tx = read_table_at(spark, f"{root}/tx", args.at_version)
-        print(f"(time travel: tx as of pointer version {args.at_version})")
-    elif getattr(args, "changes_since", None) is not None:
-        from .lake.fixtures import ensure_fixture_lake
-        from .lake.fsutil import LakeFs
-        from .lake.generations import read_table_changes, snapshot_versions
-
-        root = args.lake or ensure_fixture_lake(spark)
-        have = snapshot_versions(LakeFs(spark, root), f"{root}/tx")
-        if not have:
-            raise SystemExit(
-                "tx has no published versions to diff — take a savepoint "
-                "(or run maintenance) to publish one first"
-            )
-        latest = have[-1]
-        tx = read_table_changes(
-            spark, f"{root}/tx", args.changes_since, latest
-        )
-        print(
-            f"(incremental: tx rows appended between v{args.changes_since}"
-            f" and v{latest})"
-        )
-    else:
-        tx = _lake(spark, "tx", args.lake)
+    tx = _lake(spark, "tx", args.lake)
     top = (
         tx.filter(F.col("tx_fee") > args.min_fee)
         .select("slot", F.lower(F.hex("tx_id")).alias("tx_id"), "tx_fee")
@@ -289,106 +292,6 @@ def _cmd_curate(args: argparse.Namespace, spark: SparkSession) -> int:
             .collect()
         }
     print(json.dumps(stats))
-    return 0
-
-
-def _cmd_savepoint(args, spark: SparkSession) -> int:
-    from .lake.fsutil import LakeFs
-    from .lake.savepoints import (
-        create_savepoint,
-        drop_savepoint,
-        savepoint_info,
-        savepoint_versions,
-    )
-
-    lfs = LakeFs(spark, args.lake)
-    if args.create:
-        sp = create_savepoint(spark, args.lake)
-        print(json.dumps({"created": sp, "tables": savepoint_info(lfs, args.lake, sp)}))
-        return 0
-    if args.drop is not None:
-        drop_savepoint(spark, args.lake, args.drop)
-        print(json.dumps({"dropped": args.drop}))
-        return 0
-    if args.show is not None:
-        print(json.dumps({"savepoint": args.show, "tables": savepoint_info(lfs, args.lake, args.show)}))
-        return 0
-    print(json.dumps({"savepoints": savepoint_versions(lfs, args.lake)}))
-    return 0
-
-
-def _cmd_history(args, spark: SparkSession) -> int:
-    from .lake.fsutil import LakeFs
-    from .lake.generations import table_history
-    from .lake.savepoints import _lake_tables
-
-    lfs = LakeFs(spark, args.lake)
-    tables = [args.table] if args.table else _lake_tables(lfs, args.lake)
-    print(
-        json.dumps(
-            {
-                t: table_history(lfs, os.path.join(args.lake, t))
-                for t in tables
-            }
-        )
-    )
-    return 0
-
-
-def _cmd_changes(args, spark: SparkSession) -> int:
-    """Multi-table incremental read (change-data-feed surface): the rows
-    appended per table between two published versions.  ``--since-
-    savepoint`` resolves each table's from-version from the savepoint's
-    pinned {table: version} map — the cross-table-consistent anchor —
-    while ``--since`` applies one raw version number to every table.
-    A window crossing a maintenance rewrite/deletion reports ``refused``
-    for that table (the read_table_changes loud contract) unless
-    ``--allow-rewrites`` accepts re-delivery."""
-    from .lake.fsutil import LakeFs
-    from .lake.generations import read_table_changes, snapshot_versions
-    from .lake.savepoints import _lake_tables, savepoint_info
-
-    if (args.since is None) == (args.since_savepoint is None):
-        raise SystemExit(
-            "pass exactly one of --since or --since-savepoint"
-        )
-    lfs = LakeFs(spark, args.lake)
-    tables = [args.table] if args.table else _lake_tables(lfs, args.lake)
-    since_by_table: dict[str, int] = {}
-    if args.since_savepoint is not None:
-        since_by_table = savepoint_info(lfs, args.lake, args.since_savepoint)
-    out: dict[str, dict] = {}
-    for t in tables:
-        td = os.path.join(args.lake, t)
-        have = snapshot_versions(lfs, td)
-        if args.since_savepoint is not None:
-            frm = since_by_table.get(t)
-        else:
-            frm = args.since
-        if not have or frm is None or frm not in have:
-            out[t] = {
-                "error": "no diffable window: table has versions "
-                f"{have or 'none'}, from-version {frm}"
-            }
-            continue
-        until = args.until if args.until is not None else have[-1]
-        try:
-            df = read_table_changes(
-                spark, td, frm, until, allow_rewrites=args.allow_rewrites
-            )
-            rec: dict = {
-                "from": frm,
-                "to": until,
-                "rows_appended": df.count(),
-            }
-            if args.out:
-                dest = os.path.join(args.out, t)
-                df.write.mode("overwrite").parquet(dest)
-                rec["out"] = dest
-            out[t] = rec
-        except ValueError as e:
-            out[t] = {"from": frm, "to": until, "refused": str(e)}
-    print(json.dumps(out))
     return 0
 
 
@@ -528,17 +431,22 @@ def build_parser() -> argparse.ArgumentParser:
     )
     sub = p.add_subparsers(dest="command", required=True)
 
-    ex = sub.add_parser("extract", help="replay blocks into a parquet lake")
+    ex = sub.add_parser(
+        "extract",
+        help="stream blocks (file, fixture or live node) into a parquet lake",
+    )
     ex.add_argument(
         "--blocks",
         default="fixture",
-        help="JSON-lines block file, or 'fixture' for the built-in chain",
+        help="JSON-lines block file, 'fixture' for the built-in chain, or"
+        " ogmios://HOST:PORT to stream from a live Ogmios node",
     )
     ex.add_argument("--dest", required=True, help="lake output directory")
     ex.add_argument(
         "--start-point",
         default="origin",
-        help=f"slot number or preset ({', '.join(START_PRESETS)})",
+        help=f"preset ({', '.join(START_PRESETS)}), or a slot number for"
+        " file and fixture sources",
     )
     ex.add_argument("--stop-slot", type=int, default=None)
     ex.add_argument("--batch-size", type=int, default=100)
@@ -553,22 +461,6 @@ def build_parser() -> argparse.ArgumentParser:
     q.add_argument("--lake", default=None, help="lake root (default: fixture)")
     q.add_argument("--min-fee", type=int, default=2_000_000)
     q.add_argument("--limit", type=int, default=100)
-    q.add_argument(
-        "--at-version",
-        type=int,
-        default=None,
-        help="time travel: run against the tx table as of this pointer "
-        "version (see lake/generations.py::read_table_at; versions older "
-        "than the last vacuum are reclaimed)",
-    )
-    q.add_argument(
-        "--changes-since",
-        type=int,
-        default=None,
-        help="incremental: run against only the tx rows APPENDED since "
-        "this snapshot version (read_table_changes; refuses across a "
-        "maintenance rewrite)",
-    )
     q.set_defaults(func=_cmd_query)
 
     an = sub.add_parser(
@@ -600,86 +492,6 @@ def build_parser() -> argparse.ArgumentParser:
         " splits (md5-nibble assignment, reproducible on any engine)",
     )
     cu.set_defaults(func=_cmd_curate)
-
-    sp = sub.add_parser(
-        "savepoint",
-        help="list (default), create, or show a lake-level savepoint "
-        "(cross-table consistent time travel; see lake/savepoints.py)",
-    )
-    sp.add_argument("--lake", required=True, help="lake root")
-    sp.add_argument(
-        "--create",
-        action="store_true",
-        help="capture a new savepoint (takes the maintenance lock)",
-    )
-    sp.add_argument(
-        "--show",
-        type=int,
-        default=None,
-        help="print the pinned {table: version} map of this savepoint",
-    )
-    sp.add_argument(
-        "--drop",
-        type=int,
-        default=None,
-        help="release this savepoint's vacuum-retention pin (data reclaim "
-        "happens at the next vacuum, not here)",
-    )
-    sp.set_defaults(func=_cmd_savepoint)
-
-    hi = sub.add_parser(
-        "history",
-        help="DESCRIBE HISTORY: travel-able versions per table with "
-        "publish time, file counts, and appended/rewritten deltas",
-    )
-    hi.add_argument("--lake", required=True, help="lake root")
-    hi.add_argument(
-        "--table", default=None, help="one table (default: all data tables)"
-    )
-    hi.set_defaults(func=_cmd_history)
-
-    ch = sub.add_parser(
-        "changes",
-        help="incremental read across ALL tables: rows appended per table"
-        " between two published versions (anchor with --since-savepoint"
-        " for cross-table consistency); loud on windows containing"
-        " rewrites/deletions unless --allow-rewrites",
-    )
-    ch.add_argument("--lake", required=True, help="lake root")
-    ch.add_argument(
-        "--table", default=None, help="one table (default: all data tables)"
-    )
-    ch.add_argument(
-        "--since",
-        type=int,
-        default=None,
-        help="from-version applied to every table",
-    )
-    ch.add_argument(
-        "--since-savepoint",
-        type=int,
-        default=None,
-        help="resolve each table's from-version from this savepoint's"
-        " pinned map (preferred: cross-table consistent)",
-    )
-    ch.add_argument(
-        "--until",
-        type=int,
-        default=None,
-        help="to-version (default: each table's latest)",
-    )
-    ch.add_argument(
-        "--allow-rewrites",
-        action="store_true",
-        help="accept re-delivery of rewritten generations instead of"
-        " refusing (at-least-once semantics)",
-    )
-    ch.add_argument(
-        "--out",
-        default=None,
-        help="also write each table's delta as parquet under this dir",
-    )
-    ch.set_defaults(func=_cmd_changes)
 
     bz = sub.add_parser(
         "bucketize",

@@ -1,8 +1,8 @@
 """Scheme-agnostic file operations via the JVM's Hadoop FileSystem.
 
-Lake maintenance (generation pointers, manifests, the maintenance lock,
-savepoints) needs to list, read, write, and delete small control files
-next to the lake.
+Lake maintenance (generation pointers, manifests, the maintenance lock)
+needs to list, read, write, and delete small control files next to the
+lake.
 ``os``/``glob`` only work when the lake is on the driver's local disk; on
 a cluster the lake lives on HDFS/S3/GCS.  The JVM running the session
 already has the right ``FileSystem`` implementation for any path scheme,

@@ -17,9 +17,9 @@ shape Delta/Iceberg use for their commit:
   delete-then-replace window at all, and one flip commits ANY number of
   partition swaps atomically together.
 - Superseded data stays at its original path until
-  :func:`vacuum_superseded` — in-flight readers keep a consistent
-  snapshot; vacuum is pure space reclaim (Delta's ``VACUUM`` contract),
-  not a correctness step.
+  :func:`vacuum_superseded` — in-flight readers keep a consistent view;
+  vacuum is pure space reclaim (Delta's ``VACUUM`` contract), not a
+  correctness step.
 - APPENDS STAY SAFE with no coordination: supersession is per-FILE, and
   appended part files (always fresh names) are never in any superseded
   list, so generation-resolving readers see them immediately — before or
@@ -50,17 +50,11 @@ import re
 
 from pyspark.errors import AnalysisException
 from pyspark.sql import DataFrame, SparkSession
-from pyspark.sql import functions as F
 
 from .fsutil import LakeFs
 
 _POINTER_RE = re.compile(r"^_generations\.v(\d+)\.json$")
-_SNAPSHOT_RE = re.compile(r"^_snapshot\.v(\d+)\.json$")
 _GEN_RE = re.compile(r"^_gen__(.+)__g(\d+)$")
-# Lake-level savepoint files live at the TABLE'S PARENT (the lake root);
-# vacuum reads them to honor pins without importing lake.savepoints
-# (savepoints imports this module).
-_SAVEPOINT_RE = re.compile(r"^_savepoint\.v(\d+)\.json$")
 
 
 def _pointer_versions(lfs: LakeFs, table_dir: str) -> list[tuple[int, str]]:
@@ -87,31 +81,15 @@ def _publish(lfs: LakeFs, table_dir: str, mapping: dict[str, dict]) -> None:
     """Atomically publish ``mapping`` as the next pointer version.  The
     write goes to a NEW name (``write_text`` is tmp+rename underneath), so
     a reader resolving at any instant sees either the old or the new
-    complete mapping — never a gap.
-
-    Each publish also records a ``_snapshot.vN.json`` sidecar — the
-    explicit set of data files a reader of version N resolves (live hive
-    file names per entry + the entry's current generation dir), covering
-    EVERY partition entry including never-pointered ones.  The pointer
-    alone cannot reconstruct old versions (it names only superseded
-    files, so appends landing after version N would be indistinguishable
-    from files live AT N); the sidecar is what makes
-    :func:`read_table_at` time travel exact.  Sidecar first, pointer
-    second: a crash between the two leaves an orphan sidecar that the
-    retried publish simply overwrites (same version number — pointer
-    count is the source of truth).  A hive file appended concurrently
-    with a publish may miss version N's sidecar and appear in N+1's:
-    snapshot membership follows the publish order, matching the
-    reader-visible commit order of the pointer itself."""
+    complete mapping — never a gap."""
     root_parquet = [
         f for f in lfs.list_files(table_dir) if f.endswith(".parquet")
     ]
     if root_parquet:
-        # An unpartitioned table (parquet directly under the table dir)
-        # has no hive entries to snapshot — a pointer published over it
-        # would make read_table_at claim "holds no data files" while the
-        # live read serves data.  Refuse loudly rather than publish an
-        # unreconstructible version.
+        # A pointered read_table lists only the ``col=N`` partition
+        # entries (plus generation dirs), so parquet files directly under
+        # the table dir would silently drop out of every read once a
+        # pointer exists.  Refuse loudly instead.
         raise ValueError(
             f"generation management requires a hive-partitioned layout; "
             f"{table_dir} holds {len(root_parquet)} root-level parquet "
@@ -119,42 +97,10 @@ def _publish(lfs: LakeFs, table_dir: str, mapping: dict[str, dict]) -> None:
         )
     versions = _pointer_versions(lfs, table_dir)
     nxt = (versions[-1][0] + 1) if versions else 1
-    live = {
-        d
-        for d in lfs.list_dirs(table_dir)
-        if "=" in d and not d.startswith(("_", "."))
-    }
-    snap: dict[str, dict] = {}
-    for entry in sorted(live | set(mapping)):
-        st = mapping.get(entry) or {}
-        superseded = set(st.get("superseded", []))
-        names = sorted(
-            f.rsplit("/", 1)[-1]
-            for f in lfs.list_files(os.path.join(table_dir, entry))
-            if f.endswith(".parquet")
-            and f.rsplit("/", 1)[-1] not in superseded
-        )
-        snap[entry] = {"gen": st.get("gen"), "files": names}
-    lfs.write_text(
-        os.path.join(table_dir, f"_snapshot.v{nxt:06d}.json"),
-        json.dumps({"entries": snap}, sort_keys=True),
-    )
     lfs.write_text(
         os.path.join(table_dir, f"_generations.v{nxt:06d}.json"),
         json.dumps(mapping, sort_keys=True),
     )
-
-
-def snapshot_versions(lfs: LakeFs, table_dir: str) -> list[int]:
-    """Pointer versions whose snapshot sidecar exists — the time-travel
-    targets :func:`read_table_at` accepts (older ones are reclaimed by
-    vacuum, exactly like Delta's retention window)."""
-    out = []
-    for f in lfs.list_files(table_dir):
-        m = _SNAPSHOT_RE.match(f.rsplit("/", 1)[-1])
-        if m:
-            out.append(int(m.group(1)))
-    return sorted(out)
 
 
 def partition_entries(lfs: LakeFs, table_dir: str) -> list[str]:
@@ -411,287 +357,6 @@ def read_table(spark: SparkSession, table_dir: str) -> DataFrame:
     return out
 
 
-def _resolve_snapshot(
-    lfs: LakeFs, table_dir: str, version: int
-) -> tuple[list[str], list[str]]:
-    """(hive files, generation files) of snapshot ``version``; raises on
-    an unknown version or any vacuum-reclaimed path (never partial)."""
-    versions = snapshot_versions(lfs, table_dir)
-    if version not in versions:
-        have = versions if versions else "none (never published a pointer)"
-        raise ValueError(
-            f"no snapshot v{version} for {table_dir}: available versions "
-            f"are {have} — older snapshots are reclaimed by "
-            "vacuum_superseded"
-        )
-    snap = json.loads(
-        lfs.read_text(
-            os.path.join(table_dir, f"_snapshot.v{version:06d}.json")
-        )
-    )["entries"]
-    explicit_files: list[str] = []
-    gen_files: list[str] = []
-    missing: list[str] = []
-    for entry in sorted(snap):
-        st = snap[entry]
-        for name in st.get("files", []):
-            p = os.path.join(table_dir, entry, name)
-            if lfs.exists(p):
-                explicit_files.append(p)
-            else:
-                missing.append(p)
-        if st.get("gen"):
-            gdir = os.path.join(table_dir, st["gen"])
-            if lfs.exists(gdir):
-                gen_files.extend(generation_files(lfs, table_dir, st["gen"]))
-            else:
-                missing.append(gdir)
-    if missing:
-        raise ValueError(
-            f"snapshot v{version} of {table_dir} is no longer "
-            f"reconstructible — vacuum_superseded reclaimed "
-            f"{len(missing)} path(s), first: {missing[:3]}"
-        )
-    return explicit_files, gen_files
-
-
-def read_table_at(
-    spark: SparkSession, table_dir: str, version: int
-) -> DataFrame:
-    """Time travel: read the table exactly as pointer version ``version``
-    published it (Delta-style ``VERSION AS OF``).  Resolves the version's
-    snapshot sidecar to an explicit file set — live hive files read with
-    ``basePath`` so the partition column comes from the path, generation
-    files read by name (their partition column is in the data) — and
-    fails LOUD, naming every missing path, when vacuum has reclaimed any
-    of it: the retention window is "since the last vacuum", and a
-    silently partial snapshot would be worse than no snapshot.
-
-    Scale posture: resolving a version is pure control-plane work (one
-    sidecar read + per-file existence probes, no data listing); the plan
-    is the same explicit-file union ``read_table`` builds, so partition
-    pruning and column pushdown behave identically."""
-    lfs = LakeFs(spark, table_dir)
-    explicit_files, gen_files = _resolve_snapshot(lfs, table_dir, version)
-    branches = []
-    if explicit_files:
-        branches.append(
-            _remember_schema(
-                table_dir,
-                "hive",
-                _schema_reader(spark, table_dir, "hive")
-                .option("basePath", table_dir)
-                .parquet(*explicit_files),
-            )
-        )
-    if gen_files:
-        branches.append(
-            _remember_schema(
-                table_dir,
-                "gen",
-                _schema_reader(spark, table_dir, "gen").parquet(*gen_files),
-            )
-        )
-    if not branches:
-        raise ValueError(
-            f"snapshot v{version} of {table_dir} holds no data files "
-            "(every partition was dropped at that version)"
-        )
-    out = branches[0]
-    for b in branches[1:]:
-        out = out.unionByName(b)
-    return out
-
-
-def _snapshot_entries(
-    lfs: LakeFs, table_dir: str, version: int
-) -> dict[str, dict]:
-    """Raw per-entry snapshot state ({entry: {"gen", "files"}}) of
-    ``version``; loud on unknown versions like :func:`_resolve_snapshot`
-    (but without existence probes — callers resolve reads themselves)."""
-    versions = snapshot_versions(lfs, table_dir)
-    if version not in versions:
-        have = versions if versions else "none (never published a pointer)"
-        raise ValueError(
-            f"no snapshot v{version} for {table_dir}: available versions "
-            f"are {have} — older snapshots are reclaimed by "
-            "vacuum_superseded"
-        )
-    return json.loads(
-        lfs.read_text(
-            os.path.join(table_dir, f"_snapshot.v{version:06d}.json")
-        )
-    )["entries"]
-
-
-def read_table_changes(
-    spark: SparkSession,
-    table_dir: str,
-    from_version: int,
-    to_version: int,
-    allow_rewrites: bool = False,
-) -> DataFrame:
-    """Incremental read: the rows APPENDED between two published versions
-    — the change-data-feed shape a downstream pipeline needs to process
-    only what's new since its last run (dedup/curate/index the fresh
-    documents, not the whole lake).  File-level diff of the two snapshot
-    sidecars: per partition entry, hive files present at ``to_version``
-    but not at ``from_version``.
-
-    Maintenance rewrites are NOT appends: an entry whose generation dir
-    changed between the versions (compaction or rollback swapped it)
-    carries rewritten old rows in new files, so a file diff would
-    misreport them as new data.  Default is to refuse LOUD naming those
-    entries (diff across a pure-append window, e.g. between savepoints
-    taken around maintenance); ``allow_rewrites=True`` includes the new
-    generation's files, documented as re-delivered rewrites — the same
-    at-least-once contract Delta's CDF without commit-level changes
-    gives.
-
-    Scale posture: two sidecar reads and a set difference — pure
-    control-plane; the returned plan is an explicit-file scan with the
-    same pruning behavior as every other lake read.  Returns an EMPTY
-    frame (correct schema) when nothing was appended."""
-    lfs = LakeFs(spark, table_dir)
-    if from_version > to_version:
-        raise ValueError(
-            f"from_version v{from_version} is newer than to_version "
-            f"v{to_version}"
-        )
-    before = _snapshot_entries(lfs, table_dir, from_version)
-    after = _snapshot_entries(lfs, table_dir, to_version)
-    appended: list[str] = []
-    gen_files: list[str] = []
-    rewritten: list[str] = []
-    for entry, st in after.items():
-        old = before.get(entry, {})
-        old_files = set(old.get("files", []))
-        new_files = set(st.get("files", []))
-        # A rewrite is ANY non-append change, not just a generation swap:
-        # a rollback that drops hive files from a never-compacted entry
-        # publishes gen None -> None with the file set SHRINKING — the
-        # old-files-⊄-new-files test catches that, keeping the
-        # refuse-loud contract for windows containing deletions.
-        if st.get("gen") != old.get("gen") or not old_files <= new_files:
-            rewritten.append(entry)
-            if allow_rewrites and st.get("gen") != old.get("gen") and st.get(
-                "gen"
-            ):
-                gdir = os.path.join(table_dir, st["gen"])
-                if not lfs.exists(gdir):
-                    raise ValueError(
-                        f"changes v{from_version}->v{to_version} of "
-                        f"{table_dir} are no longer reconstructible — "
-                        f"vacuum reclaimed {gdir}"
-                    )
-                gen_files.extend(generation_files(lfs, table_dir, st["gen"]))
-        new_names = new_files - old_files
-        for name in sorted(new_names):
-            p = os.path.join(table_dir, entry, name)
-            if not lfs.exists(p):
-                raise ValueError(
-                    f"changes v{from_version}->v{to_version} of "
-                    f"{table_dir} are no longer reconstructible — vacuum "
-                    f"reclaimed {p}"
-                )
-            appended.append(p)
-    # Entries present at from_version but GONE at to_version are
-    # deletions (rollback dropping a whole never-compacted partition,
-    # then vacuum removing the emptied entry from the snapshot) — a file
-    # diff over ``after`` alone would silently certify such a window as
-    # pure-append.  They carry no new files to deliver, so with
-    # allow_rewrites they are accepted (and simply absent); without it
-    # they refuse loud like any other rewrite.
-    rewritten.extend(sorted(set(before) - set(after)))
-    if rewritten and not allow_rewrites:
-        raise ValueError(
-            f"entries {sorted(rewritten)} were REWRITTEN between "
-            f"v{from_version} and v{to_version} of {table_dir} (generation "
-            "swap: compaction/rollback) — a file diff would "
-            "re-deliver old rows as new.  Diff a pure-append window, or "
-            "pass allow_rewrites=True to accept re-delivery."
-        )
-    branches = []
-    if appended:
-        branches.append(
-            _schema_reader(spark, table_dir, "hive")
-            .option("basePath", table_dir)
-            .parquet(*appended)
-        )
-    if gen_files:
-        branches.append(
-            _schema_reader(spark, table_dir, "gen").parquet(*gen_files)
-        )
-    if not branches:
-        # nothing appended: an empty frame with the table's schema keeps
-        # downstream incremental jobs unconditional
-        return read_table_at(spark, table_dir, to_version).limit(0)
-    out = branches[0]
-    for b in branches[1:]:
-        out = out.unionByName(b)
-    return out
-
-
-def table_history(lfs: LakeFs, table_dir: str) -> list[dict]:
-    """Delta-style DESCRIBE HISTORY: one record per travel-able version —
-    the snapshot version, its publish time (sidecar mtime via the JVM
-    FileSystem, scheme-agnostic), partition-entry / file / generation
-    counts, and what changed vs the previous surviving version (appended
-    file count, rewritten entries).  Pure control-plane: sidecar reads
-    only, no data listing."""
-    out: list[dict] = []
-    prev: dict[str, dict] | None = None
-    for v in snapshot_versions(lfs, table_dir):
-        entries = _snapshot_entries(lfs, table_dir, v)
-        gens = {st["gen"] for st in entries.values() if st.get("gen")}
-        sig = lfs.content_signature(
-            os.path.join(table_dir, f"_snapshot.v{v:06d}.json")
-        )
-        rec: dict = {
-            "version": v,
-            "published_ms": sig[0][1] if sig else None,
-            "entries": len(entries),
-            "hive_files": sum(
-                len(st.get("files", [])) for st in entries.values()
-            ),
-            "generations": len(gens),
-        }
-        if prev is not None:
-            rec["appended_files"] = sum(
-                len(
-                    set(st.get("files", []))
-                    - set(prev.get(e, {}).get("files", []))
-                )
-                for e, st in entries.items()
-            )
-            # Same non-append test as read_table_changes: gen swap, file
-            # set shrink WITHOUT a swap (rollback on a never-compacted
-            # entry), or the entry disappearing from the snapshot.
-            rec["rewritten_entries"] = sorted(
-                {
-                    e
-                    for e, st in entries.items()
-                    if st.get("gen") != prev.get(e, {}).get("gen")
-                    or not set(prev.get(e, {}).get("files", []))
-                    <= set(st.get("files", []))
-                }
-                | (set(prev) - set(entries))
-            )
-        out.append(rec)
-        prev = entries
-    return out
-
-
-def data_paths_at(lfs: LakeFs, table_dir: str, version: int) -> list[str]:
-    """External-reader counterpart of :func:`read_table_at` (symmetric
-    with :func:`current_data_paths`): the explicit parquet paths of
-    snapshot ``version``, for DuckDB ``read_parquet([...])`` lists and
-    ad-hoc tools.  Same loud contract — unknown version or a
-    vacuum-reclaimed file raises instead of returning a partial list."""
-    explicit_files, gen_files = _resolve_snapshot(lfs, table_dir, version)
-    return sorted(explicit_files + gen_files)
-
-
 def current_data_paths(lfs: LakeFs, table_dir: str) -> list[str]:
     """Paths holding CURRENT data — whole hive dirs for unpointered
     entries, explicit non-superseded files plus the generation dir for
@@ -711,92 +376,30 @@ def current_data_paths(lfs: LakeFs, table_dir: str) -> list[str]:
     return sorted(out)
 
 
-def pinned_snapshot_versions(lfs: LakeFs, table_dir: str) -> set[int]:
-    """Snapshot versions of ``table_dir`` pinned by lake-level savepoints
-    (``_savepoint.v*.json`` files at the table's parent dir).  Pure
-    control-plane: one listing of the lake root + one tiny JSON read per
-    savepoint."""
-    norm = table_dir.rstrip("/")
-    root, table = os.path.dirname(norm), os.path.basename(norm)
-    if not root or not lfs.exists(root):
-        return set()
-    pinned: set[int] = set()
-    for f in lfs.list_files(root):
-        if _SAVEPOINT_RE.match(f.rsplit("/", 1)[-1]):
-            v = json.loads(lfs.read_text(f)).get("tables", {}).get(table)
-            if v is not None:
-                pinned.add(int(v))
-    return pinned
-
-
-def _pinned_refs(
-    lfs: LakeFs, table_dir: str, versions: set[int]
-) -> tuple[set[tuple[str, str]], set[str]]:
-    """({(entry, file name)}, {generation dir name}) referenced by the
-    given snapshot versions — name-relative so they compare against
-    listing results regardless of URI qualification.  Reads the raw
-    sidecars (no existence probes): vacuum must not fail just because an
-    old pin is already broken."""
-    files: set[tuple[str, str]] = set()
-    gen_dirs: set[str] = set()
-    for v in versions:
-        sidecar = os.path.join(table_dir, f"_snapshot.v{v:06d}.json")
-        if not lfs.exists(sidecar):
-            continue
-        snap = json.loads(lfs.read_text(sidecar))["entries"]
-        for entry, st in snap.items():
-            for name in st.get("files", []):
-                files.add((entry, name))
-            if st.get("gen"):
-                gen_dirs.add(st["gen"])
-    return files, gen_dirs
-
-
-def superseded_paths(
-    lfs: LakeFs, table_dir: str, keep_versions: set[int] | None = None
-) -> list[str]:
+def superseded_paths(lfs: LakeFs, table_dir: str) -> list[str]:
     """What vacuum would delete: superseded hive files, generation dirs
-    other than the current one per entry, old pointer versions, and old
-    snapshot sidecars.  Paths a ``keep_versions`` snapshot references are
-    excluded (savepoint retention), as are those sidecars themselves; old
-    pointer files always go (time travel resolves sidecars, never old
-    pointers)."""
+    other than the current one per entry, and old pointer versions."""
     pointer_versions = _pointer_versions(lfs, table_dir)
     if not pointer_versions:
         return []
-    keep = keep_versions or set()
-    keep_files, keep_gens = _pinned_refs(lfs, table_dir, keep)
-    # gens may be the EMPTY mapping (e.g. a savepoint republish of a
-    # never-compacted table): there is nothing data-side to reclaim, but
-    # old pointer/sidecar versions still accumulate and are handled below.
+    # gens may be the EMPTY mapping (every swap vacuumed down to gen-less
+    # state): there is nothing data-side to reclaim, but old pointer
+    # versions still accumulate and are handled below.
     gens = current_generations(lfs, table_dir)
     stale: list[str] = []
     current = {st["gen"] for st in gens.values() if st.get("gen")}
     for d in lfs.list_dirs(table_dir):
-        m = _GEN_RE.match(d)
-        if m and d not in current and d not in keep_gens:
+        if _GEN_RE.match(d) and d not in current:
             stale.append(os.path.join(table_dir, d))
     for entry, st in gens.items():
         superseded = set(st.get("superseded", []))
         if not superseded:
             continue
         for f in lfs.list_files(os.path.join(table_dir, entry)):
-            name = f.rsplit("/", 1)[-1]
-            if name in superseded and (entry, name) not in keep_files:
+            if f.rsplit("/", 1)[-1] in superseded:
                 stale.append(f)
     for _, f in pointer_versions[:-1]:
         stale.append(f)
-    # Snapshot sidecars older than the newest pointer reference the
-    # superseded files above — reclaim them together so a time-travel
-    # read can never resolve a half-deleted version.  The newest
-    # version's sidecar stays: its file set IS the current data, which
-    # vacuum keeps, so the latest snapshot remains readable after.
-    # Pinned sidecars stay too — their file sets were excluded above.
-    newest = pointer_versions[-1][0]
-    for f in lfs.list_files(table_dir):
-        m = _SNAPSHOT_RE.match(f.rsplit("/", 1)[-1])
-        if m and int(m.group(1)) < newest and int(m.group(1)) not in keep:
-            stale.append(f)
     return sorted(stale)
 
 
@@ -812,28 +415,15 @@ def unpublished_generation_dirs(lfs: LakeFs, table_dir: str) -> list[str]:
     return sorted(d for d in lfs.list_dirs(table_dir) if _GEN_RE.match(d))
 
 
-def vacuum_superseded(
-    spark: SparkSession, table_dir: str, keep_savepoints: bool = True
-) -> list[str]:
+def vacuum_superseded(spark: SparkSession, table_dir: str) -> list[str]:
     """Space reclaim (correctness never depends on it): delete superseded
     hive files, non-current generation dirs, and old pointer versions,
     then republish the pointer with supersede lists shrunk to what
-    remains.  Run when no reader is mid-query over the OLD snapshot — the
-    one residual non-transactional window, confined to an explicit step
-    exactly like Delta's VACUUM.
-
-    ``keep_savepoints`` (default) is Delta-style retention for lake-level
-    savepoints: snapshot versions a live ``_savepoint.v*.json`` at the
-    lake root pins keep their sidecar AND every data path the sidecar
-    references, so ``read_savepoint`` stays fully readable across any
-    number of vacuums.  ``savepoints.drop_savepoint`` releases the pin;
-    ``keep_savepoints=False`` restores unconditional reclaim (reading a
-    then-broken savepoint fails loud, never partial)."""
+    remains.  Run when no reader is mid-query over the superseded files —
+    the one residual non-transactional window, confined to an explicit
+    step exactly like Delta's VACUUM."""
     lfs = LakeFs(spark, table_dir)
-    pinned = (
-        pinned_snapshot_versions(lfs, table_dir) if keep_savepoints else set()
-    )
-    stale = superseded_paths(lfs, table_dir, keep_versions=pinned)
+    stale = superseded_paths(lfs, table_dir)
     for p in stale:
         lfs.delete_recursive(p)
     gens = current_generations(lfs, table_dir)
@@ -843,7 +433,8 @@ def vacuum_superseded(
     # the per-entry listing, and a table whose every swap has been
     # vacuumed down to gen-less state publishes the EMPTY mapping and
     # returns to the fully plain ``spark.read.parquet`` path.
-    # A superseded file a savepoint kept on disk MUST stay in the list —
+    # A superseded file still on disk (say, superseded by a swap that
+    # published after the listing above) MUST stay in the list —
     # dropping the name would resurrect it into the live read.
     cleaned = {}
     for e, st in gens.items():
@@ -871,16 +462,8 @@ def vacuum_superseded(
     if cleaned != gens:
         _publish(lfs, table_dir, cleaned)
         # the pre-clean version is now itself superseded; readers resolve
-        # the newest, so dropping it immediately is safe — and its
-        # snapshot sidecar goes with it (retention is "since the last
-        # vacuum", except versions a live savepoint pins)
-        newest = _pointer_versions(lfs, table_dir)[-1][0]
+        # the newest, so dropping it immediately is safe
         for _, f in _pointer_versions(lfs, table_dir)[:-1]:
             lfs.delete(f)
             stale.append(f)
-        for f in lfs.list_files(table_dir):
-            m = _SNAPSHOT_RE.match(f.rsplit("/", 1)[-1])
-            if m and int(m.group(1)) < newest and int(m.group(1)) not in pinned:
-                lfs.delete(f)
-                stale.append(f)
     return stale

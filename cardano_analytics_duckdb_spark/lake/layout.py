@@ -90,8 +90,8 @@ _LAYOUT_CACHE: dict[str, object] = {}
 # listing RPCs — a per-query listing storm at object-store scale (r12
 # advice).  Reads re-validate against a ONE-RPC shallow root listing
 # (entry-dir mtimes move on any direct child change on local/HDFS; gen
-# dirs and pointer/snapshot sidecars appear AT the root on every
-# maintenance swap), and a short TTL (seconds) bounds the residual
+# dirs and pointer files appear AT the root on every maintenance swap),
+# and a short TTL (seconds) bounds the residual
 # window on stores with synthetic dir mtimes where a bare append inside
 # an existing entry leaves the root listing unchanged.
 _SIG_CACHE: dict[str, tuple[float, tuple, list]] = {}
@@ -131,7 +131,7 @@ def _is_external_source(lfs: LakeFs, source_dir: str) -> bool:
     directly under the dir) — an EXTERNAL input this package reads but
     does not own, so its layout lives in the derived dir.  Lake roots
     (directory-tables this package created and maintains) host their
-    layout in-place, where savepoints/vacuum tooling can see it."""
+    layout in-place, so it travels with the lake."""
     return any(f.endswith(".parquet") for f in lfs.list_files(source_dir))
 
 
@@ -494,10 +494,11 @@ def bucketize(
             loc = os.path.join(d, key)
             changed = _incremental_entries(st, tokens, pcol, n_buckets)
             if changed is not None and not changed:
-                # control-plane-only churn (savepoint/pointer sidecars at
-                # the table root move the whole-dir signature without any
-                # entry's data changing): no rewrite, just re-record the
-                # signature so resolution serves the copy again
+                # control-plane-only churn (control files at the table
+                # root, such as a stats manifest build, move the
+                # whole-dir signature without any entry's data
+                # changing): no rewrite, just re-record the signature so
+                # resolution serves the copy again
                 pass
             elif changed is not None:
                 # PARTITION-INCREMENTAL refresh: at 100 TB a steady-state

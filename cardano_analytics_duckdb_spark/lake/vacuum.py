@@ -53,8 +53,8 @@ def vacuum_lake(spark: SparkSession, root: str) -> dict[str, list[str]]:
     maintenance lock for the scan AND the deletes — a held lock (live
     job, or crashed job not yet inspected) makes this refuse rather than
     delete a generation dir that is about to be published.  Like any
-    generation vacuum, run when no reader is mid-query over the OLD
-    snapshot."""
+    generation vacuum, run when no reader is mid-query over the
+    superseded files."""
     with maintenance_lock(spark, root, owner="vacuum_lake"):
         orphans = find_orphans(spark, root)
         lfs = LakeFs(spark, root)

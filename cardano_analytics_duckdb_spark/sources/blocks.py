@@ -146,8 +146,8 @@ def blocks_to_dataframe(
     return spark.createDataFrame(list(blocks), schema=BLOCK_SCHEMA)
 
 
-# Live chain-sync adapter: sources/chainsync.py (ChainSyncClient /
-# read_chain_sync) — findIntersection + pipelined nextBlock over a stdlib
-# RFC 6455 websocket, yielding this same dict shape.  CI exercises it
-# against an in-process fake node (tests/test_chainsync.py), staying
-# offline per SURVEY §7.5.
+# Live chain-sync adapter: sources/chainsync.py (ChainSyncClient, driven
+# by ``extract --blocks ogmios://HOST:PORT``) — findIntersection +
+# pipelined nextBlock over a stdlib RFC 6455 websocket, yielding this
+# same dict shape.  CI exercises it against an in-process fake node
+# (tests/test_chainsync.py), staying offline per SURVEY §7.5.

@@ -6,7 +6,7 @@ websocket: ``findIntersection`` once, then pipelined ``nextBlock`` requests
 ``next_block.send()``/``receive()`` pairs for throughput).  Yielded items
 use the exact dict shapes the offline replay path produces, so
 ``streaming.ingest.ingest_blocks(spark, client.stream(...), dest)`` works
-unchanged on a live node:
+unchanged on a live node, as ``extract --blocks ogmios://...`` does:
 
 - forward: the Ogmios block JSON (``{"type": "praos", "slot": ...,
   "height": ..., "transactions": [...]}``)
@@ -279,33 +279,3 @@ class ChainSyncClient:
             else:
                 yield {"direction": "backward", "point": payload, "tip": tip}
             self.next_block_send()
-
-
-def read_chain_sync(
-    spark,
-    host: str,
-    port: int = 1337,
-    *,
-    start_point: dict | str = "origin",
-    stop_slot: int | None = None,
-    batch_size: int = 100,
-):
-    """Typed block DataFrame pulled from a live node — the one-call path
-    from websocket to the same BLOCK_SCHEMA the replay sources produce.
-
-    Rollback events are dropped here (a bounded historical pull cannot act
-    on them); streaming ingestion should consume ``client.stream()``
-    directly so ``ingest_blocks`` can count and reconcile.
-    """
-    from .blocks import blocks_to_dataframe
-
-    with ChainSyncClient(host, port) as client:
-        client.find_intersection([start_point])
-        blocks = [
-            b
-            for b in client.stream(
-                batch_size=batch_size, stop_slot=stop_slot
-            )
-            if b.get("direction") != "backward"
-        ]
-    return blocks_to_dataframe(spark, blocks)

@@ -885,7 +885,9 @@ def _compact_table(spark: SparkSession, lfs, src: str, vacuum: str) -> None:
     # reclaims superseded dirs before returning (safe in a stop-the-world
     # window); ``vacuum="defer"`` leaves them for an explicit
     # ``vacuum_superseded`` after in-flight readers drain (zero reader
-    # impact; ingest refuses to append until the vacuum runs).
+    # impact).  Appends need not wait for that vacuum: supersession is
+    # per-file and an append always writes fresh file names, so rows
+    # appended before or after it are read correctly.
     # coalesce(1) mirrors the reference's one-file-per-partition output;
     # partitions are slot_group-bounded, so a single file stays
     # row-group sized.

@@ -29,7 +29,6 @@ _SLOW_MODULES = {
     "test_cli",
     "test_generations",
     "test_generations_model",
-    "test_savepoints",
     "test_manifest",
     "test_vacuum",
     "test_zorder",

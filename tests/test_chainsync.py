@@ -17,7 +17,6 @@ import threading
 import pytest
 
 from cardano_analytics_duckdb_spark.lake.fixtures import fixture_blocks
-from cardano_analytics_duckdb_spark.sources.blocks import BLOCK_SCHEMA
 from cardano_analytics_duckdb_spark.sources.chainsync import (
     OP_CLOSE,
     OP_PING,
@@ -25,7 +24,6 @@ from cardano_analytics_duckdb_spark.sources.chainsync import (
     ChainSyncClient,
     decode_frame,
     encode_frame,
-    read_chain_sync,
     recv_message,
     ws_accept_key,
 )
@@ -368,11 +366,58 @@ def test_reconciled_live_rollback_converges_to_honest_chain(spark, tmp_path):
     assert tx.count() == sum(len(b["transactions"]) for b in blocks)
 
 
-def test_read_chain_sync_dataframe(spark):
+def _tx_rows(spark, lake):
+    from cardano_analytics_duckdb_spark.lake.generations import read_table
+
+    return sorted(map(tuple, read_table(spark, f"{lake}/tx").collect()))
+
+
+def test_extract_streams_from_ogmios(spark, tmp_path, capsys):
+    """``extract --blocks ogmios://HOST:PORT`` streams a live node into
+    the same tx rows as the fixture replay; the one rollback it reports
+    is the roll-to-intersection preamble."""
+    from cardano_analytics_duckdb_spark.cli import main
+
+    node = FakeOgmios(fixture_blocks())
+    live, replay = str(tmp_path / "live"), str(tmp_path / "replay")
+    assert main(
+        ["extract", "--blocks", f"ogmios://127.0.0.1:{node.port}",
+         "--dest", live],
+        spark=spark,
+    ) == 0
+    stats = json.loads(capsys.readouterr().out.strip().splitlines()[-1])
+    assert stats["rollbacks"] == 1
+    assert main(
+        ["extract", "--blocks", "fixture", "--dest", replay], spark=spark
+    ) == 0
+    assert _tx_rows(spark, live) == _tx_rows(spark, replay)
+
+
+def test_extract_from_ogmios_starts_at_the_preset_point(
+    spark, tmp_path, capsys, monkeypatch
+):
+    """A preset's (slot, hash) is the findIntersection point, so the
+    stream starts right after that block; a bare slot number has no
+    block id and is refused before any connection is made."""
+    from cardano_analytics_duckdb_spark import cli
+
     blocks = fixture_blocks()
+    mid = blocks[len(blocks) // 2]
     node = FakeOgmios(blocks)
-    df = read_chain_sync(spark, "127.0.0.1", node.port, batch_size=64)
-    assert df.schema == BLOCK_SCHEMA
-    assert df.count() == len(blocks)
-    got_slots = [r.slot for r in df.select("slot").orderBy("slot").collect()]
-    assert got_slots == sorted(b["slot"] for b in blocks)
+    dest = str(tmp_path / "live")
+    monkeypatch.setitem(
+        cli.START_PRESETS, "fixture_mid", (mid["slot"], "ab" * 32)
+    )
+    assert cli.main(
+        ["extract", "--blocks", f"ogmios://127.0.0.1:{node.port}",
+         "--start-point", "fixture_mid", "--dest", dest],
+        spark=spark,
+    ) == 0
+    stats = json.loads(capsys.readouterr().out.strip().splitlines()[-1])
+    assert stats["blocks"] == len(blocks) - len(blocks) // 2 - 1
+    with pytest.raises(SystemExit, match="preset"):
+        cli.main(
+            ["extract", "--blocks", "ogmios://127.0.0.1:1",
+             "--start-point", str(mid["slot"]), "--dest", dest],
+            spark=spark,
+        )

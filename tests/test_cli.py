@@ -27,45 +27,6 @@ def test_extract_then_query_roundtrip(spark, tmp_path, capsys):
     assert "transactions by fee" in out and "Summary: n=" in out
 
 
-def test_query_at_version_time_travel(spark, tmp_path, capsys):
-    """--at-version runs the high-fee report against a pinned snapshot:
-    the newest version reproduces the live report, and an unknown
-    version fails loud listing what is available."""
-    import pytest
-
-    from cardano_analytics_duckdb_spark.lake.fsutil import LakeFs
-    from cardano_analytics_duckdb_spark.lake.generations import (
-        snapshot_versions,
-    )
-
-    dest = str(tmp_path / "lake")
-    assert (
-        main(
-            ["extract", "--blocks", "fixture", "--dest", dest, "--compact"],
-            spark=spark,
-        )
-        == 0
-    )
-    capsys.readouterr()
-    assert main(["query", "--lake", dest, "--min-fee", "0"], spark=spark) == 0
-    live = capsys.readouterr().out
-    v = snapshot_versions(LakeFs(spark, dest), os.path.join(dest, "tx"))[-1]
-    rc = main(
-        ["query", "--lake", dest, "--min-fee", "0", "--at-version", str(v)],
-        spark=spark,
-    )
-    assert rc == 0
-    out = capsys.readouterr().out
-    assert f"time travel: tx as of pointer version {v}" in out
-    # identical report body (modulo the time-travel banner line)
-    assert out.splitlines()[1:] == live.splitlines()
-    with pytest.raises(ValueError, match="available versions"):
-        main(
-            ["query", "--lake", dest, "--min-fee", "0", "--at-version", "99"],
-            spark=spark,
-        )
-
-
 def test_analyze_token_fixture(spark, capsys, tmp_path):
     csv_path = str(tmp_path / "transfers_csv")
     rc = main(

@@ -151,108 +151,6 @@ def test_recompaction_merges_generation_and_appends(spark, lake):
         assert st["superseded"] == []
 
 
-def _canon_tx(df):
-    return sorted(
-        (r["slot"], bytes(r["tx_id"]).hex(), r["tx_fee"])
-        for r in df.select("slot", "tx_id", "tx_fee").collect()
-    )
-
-
-def test_time_travel_reads_each_published_version(spark, lake):
-    """read_table_at(v) reproduces the table exactly as version v
-    published it: v1 = the first compaction's state, v2 = the
-    recompaction folding later appends; both stay bit-stable after the
-    head moves on, and the head always equals the newest version."""
-    from cardano_analytics_duckdb_spark.lake.generations import (
-        read_table_at,
-        snapshot_versions,
-    )
-
-    tx = os.path.join(lake, "tx")
-    # vacuum="defer" retains history — compact's default vacuum="end"
-    # reclaims old snapshots immediately (retention == since last vacuum)
-    compact_lake(spark, lake, vacuum="defer")  # publishes v1
-    at_v1 = _canon_tx(read_table(spark, tx))
-    ingest_blocks(spark, fixture_blocks()[8:12], lake, batch_size=1)
-    compact_lake(spark, lake, vacuum="defer")  # publishes v2
-    at_v2 = _canon_tx(read_table(spark, tx))
-    assert at_v1 != at_v2  # the appends changed the table
-
-    lfs = LakeFs(spark, lake)
-    versions = snapshot_versions(lfs, tx)
-    assert len(versions) >= 2
-    assert _canon_tx(read_table_at(spark, tx, versions[0])) == at_v1
-    assert _canon_tx(read_table_at(spark, tx, versions[-1])) == at_v2
-
-    # external-reader symmetry: DuckDB over the explicit snapshot paths
-    # sees the same row count as the Spark time-travel read
-    import duckdb
-
-    from cardano_analytics_duckdb_spark.lake.generations import data_paths_at
-
-    paths = [p.removeprefix("file:") for p in data_paths_at(lfs, tx, versions[0])]
-    n = duckdb.connect().execute(
-        "SELECT count(*) FROM read_parquet($1)", [paths]
-    ).fetchone()[0]
-    assert n == len(at_v1)
-
-
-def test_time_travel_across_rollback(spark, lake):
-    """A rollback is just another published version: the pre-rollback
-    snapshot stays readable (deferred vacuum) and returns the FULL
-    pre-rollback data, while the head reads the rolled-back table."""
-    from cardano_analytics_duckdb_spark.lake.generations import (
-        read_table_at,
-        snapshot_versions,
-    )
-
-    tx = os.path.join(lake, "tx")
-    compact_lake(spark, lake, vacuum="defer")
-    before = _canon_tx(read_table(spark, tx))
-    full = read_table(spark, tx)
-    to_slot = int(full.approxQuantile("slot", [0.5], 0.0)[0])
-    lfs = LakeFs(spark, lake)
-    v_before = snapshot_versions(lfs, tx)[-1]
-    rollback_lake(spark, lake, to_slot, vacuum="defer")
-    after = _canon_tx(read_table(spark, tx))
-    assert len(after) < len(before)
-    assert _canon_tx(read_table_at(spark, tx, v_before)) == before
-    v_after = snapshot_versions(lfs, tx)[-1]
-    assert v_after > v_before
-    assert _canon_tx(read_table_at(spark, tx, v_after)) == after
-
-
-def test_time_travel_fails_loud_after_vacuum(spark, lake):
-    """Vacuum bounds the retention window: old versions' snapshots are
-    reclaimed with their files, a reclaimed version read raises naming
-    vacuum, and the NEWEST version survives vacuum readable (its file
-    set is the current data)."""
-    import pytest as _pytest
-
-    from cardano_analytics_duckdb_spark.lake.generations import (
-        read_table_at,
-        snapshot_versions,
-    )
-
-    tx = os.path.join(lake, "tx")
-    compact_lake(spark, lake, vacuum="defer")
-    ingest_blocks(spark, fixture_blocks()[8:12], lake, batch_size=1)
-    compact_lake(spark, lake, vacuum="defer")
-    lfs = LakeFs(spark, lake)
-    v_old = snapshot_versions(lfs, tx)[0]
-    vacuum_superseded(spark, tx)
-    with _pytest.raises(ValueError, match="vacuum"):
-        read_table_at(spark, tx, v_old)
-    remaining = snapshot_versions(lfs, tx)
-    assert v_old not in remaining
-    assert remaining, "newest snapshot must survive vacuum"
-    head = _canon_tx(read_table(spark, tx))
-    assert _canon_tx(read_table_at(spark, tx, remaining[-1])) == head
-    # unknown version: loud, lists what IS available
-    with _pytest.raises(ValueError, match="available versions"):
-        read_table_at(spark, tx, 9999)
-
-
 def test_untouched_table_reads_plain(spark, lake):
     """No pointer file -> read_table is the plain parquet scan (same
     plan), so the 133 registered queries pay nothing for this layer."""
@@ -389,10 +287,9 @@ def test_next_generation_dir_rejects_non_integral_entries(spark, tmp_path):
 
 
 def test_vacuum_reclaims_control_files_of_empty_mapping(spark, tmp_path):
-    """ADVICE r10: a table stuck in the empty-mapping state (e.g. a
-    never-compacted table that savepoints keep republishing with {})
-    must not accumulate pointer/snapshot versions forever — vacuum
-    reclaims all but the newest pair."""
+    """ADVICE r10: a table stuck in the empty-mapping state (every swap
+    vacuumed down to gen-less entries) must not accumulate pointer
+    versions forever — vacuum reclaims all but the newest."""
     from cardano_analytics_duckdb_spark.lake.generations import _publish
 
     root = str(tmp_path / "emptylake")
@@ -402,30 +299,23 @@ def test_vacuum_reclaims_control_files_of_empty_mapping(spark, tmp_path):
         "tx_id long, slot long, slot_group long",
     ).write.partitionBy("slot_group").parquet(t)
     lfs = LakeFs(spark, t)
-    for _ in range(3):  # three {} republishes (savepoint pattern)
+    for _ in range(3):  # three {} publishes
         _publish(lfs, t, {})
-    control = [
-        f
-        for f in lfs.list_files(t)
-        if "_generations.v" in f or "_snapshot.v" in f
-    ]
-    assert len(control) == 6
+    pointers = [f for f in lfs.list_files(t) if "_generations.v" in f]
+    assert len(pointers) == 3
     reclaimed = vacuum_superseded(spark, t)
-    assert len(reclaimed) == 4, reclaimed  # 2 old pointers + 2 sidecars
-    remaining = [
-        f
-        for f in lfs.list_files(t)
-        if "_generations.v" in f or "_snapshot.v" in f
-    ]
-    assert len(remaining) == 2
+    assert len(reclaimed) == 2, reclaimed  # the 2 old pointers
+    remaining = [f for f in lfs.list_files(t) if "_generations.v" in f]
+    assert len(remaining) == 1
     # the table still reads (plain path: mapping is {})
     assert read_table(spark, t).count() == 4
 
 
 def test_publish_refuses_unpartitioned_table(spark, tmp_path):
-    """ADVICE r10: a pointer over root-level parquet files would snapshot
-    as empty and make time travel claim 'holds no data files' — publish
-    fails loud instead."""
+    """ADVICE r10: a pointered read_table lists only the ``col=N``
+    partition entries, so root-level parquet files would silently drop
+    out of every read once a pointer exists — publish fails loud
+    instead."""
     from cardano_analytics_duckdb_spark.lake.generations import _publish
 
     t = str(tmp_path / "flat")
@@ -437,123 +327,29 @@ def test_publish_refuses_unpartitioned_table(spark, tmp_path):
         _publish(lfs, t, {})
 
 
-def test_read_table_changes_between_savepoints(spark, lake):
-    """Incremental read (r11): the rows appended between two published
-    versions — exactly the delta, empty when nothing changed, loud when
-    the window crosses a maintenance rewrite unless re-delivery is
-    explicitly accepted."""
-    from cardano_analytics_duckdb_spark.lake.generations import (
-        read_table_changes,
-        snapshot_versions,
-    )
-    from cardano_analytics_duckdb_spark.lake.savepoints import (
-        create_savepoint,
-    )
-
+def test_maintenance_commits_write_only_pointer_files(spark, lake):
+    """Each commit that compaction or rollback makes writes one control
+    file, the table's next ``_generations.v*.json`` pointer, and no
+    ``_snapshot.v*`` sidecar; vacuum then leaves exactly the newest
+    pointer per table."""
     tx = os.path.join(lake, "tx")
-    lfs = LakeFs(spark, tx)
-    create_savepoint(spark, lake)
-    v1 = snapshot_versions(lfs, tx)[-1]
-    n1 = read_table(spark, tx).count()
-
-    ingest_blocks(spark, fixture_blocks()[8:12], lake, batch_size=1)
-    create_savepoint(spark, lake)
-    v2 = snapshot_versions(lfs, tx)[-1]
-    n2 = read_table(spark, tx).count()
-
-    delta = read_table_changes(spark, tx, v1, v2)
-    assert delta.count() == n2 - n1 > 0
-    assert delta.schema == read_table(spark, tx).schema
-    # same-version diff: empty, schema intact, no error
-    empty = read_table_changes(spark, tx, v1, v1)
-    assert empty.count() == 0 and len(empty.schema) > 0
-    with pytest.raises(ValueError, match="newer than"):
-        read_table_changes(spark, tx, v2, v1)
-
-    # a compaction between versions is a rewrite, not an append
     compact_lake(spark, lake, vacuum="defer")
-    v3 = snapshot_versions(lfs, tx)[-1]
-    with pytest.raises(ValueError, match="REWRITTEN"):
-        read_table_changes(spark, tx, v2, v3)
-    redelivered = read_table_changes(spark, tx, v2, v3, allow_rewrites=True)
-    assert redelivered.count() == n2  # the swapped generation re-delivers
+    to_slot = int(read_table(spark, tx).approxQuantile("slot", [0.5], 0.0)[0])
+    rollback_lake(spark, lake, to_slot, vacuum="defer")
 
+    def named(td, prefix):
+        return [n for n in os.listdir(td) if n.startswith(prefix)]
 
-def test_read_table_changes_detects_deletions(spark, lake):
-    """ADVICE r11 (medium): a rollback that fully drops a never-compacted
-    partition publishes gen None -> None with the entry's files shrinking
-    to [], and a later vacuum removes the entry from the snapshot — both
-    are DELETIONS a file diff must refuse to certify as pure-append."""
-    from cardano_analytics_duckdb_spark.lake.generations import (
-        read_table_changes,
-        snapshot_versions,
-        table_history,
-    )
-    from cardano_analytics_duckdb_spark.lake.savepoints import (
-        create_savepoint,
-    )
-
-    tx = os.path.join(lake, "tx")
-    lfs = LakeFs(spark, tx)
-    create_savepoint(spark, lake)
-    v1 = snapshot_versions(lfs, tx)[-1]
-
-    # Fully drop the (never-compacted) partition; defer vacuum so the
-    # entry survives in the snapshot with a SHRUNKEN file set and no
-    # generation swap (gen None -> None).
-    rollback_lake(spark, lake, to_slot=0, vacuum="defer")
-    v2 = snapshot_versions(lfs, tx)[-1]
-    gens = current_generations(lfs, tx)
-    assert any(
-        st.get("gen") is None and st.get("superseded") for st in gens.values()
-    )
-    with pytest.raises(ValueError, match="REWRITTEN"):
-        read_table_changes(spark, tx, v1, v2)
-    # table_history flags the same window
-    hist = {h["version"]: h for h in table_history(lfs, tx)}
-    assert hist[v2]["rewritten_entries"]
-
-    # vacuum reclaims the emptied entry from the snapshot entirely —
-    # entry present in `before`, absent from `after` is also a deletion
-    vacuum_superseded(spark, lake)
-    v3 = snapshot_versions(lfs, tx)[-1]
-    if v3 != v2:  # vacuum published a new snapshot without the entry
-        with pytest.raises(ValueError, match="REWRITTEN"):
-            read_table_changes(spark, tx, v1, v3)
-        hist = {h["version"]: h for h in table_history(lfs, tx)}
-        assert hist[v3]["rewritten_entries"]
-
-
-def test_read_table_changes_detects_dropped_entry(spark, tmp_path):
-    """Entry present at from_version, GONE at to_version (vacuum removed
-    an emptied partition from the snapshot): refuse-loud, exercised
-    against synthetic sidecars so it can't depend on vacuum's publish
-    timing."""
-    import json
-
-    from cardano_analytics_duckdb_spark.lake.generations import (
-        read_table_changes,
-        table_history,
-    )
-
-    t = str(tmp_path / "t")
-    spark.createDataFrame(
-        [(1, 7)], "slot_group long, v long"
-    ).write.partitionBy("slot_group").parquet(t)
-    lfs = LakeFs(spark, t)
-    part_file = lfs.list_files(os.path.join(t, "slot_group=1"))[0]
-    name = part_file.rsplit("/", 1)[-1]
-    lfs.write_text(
-        os.path.join(t, "_snapshot.v000001.json"),
-        json.dumps(
-            {"entries": {"slot_group=1": {"gen": None, "files": [name]}}}
-        ),
-    )
-    lfs.write_text(
-        os.path.join(t, "_snapshot.v000002.json"),
-        json.dumps({"entries": {}}),
-    )
-    with pytest.raises(ValueError, match="slot_group=1.*REWRITTEN"):
-        read_table_changes(spark, t, 1, 2)
-    hist = {h["version"]: h for h in table_history(lfs, t)}
-    assert hist[2]["rewritten_entries"] == ["slot_group=1"]
+    touched = [
+        td
+        for t in sorted(os.listdir(lake))
+        if not t.startswith(("_", "."))
+        and named(td := os.path.join(lake, t), "_gen__")
+    ]
+    assert tx in touched
+    assert len(named(tx, "_generations.v")) == 2  # compaction + rollback
+    for td in touched:
+        assert named(td, "_generations.v"), td
+        assert not named(td, "_snapshot.v"), td
+        vacuum_superseded(spark, td)
+        assert len(named(td, "_generations.v")) == 1, td

@@ -23,7 +23,6 @@ import random
 import pyspark.sql.functions as F
 import pytest
 
-from cardano_analytics_duckdb_spark.lake.fsutil import LakeFs
 from cardano_analytics_duckdb_spark.lake.generations import (
     read_table,
     vacuum_superseded,
@@ -287,204 +286,6 @@ def _run_binary_walk(spark, root: str, seed: int, n_steps: int):
         )
 
 
-def test_random_walk_savepoints_retention_and_changes(spark, tmp_path):
-    """r11 walk: savepoints, vacuum retention, and incremental reads
-    interleaved with the full maintenance op set.  Invariants after
-    EVERY step: (1) every live savepoint reads back exactly the model
-    state it captured — across compaction, rollback, and
-    default (pinning) vacuums; (2) a savepoint broken by an explicit
-    keep_savepoints=False vacuum fails LOUD, never partial; (3)
-    read_table_changes over a pure-append window returns exactly the
-    appended rows, and over a window containing a rewrite either refuses
-    or (allow_rewrites) re-delivers a superset of the appends bounded by
-    the cut's live rows."""
-    _run_savepoint_walk(spark, str(tmp_path), 20260816, 16)
-
-
-def _run_savepoint_walk(spark, root: str, seed: int, n_steps: int):
-    from cardano_analytics_duckdb_spark.lake.generations import (
-        read_table_changes,
-        snapshot_versions,
-    )
-    from cardano_analytics_duckdb_spark.lake.savepoints import (
-        create_savepoint,
-        drop_savepoint,
-        read_savepoint,
-    )
-
-    rng = random.Random(seed)
-    t = os.path.join(root, "t")
-    lfs = LakeFs(spark, t)
-    model: dict[int, tuple[str, int, int]] = {}
-    next_key = 0
-
-    def fresh_rows(n):
-        nonlocal next_key
-        out = []
-        for _ in range(n):
-            slot = rng.randrange(0, 300)
-            g = (slot // 100) * 100
-            out.append((next_key, f"v{next_key}", slot, g))
-            model[next_key] = (f"v{next_key}", slot, g)
-            next_key += 1
-        return out
-
-    spark.createDataFrame(fresh_rows(6), SCHEMA).write.mode(
-        "append"
-    ).partitionBy("slot_group").parquet(t)
-
-    # sp id -> (model copy, t's pinned snapshot version)
-    live_sps: dict[int, tuple[dict | None, int]] = {}
-    # the most recent cut (model copy, version) + whether any
-    # gen-swapping op ran since it — the pure-append-window tracker for
-    # the incremental-read check
-    last_cut: tuple[dict, int] | None = None
-    rewrote = False
-
-    def _sp_rows(sp):
-        dfs = read_savepoint(spark, root, sp)
-        if "t" not in dfs:
-            return None  # captured while empty
-        return sorted(
-            map(
-                tuple,
-                dfs["t"].select("k", "v", "slot", "slot_group").collect(),
-            )
-        )
-
-    ops = ["append", "compact", "rollback", "vacuum",
-           "savepoint", "savepoint", "drop_savepoint", "vacuum_nokeep"]
-    history = []
-    for step in range(n_steps):
-        op = rng.choice(ops)
-        history.append(op)
-        if op == "append":
-            spark.createDataFrame(
-                fresh_rows(rng.randint(1, 4)), SCHEMA
-            ).write.mode("append").partitionBy("slot_group").parquet(t)
-        elif op == "compact":
-            with maintenance_lock(spark, root, owner=f"walk-{step}"):
-                _compact_lake_locked(
-                    spark, root, tables=["t"],
-                    vacuum=rng.choice(["end", "defer"]),
-                )
-            rewrote = True
-        elif op == "rollback":
-            to_slot = rng.choice([60, 140, 230])
-            with maintenance_lock(spark, root, owner=f"walk-{step}"):
-                _rollback_lake_locked(
-                    spark, root, to_slot, tables=["t"],
-                    vacuum=rng.choice(["end", "defer"]),
-                )
-            for k in [k for k, (_, s, _) in model.items() if s > to_slot]:
-                del model[k]
-            rewrote = True
-        elif op == "vacuum":
-            vacuum_superseded(spark, t)  # keep_savepoints default ON
-        elif op == "vacuum_nokeep":
-            vacuum_superseded(spark, t, keep_savepoints=False)
-            # savepoints below the surviving newest snapshot are broken
-            # by design: they must now fail LOUD (invariant 2), and leave
-            # the tracked set
-            for sp in sorted(live_sps):
-                copy, v = live_sps[sp]
-                if copy and v not in snapshot_versions(lfs, t):
-                    with pytest.raises(ValueError, match="vacuum"):
-                        read_savepoint(spark, root, sp)
-                    del live_sps[sp]
-        elif op == "drop_savepoint":
-            if not live_sps:
-                continue
-            sp = rng.choice(sorted(live_sps))
-            drop_savepoint(spark, root, sp)
-            del live_sps[sp]
-            with pytest.raises(ValueError, match="no savepoint"):
-                read_savepoint(spark, root, sp)
-        elif op == "savepoint":
-            sp = create_savepoint(spark, root)
-            if model:
-                v = snapshot_versions(lfs, t)[-1]
-                live_sps[sp] = (dict(model), v)
-                # invariant 3: incremental read over a pure-append window
-                # (no gen swap since the previous cut, cut still readable)
-                if (
-                    last_cut
-                    and not rewrote
-                    and last_cut[1] in snapshot_versions(lfs, t)
-                ):
-                    pc, pv = last_cut
-                    appends = sorted(
-                        (k, val, s, g)
-                        for k, (val, s, g) in model.items()
-                        if k not in pc
-                    )
-                    got = sorted(
-                        map(
-                            tuple,
-                            read_table_changes(spark, t, pv, v)
-                            .select("k", "v", "slot", "slot_group")
-                            .collect(),
-                        )
-                    )
-                    assert got == appends, (
-                        f"pure-append changes diverged at step {step};"
-                        f" history={history}"
-                    )
-                last_cut = (dict(model), v)
-            else:
-                live_sps[sp] = (None, -1)
-                last_cut = None
-            rewrote = False
-
-        # invariant 1: every live savepoint reads back its exact cut
-        for sp, (copy, v) in live_sps.items():
-            if copy is None:
-                assert "t" not in read_savepoint(spark, root, sp)
-                continue
-            assert _sp_rows(sp) == sorted(
-                (k, val, s, g) for k, (val, s, g) in copy.items()
-            ), f"savepoint {sp} cut drifted at step {step}; history={history}"
-        if model:
-            assert _lake_rows(spark, t) == _model_rows(model), (
-                f"live divergence after step {step} ({op});"
-                f" history={history}"
-            )
-
-    # a window KNOWN to contain a rewrite must refuse or re-deliver
-    sp_a = create_savepoint(spark, root)
-    a_model, a_v = dict(model), (
-        snapshot_versions(lfs, t)[-1] if model else -1
-    )
-    spark.createDataFrame(fresh_rows(2), SCHEMA).write.mode(
-        "append"
-    ).partitionBy("slot_group").parquet(t)
-    with maintenance_lock(spark, root, owner="walk-final"):
-        _compact_lake_locked(spark, root, tables=["t"], vacuum="defer")
-    sp_b = create_savepoint(spark, root)
-    b_v = snapshot_versions(lfs, t)[-1]
-    if a_model and model:
-        with pytest.raises(ValueError, match="REWRITTEN"):
-            read_table_changes(spark, t, a_v, b_v)
-        redelivered = sorted(
-            map(
-                tuple,
-                read_table_changes(
-                    spark, t, a_v, b_v, allow_rewrites=True
-                )
-                .select("k", "v", "slot", "slot_group")
-                .collect(),
-            )
-        )
-        appends = {
-            (k, val, s, g)
-            for k, (val, s, g) in model.items()
-            if k not in a_model
-        }
-        assert appends <= set(redelivered) <= {
-            (k, val, s, g) for k, (val, s, g) in model.items()
-        }
-
-
 # -- soak mode ----------------------------------------------------------------
 # The CI walks run ONE pinned seed each (deterministic, fast).  Set
 # SOAK_SEEDS=N to additionally sweep N fresh seeds per walk — the
@@ -510,11 +311,3 @@ def test_soak_generation_walk(spark, tmp_path, i):
 @pytest.mark.parametrize("i", range(_SOAK))
 def test_soak_binary_walk(spark, tmp_path, i):
     _run_binary_walk(spark, str(tmp_path), 20260815 + 1 + _SOAK_OFF + i, 14)
-
-
-@pytest.mark.skipif(not _SOAK, reason="soak: set SOAK_SEEDS=N to enable")
-@pytest.mark.parametrize("i", range(_SOAK))
-def test_soak_savepoint_walk(spark, tmp_path, i):
-    _run_savepoint_walk(
-        spark, str(tmp_path), 20260816 + 1 + _SOAK_OFF + i, 16
-    )

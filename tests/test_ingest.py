@@ -532,8 +532,8 @@ def test_rollback_job_budget_and_rewrites(spark, tmp_path):
     publishes no new pointer version."""
     from cardano_analytics_duckdb_spark.lake.fsutil import LakeFs
     from cardano_analytics_duckdb_spark.lake.generations import (
+        _pointer_versions,
         read_table,
-        snapshot_versions,
     )
     from cardano_analytics_duckdb_spark.streaming.ingest import rollback_lake
 
@@ -563,7 +563,7 @@ def test_rollback_job_budget_and_rewrites(spark, tmp_path):
         }
 
     def versions():
-        return {t: snapshot_versions(lfs, f"{dest}/{t}") for t in tables}
+        return {t: _pointer_versions(lfs, f"{dest}/{t}") for t in tables}
 
     # Both rollbacks below touch every slot_group (the boundary group is
     # 0), so every table holding rows runs its one aggregate.

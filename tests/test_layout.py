@@ -221,16 +221,12 @@ def test_streaming_lake_layout_follows_compaction(spark, layout_env, tmp_path):
     assert _lake(spark, "tx", root).count() == n1
 
 
-def test_changes_and_bucketize_cli(spark, tmp_path, capsys, monkeypatch):
-    """The CLI surface: multi-table incremental read anchored on a
-    savepoint, across a compaction boundary (refuses loud per-table,
-    --allow-rewrites accepts), and the bucketize verb."""
+def test_bucketize_cli(spark, tmp_path, capsys, monkeypatch):
+    """The bucketize verb: declare + build, then a refresh with no
+    --spec reuses the declared one."""
     import json
 
     from cardano_analytics_duckdb_spark.cli import main
-    from cardano_analytics_duckdb_spark.lake.savepoints import (
-        create_savepoint,
-    )
     from cardano_analytics_duckdb_spark.streaming.ingest import (
         compact_lake,
         ingest_blocks,
@@ -240,52 +236,9 @@ def test_changes_and_bucketize_cli(spark, tmp_path, capsys, monkeypatch):
     layout.invalidate_layout_cache()
     root = str(tmp_path / "lake")
     ingest_blocks(spark, fixture_blocks()[:8], root, batch_size=1)
-    sp = create_savepoint(spark, root)
     ingest_blocks(spark, fixture_blocks()[8:12], root, batch_size=1)
-    create_savepoint(spark, root)
-
-    # pure-append window: every table reports a non-negative delta and
-    # tx grows
-    out_dir = str(tmp_path / "delta")
-    rc = main(
-        [
-            "changes", "--lake", root,
-            "--since-savepoint", str(sp),
-            "--out", out_dir,
-        ],
-        spark=spark,
-    )
-    assert rc == 0
-    rep = json.loads(capsys.readouterr().out.strip().splitlines()[-1])
-    assert rep["tx"]["rows_appended"] > 0
-    assert os.path.isdir(rep["tx"]["out"])
-    assert spark.read.parquet(rep["tx"]["out"]).count() == (
-        rep["tx"]["rows_appended"]
-    )
-
-    # compaction inside the window: refuse loud, allow-rewrites accepts
     compact_lake(spark, root)
-    create_savepoint(spark, root)
-    rc = main(
-        ["changes", "--lake", root, "--since-savepoint", str(sp)],
-        spark=spark,
-    )
-    assert rc == 0
-    rep = json.loads(capsys.readouterr().out.strip().splitlines()[-1])
-    assert "refused" in rep["tx"] and "REWRITTEN" in rep["tx"]["refused"]
-    rc = main(
-        [
-            "changes", "--lake", root,
-            "--since-savepoint", str(sp),
-            "--allow-rewrites",
-        ],
-        spark=spark,
-    )
-    assert rc == 0
-    rep = json.loads(capsys.readouterr().out.strip().splitlines()[-1])
-    assert rep["tx"]["rows_appended"] >= 0
 
-    # bucketize verb: declare + build, then refresh is a cheap no-op
     rc = main(
         [
             "bucketize", "--lake", root,
@@ -307,11 +260,9 @@ def test_lake_layout_refresh_is_partition_incremental(
 ):
     """100 TB posture: a steady-state lake appends to recent slot_groups;
     the layout refresh must rewrite ONLY those partitions, not the whole
-    copy — and control-plane-only churn (savepoints) must rewrite
-    nothing."""
-    from cardano_analytics_duckdb_spark.lake.savepoints import (
-        create_savepoint,
-    )
+    copy — and control-plane-only churn (a stats manifest build) must
+    rewrite nothing."""
+    from cardano_analytics_duckdb_spark.lake.manifest import build_manifest
     from cardano_analytics_duckdb_spark.operators.cardano import _lake
     from cardano_analytics_duckdb_spark.streaming.ingest import ingest_blocks
 
@@ -359,10 +310,10 @@ def test_lake_layout_refresh_is_partition_incremental(
     finally:
         spark.conf.set("spark.sql.autoBroadcastJoinThreshold", old)
 
-    # control-plane-only churn: a savepoint moves root sidecars (stale
-    # signature) but no entry's data — refresh must rewrite NOTHING and
-    # still restore resolution
-    create_savepoint(spark, root)
+    # control-plane-only churn: a manifest build adds control files under
+    # the table root (stale signature) but moves no entry's data —
+    # refresh must rewrite NOTHING and still restore resolution
+    build_manifest(spark, os.path.join(root, "tx"))
     assert layout.resolve_bucketed(spark, root, "tx") is None
     whole_before = lfs.content_signature(loc)
     layout.bucketize(spark, root)
@@ -434,7 +385,7 @@ def test_bucketize_recommend_cli(spark, capsys, monkeypatch, tmp_path):
 def test_layout_resolution_walk_never_serves_wrong_rows(spark, tmp_path):
     """Compositional safety (the test_generations_model pattern): a
     seeded random sequence of append / compact / rollback /
-    vacuum / savepoint / bucketize runs against a driver-side model.
+    vacuum / bucketize runs against a driver-side model.
     After EVERY step the layout invariant must hold: resolution either
     serves EXACTLY the model rows or returns None (plain fallback — the
     default read path then equals the model via read_table).  After
@@ -461,9 +412,6 @@ def _run_layout_walk(spark, root, seed, n_steps):
         vacuum_superseded,
     )
     from cardano_analytics_duckdb_spark.lake.lock import maintenance_lock
-    from cardano_analytics_duckdb_spark.lake.savepoints import (
-        create_savepoint,
-    )
     from cardano_analytics_duckdb_spark.streaming.ingest import (
         _compact_lake_locked,
         _rollback_lake_locked,
@@ -501,7 +449,7 @@ def _run_layout_walk(spark, root, seed, n_steps):
     layout.bucketize(spark, root)
 
     ops = ["append", "compact", "compact_defer", "rollback",
-           "vacuum", "savepoint", "bucketize", "bucketize"]
+           "vacuum", "bucketize", "bucketize"]
     history = []
     for step in range(n_steps):
         op = rng.choice(ops)
@@ -529,8 +477,6 @@ def _run_layout_walk(spark, root, seed, n_steps):
                 del model[k]
         elif op == "vacuum":
             vacuum_superseded(spark, t)
-        elif op == "savepoint":
-            create_savepoint(spark, root)
         elif op == "bucketize":
             # on an EMPTIED source (rollback to origin) this must retire
             # the copies, not raise — the compaction hook calls it too
