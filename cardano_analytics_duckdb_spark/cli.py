@@ -32,8 +32,9 @@ from pyspark.sql import functions as F
 # PRESET_STARTING_POINTS (config.py:32-73), (slot, block-header-hash) pairs
 # ("last block before each era" plus the SNEK case-study anchors), plus
 # 'origin' for a from-genesis replay (the reference's start_point=None).
-# A live Ogmios source starts at the pair itself (its findIntersection
-# point); file and fixture replays filter on the slot alone.
+# Every source starts right after a preset's block: a live Ogmios source
+# intersects at the pair itself (findIntersection), file and fixture
+# replays keep slots above the preset's.
 START_PRESETS: dict[str, tuple[int, str | None]] = {
     "origin": (0, None),
     "last_byron": (
@@ -199,9 +200,18 @@ def _cmd_extract(args: argparse.Namespace, spark: SparkSession) -> int:
                             yield json.loads(line)
 
             blocks = _gen(args.blocks)
-        start_slot = preset[0] if preset is not None else int(args.start_point)
-        if start_slot:
-            blocks = (b for b in blocks if b["slot"] >= start_slot)
+        if preset is None:
+            first = int(args.start_point)  # a bare slot is the first kept
+        elif preset[1] is None:
+            first = 0  # origin
+        else:
+            first = preset[0] + 1  # start after the preset's block
+        if first:
+            # backward events carry a point, not a slot, and pass through
+            blocks = (
+                b for b in blocks
+                if b.get("direction") == "backward" or b["slot"] >= first
+            )
 
     stats = ingest_blocks(
         spark,
@@ -296,20 +306,11 @@ def _cmd_curate(args: argparse.Namespace, spark: SparkSession) -> int:
 
 
 def _cmd_bucketize(args, spark: SparkSession) -> int:
-    """Declare (optional) and build/refresh the lake's bucketed layout
-    (lake/layout.py).  Without --spec, refreshes the existing spec's
-    copies — the verb a scheduler runs after appends, and the manual
-    form of the refresh compact_lake performs automatically."""
-    import contextlib
-
-    from .lake.fsutil import LakeFs
-    from .lake.layout import (
-        _is_external_source,
-        bucket_spec,
-        bucketize,
-        set_bucket_spec,
-    )
-    from .lake.lock import maintenance_lock
+    """Declare (optional) and build/refresh the bucketed layout of a
+    file-table source (lake/layout.py).  Without --spec, refreshes the
+    existing spec's copies — the verb a scheduler runs after the source
+    changes."""
+    from .lake.layout import bucket_spec, bucketize, set_bucket_spec
 
     if args.recommend:
         from .lake.advisor import recommend_bucket_spec
@@ -321,24 +322,18 @@ def _cmd_bucketize(args, spark: SparkSession) -> int:
         print(json.dumps({"recommended_spec": spec}))
         return 0
     if args.spec:
-        spec = json.loads(args.spec)
-        set_bucket_spec(spark, args.lake, spec, n_buckets=args.buckets)
+        try:
+            set_bucket_spec(
+                spark, args.lake, json.loads(args.spec), n_buckets=args.buckets
+            )
+        except ValueError as e:
+            raise SystemExit(str(e)) from None
     elif bucket_spec(spark, args.lake) is None:
         raise SystemExit(
             f"no bucket spec declared for {args.lake} — pass --spec "
             '\'{"table": [["key_col"]], ...}\' once to declare one'
         )
-    # A lake root gets the single-maintainer lock (same contract as
-    # compaction — whose own refresh hook already runs inside it); an
-    # external file-table source has no lake lock to take (its layout
-    # lives in the derived dir and never touches the source).
-    lock = (
-        contextlib.nullcontext()
-        if _is_external_source(LakeFs(spark, args.lake), args.lake)
-        else maintenance_lock(spark, args.lake, owner="cli bucketize")
-    )
-    with lock:
-        built = bucketize(spark, args.lake)
+    built = bucketize(spark, args.lake)
     print(json.dumps({"lake": args.lake, "copies": built}))
     return 0
 
@@ -445,8 +440,9 @@ def build_parser() -> argparse.ArgumentParser:
     ex.add_argument(
         "--start-point",
         default="origin",
-        help=f"preset ({', '.join(START_PRESETS)}), or a slot number for"
-        " file and fixture sources",
+        help=f"preset ({', '.join(START_PRESETS)}): start after its block;"
+        " or, for file and fixture sources, a slot number: the first slot"
+        " kept",
     )
     ex.add_argument("--stop-slot", type=int, default=None)
     ex.add_argument("--batch-size", type=int, default=100)
@@ -495,15 +491,19 @@ def build_parser() -> argparse.ArgumentParser:
 
     bz = sub.add_parser(
         "bucketize",
-        help="declare (--spec, once) and build/refresh the lake's bucketed"
-        " join layout (lake/layout.py); incremental — only tables whose"
-        " content changed since the last build rewrite",
+        help="declare (--spec, once) and build/refresh the bucketed join"
+        " layout of a dir of <table>.parquet files (lake/layout.py);"
+        " incremental — only tables whose content changed since the last"
+        " build rewrite",
     )
-    bz.add_argument("--lake", required=True, help="lake root or sf dir")
+    bz.add_argument(
+        "--lake", required=True, help="sf dir of <table>.parquet files"
+    )
     bz.add_argument(
         "--spec",
         default=None,
-        help='JSON {table: [[key cols], ...]}, e.g. \'{"tx": [["tx_id"]]}\'',
+        help="JSON {table: [[key cols], ...]}, e.g."
+        ' \'{"orders": [["o_orderkey"]]}\'',
     )
     bz.add_argument("--buckets", type=int, default=64)
     bz.add_argument(

@@ -73,30 +73,6 @@ class LakeFs:
             if st.isDirectory()
         )
 
-    def shallow_signature(self, path: str) -> tuple:
-        """ONE-listing change-detection key: ``(name, mtime, length,
-        is_dir)`` of each DIRECT child (or of the path itself when it is
-        a file).  Cheap root token for memoizing the deep
-        :meth:`content_signature` — on local/HDFS a direct child write
-        inside an entry dir moves that dir's mtime, and maintenance
-        swaps always add gen dirs / pointer sidecars AT the root, so the
-        token moves on every lake mutation; stores with synthetic dir
-        mtimes additionally rely on the memo's TTL (lake/layout.py)."""
-        p = self._Path(path)
-        if not self._fs.exists(p):
-            return ()
-        st = self._fs.getFileStatus(p)
-        if st.isFile():
-            return (
-                (st.getPath().getName(), st.getModificationTime(),
-                 st.getLen(), False),
-            )
-        return tuple(sorted(
-            (s.getPath().getName(), s.getModificationTime(),
-             s.getLen(), s.isDirectory())
-            for s in self._fs.listStatus(p)
-        ))
-
     def content_signature(self, path: str) -> tuple:
         """Change-detection key for a file OR a directory of files:
         ``(name, mtime, length)`` of the path itself when it is a file,

@@ -152,11 +152,6 @@ def events_ts_encoding(path: str) -> str:
     return "utc" if getattr(t, "tz", None) else "ntz"
 
 
-def events_ts_is_nanos(path: str) -> bool:
-    """Back-compat shim over :func:`events_ts_encoding`."""
-    return events_ts_encoding(path) == "nanos"
-
-
 def _load_events(spark: SparkSession, path: str) -> DataFrame:
     """Load events with ``ts`` normalized to a session-TZ TIMESTAMP whatever
     the parquet encoding:
@@ -170,7 +165,7 @@ def _load_events(spark: SparkSession, path: str) -> DataFrame:
     """
     from pyspark.sql import functions as F
 
-    if events_ts_is_nanos(path):
+    if events_ts_encoding(path) == "nanos":
         # nanosAsLong only changes how otherwise-unreadable NANOS columns
         # surface, and is only set when such a file is actually present.
         spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")

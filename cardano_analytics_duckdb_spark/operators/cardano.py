@@ -43,21 +43,11 @@ _hex = lambda c: F.lower(F.hex(F.col(c)))  # noqa: E731
 
 
 def _lake(
-    spark: SparkSession,
-    table: str,
-    root: str | None = None,
-    layout_for: tuple[str, ...] | None = None,
+    spark: SparkSession, table: str, root: str | None = None
 ) -> DataFrame:
     from ..lake.generations import read_table
-    from ..lake.layout import resolve_bucketed
 
     root = root or ensure_fixture_lake(spark)
-    # A lake with a declared bucket layout (lake/layout.py) serves the
-    # FRESH bucketed copy — signature-checked, so any append/compaction/
-    # rollback since the last refresh falls back to the plain path.
-    bucketed = resolve_bucketed(spark, root, table, layout_for)
-    if bucketed is not None:
-        return bucketed
     # Generation-resolving read (lake/generations.py): identical plain
     # parquet scan for a never-maintained lake (the fixture case), and the
     # only correct read once compaction/rollback has swapped partitions.

@@ -261,9 +261,10 @@ class ChainSyncClient:
         Forward blocks are yielded verbatim; backward results become
         ``{"direction": "backward", "point": ..., "tip": ...}`` events that
         ``ingest_blocks`` counts and ``rollback_lake`` can reconcile.
-        Stops after ``stop_slot`` (exclusive upper bound on block slot) or —
-        with ``stop_at_tip`` — once a forward block reaches the tip
-        reported alongside it (a live follower would keep iterating).
+        Stops after ``stop_slot`` (inclusive upper bound on block slot: a
+        block AT it is yielded, as ``ingest_blocks`` keeps it) or — with
+        ``stop_at_tip`` — once a forward block reaches the tip reported
+        alongside it (a live follower would keep iterating).
         """
         while self._in_flight < batch_size:
             self.next_block_send()

@@ -55,9 +55,9 @@ from ..functions.hashes import blake2b_256
 from ..lake.fixtures import SLOT_GROUP_SIZE
 from ..sources.blocks import blocks_to_dataframe
 
-# Ingest declares no bucket layout: default-on tx_id bucketing lost on
-# every read path at the 2M-tx lake (SCALE_PROBE r13_cardano_layout_10000x),
-# so ``bucketize --spec`` stays the opt-in.
+# Lakes read plain: tx_id bucketing lost on every read path at the
+# 2M-tx lake (SCALE_PROBE r13_cardano_layout_10000x), so bucketed layouts
+# serve file-table sources only (lake/layout.py).
 
 _STAKE_TYPES = (
     "stakeDelegation",
@@ -847,7 +847,6 @@ def _compact_lake_locked(
     vacuum: str = "end",
 ) -> None:
     from ..lake.fsutil import LakeFs
-    from ..lake.layout import refresh_layout
 
     lfs = LakeFs(spark, root)
     _per_table(
@@ -855,13 +854,6 @@ def _compact_lake_locked(
         lambda t: _compact_table(spark, lfs, os.path.join(root, t), vacuum),
         tables,
     )
-    # A lake with a declared bucket layout (lake/layout.py) keeps it
-    # current through the same maintenance window, once every table is
-    # compacted: the compaction just changed the tables' content
-    # signatures, so readers already fell back to the plain path — this
-    # rebuild is what restores the optimized layout.  Lakes without a
-    # spec pay one existence probe.
-    refresh_layout(spark, root)
 
 
 def _compact_table(spark: SparkSession, lfs, src: str, vacuum: str) -> None:

@@ -397,27 +397,61 @@ def test_extract_from_ogmios_starts_at_the_preset_point(
     spark, tmp_path, capsys, monkeypatch
 ):
     """A preset's (slot, hash) is the findIntersection point, so the
-    stream starts right after that block; a bare slot number has no
+    stream starts right after that block, and a fixture replay with the
+    same preset starts at the same block; a bare slot number has no
     block id and is refused before any connection is made."""
     from cardano_analytics_duckdb_spark import cli
 
     blocks = fixture_blocks()
     mid = blocks[len(blocks) // 2]
     node = FakeOgmios(blocks)
-    dest = str(tmp_path / "live")
+    dest, replay = str(tmp_path / "live"), str(tmp_path / "replay")
     monkeypatch.setitem(
         cli.START_PRESETS, "fixture_mid", (mid["slot"], "ab" * 32)
     )
-    assert cli.main(
-        ["extract", "--blocks", f"ogmios://127.0.0.1:{node.port}",
-         "--start-point", "fixture_mid", "--dest", dest],
-        spark=spark,
-    ) == 0
-    stats = json.loads(capsys.readouterr().out.strip().splitlines()[-1])
-    assert stats["blocks"] == len(blocks) - len(blocks) // 2 - 1
+    for source, lake in (
+        (f"ogmios://127.0.0.1:{node.port}", dest),
+        ("fixture", replay),
+    ):
+        assert cli.main(
+            ["extract", "--blocks", source, "--start-point", "fixture_mid",
+             "--dest", lake],
+            spark=spark,
+        ) == 0
+        stats = json.loads(capsys.readouterr().out.strip().splitlines()[-1])
+        assert stats["blocks"] == len(blocks) - len(blocks) // 2 - 1
+    assert _tx_rows(spark, dest) == _tx_rows(spark, replay)
     with pytest.raises(SystemExit, match="preset"):
         cli.main(
             ["extract", "--blocks", "ogmios://127.0.0.1:1",
              "--start-point", str(mid["slot"]), "--dest", dest],
             spark=spark,
         )
+
+
+def test_extract_file_with_a_point_only_backward_event(
+    spark, tmp_path, capsys, monkeypatch
+):
+    """A chain-sync-shaped backward event (a point, no slot) in a
+    JSON-lines file passes the start-point filter untouched; a bare slot
+    number keeps the block at that slot."""
+    from cardano_analytics_duckdb_spark import cli
+
+    blocks = fixture_blocks()[:10]
+    backward = {"direction": "backward", "point": _point(blocks[4])}
+    path = tmp_path / "chain.jsonl"
+    path.write_text(
+        "".join(json.dumps(b) + "\n" for b in [*blocks[:6], backward,
+                                               *blocks[6:]])
+    )
+    monkeypatch.setitem(
+        cli.START_PRESETS, "fixture_b2", (blocks[2]["slot"], "ab" * 32)
+    )
+    for start, kept in (("fixture_b2", 7), (str(blocks[2]["slot"]), 8)):
+        assert cli.main(
+            ["extract", "--blocks", str(path), "--start-point", start,
+             "--dest", str(tmp_path / f"lake_{start}")],
+            spark=spark,
+        ) == 0
+        stats = json.loads(capsys.readouterr().out.strip().splitlines()[-1])
+        assert (stats["blocks"], stats["rollbacks"]) == (kept, 1)

@@ -23,7 +23,7 @@ PACKAGE = ROOT / "cardano_analytics_duckdb_spark"
 EXPECTED = {
     "SPARK_GRAFT_CPUS",  # local core count (session, warm_lake)
     "SPARK_DRIVER_MEMORY",  # driver heap of the package's session
-    "SPARK_GRAFT_LAYOUT_DIR",  # where layouts of read-only sources live
+    "SPARK_GRAFT_LAYOUT_DIR",  # where layouts of file-table sources live
 }
 
 
@@ -133,7 +133,8 @@ def _imported(tree: ast.AST, module: str, is_pkg: bool, known: set[str]):
                     yield sub
 
 
-def test_every_module_is_reached_from_a_product_root():
+def _package_trees() -> tuple[dict[str, ast.AST], set[str]]:
+    """Parsed source of every package module, and the package names."""
     trees = {}
     pkgs = set()
     for path in sorted(PACKAGE.rglob("*.py")):
@@ -141,6 +142,11 @@ def test_every_module_is_reached_from_a_product_root():
         trees[name] = ast.parse(path.read_text(), filename=str(path))
         if path.name == "__init__.py":
             pkgs.add(name)
+    return trees, pkgs
+
+
+def test_every_module_is_reached_from_a_product_root():
+    trees, pkgs = _package_trees()
     known = set(trees)
 
     def parents(name: str):
@@ -167,3 +173,22 @@ def test_every_module_is_reached_from_a_product_root():
     assert UNREACHED_ALLOWED.isdisjoint(seen), (
         "a named exception is now reached; drop it from UNREACHED_ALLOWED"
     )
+
+
+# Bucketed layouts serve file tables only: on the Cardano lake they lost
+# on every read path (SCALE_PROBE r13_cardano_layout_10000x), so the
+# lake's readers and its maintenance never consult one.  The file-table
+# reader and the ``bucketize`` verb are the only ways in.
+LAYOUT_IMPORTERS = {"lake.tables", "cli"}
+
+
+def test_only_file_table_readers_import_layout():
+    trees, pkgs = _package_trees()
+    known = set(trees)
+    importers = {
+        name
+        for name, tree in trees.items()
+        if name != "lake.layout"
+        and "lake.layout" in _imported(tree, name, name in pkgs, known)
+    }
+    assert importers == LAYOUT_IMPORTERS

@@ -357,31 +357,6 @@ def test_malformed_backward_event_does_not_wipe_lake(spark, tmp_path):
     assert not os.path.exists(os.path.join(dest, "_maintenance.lock"))
 
 
-def test_bootstrap_declared_layout_lifecycle(spark, tmp_path):
-    """A tx_id bucket spec declared before ingest is declare-only (no
-    copies yet); the first ``compact_lake`` builds the copy through its
-    ``refresh_layout`` hook, run once after every table is compacted,
-    and the lake's read path then serves it with row parity."""
-    from cardano_analytics_duckdb_spark.lake import layout
-    from cardano_analytics_duckdb_spark.lake.generations import read_table
-
-    dest = str(tmp_path / "lake_bootstrap_layout")
-    layout.set_bucket_spec(spark, dest, {"tx": [["tx_id"]]})
-    ingest_blocks(spark, fixture_blocks()[:5], dest, batch_size=10)
-    spec = layout.bucket_spec(spark, dest)
-    assert spec is not None
-    assert spec["tables"] == {"tx": [["tx_id"]]}
-    # declare-only: nothing built before maintenance runs
-    assert layout.resolve_bucketed(spark, dest, "tx", ["tx_id"]) is None
-
-    compact_lake(spark, dest)
-    served = layout.resolve_bucketed(spark, dest, "tx", ["tx_id"])
-    assert served is not None
-    plain = read_table(spark, f"{dest}/tx")
-    assert served.count() == plain.count()
-    assert served.select("tx_id").exceptAll(plain.select("tx_id")).count() == 0
-
-
 _TXLESS_BLOCK = {
     "type": "ebb", "era": "byron", "id": "ab" * 16, "height": 0, "slot": 0,
 }

@@ -1,20 +1,21 @@
-"""Bucketed layouts as a lake lifecycle feature (r11 verdict #1).
+"""Bucketed layouts of file-table sources (``lake/layout.py``).
 
-The r11 probe proved the win (tpch_100x 0.97x DuckDB on bucketed copies)
-but the layout was an in-process registry nothing maintained.  These
-tests pin the lifecycle contract of ``lake/layout.py``:
+Bucketed copies of the TPC-H file tables won where they were measured
+(SCALE_PROBE tpch_100x 0.97x DuckDB); on the Cardano lake they lost on
+every read path (r13_cardano_layout_10000x).  These tests pin the
+contract:
 
 - declare once (``set_bucket_spec``), build incrementally
-  (``bucketize``), resolve automatically (``load_table`` /
-  ``operators/cardano._lake``) — queries never change;
+  (``bucketize``), resolve automatically (``load_table``) — queries
+  never change;
 - copies are signature-checked: ANY source change makes resolution fall
   back to the plain read (stale layouts cost performance, never rows);
-- ``compact_lake`` refreshes a spec'd lake's layout in the same
-  maintenance window that rewrote its data;
 - copies survive the session: a fresh catalog re-registers them from
   the status file (``CREATE TABLE ... CLUSTERED BY ... LOCATION``);
-- the driver's read-only testdata is NEVER written into — external
-  (file-table) sources get the derived layout dir.
+- read-only testdata is NEVER written into — the layout
+  lives in a per-source derived dir;
+- a lake root is refused, and a ``_layout/`` dir an older build left in
+  a lake is inert.
 """
 
 from __future__ import annotations
@@ -188,149 +189,91 @@ def test_bucket_lake_shorthand_and_unbucket(spark, layout_env):
     assert layout.resolve_bucketed(spark, SF, "part") is None
 
 
-def test_streaming_lake_layout_follows_compaction(spark, layout_env, tmp_path):
-    """The lifecycle on a generation-pointer lake: spec'd copies go stale
-    on append (fallback to plain — correct rows), and compact_lake's
-    refresh hook rebuilds them in the same maintenance window."""
-    from cardano_analytics_duckdb_spark.operators.cardano import _lake
-    from cardano_analytics_duckdb_spark.streaming.ingest import (
-        compact_lake,
-        ingest_blocks,
-    )
-
-    root = str(tmp_path / "lake")
-    ingest_blocks(spark, fixture_blocks()[:8], root, batch_size=1)
-    # lake roots host their layout in-place
-    d = layout.set_bucket_spec(spark, root, {"tx": [["tx_id"]]}, n_buckets=4)
-    assert d == os.path.join(root, "_layout")
-    layout.bucketize(spark, root)
-    n0 = _lake(spark, "tx", root).count()
-    assert layout.resolve_bucketed(spark, root, "tx") is not None
-
-    # append: copy goes stale, the default read path still serves every
-    # row (plain fallback)
-    ingest_blocks(spark, fixture_blocks()[8:12], root, batch_size=1)
-    assert layout.resolve_bucketed(spark, root, "tx") is None
-    n1 = _lake(spark, "tx", root).count()
-    assert n1 > n0
-
-    # compaction refreshes the layout as part of maintenance
-    compact_lake(spark, root)
-    served = layout.resolve_bucketed(spark, root, "tx")
-    assert served is not None and served.count() == n1
-    assert _lake(spark, "tx", root).count() == n1
-
-
 def test_bucketize_cli(spark, tmp_path, capsys, monkeypatch):
-    """The bucketize verb: declare + build, then a refresh with no
-    --spec reuses the declared one."""
+    """The bucketize verb: declare + build on a file-table source, then a
+    refresh with no --spec reuses the declared one.  A lake root is
+    refused with the measured reason, and nothing is written."""
     import json
 
     from cardano_analytics_duckdb_spark.cli import main
-    from cardano_analytics_duckdb_spark.streaming.ingest import (
-        compact_lake,
-        ingest_blocks,
-    )
+    from cardano_analytics_duckdb_spark.streaming.ingest import ingest_blocks
 
     monkeypatch.setenv("SPARK_GRAFT_LAYOUT_DIR", str(tmp_path / "layouts"))
     layout.invalidate_layout_cache()
-    root = str(tmp_path / "lake")
-    ingest_blocks(spark, fixture_blocks()[:8], root, batch_size=1)
-    ingest_blocks(spark, fixture_blocks()[8:12], root, batch_size=1)
-    compact_lake(spark, root)
-
+    src_dir = str(tmp_path / "src")
+    os.makedirs(src_dir)
+    shutil.copy(
+        os.path.join(SF, "orders.parquet"),
+        os.path.join(src_dir, "orders.parquet"),
+    )
     rc = main(
         [
-            "bucketize", "--lake", root,
-            "--spec", '{"tx": [["tx_id"]]}',
+            "bucketize", "--lake", src_dir,
+            "--spec", '{"orders": [["o_orderkey"]]}',
             "--buckets", "4",
         ],
         spark=spark,
     )
     assert rc == 0
     rep = json.loads(capsys.readouterr().out.strip().splitlines()[-1])
-    assert "tx_by_tx_id" in rep["copies"]
-    assert layout.resolve_bucketed(spark, root, "tx") is not None
-    rc = main(["bucketize", "--lake", root], spark=spark)
+    assert "orders_by_o_orderkey" in rep["copies"]
+    assert layout.resolve_bucketed(spark, src_dir, "orders") is not None
+    rc = main(["bucketize", "--lake", src_dir], spark=spark)
     assert rc == 0
+    layout.drop_layout(spark, src_dir)
 
-
-def test_lake_layout_refresh_is_partition_incremental(
-    spark, layout_env, tmp_path
-):
-    """100 TB posture: a steady-state lake appends to recent slot_groups;
-    the layout refresh must rewrite ONLY those partitions, not the whole
-    copy — and control-plane-only churn (a stats manifest build) must
-    rewrite nothing."""
-    from cardano_analytics_duckdb_spark.lake.manifest import build_manifest
-    from cardano_analytics_duckdb_spark.operators.cardano import _lake
-    from cardano_analytics_duckdb_spark.streaming.ingest import ingest_blocks
-
-    blocks = [
-        b for b in fixture_blocks() if b.get("direction") != "backward"
-    ]
     root = str(tmp_path / "lake")
-    ingest_blocks(spark, blocks[:150], root, batch_size=50)
-    d = layout.set_bucket_spec(spark, root, {"tx": [["tx_id"]]}, n_buckets=4)
-    layout.bucketize(spark, root)
-    lfs = LakeFs(spark, root)
-    status = layout._read_json(lfs, os.path.join(d, layout.STATUS_NAME))
-    st = status["copies"]["tx_by_tx_id"]
-    assert st["partition_col"] == "slot_group"
-    assert set(st["partition_tokens"]) == {
-        "slot_group=0", "slot_group=200000",
-    }
-    loc = st["location"]
-    g0_before = lfs.content_signature(os.path.join(loc, "slot_group=0"))
-    assert g0_before
-
-    # append ONLY to the newer group, then refresh: the old group's copy
-    # files must be byte-identical (same names, mtimes, lengths)
-    tail = blocks[150:]
-    assert all(b["slot"] >= 200000 for b in tail)
-    ingest_blocks(spark, tail, root, batch_size=50)
-    assert layout.resolve_bucketed(spark, root, "tx") is None  # stale
-    layout.bucketize(spark, root)
-    assert g0_before == lfs.content_signature(
-        os.path.join(loc, "slot_group=0")
-    ), "untouched partition was rewritten"
-    served = layout.resolve_bucketed(spark, root, "tx")
-    n_true = _lake(spark, "tx", root).count()
-    assert served is not None and served.count() == n_true
-    # bucket invariant survives the incremental insert: self-join on the
-    # bucket key stays exchange-free AND row-correct
-    old = spark.conf.get("spark.sql.autoBroadcastJoinThreshold")
-    spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
-    try:
-        j = served.select("tx_id", "tx_fee").join(
-            served.select("tx_id", "slot"), "tx_id"
+    ingest_blocks(spark, fixture_blocks()[:8], root)
+    with pytest.raises(SystemExit, match="r13_cardano_layout_10000x"):
+        main(
+            ["bucketize", "--lake", root, "--spec", '{"tx": [["tx_id"]]}'],
+            spark=spark,
         )
-        assert j.count() == n_true  # tx_id unique -> 1:1 self join
-        assert not _below_join_exchange(j)
-    finally:
-        spark.conf.set("spark.sql.autoBroadcastJoinThreshold", old)
+    assert not os.path.exists(os.path.join(root, "_layout"))
+    assert not os.path.exists(layout._derived_dir(root))
 
-    # control-plane-only churn: a manifest build adds control files under
-    # the table root (stale signature) but moves no entry's data —
-    # refresh must rewrite NOTHING and still restore resolution
-    build_manifest(spark, os.path.join(root, "tx"))
-    assert layout.resolve_bucketed(spark, root, "tx") is None
-    whole_before = lfs.content_signature(loc)
-    layout.bucketize(spark, root)
-    assert lfs.content_signature(loc) == whole_before
-    assert layout.resolve_bucketed(spark, root, "tx") is not None
 
-    # fresh-session re-registration of a PARTITIONED copy: the catalog
-    # must relearn the on-disk partitions (CREATE ... PARTITIONED BY +
-    # MSCK REPAIR) — without the repair the table reads empty
-    status = layout._read_json(lfs, os.path.join(d, layout.STATUS_NAME))
-    cat = status["copies"]["tx_by_tx_id"]["catalog"]
-    spark.sql(f"DROP TABLE IF EXISTS {cat}")
+def test_lake_root_is_refused_and_a_leftover_layout_is_inert(
+    spark, layout_env
+):
+    """Bucketed copies lost on every Cardano-lake read path (SCALE_PROBE
+    r13_cardano_layout_10000x), so a lake root cannot declare a layout,
+    and a ``_layout/`` dir an older build left inside a lake changes
+    neither the lake's reads nor its compaction."""
+    import json
+
+    from cardano_analytics_duckdb_spark.lake.generations import read_table
+    from cardano_analytics_duckdb_spark.operators.cardano import _lake
+    from cardano_analytics_duckdb_spark.streaming.ingest import (
+        compact_lake,
+        ingest_blocks,
+    )
+
+    root = str(layout_env / "lake")
+    ingest_blocks(spark, fixture_blocks()[:8], root, batch_size=4)
+    with pytest.raises(ValueError, match="r13_cardano_layout_10000x"):
+        layout.set_bucket_spec(spark, root, {"tx": [["tx_id"]]}, n_buckets=4)
+    left = os.path.join(root, "_layout")
+    assert not os.path.exists(left)
+    assert not os.path.exists(layout._derived_dir(root))
+
+    # the spec an older build declared inside the lake, written by hand
+    os.makedirs(left)
+    with open(os.path.join(left, layout.SPEC_NAME), "w") as f:
+        json.dump(
+            {"version": 1, "n_buckets": 4, "tables": {"tx": [["tx_id"]]}}, f
+        )
     layout.invalidate_layout_cache()
-    served = layout.resolve_bucketed(spark, root, "tx")
-    assert served is not None and served.count() == n_true
-    # partition pruning works on the re-registered copy
-    assert served.filter(F.col("slot_group") == 0).count() > 0
+    ingest_blocks(spark, fixture_blocks()[8:12], root, batch_size=4)
+    compact_lake(spark, root)
+    assert os.listdir(left) == [layout.SPEC_NAME]
+    tx = _lake(spark, "tx", root)
+    assert sorted(tx.inputFiles()) == sorted(
+        read_table(spark, os.path.join(root, "tx")).inputFiles()
+    )
+    assert tx.count() == sum(
+        len(b["transactions"]) for b in fixture_blocks()[:12]
+    )
 
 
 def test_advisor_recovers_audited_spec_from_workload(spark):
@@ -382,128 +325,6 @@ def test_bucketize_recommend_cli(spark, capsys, monkeypatch, tmp_path):
     assert layout.bucket_spec(spark, SF) is None
 
 
-def test_layout_resolution_walk_never_serves_wrong_rows(spark, tmp_path):
-    """Compositional safety (the test_generations_model pattern): a
-    seeded random sequence of append / compact / rollback /
-    vacuum / bucketize runs against a driver-side model.
-    After EVERY step the layout invariant must hold: resolution either
-    serves EXACTLY the model rows or returns None (plain fallback — the
-    default read path then equals the model via read_table).  After
-    every bucketize, resolution must be live and exact.  This is the
-    'staleness costs performance, never rows' contract checked across
-    arbitrary interleavings rather than pointwise — its FIRST run caught
-    the emptied-partition resurrection bug (dynamic overwrite can't drop
-    a copy partition; rollback-emptied entries now force a full
-    rebuild).  SOAK_SEEDS=N sweeps N extra seeds."""
-    _run_layout_walk(spark, str(tmp_path / "walk"), 20260816, 14)
-    n = int(os.environ.get("SOAK_SEEDS", "0"))
-    off = int(os.environ.get("SOAK_OFFSET", "0"))
-    for i in range(off, off + n):
-        _run_layout_walk(
-            spark, str(tmp_path / f"walk_s{i}"), 20260816 + 1 + i, 14
-        )
-
-
-def _run_layout_walk(spark, root, seed, n_steps):
-    import random
-
-    from cardano_analytics_duckdb_spark.lake.generations import (
-        read_table,
-        vacuum_superseded,
-    )
-    from cardano_analytics_duckdb_spark.lake.lock import maintenance_lock
-    from cardano_analytics_duckdb_spark.streaming.ingest import (
-        _compact_lake_locked,
-        _rollback_lake_locked,
-    )
-
-    SCHEMA = "k long, v string, slot long, slot_group long"
-    rng = random.Random(seed)
-    t = os.path.join(root, "t")
-    model: dict[int, tuple[str, int, int]] = {}
-    next_key = 0
-
-    def fresh_rows(n):
-        nonlocal next_key
-        out = []
-        for _ in range(n):
-            slot = rng.randrange(0, 300)
-            g = (slot // 100) * 100
-            out.append((next_key, f"v{next_key}", slot, g))
-            model[next_key] = (f"v{next_key}", slot, g)
-            next_key += 1
-        return out
-
-    def model_rows():
-        return sorted((k, v, s, g) for k, (v, s, g) in model.items())
-
-    def frame_rows(df):
-        return sorted(
-            map(tuple, df.select("k", "v", "slot", "slot_group").collect())
-        )
-
-    spark.createDataFrame(fresh_rows(6), SCHEMA).write.mode(
-        "append"
-    ).partitionBy("slot_group").parquet(t)
-    layout.set_bucket_spec(spark, root, {"t": [["k"]]}, n_buckets=4)
-    layout.bucketize(spark, root)
-
-    ops = ["append", "compact", "compact_defer", "rollback",
-           "vacuum", "bucketize", "bucketize"]
-    history = []
-    for step in range(n_steps):
-        op = rng.choice(ops)
-        history.append(op)
-        if op == "append":
-            spark.createDataFrame(
-                fresh_rows(rng.randint(1, 4)), SCHEMA
-            ).write.mode("append").partitionBy("slot_group").parquet(t)
-        elif op in ("compact", "compact_defer"):
-            # NOTE: _compact_lake_locked ends with refresh_layout — the
-            # lifecycle hook is part of the walk
-            with maintenance_lock(spark, root, owner=f"walk-{step}"):
-                _compact_lake_locked(
-                    spark, root, tables=["t"],
-                    vacuum="end" if op == "compact" else "defer",
-                )
-        elif op == "rollback":
-            to_slot = rng.choice([60, 140, 230])
-            with maintenance_lock(spark, root, owner=f"walk-{step}"):
-                _rollback_lake_locked(
-                    spark, root, to_slot, tables=["t"],
-                    vacuum=rng.choice(["end", "defer"]),
-                )
-            for k in [k for k, (_, s, _) in model.items() if s > to_slot]:
-                del model[k]
-        elif op == "vacuum":
-            vacuum_superseded(spark, t)
-        elif op == "bucketize":
-            # on an EMPTIED source (rollback to origin) this must retire
-            # the copies, not raise — the compaction hook calls it too
-            layout.bucketize(spark, root)
-            served = layout.resolve_bucketed(spark, root, "t")
-            if model:
-                assert served is not None, (
-                    f"stale right after refresh: {history}"
-                )
-            else:
-                assert served is None, (
-                    f"served a copy of an EMPTIED source: {history}"
-                )
-        if not model:
-            continue
-        served = layout.resolve_bucketed(spark, root, "t")
-        if served is not None:
-            assert frame_rows(served) == model_rows(), (
-                f"layout served WRONG ROWS after step {step} ({op}); "
-                f"history={history}"
-            )
-        assert frame_rows(read_table(spark, t)) == model_rows(), (
-            f"plain path diverged after step {step} ({op}); "
-            f"history={history}"
-        )
-
-
 def test_declared_but_unbuilt_layout_is_picked_up_without_restart(
     spark, layout_env, tmp_path
 ):
@@ -526,14 +347,6 @@ def test_declared_but_unbuilt_layout_is_picked_up_without_restart(
     # SAME process, NO cache invalidation: build must work and the very
     # next read must serve the copy
     layout.bucketize(spark, src_dir)
-    assert layout.resolve_bucketed(spark, src_dir, "orders") is not None
-    # refresh_layout in the same window must also not silently no-op
-    layout.drop_layout(spark, src_dir)
-    layout.set_bucket_spec(
-        spark, src_dir, {"orders": [["o_orderkey"]]}, n_buckets=4
-    )
-    assert layout.resolve_bucketed(spark, src_dir, "orders") is None
-    assert layout.refresh_layout(spark, src_dir) is not None
     assert layout.resolve_bucketed(spark, src_dir, "orders") is not None
     layout.drop_layout(spark, src_dir)
 
@@ -587,53 +400,6 @@ def test_spec_redeclare_rebuilds_bucket_count_and_prunes_orphans(
     assert served is not None
     assert served.count() == load_table(spark, src_dir, "orders").count()
     layout.drop_layout(spark, src_dir)
-
-
-def test_partition_col_rejects_malformed_hive_values(spark, tmp_path):
-    """r12 advice (low): values like '--5' must fail validation (fall
-    back to whole-table copies) instead of crashing the incremental
-    parse downstream."""
-    lfs = LakeFs(spark, str(tmp_path))
-    t = tmp_path / "t"
-    for entry in ["slot_group=--5", "slot_group=10"]:
-        d = t / entry
-        d.mkdir(parents=True)
-        (d / "x.txt").write_text("x")
-    assert layout._partition_col(lfs, str(tmp_path), "t") is None
-    shutil.rmtree(t / "slot_group=--5")
-    (t / "slot_group=-20").mkdir()
-    assert layout._partition_col(lfs, str(tmp_path), "t") == "slot_group"
-
-
-def test_source_sig_memo_revalidates_on_root_change(
-    spark, layout_env, tmp_path
-):
-    """r12 advice (low): the hot-path signature is memoized behind the
-    one-RPC shallow root token — repeated reads reuse it, any root-level
-    change (new file) re-deep-lists immediately, and TTL expiry forces a
-    refresh even with an unchanged token."""
-    src = tmp_path / "src"
-    (src / "t" / "g=1").mkdir(parents=True)
-    (src / "t" / "g=1" / "a.parquet").write_text("a")
-    lfs = LakeFs(spark, str(src))
-    layout._SIG_CACHE.clear()
-    s1 = layout._source_sig(lfs, str(src), "t")
-    assert layout._source_sig(lfs, str(src), "t") == s1  # memo hit
-    # mutate one level down: entry-dir mtime moves the ROOT token
-    import time as _time
-
-    _time.sleep(0.02)
-    (src / "t" / "g=1" / "b.parquet").write_text("bb")
-    s2 = layout._source_sig(lfs, str(src), "t")
-    assert s2 != s1 and any("b.parquet" in e[0] for e in s2)
-    # fresh=True (writer path) always deep-lists
-    assert layout._source_sig(lfs, str(src), "t", fresh=True) == s2
-    # expired TTL entry is refreshed in place
-    path = layout._source_path(lfs, str(src), "t")
-    exp, root, sig = layout._SIG_CACHE[path]
-    layout._SIG_CACHE[path] = (-1.0, root, sig)
-    assert layout._source_sig(lfs, str(src), "t") == s2
-    assert layout._SIG_CACHE[path][0] > 0
 
 
 def test_catalogless_status_entry_is_never_served_and_pruned(
