@@ -544,13 +544,24 @@ def prune_files_box(
     read once, however many predicates the box has."""
     lfs = LakeFs(spark, table_dir)
     live = _data_files(lfs, table_dir)
-    bounded = [p for p in preds if p[1] is not None or p[2] is not None]
+    bounded = any(lo is not None or hi is not None for _, lo, hi in preds)
     snap = _manifest_snapshot(spark, lfs, table_dir) if bounded else None
+    return list(_kept(_relative(live, lfs, table_dir), snap, preds))
+
+
+def _kept(
+    rel: dict[str, str], snap, preds: list[tuple[str, Bound, Bound]]
+) -> dict[str, str]:
+    """The entries of ``rel`` ({live file URI -> path relative to the
+    table root}) whose files :func:`prune_files_box` keeps, given the
+    manifest snapshot ``snap`` (None: keep all)."""
     if snap is None:
-        return live
+        return rel
     has_bin = "min_bin" in snap["columns"]
     skipped: set[str] = set()
-    for column, lo, hi in bounded:
+    for column, lo, hi in preds:
+        if lo is None and hi is None:
+            continue
         min_col, max_col = _bound_cols(lo, hi)
         if min_col not in snap["columns"]:  # pre-binary manifest + bytes
             continue
@@ -573,14 +584,14 @@ def prune_files_box(
             )
             if disjoint or all_null:
                 skipped.add(row["file"])
-    rel = _relative(live, lfs, table_dir)
-    return [f for f in live if rel[f] not in skipped]
+    return {f: r for f, r in rel.items() if r not in skipped}
 
 
 def _read_files(
-    spark: SparkSession, table_dir: str, files: list[str]
+    spark: SparkSession, table_dir: str, rel: dict[str, str]
 ) -> DataFrame:
-    """Read an explicit surviving-file list, generation-aware: hive files
+    """Read the surviving files ``rel`` ({file URI -> path relative to the
+    table root}), generation-aware: hive files
     take the ``basePath`` route (partition columns from the path), files
     under hidden generation dirs read plainly (their partition column is
     in the data — generations.py swap writers inject it), and the two
@@ -588,8 +599,6 @@ def _read_files(
     branch — identical to the old single read."""
     from .generations import _remember_schema, _schema_reader
 
-    lfs = LakeFs(spark, table_dir)
-    rel = _relative(files, lfs, table_dir)
     hive = [f for f, r in rel.items() if not r.split("/", 1)[0].startswith("_")]
     hidden = [f for f, r in rel.items() if r.split("/", 1)[0].startswith("_")]
     branches = []
@@ -633,32 +642,34 @@ def read_pruned_box_with_bound(
     broadcast on the bound (operators/cardano.py flagship, r11 verdict
     #2) pay zero traffic beyond the read they were already doing; a
     second listing pass measured ~1.1 s/run at the 2M-tx probe lake (the
-    first flagship_gate_ab_10000x recording)."""
-    files = prune_files_box(spark, table_dir, preds)
-    bound: int | None = None
+    first flagship_gate_ab_10000x recording).  The control-plane work
+    happens once: one filesystem handle, one file listing, one manifest
+    snapshot (its signature listed once) and one relativization."""
     lfs = LakeFs(spark, table_dir)
+    live = _data_files(lfs, table_dir)
     snap = _manifest_snapshot(spark, lfs, table_dir)
+    rel = _kept(_relative(live, lfs, table_dir), snap, preds)
+    bound: int | None = None
     if snap is not None:
         n_rows: dict[str, int] = {}
         for rows in snap["by_col"].values():
             for r in rows:
                 if r.get("n_rows") is not None:
                     n_rows[r["file"]] = r["n_rows"]
-        rel = _relative(files, lfs, table_dir)
         total = 0
-        for f in files:
-            nr = n_rows.get(rel[f])
+        for r in rel.values():
+            nr = n_rows.get(r)
             if nr is None:
                 total = None  # un-stat'd append: the bound would be a lie
                 break
             total += nr
         bound = total
-    if not files:
+    if not rel:
         from .generations import read_table
 
         df = spark.createDataFrame([], read_table(spark, table_dir).schema)
     else:
-        df = _read_files(spark, table_dir, files)
+        df = _read_files(spark, table_dir, rel)
     for column, lo, hi in preds:
         if lo is not None:
             df = df.filter(F.col(column) >= F.lit(lo))

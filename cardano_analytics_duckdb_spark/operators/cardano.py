@@ -19,11 +19,13 @@ Scale notes (100 TB posture): slot predicates prune `slot_group=N/`
 directories on both engines; the token-UTxO side of the flagship is tiny
 after the policy/asset filter → broadcast into the explode-join and the
 semi-join (no shuffle of the big tx table) — but SIZE-GATED on the
-frame's actual row count, because a popular token over years of history
-is millions of rows and a forced broadcast would trade the shuffle for a
-driver OOM; over the gate every site falls back to shuffle_hash.  The
-final left joins are per-tx_id hash joins on already-aggregated sides
-riding the same gate.
+manifest's row bound for the pruned token files, because a popular token
+over years of history is millions of rows and a forced broadcast would
+trade the shuffle for a driver OOM; over the gate every site falls back
+to shuffle_hash, and with no bound AQE's runtime statistics decide.  Both
+address sets come out of ONE shuffle and join back to the tx rows once,
+riding the same gate.  The flagship is one uncached plan, built from one
+SQL text: a report over it is one action.
 """
 
 from __future__ import annotations
@@ -206,6 +208,53 @@ FROM {_scan("tx")}
 _FLAGSHIP_BROADCAST_ROW_GATE = 500_000
 
 
+def _transfers_sql(hint: str | None) -> str:
+    """The flagship as one SQL text over the DataFrame parameters ``tx``
+    and ``tu`` (the token UTxOs: the asset rows of the token, already
+    filtered), with ``hint`` (a join strategy hint name, or None) on its
+    three join sites."""
+    def on(name: str) -> str:
+        return f"/*+ {hint}({name}) */ " if hint else ""
+
+    # semi-join: txs that create a token UTxO … the reference pre-filters
+    # only on *creating* txs (token_fee_analysis.py:212) and relies on the
+    # output/input set joins for the rest — reproduce exactly that.
+    # `relevant` stays rows (not grouped by tx_id): the reference keeps
+    # duplicate tx rows, which a replayed ingest without reconciliation
+    # makes.  Both address sets come from ONE shuffle — the consumed
+    # (tx_id, input address) rows UNION ALL the produced (tx_id, output
+    # address) rows, grouped by tx_id — and are joined back once.  Every
+    # group holds produced rows (consuming txs are relevant, so they
+    # create a token UTxO), so only the input set can be NULL: no token-
+    # holding input.  Each set is the sorted distinct hex addresses,
+    # '|'-joined, so the output column is a scalar string (the driver
+    # canonicalizer can't hash list cells).
+    return f"""
+WITH relevant AS (
+  SELECT {on("tu")}tx.* FROM {{tx}} tx LEFT SEMI JOIN {{tu}} tu
+  ON tx.tx_id = tu.tx_id
+), moves AS (
+  SELECT {on("tu")}c.tx_id, tu.address, true AS consumed
+  FROM (SELECT tx_id, explode(inputs) AS r FROM relevant) c
+  JOIN {{tu}} tu ON tu.tx_id = c.r.tx_id AND tu.output_index = c.r.output_index
+  UNION ALL
+  SELECT tx_id, address, false FROM {{tu}}
+), sets AS (
+  SELECT tx_id,
+         IF(bool_or(consumed), concat_ws('|', array_sort(collect_set(
+           IF(consumed, lower(hex(address)), NULL)))), NULL) AS input_addr_set,
+         concat_ws('|', array_sort(collect_set(
+           IF(consumed, NULL, lower(hex(address)))))) AS output_addr_set
+  FROM moves GROUP BY tx_id
+)
+SELECT {on("s")}r.slot, lower(hex(r.tx_id)) AS tx_id_hex, r.tx_fee,
+       r.input_count, r.output_count, s.input_addr_set, s.output_addr_set
+FROM relevant r LEFT JOIN sets s ON r.tx_id = s.tx_id
+WHERE NOT (s.input_addr_set <=> s.output_addr_set)
+SORT BY slot, tx_id_hex
+"""
+
+
 def _token_transfers(
     spark: SparkSession,
     min_slot: int | None,
@@ -218,135 +267,43 @@ def _token_transfers(
     # as a [v, v] range over the manifest's hex-encoded BINARY bounds, the
     # slot window over the numeric bounds — on a policy-clustered or
     # z-ordered asset layout the conjunction skips files before any data
-    # page is read; the same predicates are re-applied row-level below so
-    # the result is layout- and staleness-independent.
+    # page is read.  The pruned read re-applies the same predicates
+    # row-level, so `tu` is exactly the token UTxOs whatever the layout
+    # or manifest staleness.
     root = root or ensure_fixture_lake(spark)
     preds = [
         ("policy_id", policy, policy),
         ("asset_name", asset_name, asset_name),
         ("slot", min_slot, max_slot),
     ]
-    asset, asset_bound = _lake_pruned(spark, "asset", preds, root)
-    tx = _lake(spark, "tx", root)
+    asset, bound = _lake_pruned(spark, "asset", preds, root)
 
-    token_utxos = asset.filter(
-        (F.col("policy_id") == F.lit(policy))
-        & (F.col("asset_name") == F.lit(asset_name))
-    )
-    if min_slot is not None:
-        token_utxos = token_utxos.filter(F.col("slot") >= min_slot)
-    if max_slot is not None:
-        token_utxos = token_utxos.filter(F.col("slot") <= max_slot)
-    token_utxos = token_utxos.select("tx_id", "output_index", "address").cache()
-
-    # SIZE-GATED broadcasts (r11 verdict #2): token_utxos grows with
+    # SIZE-GATED broadcasts (r11 verdict #2): the token UTxOs grow with
     # token popularity x chain history — a top token over years of
-    # mainnet is millions of rows, and a forced F.broadcast would be a
-    # driver/executor OOM instead of a plan fallback (the same reasoning
-    # revenue_by_region applies to its lake-scaled customer side).
-    # Every derived side below (distinct tx_ids, inputs_set,
-    # outputs_set) is <= |token_utxos| rows, so one gate covers all
-    # four join sites.  The gate reads the manifest's per-file row
-    # counts first: the sum over the box-pruned files is an upper bound
-    # on the token rows, and when it proves the side small the decision
-    # costs ZERO extra jobs (the snapshot is already cached by the
-    # pruned read above).  Only when file stats can't prove it — no
-    # manifest, un-stat'd appends, or a fat bound on an unclustered
-    # layout — does a real count run, and that job doubles as the fill
-    # of a cache the plan reuses three times anyway.  Measured at the
-    # 2M-tx lake (SCALE_PROBE flagship_gate_ab_10000x): the explicit
-    # count cost 1.26x over the r11 forced-broadcast plan, the manifest
-    # bound removes it; over the gate, joins fall back to shuffle_hash
-    # (0.80x of the counted run there — AQE still converts to broadcast
-    # at runtime if a filtered side lands under the session threshold).
-    n_bound = asset_bound
-    if n_bound is None or n_bound > _FLAGSHIP_BROADCAST_ROW_GATE:
-        n_bound = token_utxos.count()
-    if n_bound <= _FLAGSHIP_BROADCAST_ROW_GATE:
-        _side = F.broadcast
-    else:
-        _side = lambda df: df.hint("shuffle_hash")  # noqa: E731
-
-    # semi-join: txs that create or consume a token UTxO … the reference
-    # pre-filters only on *creating* txs (token_fee_analysis.py:212) and
-    # relies on output/input set joins for the rest — reproduce exactly that.
-    # Persisted (S4 staging, same lifecycle as token_utxos above): the set
-    # feeds BOTH the input-explode path and the final join, so an uncached
-    # plan scans + semi-probes the big tx table twice per execution —
-    # measured 2.14 s -> 1.79 s median at a 2M-tx lake (SCALE_PROBE.json
-    # cardano_10000x experiments, r10).
-    relevant = tx.join(
-        _side(token_utxos.select("tx_id").distinct()), "tx_id", "left_semi"
-    ).persist()
-
-    inputs_set = (
-        relevant.select("tx_id", F.explode("inputs").alias("r"))
-        .select(
-            F.col("tx_id").alias("consuming_tx_id"),
-            F.col("r.tx_id").alias("src_tx_id"),
-            F.col("r.output_index").alias("src_output_index"),
-        )
-        .join(
-            _side(
-                token_utxos.withColumnsRenamed(
-                    {"tx_id": "src_tx_id", "output_index": "src_output_index"}
-                )
-            ),
-            on=["src_tx_id", "src_output_index"],
-        )
-        .groupBy("consuming_tx_id")
-        # Addresses are binary; hex then '|'-join the sorted distinct set so
-        # the output column is a scalar string (driver canonicalizer can't
-        # hash list cells).  Stringify INSIDE the agg: concat_ws would turn a
-        # post-left-join NULL into '', breaking IS DISTINCT FROM semantics.
-        .agg(
-            F.concat_ws(
-                "|", F.array_sort(F.collect_set(F.lower(F.hex("address"))))
-            ).alias("input_addr_set")
-        )
-        .withColumnRenamed("consuming_tx_id", "tx_id")
+    # mainnet is millions of rows, and a forced broadcast would be a
+    # driver/executor OOM instead of a plan fallback.  Every join side
+    # (the token UTxOs, the per-tx address sets) is <= |token UTxOs|
+    # rows, so the manifest's row bound on the box-pruned files gates all
+    # three sites: at or under the gate they broadcast, over it they
+    # shuffle_hash.  With no bound (no manifest, un-stat'd appends) the
+    # plan carries no hint and AQE's runtime broadcast conversion decides
+    # from the real sizes — no count() job to find out first.
+    hint = None
+    if bound is not None:
+        small = bound <= _FLAGSHIP_BROADCAST_ROW_GATE
+        hint = "BROADCAST" if small else "SHUFFLE_HASH"
+    # One SQL text, not a DataFrame-API chain: building it costs a handful
+    # of py4j calls instead of hundreds.  Nothing is cached: the tx scan
+    # and semi-join run twice (sets and rows), which measured no worse
+    # than persisting them (SCALE_PROBE flagship_join_ab_10000x
+    # broadcast_sets_no_relevant_persist), and the partition-local sort
+    # keeps the r13 sort-drop (no range exchange; the driver/oracle
+    # canonicalize row order).
+    return spark.sql(
+        _transfers_sql(hint),
+        tx=_lake(spark, "tx", root),
+        tu=asset,
     )
-    outputs_set = token_utxos.groupBy("tx_id").agg(
-        F.concat_ws(
-            "|", F.array_sort(F.collect_set(F.lower(F.hex("address"))))
-        ).alias("output_addr_set")
-    )
-    # Both set-aggregate sides ride the same gate: each is a groupBy
-    # over token-filtered rows, so |outputs_set| <= |token_utxos| and
-    # |inputs_set| <= consuming txs <= |token_utxos| — strictly smaller
-    # than the gated frame, so the one count bounds all four sites.
-    # Under the gate the broadcasts keep the measured r11 win (without
-    # them the two left joins shuffle the wide `relevant` rows, inputs
-    # arrays included, on tx_id; broadcast lets `relevant` stream
-    # straight off its cache — 1.48 -> 1.23 s median at a 2M-tx lake,
-    # cache cleared per run, SCALE_PROBE cardano_10000x
-    # flagship_join_ab).
-    report = (
-        relevant.join(_side(inputs_set), "tx_id", "left")
-        .join(_side(outputs_set), "tx_id", "left")
-        .filter(
-            ~F.col("input_addr_set").eqNullSafe(F.col("output_addr_set"))
-        )
-        .select(
-            "slot",
-            _hex("tx_id").alias("tx_id_hex"),
-            "tx_fee",
-            "input_count",
-            "output_count",
-            "input_addr_set",
-            "output_addr_set",
-        )
-    )
-    # r13 sort-drop, sweep 3: the r9-r12 shape was
-    # ``report.persist().orderBy("slot", "tx_id_hex")`` — the persist
-    # existed ONLY to feed the orderBy's range sampler from cache instead
-    # of re-running the join pipeline (measured 2.14 s -> 1.15 s then).
-    # The global order itself buys nothing (the driver/oracle
-    # canonicalizes row order), so dropping the sort removes the range
-    # exchange of every report row, the sampling job, AND the cache
-    # materialization + memory footprint (the old entry also lingered
-    # across bench iterations).  A/B: SCALE_PROBE r13_sortdrop3_cardano.
-    return report.sortWithinPartitions("slot", "tx_id_hex")
 
 
 def cardano_token_transfers(spark: SparkSession, sf_dir: str) -> DataFrame:

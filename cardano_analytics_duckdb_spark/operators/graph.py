@@ -327,6 +327,7 @@ def pagerank(
     if n == 0:
         # empty graph: every other registered query returns an empty frame
         # on empty input; dividing by n here would raise instead
+        nodes.unpersist()
         return nodes.select("node", F.lit(0.0).alias("pagerank"))
     grid = F.lit(_PR_GRID)
     base = (1.0 - d) / n  # identical op order in the SQL rendering

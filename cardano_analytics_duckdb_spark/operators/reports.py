@@ -3,9 +3,9 @@
 Covers SURVEY §2 items the query modules don't:
 
 - A6 driver-side scalar stats (totals / averages / slot range,
-  /root/reference/token_fee_analysis.py:310-329) — computed as ONE Spark
-  ``agg`` pass *before* anything is collected, instead of pandas math on a
-  fetched frame.
+  token_fee_analysis.py:310-329) — computed in Spark
+  *before* anything is collected, instead of pandas math on a fetched
+  frame.
 - A7 grouped multi-agg by transfer type with rounding
   (token_fee_analysis.py:318-325).  In the reference this is a dead path
   (``transfer_type`` is never produced upstream, guard at :319); here the
@@ -15,8 +15,11 @@ Covers SURVEY §2 items the query modules don't:
 - S10 CSV sink (token_fee_analysis.py:345-350) and the formatted text
   summary (:354-389).
 
-Scale notes: both stat queries aggregate the (already small) transfer
-result; the CSV sink writes distributed part files via ``df.write.csv`` —
+Scale notes: the stat queries aggregate the (already small) transfer
+result.  ``token_transfer_report`` collects the totals and the per-type
+stats as ONE ``GROUP BY ROLLUP`` aggregate over the uncached flagship
+plan, so a report is one action; the CSV sink is a second action over
+the same plan and writes distributed part files via ``df.write.csv`` —
 the reference's single-file ``to_csv`` is a driver-side bottleneck at any
 real scale.
 """
@@ -29,17 +32,21 @@ from pyspark.sql import functions as F
 from ..functions.rounding import rnd
 from .cardano import _token_transfers, _token_transfers_sql
 
-def _ttype():
-    # built lazily: Column construction needs an active SparkContext
-    return (
-        F.when(F.col("input_addr_set").isNull(), F.lit("mint"))
-        .when(F.col("output_addr_set").isNull(), F.lit("burn"))
-        .otherwise(F.lit("transfer"))
-    )
+
+# NULL input set: no token-holding input (mint-like); NULL output set: no
+# token-holding output (burn-like); else a transfer.  Shared by the Spark
+# queries and their DuckDB oracle.
+_TTYPE_SQL = (
+    "CASE WHEN input_addr_set IS NULL THEN 'mint'"
+    " WHEN output_addr_set IS NULL THEN 'burn' ELSE 'transfer' END"
+)
 
 
-def _summary_agg(transfers: DataFrame) -> DataFrame:
-    return transfers.agg(
+def cardano_transfer_summary_stats(
+    spark: SparkSession, sf_dir: str
+) -> DataFrame:
+    """One-row totals ≙ token_fee_analysis.py:310-329, as a single agg pass."""
+    return _token_transfers(spark, None, None).agg(
         F.count("*").alias("n_transfers"),
         F.sum("tx_fee").alias("total_fee_lovelace"),
         rnd(F.sum("tx_fee") / 1e6, 6).alias("total_fee_ada"),
@@ -47,13 +54,6 @@ def _summary_agg(transfers: DataFrame) -> DataFrame:
         F.min("slot").alias("min_slot"),
         F.max("slot").alias("max_slot"),
     )
-
-
-def cardano_transfer_summary_stats(
-    spark: SparkSession, sf_dir: str
-) -> DataFrame:
-    """One-row totals ≙ token_fee_analysis.py:310-329, as a single agg pass."""
-    return _summary_agg(_token_transfers(spark, None, None))
 
 
 _SUMMARY_STATS_SQL = f"""
@@ -72,7 +72,7 @@ def cardano_transfer_type_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Grouped fee stats by mint/burn/transfer ≙ token_fee_analysis.py:318-325."""
     transfers = _token_transfers(spark, None, None)
     return (
-        transfers.groupBy(_ttype().alias("transfer_type"))
+        transfers.groupBy(F.expr(_TTYPE_SQL).alias("transfer_type"))
         .agg(
             F.count("*").alias("n"),
             F.sum("tx_fee").alias("total_fee"),
@@ -84,9 +84,7 @@ def cardano_transfer_type_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 _TYPE_STATS_SQL = f"""
 WITH transfers AS ({_token_transfers_sql(None, None)})
-SELECT CASE WHEN input_addr_set IS NULL THEN 'mint'
-            WHEN output_addr_set IS NULL THEN 'burn'
-            ELSE 'transfer' END AS transfer_type,
+SELECT {_TTYPE_SQL} AS transfer_type,
        count(*) AS n,
        CAST(sum(tx_fee) AS BIGINT) AS total_fee,
        floor((avg(tx_fee)) * 100.0 + 0.5) / 100.0 AS avg_fee
@@ -112,6 +110,19 @@ def write_transfer_csv(transfers: DataFrame, path: str) -> None:
     out.write.mode("overwrite").option("header", True).csv(path)
 
 
+# The report's one aggregate: ROLLUP gives the totals row (is_total = 1)
+# and the per-type rows from a single pass.  Rounding is ``rnd``'s formula
+# in double literals, so the digits equal the registered stats queries'.
+_REPORT_SQL = f"""
+SELECT grouping(transfer_type) AS is_total, transfer_type, count(*) AS n,
+       floor(sum(tx_fee) / 1e6D * 1e6D + 0.5D) / 1e6D AS total_fee_ada,
+       floor(avg(tx_fee) / 1e6D * 1e6D + 0.5D) / 1e6D AS avg_fee_ada,
+       min(slot) AS min_slot, max(slot) AS max_slot
+FROM (SELECT {_TTYPE_SQL} AS transfer_type, tx_fee, slot FROM {{t}})
+GROUP BY ROLLUP(transfer_type)
+"""
+
+
 def token_transfer_report(
     spark: SparkSession,
     min_slot: int | None = None,
@@ -123,10 +134,10 @@ def token_transfer_report(
 ) -> str:
     """End-to-end analysis ≙ token_fee_analysis.py:263-352 + summary :354-389.
 
-    Runs the flagship transfer query, computes totals in one agg pass,
-    optionally dumps the detailed CSV, and returns the formatted text
-    summary.  Only the (single-row) stats and the grouped type stats are
-    ever collected to the driver.
+    Runs the flagship transfer query and collects ONE rollup aggregate
+    over it (totals plus per-type stats, a handful of rows); the optional
+    detailed CSV is its own action over the same uncached relation.
+    Returns the formatted text summary.
     """
     from ..lake.fixtures import TOKEN_NAME, TOKEN_POLICY
 
@@ -137,37 +148,31 @@ def token_transfer_report(
         root=root,
         policy=policy if policy is not None else TOKEN_POLICY,
         asset_name=asset_name if asset_name is not None else TOKEN_NAME,
-    ).cache()
-    try:
-        stats = _summary_agg(transfers).first()
-        by_type = (
-            transfers.groupBy(_ttype().alias("transfer_type"))
-            .agg(F.count("*").alias("n"), rnd(F.avg("tx_fee") / 1e6, 6).alias("avg_fee_ada"))
-            .orderBy("transfer_type")
-            .collect()
+    )
+    rows = spark.sql(_REPORT_SQL, t=transfers).collect()
+    if csv_path is not None:
+        write_transfer_csv(transfers, csv_path)
+    # an empty input gives no rows, or a totals row with n = 0
+    stats = next((r for r in rows if r["is_total"]), None)
+    if stats is None or stats["n"] == 0:
+        return "No ownership-changing token transfers found."
+    lines = [
+        "TOKEN TRANSFER FEE ANALYSIS",
+        "=" * 40,
+        f"Ownership-changing transfers: {stats['n']}",
+        f"Total fees: {stats['total_fee_ada']} ADA",
+        f"Average fee: {stats['avg_fee_ada']} ADA",
+        f"Slot range: {stats['min_slot']} - {stats['max_slot']}",
+        "",
+        "By transfer type:",
+    ]
+    by_type = [r for r in rows if not r["is_total"]]
+    for row in sorted(by_type, key=lambda r: r["transfer_type"]):
+        lines.append(
+            f"  {row['transfer_type']}: n={row['n']}"
+            f" avg_fee={row['avg_fee_ada']} ADA"
         )
-        if csv_path is not None:
-            write_transfer_csv(transfers, csv_path)
-        if stats["n_transfers"] == 0:
-            return "No ownership-changing token transfers found."
-        lines = [
-            "TOKEN TRANSFER FEE ANALYSIS",
-            "=" * 40,
-            f"Ownership-changing transfers: {stats['n_transfers']}",
-            f"Total fees: {stats['total_fee_ada']} ADA",
-            f"Average fee: {stats['avg_fee_ada']} ADA",
-            f"Slot range: {stats['min_slot']} - {stats['max_slot']}",
-            "",
-            "By transfer type:",
-        ]
-        for row in by_type:
-            lines.append(
-                f"  {row['transfer_type']}: n={row['n']}"
-                f" avg_fee={row['avg_fee_ada']} ADA"
-            )
-        return "\n".join(lines)
-    finally:
-        transfers.unpersist()
+    return "\n".join(lines)
 
 
 QUERIES = {

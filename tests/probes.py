@@ -1,0 +1,58 @@
+"""Spark resource probes shared by the tests: the jobs a block runs and
+the entries in the session's CacheManager."""
+
+from __future__ import annotations
+
+
+class Jobs:
+    """The Spark jobs a block of code runs, pinned by count: the block
+    runs in its own job group between two one-job markers, so the jobs
+    between the markers must be exactly the group's.  A count pinned to
+    the budget leaves no room for a count() or isEmpty() probe.
+
+    ``ids`` holds the group's job ids, ``executions`` the ids of the SQL
+    executions those jobs belong to (one per action)."""
+
+    def __init__(self, spark, name):
+        self.spark = spark
+        self.sc = spark.sparkContext
+        self.name = name
+
+    def _marker(self, name):
+        self.sc.setJobGroup(name, name)
+        self.sc.parallelize([1], 1).count()
+
+    def __enter__(self):
+        self._marker(f"{self.name}-before")
+        self.sc.setJobGroup(self.name, self.name)
+        return self
+
+    def __exit__(self, *exc):
+        self._marker(f"{self.name}-after")
+        for key in ("spark.jobGroup.id", "spark.job.description",
+                    "spark.job.interruptOnCancel"):
+            self.sc.setLocalProperty(key, None)
+        self.sc._jsc.sc().listenerBus().waitUntilEmpty()
+        st = self.sc.statusTracker()
+        (before,) = st.getJobIdsForGroup(f"{self.name}-before")
+        (after,) = st.getJobIdsForGroup(f"{self.name}-after")
+        self.ids = sorted(st.getJobIdsForGroup(self.name))
+        # no job between the markers escaped the caller's group
+        assert self.ids == list(range(before + 1, after)), (
+            before, self.ids, after
+        )
+        store = self.spark._jsparkSession.sharedState().statusStore()
+        execs = store.executionsList()
+        self.executions = set()
+        for i in range(execs.size()):
+            ex = execs.apply(i)
+            job_ids = ex.jobs().keySet()
+            if any(job_ids.contains(j) for j in self.ids):
+                self.executions.add(ex.executionId())
+        return False
+
+
+def cache_entries(spark) -> int:
+    """Entries in the session's CacheManager (``cache()``/``persist()``
+    frames not yet unpersisted)."""
+    return spark._jsparkSession.sharedState().cacheManager().numCachedEntries()

@@ -11,13 +11,23 @@ import pytest
 from pyspark.sql import functions as F
 
 from cardano_analytics_duckdb_spark.lake.fixtures import (
+    DEFAULT_LAKE_ROOT,
     ensure_fixture_lake,
+    fixture_blocks,
     _txid,
 )
 from cardano_analytics_duckdb_spark.operators.cardano import (
+    _token_transfers,
+    _token_transfers_sql,
     cardano_token_transfers,
     cardano_token_transfers_windowed,
 )
+from cardano_analytics_duckdb_spark.operators.reports import (
+    _TTYPE_SQL,
+    token_transfer_report,
+)
+
+from .probes import Jobs, cache_entries
 
 
 def _hexid(i: int) -> str:
@@ -119,10 +129,7 @@ def test_token_transfer_report_and_csv_sink(spark, sf_dir, tmp_path):
     """S10 CSV sink + A6/A7 report layer (token_fee_analysis.py:310-389)."""
     import glob
 
-    from cardano_analytics_duckdb_spark.operators.reports import (
-        token_transfer_report,
-    )
-
+    cached = cache_entries(spark)
     csv_dir = str(tmp_path / "transfers_csv")
     txt = token_transfer_report(spark, csv_path=csv_dir)
     assert "TOKEN TRANSFER FEE ANALYSIS" in txt
@@ -143,3 +150,90 @@ def test_token_transfer_report_and_csv_sink(spark, sf_dir, tmp_path):
     assert "No ownership-changing" in token_transfer_report(
         spark, min_slot=10**9, max_slot=10**9 + 1
     )
+    # the report leaves the CacheManager as it found it
+    assert cache_entries(spark) == cached
+
+
+@pytest.mark.parametrize("bounded", [True, False])
+def test_token_report_is_one_action(spark, sf_dir, monkeypatch, bounded):
+    """A token report is one action over one uncached plan: at most 6
+    jobs (broadcasts, the address-set shuffle, the rollup) in the
+    caller's group, all of ONE SQL execution, so no count() gate, cache
+    fill or second collect.  Without a manifest row bound no count() job
+    runs either: AQE decides the joins at runtime."""
+    from cardano_analytics_duckdb_spark.lake import manifest
+
+    if not bounded:
+        pruned = manifest.read_pruned_box_with_bound
+        monkeypatch.setattr(
+            manifest,
+            "read_pruned_box_with_bound",
+            lambda *a: (pruned(*a)[0], None),
+        )
+    want = token_transfer_report(spark)  # first touch builds the manifest
+    cached = cache_entries(spark)
+    with Jobs(spark, f"token-report-{bounded}") as jobs:
+        assert token_transfer_report(spark) == want
+    assert 0 < len(jobs.ids) <= 6, jobs.ids
+    assert len(jobs.executions) == 1, jobs.executions
+    assert cache_entries(spark) == cached
+
+
+def _oracle_report(con, sql: str) -> str:
+    """token_transfer_report's text, computed by DuckDB over ``sql``."""
+    n, fee, avg, lo, hi = con.execute(
+        f"WITH t AS ({sql}) SELECT count(*),"
+        " floor(sum(tx_fee) / 1e6 * 1e6 + 0.5) / 1e6,"
+        " floor(avg(tx_fee) / 1e6 * 1e6 + 0.5) / 1e6, min(slot), max(slot)"
+        " FROM t"
+    ).fetchone()
+    if n == 0:
+        return "No ownership-changing token transfers found."
+    by_type = con.execute(
+        f"WITH t AS ({sql}) SELECT {_TTYPE_SQL} AS k, count(*),"
+        " floor(avg(tx_fee) / 1e6 * 1e6 + 0.5) / 1e6 FROM t"
+        " GROUP BY k ORDER BY k"
+    ).fetchall()
+    return "\n".join(
+        [
+            "TOKEN TRANSFER FEE ANALYSIS",
+            "=" * 40,
+            f"Ownership-changing transfers: {n}",
+            f"Total fees: {fee} ADA",
+            f"Average fee: {avg} ADA",
+            f"Slot range: {lo} - {hi}",
+            "",
+            "By transfer type:",
+        ]
+        + [f"  {k}: n={c} avg_fee={a} ADA" for k, c, a in by_type]
+    )
+
+
+def test_flagship_keeps_replayed_tx_rows(spark, tmp_path):
+    """The reference keeps duplicate tx rows: a replayed extract without
+    reconciliation appends every block twice, and each ownership change
+    then reports twice.  On such a lake the flagship's rows (as a
+    multiset) and the report text equal DuckDB's over the same files."""
+    from collections import Counter
+
+    import duckdb
+
+    from cardano_analytics_duckdb_spark.streaming.ingest import ingest_blocks
+
+    lake = str(tmp_path / "replayed")
+    for _ in range(2):
+        ingest_blocks(spark, fixture_blocks(), lake, batch_size=500)
+    con = duckdb.connect()
+    try:
+        for lo, hi in ((None, None), (100_000, 199_999)):
+            sql = _token_transfers_sql(lo, hi).replace(DEFAULT_LAKE_ROOT, lake)
+            want = Counter(con.execute(sql).fetchall())
+            rows = _token_transfers(spark, lo, hi, root=lake).collect()
+            got = Counter(tuple(r) for r in rows)
+            assert got == want
+            assert set(want.values()) == {2}  # every row is duplicated
+            assert token_transfer_report(
+                spark, lo, hi, root=lake
+            ) == _oracle_report(con, sql)
+    finally:
+        con.close()

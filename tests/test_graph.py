@@ -149,6 +149,20 @@ def test_pagerank_mass_conservation_and_order(spark):
     assert got["sink"] > got["l1"]  # fed by the hub
 
 
+def test_pagerank_empty_graph_releases_its_cache(spark):
+    """An empty graph returns an empty frame and leaves the CacheManager
+    as it found it: the early return drops the ``nodes`` cache too."""
+    from cardano_analytics_duckdb_spark.operators.graph import pagerank
+
+    from .probes import cache_entries
+
+    cached = cache_entries(spark)
+    nodes = spark.createDataFrame([], "node string")
+    edges = spark.createDataFrame([], "src string, dst string, w long")
+    assert pagerank(nodes, edges).collect() == []
+    assert cache_entries(spark) == cached
+
+
 def test_transfer_graph_pagerank_mass(spark):
     """Mass conservation on the fixture transfer graph (the oracle pins
     exact values; this pins the invariant the algorithm must keep)."""

@@ -20,6 +20,8 @@ from cardano_analytics_duckdb_spark.streaming.ingest import (
     ingest_blocks,
 )
 
+from .probes import Jobs
+
 
 def _canon_rows(df):
     def c(v):
@@ -450,49 +452,13 @@ def test_sparse_emptiness_decided_on_the_driver_matches_spark(spark):
     assert seen == _SPARSE_TABLES
 
 
-class _Jobs:
-    """The Spark jobs a block of code runs, pinned by count: the block
-    runs in its own job group between two one-job markers, so the jobs
-    between the markers must be exactly the group's.  A count pinned to
-    the budget leaves no room for a count() or isEmpty() probe."""
-
-    def __init__(self, spark, name):
-        self.sc = spark.sparkContext
-        self.name = name
-
-    def _marker(self, name):
-        self.sc.setJobGroup(name, name)
-        self.sc.parallelize([1], 1).count()
-
-    def __enter__(self):
-        self._marker(f"{self.name}-before")
-        self.sc.setJobGroup(self.name, self.name)
-        return self
-
-    def __exit__(self, *exc):
-        self._marker(f"{self.name}-after")
-        for key in ("spark.jobGroup.id", "spark.job.description",
-                    "spark.job.interruptOnCancel"):
-            self.sc.setLocalProperty(key, None)
-        self.sc._jsc.sc().listenerBus().waitUntilEmpty()
-        st = self.sc.statusTracker()
-        (before,) = st.getJobIdsForGroup(f"{self.name}-before")
-        (after,) = st.getJobIdsForGroup(f"{self.name}-after")
-        self.ids = sorted(st.getJobIdsForGroup(self.name))
-        # no job between the markers escaped the caller's group
-        assert self.ids == list(range(before + 1, after)), (
-            before, self.ids, after
-        )
-        return False
-
-
 def test_flush_job_budget_in_the_callers_group(spark, tmp_path):
     """One flush whose blocks fill all 13 tables runs exactly 1 cache
     fill plus 1 append per table, so no count or emptiness probe, and
     every job, including those the per-table threads submit, lands in
     the caller's job group."""
     dest = str(tmp_path / "lake_budget")
-    with _Jobs(spark, "flush-budget") as jobs:
+    with Jobs(spark, "flush-budget") as jobs:
         stats = ingest_blocks(spark, fixture_blocks(), dest, batch_size=500)
     assert stats["batches"] == 1
     assert all(os.path.isdir(f"{dest}/{t}") for t in LAKE_TABLES)
@@ -546,7 +512,7 @@ def test_rollback_job_budget_and_rewrites(spark, tmp_path):
     # rewritten; slot_group=200000 loses every row, so it is dropped
     # without a write.
     touched = with_rows_past(-1)
-    with _Jobs(spark, "rollback-aligned") as jobs:
+    with Jobs(spark, "rollback-aligned") as jobs:
         dropped = rollback_lake(spark, dest, 199_999)
     assert len(jobs.ids) == len(touched)
     assert dropped and all(n > 0 for n in dropped.values())
@@ -559,7 +525,7 @@ def test_rollback_job_budget_and_rewrites(spark, tmp_path):
     to_slot = 150_000
     touched, losing = with_rows_past(-1), with_rows_past(to_slot)
     assert losing
-    with _Jobs(spark, "rollback-mid") as jobs:
+    with Jobs(spark, "rollback-mid") as jobs:
         dropped = rollback_lake(spark, dest, to_slot)
     assert len(jobs.ids) == len(touched) + 2 * len(losing)
     assert set(dropped) == losing

@@ -747,3 +747,32 @@ def test_box_prune_lists_live_files_once(spark, mtable, monkeypatch):
     kept = manifest.prune_files_box(spark, mtable, box)
     assert kept
     assert len(calls) == 1
+
+
+def test_pruned_read_does_control_plane_work_once(spark, mtable, monkeypatch):
+    """A pruned read opens one filesystem handle, takes one manifest
+    snapshot (whose signature lists the manifest dir) and relativizes
+    the live files once, for the prune verdicts, the row bound and the
+    read alike."""
+    from cardano_analytics_duckdb_spark.lake import fsutil, manifest
+
+    calls = {"LakeFs": 0, "content_signature": 0, "_relative": 0}
+
+    def counted(owner, name):
+        real = getattr(owner, name)
+
+        def wrapper(*a, **k):
+            calls[name] += 1
+            return real(*a, **k)
+
+        monkeypatch.setattr(owner, name, wrapper)
+
+    counted(fsutil.LakeFs, "content_signature")
+    counted(manifest, "LakeFs")
+    counted(manifest, "_relative")
+    lo = _full(spark, mtable).agg(F.min("o_totalprice")).first()[0]
+    df, bound = read_pruned_box_with_bound(
+        spark, mtable, [("o_totalprice", lo, lo + 1.0)]
+    )
+    assert bound is not None and df.count() > 0
+    assert calls == {"LakeFs": 1, "content_signature": 1, "_relative": 1}

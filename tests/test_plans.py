@@ -74,20 +74,14 @@ def test_flagship_broadcasts_token_side(spark, sf_dir):
 
 
 def test_flagship_broadcast_is_size_gated(spark, sf_dir, monkeypatch):
-    """r11 verdict #2: token_utxos scales with token popularity x chain
-    history — over the row gate every one of the four former forced
-    F.broadcast sites must fall back to shuffle_hash (no forced
-    BroadcastExchange of a lake-derived frame), and the result is
-    row-identical."""
+    """r11 verdict #2: the token UTxOs scale with token popularity x chain
+    history — over the row gate every one of the three join sites must
+    fall back to shuffle_hash (no forced BroadcastExchange of a
+    lake-derived frame), and the result is row-identical."""
     from cardano_analytics_duckdb_spark.operators import cardano as mod
 
     small = mod._token_transfers(spark, None, None)
     rows = small.collect()
-    # the CacheManager canonicalizes hints away, so the gated run would
-    # otherwise serve the ungated run's persisted report (harmless in
-    # production — the cache IS the data — but it would hide the plan
-    # this test asserts)
-    spark.catalog.clearCache()
     monkeypatch.setattr(mod, "_FLAGSHIP_BROADCAST_ROW_GATE", 0)
     old = spark.conf.get("spark.sql.autoBroadcastJoinThreshold")
     # disable AQE's runtime broadcast conversion too, so the assertion is
@@ -275,15 +269,12 @@ def test_analytic_shapes_broadcast_and_probe(spark, sf_dir):
     assert "CartesianProduct" not in plan and "BroadcastNestedLoopJoin" not in plan
 
 
-def test_flagship_stages_are_persisted(spark, sf_dir):
-    """The flagship's two REUSED staged intermediates must stay cached
-    (token_utxos feeds the broadcast sides, the semi-joined `relevant`
-    set is scanned twice): uncached, the tx table is scanned twice per
-    execution.  The r9-r12 THIRD persist (the pre-sort report) is gone
-    together with the final global ORDER BY (r13 sort-drop): with no
-    range sampler there is nothing to feed from cache, so the report
-    flows straight into a partition-local sort — no rangepartitioning
-    exchange anywhere in the flagship plan."""
+def test_flagship_is_one_uncached_plan(spark, sf_dir):
+    """The flagship is one plan with nothing staged: no InMemoryRelation
+    (no cache() or persist() to leak or to fill), no range exchange (the
+    final sort is PARTITION-LOCAL, global=false: no sampler job), and
+    both address sets built by ONE hash exchange on tx_id.  Under the
+    row gate the semi-join and the joins broadcast."""
     from cardano_analytics_duckdb_spark.operators.cardano import (
         _token_transfers,
     )
@@ -291,14 +282,12 @@ def test_flagship_stages_are_persisted(spark, sf_dir):
     import re
 
     plan = _plan(_token_transfers(spark, None, None))
-    assert "Exchange rangepartitioning" not in plan
-    # token_utxos + relevant are still staged (nested plan printing makes
-    # exact relation counts meaningless — presence + sort mode carry the
-    # assertion)
-    assert "InMemoryRelation" in plan
-    # the final sort is PARTITION-LOCAL (global=false): no sampler job
+    assert "InMemoryRelation" not in plan
+    assert "rangepartitioning" not in plan
     assert re.search(r"Sort \[slot[^\]]*\], false, 0", plan), plan[:200]
-    spark.catalog.clearCache()
+    assert plan.count("Exchange hashpartitioning") == 1, plan
+    assert "LeftSemi" in plan and "BroadcastHashJoin" in plan
+    assert "ShuffledHashJoin" not in plan
 
 
 def test_not_in_is_null_aware_anti_join(spark, sf_dir):

@@ -8,6 +8,7 @@ import pytest
 from cardano_analytics_duckdb_spark.operators import all_oracles, all_queries
 
 from .oracle import compare, duck_connection
+from .probes import cache_entries
 
 QUERIES = all_queries()
 ORACLES = all_oracles()
@@ -34,8 +35,12 @@ def duck(sf_dir):
 
 @pytest.mark.parametrize("name", sorted(set(QUERIES) - NO_ORACLE_DECLARED))
 def test_oracle_match(spark, sf_dir, duck, name):
+    cached = cache_entries(spark)
     df = QUERIES[name](spark, sf_dir)
     compare(df, duck, ORACLES[name])
+    # a query leaves the CacheManager as it found it: a cache() it does
+    # not release pins executor memory for the rest of the session
+    assert cache_entries(spark) == cached, f"{name} leaked a cached frame"
 
 
 @pytest.mark.parametrize("name", sorted(QUERIES))
