@@ -9,6 +9,14 @@ Spark but 4.47 in DuckDB — a hash-mismatch generator on any ``avg``/``sum``.
 ``floor(x * 10^n + 0.5) / 10^n`` with identical IEEE-754 double ops, so the
 results are bit-identical by construction.
 
+``rnd_expr``/``cent_sum_expr`` are the Spark SQL text of ``rnd``/``cent_sum``,
+for expressions built as one string (``selectExpr``, ``F.expr``) instead of
+one py4j call per Column operator.  Spark SQL reads an unsuffixed ``100.0``
+as a DECIMAL, so their constants carry the ``D`` suffix (``100.0D``,
+``0.5D``): that gives the same double literals as ``F.lit(100.0)`` and the
+same plan as the Column form.  Without it the formula runs in decimal
+arithmetic and can round differently.
+
 Contract domain: bit-stability requires ``|x|·10ⁿ < 2^53`` (beyond that,
 doubles can't represent consecutive integers and the engines' floor/division
 orders can differ in the last ulp — property-tested at the boundary in
@@ -27,6 +35,12 @@ def rnd(col: Column, n: int) -> Column:
     """Round half-up at n decimals, bit-identical across Spark and DuckDB."""
     scale = float(10**n)
     return F.floor(col * F.lit(scale) + F.lit(0.5)) / F.lit(scale)
+
+
+def rnd_expr(expr: str, n: int) -> str:
+    """Spark SQL text of :func:`rnd` over the SQL expression ``expr``."""
+    scale = float(10**n)
+    return f"floor(({expr}) * {scale!r}D + 0.5D) / {scale!r}D"
 
 
 def rnd_sql(expr: str, n: int) -> str:
@@ -52,6 +66,11 @@ def cent_sum(col: Column) -> Column:
         F.sum(F.floor(col * F.lit(100.0) + F.lit(0.5)).cast("long"))
         / F.lit(100.0)
     )
+
+
+def cent_sum_expr(expr: str) -> str:
+    """Spark SQL text of :func:`cent_sum` over the SQL expression ``expr``."""
+    return f"sum(CAST(floor(({expr}) * 100.0D + 0.5D) AS BIGINT)) / 100.0D"
 
 
 def cent_sum_sql(expr: str) -> str:

@@ -25,6 +25,7 @@ reference too (ogmios_parquet.py:693-695).
 
 from __future__ import annotations
 
+import functools
 import hashlib
 import os
 import random
@@ -583,14 +584,20 @@ def fixture_blocks(specs: list[dict] | None = None) -> list[dict]:
     return blocks
 
 
+@functools.cache
+def _fixture_version() -> str:
+    """The ready marker's content: a hash of the specs.  ``tx_specs()`` is
+    deterministic, so one computation per process serves every call."""
+    return hashlib.sha256(repr(tx_specs()).encode()).hexdigest()[:16]
+
+
 def ensure_fixture_lake(spark=None, root: str = DEFAULT_LAKE_ROOT) -> str:
     """Generate the lake once (marker-file guarded); return its root.
 
     ``spark`` is accepted (and ignored) so call sites can pass their session;
     generation is pure PyArrow and needs no engine.
     """
-    specs = tx_specs()
-    version = hashlib.sha256(repr(specs).encode()).hexdigest()[:16]
+    version = _fixture_version()
     marker = os.path.join(root, "_FIXTURE_READY")
     if os.path.exists(marker):
         with open(marker) as f:
@@ -599,7 +606,7 @@ def ensure_fixture_lake(spark=None, root: str = DEFAULT_LAKE_ROOT) -> str:
         import shutil  # stale lake from an older spec: rebuild from scratch
 
         shutil.rmtree(root)
-    all_rows = _build_rows(specs)
+    all_rows = _build_rows(tx_specs())
     for table, schema in _ARROW_SCHEMAS.items():
         by_group: dict[int, list[dict]] = {}
         for r in all_rows[table]:

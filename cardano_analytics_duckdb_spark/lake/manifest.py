@@ -49,7 +49,6 @@ import os
 from collections.abc import Iterator
 
 from pyspark.sql import DataFrame, SparkSession
-from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
 from .fsutil import LakeFs
@@ -460,6 +459,31 @@ def _write_stats(
 Bound = float | int | str | bytes | None
 
 
+def _sql_literal(v: Bound) -> str:
+    """``v`` as Spark SQL literal text of the type ``F.lit(v)`` gives."""
+    if isinstance(v, (bytes, bytearray)):
+        return f"X'{bytes(v).hex()}'"
+    if isinstance(v, str):
+        return "'" + v.replace("\\", "\\\\").replace("'", "''") + "'"
+    if isinstance(v, float):
+        return f"{v!r}D"  # an unsuffixed 1.5 would be a DECIMAL
+    return str(v)
+
+
+def box_predicate_sql(preds: list[tuple[str, Bound, Bound]]) -> str | None:
+    """The box as ONE row predicate, ``col >= lo AND col <= hi`` per bound
+    in order (None when no predicate has a bound): one parse instead of a
+    chain of ``filter(F.col(c) >= F.lit(v))`` calls, which Catalyst merges
+    into an equivalent condition."""
+    terms = []
+    for column, lo, hi in preds:
+        if lo is not None:
+            terms.append(f"{column} >= {_sql_literal(lo)}")
+        if hi is not None:
+            terms.append(f"{column} <= {_sql_literal(hi)}")
+    return " AND ".join(terms) or None
+
+
 def _bound_cols(lo, hi) -> tuple[str, str]:
     """(min_col, max_col) of the manifest stat pair a bound type prunes
     against; both bounds must agree in kind."""
@@ -632,6 +656,7 @@ def read_pruned_box_with_bound(
     spark: SparkSession,
     table_dir: str,
     preds: list[tuple[str, Bound, Bound]],
+    lfs: LakeFs | None = None,
 ) -> tuple[DataFrame, int | None]:
     """The box query itself over the files :func:`prune_files_box`
     keeps, predicates re-applied row-level — it equals ``full scan WHERE
@@ -643,9 +668,10 @@ def read_pruned_box_with_bound(
     #2) pay zero traffic beyond the read they were already doing; a
     second listing pass measured ~1.1 s/run at the 2M-tx probe lake (the
     first flagship_gate_ab_10000x recording).  The control-plane work
-    happens once: one filesystem handle, one file listing, one manifest
+    happens once: one filesystem handle (the caller's ``lfs`` for
+    ``table_dir``, when it has one), one file listing, one manifest
     snapshot (its signature listed once) and one relativization."""
-    lfs = LakeFs(spark, table_dir)
+    lfs = lfs or LakeFs(spark, table_dir)
     live = _data_files(lfs, table_dir)
     snap = _manifest_snapshot(spark, lfs, table_dir)
     rel = _kept(_relative(live, lfs, table_dir), snap, preds)
@@ -670,9 +696,5 @@ def read_pruned_box_with_bound(
         df = spark.createDataFrame([], read_table(spark, table_dir).schema)
     else:
         df = _read_files(spark, table_dir, rel)
-    for column, lo, hi in preds:
-        if lo is not None:
-            df = df.filter(F.col(column) >= F.lit(lo))
-        if hi is not None:
-            df = df.filter(F.col(column) <= F.lit(hi))
-    return df, bound
+    box = box_predicate_sql(preds)
+    return (df.filter(box) if box else df), bound

@@ -106,6 +106,7 @@ def _lake_pruned(
     from ..lake.lock import maintenance_lock
     from ..lake.manifest import (
         MANIFEST_DIR,
+        box_predicate_sql,
         build_manifest,
         read_pruned_box_with_bound,
     )
@@ -137,14 +138,8 @@ def _lake_pruned(
         except (RuntimeError, OSError):
             built = False  # lock held elsewhere, or root unwritable
         if not built:
-            df = _lake(spark, table, root=root)
-            for column, lo, hi in preds:
-                if lo is not None:
-                    df = df.filter(F.col(column) >= F.lit(lo))
-                if hi is not None:
-                    df = df.filter(F.col(column) <= F.lit(hi))
-            return df, None
-    return read_pruned_box_with_bound(spark, table_dir, preds)
+            return _lake(spark, table, root=root).filter(box_predicate_sql(preds)), None
+    return read_pruned_box_with_bound(spark, table_dir, preds, lfs)
 
 
 def cardano_high_fee_txs(spark: SparkSession, sf_dir: str) -> DataFrame:

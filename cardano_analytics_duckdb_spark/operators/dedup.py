@@ -34,13 +34,11 @@ from .similarity import _dot, _norm
 def exact_dedup_groups(spark: SparkSession, sf_dir: str) -> DataFrame:
     docs = load_table(spark, sf_dir, "documents")
     return (
-        docs.select(
-            "doc_id", F.md5(F.col("text").cast("binary")).alias("fingerprint")
-        )
+        docs.selectExpr("doc_id", "md5(CAST(text AS BINARY)) AS fingerprint")
         .groupBy("fingerprint")
         .agg(
-            F.min("doc_id").alias("canonical_doc_id"),
-            F.count("*").alias("dup_count"),
+            F.expr("min(doc_id) AS canonical_doc_id"),
+            F.expr("count(*) AS dup_count"),
         )
         # sort key ≠ group key, so the shuffles can't merge; the result is
         # group-bounded and small, so one-pass coalesced sort beats
@@ -66,18 +64,13 @@ def _shingles(docs: DataFrame, distinct: bool = True) -> DataFrame:
 
     ``distinct=True`` gives set semantics (needed for Jaccard counts);
     min-based consumers can skip the dedup shuffle."""
-    w = F.split(F.col("text"), " ")
     out = (
-        docs.select("doc_id", w.alias("w"))
-        .filter(F.size("w") >= 3)
-        .select(
+        docs.selectExpr("doc_id", "split(text, ' ') AS w")
+        .filter("size(w) >= 3")
+        .selectExpr(
             "doc_id",
-            F.explode(
-                F.expr(
-                    "transform(sequence(0, size(w)-3),"
-                    " i -> concat_ws(' ', w[i], w[i+1], w[i+2]))"
-                )
-            ).alias("sh"),
+            "explode(transform(sequence(0, size(w)-3),"
+            " i -> concat_ws(' ', w[i], w[i+1], w[i+2]))) AS sh",
         )
     )
     return out.distinct() if distinct else out
@@ -304,33 +297,25 @@ def _signatures(docs: DataFrame) -> DataFrame:
     # evaluate interpreted, while the exploded form keeps md5/substring/min
     # inside whole-stage codegen with map-side partial aggregation.)
     sh = _shingles(docs, distinct=False)
-    digest = F.md5(F.col("sh").cast("binary"))
-    return sh.groupBy("doc_id").agg(
-        *[
-            F.min(F.substring(digest, 1 + i * 5, 5)).alias(f"h{i}")
-            for i in range(_MINHASH_K)
-        ]
-    )
+    return sh.groupBy("doc_id").agg(*[
+        F.expr(f"min(substring(md5(CAST(sh AS BINARY)), {1 + i * 5}, 5)) AS h{i}")
+        for i in range(_MINHASH_K)
+    ])
 
 
 def _bands_of(sig: DataFrame) -> DataFrame:
     """Signature rows → (doc_id, band, band_key) band rows."""
     # Emit both bands via one explode so the signature lineage is computed
     # once (a union of two projections would recompute it per branch).
-    band_structs = F.array(
-        *[
-            F.struct(
-                F.lit(b).alias("band"),
-                F.concat_ws(
-                    "|", *[F.col(f"h{i}") for i in range(lo, hi)]
-                ).alias("band_key"),
-            )
-            for b, (lo, hi) in enumerate(_BANDS)
-        ]
+    band_structs = ", ".join(
+        f"struct({b} AS band, concat_ws('|', "
+        + ", ".join(f"h{i}" for i in range(lo, hi))
+        + ") AS band_key)"
+        for b, (lo, hi) in enumerate(_BANDS)
     )
-    return sig.select(
-        "doc_id", F.explode(band_structs).alias("bk")
-    ).select("doc_id", F.col("bk.band").alias("band"), F.col("bk.band_key").alias("band_key"))
+    return sig.selectExpr(
+        "doc_id", f"explode(array({band_structs})) AS bk"
+    ).selectExpr("doc_id", "bk.band AS band", "bk.band_key AS band_key")
 
 
 def _minhash_bands(docs: DataFrame) -> DataFrame:
@@ -365,16 +350,13 @@ def minhash_band_buckets(spark: SparkSession, sf_dir: str) -> DataFrame:
         # string cast — '10' < '2' lexicographically): the driver canonicalizer
         # can't hash array cells.
         .agg(
-            F.count("*").alias("bucket_size"),
-            F.concat_ws(
-                "|",
-                F.transform(
-                    F.array_sort(F.collect_list("doc_id")),
-                    lambda x: x.cast("string"),
-                ),
-            ).alias("members"),
+            F.expr("count(*) AS bucket_size"),
+            F.expr(
+                "concat_ws('|', transform(array_sort(collect_list(doc_id)),"
+                " x -> CAST(x AS STRING))) AS members"
+            ),
         )
-        .filter(F.col("bucket_size") > 1)
+        .filter("bucket_size > 1")
         .sortWithinPartitions("band", "band_key")
     )
 
@@ -602,33 +584,19 @@ def _simhash_frame(docs: DataFrame) -> DataFrame:
     (SCALE_PROBE r13_simhash_ab): Catalyst interprets HOF lambdas per
     element, while this explode shape keeps md5 and the ±1 sums in
     whole-stage codegen."""
-    toks = docs.select(
-        "doc_id", F.explode(F.split(F.col("text"), " ")).alias("tok")
+    toks = docs.selectExpr("doc_id", "explode(split(text, ' ')) AS tok")
+    h = toks.withColumn("h16", F.expr(
+        "CAST(conv(substring(md5(CAST(tok AS BINARY)), 1, 4), 16, 10) AS INT)"
+    ))
+    bit_sums = h.groupBy("doc_id").agg(*[
+        F.expr(f"sum(CASE WHEN (shiftright(h16, {b}) & 1) = 1"
+               f" THEN 1 ELSE -1 END) AS b{b}")
+        for b in range(16)
+    ])
+    fp = " + ".join(
+        ["0"] + [f"CASE WHEN b{b} > 0 THEN {1 << b} ELSE 0 END" for b in range(16)]
     )
-    h = toks.withColumn(
-        "h16",
-        F.conv(F.substring(F.md5(F.col("tok").cast("binary")), 1, 4), 16, 10).cast(
-            "int"
-        ),
-    )
-    bit_sums = h.groupBy("doc_id").agg(
-        *[
-            F.sum(
-                F.when(F.shiftright(F.col("h16"), b).bitwiseAND(1) == 1, 1).otherwise(
-                    -1
-                )
-            ).alias(f"b{b}")
-            for b in range(16)
-        ]
-    )
-    fp = sum(
-        [
-            F.when(F.col(f"b{b}") > 0, F.lit(1 << b)).otherwise(F.lit(0))
-            for b in range(16)
-        ],
-        F.lit(0),
-    )
-    return bit_sums.select("doc_id", fp.cast("int").alias("simhash16"))
+    return bit_sums.selectExpr("doc_id", f"CAST({fp} AS INT) AS simhash16")
 
 
 def simhash_fingerprints(spark: SparkSession, sf_dir: str) -> DataFrame:

@@ -25,7 +25,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from ..functions.ordering import small_sorted
-from ..functions.rounding import cent_sum, rnd
+from ..functions.rounding import cent_sum, rnd, rnd_expr
 from ..lake.tables import load_table
 
 # -- S1/P1/P2/O1: glob scan → filter → project → top-k ----------------------
@@ -35,9 +35,9 @@ from ..lake.tables import load_table
 def high_value_orders(spark: SparkSession, sf_dir: str) -> DataFrame:
     orders = load_table(spark, sf_dir, "orders")
     return (
-        orders.filter(F.col("o_totalprice") > 400_000.0)
-        .select("o_orderkey", "o_custkey", "o_totalprice", "o_orderdate")
-        .orderBy(F.col("o_totalprice").desc(), F.col("o_orderkey"))
+        orders.filter("o_totalprice > 400000.0D")
+        .selectExpr("o_orderkey", "o_custkey", "o_totalprice", "o_orderdate")
+        .orderBy(F.desc("o_totalprice"), "o_orderkey")
         .limit(100)
     )
 
@@ -55,12 +55,12 @@ LIMIT 100
 
 def order_summary_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
     orders = load_table(spark, sf_dir, "orders")
-    return orders.agg(
-        F.count("*").alias("total_orders"),
-        rnd(F.avg("o_totalprice"), 2).alias("avg_price"),
-        rnd(F.max("o_totalprice"), 2).alias("max_price"),
-        rnd(F.min("o_totalprice"), 2).alias("min_price"),
-    )
+    return orders.agg(*map(F.expr, [
+        "count(*) AS total_orders",
+        rnd_expr("avg(o_totalprice)", 2) + " AS avg_price",
+        rnd_expr("max(o_totalprice)", 2) + " AS max_price",
+        rnd_expr("min(o_totalprice)", 2) + " AS min_price",
+    ]))
 
 
 _ORDER_SUMMARY_SQL = """
@@ -76,28 +76,20 @@ FROM orders
 
 def pricing_summary(spark: SparkSession, sf_dir: str) -> DataFrame:
     li = load_table(spark, sf_dir, "lineitem")
+    disc_price = "l_extendedprice * (1 - l_discount)"
     return (
-        li.filter(F.col("l_shipdate") <= F.lit("1998-09-02").cast("timestamp"))
+        li.filter("l_shipdate <= CAST('1998-09-02' AS TIMESTAMP)")
         .groupBy("l_returnflag", "l_linestatus")
-        .agg(
-            rnd(F.sum("l_quantity"), 2).alias("sum_qty"),
-            rnd(F.sum("l_extendedprice"), 2).alias("sum_base_price"),
-            rnd(
-                F.sum(F.col("l_extendedprice") * (1 - F.col("l_discount"))), 2
-            ).alias("sum_disc_price"),
-            rnd(
-                F.sum(
-                    F.col("l_extendedprice")
-                    * (1 - F.col("l_discount"))
-                    * (1 + F.col("l_tax"))
-                ),
-                2,
-            ).alias("sum_charge"),
-            rnd(F.avg("l_quantity"), 2).alias("avg_qty"),
-            rnd(F.avg("l_extendedprice"), 2).alias("avg_price"),
-            rnd(F.avg("l_discount"), 4).alias("avg_disc"),
-            F.count("*").alias("count_order"),
-        )
+        .agg(*map(F.expr, [
+            rnd_expr("sum(l_quantity)", 2) + " AS sum_qty",
+            rnd_expr("sum(l_extendedprice)", 2) + " AS sum_base_price",
+            rnd_expr(f"sum({disc_price})", 2) + " AS sum_disc_price",
+            rnd_expr(f"sum({disc_price} * (l_tax + 1))", 2) + " AS sum_charge",
+            rnd_expr("avg(l_quantity)", 2) + " AS avg_qty",
+            rnd_expr("avg(l_extendedprice)", 2) + " AS avg_price",
+            rnd_expr("avg(l_discount)", 4) + " AS avg_disc",
+            "count(*) AS count_order",
+        ]))
         .transform(small_sorted, "l_returnflag", "l_linestatus")
     )
 
@@ -201,18 +193,18 @@ def revenue_by_region(spark: SparkSession, sf_dir: str) -> DataFrame:
     # the scale cliff.
     return (
         orders.join(
-            customer.select("c_custkey", "c_nationkey").hint("shuffle_hash"),
-            orders.o_custkey == F.col("c_custkey"),
+            customer.selectExpr("c_custkey", "c_nationkey").hint("shuffle_hash"),
+            F.expr("o_custkey = c_custkey"),
         )
-        .select(
-            F.expr(f"element_at({key_to_region}, c_nationkey)").alias("r_name"),
+        .selectExpr(
+            f"element_at({key_to_region}, c_nationkey) AS r_name",
             "o_totalprice",
         )
-        .filter(F.col("r_name").isNotNull())
+        .filter("r_name IS NOT NULL")
         .groupBy("r_name")
         .agg(
-            rnd(F.sum("o_totalprice"), 2).alias("revenue"),
-            F.count("*").alias("order_count"),
+            F.expr(rnd_expr("sum(o_totalprice)", 2) + " AS revenue"),
+            F.expr("count(*) AS order_count"),
         )
         .transform(small_sorted, "r_name")
     )
@@ -320,20 +312,19 @@ def order_brand_sets(spark: SparkSession, sf_dir: str) -> DataFrame:
     # shiftleft(1L, -1).  Unreachable while the domain comes from this same
     # table, but fail VISIBLY if a drifted/stale snapshot ever meets an
     # unmapped brand.
-    pos = F.array_position(
-        F.array(*[F.lit(v) for v in domain]), F.col("p_brand")
+    names = _sql_str_array(domain)
+    pos = f"array_position({names}, p_brand)"
+    part_dim = part.selectExpr(
+        "p_partkey",
+        f"CAST(CASE WHEN {pos} > 0 THEN {pos} - 1"
+        " ELSE raise_error('p_brand outside the snapshotted domain') END"
+        " AS INT) AS bit",
     )
-    bit_of = F.when(pos > 0, pos - 1).otherwise(
-        F.expr("raise_error('p_brand outside the snapshotted domain')")
-    )
-    part_dim = part.select("p_partkey", bit_of.cast("int").alias("bit"))
-    decode = _BITSET_DECODE.format(
-        n=len(domain), mask="brand_mask", names=_sql_str_array(domain)
-    )
+    decode = _BITSET_DECODE.format(n=len(domain), mask="brand_mask", names=names)
     rows = (
-        li.select("l_orderkey", "l_partkey")
-        .join(F.broadcast(part_dim), F.col("l_partkey") == F.col("p_partkey"))
-        .select("l_orderkey", F.expr("shiftleft(1L, bit)").alias("brand_bit"))
+        li.selectExpr("l_orderkey", "l_partkey")
+        .join(F.broadcast(part_dim), F.expr("l_partkey = p_partkey"))
+        .selectExpr("l_orderkey", "shiftleft(1L, bit) AS brand_bit")
     )
     # r13 agg-first (the events_sliding lesson applied to the bitset
     # aggs): the old shape pre-shuffled RAW (orderkey, bit) rows through
@@ -345,8 +336,8 @@ def order_brand_sets(spark: SparkSession, sf_dir: str) -> DataFrame:
     # canonicalized away by the oracle.  A/B: SCALE_PROBE r13_aggfirst_ab.
     return (
         rows.groupBy("l_orderkey")
-        .agg(F.bit_or("brand_bit").alias("brand_mask"))
-        .select("l_orderkey", F.expr(decode).alias("brand_set"))
+        .agg(F.expr("bit_or(brand_bit) AS brand_mask"))
+        .selectExpr("l_orderkey", f"{decode} AS brand_set")
         .sortWithinPartitions("l_orderkey")
     )
 
@@ -399,25 +390,23 @@ def cross_nation_orders(spark: SparkSession, sf_dir: str) -> DataFrame:
     ) + ")"
 
     supp_rows = (
-        li.select("l_orderkey", "l_suppkey")
-        .join(F.broadcast(supplier.select("s_suppkey", "s_nationkey")),
-              F.col("l_suppkey") == F.col("s_suppkey"))
-        .select(
-            F.col("l_orderkey").alias("o_orderkey"),
-            F.expr(
-                f"shiftleft(1L, element_at({key_to_bit}, s_nationkey))"
-            ).alias("nation_bit"),
-            F.lit(None).cast("int").alias("cust_idx"),
+        li.selectExpr("l_orderkey", "l_suppkey")
+        .join(F.broadcast(supplier.selectExpr("s_suppkey", "s_nationkey")),
+              F.expr("l_suppkey = s_suppkey"))
+        .selectExpr(
+            "l_orderkey AS o_orderkey",
+            f"shiftleft(1L, element_at({key_to_bit}, s_nationkey)) AS nation_bit",
+            "CAST(NULL AS INT) AS cust_idx",
         )
     )
     cust_rows = (
         orders.join(
-            F.broadcast(customer.select("c_custkey", "c_nationkey")),
-            orders.o_custkey == F.col("c_custkey"), "left")
-        .select(
+            F.broadcast(customer.selectExpr("c_custkey", "c_nationkey")),
+            F.expr("o_custkey = c_custkey"), "left")
+        .selectExpr(
             "o_orderkey",
-            F.lit(0).cast("long").alias("nation_bit"),
-            F.expr(f"element_at({key_to_bit}, c_nationkey)").alias("cust_idx"),
+            "CAST(0 AS BIGINT) AS nation_bit",
+            f"element_at({key_to_bit}, c_nationkey) AS cust_idx",
         )
     )
     # r13 agg-first (see order_brand_sets): the old range pre-shuffle
@@ -427,12 +416,14 @@ def cross_nation_orders(spark: SparkSession, sf_dir: str) -> DataFrame:
     # bit_or/max per union branch BEFORE the exchange, a hash exchange of
     # partials only, no sampler; the global order is oracle-canonicalized.
     # A/B: SCALE_PROBE r13_aggfirst_ab.
+    names_arr = _sql_str_array(names)
+    decode = _BITSET_DECODE.format(n=len(names), mask="supp_mask", names=names_arr)
     return (
         supp_rows.unionByName(cust_rows)
         .groupBy("o_orderkey")
         .agg(
-            F.bit_or("nation_bit").alias("supp_mask"),
-            F.max("cust_idx").alias("cust_idx"),
+            F.expr("bit_or(nation_bit) AS supp_mask"),
+            F.expr("max(cust_idx) AS cust_idx"),
         )
         # The IS DISTINCT FROM rule compares the *encoded* sets: the string
         # forms are null-safe-equal exactly when supp_mask equals the
@@ -442,26 +433,12 @@ def cross_nation_orders(spark: SparkSession, sf_dir: str) -> DataFrame:
         # the string filter would be folded into the broadcast-join
         # condition and evaluate the decode expression twice per row.
         .filter(
-            F.expr(
-                "NOT (supp_mask <=> "
-                "if(cust_idx IS NULL, 0L, shiftleft(1L, cust_idx)))"
-            )
+            "NOT (supp_mask <=> if(cust_idx IS NULL, 0L, shiftleft(1L, cust_idx)))"
         )
-        .select(
+        .selectExpr(
             "o_orderkey",
-            F.nullif(
-                F.expr(
-                    _BITSET_DECODE.format(
-                        n=len(names),
-                        mask="supp_mask",
-                        names=_sql_str_array(names),
-                    )
-                ),
-                F.lit(""),
-            ).alias("supp_nation_set"),
-            F.expr(
-                f"element_at({_sql_str_array(names)}, cust_idx + 1)"
-            ).alias("cust_nation_set"),
+            f"nullif({decode}, '') AS supp_nation_set",
+            f"element_at({names_arr}, cust_idx + 1) AS cust_nation_set",
         )
         .sortWithinPartitions("o_orderkey")
     )

@@ -29,26 +29,32 @@ from pyspark.sql import Column, DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
 from ..functions.ordering import small_sorted
-from ..functions.rounding import rnd
+from ..functions.rounding import rnd, rnd_expr
 from ..lake.tables import load_table
 
 _DIM = 64
 
 
-def _dot(a: str, b: str) -> Column:
-    return F.expr(
+def _dot_sql(a: str, b: str) -> str:
+    return (
         f"aggregate(zip_with({a}, {b}, (x, y) -> cast(x as double) * cast(y as double)),"
         " cast(0.0 as double), (acc, v) -> acc + v)"
     )
 
 
-def _norm(a: str) -> Column:
-    return F.sqrt(
-        F.expr(
-            f"aggregate({a}, cast(0.0 as double),"
-            " (acc, v) -> acc + cast(v as double) * cast(v as double))"
-        )
+def _norm_sql(a: str) -> str:
+    return (
+        f"sqrt(aggregate({a}, cast(0.0 as double),"
+        " (acc, v) -> acc + cast(v as double) * cast(v as double)))"
     )
+
+
+def _dot(a: str, b: str) -> Column:
+    return F.expr(_dot_sql(a, b))
+
+
+def _norm(a: str) -> Column:
+    return F.expr(_norm_sql(a))
 
 
 # -- brute-force cosine top-k vs an in-data query vector ----------------------
@@ -108,11 +114,11 @@ def cosine_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     q = _query_vec(spark, sf_dir, vec_id=0)
     q_lit = "array(" + ", ".join(f"cast({v!r} as double)" for v in q) + ")"
     q_norm = math.sqrt(sum(v * v for v in q))
-    sim = _dot("embedding", q_lit) / (_norm("embedding") * F.lit(q_norm))
+    sim = f"{_dot_sql('embedding', q_lit)} / ({_norm_sql('embedding')} * {q_norm!r}D)"
     return (
-        emb.filter(F.col("vec_id") != 0)
-        .select("vec_id", rnd(sim, 4).alias("cos_sim"))
-        .orderBy(F.col("cos_sim").desc(), F.col("vec_id"))
+        emb.filter("vec_id != 0")
+        .selectExpr("vec_id", rnd_expr(sim, 4) + " AS cos_sim")
+        .orderBy(F.desc("cos_sim"), "vec_id")
         .limit(10)
     )
 
@@ -167,15 +173,10 @@ def _plane_lit(p: list[float]) -> str:
 
 def lsh_bucket_assignments(spark: SparkSession, sf_dir: str) -> DataFrame:
     emb = load_table(spark, sf_dir, "embeddings")
-    bucket = sum(
-        [
-            F.when(_dot("embedding", _plane_lit(p)) > 0, F.lit(1 << i)).otherwise(
-                F.lit(0)
-            )
-            for i, p in enumerate(_PLANES)
-        ],
-        F.lit(0),
-    )
+    bucket = " + ".join(["0"] + [
+        f"CASE WHEN {_dot_sql('embedding', _plane_lit(p))} > 0 THEN {1 << i} ELSE 0 END"
+        for i, p in enumerate(_PLANES)
+    ])
     # r13 sort-drop: the r10 shape persisted the narrow (vec_id, bucket)
     # projection and range-exchanged it so the sampler would not re-run
     # the 8 hyperplane HOF dots (0.68 s vs 0.89/1.07 s then).  The
@@ -184,8 +185,8 @@ def lsh_bucket_assignments(spark: SparkSession, sf_dir: str) -> DataFrame:
     # ONCE over the scan partitioning with no exchange, no sampler and —
     # critically — NO persist on the query path (the old cache entry
     # lingered across bench runs).  A/B: SCALE_PROBE r13_sortdrop_ab.
-    return emb.select(
-        "vec_id", bucket.cast("int").alias("bucket")
+    return emb.selectExpr(
+        "vec_id", f"CAST({bucket} AS INT) AS bucket"
     ).sortWithinPartitions("vec_id")
 
 

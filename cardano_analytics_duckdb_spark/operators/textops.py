@@ -16,7 +16,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from ..functions.ordering import small_sorted
-from ..functions.rounding import rnd, rnd_sql
+from ..functions.rounding import rnd, rnd_expr, rnd_sql
 from ..lake.tables import load_table
 
 # -- token counting + quality scoring -----------------------------------------
@@ -24,10 +24,9 @@ from ..lake.tables import load_table
 
 def doc_quality_scores(spark: SparkSession, sf_dir: str) -> DataFrame:
     docs = load_table(spark, sf_dir, "documents")
-    toks = F.split(F.col("text"), " ")
-    n_tokens = F.size(toks)
-    n_distinct = F.size(F.array_distinct(toks))
-    avg_tok_len = F.expr(
+    n_tokens = "size(split(text, ' '))"
+    n_distinct = "size(array_distinct(split(text, ' ')))"
+    avg_tok_len = (
         "aggregate(split(text, ' '), cast(0.0 as double),"
         " (acc, t) -> acc + length(t)) / size(split(text, ' '))"
     )
@@ -40,14 +39,13 @@ def doc_quality_scores(spark: SparkSession, sf_dir: str) -> DataFrame:
     # layout.  Shuffle-free is scan -> project -> local sort, zero
     # exchanges (A/B in SCALE_PROBE r13_text2_ab).
     return (
-        docs.select("doc_id", "text")
-        .select(
+        docs.selectExpr(
             "doc_id",
-            F.length("text").alias("n_chars_actual"),
-            n_tokens.alias("n_tokens"),
-            n_distinct.alias("n_distinct_tokens"),
-            rnd(n_distinct / n_tokens, 4).alias("type_token_ratio"),
-            rnd(avg_tok_len, 2).alias("avg_token_len"),
+            "length(text) AS n_chars_actual",
+            f"{n_tokens} AS n_tokens",
+            f"{n_distinct} AS n_distinct_tokens",
+            rnd_expr(f"{n_distinct} / {n_tokens}", 4) + " AS type_token_ratio",
+            rnd_expr(avg_tok_len, 2) + " AS avg_token_len",
         )
         .sortWithinPartitions("doc_id")
     )

@@ -20,7 +20,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession, Window as W
 from pyspark.sql import functions as F
 
-from ..functions.rounding import cent_sum, cent_sum_sql, rnd
+from ..functions.rounding import cent_sum, cent_sum_expr, cent_sum_sql, rnd
 from ..lake.tables import load_table
 
 # -- top-k per group ----------------------------------------------------------
@@ -28,9 +28,6 @@ from ..lake.tables import load_table
 
 def top_orders_per_customer(spark: SparkSession, sf_dir: str) -> DataFrame:
     orders = load_table(spark, sf_dir, "orders")
-    w = W.partitionBy("o_custkey").orderBy(
-        F.col("o_totalprice").desc(), F.col("o_orderkey")
-    )
     # One range shuffle on the RAW scan serves the window's clustering
     # requirement; range partitions being ordered, a partition-local sort
     # gives total order in the same pass.
@@ -48,9 +45,12 @@ def top_orders_per_customer(spark: SparkSession, sf_dir: str) -> DataFrame:
     # coalesces below the cores).
     return (
         orders.repartitionByRange("o_custkey")
-        .withColumn("rn", F.row_number().over(w))
-        .filter(F.col("rn") <= 3)
-        .select("o_custkey", "o_orderkey", "o_totalprice", "rn")
+        .withColumn("rn", F.expr(
+            "row_number() OVER (PARTITION BY o_custkey"
+            " ORDER BY o_totalprice DESC, o_orderkey)"
+        ))
+        .filter("rn <= 3")
+        .selectExpr("o_custkey", "o_orderkey", "o_totalprice", "rn")
         .sortWithinPartitions("o_custkey", "rn")
     )
 
@@ -129,12 +129,10 @@ ORDER BY user_id, event_id
 
 def user_sessions(spark: SparkSession, sf_dir: str) -> DataFrame:
     events = load_table(spark, sf_dir, "events")
-    w = W.partitionBy("user_id").orderBy("ts", "event_id")
-    gap_ms = F.unix_millis(F.col("ts")) - F.unix_millis(F.lag("ts").over(w))
-    is_new = F.when(gap_ms.isNull() | (gap_ms > 30 * 60 * 1000), 1).otherwise(0)
-    cum = W.partitionBy("user_id").orderBy("ts", "event_id").rowsBetween(
-        W.unboundedPreceding, W.currentRow
-    )
+    w = "PARTITION BY user_id ORDER BY ts, event_id"
+    gap_ms = f"(unix_millis(ts) - unix_millis(lag(ts) OVER ({w})))"
+    is_new = f"CASE WHEN {gap_ms} IS NULL OR {gap_ms} > 1800000 THEN 1 ELSE 0 END"
+    cum = f"{w} ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW"
     # r13: the explicit range shuffle becomes the window's implicit HASH
     # exchange — still ONE shuffle (hashpartitioning(user_id) satisfies
     # both windows' clustering AND the groupBy's (user_id, session_id)
@@ -143,14 +141,14 @@ def user_sessions(spark: SparkSession, sf_dir: str) -> DataFrame:
     # global order it bought is canonicalized away by the oracle (the
     # gopher/pii lesson).  A/B: SCALE_PROBE r13_sortdrop_ab.
     return (
-        events.withColumn("new_sess", is_new)
-        .withColumn("session_id", F.sum("new_sess").over(cum))
+        events.withColumn("new_sess", F.expr(is_new))
+        .withColumn("session_id", F.expr(f"sum(new_sess) OVER ({cum})"))
         .groupBy("user_id", "session_id")
         .agg(
-            F.count("*").alias("n_events"),
+            F.expr("count(*) AS n_events"),
             # cent_sum, not rnd(sum(...)): float partial-sum order differs
             # between engines and flips 2-decimal rounding (r1 hash mismatch).
-            cent_sum(F.col("value")).alias("session_value"),
+            F.expr(cent_sum_expr("value") + " AS session_value"),
         )
         .sortWithinPartitions("user_id", "session_id")
     )
@@ -183,9 +181,6 @@ ORDER BY user_id, session_id
 
 def events_tumbling_5min(spark: SparkSession, sf_dir: str) -> DataFrame:
     events = load_table(spark, sf_dir, "events")
-    bucket = (F.floor(F.unix_millis(F.col("ts")) / 300_000) * 300_000).alias(
-        "bucket_start_ms"
-    )
     # Aggregate FIRST, then exchange only the finished rows for the
     # global order: the old range-shuffle-then-aggregate shape moved
     # EVERY raw row through the exchange to serve the final order —
@@ -200,9 +195,16 @@ def events_tumbling_5min(spark: SparkSession, sf_dir: str) -> DataFrame:
     # (the flagship's staging pattern) — never re-widen the shuffle to
     # raw rows.
     return (
-        events.select(bucket, "event_type", "value")
+        events.selectExpr(
+            "floor(unix_millis(ts) / 300000) * 300000 AS bucket_start_ms",
+            "event_type",
+            "value",
+        )
         .groupBy("bucket_start_ms", "event_type")
-        .agg(F.count("*").alias("n"), cent_sum(F.col("value")).alias("total_value"))
+        .agg(
+            F.expr("count(*) AS n"),
+            F.expr(cent_sum_expr("value") + " AS total_value"),
+        )
         .repartition(1)
         .sortWithinPartitions("bucket_start_ms", "event_type")
     )

@@ -1,7 +1,9 @@
-"""Spark resource probes shared by the tests: the jobs a block runs and
-the entries in the session's CacheManager."""
+"""Spark resource probes shared by the tests: the jobs a block runs, the
+py4j round trips it makes and the entries in the session's CacheManager."""
 
 from __future__ import annotations
+
+import threading
 
 
 class Jobs:
@@ -49,6 +51,38 @@ class Jobs:
             job_ids = ex.jobs().keySet()
             if any(job_ids.contains(j) for j in self.ids):
                 self.executions.add(ex.executionId())
+        return False
+
+
+class Py4jCalls:
+    """The py4j round trips a block of code makes into the JVM, counted at
+    the gateway connections' ``send_command`` on the calling thread.
+    py4j sends its object-release notices from a finalizer thread, at
+    times of its own; the benchmark's ``operators.py4j_calls`` counts
+    them too, this probe does not.  ``n`` holds the count."""
+
+    def __enter__(self):
+        from py4j import clientserver, java_gateway
+
+        self.n = 0
+        self._patched = []
+        thread = threading.get_ident()
+        for cls in (clientserver.ClientServerConnection,
+                    java_gateway.GatewayConnection):
+            original = cls.send_command
+
+            def counted(conn, command, *a, _orig=original, **k):
+                if threading.get_ident() == thread:
+                    self.n += 1
+                return _orig(conn, command, *a, **k)
+
+            cls.send_command = counted
+            self._patched.append((cls, original))
+        return self
+
+    def __exit__(self, *exc):
+        for cls, original in self._patched:
+            cls.send_command = original
         return False
 
 

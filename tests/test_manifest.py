@@ -776,3 +776,62 @@ def test_pruned_read_does_control_plane_work_once(spark, mtable, monkeypatch):
     )
     assert bound is not None and df.count() > 0
     assert calls == {"LakeFs": 1, "content_signature": 1, "_relative": 1}
+
+
+def test_lake_pruned_shares_one_filesystem_handle(spark, tmp_path, monkeypatch):
+    """``_lake_pruned`` probes ``_manifest`` and then runs the pruned read
+    on ONE filesystem handle."""
+    from cardano_analytics_duckdb_spark.lake import fsutil
+    from cardano_analytics_duckdb_spark.lake.fixtures import (
+        ensure_fixture_lake,
+    )
+    from cardano_analytics_duckdb_spark.operators.cardano import _lake_pruned
+
+    src_root = ensure_fixture_lake(spark)
+    root = str(tmp_path / "fs_lake")
+    spark.read.parquet(f"{src_root}/tx").write.parquet(os.path.join(root, "tx"))
+    fee = [("tx_fee", 2_000_001, None)]
+    _lake_pruned(spark, "tx", fee, root=root)  # builds the manifest
+
+    made = []
+    real_init = fsutil.LakeFs.__init__
+
+    def counted(self, spark, root):
+        made.append(root)
+        real_init(self, spark, root)
+
+    monkeypatch.setattr(fsutil.LakeFs, "__init__", counted)
+    df, bound = _lake_pruned(spark, "tx", fee, root=root)
+    assert bound is not None and df.count() > 0
+    assert made == [f"{root}/tx"]
+
+
+def test_box_predicate_matches_the_chained_filters(spark):
+    """The box applies as ONE SQL-text filter.  Its literals keep the
+    types ``F.lit`` gives (double, long, string with quotes and
+    backslashes, binary), so the optimized plan is the one Catalyst
+    makes of a chain of per-bound filters up to how the conjunction
+    nests (``sameResult`` compares canonical plans), and so are the
+    rows."""
+    from cardano_analytics_duckdb_spark.lake.manifest import box_predicate_sql
+
+    df = spark.createDataFrame(
+        [(b"\x01\x02", "a'b\\c", 1.5, 3), (b"\x00", "zz", 9.0, 7)],
+        "b binary, s string, d double, i long",
+    )
+    box = [("b", b"\x01\x02", b"\x01\x02"), ("s", "a'b\\c", None),
+           ("d", 0.25, 2.0), ("i", 2.5, 3_000_000_000), ("d", None, None)]
+    chained = df
+    for column, lo, hi in box:
+        if lo is not None:
+            chained = chained.filter(F.col(column) >= F.lit(lo))
+        if hi is not None:
+            chained = chained.filter(F.col(column) <= F.lit(hi))
+    one = df.filter(box_predicate_sql(box))
+
+    def optimized(frame):
+        return frame._jdf.queryExecution().optimizedPlan()
+
+    assert optimized(one).sameResult(optimized(chained))
+    assert one.collect() == chained.collect() == [df.first()]
+    assert box_predicate_sql([("d", None, None)]) is None

@@ -9,10 +9,19 @@ oracle still matches.
 
 from __future__ import annotations
 
+import pytest
 from pyspark.sql import functions as F
 
+from bench import HEADLINE
 from cardano_analytics_duckdb_spark.lake.fixtures import ensure_fixture_lake
-from cardano_analytics_duckdb_spark.lake.tables import load_table
+from cardano_analytics_duckdb_spark.lake.tables import (
+    load_table,
+    unwarm_lake,
+    warm_lake,
+)
+from cardano_analytics_duckdb_spark.operators import all_queries
+
+from .probes import Py4jCalls, cache_entries
 
 
 def _plan(df) -> str:
@@ -965,8 +974,6 @@ def test_registry_wide_plan_lint(spark, sf_dir):
     BatchEvalPython (row-at-a-time Python UDF; vectorized Arrow kernels
     are allowed).  Catches a regression in ANY query the moment it is
     registered, not just the ones with dedicated plan tests."""
-    from cardano_analytics_duckdb_spark.operators import all_queries
-
     offenders = {}
     for name, fn in all_queries().items():
         plan = _plan(fn(spark, sf_dir))
@@ -978,3 +985,67 @@ def test_registry_wide_plan_lint(spark, sf_dir):
         if bad:
             offenders[name] = bad
     assert not offenders, offenders
+
+
+@pytest.fixture
+def warm_sf(spark, sf_dir):
+    """``sf_dir`` with every table cached the way the benchmark's
+    headline workload caches it; uncached again afterwards."""
+    warm_lake(spark, sf_dir)
+    yield sf_dir
+    unwarm_lake(sf_dir)
+
+
+# py4j round trips to build each headline query over a warmed lake (the
+# second build: the first fills the per-lake dimension snapshots).  Each
+# projection and aggregate is one SQL text, one parse; as chains of
+# Column calls the same queries took 91 (high_value_orders) to 2,117
+# (simhash_fingerprints) round trips, 6,415 in all.
+_HEADLINE_PY4J_BUDGET = {
+    "high_value_orders": 34,
+    "order_summary_stats": 25,
+    "pricing_summary": 84,
+    "revenue_by_region": 97,
+    "order_brand_sets": 87,
+    "cross_nation_orders": 117,
+    "top_orders_per_customer": 56,
+    "user_sessions": 66,
+    "events_tumbling_5min": 67,
+    "exact_dedup_groups": 48,
+    "minhash_band_buckets": 139,
+    "simhash_fingerprints": 115,
+    "cosine_topk": 48,
+    "lsh_bucket_assignments": 26,
+    "doc_quality_scores": 30,
+}
+
+
+def test_headline_construction_round_trips(spark, warm_sf):
+    queries = all_queries()
+    calls = {}
+    for name in HEADLINE:
+        queries[name](spark, warm_sf)
+        with Py4jCalls() as probe:
+            queries[name](spark, warm_sf)
+        calls[name] = probe.n
+    over = {n: c for n, c in calls.items() if c > _HEADLINE_PY4J_BUDGET[n]}
+    assert not over, (over, calls)
+
+
+def test_headline_queries_keep_the_warmed_cache(spark, warm_sf):
+    """Over a warmed lake every headline query leaves the CacheManager as
+    it found it, and every table it reads is still served from the cache
+    after all of them ran.  ``spark.sql(text, name=df)`` over a warmed
+    frame fails both: PySpark drops the temp view it registers for
+    ``df``, and dropping a view uncaches its plan, so later reads of that
+    table plan a file scan."""
+    queries = all_queries()
+    before = cache_entries(spark)
+    for name in HEADLINE:
+        queries[name](spark, warm_sf).write.format("noop").mode("overwrite").save()
+        assert cache_entries(spark) == before, name
+    for name in HEADLINE:
+        plan = queries[name](spark, warm_sf)._jdf.queryExecution().sparkPlan()
+        leaves = plan.collectLeaves()
+        scans = {leaves.apply(i).nodeName() for i in range(leaves.size())}
+        assert scans == {"InMemoryTableScan"}, (name, scans)
