@@ -10,8 +10,10 @@ and projection pushdown into the scan (SURVEY §4 R1/R4 are free).
 from __future__ import annotations
 
 import os
+from collections.abc import Callable
 
 from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import functions as F
 
 TESTDATA_TABLES = (
     "region",
@@ -108,7 +110,9 @@ def load_plain_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
     if not os.path.exists(path):
         raise FileNotFoundError(f"table {name!r} not found at {path}")
     if name == "events":
-        return _load_events(spark, path)
+        return events_with_ts(
+            spark, events_ts_encoding(path), lambda: spark.read.parquet(path)
+        )
     return spark.read.parquet(path)
 
 
@@ -152,29 +156,28 @@ def events_ts_encoding(path: str) -> str:
     return "utc" if getattr(t, "tz", None) else "ntz"
 
 
-def _load_events(spark: SparkSession, path: str) -> DataFrame:
-    """Load events with ``ts`` normalized to a session-TZ TIMESTAMP whatever
-    the parquet encoding:
+def events_with_ts(
+    spark: SparkSession, encoding: str, read: Callable[[], DataFrame]
+) -> DataFrame:
+    """The events frame ``read()`` returns, with ``ts`` normalized to a
+    session-TZ TIMESTAMP for the footer's ``encoding`` — the one rule for
+    both the batch reader and the streaming source:
 
-    - TIMESTAMP(NANOS): Spark's vectorized reader rejects it
+    - ``"nanos"``: Spark's vectorized reader rejects TIMESTAMP(NANOS)
       ([PARQUET_TYPE_ILLEGAL]); read nanos as long, truncate to micros —
       DuckDB's ns→us cast semantics, so oracle comparisons stay bit-identical.
-    - TIMESTAMP(MICROS/MILLIS) without UTC adjustment: surfaces as
-      TIMESTAMP_NTZ; cast to TIMESTAMP (session TZ is UTC, matching DuckDB's
-      naive timestamps bit-for-bit).
+    - ``"ntz"``: micros/millis without UTC adjustment surface as
+      TIMESTAMP_NTZ; read the naive value as UTC (``_ntz_as_utc_instant``).
+    - ``"utc"``: already a TIMESTAMP.
     """
-    from pyspark.sql import functions as F
-
-    if events_ts_encoding(path) == "nanos":
+    if encoding == "nanos":
         # nanosAsLong only changes how otherwise-unreadable NANOS columns
         # surface, and is only set when such a file is actually present.
         spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
-        df = spark.read.parquet(path)
-        return df.withColumn("ts", F.expr("timestamp_micros(ts div 1000)"))
-    df = spark.read.parquet(path)
-    if df.schema["ts"].dataType.typeName() == "timestamp_ntz":
-        df = df.withColumn("ts", _ntz_as_utc_instant("ts"))
-    return df
+        return read().withColumn("ts", F.expr("timestamp_micros(ts div 1000)"))
+    if encoding == "ntz":
+        return read().withColumn("ts", _ntz_as_utc_instant("ts"))
+    return read()
 
 
 def _ntz_as_utc_instant(col: str):
@@ -188,8 +191,6 @@ def _ntz_as_utc_instant(col: str):
     ``timestamp_micros`` maps epoch micros to an instant; neither consults
     the session zone.
     """
-    from pyspark.sql import functions as F
-
     return F.expr(
         "timestamp_micros(timestampdiff(MICROSECOND, "
         f"TIMESTAMP_NTZ '1970-01-01 00:00:00', {col}))"

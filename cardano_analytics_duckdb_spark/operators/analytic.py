@@ -405,23 +405,25 @@ ORDER BY decile
 
 
 def revenue_grouping_sets(spark: SparkSession, sf_dir: str) -> DataFrame:
-    load_table(spark, sf_dir, "lineitem").createOrReplaceTempView("lineitem_gs")
-    raw = spark.sql(
-        """
-        SELECT coalesce(l_returnflag, 'ALL') AS returnflag,
-               coalesce(l_linestatus, 'ALL') AS linestatus,
-               sum(l_extendedprice) AS sum_price_raw,
-               count(*) AS n
-        FROM lineitem_gs
-        GROUP BY GROUPING SETS ((l_returnflag), (l_linestatus), ())
-        """
+    return (
+        load_table(spark, sf_dir, "lineitem")
+        .groupingSets(
+            [["l_returnflag"], ["l_linestatus"], []],
+            "l_returnflag",
+            "l_linestatus",
+        )
+        .agg(
+            F.sum("l_extendedprice").alias("sum_price_raw"),
+            F.count("*").alias("n"),
+        )
+        .select(
+            F.coalesce("l_returnflag", F.lit("ALL")).alias("returnflag"),
+            F.coalesce("l_linestatus", F.lit("ALL")).alias("linestatus"),
+            rnd(F.col("sum_price_raw"), 2).alias("sum_price"),
+            "n",
+        )
+        .transform(small_sorted, "returnflag", "linestatus")
     )
-    return raw.select(
-        "returnflag",
-        "linestatus",
-        rnd(F.col("sum_price_raw"), 2).alias("sum_price"),
-        "n",
-    ).transform(small_sorted, "returnflag", "linestatus")
 
 
 _GROUPING_SETS_SQL = """
@@ -730,6 +732,15 @@ ORDER BY event_type
 # broadcast probe — no cartesian, no per-row subquery re-execution.
 
 
+def _negative_balance_suppkeys(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """The NOT IN subquery of Q16 and of ``not_in_null_semantics``."""
+    return (
+        load_table(spark, sf_dir, "supplier")
+        .filter("s_acctbal < 0.0")
+        .select("s_suppkey")
+    )
+
+
 def distinct_supplier_part_counts(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Q16 shape: distinct suppliers per part descriptor, excluding
     suppliers from a NOT IN subquery (negative account balance).
@@ -751,24 +762,18 @@ def distinct_supplier_part_counts(spark: SparkSession, sf_dir: str) -> DataFrame
     int-pair hash pass over 60M rows costs more than it saves the
     downstream string-keyed distinct agg, which Spark runs as a
     two-stage partial/final anyway."""
-    load_table(
-        spark, sf_dir, "lineitem", layout_for=("l_partkey",)
-    ).createOrReplaceTempView("li_q16")
-    load_table(
-        spark, sf_dir, "part", layout_for=("p_partkey",)
-    ).createOrReplaceTempView("part_q16")
-    load_table(spark, sf_dir, "supplier").createOrReplaceTempView("supp_q16")
-    raw = spark.sql(
-        """
-        SELECT p_brand, p_type, p_size,
-               count(DISTINCT l_suppkey) AS supplier_cnt
-        FROM li_q16 JOIN part_q16 ON p_partkey = l_partkey
-        WHERE p_brand <> 'Brand#5'
-          AND p_size IN (1, 9, 19, 29, 39, 49)
-          AND l_suppkey NOT IN (
-              SELECT s_suppkey FROM supp_q16 WHERE s_acctbal < 0.0)
-        GROUP BY p_brand, p_type, p_size
-        """
+    li = load_table(spark, sf_dir, "lineitem", layout_for=("l_partkey",))
+    part = load_table(spark, sf_dir, "part", layout_for=("p_partkey",))
+    negative = _negative_balance_suppkeys(spark, sf_dir)
+    raw = (
+        li.join(part, F.col("p_partkey") == F.col("l_partkey"))
+        .filter(
+            (F.col("p_brand") != "Brand#5")
+            & F.col("p_size").isin(1, 9, 19, 29, 39, 49)
+            & ~F.col("l_suppkey").isin(negative)
+        )
+        .groupBy("p_brand", "p_type", "p_size")
+        .agg(F.count_distinct("l_suppkey").alias("supplier_cnt"))
     )
     return raw.transform(
         small_sorted,
@@ -804,23 +809,27 @@ def not_in_null_semantics(spark: SparkSession, sf_dir: str) -> DataFrame:
       thousands).  A hash match against DuckDB on both rows pins the
       null-aware semantics from both sides.
     """
-    load_table(spark, sf_dir, "lineitem").createOrReplaceTempView("li_nn")
-    load_table(spark, sf_dir, "supplier").createOrReplaceTempView("supp_nn")
-    raw = spark.sql(
-        """
-        SELECT 'outer_nulls' AS variant, count(*) AS n_kept
-        FROM li_nn
-        WHERE (CASE WHEN l_linenumber = 1 THEN NULL ELSE l_suppkey END)
-              NOT IN (SELECT s_suppkey FROM supp_nn WHERE s_acctbal < 0.0)
-        UNION ALL
-        SELECT 'poisoned_set' AS variant, count(*) AS n_kept
-        FROM li_nn
-        WHERE l_suppkey NOT IN (
-            SELECT CASE WHEN s_acctbal < 0.0 THEN s_suppkey END
-            FROM supp_nn)
-        """
+    li = load_table(spark, sf_dir, "lineitem")
+    poisoned = load_table(spark, sf_dir, "supplier").selectExpr(
+        "CASE WHEN s_acctbal < 0.0 THEN s_suppkey END"
     )
-    return raw.transform(small_sorted, "variant")
+
+    def kept(variant: str, probe: str, keys: DataFrame) -> DataFrame:
+        return (
+            li.filter(~F.expr(probe).isin(keys))
+            .groupBy()
+            .agg(F.lit(variant).alias("variant"), F.count("*").alias("n_kept"))
+        )
+
+    return (
+        kept(
+            "outer_nulls",
+            "CASE WHEN l_linenumber = 1 THEN NULL ELSE l_suppkey END",
+            _negative_balance_suppkeys(spark, sf_dir),
+        )
+        .unionAll(kept("poisoned_set", "l_suppkey", poisoned))
+        .transform(small_sorted, "variant")
+    )
 
 
 _NOT_IN_NULL_SQL = """

@@ -34,6 +34,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from ..functions.rounding import rnd
+from ..functions.slots import slot_posix_ms, slot_posix_ms_sql
 from ..lake.fixtures import (
     DEFAULT_LAKE_ROOT,
     TOKEN_NAME,
@@ -466,19 +467,11 @@ ORDER BY is_inline
 
 # -- fee timeline with slot→timestamp upgrade (SURVEY §1.3) -------------------
 
-_SHELLEY_SLOT = 4_492_800
-_SHELLEY_MS = 1_596_059_091_000
-_BYRON_MS = 1_506_203_091_000
-
 
 def cardano_fee_by_slot_group(spark: SparkSession, sf_dir: str) -> DataFrame:
     tx = _lake(spark, "tx")
-    posix_ms = F.when(
-        F.col("slot") >= _SHELLEY_SLOT,
-        F.lit(_SHELLEY_MS) + (F.col("slot") - _SHELLEY_SLOT) * 1000,
-    ).otherwise(F.lit(_BYRON_MS) + F.col("slot") * 20_000)
     return (
-        tx.withColumn("posix_ms", posix_ms.cast("long"))
+        tx.withColumn("posix_ms", slot_posix_ms(F.col("slot")).cast("long"))
         .groupBy("slot_group")
         .agg(
             F.count("*").alias("n_txs"),
@@ -492,12 +485,8 @@ def cardano_fee_by_slot_group(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 _FEE_BY_GROUP_SQL = f"""
 SELECT slot_group, count(*) AS n_txs, CAST(sum(tx_fee) AS BIGINT) AS total_fees,
-       min(CASE WHEN slot >= {_SHELLEY_SLOT}
-            THEN {_SHELLEY_MS} + (slot - {_SHELLEY_SLOT}) * 1000
-            ELSE {_BYRON_MS} + slot * 20000 END) AS first_ms,
-       max(CASE WHEN slot >= {_SHELLEY_SLOT}
-            THEN {_SHELLEY_MS} + (slot - {_SHELLEY_SLOT}) * 1000
-            ELSE {_BYRON_MS} + slot * 20000 END) AS last_ms
+       min({slot_posix_ms_sql("slot")}) AS first_ms,
+       max({slot_posix_ms_sql("slot")}) AS last_ms
 FROM {_scan("tx")}
 GROUP BY slot_group
 ORDER BY slot_group

@@ -26,6 +26,7 @@ from pyspark.sql import functions as F
 
 from ..functions.ordering import small_sorted
 from ..functions.rounding import cent_sum, rnd, rnd_expr
+from ..functions.slots import slot_posix_ms, slot_posix_ms_sql
 from ..lake.tables import load_table
 
 # -- S1/P1/P2/O1: glob scan → filter → project → top-k ----------------------
@@ -559,22 +560,15 @@ ORDER BY custkey
 # ≙ slot_to_posix_ms_mainnet (token_fee_analysis.py:8-16): Byron 20 s slots
 #   before 4,492,800, Shelley 1 s slots after.  o_orderkey stands in for slot.
 
-_SHELLEY_SLOT = 4_492_800
-_SHELLEY_MS = 1_596_059_091_000
-_BYRON_MS = 1_506_203_091_000
-
 
 def slot_time_conversion(spark: SparkSession, sf_dir: str) -> DataFrame:
     orders = load_table(spark, sf_dir, "orders")
     slot = F.col("o_orderkey") * 100  # spread keys across the Byron boundary
-    posix_ms = F.when(
-        slot >= _SHELLEY_SLOT, F.lit(_SHELLEY_MS) + (slot - _SHELLEY_SLOT) * 1000
-    ).otherwise(F.lit(_BYRON_MS) + slot * 20_000)
     return (
         orders.select(
             F.col("o_orderkey"),
             slot.cast("long").alias("slot"),
-            posix_ms.cast("long").alias("posix_ms"),
+            slot_posix_ms(slot).cast("long").alias("posix_ms"),
         )
         .orderBy("o_orderkey")
     )
@@ -583,9 +577,7 @@ def slot_time_conversion(spark: SparkSession, sf_dir: str) -> DataFrame:
 _SLOT_TIME_SQL = f"""
 SELECT o_orderkey,
        CAST(o_orderkey * 100 AS BIGINT) AS slot,
-       CAST(CASE WHEN o_orderkey * 100 >= {_SHELLEY_SLOT}
-            THEN {_SHELLEY_MS} + (o_orderkey * 100 - {_SHELLEY_SLOT}) * 1000
-            ELSE {_BYRON_MS} + o_orderkey * 100 * 20000 END AS BIGINT) AS posix_ms
+       CAST({slot_posix_ms_sql("o_orderkey * 100")} AS BIGINT) AS posix_ms
 FROM orders
 ORDER BY o_orderkey
 """

@@ -14,9 +14,13 @@ Spark-first:
   uncompressed chunk files ≙ Spark part-files, ogmios_parquet.py:489-520).
 - T5 stop conditions: the replay iterable simply ends (``stop_slot`` bound
   supported).
-- T6 rollback: ``direction == "backward"`` events are counted and skipped —
-  the reference's append-only, no-retraction policy
-  (ogmios_parquet.py:813-814); a transactional upgrade needs Delta.
+- T6 rollback: with ``reconcile_rollbacks=True`` (what the chain benchmark
+  drives) a ``direction == "backward"`` event flushes the buffer, then
+  ``rollback_lake`` drops every row above the rollback point, committed
+  reader-atomically through the generation pointer
+  (``lake/generations.py``).  The default keeps the reference's
+  append-only policy: backward events are counted and skipped
+  (ogmios_parquet.py:813-814).
 - T8/S9 deferred compaction: ``compact_lake`` rewrites each table to one
   file per slot_group partition (≙ compress_final_files,
   ogmios_parquet.py:523-571; zstd instead of brotli — SURVEY R5).

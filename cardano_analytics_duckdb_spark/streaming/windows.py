@@ -23,14 +23,14 @@ from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
 from ..functions.rounding import rnd
-from ..lake.tables import _ntz_as_utc_instant, events_ts_encoding
+from ..lake.tables import events_ts_encoding, events_with_ts
 
 
 def _events_raw_schema(ts_encoding: str) -> T.StructType:
     # ts arrives as long when the file is TIMESTAMP(NANOS) (read via
     # nanosAsLong), TIMESTAMP_NTZ for unadjusted TIMESTAMP(MICROS/MILLIS)
     # files, or plain TIMESTAMP for isAdjustedToUTC=true files — the same
-    # three-way footer probe as the batch loader (lake.tables._load_events),
+    # three-way footer probe as the batch loader (lake.tables.load_table),
     # so batch and streaming can never disagree on a testdata drift.
     ts_type = {
         "nanos": T.LongType(),
@@ -53,22 +53,39 @@ def streaming_events(spark: SparkSession, sf_dir: str) -> DataFrame:
     """readStream over the events parquet (bounded replay source).
 
     Normalizes ``ts`` to a session-TZ TIMESTAMP for every parquet encoding
-    the driver's testdata has used (see ``lake.tables._load_events``).
+    the testdata has used (``lake.tables.events_with_ts``).
     """
     enc = events_ts_encoding(os.path.join(sf_dir, "events.parquet"))
     reader = spark.readStream.schema(_events_raw_schema(enc)).option(
         "pathGlobFilter", "events.parquet"
     )
-    if enc == "nanos":
-        spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
-        return reader.parquet(sf_dir).withColumn(
-            "ts", F.expr("timestamp_micros(ts div 1000)")
-        )
-    if enc == "ntz":
-        return reader.parquet(sf_dir).withColumn(
-            "ts", _ntz_as_utc_instant("ts")
-        )
-    return reader.parquet(sf_dir)
+    return events_with_ts(spark, enc, lambda: reader.parquet(sf_dir))
+
+
+def drained(stream: DataFrame, mode: str) -> DataFrame:
+    """Run ``stream`` to completion (``availableNow``) into a memory sink
+    and return the sink's rows as a batch frame.
+
+    The sink registers a temp view under a fresh name; the frame is
+    analysed while the view exists, so it keeps the sink's ``MemoryPlan``
+    after the view is dropped — the caller's session is left with no view
+    and no active stream, whether or not the drain succeeds.
+    """
+    spark = stream.sparkSession
+    name = f"drain_{uuid.uuid4().hex[:8]}"
+    q = (
+        stream.writeStream.outputMode(mode)
+        .format("memory")
+        .queryName(name)
+        .trigger(availableNow=True)
+        .start()
+    )
+    try:
+        q.processAllAvailable()
+        return spark.table(name)
+    finally:
+        q.stop()
+        spark.catalog.dropTempView(name)
 
 
 def streaming_tumbling_counts(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -87,25 +104,15 @@ def streaming_tumbling_counts(spark: SparkSession, sf_dir: str) -> DataFrame:
             rnd(F.sum("value"), 2).alias("total_value"),
         )
     )
-    name = f"stream_out_{uuid.uuid4().hex[:8]}"
-    q = (
-        agg.writeStream.outputMode("complete")
-        .format("memory")
-        .queryName(name)
-        .trigger(availableNow=True)
-        .start()
-    )
-    try:
-        q.processAllAvailable()
-    finally:
-        q.stop()
-    return spark.sql(
-        f"""
-        SELECT unix_millis(window.start) AS bucket_start_ms,
-               event_type, n, total_value
-        FROM {name}
-        ORDER BY bucket_start_ms, event_type
-        """
+    return (
+        drained(agg, "complete")
+        .selectExpr(
+            "unix_millis(window.start) AS bucket_start_ms",
+            "event_type",
+            "n",
+            "total_value",
+        )
+        .orderBy("bucket_start_ms", "event_type")
     )
 
 
@@ -142,27 +149,16 @@ def streaming_session_windows(spark: SparkSession, sf_dir: str) -> DataFrame:
             rnd(F.sum("value"), 2).alias("session_value"),
         )
     )
-    name = f"stream_sess_{uuid.uuid4().hex[:8]}"
-    q = (
-        agg.writeStream.outputMode("complete")
-        .format("memory")
-        .queryName(name)
-        .trigger(availableNow=True)
-        .start()
-    )
-    try:
-        q.processAllAvailable()
-    finally:
-        q.stop()
-    return spark.sql(
-        f"""
-        SELECT user_id,
-               unix_millis(session_window.start) AS session_start_ms,
-               unix_millis(session_window.end) AS session_end_ms,
-               n_events, session_value
-        FROM {name}
-        ORDER BY user_id, session_start_ms
-        """
+    return (
+        drained(agg, "complete")
+        .selectExpr(
+            "user_id",
+            "unix_millis(session_window.start) AS session_start_ms",
+            "unix_millis(session_window.end) AS session_end_ms",
+            "n_events",
+            "session_value",
+        )
+        .orderBy("user_id", "session_start_ms")
     )
 
 
@@ -245,6 +241,11 @@ def streaming_stateful_sessions(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.unix_millis("ts").alias("ms"),
         "value",
     )
+    # pandas may warn "concatenation with empty or all-NA entries" here:
+    # PySpark's own ApplyInPandasWithState serializer pads each output
+    # batch with all-NA rows and then calls pd.concat on them
+    # (pyspark/sql/pandas/serializers.py); _session_func never sees an
+    # empty group, so there is no edge of ours to guard.
     emitted = ev.groupBy("user_id").applyInPandasWithState(
         _session_func,
         outputStructType=_SESS_OUT_SCHEMA,
@@ -252,24 +253,12 @@ def streaming_stateful_sessions(spark: SparkSession, sf_dir: str) -> DataFrame:
         outputMode="update",
         timeoutConf=GroupStateTimeout.NoTimeout,
     )
-    name = f"stream_state_{uuid.uuid4().hex[:8]}"
-    q = (
-        emitted.writeStream.outputMode("update")
-        .format("memory")
-        .queryName(name)
-        .trigger(availableNow=True)
-        .start()
-    )
-    try:
-        q.processAllAvailable()
-    finally:
-        q.stop()
     # final view per session = the largest emission; then number sessions
     # per user in start order to match the batch session_id convention
     from pyspark.sql import Window as W
 
     final = (
-        spark.table(name)
+        drained(emitted, "update")
         .groupBy("user_id", "session_start_ms")
         .agg(
             F.max_by("n_events", "n_events").alias("n_events"),
@@ -320,54 +309,42 @@ ORDER BY user_id, session_id
 # join, so DuckDB verifies it exactly.
 
 
-def streaming_click_purchase_join(spark: SparkSession, sf_dir: str) -> DataFrame:
-    clicks = (
-        streaming_events(spark, sf_dir)
-        .filter(F.col("event_type") == "click")
-        .select(
-            F.col("user_id").alias("c_user"),
-            F.col("ts").alias("c_ts"),
-            F.col("event_id").alias("click_id"),
+def _clicks_with_purchases(
+    spark: SparkSession, sf_dir: str, how: str
+) -> DataFrame:
+    """Each click stream row joined (``how``) to the same user's purchase
+    stream rows from the 10 minutes before it; both sides watermarked."""
+
+    def side(event_type: str, prefix: str, id_name: str) -> DataFrame:
+        return (
+            streaming_events(spark, sf_dir)
+            .filter(F.col("event_type") == event_type)
+            .select(
+                F.col("user_id").alias(f"{prefix}_user"),
+                F.col("ts").alias(f"{prefix}_ts"),
+                F.col("event_id").alias(id_name),
+            )
+            .withWatermark(f"{prefix}_ts", "10 minutes")
         )
-        .withWatermark("c_ts", "10 minutes")
-    )
-    purchases = (
-        streaming_events(spark, sf_dir)
-        .filter(F.col("event_type") == "purchase")
-        .select(
-            F.col("user_id").alias("p_user"),
-            F.col("ts").alias("p_ts"),
-            F.col("event_id").alias("purchase_id"),
-        )
-        .withWatermark("p_ts", "10 minutes")
-    )
-    joined = clicks.join(
-        purchases,
+
+    return side("click", "c", "click_id").join(
+        side("purchase", "p", "purchase_id"),
         F.expr(
             "c_user = p_user AND "
             "p_ts BETWEEN c_ts - INTERVAL 10 MINUTES AND c_ts"
         ),
-    ).select(
+        how,
+    )
+
+
+def streaming_click_purchase_join(spark: SparkSession, sf_dir: str) -> DataFrame:
+    joined = _clicks_with_purchases(spark, sf_dir, "inner").select(
         "click_id",
         "purchase_id",
         F.col("c_user").alias("user_id"),
         (F.unix_millis("c_ts") - F.unix_millis("p_ts")).alias("gap_ms"),
     )
-    name = f"stream_join_{uuid.uuid4().hex[:8]}"
-    q = (
-        joined.writeStream.outputMode("append")
-        .format("memory")
-        .queryName(name)
-        .trigger(availableNow=True)
-        .start()
-    )
-    try:
-        q.processAllAvailable()
-    finally:
-        q.stop()
-    return spark.sql(
-        f"SELECT * FROM {name} ORDER BY click_id, purchase_id"
-    )
+    return drained(joined, "append").orderBy("click_id", "purchase_id")
 
 
 _STREAM_JOIN_SQL = """
@@ -420,54 +397,15 @@ def streaming_click_nopurchase_join(
         .select(F.least("mc", "mp") - F.expr("INTERVAL 25 MINUTES"))
         .first()[0]
     )
-    clicks = (
-        streaming_events(spark, sf_dir)
-        .filter(F.col("event_type") == "click")
-        .select(
-            F.col("user_id").alias("c_user"),
-            F.col("ts").alias("c_ts"),
-            F.col("event_id").alias("click_id"),
-        )
-        .withWatermark("c_ts", "10 minutes")
-    )
-    purchases = (
-        streaming_events(spark, sf_dir)
-        .filter(F.col("event_type") == "purchase")
-        .select(
-            F.col("user_id").alias("p_user"),
-            F.col("ts").alias("p_ts"),
-            F.col("event_id").alias("purchase_id"),
-        )
-        .withWatermark("p_ts", "10 minutes")
-    )
-    joined = clicks.join(
-        purchases,
-        F.expr(
-            "c_user = p_user AND "
-            "p_ts BETWEEN c_ts - INTERVAL 10 MINUTES AND c_ts"
-        ),
-        "left_outer",
-    ).select(
+    joined = _clicks_with_purchases(spark, sf_dir, "left_outer").select(
         "click_id",
         "purchase_id",
         F.col("c_user").alias("user_id"),
         "c_ts",
         (F.unix_millis("c_ts") - F.unix_millis("p_ts")).alias("gap_ms"),
     )
-    name = f"stream_louter_{uuid.uuid4().hex[:8]}"
-    q = (
-        joined.writeStream.outputMode("append")
-        .format("memory")
-        .queryName(name)
-        .trigger(availableNow=True)
-        .start()
-    )
-    try:
-        q.processAllAvailable()
-    finally:
-        q.stop()
     return (
-        spark.table(name)
+        drained(joined, "append")
         .filter(F.col("c_ts") <= F.lit(cutoff))
         .select(
             "click_id",
@@ -518,25 +456,11 @@ ORDER BY click_id, purchase_id
 def streaming_dedup_events(spark: SparkSession, sf_dir: str) -> DataFrame:
     ev = streaming_events(spark, sf_dir).withWatermark("ts", "365 days")
     dedup = ev.dropDuplicatesWithinWatermark(["user_id", "event_type"])
-    name = f"stream_dedup_{uuid.uuid4().hex[:8]}"
-    q = (
-        dedup.writeStream.outputMode("append")
-        .format("memory")
-        .queryName(name)
-        .trigger(availableNow=True)
-        .start()
-    )
-    try:
-        q.processAllAvailable()
-    finally:
-        q.stop()
-    return spark.sql(
-        f"""
-        SELECT event_type, count(*) AS n_unique_users
-        FROM {name}
-        GROUP BY event_type
-        ORDER BY event_type
-        """
+    return (
+        drained(dedup, "append")
+        .groupBy("event_type")
+        .agg(F.count("*").alias("n_unique_users"))
+        .orderBy("event_type")
     )
 
 

@@ -1,5 +1,6 @@
 """Spark resource probes shared by the tests: the jobs a block runs, the
-py4j round trips it makes and the entries in the session's CacheManager."""
+py4j round trips it makes, the entries in the session's CacheManager and
+the session state a query can leave behind."""
 
 from __future__ import annotations
 
@@ -90,3 +91,15 @@ def cache_entries(spark) -> int:
     """Entries in the session's CacheManager (``cache()``/``persist()``
     frames not yet unpersisted)."""
     return spark._jsparkSession.sharedState().cacheManager().numCachedEntries()
+
+
+def session_state(spark) -> dict:
+    """What a block of code can leave behind in the caller's session:
+    CacheManager entries, temp view names and active streaming queries."""
+    return {
+        "cache entries": cache_entries(spark),
+        "temp views": sorted(
+            t.name for t in spark.catalog.listTables() if t.isTemporary
+        ),
+        "active streams": sorted(str(q.id) for q in spark.streams.active),
+    }

@@ -22,6 +22,8 @@ from cardano_analytics_duckdb_spark.lake.tables import (
     load_table,
 )
 
+from .probes import session_state
+
 _TS = [
     dt.datetime(2024, 1, 1, 0, 0, 7, 179575),
     dt.datetime(2024, 1, 1, 0, 3, 52, 824425),
@@ -68,6 +70,7 @@ def test_load_table_handles_both_ts_encodings(spark, tmp_path, unit):
 @pytest.mark.parametrize("unit", ["us", "ns", "utc"])
 def test_streaming_events_handles_both_ts_encodings(spark, tmp_path, unit):
     from cardano_analytics_duckdb_spark.streaming.windows import (
+        drained,
         streaming_events,
     )
 
@@ -77,24 +80,10 @@ def test_streaming_events_handles_both_ts_encodings(spark, tmp_path, unit):
     stream = streaming_events(spark, sf_dir)
     assert stream.isStreaming
     assert stream.schema["ts"].dataType.typeName() == "timestamp"
-    # Drain the bounded stream to a memory sink and compare the values.
-    name = f"events_loader_probe_{unit}"
-    q = (
-        stream.writeStream.outputMode("append")
-        .format("memory")
-        .queryName(name)
-        .trigger(availableNow=True)
-        .start()
-    )
-    try:
-        q.processAllAvailable()
-    finally:
-        q.stop()
-    got = [
-        r.ts
-        for r in spark.sql(f"SELECT ts FROM {name} ORDER BY event_id").collect()
-    ]
+    before = session_state(spark)
+    got = [r.ts for r in drained(stream, "append").orderBy("event_id").collect()]
     assert got == _TS
+    assert session_state(spark) == before
 
 
 def test_spark_written_events_round_trip(spark, tmp_path):

@@ -8,7 +8,7 @@ import pytest
 from cardano_analytics_duckdb_spark.operators import all_oracles, all_queries
 
 from .oracle import compare, duck_connection
-from .probes import cache_entries
+from .probes import session_state
 
 QUERIES = all_queries()
 ORACLES = all_oracles()
@@ -35,12 +35,14 @@ def duck(sf_dir):
 
 @pytest.mark.parametrize("name", sorted(set(QUERIES) - NO_ORACLE_DECLARED))
 def test_oracle_match(spark, sf_dir, duck, name):
-    cached = cache_entries(spark)
+    before = session_state(spark)
     df = QUERIES[name](spark, sf_dir)
     compare(df, duck, ORACLES[name])
-    # a query leaves the CacheManager as it found it: a cache() it does
-    # not release pins executor memory for the rest of the session
-    assert cache_entries(spark) == cached, f"{name} leaked a cached frame"
+    # a query leaves the session as it found it: a cache() it does not
+    # release pins executor memory for the rest of the session, a temp
+    # view it registers holds its rows and replaces any caller view of the
+    # same name, and a stream it leaves running keeps working
+    assert session_state(spark) == before, f"{name} changed the session"
 
 
 @pytest.mark.parametrize("name", sorted(QUERIES))
