@@ -8,7 +8,7 @@ lake.  This package re-expresses the same capabilities Spark-first:
 - ``lake``       — table schemas, readers, partitioned writers, compaction
 - ``sources``    — block-JSON parsing (offline Ogmios replay), streaming ingest
 - ``operators``  — the query library (reference parity + LLM-pipeline ops)
-- ``functions``  — scalar/column helpers (blake2b, slot→time, vectors, text)
+- ``functions``  — scalar/column helpers (slot→time, bech32, rounding, ordering)
 - ``streaming``  — Structured Streaming windowed aggregations
 - ``plans``      — session construction and Catalyst-facing tuning
 """

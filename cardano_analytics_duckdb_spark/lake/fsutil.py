@@ -17,6 +17,7 @@ moves through Spark jobs.
 from __future__ import annotations
 
 import os
+import weakref
 
 from pyspark.sql import SparkSession
 
@@ -198,3 +199,17 @@ class LakeFs:
             )
         finally:
             stream.close()
+
+
+_SHARED: weakref.WeakKeyDictionary = weakref.WeakKeyDictionary()
+
+
+def shared_lake_fs(spark: SparkSession, root: str) -> LakeFs:
+    """One :class:`LakeFs` per ``(session, root)``, for callers that
+    only probe a path on every query construction: building a handle
+    costs py4j class lookups (about 3 ms) that its calls do not.  The
+    handle holds no state of its own, so sharing it is safe."""
+    handles = _SHARED.setdefault(spark, {})
+    if root not in handles:
+        handles[root] = LakeFs(spark, root)
+    return handles[root]

@@ -256,10 +256,11 @@ def _collected_dim(
     # old data can't be served under the fresh key, and superseded
     # signatures are evicted so a long-lived session doesn't accumulate
     # dead snapshots.
-    from ..lake.fsutil import LakeFs
+    from ..lake.fsutil import shared_lake_fs
 
     path = os.path.join(sf_dir, f"{table}.parquet")
-    key = (sf_dir, table, cols, LakeFs(spark, path).content_signature(path))
+    sig = shared_lake_fs(spark, path).content_signature(path)
+    key = (sf_dir, table, cols, sig)
     if key not in _DOMAIN_CACHE:
         for old in [k for k in _DOMAIN_CACHE if k[:3] == (sf_dir, table, cols)]:
             del _DOMAIN_CACHE[old]

@@ -72,10 +72,11 @@ _QUERY_VEC_CACHE: dict[tuple, tuple] = {}
 def _query_vec(
     spark: SparkSession, sf_dir: str, vec_id: int = 0
 ) -> tuple[float, ...]:
-    from ..lake.fsutil import LakeFs
+    from ..lake.fsutil import shared_lake_fs
 
     path = os.path.join(sf_dir, "embeddings.parquet")
-    key = (sf_dir, vec_id, LakeFs(spark, path).content_signature(path))
+    sig = shared_lake_fs(spark, path).content_signature(path)
+    key = (sf_dir, vec_id, sig)
     if key not in _QUERY_VEC_CACHE:
         for old in [k for k in _QUERY_VEC_CACHE if k[:2] == (sf_dir, vec_id)]:
             del _QUERY_VEC_CACHE[old]

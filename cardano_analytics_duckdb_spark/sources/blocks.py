@@ -8,13 +8,22 @@ pseudo-policy), ``datumHash``/``datum`` hex fields, certificate objects —
 but decouple transport: any iterable of block dicts (fixture replay, JSON
 files, or a live websocket adapter) becomes a typed DataFrame.
 
+The frame is a JVM-side local relation built from one Arrow table, so no
+Python worker ever reads the blocks and a flush needs no cache.  The one
+value Spark has no builtin for, an inline datum's blake2b-256
+(≙ the reference's ogmios_parquet.py:333-343), is computed here with
+``hashlib`` while the Arrow table is built.
+
 Live connectivity is out of scope for CI (SURVEY §7.5); the websocket
 adapter slot is marked below.
 """
 
 from __future__ import annotations
 
+import hashlib
+import re
 from collections.abc import Iterable
+from functools import cache
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import types as T
@@ -102,6 +111,9 @@ _TX = T.StructType(
                         T.StructField("value", _AMOUNTS),
                         T.StructField("datumHash", T.StringType()),
                         T.StructField("datum", T.StringType()),
+                        # Not an Ogmios field: blake2b-256 of the inline
+                        # datum's bytes, set by blocks_to_dataframe
+                        T.StructField("datumBlake2b", T.BinaryType()),
                         # reference script (ogmios_parquet.py:278 derives
                         # has_ref_script from output.get('script'))
                         T.StructField(
@@ -139,11 +151,62 @@ BLOCK_SCHEMA = T.StructType(
 )
 
 
+_HEX = re.compile(r"[0-9A-Fa-f]*")
+
+
+def unhex_blake2b_256(text: str | None) -> bytes | None:
+    """blake2b-256 of Spark's ``unhex(text)``: None where ``unhex`` gives
+    null (a non-hex character, whitespace included, which
+    ``bytes.fromhex`` would skip), and an odd-length text read with a
+    leading ``0`` nibble, as ``unhex`` reads it."""
+    if text is None or not _HEX.fullmatch(text):
+        return None
+    data = bytes.fromhex(text if len(text) % 2 == 0 else "0" + text)
+    return hashlib.blake2b(data, digest_size=32).digest()
+
+
+def _hashed(block: dict) -> dict:
+    """``block`` with ``datumBlake2b`` set on every output that carries
+    an inline datum; the caller's dicts are left as they are."""
+    txs = block.get("transactions")
+    if not txs:
+        return block
+    return {
+        **block,
+        "transactions": [
+            {**t, "outputs": [_hashed_output(o) for o in t["outputs"]]}
+            if t and t.get("outputs") else t
+            for t in txs
+        ],
+    }
+
+
+def _hashed_output(output: dict | None) -> dict | None:
+    if not output or output.get("datum") is None:
+        return output
+    return {**output, "datumBlake2b": unhex_blake2b_256(output["datum"])}
+
+
+@cache
+def _arrow_schema():
+    from pyspark.sql.pandas.types import to_arrow_schema
+
+    return to_arrow_schema(BLOCK_SCHEMA)
+
+
 def blocks_to_dataframe(
     spark: SparkSession, blocks: Iterable[dict]
 ) -> DataFrame:
-    """Typed DataFrame of blocks (one row per block)."""
-    return spark.createDataFrame(list(blocks), schema=BLOCK_SCHEMA)
+    """Typed DataFrame of blocks (one row per block), planned as a
+    ``LocalTableScan`` of one Arrow table; above
+    ``spark.sql.execution.arrow.localRelationThreshold`` bytes of Arrow
+    batches, Spark parallelises the batches as a JVM-side RDD instead."""
+    import pyarrow as pa
+
+    table = pa.Table.from_pylist(
+        [_hashed(b) for b in blocks], schema=_arrow_schema()
+    )
+    return spark.createDataFrame(table, schema=BLOCK_SCHEMA)
 
 
 # Live chain-sync adapter: sources/chainsync.py (ChainSyncClient, driven

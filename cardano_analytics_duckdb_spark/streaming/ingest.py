@@ -4,11 +4,11 @@ The reference's hand-rolled micro-batch loop (SURVEY §2.9) re-expressed
 Spark-first:
 
 - T2 per-record fan-out: the six extractor functions
-  (/root/reference/ogmios_parquet.py:218-486) become one declarative
-  ``explode``/``transform`` DataFrame derivation per table
-  (``_EXTRACTORS``; ``extract_tables`` builds all 13) — JVM-side, no
-  Python row loops; the single Python UDF is blake2b for inline datums
-  (F3), which only touches datum rows.
+  (the reference's ogmios_parquet.py:218-486) become one SQL text per
+  table (``_EXTRACT_SQL``; ``extract_tables`` builds all 13), each a
+  projection over ``LATERAL VIEW explode``s of the block frame —
+  JVM-side, no Python UDF and no Python worker: the inline datums'
+  blake2b (F3) is hashed by the source while it builds the frame.
 - T3/T4 buffered flush + partitioned append: ``ingest_blocks`` writes each
   micro-batch with ``partitionBy("slot_group")`` appends (the reference's
   uncompressed chunk files ≙ Spark part-files, ogmios_parquet.py:489-520).
@@ -34,7 +34,7 @@ recompute per read; nothing is maintained alongside the tables.
 Scale notes: at micro-batch sizes each Spark job's fixed cost, not IO,
 is what a write path pays, so each path runs on a job budget:
 
-- a flush is 1 cache-fill job plus 1 append per non-empty table;
+- a flush is 1 append per non-empty table;
 - a rollback is 1 aggregate per table plus 1 write per partition that
   loses rows;
 - compaction is 1 write per fragmented partition.
@@ -55,7 +55,6 @@ from functools import reduce
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from ..functions.hashes import blake2b_256
 from ..lake.fixtures import SLOT_GROUP_SIZE
 from ..sources.blocks import blocks_to_dataframe
 
@@ -80,297 +79,131 @@ _DREP_TYPES = (
 )
 
 
-# One extractor per lake table, ≙ extract_transaction_data /
+# One SQL text per lake table, ≙ extract_transaction_data /
 # extract_utxo_data / extract_mint_data / extract_asset_data /
 # extract_datum_data / extract_all_certificate_data
-# (/root/reference/ogmios_parquet.py:227-486), as column expressions over
-# the typed block frame.  The shared shapes (one row per transaction,
-# per output, per certificate) are the three helpers below.
+# (the reference's ogmios_parquet.py:227-486), over the typed block frame
+# bound as ``{b}``.  Each text is one analysis: one row per transaction,
+# then LATERAL VIEWs down to one row per output, certificate, asset and
+# so on, with the partition column ``slot_group`` computed in the same
+# projection.
+_TXS = "FROM {b} LATERAL VIEW explode(transactions) txs AS t"
+_OUTS = _TXS + " LATERAL VIEW posexplode(t.outputs) outs AS output_index, o"
+_CERTS = _TXS + " LATERAL VIEW explode(t.certificates) certs AS c"
 
 
-def _txs(blocks_df: DataFrame) -> DataFrame:
-    return blocks_df.select(
-        "slot", F.explode("transactions").alias("t")
-    ).select(
-        "slot",
-        F.unhex("t.id").alias("tx_id"),
-        F.col("t.fee")["ada"]["lovelace"].alias("tx_fee"),
-        F.col("t.inputs").alias("raw_inputs"),
-        F.col("t.outputs").alias("outputs"),
-        F.col("t.mint").alias("mint"),
-        F.col("t.certificates").alias("certificates"),
-        F.col("t.redeemers").alias("redeemers"),
-        F.col("t.withdrawals").alias("withdrawals"),
-        F.col("t.votes").alias("votes"),
-        F.col("t.proposals").alias("proposals"),
-    )
+def _type_in(types: tuple[str, ...]) -> str:
+    return "WHERE c.type IN (" + ", ".join(f"'{v}'" for v in types) + ")"
 
 
-def _outs(blocks_df: DataFrame) -> DataFrame:
-    return _txs(blocks_df).select(
-        "slot",
-        "tx_id",
-        F.posexplode("outputs").alias("output_index", "o"),
-    ).select(
-        "slot",
-        "tx_id",
-        F.col("output_index").cast("int").alias("output_index"),
-        F.col("o.address").alias("address"),
-        F.col("o.value").alias("value"),
-        F.col("o.datumHash").alias("datum_hash_hex"),
-        F.col("o.datum").alias("inline_datum_hex"),
-        F.col("o.script").alias("out_script"),
-    )
-
-
-def _certs(blocks_df: DataFrame, types: tuple[str, ...] = ()) -> DataFrame:
-    """One row per certificate, only those of ``types`` when given."""
-    certs = _txs(blocks_df).select(
-        "slot", "tx_id", F.explode("certificates").alias("c")
-    )
-    return certs.filter(F.col("c.type").isin(*types)) if types else certs
-
-
-def _tx(blocks_df: DataFrame) -> DataFrame:
-    return _txs(blocks_df).select(
-        "slot",
-        "tx_id",
-        "tx_fee",
-        F.size("raw_inputs").cast("int").alias("input_count"),
-        F.size("outputs").cast("int").alias("output_count"),
-        F.size("redeemers").cast("int").alias("redeemer_count"),
-        F.size(
-            F.expr(
-                "filter(outputs, o -> o.datumHash IS NOT NULL"
-                " AND o.datum IS NULL)"
-            )
-        )
-        .cast("int")
-        .alias("witness_datum_count"),
-        (F.size(F.map_keys("mint")) > 0).alias("has_mint"),
-        (F.size(F.map_keys("withdrawals")) > 0).alias("has_withdrawal"),
-        (F.size("certificates") > 0).alias("has_cert"),
-        (F.size("votes") > 0).alias("has_vote"),
-        (F.size("proposals") > 0).alias("has_proposal"),
-        F.expr(
-            "transform(raw_inputs, i -> struct("
-            "unhex(i.transaction.id) AS tx_id,"
-            " i.index AS output_index))"
-        ).alias("inputs"),
-    )
-
-
-def _utxo(blocks_df: DataFrame) -> DataFrame:
-    return _outs(blocks_df).select(
-        "slot",
-        "tx_id",
-        "output_index",
-        "address",
-        F.col("value")["ada"]["lovelace"].alias("lovelace"),
-        (F.size(F.map_keys("value")) > 1).alias("has_token"),
-        (
-            F.col("datum_hash_hex").isNotNull()
-            | F.col("inline_datum_hex").isNotNull()
-        ).alias("has_datum"),
-        F.col("out_script").isNotNull().alias("has_ref_script"),
-    )
-
-
-def _mint(blocks_df: DataFrame) -> DataFrame:
+def _sql(columns: str, source: str) -> str:
     return (
-        _txs(blocks_df)
-        .select("slot", "tx_id", F.explode("mint").alias("policy_hex", "assets"))
-        .select(
-            "slot",
-            "tx_id",
-            F.unhex("policy_hex").alias("policy_id"),
-            F.explode("assets").alias("asset_hex", "quantity"),
-        )
-        .select(
-            "slot",
-            "tx_id",
-            "policy_id",
-            F.unhex("asset_hex").alias("asset_name"),
-            "quantity",
-        )
+        f"SELECT slot, unhex(t.id) AS tx_id, {columns},"
+        f" CAST(floor(slot / {SLOT_GROUP_SIZE}) * {SLOT_GROUP_SIZE} AS BIGINT)"
+        f" AS slot_group {source}"
     )
 
 
-def _asset(blocks_df: DataFrame) -> DataFrame:
-    return (
-        _outs(blocks_df)
-        .select(
-            "slot",
-            "tx_id",
-            "output_index",
-            "address",
-            F.explode("value").alias("policy_hex", "assets"),
-        )
-        .filter(F.col("policy_hex") != "ada")
-        .select(
-            "slot",
-            "tx_id",
-            "output_index",
-            "address",
-            F.unhex("policy_hex").alias("policy_id"),
-            F.explode("assets").alias("asset_hex", "amount"),
-        )
-        .select(
-            "slot",
-            "tx_id",
-            "output_index",
-            "address",
-            "policy_id",
-            F.unhex("asset_hex").alias("asset_name"),
-            "amount",
-        )
-    )
-
-
-def _datum(blocks_df: DataFrame) -> DataFrame:
-    return (
-        _outs(blocks_df)
-        .filter(
-            F.col("datum_hash_hex").isNotNull()
-            | F.col("inline_datum_hex").isNotNull()
-        )
-        .withColumn("inline_datum", F.unhex("inline_datum_hex"))
-        .select(
-            "slot",
-            "tx_id",
-            "output_index",
-            F.coalesce(
-                F.unhex("datum_hash_hex"), blake2b_256(F.col("inline_datum"))
-            ).alias("datum_hash"),
-            F.col("inline_datum_hex").isNotNull().alias("is_inline"),
-            "inline_datum",
-        )
-    )
-
-
-def _cert(blocks_df: DataFrame) -> DataFrame:
-    return _certs(blocks_df).select(
-        "slot", "tx_id", F.col("c.type").alias("type")
-    )
-
-
-def _cert_stake(blocks_df: DataFrame) -> DataFrame:
-    return _certs(blocks_df, _STAKE_TYPES).select(
-        "slot",
-        "tx_id",
-        F.col("c.type").alias("type"),
-        F.unhex("c.credential").alias("credential"),
-        F.col("c.pool_id").alias("pool_id"),
-        F.col("c.drep_id").alias("drep_id"),
-    )
-
-
-def _cert_pool(blocks_df: DataFrame) -> DataFrame:
-    return _certs(blocks_df, _POOL_TYPES).select(
-        "slot",
-        "tx_id",
-        F.col("c.type").alias("type"),
-        F.col("c.pool_id").alias("pool_id"),
-        F.col("c.reward_account").alias("reward_account"),
-        F.col("c.pledge").alias("pledge"),
-        # F6 fraction parsing: "3/100" → (3, 100), ≙ ogmios_parquet.py:432-435
-        F.split("c.margin", "/").getItem(0).cast("long").alias(
-            "margin_numerator"
-        ),
-        F.split("c.margin", "/").getItem(1).cast("long").alias(
-            "margin_denominator"
-        ),
-        F.col("c.cost").alias("cost"),
-        F.unhex("c.metadata_hash").alias("metadata_hash"),
-        F.col("c.metadata_url").alias("metadata_url"),
-        F.col("c.retirement_epoch").alias("retirement_epoch"),
-    )
-
-
-def _cert_cc(blocks_df: DataFrame) -> DataFrame:
-    return _certs(blocks_df, _CC_TYPES).select(
-        "slot",
-        "tx_id",
-        F.col("c.type").alias("type"),
-        F.unhex("c.member_id").alias("member_id"),
-        F.unhex("c.delegate_id").alias("delegate_id"),
-        F.unhex("c.metadata_hash").alias("metadata_hash"),
-        F.col("c.metadata_url").alias("metadata_url"),
-    )
-
-
-def _cert_drep(blocks_df: DataFrame) -> DataFrame:
-    return _certs(blocks_df, _DREP_TYPES).select(
-        "slot",
-        "tx_id",
-        F.col("c.type").alias("type"),
-        F.unhex("c.drep_id").alias("drep_id"),
-        F.col("c.drep_type").alias("drep_type"),
-        F.unhex("c.metadata_hash").alias("metadata_hash"),
-        F.col("c.metadata_url").alias("metadata_url"),
-    )
-
-
-# README-only governance tables (≙ /root/reference/README.md:75-105;
-# the reference has no extraction code for these — schemas from spec)
-def _vote(blocks_df: DataFrame) -> DataFrame:
-    return _txs(blocks_df).select(
-        "slot", "tx_id", F.explode("votes").alias("v")
-    ).select(
-        "slot",
-        "tx_id",
-        F.col("v.voter").alias("voter"),
-        F.unhex("v.action_id_tx").alias("action_id_tx"),
-        F.col("v.action_id_index").alias("action_id_index"),
-        F.col("v.vote").alias("vote"),
-        F.col("v.anchor").alias("anchor"),
-    )
-
-
-def _proposal(blocks_df: DataFrame) -> DataFrame:
-    return _txs(blocks_df).select(
-        "slot", "tx_id", F.explode("proposals").alias("p")
-    ).select(
-        "slot",
-        "tx_id",
-        F.col("p.proposal_index").alias("proposal_index"),
-        F.col("p.deposit").alias("deposit"),
-        F.col("p.return_account").alias("return_account"),
-        F.col("p.type").alias("type"),
-        F.col("p.anchor").alias("anchor"),
-    )
-
-
-def _redeemer(blocks_df: DataFrame) -> DataFrame:
-    return _txs(blocks_df).select(
-        "slot", "tx_id", F.explode("redeemers").alias("r")
-    ).select(
-        "slot",
-        "tx_id",
-        F.col("r.tag").alias("tag"),
-        F.col("r.redeemer_index").alias("redeemer_index"),
-        F.unhex("r.data").alias("data"),
-        F.col("r.mem").alias("mem"),
-        F.col("r.steps").alias("steps"),
-    )
-
-
-_EXTRACTORS = {
-    "tx": _tx,
-    "utxo": _utxo,
-    "mint": _mint,
-    "asset": _asset,
-    "datum": _datum,
-    "cert": _cert,
-    "cert_stake": _cert_stake,
-    "cert_pool": _cert_pool,
-    "cert_cc": _cert_cc,
-    "cert_drep": _cert_drep,
-    "vote": _vote,
-    "proposal": _proposal,
-    "redeemer": _redeemer,
+# A missing mint/withdrawals/value map reaches these texts as an empty
+# map (Spark reads a null map nested in an Arrow struct as empty), so
+# has_mint, has_withdrawal and has_token are false there, never null.
+_EXTRACT_SQL = {
+    "tx": _sql(
+        "t.fee['ada']['lovelace'] AS tx_fee,"
+        " size(t.inputs) AS input_count,"
+        " size(t.outputs) AS output_count,"
+        " size(t.redeemers) AS redeemer_count,"
+        " size(filter(t.outputs, o -> o.datumHash IS NOT NULL"
+        " AND o.datum IS NULL)) AS witness_datum_count,"
+        " size(map_keys(t.mint)) > 0 AS has_mint,"
+        " size(map_keys(t.withdrawals)) > 0 AS has_withdrawal,"
+        " size(t.certificates) > 0 AS has_cert,"
+        " size(t.votes) > 0 AS has_vote,"
+        " size(t.proposals) > 0 AS has_proposal,"
+        " transform(t.inputs, i -> struct(unhex(i.transaction.id) AS tx_id,"
+        " i.index AS output_index)) AS inputs",
+        _TXS,
+    ),
+    "utxo": _sql(
+        "output_index, o.address AS address,"
+        " o.value['ada']['lovelace'] AS lovelace,"
+        " size(map_keys(o.value)) > 1 AS has_token,"
+        " o.datumHash IS NOT NULL OR o.datum IS NOT NULL AS has_datum,"
+        " o.script IS NOT NULL AS has_ref_script",
+        _OUTS,
+    ),
+    "mint": _sql(
+        "unhex(policy_hex) AS policy_id, unhex(asset_hex) AS asset_name,"
+        " quantity",
+        _TXS + " LATERAL VIEW explode(t.mint) mint AS policy_hex, assets"
+        " LATERAL VIEW explode(assets) asset AS asset_hex, quantity",
+    ),
+    "asset": _sql(
+        "output_index, o.address AS address, unhex(policy_hex) AS policy_id,"
+        " unhex(asset_hex) AS asset_name, amount",
+        _OUTS + " LATERAL VIEW explode(o.value) value AS policy_hex, assets"
+        " LATERAL VIEW explode(assets) asset AS asset_hex, amount"
+        " WHERE policy_hex != 'ada'",
+    ),
+    # datumBlake2b is the inline datum's blake2b-256, computed while the
+    # source built the block frame (F3, sources/blocks.py)
+    "datum": _sql(
+        "output_index,"
+        " coalesce(unhex(o.datumHash), o.datumBlake2b) AS datum_hash,"
+        " o.datum IS NOT NULL AS is_inline, unhex(o.datum) AS inline_datum",
+        _OUTS + " WHERE o.datumHash IS NOT NULL OR o.datum IS NOT NULL",
+    ),
+    "cert": _sql("c.type AS type", _CERTS),
+    "cert_stake": _sql(
+        "c.type AS type, unhex(c.credential) AS credential,"
+        " c.pool_id AS pool_id, c.drep_id AS drep_id",
+        f"{_CERTS} {_type_in(_STAKE_TYPES)}",
+    ),
+    # F6 fraction parsing: "3/100" → (3, 100), ≙ ogmios_parquet.py:432-435
+    "cert_pool": _sql(
+        "c.type AS type, c.pool_id AS pool_id,"
+        " c.reward_account AS reward_account, c.pledge AS pledge,"
+        " CAST(split(c.margin, '/')[0] AS BIGINT) AS margin_numerator,"
+        " CAST(split(c.margin, '/')[1] AS BIGINT) AS margin_denominator,"
+        " c.cost AS cost, unhex(c.metadata_hash) AS metadata_hash,"
+        " c.metadata_url AS metadata_url,"
+        " c.retirement_epoch AS retirement_epoch",
+        f"{_CERTS} {_type_in(_POOL_TYPES)}",
+    ),
+    "cert_cc": _sql(
+        "c.type AS type, unhex(c.member_id) AS member_id,"
+        " unhex(c.delegate_id) AS delegate_id,"
+        " unhex(c.metadata_hash) AS metadata_hash,"
+        " c.metadata_url AS metadata_url",
+        f"{_CERTS} {_type_in(_CC_TYPES)}",
+    ),
+    "cert_drep": _sql(
+        "c.type AS type, unhex(c.drep_id) AS drep_id,"
+        " c.drep_type AS drep_type, unhex(c.metadata_hash) AS metadata_hash,"
+        " c.metadata_url AS metadata_url",
+        f"{_CERTS} {_type_in(_DREP_TYPES)}",
+    ),
+    # README-only governance tables (≙ the reference's README.md:75-105;
+    # the reference has no extraction code for these — schemas from spec)
+    "vote": _sql(
+        "v.voter AS voter, unhex(v.action_id_tx) AS action_id_tx,"
+        " v.action_id_index AS action_id_index, v.vote AS vote,"
+        " v.anchor AS anchor",
+        _TXS + " LATERAL VIEW explode(t.votes) votes AS v",
+    ),
+    "proposal": _sql(
+        "p.proposal_index AS proposal_index, p.deposit AS deposit,"
+        " p.return_account AS return_account, p.type AS type,"
+        " p.anchor AS anchor",
+        _TXS + " LATERAL VIEW explode(t.proposals) proposals AS p",
+    ),
+    "redeemer": _sql(
+        "r.tag AS tag, r.redeemer_index AS redeemer_index,"
+        " unhex(r.data) AS data, r.mem AS mem, r.steps AS steps",
+        _TXS + " LATERAL VIEW explode(t.redeemers) redeemers AS r",
+    ),
 }
-LAKE_TABLES = tuple(_EXTRACTORS)
+LAKE_TABLES = tuple(_EXTRACT_SQL)
 
 # The sparse tables: a flush holding none of their rows skips them, so no
 # schemaless empty partition dir is created.
@@ -392,8 +225,15 @@ _SPARSE_TABLES = frozenset(_CERT_SUBTABLES.values()) | frozenset(
 
 
 def extract_tables(blocks_df: DataFrame) -> dict[str, DataFrame]:
-    """Derive all 13 lake tables from a typed block DataFrame."""
-    return {name: extract(blocks_df) for name, extract in _EXTRACTORS.items()}
+    """Derive all 13 lake tables, ``slot_group`` included, from a typed
+    block DataFrame."""
+    return {name: _extract(blocks_df, name) for name in LAKE_TABLES}
+
+
+def _extract(blocks_df: DataFrame, name: str) -> DataFrame:
+    # spark.sql binds the frame under a generated temp view name and
+    # drops the view once the text is analysed.
+    return blocks_df.sparkSession.sql(_EXTRACT_SQL[name], b=blocks_df)
 
 
 def _sparse_tables_present(blocks: Iterable[dict]) -> set[str]:
@@ -483,20 +323,13 @@ def _write_tables_parallel(
 ) -> None:
     """Partitioned appends of ``tables``, extracted from ``blocks_df``:
     one job per table, all fanned out at once by :func:`_per_table`.
-    Each worker also builds its own table's frame, so the driver-side
-    DataFrame construction overlaps the other tables' writes.
-    ``blocks_df`` must be cached and filled by the caller, or each of
-    the jobs re-parses the block list (measured 3.1x slower on a
-    500-block flush)."""
+    Each worker also analyses its own table's SQL text, so the
+    driver-side analysis overlaps the other tables' writes.  Every job
+    reads ``blocks_df``'s local relation afresh, so nothing is cached."""
 
     def _append(name: str) -> None:
         (
-            _EXTRACTORS[name](blocks_df)
-            .withColumn(
-                "slot_group",
-                (F.floor(F.col("slot") / SLOT_GROUP_SIZE)
-                 * SLOT_GROUP_SIZE).cast("long"),
-            )
+            _extract(blocks_df, name)
             .write.mode("append")
             .partitionBy("slot_group")
             .parquet(os.path.join(dest, name))
@@ -544,43 +377,38 @@ def ingest_blocks(
     )
 
     def _flush(forward: list[dict]) -> None:
-        # The job budget of a flush is 1 + one per non-empty table:
-        # - ONE job fills the cache of the typed block frame: a noop
-        #   write runs every partition through the cache, where count()
-        #   runs as 3 jobs under AQE.  Without the cache each table's
-        #   append re-deserializes the Python-side block list (3.1x
-        #   slower on a 500-block flush).
-        # - ONE append per table, all fanned out at once
-        #   (_write_tables_parallel): overlapping them is a measured 2.2x
-        #   (ingest_probe, SCALE_PROBE.json — 29 -> ~160 blocks/s total).
-        #   A sparse table holding no row of this flush is skipped, and
-        #   the driver decides that from the block dicts it holds — no
-        #   emptiness job (_sparse_tables_present).
+        # The job budget of a flush is one append per non-empty table,
+        # all fanned out at once (_write_tables_parallel): overlapping
+        # them is a measured 2.2x (ingest_probe, SCALE_PROBE.json — 29 ->
+        # ~160 blocks/s total).  A sparse table holding no row of this
+        # flush is skipped, and the driver decides that from the block
+        # dicts it holds — no emptiness job (_sparse_tables_present).
+        # The block frame is a local relation of one Arrow table, so no
+        # job fills a cache and no Python worker starts.
         # Crash semantics are unchanged: a flush was never atomic across
         # tables (sequential appends could die midway too); recovery is
         # the same compact/rollback toolkit either way.
         #
-        # The cache fills at full default parallelism (fast Python->JVM
-        # deserialization), but the fan-out reads it COALESCED to ~500
-        # blocks/task: 13 concurrent jobs x 32 micro-tasks each was ~400
-        # task launches and ~800 dynamic-partition file commits per
-        # flush, pure scheduling/commit overhead at micro-batch sizes —
-        # the r11 job audit measured the coalesced fan-out at 4.2x
-        # (12.3 -> 3.0 s per 2000-block flush; coalescing BEFORE the
-        # cache fill gives half that win back, so fill wide, read
-        # narrow).  Fewer, larger files per table also lightens
-        # compaction.
+        # The fan-out reads the blocks COALESCED to ~500 blocks/task:
+        # 13 concurrent jobs x one task per core was hundreds of task
+        # launches and dynamic-partition file commits per flush, pure
+        # scheduling/commit overhead at micro-batch sizes (the r11 job
+        # audit measured 4.2x on a 2000-block flush; re-measured on the
+        # local relation, a 100-block flush took 1.23 s coalesced to one
+        # task against 1.68 s over its 4 partitions, medians of 7
+        # interleaved runs on a 4-core host).  Fewer, larger files per
+        # table also lighten compaction.
         present = _sparse_tables_present(forward)
         tables = [
             t for t in LAKE_TABLES if t not in _SPARSE_TABLES or t in present
         ]
-        bdf = blocks_to_dataframe(spark, forward).persist()
-        try:
-            bdf.write.format("noop").mode("overwrite").save()
-            nparts = max(1, min(8, len(forward) // 500))
-            _write_tables_parallel(spark, bdf.coalesce(nparts), tables, dest)
-        finally:
-            bdf.unpersist()
+        nparts = max(1, min(8, len(forward) // 500))
+        _write_tables_parallel(
+            spark,
+            blocks_to_dataframe(spark, forward).coalesce(nparts),
+            tables,
+            dest,
+        )
         stats["blocks"] += len(forward)
         stats["transactions"] += sum(
             len(b.get("transactions") or ()) for b in forward

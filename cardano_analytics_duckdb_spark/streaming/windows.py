@@ -205,8 +205,7 @@ def streaming_stateful_sessions(spark: SparkSession, sf_dir: str) -> DataFrame:
     from pyspark.sql.streaming.state import GroupStateTimeout
 
     # Defined locally so cloudpickle ships it by value — Python workers
-    # don't have this package on their sys.path (same pattern as
-    # functions/hashes.py).
+    # don't have this package on their sys.path.
     def _session_func(key, pdfs, state):
         import pandas as pd
 

@@ -3,6 +3,11 @@
 
 Usage: python dump_plans.py <repo_root> <tag> <outdir> <q1,q2,...>
 
+A name is a registered query (``all_queries()``) or ``ingest.<table>``:
+the plan of that lake table's append in one flush of the fixture block
+stream (``lake/fixtures.py::fixture_blocks``), captured at the writer as
+``ingest_blocks`` runs.
+
 Run it once against each of two checkouts with the same tag and two
 output dirs, then ``diff -r`` the dirs: a plan-neutral change leaves every
 file identical.  The session uses the bench posture (AQE off,
@@ -73,6 +78,38 @@ def normalise(plan: str) -> str:
     return "\n".join(out) + "\n"
 
 
+def _ingest_plans(spark) -> dict[str, str]:
+    """``{"ingest.<table>": formatted plan}`` of every append one flush
+    of the fixture stream makes."""
+    import tempfile
+
+    from pyspark.sql.readwriter import DataFrameWriter
+
+    from cardano_analytics_duckdb_spark.lake.fixtures import fixture_blocks
+    from cardano_analytics_duckdb_spark.streaming.ingest import ingest_blocks
+
+    plans = {}
+    original = DataFrameWriter.parquet
+    jvm = spark.sparkContext._jvm
+
+    def captured(self, path, *args, **kwargs):
+        plans[f"ingest.{os.path.basename(path)}"] = (
+            jvm.PythonSQLUtils.explainString(
+                self._df._jdf.queryExecution(), "formatted"
+            )
+        )
+        return original(self, path, *args, **kwargs)
+
+    blocks = fixture_blocks()
+    DataFrameWriter.parquet = captured
+    try:
+        with tempfile.TemporaryDirectory() as dest:
+            ingest_blocks(spark, blocks, dest, batch_size=len(blocks))
+    finally:
+        DataFrameWriter.parquet = original
+    return plans
+
+
 def main() -> None:
     repo, tag, outdir, names_csv = sys.argv[1:5]
     sys.path.insert(0, repo)
@@ -88,13 +125,19 @@ def main() -> None:
         extra_conf={"spark.sql.adaptive.enabled": "false"},
     )
     queries = all_queries()
+    ingest = (
+        _ingest_plans(spark)
+        if any(n.startswith("ingest.") for n in names) else {}
+    )
     os.makedirs(outdir, exist_ok=True)
     expands = []
     for name in names:
-        df = queries[name](spark, sf_dir)
         buf = io.StringIO()
-        with contextlib.redirect_stdout(buf):
-            df.explain("formatted")
+        if name in ingest:
+            buf.write(ingest[name])
+        else:
+            with contextlib.redirect_stdout(buf):
+                queries[name](spark, sf_dir).explain("formatted")
         path = os.path.join(outdir, f"{name}_{tag}.txt")
         with open(path, "w") as fh:
             fh.write(

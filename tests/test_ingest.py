@@ -20,7 +20,7 @@ from cardano_analytics_duckdb_spark.streaming.ingest import (
     ingest_blocks,
 )
 
-from .probes import Jobs
+from .probes import Jobs, session_state
 
 
 def _canon_rows(df):
@@ -453,16 +453,65 @@ def test_sparse_emptiness_decided_on_the_driver_matches_spark(spark):
 
 
 def test_flush_job_budget_in_the_callers_group(spark, tmp_path):
-    """One flush whose blocks fill all 13 tables runs exactly 1 cache
-    fill plus 1 append per table, so no count or emptiness probe, and
-    every job, including those the per-table threads submit, lands in
-    the caller's job group."""
+    """One flush whose blocks fill all 13 tables runs exactly 1 append
+    per table, so no cache fill, count or emptiness probe, and every
+    job, including those the per-table threads submit, lands in the
+    caller's job group."""
     dest = str(tmp_path / "lake_budget")
     with Jobs(spark, "flush-budget") as jobs:
         stats = ingest_blocks(spark, fixture_blocks(), dest, batch_size=500)
     assert stats["batches"] == 1
     assert all(os.path.isdir(f"{dest}/{t}") for t in LAKE_TABLES)
-    assert len(jobs.ids) == 1 + len(LAKE_TABLES)
+    assert len(jobs.ids) == len(LAKE_TABLES)
+
+
+def test_flush_frames_read_a_local_relation_with_no_python(spark, tmp_path):
+    """Every extracted table reads the blocks from a JVM-side local
+    relation (not an RDD of pickled rows) and runs no Python UDF, and an
+    ingest leaves no cache entry, temp view or stream behind (the SQL
+    texts bind the block frame under a view that must be dropped)."""
+    from cardano_analytics_duckdb_spark.sources.blocks import (
+        blocks_to_dataframe,
+    )
+    from cardano_analytics_duckdb_spark.streaming.ingest import (
+        extract_tables,
+    )
+
+    tables = extract_tables(blocks_to_dataframe(spark, fixture_blocks()))
+    assert set(tables) == set(LAKE_TABLES)
+    for name, df in tables.items():
+        plan = df._jdf.queryExecution().executedPlan().toString()
+        assert "LocalTableScan" in plan, (name, plan)
+        assert "ExistingRDD" not in plan, (name, plan)
+        assert "ArrowEvalPython" not in plan, (name, plan)
+        assert "BatchEvalPython" not in plan, (name, plan)
+    before = session_state(spark)
+    ingest_blocks(spark, fixture_blocks(), str(tmp_path / "lake_leaf"),
+                  batch_size=100)
+    assert session_state(spark) == before
+
+
+def test_missing_maps_read_as_empty(spark):
+    """A transaction or output without its ``mint``, ``withdrawals`` or
+    ``value`` map reads as one with an empty map: the flags derived from
+    them are false, not null, as the fixture lake's row builder gives
+    (``has_mint=bool(...)``).  Spark reads a null map nested in an Arrow
+    struct as an empty map; a missing list still reads as null."""
+    from cardano_analytics_duckdb_spark.sources.blocks import (
+        blocks_to_dataframe,
+    )
+    from cardano_analytics_duckdb_spark.streaming.ingest import (
+        extract_tables,
+    )
+
+    block = {"type": "babbage", "slot": 7, "height": 1, "transactions": [
+        {"id": "cd" * 32, "outputs": [{"address": "addr"}]},
+    ]}
+    tables = extract_tables(blocks_to_dataframe(spark, [block]))
+    (tx,) = tables["tx"].collect()
+    assert (tx.has_mint, tx.has_withdrawal) == (False, False)
+    (utxo,) = tables["utxo"].collect()
+    assert (utxo.has_token, utxo.lovelace) == (False, None)
 
 
 def test_rollback_job_budget_and_rewrites(spark, tmp_path):

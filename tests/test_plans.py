@@ -139,8 +139,8 @@ def test_no_python_udf_in_relational_hot_paths(spark, sf_dir):
 
     qs = all_queries()
     # every relational / window / cardano-parity query must stay JVM-side;
-    # Python appears only where declared (pandas-UDF kernels: blake2b in
-    # ingest, similarity kernels, multimodal decode, stateful streaming)
+    # Python appears only where declared (pandas-UDF kernels: similarity
+    # kernels, multimodal decode, stateful streaming)
     jvm_only = [
         "pricing_summary",
         "revenue_by_region",

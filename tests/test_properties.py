@@ -1,7 +1,7 @@
 """Property-based tests (hypothesis) for the cross-engine determinism
 primitives — the pieces every oracle comparison leans on.
 
-No SparkSession needed: the properties pin the *formulas* shared by both
+Most properties need no SparkSession: they pin the *formulas* shared by both
 engines (Python floats are IEEE-754 doubles, same as JVM doubles and DuckDB
 DOUBLE), so violations here mean oracle flakiness at some SF even if the
 current fixtures happen to pass.
@@ -12,7 +12,7 @@ from __future__ import annotations
 import math
 
 import duckdb
-from hypothesis import given, settings
+from hypothesis import example, given, settings
 from hypothesis import strategies as st
 
 
@@ -95,21 +95,55 @@ def test_session_kernel_matches_windowed_reference(events):
         assert math.isclose(s[3], r[3], rel_tol=1e-12, abs_tol=1e-12)
 
 
-@settings(max_examples=200, deadline=None)
-@given(st.binary(min_size=0, max_size=256))
-def test_blake2b_matches_reference_hashlib(payload: bytes):
-    """The pandas-UDF blake2b must equal hashlib's blake2b-256 digest (the
-    reference's datum-hash function) for arbitrary payloads."""
+# Hex texts Spark's unhex reads in ways bytes.fromhex does not: odd
+# length (a leading 0 nibble), non-hex and non-ASCII characters, empty,
+# upper case, inner and outer whitespace (fromhex skips it, unhex gives
+# null).
+_HOSTILE_HEX = [
+    "abc", "a", "", "zz", "0x12", "é1", "ABCDEF", "aBcD",
+    "ab cd", " ab", "ab\n", "ab\tcd",
+]
+
+
+@settings(max_examples=60, deadline=None)
+@given(
+    st.lists(
+        st.one_of(
+            st.binary(max_size=256).map(bytes.hex),
+            st.text(alphabet="0123456789abcdefABCDEF \tg", max_size=12),
+        ),
+        max_size=8,
+    )
+)
+@example(_HOSTILE_HEX)
+def test_blake2b_matches_reference_hashlib(spark, texts: list[str]):
+    """The source layer's datum hash must equal hashlib's blake2b-256 (the
+    reference's datum-hash function) of the bytes Spark's ``unhex`` reads
+    from the hex text, and be None wherever ``unhex`` gives null."""
     import hashlib
 
-    import pandas as pd
+    from pyspark.sql import functions as F
 
-    from cardano_analytics_duckdb_spark.functions.hashes import blake2b_256_udf
+    from cardano_analytics_duckdb_spark.sources.blocks import (
+        unhex_blake2b_256,
+    )
 
-    # exercise the wrapped vectorized function directly (no Spark session)
-    inner = blake2b_256_udf().func
-    out = inner(pd.Series([payload]))[0]
-    assert out == hashlib.blake2b(payload, digest_size=32).digest()
+    unhexed = (
+        spark.range(1)
+        .select(F.posexplode(
+            F.array(*map(F.lit, texts)).cast("array<string>")
+        ))
+        .select("pos", F.unhex("col"))
+        .collect()
+    )
+    data = [bytes(v) if v is not None else None for _, v in sorted(unhexed)]
+    assert len(data) == len(texts)
+    for text, b in zip(texts, data):
+        expected = (
+            None if b is None
+            else hashlib.blake2b(b, digest_size=32).digest()
+        )
+        assert unhex_blake2b_256(text) == expected, text
 
 
 @settings(max_examples=100, deadline=None)
