@@ -15,7 +15,8 @@ Two cheaper shapes, used throughout the operators:
   stays fully parallel), and a partition-local sort of the tiny result
   yields total order in ONE pass with no sampler.  NOT for large results
   and not directly above heavy per-row compute — ``coalesce`` would
-  serialize it.
+  serialize it.  In a SQL text the same shape is a
+  ``SELECT /*+ COALESCE(1) */ ...`` with ``SORT BY`` keys.
 - pre-shuffle ``repartitionByRange(keys).….sortWithinPartitions(keys)`` —
   for window/agg pipelines with large output (see ``order_brand_sets``):
   one range exchange on the *raw input* satisfies the downstream

@@ -9,8 +9,10 @@ and projection pushdown into the scan (SURVEY §4 R1/R4 are free).
 
 from __future__ import annotations
 
+import hashlib
 import os
-from collections.abc import Callable
+import string
+from collections.abc import Callable, Mapping
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
@@ -31,8 +33,17 @@ TESTDATA_TABLES = (
 
 # Warmed-table registry: (sf_dir, name) -> cached DataFrame.  Populated by
 # ``warm_lake``; consulted by ``load_table`` so every operator transparently
-# reads the in-memory columnar copy once a lake has been warmed.
+# reads the in-memory columnar copy once a lake has been warmed, and by
+# ``lake_sql``, which reads it through the view ``warm_lake`` registers.
 _WARMED: dict[tuple[str, str], DataFrame] = {}
+
+
+def warm_view_name(sf_dir: str, name: str) -> str:
+    """The temp view ``warm_lake`` registers over ``sf_dir``'s cached
+    ``name``: a ``__graft_`` prefix and a digest of ``sf_dir``, so it
+    clashes with no caller's view and two lakes never share one."""
+    digest = hashlib.sha1(sf_dir.encode()).hexdigest()[:12]
+    return f"__graft_{digest}_{name}"
 
 
 def warm_lake(
@@ -41,7 +52,10 @@ def warm_lake(
     partitions: int | None = None,
     small_table_bytes: int = 262_144,
 ) -> None:
-    """Repartition + cache every table of ``sf_dir`` in memory.
+    """Repartition + cache every table of ``sf_dir`` in memory, and
+    register one temp view per cached table (``warm_view_name``), which
+    ``lake_sql`` texts read it through.  The views belong to the lake
+    until ``unwarm_lake``.
 
     Why: the driver's testdata files are single-row-group parquet, so a cold
     scan is one task no matter how many cores exist (parquet row groups are
@@ -54,6 +68,9 @@ def warm_lake(
     fits, spilling to disk (MEMORY_AND_DISK is ``cache()``'s default for
     DataFrames).  Tables under ``small_table_bytes`` stay single-partition so
     broadcast-sized dims don't pay 32-task scheduling per stage.
+
+    ``partitions`` defaults to ``max(2, cpus // 4)``: on a 4-core host one
+    partition per core was slower over the headline queries (see ROADMAP).
     """
     from pyspark import __version__ as _  # noqa: F401  (documents pin intent)
 
@@ -69,13 +86,65 @@ def warm_lake(
         n = partitions if size > small_table_bytes else 1
         cached = df.repartition(n).cache()
         cached.count()  # materialize now so queries never pay the fill
+        cached.createOrReplaceTempView(warm_view_name(sf_dir, name))
         _WARMED[key] = cached
 
 
 def unwarm_lake(sf_dir: str | None = None) -> None:
-    """Drop warmed tables (all lakes, or just ``sf_dir``'s)."""
+    """Drop warmed tables (all lakes, or just ``sf_dir``'s) and the views
+    ``warm_lake`` registered over them.  Dropping a view uncaches its
+    plan, which is the table being dropped here anyway."""
     for key in [k for k in _WARMED if sf_dir is None or k[0] == sf_dir]:
-        _WARMED.pop(key).unpersist()
+        cached = _WARMED.pop(key)
+        cached.sparkSession.catalog.dropTempView(warm_view_name(*key))
+        cached.unpersist()
+
+
+class _View:
+    """A registered view, spliced into a ``spark.sql`` text as a quoted
+    identifier (PySpark's formatter would quote a ``str`` as a literal)."""
+
+    __slots__ = ("name",)
+
+    def __init__(self, name: str):
+        self.name = name
+
+    def __format__(self, spec: str) -> str:
+        return f"`{self.name}`"
+
+
+_FIELDS = string.Formatter()
+
+
+def lake_sql(
+    spark: SparkSession,
+    sf_dir: str,
+    text: str,
+    layout_for: Mapping[str, tuple[str, ...]] | None = None,
+) -> DataFrame:
+    """``text`` as ONE ``spark.sql`` query — one parse, one analysis —
+    with each ``{name}`` field bound to table ``name`` of ``sf_dir``
+    (literal braces are doubled, as in ``str.format``).
+
+    A table warmed in this session is bound by the name of its
+    ``warm_lake`` view, so the query registers and drops no view.  Any
+    other table is bound to the frame ``load_table`` would serve unwarmed
+    (``layout_for`` gives its key hint): PySpark registers a temp view
+    for it and drops that view once the text is analysed.  Dropping a
+    view uncaches its plan, which is why a warmed frame must never take
+    that path; another session, which cannot see the warm views, reads
+    the files."""
+    bind: dict[str, object] = {}
+    for _, name, _, _ in _FIELDS.parse(text):
+        if name is None or name in bind:
+            continue
+        warmed = _WARMED.get((sf_dir, name))
+        if warmed is not None and warmed.sparkSession is spark:
+            bind[name] = _View(warm_view_name(sf_dir, name))
+        else:
+            hint = layout_for.get(name) if layout_for else None
+            bind[name] = _load_unwarmed(spark, sf_dir, name, hint)
+    return spark.sql(text, **bind)
 
 
 def load_table(
@@ -95,6 +164,17 @@ def load_table(
     warmed = _WARMED.get((sf_dir, name))
     if warmed is not None:
         return warmed
+    return _load_unwarmed(spark, sf_dir, name, layout_for)
+
+
+def _load_unwarmed(
+    spark: SparkSession,
+    sf_dir: str,
+    name: str,
+    layout_for: tuple[str, ...] | None = None,
+) -> DataFrame:
+    """``load_table`` past the warmed copy: the fresh bucketed copy, or
+    else the plain parquet."""
     from .layout import resolve_bucketed
 
     bucketed = resolve_bucketed(spark, sf_dir, name, layout_for)

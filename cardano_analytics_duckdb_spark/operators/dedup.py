@@ -25,26 +25,24 @@ from pyspark.sql import functions as F
 
 from ..functions.ordering import small_sorted
 from ..functions.rounding import rnd
-from ..lake.tables import load_table
+from ..lake.tables import lake_sql, load_table
 from .similarity import _dot, _norm
 
 # -- exact dedup: hash-groupBy fingerprint ------------------------------------
 
 
 def exact_dedup_groups(spark: SparkSession, sf_dir: str) -> DataFrame:
-    docs = load_table(spark, sf_dir, "documents")
-    return (
-        docs.selectExpr("doc_id", "md5(CAST(text AS BINARY)) AS fingerprint")
-        .groupBy("fingerprint")
-        .agg(
-            F.expr("min(doc_id) AS canonical_doc_id"),
-            F.expr("count(*) AS dup_count"),
-        )
-        # sort key ≠ group key, so the shuffles can't merge; the result is
-        # group-bounded and small, so one-pass coalesced sort beats
-        # orderBy's plan-re-executing range sampler (functions/ordering.py)
-        .transform(small_sorted, "canonical_doc_id")
-    )
+    # sort key ≠ group key, so the shuffles can't merge; the result is
+    # group-bounded and small, so one-pass coalesced sort beats ORDER BY's
+    # plan-re-executing range sampler (functions/ordering.py)
+    return lake_sql(spark, sf_dir, """
+SELECT /*+ COALESCE(1) */ fingerprint,
+       min(doc_id) AS canonical_doc_id,
+       count(*) AS dup_count
+FROM (SELECT doc_id, md5(CAST(text AS BINARY)) AS fingerprint FROM {documents})
+GROUP BY fingerprint
+SORT BY canonical_doc_id
+""")
 
 
 _EXACT_DEDUP_SQL = """
@@ -58,6 +56,12 @@ ORDER BY canonical_doc_id
 
 # -- word 3-gram shingles (shared by Jaccard and MinHash) ---------------------
 
+# A row's word array and its 3-gram shingle array, as SQL text.
+_WORDS = "split(text, ' ')"
+_SHINGLE_ARRAY = (
+    "transform(sequence(0, size(w)-3), i -> concat_ws(' ', w[i], w[i+1], w[i+2]))"
+)
+
 
 def _shingles(docs: DataFrame, distinct: bool = True) -> DataFrame:
     """(doc_id, shingle) pairs; docs with <3 tokens contribute none.
@@ -65,13 +69,9 @@ def _shingles(docs: DataFrame, distinct: bool = True) -> DataFrame:
     ``distinct=True`` gives set semantics (needed for Jaccard counts);
     min-based consumers can skip the dedup shuffle."""
     out = (
-        docs.selectExpr("doc_id", "split(text, ' ') AS w")
+        docs.selectExpr("doc_id", f"{_WORDS} AS w")
         .filter("size(w) >= 3")
-        .selectExpr(
-            "doc_id",
-            "explode(transform(sequence(0, size(w)-3),"
-            " i -> concat_ws(' ', w[i], w[i+1], w[i+2]))) AS sh",
-        )
+        .selectExpr("doc_id", f"explode({_SHINGLE_ARRAY}) AS sh")
     )
     return out.distinct() if distinct else out
 
@@ -97,12 +97,7 @@ def _shingle_arrays(spark: SparkSession, sf_dir: str) -> DataFrame:
         .filter(F.size("w") >= 3)
         .select(
             "doc_id",
-            F.array_distinct(
-                F.expr(
-                    "transform(sequence(0, size(w)-3),"
-                    " i -> concat_ws(' ', w[i], w[i+1], w[i+2]))"
-                )
-            ).alias("sh_arr"),
+            F.array_distinct(F.expr(_SHINGLE_ARRAY)).alias("sh_arr"),
         )
     )
 
@@ -201,6 +196,21 @@ ORDER BY doc_a, doc_b
 _MINHASH_K = 6
 _BANDS = [(0, 3), (3, 6)]
 
+# Signature aggregates over (doc_id, sh) rows, and the one explode that
+# emits both bands of a signature row as ``bk`` structs (a union of two
+# projections would recompute the signature lineage per branch).
+_SIGNATURE_AGGS = [
+    f"min(substring(md5(CAST(sh AS BINARY)), {1 + i * 5}, 5)) AS h{i}"
+    for i in range(_MINHASH_K)
+]
+_BAND_EXPLODE = "explode(array({})) AS bk".format(", ".join(
+    f"struct({b} AS band, concat_ws('|', "
+    + ", ".join(f"h{i}" for i in range(lo, hi))
+    + ") AS band_key)"
+    for b, (lo, hi) in enumerate(_BANDS)
+))
+_BAND_COLS = ("doc_id", "bk.band AS band", "bk.band_key AS band_key")
+
 
 def _canonical_bands(docs: DataFrame) -> tuple[DataFrame, DataFrame]:
     """(band rows over canonical signatures only, doc→canon membership map).
@@ -297,31 +307,38 @@ def _signatures(docs: DataFrame) -> DataFrame:
     # evaluate interpreted, while the exploded form keeps md5/substring/min
     # inside whole-stage codegen with map-side partial aggregation.)
     sh = _shingles(docs, distinct=False)
-    return sh.groupBy("doc_id").agg(*[
-        F.expr(f"min(substring(md5(CAST(sh AS BINARY)), {1 + i * 5}, 5)) AS h{i}")
-        for i in range(_MINHASH_K)
-    ])
+    return sh.groupBy("doc_id").agg(*map(F.expr, _SIGNATURE_AGGS))
 
 
 def _bands_of(sig: DataFrame) -> DataFrame:
     """Signature rows → (doc_id, band, band_key) band rows."""
-    # Emit both bands via one explode so the signature lineage is computed
-    # once (a union of two projections would recompute it per branch).
-    band_structs = ", ".join(
-        f"struct({b} AS band, concat_ws('|', "
-        + ", ".join(f"h{i}" for i in range(lo, hi))
-        + ") AS band_key)"
-        for b, (lo, hi) in enumerate(_BANDS)
+    return sig.selectExpr("doc_id", _BAND_EXPLODE).selectExpr(*_BAND_COLS)
+
+
+# The bucket report in one text, innermost first: words → shingles →
+# signatures → band rows, then ONE hash exchange on the bucket key (see
+# minhash_band_buckets).  Nested subqueries, not a WITH chain: Spark took
+# about a third longer to analyse the same plan written with CTEs.
+_MINHASH_BUCKETS_TEXT = f"""
+SELECT * FROM (
+  SELECT band, band_key, count(*) AS bucket_size,
+         concat_ws('|', transform(array_sort(collect_list(doc_id)),
+                                  x -> CAST(x AS STRING))) AS members
+  FROM (SELECT /*+ REPARTITION(band, band_key) */ * FROM (
+    SELECT {", ".join(_BAND_COLS)} FROM (
+      SELECT doc_id, {_BAND_EXPLODE} FROM (
+        SELECT doc_id, {", ".join(_SIGNATURE_AGGS)} FROM (
+          SELECT doc_id, explode({_SHINGLE_ARRAY}) AS sh FROM (
+            SELECT doc_id, {_WORDS} AS w FROM {{documents}}
+          ) WHERE size(w) >= 3
+        ) GROUP BY doc_id
+      )
     )
-    return sig.selectExpr(
-        "doc_id", f"explode(array({band_structs})) AS bk"
-    ).selectExpr("doc_id", "bk.band AS band", "bk.band_key AS band_key")
-
-
-def _minhash_bands(docs: DataFrame) -> DataFrame:
-    """(doc_id, band, band_key) rows — the LSH banding core shared by the
-    bucket report and the semantic-dedup candidate generator."""
-    return _bands_of(_signatures(docs))
+  ))
+  GROUP BY band, band_key
+) WHERE bucket_size > 1
+SORT BY band, band_key
+"""
 
 
 def minhash_band_buckets(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -330,35 +347,22 @@ def minhash_band_buckets(spark: SparkSession, sf_dir: str) -> DataFrame:
     # corpus costs O(bucket size) (the members cell), never O(bucket²).
     # The pair-generating consumers go through minhash_candidate_pairs,
     # which self-joins canonical signatures only.
-    all_bands = _minhash_bands(load_table(spark, sf_dir, "documents"))
-    return (
-        # ONE hash exchange, computed-once lineage (r10): the previous
-        # repartitionByRange here bought a global ORDER BY, but its
-        # RangePartitioner SAMPLER re-ran the entire signature lineage
-        # (shingle → hash → min-reduce) a second time before the real
-        # shuffle — and the keys only exist post-computation, so the
-        # pre-shuffle range trick (ordering.py) can't apply.  A bucket
-        # report at 100 TB is doc-count-sized and never needs a TOTAL
-        # order; hash clustering satisfies the group-by with no sampler,
-        # and the partition-local sort keeps output deterministic per
-        # partition (driver/oracle comparison is order-insensitive).
-        # band_key is near-unique, so map-side partials would not shrink
-        # this shuffle anyway.
-        all_bands.repartition("band", "band_key")
-        .groupBy("band", "band_key")
-        # members as a '|'-joined numerically-sorted string (sort before the
-        # string cast — '10' < '2' lexicographically): the driver canonicalizer
-        # can't hash array cells.
-        .agg(
-            F.expr("count(*) AS bucket_size"),
-            F.expr(
-                "concat_ws('|', transform(array_sort(collect_list(doc_id)),"
-                " x -> CAST(x AS STRING))) AS members"
-            ),
-        )
-        .filter("bucket_size > 1")
-        .sortWithinPartitions("band", "band_key")
-    )
+    #
+    # ONE hash exchange, computed-once lineage (r10): the previous
+    # repartitionByRange here bought a global ORDER BY, but its
+    # RangePartitioner SAMPLER re-ran the entire signature lineage
+    # (shingle → hash → min-reduce) a second time before the real
+    # shuffle — and the keys only exist post-computation, so the
+    # pre-shuffle range trick (ordering.py) can't apply.  A bucket
+    # report at 100 TB is doc-count-sized and never needs a TOTAL
+    # order; hash clustering satisfies the group-by with no sampler,
+    # and the partition-local sort keeps output deterministic per
+    # partition (driver/oracle comparison is order-insensitive).
+    # band_key is near-unique, so map-side partials would not shrink
+    # this shuffle anyway.  members is a '|'-joined numerically-sorted
+    # string (sort before the string cast — '10' < '2'
+    # lexicographically): the driver canonicalizer can't hash array cells.
+    return lake_sql(spark, sf_dir, _MINHASH_BUCKETS_TEXT)
 
 
 def _minhash_sql() -> str:
@@ -577,34 +581,49 @@ ORDER BY doc_a, doc_b
 # fingerprint is set iff sum over tokens of (±1 by bit b of h16) is positive.
 
 
+# The SimHash stages as SQL text: one row per token occurrence with its
+# 16-bit hash, the per-doc ±1 bit sums, and the fingerprint they give.
+_TOKEN_EXPLODE = f"explode({_WORDS}) AS tok"
+_H16 = "CAST(conv(substring(md5(CAST(tok AS BINARY)), 1, 4), 16, 10) AS INT)"
+_BIT_SUMS = [
+    f"sum(CASE WHEN (shiftright(h16, {b}) & 1) = 1 THEN 1 ELSE -1 END) AS b{b}"
+    for b in range(16)
+]
+_SIMHASH16 = "CAST({} AS INT) AS simhash16".format(" + ".join(
+    ["0"] + [f"CASE WHEN b{b} > 0 THEN {1 << b} ELSE 0 END" for b in range(16)]
+))
+
+
 def _simhash_frame(docs: DataFrame) -> DataFrame:
-    """Unordered (doc_id, simhash16) — shared by the fingerprint report
-    and the recall eval.  A shuffle-free HOF-fold shape (md5 per token
-    inside ``transform``) was measured 55x slower at 100x docs
-    (SCALE_PROBE r13_simhash_ab): Catalyst interprets HOF lambdas per
-    element, while this explode shape keeps md5 and the ±1 sums in
-    whole-stage codegen."""
-    toks = docs.selectExpr("doc_id", "explode(split(text, ' ')) AS tok")
-    h = toks.withColumn("h16", F.expr(
-        "CAST(conv(substring(md5(CAST(tok AS BINARY)), 1, 4), 16, 10) AS INT)"
-    ))
-    bit_sums = h.groupBy("doc_id").agg(*[
-        F.expr(f"sum(CASE WHEN (shiftright(h16, {b}) & 1) = 1"
-               f" THEN 1 ELSE -1 END) AS b{b}")
-        for b in range(16)
-    ])
-    fp = " + ".join(
-        ["0"] + [f"CASE WHEN b{b} > 0 THEN {1 << b} ELSE 0 END" for b in range(16)]
-    )
-    return bit_sums.selectExpr("doc_id", f"CAST({fp} AS INT) AS simhash16")
+    """Unordered (doc_id, simhash16) — the recall eval's fingerprints,
+    built as ``simhash_fingerprints`` builds its text.  A shuffle-free
+    HOF-fold shape (md5 per token inside ``transform``) was measured 55x
+    slower at 100x docs (SCALE_PROBE r13_simhash_ab): Catalyst interprets
+    HOF lambdas per element, while this explode shape keeps md5 and the
+    ±1 sums in whole-stage codegen."""
+    toks = docs.selectExpr("doc_id", _TOKEN_EXPLODE)
+    h = toks.withColumn("h16", F.expr(_H16))
+    bit_sums = h.groupBy("doc_id").agg(*map(F.expr, _BIT_SUMS))
+    return bit_sums.selectExpr("doc_id", _SIMHASH16)
+
+
+# one row per doc: coalesced one-pass sort (functions/ordering.py)
+_SIMHASH_FINGERPRINTS_TEXT = f"""
+SELECT /*+ COALESCE(1) */ doc_id, {_SIMHASH16}
+FROM (
+  SELECT doc_id, {", ".join(_BIT_SUMS)}
+  FROM (
+    SELECT *, {_H16} AS h16
+    FROM (SELECT doc_id, {_TOKEN_EXPLODE} FROM {{documents}})
+  )
+  GROUP BY doc_id
+)
+SORT BY doc_id
+"""
 
 
 def simhash_fingerprints(spark: SparkSession, sf_dir: str) -> DataFrame:
-    return (
-        _simhash_frame(load_table(spark, sf_dir, "documents"))
-        # one row per doc: coalesced one-pass sort (functions/ordering.py)
-        .transform(small_sorted, "doc_id")
-    )
+    return lake_sql(spark, sf_dir, _SIMHASH_FINGERPRINTS_TEXT)
 
 
 # -- SimHash recall eval ------------------------------------------------------

@@ -12,7 +12,8 @@ Each query transplants one operator family from the reference's workloads
   /root/reference/token_fee_analysis.py:8-16, ogmios_parquet.py:432-435
 
 Scale notes (100 TB posture): dimension joins are explicitly
-``F.broadcast``; aggregations rely on Catalyst partial/final staging;
+broadcast (``F.broadcast``, or a ``/*+ BROADCAST(x) */`` hint in a SQL
+text); aggregations rely on Catalyst partial/final staging;
 top-k compiles to TakeOrderedAndProject (no global sort); all scans are
 single-pass with pushdown-friendly filters.
 """
@@ -27,20 +28,20 @@ from pyspark.sql import functions as F
 from ..functions.ordering import small_sorted
 from ..functions.rounding import cent_sum, rnd, rnd_expr
 from ..functions.slots import slot_posix_ms, slot_posix_ms_sql
-from ..lake.tables import load_table
+from ..lake.tables import lake_sql, load_table
 
 # -- S1/P1/P2/O1: glob scan → filter → project → top-k ----------------------
 # ≙ main.py:24-35 (tx_fee > 2_000_000 ORDER BY tx_fee DESC LIMIT 100)
 
 
 def high_value_orders(spark: SparkSession, sf_dir: str) -> DataFrame:
-    orders = load_table(spark, sf_dir, "orders")
-    return (
-        orders.filter("o_totalprice > 400000.0D")
-        .selectExpr("o_orderkey", "o_custkey", "o_totalprice", "o_orderdate")
-        .orderBy(F.desc("o_totalprice"), "o_orderkey")
-        .limit(100)
-    )
+    return lake_sql(spark, sf_dir, """
+SELECT o_orderkey, o_custkey, o_totalprice, o_orderdate
+FROM {orders}
+WHERE o_totalprice > 400000.0D
+ORDER BY o_totalprice DESC, o_orderkey
+LIMIT 100
+""")
 
 
 _HIGH_VALUE_ORDERS_SQL = """
@@ -54,14 +55,17 @@ LIMIT 100
 # -- A1: ungrouped multi-aggregate ≙ main.py:45-53 ---------------------------
 
 
+_ORDER_SUMMARY_TEXT = f"""
+SELECT count(*) AS total_orders,
+       {rnd_expr("avg(o_totalprice)", 2)} AS avg_price,
+       {rnd_expr("max(o_totalprice)", 2)} AS max_price,
+       {rnd_expr("min(o_totalprice)", 2)} AS min_price
+FROM {{orders}}
+"""
+
+
 def order_summary_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
-    orders = load_table(spark, sf_dir, "orders")
-    return orders.agg(*map(F.expr, [
-        "count(*) AS total_orders",
-        rnd_expr("avg(o_totalprice)", 2) + " AS avg_price",
-        rnd_expr("max(o_totalprice)", 2) + " AS max_price",
-        rnd_expr("min(o_totalprice)", 2) + " AS min_price",
-    ]))
+    return lake_sql(spark, sf_dir, _ORDER_SUMMARY_TEXT)
 
 
 _ORDER_SUMMARY_SQL = """
@@ -75,24 +79,28 @@ FROM orders
 # -- A7/P4/F7/O2: grouped multi-agg + range predicate (TPC-H Q1 shape) -------
 
 
+_DISC_PRICE = "l_extendedprice * (1 - l_discount)"
+
+# COALESCE(1) + SORT BY: small_sorted's one-pass order (functions/ordering.py)
+_PRICING_SUMMARY_TEXT = f"""
+SELECT /*+ COALESCE(1) */ l_returnflag, l_linestatus,
+       {rnd_expr("sum(l_quantity)", 2)} AS sum_qty,
+       {rnd_expr("sum(l_extendedprice)", 2)} AS sum_base_price,
+       {rnd_expr(f"sum({_DISC_PRICE})", 2)} AS sum_disc_price,
+       {rnd_expr(f"sum({_DISC_PRICE} * (l_tax + 1))", 2)} AS sum_charge,
+       {rnd_expr("avg(l_quantity)", 2)} AS avg_qty,
+       {rnd_expr("avg(l_extendedprice)", 2)} AS avg_price,
+       {rnd_expr("avg(l_discount)", 4)} AS avg_disc,
+       count(*) AS count_order
+FROM {{lineitem}}
+WHERE l_shipdate <= CAST('1998-09-02' AS TIMESTAMP)
+GROUP BY l_returnflag, l_linestatus
+SORT BY l_returnflag, l_linestatus
+"""
+
+
 def pricing_summary(spark: SparkSession, sf_dir: str) -> DataFrame:
-    li = load_table(spark, sf_dir, "lineitem")
-    disc_price = "l_extendedprice * (1 - l_discount)"
-    return (
-        li.filter("l_shipdate <= CAST('1998-09-02' AS TIMESTAMP)")
-        .groupBy("l_returnflag", "l_linestatus")
-        .agg(*map(F.expr, [
-            rnd_expr("sum(l_quantity)", 2) + " AS sum_qty",
-            rnd_expr("sum(l_extendedprice)", 2) + " AS sum_base_price",
-            rnd_expr(f"sum({disc_price})", 2) + " AS sum_disc_price",
-            rnd_expr(f"sum({disc_price} * (l_tax + 1))", 2) + " AS sum_charge",
-            rnd_expr("avg(l_quantity)", 2) + " AS avg_qty",
-            rnd_expr("avg(l_extendedprice)", 2) + " AS avg_price",
-            rnd_expr("avg(l_discount)", 4) + " AS avg_disc",
-            "count(*) AS count_order",
-        ]))
-        .transform(small_sorted, "l_returnflag", "l_linestatus")
-    )
+    return lake_sql(spark, sf_dir, _PRICING_SUMMARY_TEXT)
 
 
 _PRICING_SUMMARY_SQL = """
@@ -162,14 +170,6 @@ ORDER BY c_custkey
 
 
 def revenue_by_region(spark: SparkSession, sf_dir: str) -> DataFrame:
-    # layout_for: serve the custkey-bucketed copies when the lake's
-    # declared layout (lake/layout.py) has them — Catalyst then drops
-    # both join Exchanges (customer_order_distribution went 0.96x DuckDB
-    # at 100x on this same key family, SCALE_PROBE tpch_100x).
-    orders = load_table(spark, sf_dir, "orders", layout_for=("o_custkey",))
-    customer = load_table(
-        spark, sf_dir, "customer", layout_for=("c_custkey",)
-    )
     # nation⋈region is a 25-row lookup: snapshot it once per lake (see
     # _collected_dim) and fold nationkey→region-name into a literal map,
     # replacing two serial broadcast builds per execution with a codegen'd
@@ -179,7 +179,7 @@ def revenue_by_region(spark: SparkSession, sf_dir: str) -> DataFrame:
     nat = dict(_collected_dim(spark, sf_dir, "nation", ("n_nationkey", "n_regionkey")))
     reg = dict(_collected_dim(spark, sf_dir, "region", ("r_regionkey", "r_name")))
     key_to_region = "map(" + ",".join(
-        f"{k},'" + reg[rk].replace("'", "''") + "'"
+        f"{k},{_sql_str(reg[rk])}"
         for k, rk in sorted(nat.items())
         if rk in reg
     ) + ")"
@@ -192,23 +192,28 @@ def revenue_by_region(spark: SparkSession, sf_dir: str) -> DataFrame:
     # 2.41 s vs forced broadcast 2.42 s (A/B in SCALE_PROBE
     # revenue_by_region_join_100x) — the hint costs nothing and removes
     # the scale cliff.
-    return (
-        orders.join(
-            customer.selectExpr("c_custkey", "c_nationkey").hint("shuffle_hash"),
-            F.expr("o_custkey = c_custkey"),
-        )
-        .selectExpr(
-            f"element_at({key_to_region}, c_nationkey) AS r_name",
-            "o_totalprice",
-        )
-        .filter("r_name IS NOT NULL")
-        .groupBy("r_name")
-        .agg(
-            F.expr(rnd_expr("sum(o_totalprice)", 2) + " AS revenue"),
-            F.expr("count(*) AS order_count"),
-        )
-        .transform(small_sorted, "r_name")
-    )
+    text = f"""
+SELECT /*+ COALESCE(1) */ r_name,
+       {rnd_expr("sum(o_totalprice)", 2)} AS revenue,
+       count(*) AS order_count
+FROM (
+  SELECT /*+ SHUFFLE_HASH(c) */
+         element_at({key_to_region}, c_nationkey) AS r_name, o_totalprice
+  FROM {{orders}}
+  JOIN (SELECT c_custkey, c_nationkey FROM {{customer}}) c
+    ON o_custkey = c_custkey
+)
+WHERE r_name IS NOT NULL
+GROUP BY r_name
+SORT BY r_name
+"""
+    # layout_for: serve the custkey-bucketed copies when the lake's
+    # declared layout (lake/layout.py) has them — Catalyst then drops
+    # both join Exchanges (customer_order_distribution went 0.96x DuckDB
+    # at 100x on this same key family, SCALE_PROBE tpch_100x).
+    return lake_sql(spark, sf_dir, text, layout_for={
+        "orders": ("o_custkey",), "customer": ("c_custkey",),
+    })
 
 
 _REVENUE_BY_REGION_SQL = """
@@ -277,9 +282,15 @@ def _collected_dim(
     return _DOMAIN_CACHE[key]
 
 
+def _sql_str(value: str) -> str:
+    """``value`` as a string literal of a ``lake_sql`` text, whose braces
+    are format fields (so literal ones are doubled)."""
+    v = value.replace("'", "''").replace("{", "{{").replace("}", "}}")
+    return f"'{v}'"
+
+
 def _sql_str_array(values) -> str:
-    quoted = ",".join("'" + v.replace("'", "''") + "'" for v in values)
-    return f"array({quoted})"
+    return "array(" + ",".join(map(_sql_str, values)) + ")"
 
 
 # Decode a bitmask back to the '|'-joined alphabetically-sorted value set:
@@ -304,8 +315,6 @@ def order_brand_sets(spark: SparkSession, sf_dir: str) -> DataFrame:
     # of the domain array.  (collect_set remains the general-domain path —
     # cardano.py's address sets — this rewrite is only legal when the dim
     # side proves the domain ≤62 values.)
-    li = load_table(spark, sf_dir, "lineitem")
-    part = load_table(spark, sf_dir, "part")
     domain = sorted(
         r[0] for r in _collected_dim(spark, sf_dir, "part", ("p_brand",))
     )
@@ -316,18 +325,7 @@ def order_brand_sets(spark: SparkSession, sf_dir: str) -> DataFrame:
     # unmapped brand.
     names = _sql_str_array(domain)
     pos = f"array_position({names}, p_brand)"
-    part_dim = part.selectExpr(
-        "p_partkey",
-        f"CAST(CASE WHEN {pos} > 0 THEN {pos} - 1"
-        " ELSE raise_error('p_brand outside the snapshotted domain') END"
-        " AS INT) AS bit",
-    )
     decode = _BITSET_DECODE.format(n=len(domain), mask="brand_mask", names=names)
-    rows = (
-        li.selectExpr("l_orderkey", "l_partkey")
-        .join(F.broadcast(part_dim), F.expr("l_partkey = p_partkey"))
-        .selectExpr("l_orderkey", "shiftleft(1L, bit) AS brand_bit")
-    )
     # r13 agg-first (the events_sliding lesson applied to the bitset
     # aggs): the old shape pre-shuffled RAW (orderkey, bit) rows through
     # one range exchange — every lineitem row crossed the wire, and the
@@ -336,12 +334,26 @@ def order_brand_sets(spark: SparkSession, sf_dir: str) -> DataFrame:
     # exchange (~4 lineitems/order fold map-side), a HASH exchange of
     # partials only, no sampler — the global order the range bought is
     # canonicalized away by the oracle.  A/B: SCALE_PROBE r13_aggfirst_ab.
-    return (
-        rows.groupBy("l_orderkey")
-        .agg(F.expr("bit_or(brand_bit) AS brand_mask"))
-        .selectExpr("l_orderkey", f"{decode} AS brand_set")
-        .sortWithinPartitions("l_orderkey")
-    )
+    return lake_sql(spark, sf_dir, f"""
+SELECT l_orderkey, {decode} AS brand_set
+FROM (
+  SELECT l_orderkey, bit_or(brand_bit) AS brand_mask
+  FROM (
+    SELECT /*+ BROADCAST(part_dim) */
+           l_orderkey, shiftleft(1L, bit) AS brand_bit
+    FROM (SELECT l_orderkey, l_partkey FROM {{lineitem}})
+    JOIN (
+      SELECT p_partkey,
+             CAST(CASE WHEN {pos} > 0 THEN {pos} - 1
+                  ELSE raise_error('p_brand outside the snapshotted domain') END
+                  AS INT) AS bit
+      FROM {{part}}
+    ) part_dim ON l_partkey = p_partkey
+  )
+  GROUP BY l_orderkey
+)
+SORT BY l_orderkey
+""")
 
 
 _ORDER_BRAND_SETS_SQL = """
@@ -378,11 +390,6 @@ def cross_nation_orders(spark: SparkSession, sf_dir: str) -> DataFrame:
     # and bit_or replaces the per-group collect_set buffers.  Decoding back
     # to the sorted '|'-joined string happens once, post-agg, via a 1-row
     # broadcast of the alphabetical domain array.
-    orders = load_table(spark, sf_dir, "orders")
-    customer = load_table(spark, sf_dir, "customer")
-    li = load_table(spark, sf_dir, "lineitem")
-    supplier = load_table(spark, sf_dir, "supplier")
-
     dim = _collected_dim(spark, sf_dir, "nation", ("n_nationkey", "n_name"))
     names = sorted(n for _, n in dim)
     # literal nationkey→bit map; element_at yields NULL on a NULL/missing
@@ -391,26 +398,6 @@ def cross_nation_orders(spark: SparkSession, sf_dir: str) -> DataFrame:
         f"{k},{names.index(n)}" for k, n in sorted(dim)
     ) + ")"
 
-    supp_rows = (
-        li.selectExpr("l_orderkey", "l_suppkey")
-        .join(F.broadcast(supplier.selectExpr("s_suppkey", "s_nationkey")),
-              F.expr("l_suppkey = s_suppkey"))
-        .selectExpr(
-            "l_orderkey AS o_orderkey",
-            f"shiftleft(1L, element_at({key_to_bit}, s_nationkey)) AS nation_bit",
-            "CAST(NULL AS INT) AS cust_idx",
-        )
-    )
-    cust_rows = (
-        orders.join(
-            F.broadcast(customer.selectExpr("c_custkey", "c_nationkey")),
-            F.expr("o_custkey = c_custkey"), "left")
-        .selectExpr(
-            "o_orderkey",
-            "CAST(0 AS BIGINT) AS nation_bit",
-            f"element_at({key_to_bit}, c_nationkey) AS cust_idx",
-        )
-    )
     # r13 agg-first (see order_brand_sets): the old range pre-shuffle
     # moved every raw union row (≈5 per order: ~4 lineitem-supplier +
     # 1 customer) through one exchange, and the range sampler re-executed
@@ -420,30 +407,41 @@ def cross_nation_orders(spark: SparkSession, sf_dir: str) -> DataFrame:
     # A/B: SCALE_PROBE r13_aggfirst_ab.
     names_arr = _sql_str_array(names)
     decode = _BITSET_DECODE.format(n=len(names), mask="supp_mask", names=names_arr)
-    return (
-        supp_rows.unionByName(cust_rows)
-        .groupBy("o_orderkey")
-        .agg(
-            F.expr("bit_or(nation_bit) AS supp_mask"),
-            F.expr("max(cust_idx) AS cust_idx"),
-        )
-        # The IS DISTINCT FROM rule compares the *encoded* sets: the string
-        # forms are null-safe-equal exactly when supp_mask equals the
-        # customer's single-bit mask (empty set ↔ mask 0 ↔ NULL string on
-        # both sides).  Filtering on the 8-byte masks keeps the comparison
-        # inside whole-stage codegen and decodes only surviving rows once —
-        # the string filter would be folded into the broadcast-join
-        # condition and evaluate the decode expression twice per row.
-        .filter(
-            "NOT (supp_mask <=> if(cust_idx IS NULL, 0L, shiftleft(1L, cust_idx)))"
-        )
-        .selectExpr(
-            "o_orderkey",
-            f"nullif({decode}, '') AS supp_nation_set",
-            f"element_at({names_arr}, cust_idx + 1) AS cust_nation_set",
-        )
-        .sortWithinPartitions("o_orderkey")
-    )
+    # The IS DISTINCT FROM rule compares the *encoded* sets: the string
+    # forms are null-safe-equal exactly when supp_mask equals the
+    # customer's single-bit mask (empty set ↔ mask 0 ↔ NULL string on
+    # both sides).  Filtering on the 8-byte masks keeps the comparison
+    # inside whole-stage codegen and decodes only surviving rows once —
+    # the string filter would be folded into the broadcast-join
+    # condition and evaluate the decode expression twice per row.
+    return lake_sql(spark, sf_dir, f"""
+SELECT o_orderkey,
+       nullif({decode}, '') AS supp_nation_set,
+       element_at({names_arr}, cust_idx + 1) AS cust_nation_set
+FROM (
+  SELECT o_orderkey, bit_or(nation_bit) AS supp_mask, max(cust_idx) AS cust_idx
+  FROM (
+    SELECT /*+ BROADCAST(supp) */
+           l_orderkey AS o_orderkey,
+           shiftleft(1L, element_at({key_to_bit}, s_nationkey)) AS nation_bit,
+           CAST(NULL AS INT) AS cust_idx
+    FROM (SELECT l_orderkey, l_suppkey FROM {{lineitem}})
+    JOIN (SELECT s_suppkey, s_nationkey FROM {{supplier}}) supp
+      ON l_suppkey = s_suppkey
+    UNION ALL
+    SELECT /*+ BROADCAST(cust) */
+           o_orderkey,
+           CAST(0 AS BIGINT) AS nation_bit,
+           element_at({key_to_bit}, c_nationkey) AS cust_idx
+    FROM {{orders}}
+    LEFT JOIN (SELECT c_custkey, c_nationkey FROM {{customer}}) cust
+      ON o_custkey = c_custkey
+  )
+  GROUP BY o_orderkey
+)
+WHERE NOT (supp_mask <=> if(cust_idx IS NULL, 0L, shiftleft(1L, cust_idx)))
+SORT BY o_orderkey
+""")
 
 
 _CROSS_NATION_ORDERS_SQL = """

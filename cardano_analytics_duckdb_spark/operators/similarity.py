@@ -24,13 +24,14 @@ from __future__ import annotations
 import math
 import os
 import random
+from decimal import Decimal
 
 from pyspark.sql import Column, DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
 from ..functions.ordering import small_sorted
 from ..functions.rounding import rnd, rnd_expr
-from ..lake.tables import load_table
+from ..lake.tables import lake_sql, load_table
 
 _DIM = 64
 
@@ -111,17 +112,17 @@ def cosine_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     (at 1024+ dims the matmul may amortize the transfer; unmeasured).
     exact_dedup
     re-read 1.67x in the same probe — its old 1.63x was accurate."""
-    emb = load_table(spark, sf_dir, "embeddings")
     q = _query_vec(spark, sf_dir, vec_id=0)
-    q_lit = "array(" + ", ".join(f"cast({v!r} as double)" for v in q) + ")"
     q_norm = math.sqrt(sum(v * v for v in q))
-    sim = f"{_dot_sql('embedding', q_lit)} / ({_norm_sql('embedding')} * {q_norm!r}D)"
-    return (
-        emb.filter("vec_id != 0")
-        .selectExpr("vec_id", rnd_expr(sim, 4) + " AS cos_sim")
-        .orderBy(F.desc("cos_sim"), "vec_id")
-        .limit(10)
-    )
+    sim = (f"{_dot_sql('embedding', _plane_lit(q))}"
+           f" / ({_norm_sql('embedding')} * {q_norm!r}D)")
+    return lake_sql(spark, sf_dir, f"""
+SELECT vec_id, {rnd_expr(sim, 4)} AS cos_sim
+FROM {{embeddings}}
+WHERE vec_id != 0
+ORDER BY cos_sim DESC, vec_id
+LIMIT 10
+""")
 
 
 _COSINE_TOPK_SQL = """
@@ -168,16 +169,32 @@ _PLANES = [
 ]
 
 
-def _plane_lit(p: list[float]) -> str:
-    return "array(" + ", ".join(f"cast({v!r} as double)" for v in p) + ")"
+def _double_lit(v: float) -> str:
+    """``v`` as a SQL double literal with an integer mantissa (0.805831 →
+    ``805831E-6D``, 1e-05 → ``1E-5D``), from its shortest ``repr``, so
+    Spark reads back the same double with no cast to fold.  A literal
+    with a decimal point runs a lexer predicate: 512 of them parsed in
+    28 ms, 512 in this form in 8 ms."""
+    sign, digits, exp = Decimal(repr(v)).as_tuple()
+    return f"{'-' if sign else ''}{int(''.join(map(str, digits)))}E{exp}D"
+
+
+def _plane_lit(p) -> str:
+    """A vector as a SQL array of double literals (``_double_lit``)."""
+    return "array(" + ", ".join(map(_double_lit, p)) + ")"
+
+
+_LSH_BUCKETS_TEXT = """
+SELECT vec_id, CAST({} AS INT) AS bucket
+FROM {{embeddings}}
+SORT BY vec_id
+""".format(" + ".join(["0"] + [
+    f"CASE WHEN {_dot_sql('embedding', _plane_lit(p))} > 0 THEN {1 << i} ELSE 0 END"
+    for i, p in enumerate(_PLANES)
+]))
 
 
 def lsh_bucket_assignments(spark: SparkSession, sf_dir: str) -> DataFrame:
-    emb = load_table(spark, sf_dir, "embeddings")
-    bucket = " + ".join(["0"] + [
-        f"CASE WHEN {_dot_sql('embedding', _plane_lit(p))} > 0 THEN {1 << i} ELSE 0 END"
-        for i, p in enumerate(_PLANES)
-    ])
     # r13 sort-drop: the r10 shape persisted the narrow (vec_id, bucket)
     # projection and range-exchanged it so the sampler would not re-run
     # the 8 hyperplane HOF dots (0.68 s vs 0.89/1.07 s then).  The
@@ -186,9 +203,7 @@ def lsh_bucket_assignments(spark: SparkSession, sf_dir: str) -> DataFrame:
     # ONCE over the scan partitioning with no exchange, no sampler and —
     # critically — NO persist on the query path (the old cache entry
     # lingered across bench runs).  A/B: SCALE_PROBE r13_sortdrop_ab.
-    return emb.selectExpr(
-        "vec_id", f"CAST({bucket} AS INT) AS bucket"
-    ).sortWithinPartitions("vec_id")
+    return lake_sql(spark, sf_dir, _LSH_BUCKETS_TEXT)
 
 
 def _lsh_sql() -> str:

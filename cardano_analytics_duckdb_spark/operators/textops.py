@@ -17,19 +17,30 @@ from pyspark.sql import functions as F
 
 from ..functions.ordering import small_sorted
 from ..functions.rounding import rnd, rnd_expr, rnd_sql
-from ..lake.tables import load_table
+from ..lake.tables import lake_sql, load_table
 
 # -- token counting + quality scoring -----------------------------------------
 
 
+_N_TOKENS = "size(split(text, ' '))"
+_N_DISTINCT = "size(array_distinct(split(text, ' ')))"
+_AVG_TOKEN_LEN = (
+    "aggregate(split(text, ' '), cast(0.0 as double),"
+    f" (acc, t) -> acc + length(t)) / {_N_TOKENS}"
+)
+_QUALITY_TEXT = f"""
+SELECT doc_id,
+       length(text) AS n_chars_actual,
+       {_N_TOKENS} AS n_tokens,
+       {_N_DISTINCT} AS n_distinct_tokens,
+       {rnd_expr(f"{_N_DISTINCT} / {_N_TOKENS}", 4)} AS type_token_ratio,
+       {rnd_expr(_AVG_TOKEN_LEN, 2)} AS avg_token_len
+FROM {{documents}}
+SORT BY doc_id
+"""
+
+
 def doc_quality_scores(spark: SparkSession, sf_dir: str) -> DataFrame:
-    docs = load_table(spark, sf_dir, "documents")
-    n_tokens = "size(split(text, ' '))"
-    n_distinct = "size(array_distinct(split(text, ' ')))"
-    avg_tok_len = (
-        "aggregate(split(text, ' '), cast(0.0 as double),"
-        " (acc, t) -> acc + length(t)) / size(split(text, ' '))"
-    )
     # r13: this used to repartitionByRange("doc_id") first — the choice
     # back then was between a pre-shuffle (compute once post-shuffle,
     # local sort finishes the global ORDER BY) and orderBy (whose range
@@ -38,17 +49,7 @@ def doc_quality_scores(spark: SparkSession, sf_dir: str) -> DataFrame:
     # row order, so the shuffle bought nothing but determinism of file
     # layout.  Shuffle-free is scan -> project -> local sort, zero
     # exchanges (A/B in SCALE_PROBE r13_text2_ab).
-    return (
-        docs.selectExpr(
-            "doc_id",
-            "length(text) AS n_chars_actual",
-            f"{n_tokens} AS n_tokens",
-            f"{n_distinct} AS n_distinct_tokens",
-            rnd_expr(f"{n_distinct} / {n_tokens}", 4) + " AS type_token_ratio",
-            rnd_expr(avg_tok_len, 2) + " AS avg_token_len",
-        )
-        .sortWithinPartitions("doc_id")
-    )
+    return lake_sql(spark, sf_dir, _QUALITY_TEXT)
 
 
 _QUALITY_SQL = """

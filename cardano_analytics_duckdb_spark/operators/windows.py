@@ -21,13 +21,12 @@ from pyspark.sql import DataFrame, SparkSession, Window as W
 from pyspark.sql import functions as F
 
 from ..functions.rounding import cent_sum, cent_sum_expr, cent_sum_sql, rnd
-from ..lake.tables import load_table
+from ..lake.tables import lake_sql, load_table
 
 # -- top-k per group ----------------------------------------------------------
 
 
 def top_orders_per_customer(spark: SparkSession, sf_dir: str) -> DataFrame:
-    orders = load_table(spark, sf_dir, "orders")
     # One range shuffle on the RAW scan serves the window's clustering
     # requirement; range partitions being ordered, a partition-local sort
     # gives total order in the same pass.
@@ -43,16 +42,16 @@ def top_orders_per_customer(spark: SparkSession, sf_dir: str) -> DataFrame:
     # pins the partition count (the same structure WINS 11% for
     # user_sessions, whose events shuffle is 10x bigger and never
     # coalesces below the cores).
-    return (
-        orders.repartitionByRange("o_custkey")
-        .withColumn("rn", F.expr(
-            "row_number() OVER (PARTITION BY o_custkey"
-            " ORDER BY o_totalprice DESC, o_orderkey)"
-        ))
-        .filter("rn <= 3")
-        .selectExpr("o_custkey", "o_orderkey", "o_totalprice", "rn")
-        .sortWithinPartitions("o_custkey", "rn")
-    )
+    return lake_sql(spark, sf_dir, """
+SELECT o_custkey, o_orderkey, o_totalprice, rn
+FROM (
+  SELECT *, row_number() OVER (PARTITION BY o_custkey
+                               ORDER BY o_totalprice DESC, o_orderkey) AS rn
+  FROM (SELECT /*+ REPARTITION_BY_RANGE(o_custkey) */ * FROM {orders})
+)
+WHERE rn <= 3
+SORT BY o_custkey, rn
+""")
 
 
 _TOP_ORDERS_SQL = """
@@ -127,12 +126,26 @@ ORDER BY user_id, event_id
 # lag + conditional cumsum — the batch expression of session_window().
 
 
+_SESSION_WINDOW = "PARTITION BY user_id ORDER BY ts, event_id"
+_GAP_MS = f"(unix_millis(ts) - unix_millis(lag(ts) OVER ({_SESSION_WINDOW})))"
+_USER_SESSIONS_TEXT = f"""
+SELECT user_id, session_id, count(*) AS n_events,
+       {cent_sum_expr("value")} AS session_value
+FROM (
+  SELECT *, sum(new_sess) OVER ({_SESSION_WINDOW}
+              ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW) AS session_id
+  FROM (
+    SELECT *, CASE WHEN {_GAP_MS} IS NULL OR {_GAP_MS} > 1800000
+                   THEN 1 ELSE 0 END AS new_sess
+    FROM {{events}}
+  )
+)
+GROUP BY user_id, session_id
+SORT BY user_id, session_id
+"""
+
+
 def user_sessions(spark: SparkSession, sf_dir: str) -> DataFrame:
-    events = load_table(spark, sf_dir, "events")
-    w = "PARTITION BY user_id ORDER BY ts, event_id"
-    gap_ms = f"(unix_millis(ts) - unix_millis(lag(ts) OVER ({w})))"
-    is_new = f"CASE WHEN {gap_ms} IS NULL OR {gap_ms} > 1800000 THEN 1 ELSE 0 END"
-    cum = f"{w} ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW"
     # r13: the explicit range shuffle becomes the window's implicit HASH
     # exchange — still ONE shuffle (hashpartitioning(user_id) satisfies
     # both windows' clustering AND the groupBy's (user_id, session_id)
@@ -140,18 +153,9 @@ def user_sessions(spark: SparkSession, sf_dir: str) -> DataFrame:
     # range-boundary sampling pass over the raw scan is gone, and the
     # global order it bought is canonicalized away by the oracle (the
     # gopher/pii lesson).  A/B: SCALE_PROBE r13_sortdrop_ab.
-    return (
-        events.withColumn("new_sess", F.expr(is_new))
-        .withColumn("session_id", F.expr(f"sum(new_sess) OVER ({cum})"))
-        .groupBy("user_id", "session_id")
-        .agg(
-            F.expr("count(*) AS n_events"),
-            # cent_sum, not rnd(sum(...)): float partial-sum order differs
-            # between engines and flips 2-decimal rounding (r1 hash mismatch).
-            F.expr(cent_sum_expr("value") + " AS session_value"),
-        )
-        .sortWithinPartitions("user_id", "session_id")
-    )
+    # cent_sum, not rnd(sum(...)): float partial-sum order differs between
+    # engines and flips 2-decimal rounding (r1 hash mismatch).
+    return lake_sql(spark, sf_dir, _USER_SESSIONS_TEXT)
 
 
 _SESSIONS_SQL = """
@@ -179,13 +183,25 @@ ORDER BY user_id, session_id
 # -- tumbling event-time window (batch analog of streaming groupBy(window)) ---
 
 
+_TUMBLING_TEXT = f"""
+SELECT /*+ REPARTITION(1) */ bucket_start_ms, event_type, count(*) AS n,
+       {cent_sum_expr("value")} AS total_value
+FROM (
+  SELECT floor(unix_millis(ts) / 300000) * 300000 AS bucket_start_ms,
+         event_type, value
+  FROM {{events}}
+)
+GROUP BY bucket_start_ms, event_type
+SORT BY bucket_start_ms, event_type
+"""
+
+
 def events_tumbling_5min(spark: SparkSession, sf_dir: str) -> DataFrame:
-    events = load_table(spark, sf_dir, "events")
     # Aggregate FIRST, then exchange only the finished rows for the
     # global order: the old range-shuffle-then-aggregate shape moved
     # EVERY raw row through the exchange to serve the final order —
     # measured 1.30 s at 100x bench data (10M events) vs 0.70 s for this
-    # shape.  repartition(1), NOT small_sorted's coalesce(1): with 43k
+    # shape.  REPARTITION(1), NOT small_sorted's COALESCE(1): with 43k
     # groups (span x types) across 32 map tasks, partials are ~1.4M rows,
     # and coalesce would collapse the FINAL aggregation into one task
     # over all of them (measured 1.09 s); the extra round-robin exchange
@@ -194,20 +210,7 @@ def events_tumbling_5min(spark: SparkSession, sf_dir: str) -> DataFrame:
     # volume; if the span itself grows huge, swap for persist() + orderBy
     # (the flagship's staging pattern) — never re-widen the shuffle to
     # raw rows.
-    return (
-        events.selectExpr(
-            "floor(unix_millis(ts) / 300000) * 300000 AS bucket_start_ms",
-            "event_type",
-            "value",
-        )
-        .groupBy("bucket_start_ms", "event_type")
-        .agg(
-            F.expr("count(*) AS n"),
-            F.expr(cent_sum_expr("value") + " AS total_value"),
-        )
-        .repartition(1)
-        .sortWithinPartitions("bucket_start_ms", "event_type")
-    )
+    return lake_sql(spark, sf_dir, _TUMBLING_TEXT)
 
 
 _TUMBLING_SQL = """

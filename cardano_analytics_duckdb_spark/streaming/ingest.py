@@ -106,20 +106,23 @@ def _sql(columns: str, source: str) -> str:
 
 # A missing mint/withdrawals/value map reaches these texts as an empty
 # map (Spark reads a null map nested in an Arrow struct as empty), so
-# has_mint, has_withdrawal and has_token are false there, never null.
+# has_mint, has_withdrawal and has_token are false there, never null.  A
+# missing list reads as null, and size(null) is null: the tx counts and
+# flags coalesce it to 0, as the fixture lake's row builder counts an
+# empty list (len(...), bool(...)).
 _EXTRACT_SQL = {
     "tx": _sql(
         "t.fee['ada']['lovelace'] AS tx_fee,"
-        " size(t.inputs) AS input_count,"
-        " size(t.outputs) AS output_count,"
-        " size(t.redeemers) AS redeemer_count,"
-        " size(filter(t.outputs, o -> o.datumHash IS NOT NULL"
-        " AND o.datum IS NULL)) AS witness_datum_count,"
+        " coalesce(size(t.inputs), 0) AS input_count,"
+        " coalesce(size(t.outputs), 0) AS output_count,"
+        " coalesce(size(t.redeemers), 0) AS redeemer_count,"
+        " coalesce(size(filter(t.outputs, o -> o.datumHash IS NOT NULL"
+        " AND o.datum IS NULL)), 0) AS witness_datum_count,"
         " size(map_keys(t.mint)) > 0 AS has_mint,"
         " size(map_keys(t.withdrawals)) > 0 AS has_withdrawal,"
-        " size(t.certificates) > 0 AS has_cert,"
-        " size(t.votes) > 0 AS has_vote,"
-        " size(t.proposals) > 0 AS has_proposal,"
+        " coalesce(size(t.certificates), 0) > 0 AS has_cert,"
+        " coalesce(size(t.votes), 0) > 0 AS has_vote,"
+        " coalesce(size(t.proposals), 0) > 0 AS has_proposal,"
         " transform(t.inputs, i -> struct(unhex(i.transaction.id) AS tx_id,"
         " i.index AS output_index)) AS inputs",
         _TXS,

@@ -31,14 +31,17 @@ import subprocess
 import sys
 
 # Session-history counters that leak into explain text: expression ids,
-# exchange ids, byte-array identity hashes, and the numeric suffix PySpark
+# exchange ids, byte-array identity hashes, the numeric suffix PySpark
 # gives each Python lambda's variable (``x_12`` for ``lambda x: ...``; a
-# SQL-text lambda keeps its bare name).
+# SQL-text lambda keeps its bare name), and the suffix of the aliases the
+# optimizer gives common subexpressions (``_common_expr_3``), which counts
+# the expressions earlier queries created.
 _COUNTERS = (
     (re.compile(r"#\d+"), "#N"),
     (re.compile(r"plan_id=\d+"), "plan_id=N"),
     (re.compile(r"\[B@[0-9a-f]+"), "[B@…"),
     (re.compile(r"\blambda (\w+)_\d+\b"), r"lambda \1"),
+    (re.compile(r"\b_common_expr_\d+\b"), "_common_expr_N"),
 )
 
 

@@ -496,7 +496,10 @@ def test_missing_maps_read_as_empty(spark):
     ``value`` map reads as one with an empty map: the flags derived from
     them are false, not null, as the fixture lake's row builder gives
     (``has_mint=bool(...)``).  Spark reads a null map nested in an Arrow
-    struct as an empty map; a missing list still reads as null."""
+    struct as an empty map.  A transaction without its ``inputs``,
+    ``outputs``, ``certificates``, ``votes``, ``proposals`` or
+    ``redeemers`` list counts it as empty too (``len(...)``,
+    ``bool(...)``): 0 and false, not null."""
     from cardano_analytics_duckdb_spark.sources.blocks import (
         blocks_to_dataframe,
     )
@@ -510,8 +513,16 @@ def test_missing_maps_read_as_empty(spark):
     tables = extract_tables(blocks_to_dataframe(spark, [block]))
     (tx,) = tables["tx"].collect()
     assert (tx.has_mint, tx.has_withdrawal) == (False, False)
+    assert (tx.has_cert, tx.has_vote, tx.has_proposal) == (False, False, False)
+    assert (tx.input_count, tx.redeemer_count) == (0, 0)
+    assert (tx.output_count, tx.witness_datum_count) == (1, 0)
     (utxo,) = tables["utxo"].collect()
     assert (utxo.has_token, utxo.lovelace) == (False, None)
+
+    bare = {"type": "babbage", "slot": 8, "height": 2,
+            "transactions": [{"id": "ef" * 32}]}
+    (tx,) = extract_tables(blocks_to_dataframe(spark, [bare]))["tx"].collect()
+    assert (tx.input_count, tx.output_count, tx.witness_datum_count) == (0, 0, 0)
 
 
 def test_rollback_job_budget_and_rewrites(spark, tmp_path):

@@ -15,13 +15,17 @@ from pyspark.sql import functions as F
 from bench import HEADLINE
 from cardano_analytics_duckdb_spark.lake.fixtures import ensure_fixture_lake
 from cardano_analytics_duckdb_spark.lake.tables import (
+    TESTDATA_TABLES,
+    load_plain_table,
     load_table,
     unwarm_lake,
     warm_lake,
+    warm_view_name,
 )
 from cardano_analytics_duckdb_spark.operators import all_queries
 
-from .probes import Py4jCalls, cache_entries
+from .conftest import SF_CORRECT, SF_SMOKE
+from .probes import Py4jCalls, cache_entries, session_state
 
 
 def _plan(df) -> str:
@@ -998,25 +1002,26 @@ def warm_sf(spark, sf_dir):
 
 # py4j round trips to build each headline query over a warmed lake (the
 # second build: the first fills the per-lake dimension snapshots).  Each
-# projection and aggregate is one SQL text, one parse; as chains of
-# Column calls the same queries took 91 (high_value_orders) to 2,117
-# (simhash_fingerprints) round trips, 6,415 in all.
+# query is one SQL text, one parse and one analysis: 5 round trips, plus
+# the content-signature check of each per-lake dimension snapshot
+# (relational._collected_dim, similarity._query_vec).  As DataFrame chains
+# the same queries took 25 to 139 round trips, about 1,000 in all.
 _HEADLINE_PY4J_BUDGET = {
-    "high_value_orders": 34,
-    "order_summary_stats": 25,
-    "pricing_summary": 84,
-    "revenue_by_region": 97,
-    "order_brand_sets": 87,
-    "cross_nation_orders": 117,
-    "top_orders_per_customer": 56,
-    "user_sessions": 66,
-    "events_tumbling_5min": 67,
-    "exact_dedup_groups": 48,
-    "minhash_band_buckets": 139,
-    "simhash_fingerprints": 115,
-    "cosine_topk": 48,
-    "lsh_bucket_assignments": 26,
-    "doc_quality_scores": 30,
+    "high_value_orders": 5,
+    "order_summary_stats": 5,
+    "pricing_summary": 5,
+    "revenue_by_region": 21,
+    "order_brand_sets": 13,
+    "cross_nation_orders": 13,
+    "top_orders_per_customer": 5,
+    "user_sessions": 5,
+    "events_tumbling_5min": 5,
+    "exact_dedup_groups": 5,
+    "minhash_band_buckets": 5,
+    "simhash_fingerprints": 5,
+    "cosine_topk": 13,
+    "lsh_bucket_assignments": 5,
+    "doc_quality_scores": 5,
 }
 
 
@@ -1049,3 +1054,103 @@ def test_headline_queries_keep_the_warmed_cache(spark, warm_sf):
         leaves = plan.collectLeaves()
         scans = {leaves.apply(i).nodeName() for i in range(leaves.size())}
         assert scans == {"InMemoryTableScan"}, (name, scans)
+
+
+def _temp_views(spark) -> set[str]:
+    return {t.name for t in spark.catalog.listTables() if t.isTemporary}
+
+
+def _rows(df) -> list[str]:
+    return sorted(map(repr, df.collect()))
+
+
+def test_warm_lake_owns_its_views(spark, sf_dir):
+    """``warm_lake`` registers one view per cached table, the headline
+    queries read through them and leave the session as they found it,
+    and ``unwarm_lake`` gives back the session as it was before."""
+    queries = all_queries()
+    before = session_state(spark)
+    warm_lake(spark, sf_dir)
+    try:
+        views = {warm_view_name(sf_dir, t) for t in TESTDATA_TABLES}
+        assert views <= _temp_views(spark)
+        assert all(v.startswith("__graft_") for v in views)
+        warmed = session_state(spark)
+        for name in HEADLINE:
+            queries[name](spark, sf_dir).write.format("noop").mode("overwrite").save()
+            assert session_state(spark) == warmed, name
+    finally:
+        unwarm_lake(sf_dir)
+    assert session_state(spark) == before
+    assert not {v for v in _temp_views(spark) if v.startswith("__graft_")}
+
+
+def test_another_session_reads_a_warmed_lake_from_its_files(spark, sf_dir):
+    """``warm_lake``'s views live in the session that warmed the lake.  A
+    query from another session of the same context reads the files
+    (its rows unchanged) and leaves the shared cache as it was."""
+    query = all_queries()["order_summary_stats"]
+    want = _rows(query(spark, sf_dir))
+    other = spark.newSession()
+    warm_lake(spark, sf_dir)
+    try:
+        cached = cache_entries(spark)
+        assert _rows(query(other, sf_dir)) == want
+        assert cache_entries(spark) == cached
+        assert _temp_views(other) == set()
+    finally:
+        unwarm_lake(sf_dir)
+
+
+def test_caller_views_named_like_tables_change_no_headline_rows(spark, sf_dir):
+    """A caller's own temp views named ``lineitem``, ``orders`` and so on,
+    over other rows of the same tables, change no headline query's rows,
+    over a plain or a warmed lake."""
+    queries = all_queries()
+    want = {n: _rows(queries[n](spark, sf_dir)) for n in HEADLINE}
+    for t in TESTDATA_TABLES:
+        load_plain_table(spark, sf_dir, t).limit(3).createOrReplaceTempView(t)
+    try:
+        for warm in (False, True):
+            if warm:
+                warm_lake(spark, sf_dir)
+            try:
+                got = {n: _rows(queries[n](spark, sf_dir)) for n in HEADLINE}
+            finally:
+                unwarm_lake(sf_dir)
+            assert [n for n in HEADLINE if got[n] != want[n]] == [], warm
+    finally:
+        for t in TESTDATA_TABLES:
+            spark.catalog.dropTempView(t)
+
+
+def test_two_warmed_lakes_read_their_own_tables(spark, sf_dir):
+    """Two lakes warmed in one session each serve their own tables: every
+    headline query over either gives that lake's unwarmed rows."""
+    lakes = (sf_dir, SF_CORRECT if sf_dir != SF_CORRECT else SF_SMOKE)
+    queries = all_queries()
+    want = {(d, n): _rows(queries[n](spark, d)) for d in lakes for n in HEADLINE}
+    assert want[lakes[0], "order_summary_stats"] != want[lakes[1], "order_summary_stats"]
+    for d in lakes:
+        warm_lake(spark, d)
+    try:
+        got = {(d, n): _rows(queries[n](spark, d)) for d in lakes for n in HEADLINE}
+    finally:
+        for d in lakes:
+            unwarm_lake(d)
+    assert [k for k in want if got[k] != want[k]] == []
+
+
+def test_plane_literals_read_as_their_doubles(spark):
+    """``_plane_lit`` writes each double as an integer mantissa and an
+    exponent (``805831E-6D``); Spark reads every one, whatever its
+    ``repr``'s exponent and sign, as the same double."""
+    from cardano_analytics_duckdb_spark.operators.similarity import (
+        _PLANES,
+        _plane_lit,
+    )
+
+    values = [1e-05, -0.5, 0.1, -1.2345e-07, 123456.789, 1.0, -3.0, 2.5e16, 0.0]
+    for vec in (values, *_PLANES):
+        (row,) = spark.sql(f"SELECT {_plane_lit(vec)} AS v").collect()
+        assert row.v == list(vec)
