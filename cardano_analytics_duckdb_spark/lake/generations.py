@@ -27,10 +27,11 @@ shape Delta/Iceberg use for their commit:
 
 Readers resolve through :func:`read_table`: a table that has never been
 generation-managed (no pointer file) takes the plain ``spark.read.parquet``
-path — identical plan, one listing probe of overhead.  Once a pointer
-exists, raw reads of the table dir are WRONG by construction (they see
+path — identical plan, the table dir's two listings (pointer files,
+partition dirs) of overhead.  Once a pointer exists, raw reads of the table dir are WRONG by construction (they see
 superseded files and no generation dirs) — every reader in this package
-resolves; external readers (DuckDB lists) get :func:`current_data_paths`.
+resolves; external readers (DuckDB lists) take their files from
+:func:`resolve_partitions`, the one place the pointer turns into files.
 
 Generation dir files carry their partition column IN THE DATA (the swap
 writers inject it) — the dir name can't provide it, and it is what lets
@@ -47,6 +48,8 @@ from __future__ import annotations
 import json
 import os
 import re
+from dataclasses import dataclass
+from functools import cached_property
 
 from pyspark.errors import AnalysisException
 from pyspark.sql import DataFrame, SparkSession
@@ -103,43 +106,101 @@ def _publish(lfs: LakeFs, table_dir: str, mapping: dict[str, dict]) -> None:
     )
 
 
-def partition_entries(lfs: LakeFs, table_dir: str) -> list[str]:
-    """Logical partition entries: live hive dirs plus pointered entries
-    (whose hive dir may already be vacuumed)."""
+def _parquet_files(lfs: LakeFs, d: str, skip=()) -> list[str]:
+    """Full URIs of the parquet files directly under ``d`` whose names
+    are not in ``skip``."""
+    return [
+        f
+        for f in lfs.list_files(d)
+        if f.endswith(".parquet") and f.rsplit("/", 1)[-1] not in skip
+    ]
+
+
+@dataclass
+class PartitionFiles:
+    """One logical partition entry of a table, as ONE pointer read
+    (:func:`resolve_partitions`) left it.  ``state`` is the entry's
+    pointer state, None when the entry was never pointered (its hive
+    dir then holds exactly its data).  The file lists are listed on
+    first use, so each reader pays only for the entries it opens."""
+
+    lfs: LakeFs
+    table_dir: str
+    entry: str
+    state: dict | None
+
+    @property
+    def superseded(self) -> list[str]:
+        return (self.state or {}).get("superseded", [])
+
+    @cached_property
+    def gen_files(self) -> list[str]:
+        """The current generation dir's files (Spark must be handed
+        these explicitly — it ignores "_"-prefixed dirs even when
+        named); [] when the entry has no generation."""
+        gen = (self.state or {}).get("gen")
+        if not gen:
+            return []
+        return _parquet_files(self.lfs, os.path.join(self.table_dir, gen))
+
+    @cached_property
+    def live(self) -> list[str]:
+        """The hive dir's files the pointer has NOT superseded — appends
+        since the last swap, or every file if never swapped."""
+        return _parquet_files(
+            self.lfs,
+            os.path.join(self.table_dir, self.entry),
+            set(self.superseded),
+        )
+
+    def swapped(self, gen: str | None) -> dict:
+        """The entry's pointer state once generation dir ``gen`` (None:
+        nothing) replaces all its current data: its live hive files join
+        the supersede list.  ``live`` is the listing the rewrite read,
+        not a fresh one, so a file appended after that read stays live."""
+        return {
+            "gen": gen,
+            "superseded": self.superseded
+            + [f.rsplit("/", 1)[-1] for f in self.live],
+        }
+
+
+def resolve_partitions(lfs: LakeFs, table_dir: str) -> list[PartitionFiles]:
+    """Every logical partition entry of ``table_dir`` — live hive dirs
+    plus pointered entries (whose hive dir may already be vacuumed) — in
+    entry order, resolved against ONE read of the pointer.  This is the
+    one place the pointer turns into files: ``read_table``, the stats
+    manifest and the maintenance rewrites all read through it, and so
+    should external readers (DuckDB ``read_parquet`` lists, ad-hoc
+    tools) instead of globbing the table root once a pointer exists.
+    No entry has a ``state`` when the table has never been
+    generation-managed (or every swap was vacuumed down to the plain
+    layout)."""
     gens = current_generations(lfs, table_dir)
     live = {
         d
         for d in lfs.list_dirs(table_dir)
         if "=" in d and not d.startswith(("_", "."))
     }
-    return sorted(live | set(gens))
+    return [
+        PartitionFiles(lfs, table_dir, e, gens.get(e))
+        for e in sorted(live | set(gens))
+    ]
+
+
+def partition_entries(lfs: LakeFs, table_dir: str) -> list[str]:
+    """Logical partition entry names (:func:`resolve_partitions`)."""
+    return [p.entry for p in resolve_partitions(lfs, table_dir)]
 
 
 def live_partition_files(
     lfs: LakeFs, table_dir: str, entry: str, gens: dict | None = None
 ) -> list[str]:
-    """Full URIs of the entry's hive-dir parquet files NOT superseded by
-    the current pointer — i.e. appends since the last swap (or all files
-    if never swapped)."""
+    """:attr:`PartitionFiles.live` of ``entry`` under the pointer mapping
+    ``gens`` (read afresh when not given)."""
     if gens is None:
         gens = current_generations(lfs, table_dir)
-    superseded = set((gens.get(entry) or {}).get("superseded", []))
-    return [
-        f
-        for f in lfs.list_files(os.path.join(table_dir, entry))
-        if f.endswith(".parquet")
-        and f.rsplit("/", 1)[-1] not in superseded
-    ]
-
-
-def generation_files(lfs: LakeFs, table_dir: str, gen: str) -> list[str]:
-    """Full URIs of a generation dir's parquet files (Spark must be handed
-    these explicitly — it ignores "_"-prefixed dirs even when named)."""
-    return [
-        f
-        for f in lfs.list_files(os.path.join(table_dir, gen))
-        if f.endswith(".parquet")
-    ]
+    return PartitionFiles(lfs, table_dir, entry, gens.get(entry)).live
 
 
 _ENTRY_RE = re.compile(r"^[A-Za-z0-9_]+=-?\d+$")
@@ -238,94 +299,17 @@ def _remember_schema(table_dir: str, kind: str, df: DataFrame) -> DataFrame:
     return df
 
 
-def read_table(spark: SparkSession, table_dir: str) -> DataFrame:
-    """The generation-resolving read every consumer of a maintained lake
-    table must use.  No pointer file -> plain ``spark.read.parquet``
-    (identical plan).  With a pointer: per pointered entry, the current
-    generation dir (partition column in the data) unions with the
-    entry's NON-superseded hive files (appends since the swap, partition
-    column from the path); unpointered entries read path-partitioned as
-    usual.  Filters on the partition column still prune: pushed into
-    each branch, the literal comparison constant-folds and empty
-    branches collapse."""
-    lfs = LakeFs(spark, table_dir)
-    gens = current_generations(lfs, table_dir)
-    if not gens:
-        if (table_dir, "hive") in _SCHEMA_CACHE:
-            # A provided schema skips footer inference — but it would
-            # also read an EMPTIED dir as silently empty, so keep the
-            # fail-loud contract with a listing probe (driver RPCs, no
-            # Spark job).  Only a .parquet file INSIDE a partition dir
-            # counts: an empty ``col=`` dir would read as silently empty
-            # where the uncached path raises, and root-level parquet
-            # (unpartitioned relayout) may not match the cached HIVE
-            # schema — that case falls through to fresh inference below.
-            has_part_data = any(
-                f.endswith(".parquet")
-                for d in lfs.list_dirs(table_dir)
-                if "=" in d and not d.startswith(("_", "."))
-                for f in lfs.list_files(os.path.join(table_dir, d))
-            )
-            if has_part_data:
-                return _schema_reader(spark, table_dir, "hive").parquet(
-                    table_dir
-                )
-            if not any(
-                f.endswith(".parquet") for f in lfs.list_files(table_dir)
-            ):
-                raise ValueError(
-                    f"table {table_dir} has no live data (every "
-                    "partition dropped)"
-                )
-        try:
-            return _remember_schema(
-                table_dir, "hive", spark.read.parquet(table_dir)
-            )
-        except AnalysisException as e:
-            # Same contract as the pointered branch below: an emptied
-            # table (rollback to origin + vacuum, or a fresh dir holding
-            # only control files) raises a DOMAIN error, not Spark's
-            # schema-inference one.  Anything else re-raises untouched.
-            if getattr(e, "getErrorClass", lambda: None)() == (
-                "UNABLE_TO_INFER_SCHEMA"
-            ):
-                raise ValueError(
-                    f"table {table_dir} has no live data (every "
-                    "partition dropped)"
-                ) from e
-            raise
-    live_dirs = {
-        d
-        for d in lfs.list_dirs(table_dir)
-        if "=" in d and not d.startswith(("_", "."))
-    }
-    plain_dirs: list[str] = []
-    explicit_files: list[str] = []
-    gen_files: list[str] = []
-    for entry in sorted(live_dirs | set(gens)):
-        st = gens.get(entry)
-        if st is None:
-            # never pointered, or dropped by vacuum (which also reclaims
-            # the hive dir when empty — so a plain dir here always has
-            # data and reads without a per-entry listing)
-            plain_dirs.append(os.path.join(table_dir, entry))
-            continue
-        # NOTE: a gen-less entry with an empty supersede list must STILL
-        # go through the explicit-file listing — writers publishing a
-        # partition drop with vacuum="end" leave exactly that state, and
-        # the hive dir may be empty (schema inference dies on a branch
-        # of only-empty dirs).  Only vacuum_superseded may promote an
-        # entry back to the plain path, because only it removes the
-        # empty dir first.
-        if st.get("gen"):
-            gen_files.extend(
-                generation_files(lfs, table_dir, st["gen"])
-            )
-        explicit_files.extend(
-            live_partition_files(lfs, table_dir, entry, gens)
-        )
+def read_files(
+    spark: SparkSession,
+    table_dir: str,
+    hive_paths: list[str],
+    gen_files: list[str],
+) -> DataFrame:
+    """The union by name of a table's two branches, each read with the
+    schema its kind remembers: ``hive_paths`` (hive dirs or files, with
+    ``basePath`` so the partition column comes from the path) and
+    ``gen_files`` (generation files, partition column in the data)."""
     branches = []
-    hive_paths = plain_dirs + explicit_files
     if hive_paths:
         branches.append(
             _remember_schema(
@@ -357,23 +341,76 @@ def read_table(spark: SparkSession, table_dir: str) -> DataFrame:
     return out
 
 
-def current_data_paths(lfs: LakeFs, table_dir: str) -> list[str]:
-    """Paths holding CURRENT data — whole hive dirs for unpointered
-    entries, explicit non-superseded files plus the generation dir for
-    pointered ones.  External readers (DuckDB ``read_parquet`` lists,
-    ad-hoc tools) should use these instead of globbing the table root
-    once a pointer exists."""
-    gens = current_generations(lfs, table_dir)
-    out: list[str] = []
-    for entry in partition_entries(lfs, table_dir):
-        st = gens.get(entry)
-        if st is None:
-            out.append(os.path.join(table_dir, entry))
+def read_table(spark: SparkSession, table_dir: str) -> DataFrame:
+    """The generation-resolving read every consumer of a maintained lake
+    table must use.  No pointer file -> plain ``spark.read.parquet``
+    (identical plan).  With a pointer: per pointered entry, the current
+    generation dir (partition column in the data) unions with the
+    entry's NON-superseded hive files (appends since the swap, partition
+    column from the path); unpointered entries read path-partitioned as
+    usual.  Filters on the partition column still prune: pushed into
+    each branch, the literal comparison constant-folds and empty
+    branches collapse."""
+    lfs = LakeFs(spark, table_dir)
+    parts = resolve_partitions(lfs, table_dir)
+    if all(p.state is None for p in parts):
+        if (table_dir, "hive") in _SCHEMA_CACHE:
+            # A provided schema skips footer inference — but it would
+            # also read an EMPTIED dir as silently empty, so keep the
+            # fail-loud contract with a listing probe (driver RPCs, no
+            # Spark job).  Only a .parquet file INSIDE a partition dir
+            # counts: an empty ``col=`` dir would read as silently empty
+            # where the uncached path raises, and root-level parquet
+            # (unpartitioned relayout) may not match the cached HIVE
+            # schema — that case falls through to fresh inference below.
+            if any(p.live for p in parts):
+                return _schema_reader(spark, table_dir, "hive").parquet(
+                    table_dir
+                )
+            if not any(
+                f.endswith(".parquet") for f in lfs.list_files(table_dir)
+            ):
+                raise ValueError(
+                    f"table {table_dir} has no live data (every "
+                    "partition dropped)"
+                )
+        try:
+            return _remember_schema(
+                table_dir, "hive", spark.read.parquet(table_dir)
+            )
+        except AnalysisException as e:
+            # Same contract as the pointered branch below: an emptied
+            # table (rollback to origin + vacuum, or a fresh dir holding
+            # only control files) raises a DOMAIN error, not Spark's
+            # schema-inference one.  Anything else re-raises untouched.
+            if getattr(e, "getErrorClass", lambda: None)() == (
+                "UNABLE_TO_INFER_SCHEMA"
+            ):
+                raise ValueError(
+                    f"table {table_dir} has no live data (every "
+                    "partition dropped)"
+                ) from e
+            raise
+    plain_dirs: list[str] = []
+    explicit_files: list[str] = []
+    gen_files: list[str] = []
+    for p in parts:
+        if p.state is None:
+            # never pointered, or dropped by vacuum (which also reclaims
+            # the hive dir when empty — so a plain dir here always has
+            # data and reads without a per-entry listing)
+            plain_dirs.append(os.path.join(table_dir, p.entry))
             continue
-        if st.get("gen"):
-            out.append(os.path.join(table_dir, st["gen"]))
-        out.extend(live_partition_files(lfs, table_dir, entry, gens))
-    return sorted(out)
+        # NOTE: a gen-less entry with an empty supersede list must STILL
+        # go through the explicit-file listing — writers publishing a
+        # partition drop with vacuum="end" leave exactly that state, and
+        # the hive dir may be empty (schema inference dies on a branch
+        # of only-empty dirs).  Only vacuum_superseded may promote an
+        # entry back to the plain path, because only it removes the
+        # empty dir first.
+        gen_files.extend(p.gen_files)
+        explicit_files.extend(p.live)
+    return read_files(spark, table_dir, plain_dirs + explicit_files, gen_files)
 
 
 def superseded_paths(lfs: LakeFs, table_dir: str) -> list[str]:

@@ -25,6 +25,12 @@ idea, rebuilt on plain parquet):
   optimization, never the filter itself — plus the kept files' row
   count bound.
 
+On a generation-managed table the live files are the ones ONE read of
+its pointer resolves (``generations.resolve_partitions``), and the pruned
+scan reads them through ``generations.read_files`` — the module that
+serves ``read_table`` — so the prune verdicts always describe the file
+snapshot the scan opens.
+
 Synergy with ``lake/zorder.py``: z-ordering clusters rows so per-file
 min/max ranges are tight and disjoint — the manifest is what turns that
 layout into skipped IO on non-partition columns.
@@ -98,24 +104,17 @@ def _data_files(lfs: LakeFs, root: str) -> list[str]:
     Plain table: recurse through partition dirs, skipping control
     dirs/files ("_"/"." prefixes) — the same visibility rule Hadoop
     readers apply.  Generation-managed table (``lake/generations.py``
-    pointer present): resolve through the pointer instead — current
-    generation dirs (hidden, so the plain walk would miss them) plus
+    pointer present): the files of ONE pointer resolution — current
+    generation files (hidden, so the plain walk would miss them) plus
     non-superseded hive files; superseded files are excluded so the
     manifest stats and prune verdicts always describe the same snapshot
     ``generations.read_table`` serves."""
-    from .generations import current_data_paths, current_generations
+    from .generations import resolve_partitions
 
-    if current_generations(lfs, root):
-        out: list[str] = []
-        for p in current_data_paths(lfs, root):
-            if p.endswith(".parquet"):
-                out.append(p)
-            else:
-                out.extend(
-                    f for f in lfs.list_files(p) if f.endswith(".parquet")
-                )
-        return sorted(out)
-    return sorted(_walk_files(lfs, root))
+    parts = resolve_partitions(lfs, root)
+    if all(p.state is None for p in parts):
+        return sorted(_walk_files(lfs, root))
+    return sorted(f for p in parts for f in p.gen_files + p.live)
 
 
 def _norm_uri(u: str) -> str:
@@ -615,41 +614,15 @@ def _read_files(
     spark: SparkSession, table_dir: str, rel: dict[str, str]
 ) -> DataFrame:
     """Read the surviving files ``rel`` ({file URI -> path relative to the
-    table root}), generation-aware: hive files
-    take the ``basePath`` route (partition columns from the path), files
-    under hidden generation dirs read plainly (their partition column is
-    in the data — generations.py swap writers inject it), and the two
-    branches union by name.  A never-managed table has only the hive
-    branch — identical to the old single read."""
-    from .generations import _remember_schema, _schema_reader
+    table root}) through ``generations.read_files``: hive files form its
+    hive branch, files under hidden generation dirs its generation
+    branch.  A never-managed table has only the hive branch."""
+    from .generations import read_files
 
-    hive = [f for f, r in rel.items() if not r.split("/", 1)[0].startswith("_")]
-    hidden = [f for f, r in rel.items() if r.split("/", 1)[0].startswith("_")]
-    branches = []
-    if hive:
-        branches.append(
-            _remember_schema(
-                table_dir,
-                "hive",
-                _schema_reader(spark, table_dir, "hive")
-                .option("basePath", table_dir)
-                .parquet(*sorted(hive)),
-            )
-        )
-    if hidden:
-        branches.append(
-            _remember_schema(
-                table_dir,
-                "gen",
-                _schema_reader(spark, table_dir, "gen").parquet(
-                    *sorted(hidden)
-                ),
-            )
-        )
-    out = branches[0]
-    for b in branches[1:]:
-        out = out.unionByName(b)
-    return out
+    hidden = {f for f, r in rel.items() if r.startswith("_")}
+    return read_files(
+        spark, table_dir, sorted(rel.keys() - hidden), sorted(hidden)
+    )
 
 
 def read_pruned_box_with_bound(

@@ -46,12 +46,12 @@ def warm_view_name(sf_dir: str, name: str) -> str:
     return f"__graft_{digest}_{name}"
 
 
-def warm_lake(
-    spark: SparkSession,
-    sf_dir: str,
-    partitions: int | None = None,
-    small_table_bytes: int = 262_144,
-) -> None:
+# Tables under this many bytes stay single-partition when warmed, so
+# broadcast-sized dims don't pay one task per core per stage.
+_SMALL_TABLE_BYTES = 262_144
+
+
+def warm_lake(spark: SparkSession, sf_dir: str) -> None:
     """Repartition + cache every table of ``sf_dir`` in memory, and
     register one temp view per cached table (``warm_view_name``), which
     ``lake_sql`` texts read it through.  The views belong to the lake
@@ -66,24 +66,21 @@ def warm_lake(
     At 100 TB you would warm only dimension tables and rely on partitioned
     scans (many files → many splits) for facts; this helper takes whatever
     fits, spilling to disk (MEMORY_AND_DISK is ``cache()``'s default for
-    DataFrames).  Tables under ``small_table_bytes`` stay single-partition so
-    broadcast-sized dims don't pay 32-task scheduling per stage.
-
-    ``partitions`` defaults to ``max(2, cpus // 4)``: on a 4-core host one
-    partition per core was slower over the headline queries (see ROADMAP).
+    DataFrames).  Tables under ``_SMALL_TABLE_BYTES`` stay single-partition;
+    the others take ``max(2, cores // 4)`` partitions, cores being the
+    session's default parallelism: on a 4-core host one partition per core
+    was slower over the headline queries (see ROADMAP).
     """
     from pyspark import __version__ as _  # noqa: F401  (documents pin intent)
 
-    if partitions is None:
-        cpus = os.environ.get("SPARK_GRAFT_CPUS", "32")
-        partitions = max(2, int(cpus) // 4) if cpus.isdigit() else 8
+    partitions = max(2, spark.sparkContext.defaultParallelism // 4)
     for name in TESTDATA_TABLES:
         key = (sf_dir, name)
         if key in _WARMED:
             continue
         df = load_table(spark, sf_dir, name)
         size = os.path.getsize(os.path.join(sf_dir, f"{name}.parquet"))
-        n = partitions if size > small_table_bytes else 1
+        n = partitions if size > _SMALL_TABLE_BYTES else 1
         cached = df.repartition(n).cache()
         cached.count()  # materialize now so queries never pay the fill
         cached.createOrReplaceTempView(warm_view_name(sf_dir, name))
@@ -138,8 +135,7 @@ def lake_sql(
     for _, name, _, _ in _FIELDS.parse(text):
         if name is None or name in bind:
             continue
-        warmed = _WARMED.get((sf_dir, name))
-        if warmed is not None and warmed.sparkSession is spark:
+        if _warmed_in(spark, sf_dir, name) is not None:
             bind[name] = _View(warm_view_name(sf_dir, name))
         else:
             hint = layout_for.get(name) if layout_for else None
@@ -155,16 +151,29 @@ def load_table(
 ) -> DataFrame:
     """The default read path for testdata-lake tables.
 
-    Resolution order: warmed in-memory copy, then a FRESH bucketed copy
-    from the lake's declared layout (``lake/layout.py`` — ``layout_for``
-    names the join/aggregation key the caller wants co-location on; no
-    hint serves the table's primary layout), then the plain parquet.  A
-    stale or absent layout silently falls through to plain — layouts are
-    an optimization, never a correctness dependency."""
-    warmed = _WARMED.get((sf_dir, name))
+    Resolution order: the in-memory copy ``warm_lake`` made in this
+    session, then a FRESH bucketed copy from the lake's declared layout
+    (``lake/layout.py`` — ``layout_for`` names the join/aggregation key
+    the caller wants co-location on; no hint serves the table's primary
+    layout), then the plain parquet.  Another session reads the files,
+    as ``lake_sql`` does.  A stale or absent layout silently falls
+    through to plain — layouts are an optimization, never a correctness
+    dependency."""
+    warmed = _warmed_in(spark, sf_dir, name)
     if warmed is not None:
         return warmed
     return _load_unwarmed(spark, sf_dir, name, layout_for)
+
+
+def _warmed_in(
+    spark: SparkSession, sf_dir: str, name: str
+) -> DataFrame | None:
+    """The copy of ``name`` that ``warm_lake`` cached in ``spark``, if
+    any: a frame of another session must not serve this one."""
+    warmed = _WARMED.get((sf_dir, name))
+    if warmed is not None and warmed.sparkSession is spark:
+        return warmed
+    return None
 
 
 def _load_unwarmed(

@@ -28,12 +28,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from ..lake.fixtures import ensure_fixture_lake
-
-
-def _lake(spark: SparkSession, table: str) -> DataFrame:
-    root = ensure_fixture_lake(spark)
-    return spark.read.parquet(f"{root}/{table}")
+from .cardano import _lake, _scan
 
 
 def cospend_edges(spark: SparkSession) -> DataFrame:
@@ -415,15 +410,6 @@ QUERIES = {
     "cardano_address_cluster_summary": cardano_address_cluster_summary,
     "cardano_address_pagerank": cardano_address_pagerank,
 }
-
-
-def _scan(table: str) -> str:
-    from ..lake.fixtures import DEFAULT_LAKE_ROOT
-
-    return (
-        f"read_parquet('{DEFAULT_LAKE_ROOT}/{table}/slot_group=*/*.parquet',"
-        " hive_partitioning=1)"
-    )
 
 
 # The Spark side is an iterative fixpoint (label propagation), but its RESULT

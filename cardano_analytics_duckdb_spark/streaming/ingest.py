@@ -40,7 +40,10 @@ is what a write path pays, so each path runs on a job budget:
 - compaction is 1 write per fragmented partition.
 
 A table that rewrites a partition also pays one schema-inference job.
-All three paths run their tables concurrently (``_per_table``).
+All three paths run their tables concurrently (``_per_table``).  A
+rewrite finds each partition's current files through
+``lake/generations.py::resolve_partitions``, the resolver every reader
+uses, so it rewrites exactly the snapshot a reader would see.
 Extraction is narrow (block → rows, no shuffle) and the appends shuffle
 nothing.  At 100 TB the same plan holds — a micro-batch is one flush
 and compaction is a per-partition maintenance job.
@@ -536,9 +539,9 @@ def _rollback_table(
     )
 
     parts = [
-        p
-        for p in _partitions(lfs, src, min_group=boundary_group)
-        if p[2]  # no branch: already fully dropped
+        (group, part, branches)
+        for group, part, branches in _partitions(lfs, src, boundary_group)
+        if branches  # no branch: already fully dropped
     ]
     if not parts:
         return 0
@@ -548,9 +551,9 @@ def _rollback_table(
             DataFrame.unionByName,
             [
                 _read(spark, branches, "slot LONG").select(
-                    F.lit(entry).alias("entry"), "slot"
+                    F.lit(part.entry).alias("entry"), "slot"
                 )
-                for entry, _, branches, _, _ in parts
+                for _, part, branches in parts
             ],
         )
         .coalesce(1)
@@ -561,15 +564,12 @@ def _rollback_table(
     n_dropped = 0
     schema = None
     swaps: dict[str, dict] = {}
-    for entry, group, branches, live, st in parts:
+    for group, part, branches in parts:
+        entry = part.entry
         n, n_keep = counts.get(entry, (0, 0))
         if n_keep == n:
             continue
-        new_st = {
-            "gen": None,
-            "superseded": st.get("superseded", [])
-            + [f.rsplit("/", 1)[-1] for f in live],
-        }
+        gen = None
         if n_keep > 0:
             # Hidden generation dir, partition column injected into the
             # data (the dir name can't carry it): readers resolve via the
@@ -584,8 +584,7 @@ def _rollback_table(
                 .write.mode("overwrite")
                 .parquet(os.path.join(src, gen))
             )
-            new_st["gen"] = gen
-        swaps[entry] = new_st
+        swaps[entry] = part.swapped(gen)
         n_dropped += n - n_keep
     if swaps:
         # ONE pointer flip commits every touched partition of this
@@ -597,32 +596,20 @@ def _rollback_table(
 
 
 def _partitions(lfs, table_dir: str, min_group: int | None = None):
-    """Yield ``(entry, group, branches, live_files, state)`` per logical
-    partition from ``min_group`` on.  ``branches`` are the file lists
-    holding the partition's current data, the ones a maintenance rewrite
-    must read: the generation dir's files (if any), then the
+    """Yield ``(group, part, branches)`` per logical partition from
+    ``min_group`` on, as one pointer read resolves them
+    (``generations.resolve_partitions``).  ``branches`` are the file
+    lists holding the partition's current data, the ones a maintenance
+    rewrite must read: the generation dir's files (if any), then the
     non-superseded hive files (appends since the last swap).  A
     partition already fully dropped has none."""
-    from ..lake.generations import (
-        current_generations,
-        generation_files,
-        live_partition_files,
-        partition_entries,
-    )
+    from ..lake.generations import resolve_partitions
 
-    gens = current_generations(lfs, table_dir)
-    for entry in partition_entries(lfs, table_dir):
-        group = int(entry.split("=", 1)[1])
-        if min_group is not None and group < min_group:
-            continue
-        st = gens.get(entry) or {}
-        live = live_partition_files(lfs, table_dir, entry, gens)
-        gfiles = (
-            generation_files(lfs, table_dir, st["gen"])
-            if st.get("gen")
-            else []
-        )
-        yield entry, group, [b for b in (gfiles, live) if b], live, st
+    for part in resolve_partitions(lfs, table_dir):
+        group = int(part.entry.split("=", 1)[1])
+        if min_group is None or group >= min_group:
+            branches = [b for b in (part.gen_files, part.live) if b]
+            yield group, part, branches
 
 
 def _read(spark: SparkSession, branches: list[list[str]], schema=None):
@@ -720,23 +707,19 @@ def _compact_table(spark: SparkSession, lfs, src: str, vacuum: str) -> None:
     # row-group sized.
     schema = None
     swaps: dict[str, dict] = {}
-    for entry, group, branches, live, st in _partitions(lfs, src):
+    for group, part, branches in _partitions(lfs, src):
         if sum(map(len, branches)) < 2:
             continue  # already compact (or empty-append _SUCCESS only)
         source = _read(spark, branches, schema)
         schema = source.schema
-        gen = next_generation_dir(lfs, src, entry)
+        gen = next_generation_dir(lfs, src, part.entry)
         (
             source.withColumn("slot_group", F.lit(group).cast("long"))
             .coalesce(1)
             .write.mode("overwrite")
             .parquet(os.path.join(src, gen))
         )
-        swaps[entry] = {
-            "gen": gen,
-            "superseded": st.get("superseded", [])
-            + [f.rsplit("/", 1)[-1] for f in live],
-        }
+        swaps[part.entry] = part.swapped(gen)
     if not swaps:
         return
     commit_swaps(lfs, src, swaps)

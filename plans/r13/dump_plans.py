@@ -3,10 +3,20 @@
 
 Usage: python dump_plans.py <repo_root> <tag> <outdir> <q1,q2,...>
 
-A name is a registered query (``all_queries()``) or ``ingest.<table>``:
-the plan of that lake table's append in one flush of the fixture block
-stream (``lake/fixtures.py::fixture_blocks``), captured at the writer as
-``ingest_blocks`` runs.
+A name is a registered query (``all_queries()``), ``ingest.<table>`` or
+``lake.<table>``:
+
+- ``ingest.<table>``: the plan of that lake table's append in one flush
+  of the fixture block stream (``lake/fixtures.py::fixture_blocks``),
+  captured at the writer as ``ingest_blocks`` runs.
+- ``lake.<table>``: the plans of the table's two read paths over a
+  maintained lake — ``generations.read_table`` and
+  ``manifest.read_pruned_box_with_bound`` with the token report's
+  policy/asset box (the empty box on a table without those columns).
+  The lake is the fixture stream ingested at ``batch_size=3`` and then
+  compacted, so ``asset`` holds a pointered and an unpointered
+  slot_group; its root is written as ``<lake>`` and part-file UUIDs as
+  ``<uuid>``.
 
 Run it once against each of two checkouts with the same tag and two
 output dirs, then ``diff -r`` the dirs: a plan-neutral change leaves every
@@ -33,11 +43,14 @@ import sys
 # Session-history counters that leak into explain text: expression ids,
 # exchange ids, byte-array identity hashes, the numeric suffix PySpark
 # gives each Python lambda's variable (``x_12`` for ``lambda x: ...``; a
-# SQL-text lambda keeps its bare name), and the suffix of the aliases the
+# SQL-text lambda keeps its bare name), the suffix of the aliases the
 # optimizer gives common subexpressions (``_common_expr_3``), which counts
-# the expressions earlier queries created.
+# the expressions earlier queries created, and RDD ids
+# (``MapPartitionsRDD[2888]`` under an ``ExistingRDD`` scan), which count
+# the RDDs earlier jobs created.
 _COUNTERS = (
     (re.compile(r"#\d+"), "#N"),
+    (re.compile(r"RDD\[\d+\]"), "RDD[N]"),
     (re.compile(r"plan_id=\d+"), "plan_id=N"),
     (re.compile(r"\[B@[0-9a-f]+"), "[B@…"),
     (re.compile(r"\blambda (\w+)_\d+\b"), r"lambda \1"),
@@ -113,6 +126,59 @@ def _ingest_plans(spark) -> dict[str, str]:
     return plans
 
 
+_UUID = re.compile(r"[0-9a-f]{8}-[0-9a-f]{4}-[0-9a-f]{4}-[0-9a-f]{4}-[0-9a-f]{12}")
+
+
+def _lake_plans(spark, tables: list[str]) -> dict[str, str]:
+    """``{"lake.<table>": both read plans}`` over a compacted fixture
+    lake (see the module docstring)."""
+    import tempfile
+
+    from cardano_analytics_duckdb_spark.lake.fixtures import (
+        TOKEN_NAME,
+        TOKEN_POLICY,
+        fixture_blocks,
+    )
+    from cardano_analytics_duckdb_spark.lake.generations import read_table
+    from cardano_analytics_duckdb_spark.lake.manifest import (
+        build_manifest,
+        read_pruned_box_with_bound,
+    )
+    from cardano_analytics_duckdb_spark.streaming.ingest import (
+        compact_lake,
+        ingest_blocks,
+    )
+
+    def formatted(df) -> str:
+        buf = io.StringIO()
+        with contextlib.redirect_stdout(buf):
+            df.explain("formatted")
+        return buf.getvalue()
+
+    plans = {}
+    with tempfile.TemporaryDirectory() as root:
+        ingest_blocks(spark, fixture_blocks(), root, batch_size=3)
+        compact_lake(spark, root)
+        for t in tables:
+            table_dir = os.path.join(root, t)
+            read = read_table(spark, table_dir)
+            box = []
+            if {"policy_id", "asset_name"} <= set(read.columns):
+                box = [
+                    ("policy_id", TOKEN_POLICY, TOKEN_POLICY),
+                    ("asset_name", TOKEN_NAME, TOKEN_NAME),
+                ]
+            build_manifest(spark, table_dir)
+            pruned, bound = read_pruned_box_with_bound(spark, table_dir, box)
+            text = (
+                "## generations.read_table\n" + formatted(read)
+                + f"## manifest.read_pruned_box_with_bound (row bound {bound})\n"
+                + formatted(pruned)
+            )
+            plans[f"lake.{t}"] = _UUID.sub("<uuid>", text.replace(root, "<lake>"))
+    return plans
+
+
 def main() -> None:
     repo, tag, outdir, names_csv = sys.argv[1:5]
     sys.path.insert(0, repo)
@@ -132,6 +198,9 @@ def main() -> None:
         _ingest_plans(spark)
         if any(n.startswith("ingest.") for n in names) else {}
     )
+    ingest.update(_lake_plans(
+        spark, [n[len("lake."):] for n in names if n.startswith("lake.")]
+    ))
     os.makedirs(outdir, exist_ok=True)
     expands = []
     for name in names:

@@ -21,7 +21,7 @@ ROOT = Path(__file__).resolve().parent.parent
 PACKAGE = ROOT / "cardano_analytics_duckdb_spark"
 
 EXPECTED = {
-    "SPARK_GRAFT_CPUS",  # local core count (session, warm_lake)
+    "SPARK_GRAFT_CPUS",  # local core count (session builder)
     "SPARK_DRIVER_MEMORY",  # driver heap of the package's session
     "SPARK_GRAFT_LAYOUT_DIR",  # where layouts of file-table sources live
 }

@@ -353,3 +353,58 @@ def test_maintenance_commits_write_only_pointer_files(spark, lake):
         assert not named(td, "_snapshot.v"), td
         vacuum_superseded(spark, td)
         assert len(named(td, "_generations.v")) == 1, td
+
+
+def test_one_pointer_resolution_per_read(spark, tmp_path, monkeypatch):
+    """A read resolves the table's pointer once and lists each directory
+    it reads at most once: on a compacted lake whose ``asset`` holds one
+    pointered and one unpointered slot_group, a manifest-pruned read
+    makes 1 pointer read and 4 file listings (the table dir, the
+    generation dir, the pointered entry's hive dir, the unpointered
+    entry's dir), and ``read_table`` 1 and 3 (it reads the unpointered
+    entry as a dir, unlisted)."""
+    from cardano_analytics_duckdb_spark.lake import fsutil, generations
+    from cardano_analytics_duckdb_spark.lake.manifest import (
+        build_manifest,
+        read_pruned_box_with_bound,
+    )
+    from cardano_analytics_duckdb_spark.operators.cardano import (
+        TOKEN_NAME,
+        TOKEN_POLICY,
+    )
+
+    root = str(tmp_path / "lake")
+    ingest_blocks(spark, fixture_blocks(), root, batch_size=3)
+    compact_lake(spark, root)
+    asset = os.path.join(root, "asset")
+    gens = current_generations(LakeFs(spark, asset), asset)
+    hive = sorted(d for d in os.listdir(asset) if d.startswith("slot_group="))
+    assert len(hive) == 2 and len(gens) == 1 and next(iter(gens)) in hive
+    build_manifest(spark, asset)
+    want = read_table(spark, asset).filter(
+        (F.col("policy_id") == TOKEN_POLICY) & (F.col("asset_name") == TOKEN_NAME)
+    ).count()
+
+    calls = {"current_generations": 0, "list_files": 0}
+
+    def counted(owner, name):
+        real = getattr(owner, name)
+
+        def wrapper(*a, **k):
+            calls[name] += 1
+            return real(*a, **k)
+
+        monkeypatch.setattr(owner, name, wrapper)
+
+    counted(generations, "current_generations")
+    counted(fsutil.LakeFs, "list_files")
+    box = [
+        ("policy_id", TOKEN_POLICY, TOKEN_POLICY),
+        ("asset_name", TOKEN_NAME, TOKEN_NAME),
+    ]
+    df, _ = read_pruned_box_with_bound(spark, asset, box)
+    assert calls == {"current_generations": 1, "list_files": 4}
+    assert df.count() == want > 0
+    calls.update(current_generations=0, list_files=0)
+    read_table(spark, asset)
+    assert calls == {"current_generations": 1, "list_files": 3}

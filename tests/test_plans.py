@@ -1086,16 +1086,23 @@ def test_warm_lake_owns_its_views(spark, sf_dir):
 
 
 def test_another_session_reads_a_warmed_lake_from_its_files(spark, sf_dir):
-    """``warm_lake``'s views live in the session that warmed the lake.  A
-    query from another session of the same context reads the files
-    (its rows unchanged) and leaves the shared cache as it was."""
-    query = all_queries()["order_summary_stats"]
-    want = _rows(query(spark, sf_dir))
+    """``warm_lake``'s views and cached frames live in the session that
+    warmed the lake.  A query from another session of the same context,
+    whether a ``lake_sql`` text or built on ``load_table``, reads the
+    files (its rows unchanged, its frame of that session) and leaves the
+    shared cache as it was."""
+    queries = all_queries()
+    names = ("order_summary_stats", "customers_without_orders")
+    want = {n: _rows(queries[n](spark, sf_dir)) for n in names}
     other = spark.newSession()
     warm_lake(spark, sf_dir)
     try:
         cached = cache_entries(spark)
-        assert _rows(query(other, sf_dir)) == want
+        for n in names:
+            df = queries[n](other, sf_dir)
+            assert df.sparkSession is other, n
+            assert _rows(df) == want[n], n
+        assert load_table(other, sf_dir, "lineitem").sparkSession is other
         assert cache_entries(spark) == cached
         assert _temp_views(other) == set()
     finally:
@@ -1142,8 +1149,9 @@ def test_two_warmed_lakes_read_their_own_tables(spark, sf_dir):
 
 
 def test_plane_literals_read_as_their_doubles(spark):
-    """``_plane_lit`` writes each double as an integer mantissa and an
-    exponent (``805831E-6D``); Spark reads every one, whatever its
+    """``double_lit`` (under ``_plane_lit`` and the rounding texts)
+    writes each double as an integer mantissa and an exponent
+    (``805831E-6D``); Spark reads every one, whatever its
     ``repr``'s exponent and sign, as the same double."""
     from cardano_analytics_duckdb_spark.operators.similarity import (
         _PLANES,
@@ -1151,6 +1159,8 @@ def test_plane_literals_read_as_their_doubles(spark):
     )
 
     values = [1e-05, -0.5, 0.1, -1.2345e-07, 123456.789, 1.0, -3.0, 2.5e16, 0.0]
-    for vec in (values, *_PLANES):
+    # the rounding constants of ``rnd_expr``/``cent_sum_expr``
+    rounding = [0.5, *(float(10**n) for n in range(7))]
+    for vec in (values, rounding, *_PLANES):
         (row,) = spark.sql(f"SELECT {_plane_lit(vec)} AS v").collect()
         assert row.v == list(vec)
